@@ -38,7 +38,8 @@ object Verify {
     // are partitioning-invariant; no rand(); the only persist is
     // MultiOutput's script-scoped one, released in its own finally), so
     // concurrency cannot change any output. Shared lifecycle fixtures
-    // serialize on their ConcurrentHashMap.computeIfAbsent builders.
+    // are graft.queries.Fixture values: each builds once per data dir,
+    // and workers asking for a fixture mid-build wait for that build.
     // SPARK_GRAFT_VERIFY_PAR=1 restores the sequential path.
     val par = math.max(1, sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "4").toInt)
     def run1(name: String,

@@ -10,7 +10,10 @@ package graft.core
   *
   * Used only for actions with NO data dependency and disjoint output
   * paths (different index artifacts); results are unchanged by
-  * construction. Rethrows the first failure after cancelling the rest.
+  * construction. A failure does not cut the siblings short: `run`
+  * waits for EVERY branch to finish, then rethrows the first failure
+  * (in branch order), so no branch's Spark jobs are still running when
+  * the caller's cleanup (e.g. deleting a fixture root) goes ahead.
   */
 object Par {
   def run(fs: (() => Unit)*): Unit = {
@@ -22,13 +25,14 @@ object Par {
           def call(): Unit = f()
         })
       }
-      futs.foreach { fut =>
-        try fut.get()
+      val failures = futs.flatMap { fut =>
+        try { fut.get(); None }
         catch {
           case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
+            Some(e.getCause)
         }
       }
+      failures.headOption.foreach(e => throw e)
     } finally { pool.shutdownNow(): Unit }
   }
 }

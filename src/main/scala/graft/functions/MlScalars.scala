@@ -51,52 +51,16 @@ object MlScalars {
       }), lit(1))
   }
 
-  /** Cross-engine-exact 60-bit string hash scaled to [-1, 1). */
-  private def h1(c: Column): Column =
-    (graft.expressions.Md5Long60.column(c.cast("binary"))
-      % 2000001L - 1000000L) / 1000000.0
-
   /** _text_embedding (ml_ops.cc TransformerUDF ->
     * exec/ml/transformer_executor.h). The reference runs an embedded
-    * ONNX transformer we cannot ship; this dispatches on
-    * SPARK_GRAFT_EMBEDDING:
-    *   - default ("hashed"): the hashing-trick bag-of-words embedding —
-    *     real lexical signal (token buckets + signs, L2-normalized),
-    *     model-free, deterministic, and oracle-reproducible in any
-    *     engine (the gate setting since r7; previously the md5 stub).
-    *   - "stub": the legacy per-dimension md5 stub, kept only as an
-    *     explicit opt-in for comparing against r5/r6-era outputs.
-    * An ONNX-session implementation drops in as a third branch where a
-    * model runtime is available (resolution re-attempted every round —
-    * r7 through r14: `com.microsoft.onnxruntime:onnxruntime` is absent
-    * from the pinned offline mirror (r10-r14: no onnx/djl/torch
-    * artifact in any coursier/ivy cache, /opt/spark/jars, or the
-    * offline artifactory mirror; the r14 sbt resolution probe again
-    * fails 'not found' on every resolver) and COURSIER_MODE=offline
-    * blocks any fetch, so the loud-fail dispatch stands — see README).
+    * ONNX transformer that cannot ship here (no model runtime on the
+    * offline classpath), so the scalar is the hashing-trick
+    * bag-of-words embedding ([[textEmbeddingHashed]]): real lexical
+    * signal (token buckets + signs, L2-normalized), model-free,
+    * deterministic, and oracle-reproducible in any engine.
     */
-  def textEmbedding(text: Column, dim: Int,
-                    mode: Option[String] = sys.env.get("SPARK_GRAFT_EMBEDDING"))
-      : Column =
-    mode match {
-      case Some("stub") => textEmbeddingStub(text, dim)
-      case Some("onnx") =>
-        // The named drop-in point: an onnxruntime session per executor
-        // (mapInPandas/mapPartitions batching, model path from
-        // SPARK_GRAFT_ONNX_MODEL) slots in here; the runtime jar is not
-        // on this classpath, so the dispatch fails loudly rather than
-        // silently falling back to a stub embedding.
-        throw new IllegalStateException(
-          "SPARK_GRAFT_EMBEDDING=onnx: no ONNX runtime on the classpath — " +
-            "add onnxruntime, set SPARK_GRAFT_ONNX_MODEL, and implement " +
-            "textEmbeddingOnnx behind this dispatch")
-      case _ => textEmbeddingHashed(text, dim)
-    }
-
-  /** The legacy per-dimension md5 feature stub (see [[textEmbedding]]). */
-  def textEmbeddingStub(text: Column, dim: Int): Column =
-    transform(sequence(lit(0), lit(dim - 1)),
-      i => h1(concat(text, lit("#"), i)))
+  def textEmbedding(text: Column, dim: Int): Column =
+    textEmbeddingHashed(text, dim)
 
   /** Hashing-trick embedding: each lowercased token hashes to one of
     * `dim` buckets with a ±1 sign, the bucket counts L2-normalize —

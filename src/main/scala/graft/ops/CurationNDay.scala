@@ -163,6 +163,26 @@ object CurationNDay {
     Seq(dayId).toDF("day_id").write.mode("append").parquet(ledgerPath)
   }
 
+  /** Pin a size cap's chosen horizon (`keep_from_day`, 0 = the
+    * under-cap no-op) at `path` BEFORE any mutation — the decision-pin
+    * rule applied to retention: a replayed calendar slot whose cap
+    * committed can still read what the cap decided (the
+    * expiry-vs-no-op fact the tape-rebuild step needs). Both
+    * lifecycles' caps write through here and read through
+    * [[readHorizon]].
+    */
+  private[graft] def pinHorizon(spark: SparkSession, path: String,
+                                keepFrom: Int): Unit = {
+    import spark.implicits._
+    Seq(keepFrom).toDF("keep_from_day")
+      .repartition(1)
+      .write.mode("overwrite").parquet(path)
+  }
+
+  /** The horizon [[pinHorizon]] pinned at `path` (one row). */
+  def readHorizon(spark: SparkSession, path: String): Int =
+    spark.read.parquet(path).head().getInt(0)
+
   /** One day's full admission transaction, ledger-gated: returns false
     * (a pure no-op) when the day is already committed; otherwise runs
     * [[processDayBody]] and commits the ledger row LAST — a crash
@@ -432,14 +452,18 @@ object CurationNDay {
              manifestOut: String): Int =
     if (ledgerSeen(spark, a.ledger, dayId)) 0
     else {
-      val masses = (0 to NDays).map { k =>
-        k -> spark.read.parquet(a.packDay(k))
-          .agg(coalesce(sum(col("n_tok")), lit(0L)).as("m"))
-          .head().getLong(0) // one row per day file — model-sized
-      }.toMap
+      val masses = (0 to NDays).map(k => k -> packMass(spark, a, k)).toMap
       capWith(spark, a, dayId, maxTokens, masses, manifestIn,
         manifestOut)
     }
+
+  /** Day k's token mass from its persisted pack layout (one sum over
+    * one day file — model-sized, no corpus scan).
+    */
+  def packMass(spark: SparkSession, a: CurationDay.Artifacts, k: Int): Long =
+    spark.read.parquet(a.packDay(k))
+      .agg(coalesce(sum(col("n_tok")), lit(0L)).as("m"))
+      .head().getLong(0)
 
   /** ORDER-INDEPENDENT retained token mass per admission day — the
     * [[graft.ops.MultiDay.retainedMasses]] discipline on the curation
@@ -499,20 +523,10 @@ object CurationNDay {
                       dayId: String, maxTokens: Long,
                       masses: Map[Int, Long], manifestIn: String,
                       manifestOut: String): Int = {
-    // the decision-pin rule applied to retention: the computed
-    // horizon is PINNED before any mutation, so a replayed calendar
-    // slot whose cap committed can still read what the cap decided
-    // (the expiry-vs-no-op fact the tape-rebuild step needs)
-    def pinHorizon(kf: Int): Unit = {
-      import spark.implicits._
-      Seq(kf).toDF("keep_from_day")
-        .repartition(1)
-        .write.mode("overwrite").parquet(a.capHorizon(dayId))
-    }
     if (masses.values.sum <= maxTokens) {
       // keepFrom = 0: everything (snapshot + every day) fits —
       // commit the check without expiring anything
-      pinHorizon(0)
+      pinHorizon(spark, a.capHorizon(dayId), 0)
       appendLedger(spark, a.ledger, dayId)
       0
     } else {
@@ -521,7 +535,7 @@ object CurationNDay {
       }.getOrElse(sys.error(
         s"capDay: day $NDays alone exceeds the $maxTokens-token cap — " +
           "whole-day expiry cannot satisfy it"))
-      pinHorizon(keepFrom)
+      pinHorizon(spark, a.capHorizon(dayId), keepFrom)
       ttlDay(spark, a, dayId, keepFrom, manifestIn, manifestOut): Unit
       keepFrom
     }

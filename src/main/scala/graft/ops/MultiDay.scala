@@ -836,14 +836,8 @@ object MultiDay {
       val docs = indexedDocs(spark, p, corpusFetch).localCheckpoint(true)
       val masses = massesOf(spark, p, docs)
       val days = masses.keys.toSeq.sorted
-      def pinHorizon(kf: Int): Unit = {
-        import spark.implicits._
-        Seq(kf).toDF("keep_from_day")
-          .repartition(1)
-          .write.mode("overwrite").parquet(p.capHorizon(dayId))
-      }
       if (masses.values.sum <= maxBytes) {
-        pinHorizon(0)
+        CurationNDay.pinHorizon(spark, p.capHorizon(dayId), 0)
         CurationNDay.appendLedger(spark, p.ledger, dayId)
         0
       } else {
@@ -852,7 +846,7 @@ object MultiDay {
         }.getOrElse(sys.error(
           s"cap4Day: day ${days.max} alone exceeds the $maxBytes-byte " +
             "cap — whole-day expiry cannot satisfy it"))
-        pinHorizon(keepFrom)
+        CurationNDay.pinHorizon(spark, p.capHorizon(dayId), keepFrom)
         val young = (keepFrom to NDays4)
           .filter(k => masses.contains(k))
           .map { k =>

@@ -26,33 +26,27 @@ object Curation11 {
     * smallest day-1 ADMITTED vector, which must come back
     * dup_sem_corpus via the APPENDED cells — the lifecycle witness).
     */
-  private val semCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (SemIndex.Paths, org.apache.spark.sql.DataFrame)]()
-  private[queries] def semLife(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (SemIndex.Paths, org.apache.spark.sql.DataFrame) =
-    semCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_sem_index_")
-      val p = SemIndex.Paths(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val emb = tp(s, d, "embeddings").select("vec_id", "embedding")
-      SemIndex.bootstrap(s,
-        emb.where(pmod(col("vec_id"), lit(4L)).isin(2L, 3L)), p)
-      val dec1 = SemIndex.processDay(s, p, 1,
-        emb.where(pmod(col("vec_id"), lit(4L)) === 0L))
-      val sentinel = dec1.where(col("decision") === "admitted")
-        .orderBy("vec_id").limit(1).select("vec_id")
-        .join(emb, "vec_id")
-        .select(lit(9500001L).as("vec_id"), col("embedding"))
-      val dec2 = SemIndex.processDay(s, p, 2,
-        emb.where(pmod(col("vec_id"), lit(4L)) === 1L)
-          .unionByName(sentinel))
-      val all = dec1.select(lit(1).as("day"), col("vec_id"), col("cell"),
-          col("decision"))
-        .unionByName(dec2.select(lit(2).as("day"), col("vec_id"),
-          col("cell"), col("decision")))
-        .localCheckpoint(true)
-      (p, all)
-    })
+  private[queries] val semLife = Fixture.rooted("graft_sem_index_") { (s, d, root) =>
+    val p = SemIndex.Paths(root)
+    val emb = tp(s, d, "embeddings").select("vec_id", "embedding")
+    SemIndex.bootstrap(s,
+      emb.where(pmod(col("vec_id"), lit(4L)).isin(2L, 3L)), p)
+    val dec1 = SemIndex.processDay(s, p, 1,
+      emb.where(pmod(col("vec_id"), lit(4L)) === 0L))
+    val sentinel = dec1.where(col("decision") === "admitted")
+      .orderBy("vec_id").limit(1).select("vec_id")
+      .join(emb, "vec_id")
+      .select(lit(9500001L).as("vec_id"), col("embedding"))
+    val dec2 = SemIndex.processDay(s, p, 2,
+      emb.where(pmod(col("vec_id"), lit(4L)) === 1L)
+        .unionByName(sentinel))
+    val all = dec1.select(lit(1).as("day"), col("vec_id"), col("cell"),
+        col("decision"))
+      .unionByName(dec2.select(lit(2).as("day"), col("vec_id"),
+        col("cell"), col("decision")))
+      .localCheckpoint(true)
+    (p, all)
+  }
 
   /** The STREAMED semantic lifecycle (same two days, the
     * [[graft.streaming.SemStream]] delivery engine: file source →
@@ -60,18 +54,12 @@ object Curation11 {
     * committed day re-offered and no-op'd) — third engine path onto
     * q521/q522's oracle.
     */
-  private val semStreamCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (SemIndex.Paths, Seq[String], Boolean)]()
-  private def semStreamed(s: org.apache.spark.sql.SparkSession,
-                          dir: String): (SemIndex.Paths, Seq[String], Boolean) =
-    semStreamCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_sem_stream_")
-      val p = SemIndex.Paths(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val (days, stable) = graft.streaming.SemStream.runDaysStreamed(
-        s, d, p, s"$root/landing", s"$root/cp", s"$root/ledger")
-      (p, days, stable)
-    })
+  private val semStreamed = Fixture.rooted("graft_sem_stream_") { (s, d, root) =>
+    val p = SemIndex.Paths(root)
+    val (days, stable) = graft.streaming.SemStream.runDaysStreamed(
+      s, d, p, s"$root/landing", s"$root/cp", s"$root/ledger")
+    (p, days, stable)
+  }
 
   /** The two-day PERCEPTUAL-index lifecycle (the q286 grouped-payload
     * construction: image id rounded to its group-of-3 base, so group
@@ -88,40 +76,34 @@ object Curation11 {
     * dups isolate the append path. Each day runs through the pinned
     * [[graft.ops.PhashIndex.processDay]].
     */
-  private val phashCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (graft.ops.PhashIndex.Paths, org.apache.spark.sql.DataFrame)]()
-  private def phashLife(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (graft.ops.PhashIndex.Paths, org.apache.spark.sql.DataFrame) =
-    phashCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_phash_index_")
-      val p = graft.ops.PhashIndex.Paths(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val png = graft.ops.Multimodal.pngVarUdf
-      def hashed(pred: org.apache.spark.sql.Column) =
-        graft.ops.Multimodal.dHash(graft.ops.Multimodal.decodeCells(
-          t(s, d, "documents").where(pred)
-            .select(col("doc_id").as("media_id"),
-              png(col("doc_id") - pmod(col("doc_id"), lit(3L)))
-                .as("payload"))))
-      val grp = graft.functions.PixieFunctions.idiv(
-        col("doc_id") - pmod(col("doc_id"), lit(3L)), 3L)
-      val m3 = pmod(col("doc_id"), lit(3L))
-      graft.ops.PhashIndex.write(s,
-        hashed(pmod(grp, lit(2L)) === 1L && m3.isin(0L, 2L)), p)
-      // day 1 mixes both branches: even-group bases ADMIT (and append),
-      // odd-group %3==1 members DUP against their snapshot co-members
-      val dec1 = graft.ops.PhashIndex.processDay(s, p, 1,
-        hashed((pmod(grp, lit(2L)) === 0L && m3 === 0L) ||
-          (pmod(grp, lit(2L)) === 1L && m3 === 1L)))
-      val dec2 = graft.ops.PhashIndex.processDay(s, p, 2,
-        hashed(pmod(grp, lit(2L)) === 0L && m3.isin(1L, 2L)))
-      val all = dec1.select(lit(1).as("day"), col("media_id"),
-          col("decision"))
-        .unionByName(dec2.select(lit(2).as("day"), col("media_id"),
-          col("decision")))
-        .localCheckpoint(true)
-      (p, all)
-    })
+  private val phashLife = Fixture.rooted("graft_phash_index_") { (s, d, root) =>
+    val p = graft.ops.PhashIndex.Paths(root)
+    val png = graft.ops.Multimodal.pngVarUdf
+    def hashed(pred: org.apache.spark.sql.Column) =
+      graft.ops.Multimodal.dHash(graft.ops.Multimodal.decodeCells(
+        t(s, d, "documents").where(pred)
+          .select(col("doc_id").as("media_id"),
+            png(col("doc_id") - pmod(col("doc_id"), lit(3L)))
+              .as("payload"))))
+    val grp = graft.functions.PixieFunctions.idiv(
+      col("doc_id") - pmod(col("doc_id"), lit(3L)), 3L)
+    val m3 = pmod(col("doc_id"), lit(3L))
+    graft.ops.PhashIndex.write(s,
+      hashed(pmod(grp, lit(2L)) === 1L && m3.isin(0L, 2L)), p)
+    // day 1 mixes both branches: even-group bases ADMIT (and append),
+    // odd-group %3==1 members DUP against their snapshot co-members
+    val dec1 = graft.ops.PhashIndex.processDay(s, p, 1,
+      hashed((pmod(grp, lit(2L)) === 0L && m3 === 0L) ||
+        (pmod(grp, lit(2L)) === 1L && m3 === 1L)))
+    val dec2 = graft.ops.PhashIndex.processDay(s, p, 2,
+      hashed(pmod(grp, lit(2L)) === 0L && m3.isin(1L, 2L)))
+    val all = dec1.select(lit(1).as("day"), col("media_id"),
+        col("decision"))
+      .unionByName(dec2.select(lit(2).as("day"), col("media_id"),
+        col("decision")))
+      .localCheckpoint(true)
+    (p, all)
+  }
 
   /** The MULTIMODAL admission day ([[graft.ops.MultiDay]]): one
     * consistent %4 split across all three modalities (snapshot
@@ -130,43 +112,37 @@ object Curation11 {
     * day 2 and its phash verdict can only come from the day-1
     * append). Overall-admitted docs append to all three indexes.
     */
-  private val multiCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (graft.ops.MultiDay.Paths, org.apache.spark.sql.DataFrame)]()
-  private def multiLife(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (graft.ops.MultiDay.Paths, org.apache.spark.sql.DataFrame) =
-    multiCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_multi_day_")
-      val p = graft.ops.MultiDay.Paths(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val docs = t(s, d, "documents").select("doc_id", "text")
-      val emb = t(s, d, "embeddings").select("vec_id", "embedding")
-      val png = graft.ops.Multimodal.pngVarUdf
-      def hashedOf(pred: org.apache.spark.sql.Column) =
-        graft.ops.Multimodal.dHash(graft.ops.Multimodal.decodeCells(
-          t(s, d, "documents").where(pred)
-            .select(col("doc_id").as("media_id"),
-              png(col("doc_id") - pmod(col("doc_id"), lit(2L)))
-                .as("payload"))))
-      def m4(c: org.apache.spark.sql.Column) = pmod(c, lit(4L))
-      graft.ops.MultiDay.bootstrap(s,
-        docs.where(m4(col("doc_id")).isin(2L, 3L)),
-        emb.where(m4(col("vec_id")).isin(2L, 3L)),
-        hashedOf(m4(col("doc_id")).isin(2L, 3L)), p)
-      val dec1 = graft.ops.MultiDay.processDay(s, p, 1,
-        docs.where(m4(col("doc_id")) === 0L),
-        emb.where(m4(col("vec_id")) === 0L),
-        hashedOf(m4(col("doc_id")) === 0L), docs)
-      val dec2 = graft.ops.MultiDay.processDay(s, p, 2,
-        docs.where(m4(col("doc_id")) === 1L),
-        emb.where(m4(col("vec_id")) === 1L),
-        hashedOf(m4(col("doc_id")) === 1L), docs)
-      val all = dec1.select(lit(1).as("day"), col("doc_id"),
-          col("decision"))
-        .unionByName(dec2.select(lit(2).as("day"), col("doc_id"),
-          col("decision")))
-        .localCheckpoint(true)
-      (p, all)
-    })
+  private val multiLife = Fixture.rooted("graft_multi_day_") { (s, d, root) =>
+    val p = graft.ops.MultiDay.Paths(root)
+    val docs = t(s, d, "documents").select("doc_id", "text")
+    val emb = t(s, d, "embeddings").select("vec_id", "embedding")
+    val png = graft.ops.Multimodal.pngVarUdf
+    def hashedOf(pred: org.apache.spark.sql.Column) =
+      graft.ops.Multimodal.dHash(graft.ops.Multimodal.decodeCells(
+        t(s, d, "documents").where(pred)
+          .select(col("doc_id").as("media_id"),
+            png(col("doc_id") - pmod(col("doc_id"), lit(2L)))
+              .as("payload"))))
+    def m4(c: org.apache.spark.sql.Column) = pmod(c, lit(4L))
+    graft.ops.MultiDay.bootstrap(s,
+      docs.where(m4(col("doc_id")).isin(2L, 3L)),
+      emb.where(m4(col("vec_id")).isin(2L, 3L)),
+      hashedOf(m4(col("doc_id")).isin(2L, 3L)), p)
+    val dec1 = graft.ops.MultiDay.processDay(s, p, 1,
+      docs.where(m4(col("doc_id")) === 0L),
+      emb.where(m4(col("vec_id")) === 0L),
+      hashedOf(m4(col("doc_id")) === 0L), docs)
+    val dec2 = graft.ops.MultiDay.processDay(s, p, 2,
+      docs.where(m4(col("doc_id")) === 1L),
+      emb.where(m4(col("vec_id")) === 1L),
+      hashedOf(m4(col("doc_id")) === 1L), docs)
+    val all = dec1.select(lit(1).as("day"), col("doc_id"),
+        col("decision"))
+      .unionByName(dec2.select(lit(2).as("day"), col("doc_id"),
+        col("decision")))
+      .localCheckpoint(true)
+    (p, all)
+  }
 
   val queries: Map[String, QFn] = Map(
 

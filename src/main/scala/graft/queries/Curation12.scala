@@ -33,30 +33,17 @@ object Curation12 {
 
   // ---- Spark-side lifecycles (once per dir per JVM) -----------------
 
-  private val mmStreamCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (MultiDay.Paths4, Boolean, Seq[String])]()
-  private[queries] def mmStream(s: org.apache.spark.sql.SparkSession,
-                                dir: String)
-      : (MultiDay.Paths4, Boolean, Seq[String]) =
-    mmStreamCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm_stream_")
-      val p = MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val (noop, days) = graft.streaming.MultiStream.runDaysStreamed(s, d, p)
-      (p, noop, days)
-    })
+  private[queries] val mmStream = Fixture.rooted("graft_mm_stream_") { (s, d, root) =>
+    val p = MultiDay.Paths4(root)
+    val (noop, days) = graft.streaming.MultiStream.runDaysStreamed(s, d, p)
+    (p, noop, days)
+  }
 
-  private val mmBatchCache = new java.util.concurrent.ConcurrentHashMap[
-    String, MultiDay.Paths4]()
-  private def mmBatch(s: org.apache.spark.sql.SparkSession,
-                      dir: String): MultiDay.Paths4 =
-    mmBatchCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm_batch_")
-      val p = MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      MultiDay.runDays4Batch(s, d, p)
-      p
-    })
+  private val mmBatch = Fixture.rooted("graft_mm_batch_") { (s, d, root) =>
+    val p = MultiDay.Paths4(root)
+    MultiDay.runDays4Batch(s, d, p)
+    p
+  }
 
   /** The standalone two-day AUDIO index lifecycle: snapshot
     * %4 ∈ {2,3}, day 1 = %4 == 0, day 2 = %4 == 1 plus sentinel
@@ -64,40 +51,34 @@ object Curation12 {
     * cloned verbatim — must come back dup_audio_corpus via the day-1
     * append alone: the lifecycle witness).
     */
-  private val audioCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (PhashIndex.Paths, org.apache.spark.sql.DataFrame)]()
-  private def audioLife(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (PhashIndex.Paths, org.apache.spark.sql.DataFrame) =
-    audioCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_audio_index_")
-      val p = PhashIndex.Paths(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val docs = t(s, d, "documents").select("doc_id", "text")
-      def fpOf(src: org.apache.spark.sql.DataFrame) =
-        graft.ops.Multimodal.audioFingerprint(
-          src.select(col("doc_id").as("media_id"),
-            col("text").cast("binary").as("payload")))
-      PhashIndex.write(s,
-        fpOf(docs.where(pmod(col("doc_id"), lit(4L)).isin(2L, 3L))), p)
-      val dec1 = PhashIndex.processDay(s, p, 1,
-        fpOf(docs.where(pmod(col("doc_id"), lit(4L)) === 0L)),
-        label = "audio")
-      val sentinel = dec1.where(col("decision") === "admitted")
-        .orderBy("media_id").limit(1)
-        .select(col("media_id").as("doc_id"))
-        .join(docs, "doc_id")
-        .select(lit(9800001L).as("doc_id"), col("text"))
-      val dec2 = PhashIndex.processDay(s, p, 2,
-        fpOf(docs.where(pmod(col("doc_id"), lit(4L)) === 1L)
-          .unionByName(sentinel)),
-        label = "audio")
-      val all = dec1.select(lit(1).as("day"), col("media_id"),
-          col("decision"))
-        .unionByName(dec2.select(lit(2).as("day"), col("media_id"),
-          col("decision")))
-        .localCheckpoint(true)
-      (p, all)
-    })
+  private val audioLife = Fixture.rooted("graft_audio_index_") { (s, d, root) =>
+    val p = PhashIndex.Paths(root)
+    val docs = t(s, d, "documents").select("doc_id", "text")
+    def fpOf(src: org.apache.spark.sql.DataFrame) =
+      graft.ops.Multimodal.audioFingerprint(
+        src.select(col("doc_id").as("media_id"),
+          col("text").cast("binary").as("payload")))
+    PhashIndex.write(s,
+      fpOf(docs.where(pmod(col("doc_id"), lit(4L)).isin(2L, 3L))), p)
+    val dec1 = PhashIndex.processDay(s, p, 1,
+      fpOf(docs.where(pmod(col("doc_id"), lit(4L)) === 0L)),
+      label = "audio")
+    val sentinel = dec1.where(col("decision") === "admitted")
+      .orderBy("media_id").limit(1)
+      .select(col("media_id").as("doc_id"))
+      .join(docs, "doc_id")
+      .select(lit(9800001L).as("doc_id"), col("text"))
+    val dec2 = PhashIndex.processDay(s, p, 2,
+      fpOf(docs.where(pmod(col("doc_id"), lit(4L)) === 1L)
+        .unionByName(sentinel)),
+      label = "audio")
+    val all = dec1.select(lit(1).as("day"), col("media_id"),
+        col("decision"))
+      .unionByName(dec2.select(lit(2).as("day"), col("media_id"),
+        col("decision")))
+      .localCheckpoint(true)
+    (p, all)
+  }
 
   /** Occupancy-triggered refit, run on a content-identical COPY of
     * the q521 lifecycle's semantic index (the lifecycle root keeps
@@ -107,24 +88,18 @@ object Curation12 {
     * so the documented trigger condition is genuinely met, not
     * planted), and keep the returned cell count for the card row.
     */
-  private val refitCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (SemIndex.Paths, Long)]()
-  private def refitLife(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (SemIndex.Paths, Long) =
-    refitCache.computeIfAbsent(dir, { d: String =>
-      val src = Curation11.semLife(s, d)._1
-      val root = Curation2.tempIndexDir("graft_sem_refitp_")
-      val p = SemIndex.Paths(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      s.read.parquet(src.seeds).repartition(1)
-        .write.mode("overwrite").parquet(p.seeds)
-      s.read.parquet(src.index)
-        .select("vec_id", "e", "n", "cell")
-        .write.partitionBy("cell").mode("overwrite").parquet(p.index)
-      val nc = SemIndex.refitIfNeeded(s, p, targetOcc = 16L)
-      require(nc > 0L, "refitLife: occupancy trigger did not fire")
-      (p, nc)
-    })
+  private val refitLife = Fixture.rooted("graft_sem_refitp_") { (s, d, root) =>
+    val src = Curation11.semLife(s, d)._1
+    val p = SemIndex.Paths(root)
+    s.read.parquet(src.seeds).repartition(1)
+      .write.mode("overwrite").parquet(p.seeds)
+    s.read.parquet(src.index)
+      .select("vec_id", "e", "n", "cell")
+      .write.partitionBy("cell").mode("overwrite").parquet(p.index)
+    val nc = SemIndex.refitIfNeeded(s, p, targetOcc = 16L)
+    require(nc > 0L, "refitLife: occupancy trigger did not fire")
+    (p, nc)
+  }
 
   /** TTL over the multimodal lifecycle: expire day 1's admissions
     * from all four indexes of the BATCH root (its decision pins —
@@ -133,37 +108,31 @@ object Curation12 {
     * obstacle was day-1 state must come back admitted, the
     * end-to-end proof the hashes/cells/bands really left.
     */
-  private val mmTtlCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (MultiDay.Paths4, org.apache.spark.sql.DataFrame, Boolean,
-      Seq[String])]()
-  private def mmTtl(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (MultiDay.Paths4, org.apache.spark.sql.DataFrame, Boolean,
-         Seq[String]) =
-    mmTtlCache.computeIfAbsent(dir, { d: String =>
-      val p = mmBatch(s, d)
-      val docs = tp(s, d, "documents").select("doc_id", "text")
-      val admitted = (1 to MultiDay.NDays4).map { k =>
-        s.read.parquet(p.decisionsDay(k))
-          .where(col("decision") === "admitted").select("doc_id")
-      }.reduce(_.unionByName(_))
-      val corpusDocs = docs
-        .where(pmod(col("doc_id"), lit(8L)) >= 4L)
-        .unionByName(docs.join(admitted, "doc_id"))
-        .localCheckpoint(true)
-      require(MultiDay.ttl4Day(s, p, "ttl1", Seq(1), corpusDocs),
-        "mmTtl: ttl1 unexpectedly already committed")
-      // the replay: a committed TTL day must be a pure no-op
-      val replayNoOp = !MultiDay.ttl4Day(s, p, "ttl1", Seq(1), corpusDocs)
-      val drop1 = s.read.parquet(p.dropDay(1))
-      val ids1 = drop1.select(col("doc_id").as("media_id"))
-      val reoffer = MultiDay.decisions4(s, p, drop1,
-          graft.ops.MediaHashes.fetchImage(s, p.media, ids1),
-          graft.ops.MediaHashes.fetchAudio(s, p.media, ids1),
-          docs)
-        .localCheckpoint(true)
-      (p, reoffer, replayNoOp,
-        CurationNDay.ledgerDays(s, p.ledger))
-    })
+  private val mmTtl = Fixture { (s, d) =>
+    val p = mmBatch(s, d)
+    val docs = tp(s, d, "documents").select("doc_id", "text")
+    val admitted = (1 to MultiDay.NDays4).map { k =>
+      s.read.parquet(p.decisionsDay(k))
+        .where(col("decision") === "admitted").select("doc_id")
+    }.reduce(_.unionByName(_))
+    val corpusDocs = docs
+      .where(pmod(col("doc_id"), lit(8L)) >= 4L)
+      .unionByName(docs.join(admitted, "doc_id"))
+      .localCheckpoint(true)
+    require(MultiDay.ttl4Day(s, p, "ttl1", Seq(1), corpusDocs),
+      "mmTtl: ttl1 unexpectedly already committed")
+    // the replay: a committed TTL day must be a pure no-op
+    val replayNoOp = !MultiDay.ttl4Day(s, p, "ttl1", Seq(1), corpusDocs)
+    val drop1 = s.read.parquet(p.dropDay(1))
+    val ids1 = drop1.select(col("doc_id").as("media_id"))
+    val reoffer = MultiDay.decisions4(s, p, drop1,
+        graft.ops.MediaHashes.fetchImage(s, p.media, ids1),
+        graft.ops.MediaHashes.fetchAudio(s, p.media, ids1),
+        docs)
+      .localCheckpoint(true)
+    (p, reoffer, replayNoOp,
+      CurationNDay.ledgerDays(s, p.ledger))
+  }
 
   /** TTL on the curation N-day lifecycle, on a FRESH batch root (the
     * q505 streamed root and the q517 retracted root keep their
@@ -172,48 +141,35 @@ object Curation12 {
     * the pack tape, and re-offer the oldest victim's text + a
     * surviving control through a day-5 decisions pass.
     */
-  private val ttlCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (graft.ops.CurationDay.Artifacts,
-      org.apache.spark.sql.DataFrame)]()
-  private def ttlLife(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (graft.ops.CurationDay.Artifacts, org.apache.spark.sql.DataFrame) =
-    ttlCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_curation_ttl_")
-      val a = graft.ops.CurationDay.Artifacts(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      CurationNDay.runDaysBatch(s, d, a)
-      val pre = s.read.parquet(a.corpusDir).localCheckpoint(true)
-      CurationNDay.ttlDay(s, a, "ttl1", keepFromDay = 2,
-        a.manifestDay(CurationNDay.NDays), a.manifestRetract(1)): Unit
-      graft.ops.Pack.rebuild(s, a, CurationNDay.NDays)
-      val post = s.read.parquet(a.corpusDir).localCheckpoint(true)
-      val victims = pre.join(post.select("doc_id"), Seq("doc_id"),
-        "left_anti")
-      val plant = victims.orderBy("doc_id").limit(1)
-        .select(lit(9900001L).as("doc_id"), col("text"))
-        .unionByName(post.orderBy("doc_id").limit(1)
-          .select(lit(9900002L).as("doc_id"), col("text")))
-      val dec = graft.ops.CurationDay.decisionsOf(s, a,
-          post.select("doc_id", "text"), plant)
-        .localCheckpoint(true)
-      (a, dec)
-    })
+  private val ttlLife = Fixture.rooted("graft_curation_ttl_") { (s, d, root) =>
+    val a = graft.ops.CurationDay.Artifacts(root)
+    CurationNDay.runDaysBatch(s, d, a)
+    val pre = s.read.parquet(a.corpusDir).localCheckpoint(true)
+    CurationNDay.ttlDay(s, a, "ttl1", keepFromDay = 2,
+      a.manifestDay(CurationNDay.NDays), a.manifestRetract(1)): Unit
+    graft.ops.Pack.rebuild(s, a, CurationNDay.NDays)
+    val post = s.read.parquet(a.corpusDir).localCheckpoint(true)
+    val victims = pre.join(post.select("doc_id"), Seq("doc_id"),
+      "left_anti")
+    val plant = victims.orderBy("doc_id").limit(1)
+      .select(lit(9900001L).as("doc_id"), col("text"))
+      .unionByName(post.orderBy("doc_id").limit(1)
+        .select(lit(9900002L).as("doc_id"), col("text")))
+    val dec = graft.ops.CurationDay.decisionsOf(s, a,
+        post.select("doc_id", "text"), plant)
+      .localCheckpoint(true)
+    (a, dec)
+  }
 
   /** The maintained batch lifecycle (compactions interleaved between
     * days — lexical tables, semantic cells, media artifact): a third
     * engine path whose decisions must equal the same composed oracle.
     */
-  private val mmMaintCache = new java.util.concurrent.ConcurrentHashMap[
-    String, MultiDay.Paths4]()
-  private def mmMaintained(s: org.apache.spark.sql.SparkSession,
-                           dir: String): MultiDay.Paths4 =
-    mmMaintCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm_maint_")
-      val p = MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      MultiDay.runDays4BatchMaintained(s, d, p)
-      p
-    })
+  private val mmMaintained = Fixture.rooted("graft_mm_maint_") { (s, d, root) =>
+    val p = MultiDay.Paths4(root)
+    MultiDay.runDays4BatchMaintained(s, d, p)
+    p
+  }
 
   /** SIZE-capped retention on its own fresh lifecycle (pack layouts
     * must be intact — the masses are read from them). The gate's cap
@@ -225,31 +181,23 @@ object Curation12 {
     * never trips [[CurationNDay.capDay]]'s newest-day loud-fail on a
     * bigger fixture the way a fixture-sized absolute cap would.
     */
-  private val capCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (graft.ops.CurationDay.Artifacts, Int)]()
-  private def capLife(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (graft.ops.CurationDay.Artifacts, Int) =
-    capCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_curation_cap_")
-      val a = graft.ops.CurationDay.Artifacts(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      CurationNDay.runDaysBatch(s, d, a)
-      def mass(k: Int): Long = s.read.parquet(a.packDay(k))
-        .agg(coalesce(sum(col("n_tok")), lit(0L)).as("m"))
-        .head().getLong(0)
-      // the UNDER-CAP check first (q578): a cap covering the WHOLE
-      // retained mass — day-0 snapshot included — must commit as a
-      // ledgered no-op and expire nothing
-      val total0 = (0 to CurationNDay.NDays).map(mass).sum
-      val k0 = CurationNDay.capDay(s, a, "cap0", maxTokens = total0,
-        a.manifestDay(CurationNDay.NDays), s"$root/m_noop")
-      require(k0 == 0, s"capLife: under-cap check expired days ($k0)")
-      val total = (1 to CurationNDay.NDays).map(mass).sum
-      val k = CurationNDay.capDay(s, a, "cap1",
-        maxTokens = total * 55L / 100L,
-        a.manifestDay(CurationNDay.NDays), a.manifestRetract(1))
-      (a, k)
-    })
+  private val capLife = Fixture.rooted("graft_curation_cap_") { (s, d, root) =>
+    val a = graft.ops.CurationDay.Artifacts(root)
+    CurationNDay.runDaysBatch(s, d, a)
+    def mass(k: Int): Long = CurationNDay.packMass(s, a, k)
+    // the UNDER-CAP check first (q578): a cap covering the WHOLE
+    // retained mass — day-0 snapshot included — must commit as a
+    // ledgered no-op and expire nothing
+    val total0 = (0 to CurationNDay.NDays).map(mass).sum
+    val k0 = CurationNDay.capDay(s, a, "cap0", maxTokens = total0,
+      a.manifestDay(CurationNDay.NDays), s"$root/m_noop")
+    require(k0 == 0, s"capLife: under-cap check expired days ($k0)")
+    val total = (1 to CurationNDay.NDays).map(mass).sum
+    val k = CurationNDay.capDay(s, a, "cap1",
+      maxTokens = total * 55L / 100L,
+      a.manifestDay(CurationNDay.NDays), a.manifestRetract(1))
+    (a, k)
+  }
 
   private[queries] def capLifeArtifacts(
       s: org.apache.spark.sql.SparkSession,
@@ -261,34 +209,22 @@ object Curation12 {
     * post-gate-rejected doc (its dedup columns must come back clean —
     * post-gate rejections never touch an index).
     */
-  private val mm6Cache = new java.util.concurrent.ConcurrentHashMap[
-    String, MultiDay.Paths4]()
-  private[queries] def mm6(s: org.apache.spark.sql.SparkSession,
-                  dir: String): MultiDay.Paths4 =
-    mm6Cache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm6_")
-      val p = MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      MultiDay.runDays6Batch(s, d, p)
-      p
-    })
+  private[queries] val mm6 = Fixture.rooted("graft_mm6_") { (s, d, root) =>
+    val p = MultiDay.Paths4(root)
+    MultiDay.runDays6Batch(s, d, p)
+    p
+  }
 
   /** The STREAMED six-stage lifecycle — second engine path onto
     * q559/q560's oracle, with the kill/restart + committed-day replay
     * witnessed in the gate run.
     */
-  private val mm6StreamCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (MultiDay.Paths4, Boolean, Seq[String])]()
-  private def mm6Stream(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (MultiDay.Paths4, Boolean, Seq[String]) =
-    mm6StreamCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm6_stream_")
-      val p = MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val (noop, days) =
-        graft.streaming.MultiStream.runDays6Streamed(s, d, p)
-      (p, noop, days)
-    })
+  private val mm6Stream = Fixture.rooted("graft_mm6_stream_") { (s, d, root) =>
+    val p = MultiDay.Paths4(root)
+    val (noop, days) =
+      graft.streaming.MultiStream.runDays6Streamed(s, d, p)
+    (p, noop, days)
+  }
 
   val queries: Map[String, QFn] = Map(
 

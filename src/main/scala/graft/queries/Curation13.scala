@@ -30,35 +30,27 @@ object Curation13 {
     * distance-0 neighbor the banded search MUST surface (the
     * pigeonhole witness the recall card certifies at 1e6 ppm).
     */
-  private val searchCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (PhashIndex.Paths, PhashIndex.Paths,
-      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]()
-  private[graft] def searchLife(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (PhashIndex.Paths, PhashIndex.Paths,
-         org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-    searchCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_ph_search_")
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val pImg = PhashIndex.Paths(s"$root/img")
-      val pAud = PhashIndex.Paths(s"$root/aud")
-      val docs = t(s, d, "documents").select("doc_id", "text")
-      val pngUdf = Multimodal.pngVarUdf
-      def imgHash(src: org.apache.spark.sql.DataFrame) =
-        Multimodal.dHash(Multimodal.decodeCells(
-          src.select(col("doc_id").as("media_id"),
-            pngUdf(col("doc_id") - pmod(col("doc_id"), lit(2L)))
-              .as("payload"))))
-      def audHash(src: org.apache.spark.sql.DataFrame) =
-        Multimodal.audioFingerprint(
-          src.select(col("doc_id").as("media_id"),
-            col("text").cast("binary").as("payload")))
-      val idx = docs.where(pmod(col("doc_id"), lit(4L)).isin(0L, 1L, 2L))
-      val qs = docs.where(pmod(col("doc_id"), lit(4L)) === 3L)
-      PhashIndex.write(s, imgHash(idx), pImg)
-      PhashIndex.write(s, audHash(idx), pAud)
-      (pImg, pAud, imgHash(qs).localCheckpoint(true),
-        audHash(qs).localCheckpoint(true))
-    })
+  private[graft] val searchLife = Fixture.rooted("graft_ph_search_") { (s, d, root) =>
+    val pImg = PhashIndex.Paths(s"$root/img")
+    val pAud = PhashIndex.Paths(s"$root/aud")
+    val docs = t(s, d, "documents").select("doc_id", "text")
+    val pngUdf = Multimodal.pngVarUdf
+    def imgHash(src: org.apache.spark.sql.DataFrame) =
+      Multimodal.dHash(Multimodal.decodeCells(
+        src.select(col("doc_id").as("media_id"),
+          pngUdf(col("doc_id") - pmod(col("doc_id"), lit(2L)))
+            .as("payload"))))
+    def audHash(src: org.apache.spark.sql.DataFrame) =
+      Multimodal.audioFingerprint(
+        src.select(col("doc_id").as("media_id"),
+          col("text").cast("binary").as("payload")))
+    val idx = docs.where(pmod(col("doc_id"), lit(4L)).isin(0L, 1L, 2L))
+    val qs = docs.where(pmod(col("doc_id"), lit(4L)) === 3L)
+    PhashIndex.write(s, imgHash(idx), pImg)
+    PhashIndex.write(s, audHash(idx), pAud)
+    (pImg, pAud, imgHash(qs).localCheckpoint(true),
+      audHash(qs).localCheckpoint(true))
+  }
 
   /** The STREAMED retention calendar lifecycle (r12 verdict task 2):
     * admission days 1–2, the ledgered ttl2 control slot (expire day
@@ -66,103 +58,60 @@ object Curation13 {
     * around it and a replayed control no-op'd, then day 3 admitting
     * against the retained indexes.
     */
-  private val mmCalCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (graft.ops.MultiDay.Paths4, Boolean, Seq[String])]()
-  private def mmCal(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (graft.ops.MultiDay.Paths4, Boolean, Seq[String]) =
-    mmCalCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm_cal_")
-      val p = graft.ops.MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val (noop, days) =
-        graft.streaming.MultiStream.runCalendarStreamed(s, d, p)
-      (p, noop, days)
-    })
+  private val mmCal = Fixture.rooted("graft_mm_cal_") { (s, d, root) =>
+    val p = graft.ops.MultiDay.Paths4(root)
+    val (noop, days) =
+      graft.streaming.MultiStream.runCalendarStreamed(s, d, p)
+    (p, noop, days)
+  }
 
   /** The same calendar through the BATCH engine — second path onto
     * q569's oracle.
     */
-  private val mmCalBatchCache = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.ops.MultiDay.Paths4]()
-  private def mmCalBatch(s: org.apache.spark.sql.SparkSession,
-                         dir: String): graft.ops.MultiDay.Paths4 =
-    mmCalBatchCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm_calb_")
-      val p = graft.ops.MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      graft.ops.MultiDay.runDays4Calendar(s, d, p)
-      p
-    })
+  private val mmCalBatch = Fixture.rooted("graft_mm_calb_") { (s, d, root) =>
+    val p = graft.ops.MultiDay.Paths4(root)
+    graft.ops.MultiDay.runDays4Calendar(s, d, p)
+    p
+  }
 
   /** The six-stage CALENDAR lifecycles (r12 verdict task 3): the
     * proven two-day full stack + the ledgered ttl2 slot + the
     * pin-derived witness day 3, batch and streamed engines.
     */
-  private val mm6CalCache = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.ops.MultiDay.Paths4]()
-  private def mm6Cal(s: org.apache.spark.sql.SparkSession,
-                     dir: String): graft.ops.MultiDay.Paths4 =
-    mm6CalCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm6_cal_")
-      val p = graft.ops.MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      graft.ops.MultiDay.runDays6Calendar(s, d, p)
-      p
-    })
+  private val mm6Cal = Fixture.rooted("graft_mm6_cal_") { (s, d, root) =>
+    val p = graft.ops.MultiDay.Paths4(root)
+    graft.ops.MultiDay.runDays6Calendar(s, d, p)
+    p
+  }
 
-  private val mm6CalStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (graft.ops.MultiDay.Paths4, Boolean, Seq[String])]()
-  private def mm6CalStream(s: org.apache.spark.sql.SparkSession,
-                           dir: String)
-      : (graft.ops.MultiDay.Paths4, Boolean, Seq[String]) =
-    mm6CalStreamCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm6_cals_")
-      val p = graft.ops.MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val (noop, days) =
-        graft.streaming.MultiStream.runDays6CalendarStreamed(s, d, p)
-      (p, noop, days)
-    })
+  private val mm6CalStream = Fixture.rooted("graft_mm6_cals_") { (s, d, root) =>
+    val p = graft.ops.MultiDay.Paths4(root)
+    val (noop, days) =
+      graft.streaming.MultiStream.runDays6CalendarStreamed(s, d, p)
+    (p, noop, days)
+  }
 
   /** The CURATION N-day lifecycle with its retention slot driven
     * THROUGH the stream (the other half of r12 verdict task 2): days
     * 1–4 + the ttl4 control (keepFrom = 2), kill/restart, replayed
     * control no-op'd by the slot's done row.
     */
-  private val curTtlStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (graft.ops.CurationDay.Artifacts, Boolean, Seq[String])]()
-  private def curTtlStream(s: org.apache.spark.sql.SparkSession,
-                           dir: String)
-      : (graft.ops.CurationDay.Artifacts, Boolean, Seq[String]) =
-    curTtlStreamCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_cur_ttl_stream_")
-      val a = graft.ops.CurationDay.Artifacts(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val (noop, days) =
-        graft.streaming.CurationStream.runTtlCalendarStreamed(s, d, a)
-      (a, noop, days)
-    })
+  private val curTtlStream = Fixture.rooted("graft_cur_ttl_stream_") { (s, d, root) =>
+    val a = graft.ops.CurationDay.Artifacts(root)
+    val (noop, days) =
+      graft.streaming.CurationStream.runTtlCalendarStreamed(s, d, a)
+    (a, noop, days)
+  }
 
   /** The STREAMED size-cap calendar (the cap control riding the same
     * file-source stream, horizon pinned before mutation).
     */
-  private val capStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (graft.ops.CurationDay.Artifacts, Boolean, Seq[String],
-        Int)]()
-  private def capStream(s: org.apache.spark.sql.SparkSession,
-                        dir: String)
-      : (graft.ops.CurationDay.Artifacts, Boolean, Seq[String], Int) =
-    capStreamCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_cap_stream_")
-      val a = graft.ops.CurationDay.Artifacts(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val (noop, days, horizon) =
-        graft.streaming.CurationStream.runCapCalendarStreamed(s, d, a)
-      (a, noop, days, horizon)
-    })
+  private val capStream = Fixture.rooted("graft_cap_stream_") { (s, d, root) =>
+    val a = graft.ops.CurationDay.Artifacts(root)
+    val (noop, days, horizon) =
+      graft.streaming.CurationStream.runCapCalendarStreamed(s, d, a)
+    (a, noop, days, horizon)
+  }
 
   val queries: Map[String, QFn] = Map(
 

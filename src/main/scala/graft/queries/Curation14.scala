@@ -34,114 +34,65 @@ object Curation14 {
     * day 3 against the capped indexes, then the under-cap cap3
     * ledgered no-op.
     */
-  private val capBatchCache = new java.util.concurrent.ConcurrentHashMap[
-    String, MultiDay.Paths4]()
-  private def capBatch(s: org.apache.spark.sql.SparkSession,
-                       dir: String): MultiDay.Paths4 =
-    capBatchCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm_capb_")
-      val p = MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      MultiDay.runDays4CapCalendar(s, d, p)
-      p
-    })
+  private val capBatch = Fixture.rooted("graft_mm_capb_") { (s, d, root) =>
+    val p = MultiDay.Paths4(root)
+    MultiDay.runDays4CapCalendar(s, d, p)
+    p
+  }
 
   /** The same calendar with the cap controls riding the stream
     * (kill/restart around the slot, replayed control no-op'd).
     */
-  private val capStream4Cache = new java.util.concurrent.ConcurrentHashMap[
-    String, (MultiDay.Paths4, Boolean, Seq[String], Int, Int)]()
-  private def capStream4(s: org.apache.spark.sql.SparkSession,
-                         dir: String)
-      : (MultiDay.Paths4, Boolean, Seq[String], Int, Int) =
-    capStream4Cache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm_caps_")
-      val p = MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val (noop, days, h2, h3) =
-        graft.streaming.MultiStream.runCapCalendarStreamed4(s, d, p)
-      (p, noop, days, h2, h3)
-    })
+  private val capStream4 = Fixture.rooted("graft_mm_caps_") { (s, d, root) =>
+    val p = MultiDay.Paths4(root)
+    val (noop, days, h2, h3) =
+      graft.streaming.MultiStream.runCapCalendarStreamed4(s, d, p)
+    (p, noop, days, h2, h3)
+  }
 
   /** The streamed COMPACTION calendar (op = "compact" control slots
     * interleaved with the admission days).
     */
-  private val compactStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (MultiDay.Paths4, Boolean, Seq[String])]()
-  private def compactStream(s: org.apache.spark.sql.SparkSession,
-                            dir: String)
-      : (MultiDay.Paths4, Boolean, Seq[String]) =
-    compactStreamCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm_cmps_")
-      val p = MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val (noop, days) =
-        graft.streaming.MultiStream.runDays4CompactStreamed(s, d, p)
-      (p, noop, days)
-    })
+  private val compactStream = Fixture.rooted("graft_mm_cmps_") { (s, d, root) =>
+    val p = MultiDay.Paths4(root)
+    val (noop, days) =
+      graft.streaming.MultiStream.runDays4CompactStreamed(s, d, p)
+    (p, noop, days)
+  }
 
   /** The CURATION-side streamed compaction calendar
     * ([[graft.streaming.CurationStream.runCompactCalendarStreamed]] —
     * the q591/q592 symmetry: both calendars serve all three control
     * ops).
     */
-  private val curCompactCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (graft.ops.CurationDay.Artifacts, Boolean, Seq[String],
-        Boolean)]()
-  private def curCompactStream(s: org.apache.spark.sql.SparkSession,
-                               dir: String)
-      : (graft.ops.CurationDay.Artifacts, Boolean, Seq[String],
-         Boolean) =
-    curCompactCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_cur_cmps_")
-      val a = graft.ops.CurationDay.Artifacts(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val (noop, days, settled) =
-        graft.streaming.CurationStream.runCompactCalendarStreamed(s, d, a)
-      (a, noop, days, settled)
-    })
+  private val curCompactStream = Fixture.rooted("graft_cur_cmps_") { (s, d, root) =>
+    val a = graft.ops.CurationDay.Artifacts(root)
+    val (noop, days, settled) =
+      graft.streaming.CurationStream.runCompactCalendarStreamed(s, d, a)
+    (a, noop, days, settled)
+  }
 
   /** The FULL maintenance calendar — ttl + cap + compact interleaved
     * in ONE streamed run
     * ([[graft.streaming.MultiStream.runFullCalendarStreamed]]).
     */
-  private val fullCalCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (MultiDay.Paths4, Boolean, Seq[String], Int, Boolean)]()
-  private def fullCal(s: org.apache.spark.sql.SparkSession,
-                      dir: String)
-      : (MultiDay.Paths4, Boolean, Seq[String], Int, Boolean) =
-    fullCalCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_mm_full_")
-      val p = MultiDay.Paths4(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val (noop, days, horizon, settled) =
-        graft.streaming.MultiStream.runFullCalendarStreamed(s, d, p)
-      (p, noop, days, horizon, settled)
-    })
+  private val fullCal = Fixture.rooted("graft_mm_full_") { (s, d, root) =>
+    val p = MultiDay.Paths4(root)
+    val (noop, days, horizon, settled) =
+      graft.streaming.MultiStream.runFullCalendarStreamed(s, d, p)
+    (p, noop, days, horizon, settled)
+  }
 
   /** The CURATION-side full maintenance calendar
     * ([[graft.streaming.CurationStream.runFullCalendarStreamed]] —
     * runnable because the streamed cap slot rides capDayPinned).
     */
-  private val curFullCalCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (graft.ops.CurationDay.Artifacts, Boolean, Seq[String],
-        Int, Boolean)]()
-  private def curFullCal(s: org.apache.spark.sql.SparkSession,
-                         dir: String)
-      : (graft.ops.CurationDay.Artifacts, Boolean, Seq[String], Int,
-         Boolean) =
-    curFullCalCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_cur_full_")
-      val a = graft.ops.CurationDay.Artifacts(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val (noop, days, horizon, settled) =
-        graft.streaming.CurationStream.runFullCalendarStreamed(s, d, a)
-      (a, noop, days, horizon, settled)
-    })
+  private val curFullCal = Fixture.rooted("graft_cur_full_") { (s, d, root) =>
+    val a = graft.ops.CurationDay.Artifacts(root)
+    val (noop, days, horizon, settled) =
+      graft.streaming.CurationStream.runFullCalendarStreamed(s, d, a)
+    (a, noop, days, horizon, settled)
+  }
 
   /** The standalone lexical-evidence lifecycle: a persisted dedup
     * index over the %4 ∈ {0,1,2} corpus; the delta = the %4 == 3
@@ -152,40 +103,31 @@ object Curation14 {
     * shingle set + 2 — Jaccard (W−2)/W ≥ 0.8, the near branch).
     * Returns (index path, corpus texts, rejected texts).
     */
-  private val evidenceCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame)]()
-  private def evidenceLife(s: org.apache.spark.sql.SparkSession,
-                           dir: String)
-      : (String, org.apache.spark.sql.DataFrame,
-         org.apache.spark.sql.DataFrame) =
-    evidenceCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_lex_ev_")
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val path = s"$root/lex_index"
-      val docs = tp(s, d, "documents").select("doc_id", "text")
-      val corpus = docs.where(pmod(col("doc_id"), lit(4L)).isin(0L, 1L, 2L))
-        .localCheckpoint(true)
-      val exactSn = corpus.orderBy("doc_id").limit(1)
-        .select(lit(9900001L).as("doc_id"), col("text"))
-      val nearSn = corpus
-        .where(size(split(col("text"), " ")) >= 30)
-        .orderBy("doc_id").limit(1)
-        .select(lit(9900002L).as("doc_id"),
-          concat(col("text"), lit(" zz9")).as("text"))
-      val batch = docs.where(pmod(col("doc_id"), lit(4L)) === 3L)
-        .unionByName(exactSn).unionByName(nearSn)
-        .localCheckpoint(true)
-      Dedup.writeDedupIndex(corpus, "text", "doc_id", path)
-      val dec = Dedup.incrementalDedupIndexed(path, docs, batch,
-        "text", "doc_id", 3, 16, 4, 0.8)
-      val rejected = batch.join(
-        dec.where(col("decision").isin(
-            "dup_exact_corpus", "near_dup_corpus"))
-          .select("doc_id"), "doc_id")
-        .localCheckpoint(true)
-      (path, corpus, rejected)
-    })
+  private val evidenceLife = Fixture.rooted("graft_lex_ev_") { (s, d, root) =>
+    val path = s"$root/lex_index"
+    val docs = tp(s, d, "documents").select("doc_id", "text")
+    val corpus = docs.where(pmod(col("doc_id"), lit(4L)).isin(0L, 1L, 2L))
+      .localCheckpoint(true)
+    val exactSn = corpus.orderBy("doc_id").limit(1)
+      .select(lit(9900001L).as("doc_id"), col("text"))
+    val nearSn = corpus
+      .where(size(split(col("text"), " ")) >= 30)
+      .orderBy("doc_id").limit(1)
+      .select(lit(9900002L).as("doc_id"),
+        concat(col("text"), lit(" zz9")).as("text"))
+    val batch = docs.where(pmod(col("doc_id"), lit(4L)) === 3L)
+      .unionByName(exactSn).unionByName(nearSn)
+      .localCheckpoint(true)
+    Dedup.writeDedupIndex(corpus, "text", "doc_id", path)
+    val dec = Dedup.incrementalDedupIndexed(path, docs, batch,
+      "text", "doc_id", 3, 16, 4, 0.8)
+    val rejected = batch.join(
+      dec.where(col("decision").isin(
+          "dup_exact_corpus", "near_dup_corpus"))
+        .select("doc_id"), "doc_id")
+      .localCheckpoint(true)
+    (path, corpus, rejected)
+  }
 
   val queries: Map[String, QFn] = Map(
 
@@ -204,7 +146,7 @@ object Curation14 {
     "q588_mm_cap_cards" -> ((s, dir) => {
       val p = capBatch(s, dir)
       def horizon(id: String): Long =
-        s.read.parquet(p.capHorizon(id)).head().getInt(0).toLong
+        graft.ops.CurationNDay.readHorizon(s, p.capHorizon(id)).toLong
       MultiDay.indexCards4(s, p)
         .withColumn("keep_from_2", lit(horizon("cap2")))
         .withColumn("keep_from_3", lit(horizon("cap3")))

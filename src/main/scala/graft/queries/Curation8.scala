@@ -24,29 +24,19 @@ object Curation8 {
     * scratch root lives until JVM exit (shutdown hook deletes it), so
     * every facet reads the same persisted artifacts.
     */
-  private val dayCache =
-    new java.util.concurrent.ConcurrentHashMap[String, CurationDay.Artifacts]()
-  private def day(s: org.apache.spark.sql.SparkSession,
-                  dir: String): CurationDay.Artifacts =
-    dayCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_curation_day_")
-      val a = CurationDay.Artifacts(root)
-      CurationDay.bootstrap(s, d, a)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      a
-    })
+  private val day = Fixture.rooted("graft_curation_day_") { (s, d, root) =>
+    val a = CurationDay.Artifacts(root)
+    CurationDay.bootstrap(s, d, a)
+    a
+  }
 
   /** The delta-day decision frame, computed once per dir (it feeds
     * q488, q489, and q491) and pinned with an eager localCheckpoint.
     */
-  private val decCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
-  private def dayDecisions(s: org.apache.spark.sql.SparkSession,
-                           dir: String): org.apache.spark.sql.DataFrame =
-    decCache.computeIfAbsent(dir, { d: String =>
-      CurationDay.decisions(s, day(s, d), tp(s, d, "documents"))
-        .localCheckpoint(true)
-    })
+  private val dayDecisions = Fixture { (s, d) =>
+    CurationDay.decisions(s, day(s, d), tp(s, d, "documents"))
+      .localCheckpoint(true)
+  }
 
   /** The TWO-day lifecycle run (q492-q494), computed once per dir:
     * bootstrap on the {2,3,4}-snapshot -> day-1 decisions -> ADMIT
@@ -55,56 +45,42 @@ object Curation8 {
     * day-2 decisions -> day-2 admit. Returns the artifacts and the
     * checkpointed day-2 decision frame.
     */
-  private val twoDayCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (CurationDay.Artifacts, org.apache.spark.sql.DataFrame)]()
-  private def twoDay(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (CurationDay.Artifacts, org.apache.spark.sql.DataFrame) =
-    twoDayCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_curation_2day_")
-      val a = CurationDay.Artifacts(root)
-      CurationDay.bootstrapTwoDay(s, d, a)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val fetch = tp(s, d, "documents")
-      val dec1 = CurationDay.decisions(s, a, fetch).localCheckpoint(true)
-      CurationDay.admitDay(s, a, dec1, a.deltaDocs, a.manifest0,
-        a.manifest1)
-      // event-state write side: persist day-1's folded agg partials
-      // and append day-1's keys into the distinct state, so day-2
-      // folds against a state that already absorbed day 1
-      graft.ops.Scale.foldAggState(s.read.parquet(a.aggState),
-          s.read.parquet(a.deltaEvents), "event_type",
-          CurationDay.guardedValue)
-        .select("event_type", "n_rows", "sum_cents")
-        .write.mode("overwrite").parquet(a.aggState1)
-      graft.ops.Scale.appendDistinctState(s, a.distinctState,
-        s.read.parquet(a.deltaEvents), "event_type", "user_id", 16)
-      CurationDay.writeDay2Drop(s, d, a, dec1)
-      val dec2 = CurationDay.decisions(s, a, fetch, Some(a.day2Docs))
-        .localCheckpoint(true)
-      CurationDay.admitDay(s, a, dec2, a.day2Docs, a.manifest1,
-        a.manifest2)
-      (a, dec2)
-    })
+  private val twoDay = Fixture.rooted("graft_curation_2day_") { (s, d, root) =>
+    val a = CurationDay.Artifacts(root)
+    CurationDay.bootstrapTwoDay(s, d, a)
+    val fetch = tp(s, d, "documents")
+    val dec1 = CurationDay.decisions(s, a, fetch).localCheckpoint(true)
+    CurationDay.admitDay(s, a, dec1, a.deltaDocs, a.manifest0,
+      a.manifest1)
+    // event-state write side: persist day-1's folded agg partials
+    // and append day-1's keys into the distinct state, so day-2
+    // folds against a state that already absorbed day 1
+    graft.ops.Scale.foldAggState(s.read.parquet(a.aggState),
+        s.read.parquet(a.deltaEvents), "event_type",
+        CurationDay.guardedValue)
+      .select("event_type", "n_rows", "sum_cents")
+      .write.mode("overwrite").parquet(a.aggState1)
+    graft.ops.Scale.appendDistinctState(s, a.distinctState,
+      s.read.parquet(a.deltaEvents), "event_type", "user_id", 16)
+    CurationDay.writeDay2Drop(s, d, a, dec1)
+    val dec2 = CurationDay.decisions(s, a, fetch, Some(a.day2Docs))
+      .localCheckpoint(true)
+    CurationDay.admitDay(s, a, dec2, a.day2Docs, a.manifest1,
+      a.manifest2)
+    (a, dec2)
+  }
 
   /** The grown manifest and the folded states, computed once per dir
     * (each feeds its own gate row AND the q491 report — without the
     * cache the folds would run twice per gate pass).
     */
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
-  private def dayManifest(s: org.apache.spark.sql.SparkSession,
-                          dir: String): org.apache.spark.sql.DataFrame =
-    manifestCache.computeIfAbsent(dir, { d: String =>
-      CurationDay.grownManifest(s, day(s, d), dayDecisions(s, d))
-        .localCheckpoint(true)
-    })
-  private val statesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
-  private def dayStates(s: org.apache.spark.sql.SparkSession,
-                        dir: String): org.apache.spark.sql.DataFrame =
-    statesCache.computeIfAbsent(dir, { d: String =>
-      CurationDay.foldedStates(s, day(s, d)).localCheckpoint(true)
-    })
+  private val dayManifest = Fixture { (s, d) =>
+    CurationDay.grownManifest(s, day(s, d), dayDecisions(s, d))
+      .localCheckpoint(true)
+  }
+  private val dayStates = Fixture { (s, d) =>
+    CurationDay.foldedStates(s, day(s, d)).localCheckpoint(true)
+  }
 
   val queries: Map[String, QFn] = Map(
 

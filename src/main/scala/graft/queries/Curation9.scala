@@ -31,30 +31,18 @@ object Curation9 {
     * until JVM exit — the q488 caching pattern): returns the artifact
     * root plus the recovery facts the q510 report pins.
     */
-  private val streamCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (CurationDay.Artifacts, Boolean, Seq[String])]()
-  private[queries] def streamed(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (CurationDay.Artifacts, Boolean, Seq[String]) =
-    streamCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_curation_stream_")
-      val a = CurationDay.Artifacts(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      val (replayNoOp, days) = CurationStream.runDaysStreamed(s, d, a)
-      (a, replayNoOp, days)
-    })
+  private[queries] val streamed = Fixture.rooted("graft_curation_stream_") { (s, d, root) =>
+    val a = CurationDay.Artifacts(root)
+    val (replayNoOp, days) = CurationStream.runDaysStreamed(s, d, a)
+    (a, replayNoOp, days)
+  }
 
   /** The BATCH N-day lifecycle over the same day splits. */
-  private val batchCache = new java.util.concurrent.ConcurrentHashMap[
-    String, CurationDay.Artifacts]()
-  private def nDayBatch(s: org.apache.spark.sql.SparkSession,
-                        dir: String): CurationDay.Artifacts =
-    batchCache.computeIfAbsent(dir, { d: String =>
-      val root = Curation2.tempIndexDir("graft_curation_nday_")
-      val a = CurationDay.Artifacts(root)
-      sys.addShutdownHook(Curation2.deleteDir(root))
-      CurationNDay.runDaysBatch(s, d, a)
-      a
-    })
+  private val nDayBatch = Fixture.rooted("graft_curation_nday_") { (s, d, root) =>
+    val a = CurationDay.Artifacts(root)
+    CurationNDay.runDaysBatch(s, d, a)
+    a
+  }
 
   /** The RETRACTION day, run once per dir on the BATCH lifecycle's
     * artifacts (the streamed set stays pristine for q505-q507/q516):
@@ -66,30 +54,26 @@ object Curation9 {
     * which is exactly deleteFromDedupIndex's stillHeld semantics, and
     * the oracle recomputes the same answer from corpus5).
     */
-  private val retractCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (CurationDay.Artifacts, org.apache.spark.sql.DataFrame)]()
-  private[queries] def retracted(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (CurationDay.Artifacts, org.apache.spark.sql.DataFrame) =
-    retractCache.computeIfAbsent(dir, { d: String =>
-      val a = nDayBatch(s, d)
-      val pre = s.read.parquet(a.corpusDir)
-      val victims = pre.where(pmod(col("doc_id"), lit(16L)) === 1L)
-        .localCheckpoint(true)
-      CurationNDay.retractDay(s, a, "retract1", victims,
-        a.manifestDay(CurationNDay.NDays), a.manifestRetract(1)): Unit
-      // day-5 re-offer drop: min + max retracted texts under new ids,
-      // plus a surviving doc copy as the dup_exact control
-      val post = s.read.parquet(a.corpusDir).localCheckpoint(true)
-      val plant = victims.orderBy("doc_id").limit(1)
-        .select(lit(9400001L).as("doc_id"), col("text"))
-        .unionByName(victims.orderBy(col("doc_id").desc).limit(1)
-          .select(lit(9400002L).as("doc_id"), col("text")))
-        .unionByName(post.orderBy("doc_id").limit(1)
-          .select(lit(9400003L).as("doc_id"), col("text")))
-      val dec5 = CurationDay.decisionsOf(s, a, post, plant)
-        .localCheckpoint(true)
-      (a, dec5)
-    })
+  private[queries] val retracted = Fixture { (s, d) =>
+    val a = nDayBatch(s, d)
+    val pre = s.read.parquet(a.corpusDir)
+    val victims = pre.where(pmod(col("doc_id"), lit(16L)) === 1L)
+      .localCheckpoint(true)
+    CurationNDay.retractDay(s, a, "retract1", victims,
+      a.manifestDay(CurationNDay.NDays), a.manifestRetract(1)): Unit
+    // day-5 re-offer drop: min + max retracted texts under new ids,
+    // plus a surviving doc copy as the dup_exact control
+    val post = s.read.parquet(a.corpusDir).localCheckpoint(true)
+    val plant = victims.orderBy("doc_id").limit(1)
+      .select(lit(9400001L).as("doc_id"), col("text"))
+      .unionByName(victims.orderBy(col("doc_id").desc).limit(1)
+        .select(lit(9400002L).as("doc_id"), col("text")))
+      .unionByName(post.orderBy("doc_id").limit(1)
+        .select(lit(9400003L).as("doc_id"), col("text")))
+    val dec5 = CurationDay.decisionsOf(s, a, post, plant)
+      .localCheckpoint(true)
+    (a, dec5)
+  }
 
   val queries: Map[String, QFn] = Map(
 

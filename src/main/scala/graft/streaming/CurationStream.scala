@@ -1,136 +1,33 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField}
 
 import graft.ops.{CurationDay, CurationNDay}
+import Calendar.{Control, Derive, Land, OpCap, OpCompact, OpTtl, Run}
 
 /** The curation day as a STREAMING job (SURVEY §1.3 — the engine is
   * streaming-first, and the r10 flagship was batch-incremental): daily
   * document drops LAND AS FILES in a directory, a Structured Streaming
-  * file source delivers them, and `foreachBatch` drives each day
-  * through the exact [[CurationNDay.processDay]] the batch loop uses —
-  * ledger-gated exactly-once ingest + index-backed incremental
-  * decisions + admit (index append, manifest fold, persisted-state
-  * folds). The reference's script-runner/cron analog
-  * (src/vizier/services/query_broker/script_runner/), re-expressed as
-  * the standard Spark incremental-ETL topology: file source →
-  * foreachBatch → idempotent multi-artifact day transaction.
-  *
-  * Delivery/recovery semantics, layer by layer:
-  *  - the file source's checkpoint (offset log) gives at-least-once
-  *    micro-batch delivery across stop/restart;
-  *  - [[CurationNDay.processDay]]'s day ledger upgrades that to
-  *    exactly-once per DAY: a replayed batch whose day committed is a
-  *    no-op, and a day that died before its ledger row re-runs
-  *    convergently (see [[CurationNDay]]'s crash/replay contract);
-  *  - days inside one micro-batch are applied in day order (a bounded
-  *    driver loop — the distinct-day list is model-sized), and an
-  *    out-of-order drop fails loudly via the day-(k−1) artifact
-  *    require.
+  * file source delivers them, and the [[Calendar]] interpreter's
+  * `foreachBatch` drives each day through the exact
+  * [[CurationNDay.processDay]] the batch loop uses — ledger-gated
+  * exactly-once ingest + index-backed incremental decisions + admit
+  * (index append, manifest fold, persisted-state folds). This object
+  * is the curation [[binding]] plus its calendars; delivery and
+  * recovery semantics are the interpreter's (see [[Calendar]]), and
+  * an out-of-order drop fails loudly via the day-(k−1) artifact
+  * require.
   *
   * At 100 TB nothing here collects data rows to the driver: the batch
   * frame is only filtered per day and handed to the same
-  * delta-proportional operators the batch path runs; `landDrop`'s
-  * single-file staging is a fixture convenience (a production landing
-  * zone drops whatever file batches it likes — `maxFilesPerTrigger`
-  * then controls batch granularity, and the in-batch day loop handles
-  * multi-file, multi-day batches).
+  * delta-proportional operators the batch path runs; the single-file
+  * landing is a fixture convenience (a production landing zone drops
+  * whatever file batches it likes — `maxFilesPerTrigger` then controls
+  * batch granularity, and the in-batch day loop handles multi-file,
+  * multi-day batches).
   */
 object CurationStream {
-
-  /** Landing-file schema: the curation payload (doc_id, text) plus
-    * the [[ControlChannel]] contract fields — op = null is admission
-    * data, "ttl"/"cap" are retention slots whose scalar (keepFromDay
-    * / maxTokens) rides `doc_id`, "compact" is the index-maintenance
-    * slot (see [[ControlChannel]] for the full channel contract both
-    * calendars share).
-    */
-  val dropSchema: StructType = ControlChannel.schemaWith(
-    StructField("doc_id", LongType),
-    StructField("text", StringType))
-
-  /** Start the admission stream over `a.landing`, checkpointed at
-    * `a.streamCp` (restart with the same paths to resume).
-    *
-    * A retention CONTROL (op = "ttl") runs the ledgered
-    * [[CurationNDay.ttlDay]] + [[graft.ops.Pack.rebuild]] as a
-    * TWO-PHASE slot: the slot's own `ttl<k>_done` ledger row commits
-    * only after the tape rebuild, so a slot that crashed between the
-    * (itself ledgered, replay-convergent) expiry and the rebuild
-    * re-runs BOTH on replay — the expiry no-ops via its own ledger,
-    * the rebuild is an idempotent overwrite — while a fully committed
-    * slot is a pure no-op.
-    */
-  def start(spark: SparkSession, a: CurationDay.Artifacts,
-            corpusFetch: DataFrame): StreamingQuery =
-    spark.readStream
-      .schema(dropSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(a.landing)
-      .writeStream
-      .option("checkpointLocation", a.streamCp)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val days = batch.select("day").distinct()
-          .collect().map(_.getInt(0)).sorted // bounded: days per batch
-        days.foreach { k =>
-          val rows = batch.where(col("day") === k)
-          val drop = rows.where(col("op").isNull)
-            .select("doc_id", "text")
-          if (!drop.isEmpty)
-            CurationNDay.processDay(spark, a, k, drop, corpusFetch): Unit
-          ControlChannel.payloads(rows, ControlChannel.OpTtl)
-            .foreach { keepFrom =>
-              ControlChannel.slot(spark, a.ledger, s"ttl${k}_done") {
-                CurationNDay.ttlDay(spark, a, s"ttl$k", keepFrom.toInt,
-                  a.manifestDay(CurationNDay.NDays),
-                  a.manifestRetract(1)): Unit
-                graft.ops.Pack.rebuild(spark, a, CurationNDay.NDays)
-              }: Unit
-            }
-          // SIZE-CAP control (op = "cap", doc_id = maxTokens): same
-          // two-phase slot, but the tape rebuild is governed by the
-          // horizon capDay PINNED before mutating — a slot replayed
-          // after the cap committed still knows whether it expired
-          // anything (rebuild) or was an under-cap no-op (leave the
-          // valid per-day tape untouched).
-          ControlChannel.payloads(rows, ControlChannel.OpCap)
-            .foreach { maxTok =>
-              ControlChannel.slot(spark, a.ledger, s"cap${k}_done") {
-                // the ORDER-INDEPENDENT variant: a calendar may
-                // schedule this slot after a ttl whose rebuild
-                // collapsed the pack day segments (identical horizons
-                // when it doesn't — see capDayPinned)
-                CurationNDay.capDayPinned(spark, a, s"cap$k", maxTok,
-                  a.manifestDay(CurationNDay.NDays),
-                  a.manifestRetract(1)): Unit
-                val horizon = spark.read
-                  .parquet(a.capHorizon(s"cap$k"))
-                  .head().getInt(0) // one pinned row
-                if (horizon > 0)
-                  graft.ops.Pack.rebuild(spark, a, CurationNDay.NDays)
-              }: Unit
-            }
-          // COMPACTION control (op = "compact", payload ignored): the
-          // dedup index's accrued per-day append files settled into
-          // right-sized ones IN the calendar — the mm chain's
-          // op = "compact" slot ([[MultiStream]]) on the curation
-          // side. Content-invariant by construction (staging +
-          // rename-swap, [[graft.ops.Dedup.compactDedupIndex]]), so
-          // every later day's decisions must stay bit-identical;
-          // single-phase, exactly-once via the slot's done row.
-          ControlChannel.payloads(rows, ControlChannel.OpCompact)
-            .foreach { _ =>
-              ControlChannel.slot(spark, a.ledger, s"compact${k}_done") {
-                graft.ops.Dedup.compactDedupIndex(spark, a.index,
-                  CompactParts)
-              }: Unit
-            }
-        }
-      }
-      .start()
 
   /** Target part-file count per index table after a calendar
     * compaction slot (fixture-sized; a production calendar sizes this
@@ -138,46 +35,86 @@ object CurationStream {
     */
   val CompactParts = 2
 
-  private def partFiles(spark: SparkSession, path: String): Int =
-    graft.core.Layout.partFiles(spark, path)
-
-  /** Stage day k's drop into the landing dir as ONE parquet file named
-    * `day<k>.parquet` (deterministic one-file-per-day granularity for
-    * the gate/spec runs; see object Scaladoc for the production shape).
+  /** The curation binding: payload (doc_id, text), day k's staged
+    * drop, the ledgered [[CurationNDay.processDay]] admission, and the
+    * three control slots, each a multi-phase [[Calendar.slot]]:
+    *
+    *  - ttl (arg = keepFromDay): the ledgered [[CurationNDay.ttlDay]]
+    *    + [[graft.ops.Pack.rebuild]] — the `ttl<k>_done` row commits
+    *    only after the tape rebuild, so a slot that crashed between
+    *    the (itself ledgered) expiry and the rebuild re-runs BOTH on
+    *    replay;
+    *  - cap (arg = maxTokens): the ORDER-INDEPENDENT
+    *    [[CurationNDay.capDayPinned]] (a calendar may schedule it
+    *    after a ttl whose rebuild collapsed the pack day segments),
+    *    the tape rebuild governed by the horizon pinned before
+    *    mutating — a slot replayed after the cap committed still knows
+    *    whether it expired anything;
+    *  - compact (arg ignored): the dedup index's accrued per-day
+    *    append files settled into [[CompactParts]] right-sized ones
+    *    ([[graft.ops.Dedup.compactDedupIndex]], content-invariant by
+    *    construction, so later decisions stay bit-identical).
     */
-  def landDrop(spark: SparkSession, a: CurationDay.Artifacts,
-               k: Int): Unit =
-    // mod times pinned to a strictly-increasing run-stable ladder
-    // anchored on the bootstrap bench file (see ControlChannel.land)
-    ControlChannel.land(spark, a.landing,
-      spark.read.parquet(a.dropDay(k)).withColumn("day", lit(k)),
-      s"${a.root}/land_tmp_day$k", s"day$k.parquet", a.bench,
-      k * 60000L)
+  def binding(spark: SparkSession, a: CurationDay.Artifacts,
+              fetch: DataFrame): Calendar.Binding =
+    Calendar.Binding(a.landing, a.streamCp, a.bench,
+      Seq(StructField("doc_id", LongType), StructField("text", StringType)),
+      k => spark.read.parquet(a.dropDay(k)),
+      (k, drop) => CurationNDay.processDay(spark, a, k, drop, fetch): Unit,
+      Map(
+        OpTtl -> ((k, args) => args.foreach { keepFrom =>
+          Calendar.slot(spark, a.ledger, s"ttl${k}_done") {
+            ttl(spark, a, k, keepFrom.toInt): Unit
+            graft.ops.Pack.rebuild(spark, a, N)
+          }: Unit
+        }),
+        OpCap -> ((k, args) => args.foreach { maxTok =>
+          Calendar.slot(spark, a.ledger, s"cap${k}_done") {
+            cap(spark, a, k, maxTok): Unit
+            if (CurationNDay.readHorizon(spark, a.capHorizon(s"cap$k")) > 0)
+              graft.ops.Pack.rebuild(spark, a, N)
+          }: Unit
+        }),
+        OpCompact -> ((k, args) => args.foreach(_ => compact(spark, a, k)))))
 
-  /** Land a retention CONTROL record (op = "ttl", doc_id =
-    * keepFromDay) at calendar slot `slot` — its pinned modification
-    * time sorts after day `slot`'s drop (and a replay after the
-    * original).
-    */
-  def landControl(spark: SparkSession, a: CurationDay.Artifacts,
-                  slot: Int, payload: Long, name: String = "",
-                  op: String = "ttl"): Unit =
-    ControlChannel.landControl(spark, a.landing, a.root, slot, op,
-      payload,
-      if (name.isEmpty) s"ctl_${op}$slot.parquet" else name, a.bench,
-      slot * 60000L + opOff(op) + (if (name.isEmpty) 0L else 5000L))
+  // The slot phases, shared with the drivers' direct replay witnesses:
+  // each returns whether it did anything (false / 0 = ledgered no-op).
+  private def ttl(spark: SparkSession, a: CurationDay.Artifacts, k: Int,
+                  keepFrom: Int): Boolean =
+    CurationNDay.ttlDay(spark, a, s"ttl$k", keepFrom, a.manifestDay(N),
+      a.manifestRetract(1))
 
-  /** Same-slot control ordering (the [[MultiStream]] ladder): ttl
-    * before cap before compact — all after the slot's admissions and
-    * their replays, before the next day — each op's replay 5 s after
-    * its original.
-    */
-  private def opOff(op: String): Long = op match {
-    case ControlChannel.OpTtl => 40000L
-    case ControlChannel.OpCap => 46000L
-    case ControlChannel.OpCompact => 52000L
-    case other => sys.error(s"landControl: unknown op $other")
+  private def cap(spark: SparkSession, a: CurationDay.Artifacts, k: Int,
+                  maxTok: Long): Int =
+    CurationNDay.capDayPinned(spark, a, s"cap$k", maxTok, a.manifestDay(N),
+      a.manifestRetract(1))
+
+  private def compact(spark: SparkSession, a: CurationDay.Artifacts,
+                      k: Int): Boolean =
+    Calendar.slot(spark, a.ledger, s"compact${k}_done") {
+      graft.ops.Dedup.compactDedupIndex(spark, a.index, CompactParts)
+    }
+
+  /** Bootstrap the N-day lifecycle and bind it to the documents fetch. */
+  private def boot(spark: SparkSession, dir: String,
+                   a: CurationDay.Artifacts): (Calendar.Binding, DataFrame) = {
+    CurationNDay.bootstrapNDay(spark, dir, a)
+    val fetch = graft.core.Tables.plain(spark, dir, "documents")
+    (binding(spark, a, fetch), fetch)
   }
+
+  private def day4(spark: SparkSession, dir: String,
+                   a: CurationDay.Artifacts): Derive =
+    Derive(() => CurationNDay.writeDay4Drop(spark, dir, a))
+
+  private val N = CurationNDay.NDays
+
+  private def partFiles(spark: SparkSession, a: CurationDay.Artifacts,
+                        table: String): Int =
+    graft.core.Layout.partFiles(spark, s"${a.index}/$table.parquet")
+
+  private def settled(spark: SparkSession, a: CurationDay.Artifacts) =
+    Seq("hashes", "bands").forall(partFiles(spark, a, _) == CompactParts)
 
   /** The STREAMED N-day lifecycle with the RETENTION CALENDAR slot
     * (r12 verdict task 2, curation side): days 1–2, the kill, days
@@ -191,22 +128,13 @@ object CurationStream {
   def runTtlCalendarStreamed(spark: SparkSession, dir: String,
                              a: CurationDay.Artifacts)
       : (Boolean, Seq[String]) = {
-    CurationNDay.bootstrapNDay(spark, dir, a)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    landDrop(spark, a, 1); landDrop(spark, a, 2)
-    val q1 = start(spark, a, fetch)
-    try { q1.processAllAvailable() } finally q1.stop() // the kill
-    CurationNDay.writeDay4Drop(spark, dir, a)
-    landDrop(spark, a, 3); landDrop(spark, a, 4)
-    landControl(spark, a, slot = CurationNDay.NDays, payload = 2L)
-    landControl(spark, a, slot = CurationNDay.NDays, payload = 2L,
-      name = "ctl4_replay.parquet")
-    val q2 = start(spark, a, fetch) // same checkpoint: the restart
-    try { q2.processAllAvailable() } finally q2.stop()
-    val replayNoOp = !CurationNDay.ttlDay(spark, a,
-      s"ttl${CurationNDay.NDays}", 2,
-      a.manifestDay(CurationNDay.NDays), a.manifestRetract(1))
-    (replayNoOp, CurationNDay.ledgerDays(spark, a.ledger))
+    val (b, _) = boot(spark, dir, a)
+    Calendar.run(spark, b, Seq(
+      Land(1), Land(2), Run, // the kill
+      day4(spark, dir, a), Land(3), Land(4),
+      Control(OpTtl, N, () => 2L), Control(OpTtl, N, () => 2L, replay = true),
+      Run)) // same checkpoint: the restart
+    (!ttl(spark, a, N, 2), CurationNDay.ledgerDays(spark, a.ledger))
   }
 
   /** The STREAMED SIZE-CAP calendar: days 1–4, the kill, then the cap
@@ -220,42 +148,24 @@ object CurationStream {
   def runCapCalendarStreamed(spark: SparkSession, dir: String,
                              a: CurationDay.Artifacts)
       : (Boolean, Seq[String], Int) = {
-    CurationNDay.bootstrapNDay(spark, dir, a)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    landDrop(spark, a, 1); landDrop(spark, a, 2)
-    val q1 = start(spark, a, fetch)
-    try { q1.processAllAvailable() } finally q1.stop()
-    CurationNDay.writeDay4Drop(spark, dir, a)
-    landDrop(spark, a, 3); landDrop(spark, a, 4)
-    val q2 = start(spark, a, fetch)
-    try { q2.processAllAvailable() } finally q2.stop() // the kill
-    val total = (1 to CurationNDay.NDays).map { k =>
-      spark.read.parquet(a.packDay(k))
-        .agg(coalesce(sum(col("n_tok")), lit(0L)).as("m"))
-        .head().getLong(0)
-    }.sum
-    val cap = total * 55L / 100L
-    landControl(spark, a, slot = CurationNDay.NDays, payload = cap,
-      op = "cap")
-    landControl(spark, a, slot = CurationNDay.NDays, payload = cap,
-      op = "cap", name = "cap4_replay.parquet")
-    val q3 = start(spark, a, fetch) // same checkpoint: the restart
-    try { q3.processAllAvailable() } finally q3.stop()
-    val horizon = spark.read
-      .parquet(a.capHorizon(s"cap${CurationNDay.NDays}"))
-      .head().getInt(0)
-    val replayNoOp = CurationNDay.capDayPinned(spark, a,
-      s"cap${CurationNDay.NDays}", cap,
-      a.manifestDay(CurationNDay.NDays), a.manifestRetract(1)) == 0
-    (replayNoOp, CurationNDay.ledgerDays(spark, a.ledger), horizon)
+    val (b, _) = boot(spark, dir, a)
+    lazy val maxTok =
+      (1 to N).map(CurationNDay.packMass(spark, a, _)).sum * 55L / 100L
+    Calendar.run(spark, b, Seq(
+      Land(1), Land(2), Run,
+      day4(spark, dir, a), Land(3), Land(4), Run, // the kill
+      Control(OpCap, N, () => maxTok),
+      Control(OpCap, N, () => maxTok, replay = true),
+      Run)) // same checkpoint: the restart
+    val horizon = CurationNDay.readHorizon(spark, a.capHorizon(s"cap$N"))
+    (cap(spark, a, N, maxTok) == 0, CurationNDay.ledgerDays(spark, a.ledger),
+      horizon)
   }
 
   /** The STREAMED COMPACTION calendar — the mm chain's
-    * [[MultiStream.runDays4CompactStreamed]] on the CURATION side
-    * (closing the op-coverage asymmetry the shared [[ControlChannel]]
-    * contract exposed: both calendars now serve all three ops): day 1,
-    * a compact1 slot, day 2 — the kill — days 3–4 plus the compact4
-    * slot and its REPLAY, the restart, drain. Compaction is
+    * [[MultiStream.runDays4CompactStreamed]] on the CURATION side:
+    * day 1, a compact1 slot, day 2 — the kill — days 3–4 plus the
+    * compact4 slot and its REPLAY, the restart, drain. Compaction is
     * content-invariant, so the decisions must stay bit-identical to
     * the plain chain (q505/q508's oracle — a third engine path onto
     * it), while the index's accrued append files settle into
@@ -268,33 +178,19 @@ object CurationStream {
   def runCompactCalendarStreamed(spark: SparkSession, dir: String,
                                  a: CurationDay.Artifacts)
       : (Boolean, Seq[String], Boolean) = {
-    CurationNDay.bootstrapNDay(spark, dir, a)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    landDrop(spark, a, 1)
-    landControl(spark, a, slot = 1, payload = 0L, op = "compact")
-    landDrop(spark, a, 2) // mtime ladder: day1 < compact1 < day2
-    val q1 = start(spark, a, fetch)
-    try { q1.processAllAvailable() } finally q1.stop() // the kill
-    val fragmented = // day 2's append re-fragmented the compact1 result
-      partFiles(spark, s"${a.index}/hashes.parquet") > CompactParts
-    CurationNDay.writeDay4Drop(spark, dir, a)
-    landDrop(spark, a, 3); landDrop(spark, a, 4)
-    landControl(spark, a, slot = CurationNDay.NDays, payload = 0L,
-      op = "compact")
-    landControl(spark, a, slot = CurationNDay.NDays, payload = 0L,
-      op = "compact", name = "compact4_replay.parquet")
-    val q2 = start(spark, a, fetch) // same checkpoint: the restart
-    try { q2.processAllAvailable() } finally q2.stop()
-    val settled =
-      partFiles(spark, s"${a.index}/hashes.parquet") == CompactParts &&
-      partFiles(spark, s"${a.index}/bands.parquet") == CompactParts
+    val (b, _) = boot(spark, dir, a)
+    Calendar.run(spark, b, Seq(
+      Land(1), Control(OpCompact, 1), Land(2), Run)) // the kill
+    // day 2's append re-fragmented the compact1 result
+    val fragmented = partFiles(spark, a, "hashes") > CompactParts
+    Calendar.run(spark, b, Seq(
+      day4(spark, dir, a), Land(3), Land(4),
+      Control(OpCompact, N), Control(OpCompact, N, replay = true),
+      Run)) // same checkpoint: the restart
+    val done = settled(spark, a)
     // replay witness: the committed compact4 slot re-offered directly
-    val replayNoOp = !ControlChannel.slot(spark, a.ledger,
-      s"compact${CurationNDay.NDays}_done") {
-      graft.ops.Dedup.compactDedupIndex(spark, a.index, CompactParts)
-    }
-    (replayNoOp, CurationNDay.ledgerDays(spark, a.ledger),
-      fragmented && settled)
+    (!compact(spark, a, N), CurationNDay.ledgerDays(spark, a.ledger),
+      fragmented && done)
   }
 
   /** The CURATION-side FULL MAINTENANCE CALENDAR — all three control
@@ -319,49 +215,25 @@ object CurationStream {
   def runFullCalendarStreamed(spark: SparkSession, dir: String,
                               a: CurationDay.Artifacts)
       : (Boolean, Seq[String], Int, Boolean) = {
-    CurationNDay.bootstrapNDay(spark, dir, a)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    landDrop(spark, a, 1)
-    landControl(spark, a, slot = 1, payload = 0L, op = "compact")
-    landDrop(spark, a, 2) // mtime ladder: day1 < compact1 < day2
-    val q1 = start(spark, a, fetch)
-    try { q1.processAllAvailable() } finally q1.stop() // kill 1
-    CurationNDay.writeDay4Drop(spark, dir, a)
-    landDrop(spark, a, 3); landDrop(spark, a, 4)
-    landControl(spark, a, slot = CurationNDay.NDays, payload = 2L)
-    landControl(spark, a, slot = CurationNDay.NDays, payload = 2L,
-      name = "ctl_ttl4_replay.parquet")
-    val q2 = start(spark, a, fetch) // restart 1
-    try { q2.processAllAvailable() } finally q2.stop() // kill 2
-    val m = CurationNDay.pinnedMasses(spark, a)
-    val cap = m.getOrElse(4, 0L) + m.getOrElse(3, 0L) +
-      m.getOrElse(2, 0L) / 2L
-    landControl(spark, a, slot = CurationNDay.NDays, payload = cap,
-      op = "cap")
-    landControl(spark, a, slot = CurationNDay.NDays, payload = cap,
-      op = "cap", name = "ctl_cap4_replay.parquet")
-    landControl(spark, a, slot = CurationNDay.NDays, payload = 0L,
-      op = "compact")
-    val q3 = start(spark, a, fetch) // restart 2
-    try { q3.processAllAvailable() } finally q3.stop()
-    val settled =
-      partFiles(spark, s"${a.index}/hashes.parquet") == CompactParts &&
-      partFiles(spark, s"${a.index}/bands.parquet") == CompactParts
-    val horizon = spark.read
-      .parquet(a.capHorizon(s"cap${CurationNDay.NDays}"))
-      .head().getInt(0)
-    val replayNoOp =
-      !CurationNDay.ttlDay(spark, a, s"ttl${CurationNDay.NDays}", 2,
-        a.manifestDay(CurationNDay.NDays), a.manifestRetract(1)) &&
-      CurationNDay.capDayPinned(spark, a, s"cap${CurationNDay.NDays}",
-        cap, a.manifestDay(CurationNDay.NDays),
-        a.manifestRetract(1)) == 0 &&
-      !ControlChannel.slot(spark, a.ledger,
-        s"compact${CurationNDay.NDays}_done") {
-        graft.ops.Dedup.compactDedupIndex(spark, a.index, CompactParts)
-      }
-    (replayNoOp, CurationNDay.ledgerDays(spark, a.ledger), horizon,
-      settled)
+    val (b, _) = boot(spark, dir, a)
+    lazy val maxTok = {
+      val m = CurationNDay.pinnedMasses(spark, a)
+      m.getOrElse(4, 0L) + m.getOrElse(3, 0L) + m.getOrElse(2, 0L) / 2L
+    }
+    Calendar.run(spark, b, Seq(
+      Land(1), Control(OpCompact, 1), Land(2), Run, // kill 1
+      day4(spark, dir, a), Land(3), Land(4),
+      Control(OpTtl, N, () => 2L), Control(OpTtl, N, () => 2L, replay = true),
+      Run, // restart 1, kill 2
+      Control(OpCap, N, () => maxTok),
+      Control(OpCap, N, () => maxTok, replay = true),
+      Control(OpCompact, N),
+      Run)) // restart 2
+    val done = settled(spark, a)
+    val horizon = CurationNDay.readHorizon(spark, a.capHorizon(s"cap$N"))
+    val replayNoOp = !ttl(spark, a, N, 2) &&
+      cap(spark, a, N, maxTok) == 0 && !compact(spark, a, N)
+    (replayNoOp, CurationNDay.ledgerDays(spark, a.ledger), horizon, done)
   }
 
   /** The full STREAMED N-day lifecycle with a kill/restart witnessed
@@ -374,18 +246,13 @@ object CurationStream {
     */
   def runDaysStreamed(spark: SparkSession, dir: String,
                       a: CurationDay.Artifacts): (Boolean, Seq[String]) = {
-    CurationNDay.bootstrapNDay(spark, dir, a)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    landDrop(spark, a, 1); landDrop(spark, a, 2)
-    val q1 = start(spark, a, fetch)
-    try { q1.processAllAvailable() } finally q1.stop()
+    val (b, fetch) = boot(spark, dir, a)
+    Calendar.run(spark, b, Seq(Land(1), Land(2), Run))
     // replay witness: a committed day offered again is a pure no-op
     val replayNoOp = !CurationNDay.processDay(spark, a, 2,
       spark.read.parquet(a.dropDay(2)), fetch)
-    CurationNDay.writeDay4Drop(spark, dir, a)
-    landDrop(spark, a, 3); landDrop(spark, a, 4)
-    val q2 = start(spark, a, fetch) // same checkpoint: the restart
-    try { q2.processAllAvailable() } finally q2.stop()
+    Calendar.run(spark, b, Seq(day4(spark, dir, a), Land(3), Land(4),
+      Run)) // same checkpoint: the restart
     (replayNoOp, CurationNDay.ledgerDays(spark, a.ledger))
   }
 }

@@ -1,30 +1,24 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{ArrayType, BinaryType, FloatType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, FloatType, LongType, StringType, StructField}
 
 import graft.ops.{CurationNDay, MultiDay}
+import Calendar.{Control, Derive, Land, OpCap, OpCompact, OpTtl, Run}
 
 /** The MULTIMODAL admission day as a STREAMING job — the
-  * [[CurationStream]]/[[SemStream]] topology applied to the composed
-  * 4-stage day ([[MultiDay.processDay4]]), completing the round-11
-  * verdict's top task: every index lifecycle in the engine is now
-  * maintainable by the same streaming-first machinery. Daily
+  * [[Calendar]] interpreter applied to the composed 4-stage day
+  * ([[MultiDay.processDay4]]) and the six-stage one
+  * ([[MultiDay.processDay6]]), so every index lifecycle in the engine
+  * is maintainable by the same streaming-first machinery. Daily
   * multimodal drops (doc text + embedding + image payload, the audio
   * track implied by the text bytes) land as files, a Structured
-  * Streaming file source delivers them, and `foreachBatch` drives
+  * Streaming file source delivers them, and the interpreter drives
   * each day through the LEDGERED day transaction: media-artifact
-  * extend (decode once), four stage verdicts, one combined pin, four
-  * anti-joined appends, ledger row last.
-  *
-  * Delivery/recovery semantics are [[CurationStream]]'s verbatim:
-  * at-least-once micro-batches from the source checkpoint, upgraded
-  * to exactly-once per DAY by the ledger; in-batch days apply in day
-  * order; a replayed committed day is a pure no-op (witnessed in the
-  * gate run itself — day 2 is re-offered under a new file name after
-  * its commit and must add nothing to any of the four indexes).
+  * extend (decode once), the stage verdicts, one combined pin, the
+  * anti-joined appends, ledger row last. This object is the mm
+  * [[binding]] plus its calendars; a replayed committed day is a pure
+  * no-op (witnessed in the gate runs themselves).
   *
   * At 100 TB the stream moves only delta records; each stage keeps
   * its own delta-proportional probe (index hash lookups, cell-pruned
@@ -34,132 +28,70 @@ import graft.ops.{CurationNDay, MultiDay}
   */
 object MultiStream {
 
-  /** The landing-record schema: the multimodal payload (doc text +
-    * embedding + image bytes) plus the [[ControlChannel]] contract
-    * fields — op = null is admission data; "ttl"/"cap"/"compact" are
-    * maintenance slots whose scalar rides `doc_id` (see
-    * [[ControlChannel]] for the channel contract both calendars
-    * share).
-    */
-  val dropSchema: StructType = ControlChannel.schemaWith(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("img", BinaryType))
-
-  /** Start the admission stream. With `bench` set, each day runs the
-    * FULL six-stage verdict ([[MultiDay.processDay6]] — near-dup
-    * stages + contamination/quality post-gates); without it, the
-    * four-stage [[MultiDay.processDay4]]. Maintenance CONTROL records
-    * run in their calendar slot, AFTER the slot's admissions
-    * (retention follows the day it ages against):
+  /** The mm binding. With `bench` set, each day runs the FULL
+    * six-stage verdict ([[MultiDay.processDay6]] — near-dup stages +
+    * contamination/quality post-gates); without it, the four-stage
+    * [[MultiDay.processDay4]]. Maintenance slots run AFTER the slot's
+    * admissions (retention follows the day it ages against):
     *
-    *  - op = "ttl" (doc_id = the admission day to expire) → the
-    *    LEDGERED [[MultiDay.ttl4Day]];
-    *  - op = "cap" (doc_id = the byte cap) → the LEDGERED
-    *    [[MultiDay.cap4Day]] — horizon pinned before mutation;
-    *  - op = "compact" (doc_id ignored) → the full content-invariant
+    *  - ttl (arg = the admission day to expire) → the LEDGERED
+    *    [[MultiDay.ttl4Day]];
+    *  - cap (arg = the byte cap) → the LEDGERED [[MultiDay.cap4Day]]
+    *    — horizon pinned before mutation;
+    *  - compact (arg ignored) → the full content-invariant
     *    maintenance set [[MultiDay.maintain4]] as a ledgered slot
     *    (each compaction is idempotent and self-healing, so a torn
     *    slot re-runs convergently).
-    *
-    * A replayed control no-ops via the same ledger that makes
-    * replayed admission days no-ops.
     */
-  def start(spark: SparkSession, p: MultiDay.Paths4,
-            corpusFetch: DataFrame,
-            bench: Option[DataFrame] = None): StreamingQuery =
-    spark.readStream
-      .schema(dropSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(p.landing)
-      .writeStream
-      .option("checkpointLocation", p.streamCp)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val days = batch.select("day").distinct()
-          .collect().map(_.getInt(0)).sorted // bounded: days per batch
-        days.foreach { k =>
-          val rows = batch.where(col("day") === k)
-          val drop = rows.where(col("op").isNull)
-            .select("doc_id", "text", "embedding", "img")
-          if (!drop.isEmpty)
-            (bench match {
-              case Some(b) =>
-                MultiDay.processDay6(spark, p, k, drop, corpusFetch, b)
-              case None =>
-                MultiDay.processDay4(spark, p, k, drop, corpusFetch)
-            }): Unit
-          val expire = ControlChannel.payloads(rows, ControlChannel.OpTtl)
-          if (expire.nonEmpty)
-            MultiDay.ttl4Day(spark, p, s"ttl$k", expire.map(_.toInt),
-              MultiDay.indexedDocs(spark, p, corpusFetch)): Unit
-          ControlChannel.payloads(rows, ControlChannel.OpCap)
-            .foreach { maxBytes =>
-              MultiDay.cap4Day(spark, p, s"cap$k", maxBytes,
-                corpusFetch): Unit
-            }
-          ControlChannel.payloads(rows, ControlChannel.OpCompact)
-            .foreach { _ =>
-              ControlChannel.slot(spark, p.ledger, s"compact$k") {
-                MultiDay.maintain4(spark, p)
-              }: Unit
-            }
-        }
-      }
-      .start()
+  def binding(spark: SparkSession, p: MultiDay.Paths4, fetch: DataFrame,
+              bench: Option[DataFrame] = None): Calendar.Binding =
+    Calendar.Binding(p.landing, p.streamCp, p.sem.seeds,
+      Seq(StructField("doc_id", LongType), StructField("text", StringType),
+        StructField("embedding", ArrayType(FloatType)),
+        StructField("img", BinaryType)),
+      k => spark.read.parquet(p.dropDay(k)),
+      (k, drop) => (bench match {
+        case Some(b) => MultiDay.processDay6(spark, p, k, drop, fetch, b)
+        case None => MultiDay.processDay4(spark, p, k, drop, fetch)
+      }): Unit,
+      Map(
+        OpTtl -> ((k, expire) =>
+          MultiDay.ttl4Day(spark, p, s"ttl$k", expire.map(_.toInt),
+            MultiDay.indexedDocs(spark, p, fetch)): Unit),
+        OpCap -> ((k, caps) => caps.foreach { maxBytes =>
+          MultiDay.cap4Day(spark, p, s"cap$k", maxBytes, fetch): Unit
+        }),
+        OpCompact -> ((k, args) => args.foreach(_ => compact(spark, p, k)))))
 
-  /** Stage day k's staged drop ([[MultiDay.Paths4.dropDay]]) into the
-    * landing dir as ONE parquet file with a pinned strictly-increasing
-    * modification time (the [[CurationStream.landDrop]] in-order
-    * contract, anchored on the semantic seeds file the bootstrap
-    * wrote).
+  /** The compact slot (shared with the drivers' replay witnesses):
+    * false when `compact<k>` already committed.
     */
-  def landDrop(spark: SparkSession, p: MultiDay.Paths4, k: Int,
-               name: String = ""): Unit =
-    // replays land after their original (k + offset keeps order);
-    // mtimes anchored on the semantic seeds file the bootstrap wrote
-    ControlChannel.land(spark, p.landing,
-      spark.read.parquet(p.dropDay(k)).withColumn("day", lit(k)),
-      s"${p.root}/land_tmp_day$k",
-      if (name.isEmpty) s"day$k.parquet" else name, p.sem.seeds,
-      k * 60000L + (if (name.isEmpty) 0L else 30000L))
+  private def compact(spark: SparkSession, p: MultiDay.Paths4,
+                      k: Int): Boolean =
+    Calendar.slot(spark, p.ledger, s"compact$k")(MultiDay.maintain4(spark, p))
 
-  /** Land a maintenance CONTROL record: one row (day = `slot`, `op`,
-    * doc_id = the op's scalar — the admission day to expire for
-    * "ttl", the byte cap for "cap", ignored for "compact"). Its
-    * pinned modification time sorts AFTER day `slot`'s drop and any
-    * replay of it, and BEFORE day `slot` + 1 — the calendar position.
+  /** Bootstrap the four-stage (or, with `six`, the six-stage)
+    * lifecycle and bind it to the documents fetch (and the bench).
     */
-  def landControl(spark: SparkSession, p: MultiDay.Paths4, slot: Int,
-                  payload: Long, name: String = "",
-                  op: String = ControlChannel.OpTtl): Unit =
-    ControlChannel.landControl(spark, p.landing, p.root, slot, op,
-      payload,
-      if (name.isEmpty) s"ctl_${op}$slot.parquet" else name,
-      p.sem.seeds,
-      slot * 60000L + opOff(op) + (if (name.isEmpty) 0L else 5000L))
-
-  /** Same-slot control ordering: ttl before cap before compact (all
-    * after the slot's admissions and their replays, before the next
-    * day), each op's replay 5 s after its original.
-    */
-  private def opOff(op: String): Long = op match {
-    case ControlChannel.OpTtl => 40000L
-    case ControlChannel.OpCap => 46000L
-    case ControlChannel.OpCompact => 52000L
-    case other => sys.error(s"landControl: unknown op $other")
+  private def boot(spark: SparkSession, dir: String, p: MultiDay.Paths4,
+                   six: Boolean = false)
+      : (Calendar.Binding, DataFrame, Option[DataFrame]) = {
+    if (six) MultiDay.bootstrap6(spark, dir, p)
+    else MultiDay.bootstrap4(spark, dir, p)
+    val fetch = graft.core.Tables.plain(spark, dir, "documents")
+    val bench = Option.when(six)(MultiDay.benchOf(spark, dir))
+    (binding(spark, p, fetch, bench), fetch, bench)
   }
 
-  /** The full STREAMED 3-day multimodal lifecycle with a kill/restart
-    * and a replayed-committed-day no-op witnessed IN the gate run:
-    * bootstrap; land + stream days 1–2; STOP (the kill); re-offer
-    * day 2 under a new file name (the replay the restarted stream
-    * must swallow via the ledger); derive the sentinel-planted day 3
-    * from the pipeline's own pins; land it; RESTART from the same
-    * checkpoint; drain. Returns (replayNoOp, ledgerDays) — replayNoOp
-    * additionally witnesses a direct re-offer of committed day 3
-    * through [[MultiDay.processDay4]] returning false.
-    */
+  private def day3(spark: SparkSession, dir: String,
+                   p: MultiDay.Paths4): Derive =
+    Derive(() => MultiDay.writeDay3Drop(spark, dir, p))
+
+  private def ttl2NoOp(spark: SparkSession, p: MultiDay.Paths4,
+                       fetch: DataFrame): Boolean =
+    !MultiDay.ttl4Day(spark, p, "ttl2", Seq(1),
+      MultiDay.indexedDocs(spark, p, fetch))
+
   /** The STREAMED six-stage lifecycle (the q559 batch chain through
     * the file-source engine): bootstrap, land + stream day 1, STOP
     * (the kill), derive the sentinel-planted day 2 from day 1's pin,
@@ -170,49 +102,36 @@ object MultiStream {
     */
   def runDays6Streamed(spark: SparkSession, dir: String,
                        p: MultiDay.Paths4): (Boolean, Seq[String]) = {
-    MultiDay.bootstrap6(spark, dir, p)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    val bench = MultiDay.benchOf(spark, dir)
-    landDrop(spark, p, 1)
-    val q1 = start(spark, p, fetch, Some(bench))
-    try { q1.processAllAvailable() } finally q1.stop() // the kill
-    MultiDay.writeDay2Drop6(spark, dir, p)
-    landDrop(spark, p, 2)
-    landDrop(spark, p, 1, name = "day1_replay.parquet")
-    val q2 = start(spark, p, fetch, Some(bench)) // same cp: restart
-    try { q2.processAllAvailable() } finally q2.stop()
+    val (b, fetch, bench) = boot(spark, dir, p, six = true)
+    Calendar.run(spark, b, Seq(
+      Land(1), Run, // the kill
+      Derive(() => MultiDay.writeDay2Drop6(spark, dir, p)),
+      Land(2), Land(1, replay = true),
+      Run)) // same checkpoint: the restart
     val replayNoOp = !MultiDay.processDay6(spark, p, 2,
-      spark.read.parquet(p.dropDay(2)), fetch, bench)
+      spark.read.parquet(p.dropDay(2)), fetch, bench.get)
     (replayNoOp, CurationNDay.ledgerDays(spark, p.ledger))
   }
 
   /** The STREAMED retention calendar (q569/q570 — r12 verdict task 2):
     * bootstrap; land + stream days 1–2; STOP (the kill); land the
-    * ttl2 CONTROL record (expire day 1) plus a REPLAY of it under a
-    * new file name; derive + land the sentinel-planted day 3; RESTART
-    * from the same checkpoint; drain — the restarted stream runs the
-    * ledgered TTL in its calendar slot, swallows the replayed control
-    * via the same ledger, and admits day 3 against the RETAINED
-    * indexes. Returns (replayNoOp, ledgerDays): replayNoOp
-    * additionally witnesses a direct re-offer of the committed
-    * control no-op'ing.
+    * ttl2 CONTROL record (expire day 1) plus a REPLAY of it; derive +
+    * land the sentinel-planted day 3; RESTART from the same
+    * checkpoint; drain — the restarted stream runs the ledgered TTL
+    * in its calendar slot, swallows the replayed control via the same
+    * ledger, and admits day 3 against the RETAINED indexes. Returns
+    * (replayNoOp, ledgerDays): replayNoOp additionally witnesses a
+    * direct re-offer of the committed control no-op'ing.
     */
   def runCalendarStreamed(spark: SparkSession, dir: String,
                           p: MultiDay.Paths4): (Boolean, Seq[String]) = {
-    MultiDay.bootstrap4(spark, dir, p)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    landDrop(spark, p, 1); landDrop(spark, p, 2)
-    val q1 = start(spark, p, fetch)
-    try { q1.processAllAvailable() } finally q1.stop() // the kill
-    landControl(spark, p, 2, payload = 1L)
-    landControl(spark, p, 2, payload = 1L, name = "ctl2_replay.parquet")
-    MultiDay.writeDay3Drop(spark, dir, p)
-    landDrop(spark, p, 3)
-    val q2 = start(spark, p, fetch) // same checkpoint: the restart
-    try { q2.processAllAvailable() } finally q2.stop()
-    val replayNoOp = !MultiDay.ttl4Day(spark, p, "ttl2", Seq(1),
-      MultiDay.indexedDocs(spark, p, fetch))
-    (replayNoOp, CurationNDay.ledgerDays(spark, p.ledger))
+    val (b, fetch, _) = boot(spark, dir, p)
+    Calendar.run(spark, b, Seq(
+      Land(1), Land(2), Run, // the kill
+      Control(OpTtl, 2, () => 1L), Control(OpTtl, 2, () => 1L, replay = true),
+      day3(spark, dir, p), Land(3),
+      Run)) // same checkpoint: the restart
+    (ttl2NoOp(spark, p, fetch), CurationNDay.ledgerDays(spark, p.ledger))
   }
 
   /** The FULL MAINTENANCE CALENDAR — all three control ops in ONE
@@ -242,39 +161,26 @@ object MultiStream {
   def runFullCalendarStreamed(spark: SparkSession, dir: String,
                               p: MultiDay.Paths4)
       : (Boolean, Seq[String], Int, Boolean) = {
-    MultiDay.bootstrap4(spark, dir, p)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    landDrop(spark, p, 1)
-    landControl(spark, p, 1, 0L, op = ControlChannel.OpCompact)
-    landDrop(spark, p, 2) // mtime ladder: day1 < compact1 < day2
-    val q1 = start(spark, p, fetch)
-    try { q1.processAllAvailable() } finally q1.stop() // kill 1
-    landControl(spark, p, 2, payload = 1L)
-    landControl(spark, p, 2, payload = 1L, name = "ctl2_replay.parquet")
-    MultiDay.writeDay3Drop(spark, dir, p)
-    landDrop(spark, p, 3)
-    val q2 = start(spark, p, fetch) // restart 1
-    try { q2.processAllAvailable() } finally q2.stop() // kill 2
-    val m = MultiDay.retainedMasses(spark, p, fetch)
-    val cap = m.getOrElse(2, 0L) + m.getOrElse(3, 0L) +
-      m.getOrElse(0, 0L) / 2L
-    landControl(spark, p, 3, cap, op = ControlChannel.OpCap)
-    landControl(spark, p, 3, cap, op = ControlChannel.OpCap,
-      name = "ctl_cap3_replay.parquet")
-    landControl(spark, p, 3, 0L, op = ControlChannel.OpCompact)
-    val q3 = start(spark, p, fetch) // restart 2
-    try { q3.processAllAvailable() } finally q3.stop()
+    val (b, fetch, _) = boot(spark, dir, p)
+    lazy val cap = {
+      val m = MultiDay.retainedMasses(spark, p, fetch)
+      m.getOrElse(2, 0L) + m.getOrElse(3, 0L) + m.getOrElse(0, 0L) / 2L
+    }
+    Calendar.run(spark, b, Seq(
+      Land(1), Control(OpCompact, 1), Land(2), Run, // kill 1
+      Control(OpTtl, 2, () => 1L), Control(OpTtl, 2, () => 1L, replay = true),
+      day3(spark, dir, p), Land(3),
+      Run, // restart 1, kill 2
+      Control(OpCap, 3, () => cap), Control(OpCap, 3, () => cap, replay = true),
+      Control(OpCompact, 3),
+      Run)) // restart 2
     val settled = graft.core.Layout.partFiles(spark,
       s"${p.lex}/hashes.parquet") == 1
-    val horizon = spark.read.parquet(p.capHorizon("cap3"))
-      .head().getInt(0)
+    val horizon = CurationNDay.readHorizon(spark, p.capHorizon("cap3"))
     val replayNoOp =
-      !MultiDay.ttl4Day(spark, p, "ttl2", Seq(1),
-        MultiDay.indexedDocs(spark, p, fetch)) &&
+      ttl2NoOp(spark, p, fetch) &&
       MultiDay.cap4Day(spark, p, "cap3", cap, fetch) == 0 &&
-      !ControlChannel.slot(spark, p.ledger, "compact3") {
-        MultiDay.maintain4(spark, p)
-      }
+      !compact(spark, p, 3)
     (replayNoOp, CurationNDay.ledgerDays(spark, p.ledger), horizon,
       settled)
   }
@@ -296,64 +202,43 @@ object MultiStream {
   def runCapCalendarStreamed4(spark: SparkSession, dir: String,
                               p: MultiDay.Paths4)
       : (Boolean, Seq[String], Int, Int) = {
-    MultiDay.bootstrap4(spark, dir, p)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    landDrop(spark, p, 1); landDrop(spark, p, 2)
-    val q1 = start(spark, p, fetch)
-    try { q1.processAllAvailable() } finally q1.stop() // the kill
-    val cap = MultiDay.capFixtureBytes(spark, p, fetch)
-    landControl(spark, p, 2, cap, op = ControlChannel.OpCap)
-    landControl(spark, p, 2, cap, op = ControlChannel.OpCap,
-      name = "cap2_replay.parquet")
-    MultiDay.writeDay3Drop(spark, dir, p)
-    landDrop(spark, p, 3)
-    val q2 = start(spark, p, fetch) // same checkpoint: the restart
-    try { q2.processAllAvailable() } finally q2.stop()
-    // the under-cap leg: a cap at exactly the retained mass no-ops
-    landControl(spark, p, 3,
-      MultiDay.retainedMasses(spark, p, fetch).values.sum,
-      op = ControlChannel.OpCap)
-    val q3 = start(spark, p, fetch) // restart 2
-    try { q3.processAllAvailable() } finally q3.stop()
+    val (b, fetch, _) = boot(spark, dir, p)
+    lazy val cap = MultiDay.capFixtureBytes(spark, p, fetch)
+    Calendar.run(spark, b, Seq(
+      Land(1), Land(2), Run, // the kill
+      Control(OpCap, 2, () => cap), Control(OpCap, 2, () => cap, replay = true),
+      day3(spark, dir, p), Land(3),
+      Run, // same checkpoint: the restart
+      // the under-cap leg: a cap at exactly the retained mass no-ops
+      Control(OpCap, 3,
+        () => MultiDay.retainedMasses(spark, p, fetch).values.sum),
+      Run)) // restart 2
     def horizon(id: String): Int =
-      spark.read.parquet(p.capHorizon(id)).head().getInt(0)
-    val replayNoOp =
-      MultiDay.cap4Day(spark, p, "cap2", cap, fetch) == 0
+      CurationNDay.readHorizon(spark, p.capHorizon(id))
+    val replayNoOp = MultiDay.cap4Day(spark, p, "cap2", cap, fetch) == 0
     (replayNoOp, CurationNDay.ledgerDays(spark, p.ledger),
       horizon("cap2"), horizon("cap3"))
   }
 
   /** The STREAMED maintained chain (r13 verdict task 3 — put
     * compaction on the calendar): the q558 batch interleave driven by
-    * `op = "compact"` control slots THROUGH the file-source stream —
-    * day 1, compact1 slot, kill/restart, day 2, compact2 slot plus a
-    * REPLAY of it, day 3 — decisions must stay bit-identical to the
-    * plain chain (same oracle as q542/q545/q558: the fourth engine
-    * path). Returns (replayNoOp, ledgerDays): replayNoOp additionally
+    * compact control slots THROUGH the file-source stream — day 1,
+    * compact1 slot, kill/restart, day 2, compact2 slot plus a REPLAY
+    * of it, day 3 — decisions must stay bit-identical to the plain
+    * chain (same oracle as q542/q545/q558: the fourth engine path).
+    * Returns (replayNoOp, ledgerDays): replayNoOp additionally
     * witnesses a direct re-offer of the committed compact2 slot
-    * no-op'ing via [[ControlChannel.slot]].
+    * no-op'ing via [[Calendar.slot]].
     */
   def runDays4CompactStreamed(spark: SparkSession, dir: String,
-                              p: MultiDay.Paths4)
-      : (Boolean, Seq[String]) = {
-    MultiDay.bootstrap4(spark, dir, p)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    landDrop(spark, p, 1)
-    landControl(spark, p, 1, 0L, op = ControlChannel.OpCompact)
-    landDrop(spark, p, 2) // mtime ladder: day1 < compact1 < day2
-    val q1 = start(spark, p, fetch)
-    try { q1.processAllAvailable() } finally q1.stop() // the kill
-    landControl(spark, p, 2, 0L, op = ControlChannel.OpCompact)
-    landControl(spark, p, 2, 0L, op = ControlChannel.OpCompact,
-      name = "compact2_replay.parquet")
-    MultiDay.writeDay3Drop(spark, dir, p) // needs the day-1/-2 pins
-    landDrop(spark, p, 3)
-    val q2 = start(spark, p, fetch) // same checkpoint: the restart
-    try { q2.processAllAvailable() } finally q2.stop()
-    val replayNoOp = !ControlChannel.slot(spark, p.ledger, "compact2") {
-      MultiDay.maintain4(spark, p)
-    }
-    (replayNoOp, CurationNDay.ledgerDays(spark, p.ledger))
+                              p: MultiDay.Paths4): (Boolean, Seq[String]) = {
+    val (b, _, _) = boot(spark, dir, p)
+    Calendar.run(spark, b, Seq(
+      Land(1), Control(OpCompact, 1), Land(2), Run, // the kill
+      Control(OpCompact, 2), Control(OpCompact, 2, replay = true),
+      day3(spark, dir, p), // needs the day-1/-2 pins
+      Land(3), Run)) // same checkpoint: the restart
+    (!compact(spark, p, 2), CurationNDay.ledgerDays(spark, p.ledger))
   }
 
   /** The six-stage STREAMED CALENDAR (q574/q575): the q561 full-stack
@@ -363,50 +248,38 @@ object MultiStream {
     * day admitted against the retained indexes.
     */
   def runDays6CalendarStreamed(spark: SparkSession, dir: String,
-                               p: MultiDay.Paths4)
-      : (Boolean, Seq[String]) = {
-    MultiDay.bootstrap6(spark, dir, p)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    val bench = MultiDay.benchOf(spark, dir)
-    landDrop(spark, p, 1)
-    val q1 = start(spark, p, fetch, Some(bench))
-    try { q1.processAllAvailable() } finally q1.stop() // kill 1
-    MultiDay.writeDay2Drop6(spark, dir, p)
-    landDrop(spark, p, 2)
-    landControl(spark, p, 2, payload = 1L)
-    landControl(spark, p, 2, payload = 1L, name = "ctl2_replay.parquet")
-    val q2 = start(spark, p, fetch, Some(bench)) // restart 1
-    try { q2.processAllAvailable() } finally q2.stop() // kill 2
-    MultiDay.writeDay3Drop6Cal(spark, dir, p)
-    landDrop(spark, p, 3)
-    val q3 = start(spark, p, fetch, Some(bench)) // restart 2
-    try { q3.processAllAvailable() } finally q3.stop()
-    val replayNoOp = !MultiDay.ttl4Day(spark, p, "ttl2", Seq(1),
-      MultiDay.indexedDocs(spark, p, fetch))
-    (replayNoOp, CurationNDay.ledgerDays(spark, p.ledger))
+                               p: MultiDay.Paths4): (Boolean, Seq[String]) = {
+    val (b, fetch, _) = boot(spark, dir, p, six = true)
+    Calendar.run(spark, b, Seq(
+      Land(1), Run, // kill 1
+      Derive(() => MultiDay.writeDay2Drop6(spark, dir, p)), Land(2),
+      Control(OpTtl, 2, () => 1L), Control(OpTtl, 2, () => 1L, replay = true),
+      Run, // restart 1, kill 2
+      Derive(() => MultiDay.writeDay3Drop6Cal(spark, dir, p)), Land(3),
+      Run)) // restart 2
+    (ttl2NoOp(spark, p, fetch), CurationNDay.ledgerDays(spark, p.ledger))
   }
 
+  /** The full STREAMED 3-day multimodal lifecycle with a kill/restart
+    * and a replayed-committed-day no-op witnessed IN the gate run:
+    * bootstrap; land + stream days 1–2; STOP (the kill); re-offer
+    * day 2 under a new file name (the replay the restarted stream
+    * must swallow via the ledger); derive the sentinel-planted day 3
+    * from the pipeline's own pins; land it; RESTART from the same
+    * checkpoint; drain. Returns (replayNoOp, ledgerDays) — replayNoOp
+    * additionally witnesses a direct re-offer of committed day 3
+    * through [[MultiDay.processDay4]] returning false (day 3's
+    * exactly-once growth is pinned by the q543 card oracle itself).
+    */
   def runDaysStreamed(spark: SparkSession, dir: String,
                       p: MultiDay.Paths4): (Boolean, Seq[String]) = {
-    MultiDay.bootstrap4(spark, dir, p)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    landDrop(spark, p, 1); landDrop(spark, p, 2)
-    val q1 = start(spark, p, fetch)
-    try { q1.processAllAvailable() } finally q1.stop() // the kill
-    // the replay: committed day 2 re-offered under a new file name —
-    // the restarted source must deliver it and the ledger must no-op it
-    landDrop(spark, p, 2, name = "day2_replay.parquet")
-    MultiDay.writeDay3Drop(spark, dir, p)
-    landDrop(spark, p, 3)
-    val before = spark.read.parquet(s"${p.lex}/hashes.parquet").count()
-    val q2 = start(spark, p, fetch) // same checkpoint: the restart
-    try { q2.processAllAvailable() } finally q2.stop()
-    // day 3 committed exactly once and the day-2 replay added nothing:
-    // lex hash growth == day-3 admitted NEW distinct hashes, and a
-    // direct re-offer of committed day 3 is a pure no-op
+    val (b, fetch, _) = boot(spark, dir, p)
+    Calendar.run(spark, b, Seq(
+      Land(1), Land(2), Run, // the kill
+      Land(2, replay = true), day3(spark, dir, p), Land(3),
+      Run)) // same checkpoint: the restart
     val replayNoOp = !MultiDay.processDay4(spark, p, 3,
       spark.read.parquet(p.dropDay(3)), fetch)
-    val _ = before // growth is pinned by the q543 card oracle itself
     (replayNoOp, CurationNDay.ledgerDays(spark, p.ledger))
   }
 }

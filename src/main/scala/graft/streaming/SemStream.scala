@@ -1,22 +1,22 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField}
 
 import graft.ops.{CurationNDay, SemIndex}
+import Calendar.{Land, Run}
 
-/** The SEMANTIC index's admission stream — the [[CurationStream]]
-  * topology applied to the embedding-side lifecycle, so BOTH persisted
-  * indexes (lexical and semantic) are maintained by the same
-  * streaming-first machinery: daily vector drops land as files, a
-  * Structured Streaming file source delivers them, and `foreachBatch`
-  * drives each day through a LEDGERED [[SemIndex.processDay]]
-  * (decision pin before the index append + the day ledger = the
-  * exactly-once-per-day contract; a replayed committed day is a pure
-  * no-op, a day that died before its ledger row re-runs convergently
-  * off its pin).
+/** The SEMANTIC index's admission stream — the [[Calendar]]
+  * interpreter applied to the embedding-side lifecycle, so BOTH
+  * persisted indexes (lexical and semantic) are maintained by the
+  * same streaming-first machinery: daily vector drops land as files,
+  * a Structured Streaming file source delivers them, and the
+  * interpreter drives each day through a LEDGERED
+  * [[SemIndex.processDay]] (decision pin before the index append +
+  * the `sem<k>` day ledger = the exactly-once-per-day contract; a
+  * replayed committed day is a pure no-op, a day that died before its
+  * ledger row re-runs convergently off its pin).
   *
   * At 100 TB the stream moves only delta vectors; each day's probe is
   * partition-pruned to its own cells and the append is anti-joined —
@@ -25,64 +25,6 @@ import graft.ops.{CurationNDay, SemIndex}
   * q521/q522's full re-derivation).
   */
 object SemStream {
-
-  val dropSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("day", IntegerType)))
-
-  /** Start the admission stream over `landing`, checkpointed at `cp`;
-    * each day in a micro-batch runs ledger-gated and in day order.
-    */
-  def start(spark: SparkSession, p: SemIndex.Paths, landing: String,
-            cp: String, ledger: String): StreamingQuery =
-    spark.readStream
-      .schema(dropSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing)
-      .writeStream
-      .option("checkpointLocation", cp)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val days = batch.select("day").distinct()
-          .collect().map(_.getInt(0)).sorted // bounded: days per batch
-        days.foreach { k =>
-          val dayId = s"sem$k"
-          if (!CurationNDay.ledgerSeen(spark, ledger, dayId)) {
-            SemIndex.processDay(spark, p, k,
-              batch.where(col("day") === k)
-                .select("vec_id", "embedding")): Unit
-            CurationNDay.appendLedger(spark, ledger, dayId)
-          }
-        }
-      }
-      .start()
-
-  /** Stage a day's vector drop as ONE parquet file with a pinned,
-    * strictly-increasing modification time (the [[CurationStream
-    * .landDrop]] in-order-delivery contract, anchored on the seeds
-    * file the bootstrap wrote).
-    */
-  def landDrop(spark: SparkSession, p: SemIndex.Paths, landing: String,
-               k: Int, drop: DataFrame): Unit = {
-    val tmp = s"${landing}_tmp_day$k"
-    drop.withColumn("day", lit(k))
-      .repartition(1).write.mode("overwrite").parquet(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tmpP = new org.apache.hadoop.fs.Path(tmp)
-    val fs = tmpP.getFileSystem(conf)
-    val part = fs.listStatus(tmpP)
-      .find(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .getOrElse(sys.error(s"landDrop: no part file under $tmp"))
-    val landingP = new org.apache.hadoop.fs.Path(landing)
-    if (!fs.exists(landingP)) { fs.mkdirs(landingP): Unit }
-    val dst = new org.apache.hadoop.fs.Path(landingP, s"day$k.parquet")
-    val ok = fs.rename(part.getPath, dst)
-    require(ok, s"landDrop: rename into $landing failed")
-    fs.delete(tmpP, true): Unit
-    val anchor = fs.getFileStatus(
-      new org.apache.hadoop.fs.Path(p.seeds)).getModificationTime
-    fs.setTimes(dst, anchor + k * 60000L, -1L)
-  }
 
   /** The STREAMED two-day semantic lifecycle with a kill/restart
     * between the days and a replayed-committed-day no-op witnessed
@@ -96,34 +38,34 @@ object SemStream {
                       ledger: String): (Seq[String], Boolean) = {
     val emb = graft.core.Tables.plain(spark, dir, "embeddings")
       .select("vec_id", "embedding")
+    def part(r: Long) = emb.where(pmod(col("vec_id"), lit(4L)) === r)
     SemIndex.bootstrap(spark,
       emb.where(pmod(col("vec_id"), lit(4L)).isin(2L, 3L)), p)
-    landDrop(spark, p, landing, 1,
-      emb.where(pmod(col("vec_id"), lit(4L)) === 0L))
-    val q1 = start(spark, p, landing, cp, ledger)
-    try { q1.processAllAvailable() } finally q1.stop() // the kill
-    // day 2 = organic %4==1 plus the sentinel derived from the
-    // pipeline's own pinned day-1 decisions (q521's planting rule)
-    val sentinel = spark.read.parquet(p.decisionsDay(1))
-      .where(col("decision") === "admitted")
-      .orderBy("vec_id").limit(1).select("vec_id")
-      .join(emb, "vec_id")
-      .select(lit(9500001L).as("vec_id"), col("embedding"))
-    landDrop(spark, p, landing, 2,
-      emb.where(pmod(col("vec_id"), lit(4L)) === 1L)
-        .unionByName(sentinel))
+    val b = Calendar.Binding(landing, cp, p.seeds,
+      Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(FloatType))),
+      {
+        case 1 => part(0L)
+        case _ =>
+          // day 2 = organic %4==1 plus the sentinel derived from the
+          // pipeline's own pinned day-1 decisions (q521's planting rule)
+          part(1L).unionByName(spark.read.parquet(p.decisionsDay(1))
+            .where(col("decision") === "admitted")
+            .orderBy("vec_id").limit(1).select("vec_id")
+            .join(emb, "vec_id")
+            .select(lit(9500001L).as("vec_id"), col("embedding")))
+      },
+      (k, drop) =>
+        if (!CurationNDay.ledgerSeen(spark, ledger, s"sem$k")) {
+          SemIndex.processDay(spark, p, k, drop): Unit
+          CurationNDay.appendLedger(spark, ledger, s"sem$k")
+        })
     // replay witness: day 1 re-offered under a new file name — the
     // source delivers it again, the ledger must no-op it
-    val fs = new org.apache.hadoop.fs.Path(landing).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val d1 = new org.apache.hadoop.fs.Path(landing, "day1.parquet")
-    val d1b = new org.apache.hadoop.fs.Path(landing, "day1_replay.parquet")
-    org.apache.hadoop.fs.FileUtil.copy(fs, d1, fs, d1b, false,
-      spark.sparkContext.hadoopConfiguration): Unit
-    fs.setTimes(d1b, fs.getFileStatus(d1).getModificationTime + 1, -1L)
+    Calendar.run(spark, b, Seq(Land(1), Run, // the kill
+      Land(2), Land(1, replay = true)))
     val before = spark.read.parquet(p.index).count()
-    val q2 = start(spark, p, landing, cp, ledger) // same cp: restart
-    try { q2.processAllAvailable() } finally q2.stop()
+    Calendar.run(spark, b, Seq(Run)) // same checkpoint: the restart
     val stable = {
       // day 2 appended its admissions; re-subtract them to isolate the
       // replay effect: the replayed day-1 file must have added NOTHING

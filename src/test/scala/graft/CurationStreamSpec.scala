@@ -78,9 +78,9 @@ class CurationStreamSpec extends AnyFunSuite {
       assert(CurationNDay.ledgerDays(spark, at.ledger) == Seq("day1"))
       // the landing zone re-offers day 2 (at-least-once delivery);
       // the stream re-runs the whole day — idempotent by construction
-      CurationStream.landDrop(spark, at, 2)
-      val q = CurationStream.start(spark, at, fetch)
-      try q.processAllAvailable() finally q.stop()
+      graft.streaming.Calendar.run(spark,
+        CurationStream.binding(spark, at, fetch),
+        Seq(graft.streaming.Calendar.Land(2), graft.streaming.Calendar.Run))
       assert(CurationNDay.ledgerDays(spark, at.ledger) ==
         Seq("day1", "day2"))
       // control: the same two days with no crash

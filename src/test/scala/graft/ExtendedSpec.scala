@@ -89,7 +89,6 @@ class ExtendedSpec extends AnyFunSuite {
   }
 
   test("text_embedding hashed path: unit-norm lexical vectors, env-selected") {
-    // both implementation paths behind the SPARK_GRAFT_EMBEDDING switch
     def emb(t: String) = Seq(1).toDF("x")
       .select(MlScalars.textEmbeddingHashed(lit(t), 16)).as[Seq[Double]].head()
     val a = emb("the quick brown fox")
@@ -105,8 +104,7 @@ class ExtendedSpec extends AnyFunSuite {
     assert(cos(a, d) > cos(a, c))
     // empty text: zero vector, no NaNs from the normalize guard
     assert(emb("").forall(_ == 0.0))
-    // the default (no env var) dispatch resolves to the hashed mode —
-    // the one honest model-free embedding (r7; the md5 stub is opt-in)
+    // the public _text_embedding scalar IS the hashed embedding
     val viaDispatch = Seq(1).toDF("x")
       .select(MlScalars.textEmbedding(lit("doc"), 8)).as[Seq[Double]].head()
     val hashed = Seq(1).toDF("x")
@@ -139,20 +137,5 @@ class ExtendedSpec extends AnyFunSuite {
         .select(perDimension(lit(t), 16)).as[Seq[Double]].head()
       assert(fast == ref, s"mismatch for '$t'")
     }
-  }
-
-  test("SPARK_GRAFT_EMBEDDING dispatch: hashed/stub routes, onnx fails loudly") {
-    def head(c: Column) = Seq(1).toDF("x").select(c).as[Seq[Double]].head()
-    assert(head(MlScalars.textEmbedding(lit("a b"), 8, Some("hashed"))) ==
-      head(MlScalars.textEmbeddingHashed(lit("a b"), 8)))
-    assert(head(MlScalars.textEmbedding(lit("a b"), 8, None)) ==
-      head(MlScalars.textEmbeddingHashed(lit("a b"), 8)))
-    assert(head(MlScalars.textEmbedding(lit("a b"), 8, Some("stub"))) ==
-      head(MlScalars.textEmbeddingStub(lit("a b"), 8)))
-    // onnx must not silently fall back to a stub embedding
-    val ex = intercept[IllegalStateException] {
-      MlScalars.textEmbedding(lit("x"), 8, Some("onnx"))
-    }
-    assert(ex.getMessage.contains("ONNX runtime"))
   }
 }

@@ -200,8 +200,9 @@ class Round12Spec extends AnyFunSuite {
       fs.mkdirs(new org.apache.hadoop.fs.Path(p.landing)): Unit
       assert(fs.rename(part.getPath,
         new org.apache.hadoop.fs.Path(p.landing, "days12.parquet")))
-      val q = graft.streaming.MultiStream.start(spark, p, fetch)
-      try { q.processAllAvailable() } finally q.stop()
+      graft.streaming.Calendar.run(spark,
+        graft.streaming.MultiStream.binding(spark, p, fetch),
+        Seq(graft.streaming.Calendar.Run))
       assert(graft.ops.CurationNDay.ledgerDays(spark, p.ledger)
         == Seq("mm1", "mm2"))
       (1 to 2).foreach { k =>
