@@ -27,6 +27,24 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    // The oracles go out BEFORE the query loop, so a killed or
+    // timed-out run still leaves every oracle to count (and a filter
+    // that matches nothing is a cheap full oracle dump).
+    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    // — a tab or CR in builder-authored SQL would otherwise make the
+    // driver's json.load fail and silently zero the round's correctness.
+    def q(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    val json = SparkEntry.oracleSql
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val gate = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) =>
         nameFilter.forall(_.findFirstIn(name).isDefined) }
@@ -66,21 +84,6 @@ object Verify {
         }.foreach(_.get())
       } finally { pool.shutdownNow(): Unit }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
 }

@@ -67,7 +67,7 @@ object CurationDay {
     def landing: String = s"$root/landing"
     def streamCp: String = s"$root/stream_cp"
     /** The pinned horizon of a size-capped retention day — written by
-      * [[CurationNDay.capDay]] BEFORE any mutation (the decision-pin
+      * [[CurationNDay.capDayPinned]] BEFORE any mutation (the decision-pin
       * rule applied to retention), so a replayed calendar slot knows
       * whether the committed cap expired anything (rebuild the tape)
       * or was an under-cap no-op (touch nothing).

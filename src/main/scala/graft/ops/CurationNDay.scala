@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Ledger
+
 /** The N-DAY curation lifecycle (round-11 flagship, N = 4): the
   * [[CurationDay]] delta-day machinery generalized from the two-day
   * chain to a parameterized day loop, with every day's admission
@@ -10,14 +12,11 @@ import org.apache.spark.sql.functions._
   * exactly-once contract lifted from one table write to the whole
   * multi-artifact day transaction. The same per-day step
   * ([[processDay]]) serves two engine paths against one oracle (the
-  * q483 pattern):
-  *
-  *  - the BATCH loop ([[runDaysBatch]]) — days applied in a driver
-  *    loop, the r10 two-day chain at N = 4;
-  *  - the STREAMING path ([[graft.streaming.CurationStream]]) — daily
-  *    drop files land in a directory, Structured Streaming delivers
-  *    them through `foreachBatch`, and each micro-batch invokes the
-  *    identical [[processDay]].
+  * q483 pattern): [[graft.streaming.CurationStream]]'s calendars run
+  * either through the BATCH interpreter (days applied in a driver
+  * loop) or the STREAMED one (daily drop files land in a directory,
+  * Structured Streaming delivers them through `foreachBatch`), and
+  * both invoke the identical [[processDay]].
   *
   * Day-k state bugs that two days cannot surface (fold
   * non-associativity, summary staleness after repeated appends,
@@ -134,55 +133,6 @@ object CurationNDay {
       .write.mode("overwrite").parquet(a.dropDay(4))
   }
 
-  // ---- day ledger: the exactly-once gate around the whole day ------
-
-  private val ledgerSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("day_id",
-      org.apache.spark.sql.types.StringType)))
-
-  def ledgerSeen(spark: SparkSession, ledgerPath: String,
-                 dayId: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(ledgerPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) &&
-      spark.read.schema(ledgerSchema).parquet(ledgerPath)
-        .where(col("day_id") === dayId).limit(1).count() > 0
-  }
-
-  def ledgerDays(spark: SparkSession, ledgerPath: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(ledgerPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else spark.read.schema(ledgerSchema).parquet(ledgerPath)
-      .collect().map(_.getString(0)).toSeq.sorted
-  }
-
-  private[graft] def appendLedger(spark: SparkSession, ledgerPath: String,
-                           dayId: String): Unit = {
-    import spark.implicits._
-    Seq(dayId).toDF("day_id").write.mode("append").parquet(ledgerPath)
-  }
-
-  /** Pin a size cap's chosen horizon (`keep_from_day`, 0 = the
-    * under-cap no-op) at `path` BEFORE any mutation — the decision-pin
-    * rule applied to retention: a replayed calendar slot whose cap
-    * committed can still read what the cap decided (the
-    * expiry-vs-no-op fact the tape-rebuild step needs). Both
-    * lifecycles' caps write through here and read through
-    * [[readHorizon]].
-    */
-  private[graft] def pinHorizon(spark: SparkSession, path: String,
-                                keepFrom: Int): Unit = {
-    import spark.implicits._
-    Seq(keepFrom).toDF("keep_from_day")
-      .repartition(1)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** The horizon [[pinHorizon]] pinned at `path` (one row). */
-  def readHorizon(spark: SparkSession, path: String): Int =
-    spark.read.parquet(path).head().getInt(0)
-
   /** One day's full admission transaction, ledger-gated: returns false
     * (a pure no-op) when the day is already committed; otherwise runs
     * [[processDayBody]] and commits the ledger row LAST — a crash
@@ -190,15 +140,9 @@ object CurationNDay {
     * the body's construction makes convergent (see object Scaladoc).
     */
   def processDay(spark: SparkSession, a: CurationDay.Artifacts, k: Int,
-                 drop: DataFrame, corpusFetch: DataFrame): Boolean = {
-    val dayId = s"day$k"
-    if (ledgerSeen(spark, a.ledger, dayId)) false
-    else {
-      processDayBody(spark, a, k, drop, corpusFetch)
-      appendLedger(spark, a.ledger, dayId)
-      true
-    }
-  }
+                 drop: DataFrame, corpusFetch: DataFrame): Boolean =
+    Ledger.once(spark, a.ledger, s"day$k")(
+      processDayBody(spark, a, k, drop, corpusFetch)).isDefined
 
   /** Everything except the ledger commit — the crash window, exposed
     * so CurationStreamSpec can SIMULATE a day that died before its
@@ -209,7 +153,7 @@ object CurationNDay {
     * DECISION PIN (the bug CurationStreamSpec's torn-day test caught
     * in the first cut): the day's decisions are computed BEFORE any
     * index mutation and pinned to `decisionsDay(k)`; a replayed day
-    * whose pin completed (`_SUCCESS` present) REUSES it instead of
+    * whose pin completed ([[graft.core.Ledger.pin]]) REUSES it instead of
     * recomputing — recomputation against an index that already
     * absorbed this day's own docs would see every admitted doc as its
     * own exact dup. A crash mid-pin recomputes cleanly (the index is
@@ -224,17 +168,8 @@ object CurationNDay {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(new org.apache.hadoop.fs.Path(a.manifestDay(k - 1))),
       s"processDay: day $k arrived before day ${k - 1} was admitted")
-    val decPinned = fs.exists(
-      new org.apache.hadoop.fs.Path(a.decisionsDay(k) + "/_SUCCESS"))
-    val dec =
-      if (decPinned)
-        spark.read.parquet(a.decisionsDay(k)).localCheckpoint(true)
-      else {
-        val d = CurationDay.decisionsOf(spark, a, corpusFetch, drop)
-          .localCheckpoint(true)
-        d.write.mode("overwrite").parquet(a.decisionsDay(k))
-        d
-      }
+    val dec = Ledger.pin(spark, a.decisionsDay(k))(
+      CurationDay.decisionsOf(spark, a, corpusFetch, drop))
     // ONE admitted-frame derivation feeds every artifact update below
     // (previously admitDayOf re-derived + re-checkpointed its own copy)
     val adm = CurationDay.admittedOf(dec, drop)
@@ -282,21 +217,6 @@ object CurationNDay {
         .write.mode("overwrite").parquet(a.centStateDay(k)))
   }
 
-  /** The batch engine path: bootstrap, three organic days, then the
-    * sentinel-planted day 4 — each through the SAME [[processDay]]
-    * the streaming path invokes per micro-batch.
-    */
-  def runDaysBatch(spark: SparkSession, dir: String,
-                   a: CurationDay.Artifacts): Unit = {
-    bootstrapNDay(spark, dir, a)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    (1 to 3).foreach { k =>
-      processDay(spark, a, k, spark.read.parquet(a.dropDay(k)), fetch): Unit
-    }
-    writeDay4Drop(spark, dir, a)
-    processDay(spark, a, 4, spark.read.parquet(a.dropDay(4)), fetch): Unit
-  }
-
   /** All N days' decisions as one frame (day, doc_id, decision,
     * shard) — the lifecycle's decision ledger, read back from the
     * per-day artifacts.
@@ -340,48 +260,52 @@ object CurationNDay {
     */
   def retractDay(spark: SparkSession, a: CurationDay.Artifacts,
                  dayId: String, retract: DataFrame, manifestIn: String,
-                 manifestOut: String): Boolean = {
-    if (ledgerSeen(spark, a.ledger, dayId)) false
-    else {
-      val ids = retract.select("doc_id").distinct().localCheckpoint(true)
-      val corpusPre = spark.read.parquet(a.corpusDir)
-      // victims WITH text + shard: retraction-proportional
-      val victims = corpusPre.join(ids, "doc_id").localCheckpoint(true)
-      val shards = victims.select("shard").distinct()
-        .collect().map(_.getInt(0)).sorted
-      // 1. index delete while corpus files are intact (its stillHeld
-      //    pass is the one map-only corpus scan of the op)
-      Dedup.deleteFromDedupIndex(spark, a.index,
-        corpusPre.select("doc_id", "text"),
-        victims.select("doc_id", "text"), "text", "doc_id")
-      // 2. per-shard corpus rewrite (pruned to the victims' shards)
-      val kept = corpusPre
-        .where(col("shard").isin(shards.map(Integer.valueOf): _*))
-        .join(ids, Seq("doc_id"), "left_anti")
-        .localCheckpoint(true)
-      val fs = new org.apache.hadoop.fs.Path(a.corpusDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      shards.foreach { sh =>
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"${a.corpusDir}/shard=$sh"), true): Unit
-      }
-      kept.write.partitionBy("shard").mode("append").parquet(a.corpusDir)
-      // 3. manifest: carry untouched shards, recompute touched ones
-      //    from their post-delete partitions
-      val nTok = size(split(col("text"), " ")).cast("long")
-      val touchedNew = graft.core.Layout.shardManifest(
-        spark.read.parquet(a.corpusDir)
-          .where(col("shard").isin(shards.map(Integer.valueOf): _*))
-          .withColumn("n_tok", nTok),
-        "shard", "doc_id", "n_tok", "text")
-      spark.read.parquet(manifestIn)
-        .where(!col("shard").isin(shards.map(Integer.valueOf): _*))
-        .unionByName(touchedNew)
-        .localCheckpoint(true)
-        .write.mode("overwrite").parquet(manifestOut)
-      appendLedger(spark, a.ledger, dayId)
-      true
+                 manifestOut: String): Boolean =
+    Ledger.once(spark, a.ledger, dayId)(
+      retractAll(spark, a, retract, manifestIn, manifestOut)).isDefined
+
+  /** [[retractDay]] without its ledger row — the body every ledgered
+    * deletion (retraction, TTL, cap) runs under its own one row.
+    */
+  private def retractAll(spark: SparkSession, a: CurationDay.Artifacts,
+                         retract: DataFrame, manifestIn: String,
+                         manifestOut: String): Unit = {
+    val ids = retract.select("doc_id").distinct().localCheckpoint(true)
+    val corpusPre = spark.read.parquet(a.corpusDir)
+    // victims WITH text + shard: retraction-proportional
+    val victims = corpusPre.join(ids, "doc_id").localCheckpoint(true)
+    val shards = victims.select("shard").distinct()
+      .collect().map(_.getInt(0)).sorted
+    // 1. index delete while corpus files are intact (its stillHeld
+    //    pass is the one map-only corpus scan of the op)
+    Dedup.deleteFromDedupIndex(spark, a.index,
+      corpusPre.select("doc_id", "text"),
+      victims.select("doc_id", "text"), "text", "doc_id")
+    // 2. per-shard corpus rewrite (pruned to the victims' shards)
+    val kept = corpusPre
+      .where(col("shard").isin(shards.map(Integer.valueOf): _*))
+      .join(ids, Seq("doc_id"), "left_anti")
+      .localCheckpoint(true)
+    val fs = new org.apache.hadoop.fs.Path(a.corpusDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    shards.foreach { sh =>
+      fs.delete(new org.apache.hadoop.fs.Path(
+        s"${a.corpusDir}/shard=$sh"), true): Unit
     }
+    kept.write.partitionBy("shard").mode("append").parquet(a.corpusDir)
+    // 3. manifest: carry untouched shards, recompute touched ones
+    //    from their post-delete partitions
+    val nTok = size(split(col("text"), " ")).cast("long")
+    val touchedNew = graft.core.Layout.shardManifest(
+      spark.read.parquet(a.corpusDir)
+        .where(col("shard").isin(shards.map(Integer.valueOf): _*))
+        .withColumn("n_tok", nTok),
+      "shard", "doc_id", "n_tok", "text")
+    spark.read.parquet(manifestIn)
+      .where(!col("shard").isin(shards.map(Integer.valueOf): _*))
+      .unionByName(touchedNew)
+      .localCheckpoint(true)
+      .write.mode("overwrite").parquet(manifestOut)
   }
 
   /** RETENTION (TTL) day — time-based age-out for the corpus + index +
@@ -399,13 +323,22 @@ object CurationNDay {
     * touched shards), so TTL inherits its crash-convergence. The PACK
     * TAPE is invalidated from the first victim onward — run
     * [[Pack.rebuild]] after, exactly like retraction (q528's
-    * contract). Returns false when `dayId` already committed.
+    * contract). Returns false when `dayId` already committed (a
+    * replay reads only the ledger).
     */
   def ttlDay(spark: SparkSession, a: CurationDay.Artifacts,
              dayId: String, keepFromDay: Int, manifestIn: String,
              manifestOut: String): Boolean = {
     require(keepFromDay >= 1 && keepFromDay <= NDays,
       s"ttlDay: keepFromDay in [1, $NDays]")
+    Ledger.once(spark, a.ledger, dayId)(
+      expire(spark, a, keepFromDay, manifestIn, manifestOut)).isDefined
+  }
+
+  /** [[ttlDay]] without its ledger row. */
+  private def expire(spark: SparkSession, a: CurationDay.Artifacts,
+                     keepFromDay: Int, manifestIn: String,
+                     manifestOut: String): Unit = {
     val young = (keepFromDay to NDays).map { k =>
       spark.read.parquet(a.decisionsDay(k))
         .where(col("decision") === "admitted").select("doc_id")
@@ -413,133 +346,99 @@ object CurationNDay {
     val victims = spark.read.parquet(a.corpusDir).select("doc_id")
       .join(young, Seq("doc_id"), "left_anti")
       .localCheckpoint(true) // age-out set pinned before mutation
-    retractDay(spark, a, dayId, victims, manifestIn, manifestOut)
+    retractAll(spark, a, victims, manifestIn, manifestOut)
   }
 
-  /** SIZE-CAPPED retention — the reference's ring buffer is capped by
-    * SIZE, not age (src/table_store/table/table.cc:44: expire oldest
-    * batches until under the byte cap); this is that trigger on the
-    * day lifecycle: choose the OLDEST admission horizon whose
-    * retained token mass fits `maxTokens` (whole-day granularity —
-    * the row-batch analog), then run the [[ttlDay]] machinery at that
-    * horizon. Day masses come from the persisted PACK layouts (one
-    * sum per day file — no corpus scan, the dataCard rule), and the
-    * chosen horizon is exact integer arithmetic any engine re-derives
-    * from the same masses. Loud-fails when even the newest day alone
-    * exceeds the cap (whole-day expiry cannot satisfy it). An
-    * UNDER-CAP corpus is untouched (the reference cap expires only
-    * while over it): when the WHOLE retained mass — day-0 snapshot
-    * included — already fits, the day commits as a ledgered no-op
-    * (keepFrom = 0, no mutation, `manifestOut` not written). Returns
-    * the chosen `keepFromDay`, or 0 for the no-op / already-committed
-    * cases.
-    *
-    * COMPOSITION BOUNDARY: a ttl slot's [[Pack.rebuild]] lays the
-    * retained corpus out as ONE fresh tape — day segment 0 — so a cap
-    * slot scheduled AFTER a ttl in the same calendar would read zero
-    * mass for days 1..N here and choose a vacuous horizon. THIS
-    * variant (model-sized pack sums, no corpus scan) is for
-    * calendars whose cap precedes any rebuild; [[capDayPinned]]
-    * re-derives the masses from the decision pins + current corpus
-    * membership on every call (one corpus scan — the
-    * [[graft.ops.MultiDay.retainedMasses]] discipline) and composes
-    * in any order — the streamed cap slot and the q606/q607 full
-    * calendar run on it. Compact slots compose anywhere (they touch
-    * no mass bookkeeping).
-    */
-  def capDay(spark: SparkSession, a: CurationDay.Artifacts,
-             dayId: String, maxTokens: Long, manifestIn: String,
-             manifestOut: String): Int =
-    if (ledgerSeen(spark, a.ledger, dayId)) 0
-    else {
-      val masses = (0 to NDays).map(k => k -> packMass(spark, a, k)).toMap
-      capWith(spark, a, dayId, maxTokens, masses, manifestIn,
-        manifestOut)
-    }
-
   /** Day k's token mass from its persisted pack layout (one sum over
-    * one day file — model-sized, no corpus scan).
+    * one day file — model-sized, no corpus scan): the fixture caps'
+    * input, read before any slot rewrites the tape.
     */
   def packMass(spark: SparkSession, a: CurationDay.Artifacts, k: Int): Long =
     spark.read.parquet(a.packDay(k))
       .agg(coalesce(sum(col("n_tok")), lit(0L)).as("m"))
       .head().getLong(0)
 
-  /** ORDER-INDEPENDENT retained token mass per admission day — the
-    * [[graft.ops.MultiDay.retainedMasses]] discipline on the curation
-    * side: a retained corpus doc admitted on pinned day k contributes
-    * its token mass to day k; a member of no pinned day is snapshot
-    * mass (day 0); an expired doc contributes nothing, because the
-    * masses come from the corpus's CURRENT membership, not from
-    * bookkeeping a prior slot may have rewritten. Costs one curated-
-    * corpus scan (vs [[capDay]]'s model-sized pack-file sums — the
-    * trade that buys any-order slot composition).
+  /** The ONE retained-mass table both lifecycles' size caps read:
+    * every current member `(doc_id, m)` contributes its mass `m` to
+    * the day whose pinned decisions (`decisionsDay(k)`, k ≤ `nDays`)
+    * admitted it; a member of no pinned day is snapshot mass (day 0);
+    * an expired doc contributes nothing, because the masses come from
+    * CURRENT membership, not from bookkeeping a prior slot may have
+    * rewritten — so slots compose in any order. One member-sized
+    * pass; one entry per pinned day plus day 0.
     */
-  def pinnedMasses(spark: SparkSession,
-                   a: CurationDay.Artifacts): Map[Int, Long] = {
-    val fs = new org.apache.hadoop.fs.Path(a.root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pinnedDays = (1 to NDays).filter(k =>
-      fs.exists(new org.apache.hadoop.fs.Path(
-        a.decisionsDay(k) + "/_SUCCESS")))
-    val corpus = spark.read.parquet(a.corpusDir)
-      .select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("__tok"))
+  def massTable(spark: SparkSession, members: DataFrame,
+                decisionsDay: Int => String, nDays: Int): Map[Int, Long] = {
+    val pinnedDays = (1 to nDays).filter(k => Ledger.done(spark, decisionsDay(k)))
     val admDay = pinnedDays.map { k =>
-      spark.read.parquet(a.decisionsDay(k))
+      spark.read.parquet(decisionsDay(k))
         .where(col("decision") === "admitted")
         .select(col("doc_id"), lit(k).as("__day"))
     }.reduceOption(_.unionByName(_))
     val tagged = admDay match {
-      case Some(d) => corpus.join(d, Seq("doc_id"), "left")
+      case Some(d) => members.join(d, Seq("doc_id"), "left")
         .withColumn("__day", coalesce(col("__day"), lit(0)))
-      case None => corpus.withColumn("__day", lit(0))
+      case None => members.withColumn("__day", lit(0))
     }
     val measured = tagged.groupBy("__day")
-      .agg(sum(col("__tok")).as("m"))
+      .agg(sum(col("m")).as("m"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     ((0 +: pinnedDays).map(k => k -> measured.getOrElse(k, 0L))).toMap
   }
 
-  /** [[capDay]] on [[pinnedMasses]] — the COMPOSITION FIX for the
-    * boundary documented above: horizon choice, pinning, expiry, and
-    * the under-cap/loud-fail contracts are capDay's verbatim
-    * ([[capWith]] is shared), but the masses survive a prior ttl
-    * slot's tape rebuild, so a streamed calendar can schedule its
-    * slots in any order (the q606/q607 capstone). On a calendar where
-    * no prior slot rewrote the tape the two variants choose identical
-    * horizons — the pack segments ARE the per-day admitted masses
-    * there (q581/q582 hold unchanged with the streamed cap slot on
-    * this variant).
+  /** The ONE whole-day horizon chooser: 0 when the whole retained
+    * mass — day-0 snapshot included — already fits `cap` (the
+    * reference cap expires only while over it); otherwise the OLDEST
+    * admission day k ≥ 1 of `masses` whose days ≥ k fit (whole-day
+    * granularity — the row-batch analog; exact integer arithmetic any
+    * engine re-derives). Loud-fails when even the newest day alone
+    * exceeds the cap (whole-day expiry cannot satisfy it).
+    */
+  def horizonOf(masses: Map[Int, Long], cap: Long, dayId: String): Int =
+    if (masses.values.sum <= cap) 0
+    else {
+      val days = masses.keys.toSeq.sorted
+      days.filter(_ >= 1).find { k =>
+        days.filter(_ >= k).map(masses).sum <= cap
+      }.getOrElse(sys.error(s"$dayId: day ${days.max} alone exceeds " +
+        s"the $cap cap — whole-day expiry cannot satisfy it"))
+    }
+
+  /** ORDER-INDEPENDENT retained token mass per admission day:
+    * [[massTable]] over the curated corpus, a doc's mass its token
+    * count. Costs one curated-corpus scan.
+    */
+  def pinnedMasses(spark: SparkSession,
+                   a: CurationDay.Artifacts): Map[Int, Long] =
+    massTable(spark, spark.read.parquet(a.corpusDir).select(col("doc_id"),
+        size(split(col("text"), " ")).cast("long").as("m")),
+      a.decisionsDay, NDays)
+
+  /** SIZE-CAPPED retention — the reference's ring buffer is capped by
+    * SIZE, not age (src/table_store/table/table.cc:44: expire oldest
+    * batches until under the byte cap); this is that trigger on the
+    * day lifecycle: [[horizonOf]] over the [[pinnedMasses]] chooses
+    * the OLDEST admission horizon whose retained token mass fits
+    * `maxTokens`, the horizon is PINNED before any mutation (a
+    * replayed calendar slot whose cap committed still knows whether
+    * it expired anything — the fact the tape-rebuild step needs), then
+    * the [[ttlDay]] machinery expires to it — all under ONE `dayId`
+    * ledger row. An UNDER-CAP corpus is untouched: the day commits as
+    * a ledgered no-op (keepFrom = 0, no mutation, `manifestOut` not
+    * written). The masses survive a prior ttl slot's tape rebuild, so
+    * a calendar may schedule its slots in any order (the q606/q607
+    * capstone). Returns the chosen `keepFromDay`, or 0 for the no-op /
+    * already-committed cases.
     */
   def capDayPinned(spark: SparkSession, a: CurationDay.Artifacts,
                    dayId: String, maxTokens: Long, manifestIn: String,
                    manifestOut: String): Int =
-    if (ledgerSeen(spark, a.ledger, dayId)) 0
-    else capWith(spark, a, dayId, maxTokens, pinnedMasses(spark, a),
-      manifestIn, manifestOut)
-
-  private def capWith(spark: SparkSession, a: CurationDay.Artifacts,
-                      dayId: String, maxTokens: Long,
-                      masses: Map[Int, Long], manifestIn: String,
-                      manifestOut: String): Int = {
-    if (masses.values.sum <= maxTokens) {
-      // keepFrom = 0: everything (snapshot + every day) fits —
-      // commit the check without expiring anything
-      pinHorizon(spark, a.capHorizon(dayId), 0)
-      appendLedger(spark, a.ledger, dayId)
-      0
-    } else {
-      val keepFrom = (1 to NDays).find { k =>
-        (k to NDays).map(d => masses.getOrElse(d, 0L)).sum <= maxTokens
-      }.getOrElse(sys.error(
-        s"capDay: day $NDays alone exceeds the $maxTokens-token cap — " +
-          "whole-day expiry cannot satisfy it"))
-      pinHorizon(spark, a.capHorizon(dayId), keepFrom)
-      ttlDay(spark, a, dayId, keepFrom, manifestIn, manifestOut): Unit
+    Ledger.once(spark, a.ledger, dayId) {
+      val keepFrom = horizonOf(pinnedMasses(spark, a), maxTokens, dayId)
+      Ledger.pinHorizon(spark, a.capHorizon(dayId), keepFrom)
+      if (keepFrom > 0) expire(spark, a, keepFrom, manifestIn, manifestOut)
       keepFrom
-    }
-  }
+    }.getOrElse(0)
 
   /** The lifecycle DATASHEET (the "data card" every curated training
     * corpus ships with — Gebru et al. 2021, "Datasheets for

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Ledger
+
 /** The MULTIMODAL admission day — the three persisted near-dup
   * indexes ([[Dedup.writeDedupIndex]] lexical, [[SemIndex]] semantic,
   * [[PhashIndex]] perceptual) composed into ONE incremental day: a
@@ -48,40 +50,30 @@ object MultiDay {
   def processDay(spark: SparkSession, p: Paths, k: Int,
                  docs: DataFrame, vecs: DataFrame, hashed: DataFrame,
                  corpusFetch: DataFrame): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(p.decisionsDay(k))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pinned = fs.exists(new org.apache.hadoop.fs.Path(
-      p.decisionsDay(k) + "/_SUCCESS"))
-    val dec =
-      if (pinned)
-        spark.read.parquet(p.decisionsDay(k)).localCheckpoint(true)
-      else {
-        val lex = Dedup.incrementalDedupIndexed(p.lex, corpusFetch,
-            docs, "text", "doc_id", NGram, K, Bands, Threshold)
-          .withColumnRenamed("decision", "__lex")
-        val sem = SemIndex.decisions(spark, p.sem, vecs)
-          .select(col("vec_id").as("doc_id"),
-            col("decision").as("__sem"))
-        val ph = PhashIndex.decisions(spark, p.ph, hashed)
-          .select(col("media_id").as("doc_id"),
-            col("decision").as("__ph"))
-        // FULL joins: the op is generic, so a delta doc missing an
-        // embedding or image row must not silently vanish — it gets
-        // the loud `missing_modality` verdict (never admitted, never
-        // appended) instead of dropping out of the decisions frame.
-        val d = lex.join(sem, Seq("doc_id"), "full")
-          .join(ph, Seq("doc_id"), "full")
-          .select(col("doc_id"),
-            when(col("__lex").isNull || col("__sem").isNull ||
-              col("__ph").isNull, lit("missing_modality"))
-              .when(col("__lex") =!= "admitted", col("__lex"))
-              .when(col("__sem") =!= "admitted", col("__sem"))
-              .when(col("__ph") =!= "admitted", col("__ph"))
-              .otherwise(lit("admitted")).as("decision"))
-          .localCheckpoint(true)
-        d.write.mode("overwrite").parquet(p.decisionsDay(k))
-        d
-      }
+    val dec = Ledger.pin(spark, p.decisionsDay(k)) {
+      val lex = Dedup.incrementalDedupIndexed(p.lex, corpusFetch,
+          docs, "text", "doc_id", NGram, K, Bands, Threshold)
+        .withColumnRenamed("decision", "__lex")
+      val sem = SemIndex.decisions(spark, p.sem, vecs)
+        .select(col("vec_id").as("doc_id"),
+          col("decision").as("__sem"))
+      val ph = PhashIndex.decisions(spark, p.ph, hashed)
+        .select(col("media_id").as("doc_id"),
+          col("decision").as("__ph"))
+      // FULL joins: the op is generic, so a delta doc missing an
+      // embedding or image row must not silently vanish — it gets
+      // the loud `missing_modality` verdict (never admitted, never
+      // appended) instead of dropping out of the decisions frame.
+      lex.join(sem, Seq("doc_id"), "full")
+        .join(ph, Seq("doc_id"), "full")
+        .select(col("doc_id"),
+          when(col("__lex").isNull || col("__sem").isNull ||
+            col("__ph").isNull, lit("missing_modality"))
+            .when(col("__lex") =!= "admitted", col("__lex"))
+            .when(col("__sem") =!= "admitted", col("__sem"))
+            .when(col("__ph") =!= "admitted", col("__ph"))
+            .otherwise(lit("admitted")).as("decision"))
+    }
     val admIds = dec.where(col("decision") === "admitted")
       .select("doc_id").localCheckpoint(true)
     Dedup.appendDedupIndex(docs.join(admIds, "doc_id"), "text",
@@ -321,42 +313,23 @@ object MultiDay {
           .otherwise(lit("admitted")).as("decision"))
   }
 
-  /** One 4-stage day, LEDGER-GATED (the [[CurationNDay.processDay]]
+  /** One mm day, LEDGER-GATED (the [[CurationNDay.processDay]]
     * exactly-once-per-day contract): a committed day is a pure no-op;
     * a day that died before its ledger row re-runs convergently —
     * the media-artifact extend is anti-joined, the decisions PIN
     * before any index mutation and a completed pin is REUSED (the
     * decision-pin rule: recomputation against indexes that absorbed
     * this day's own appends would self-flag every admission), and all
-    * four appends are anti-joined.
-    */
-  def processDay4(spark: SparkSession, p: Paths4, k: Int,
-                  drop: DataFrame, corpusFetch: DataFrame): Boolean = {
-    val dayId = s"mm$k"
-    if (CurationNDay.ledgerSeen(spark, p.ledger, dayId)) false
-    else {
-      processDay4Body(spark, p, k, drop, corpusFetch)
-      CurationNDay.appendLedger(spark, p.ledger, dayId)
-      true
-    }
-  }
-
-  /** [[processDay4]] with the FULL six-stage verdict
-    * ([[decisions6]]): same ledger, same pin, same anti-joined
+    * four appends are anti-joined. With `bench` the day runs the FULL
+    * six-stage verdict ([[decisions6]]): same ledger, same pin, same
     * appends — but the append set is the six-stage overall admission,
     * so post-gate-rejected docs never touch any index.
     */
-  def processDay6(spark: SparkSession, p: Paths4, k: Int,
+  def processDay4(spark: SparkSession, p: Paths4, k: Int,
                   drop: DataFrame, corpusFetch: DataFrame,
-                  bench: DataFrame): Boolean = {
-    val dayId = s"mm$k"
-    if (CurationNDay.ledgerSeen(spark, p.ledger, dayId)) false
-    else {
-      processDay4Body(spark, p, k, drop, corpusFetch, Some(bench))
-      CurationNDay.appendLedger(spark, p.ledger, dayId)
-      true
-    }
-  }
+                  bench: Option[DataFrame] = None): Boolean =
+    Ledger.once(spark, p.ledger, s"mm$k")(
+      processDay4Body(spark, p, k, drop, corpusFetch, bench)).isDefined
 
   /** Everything except the ledger commit — the crash window, exposed
     * for the torn-day spec. Days must arrive in order (day k needs
@@ -367,11 +340,8 @@ object MultiDay {
                                      corpusFetch: DataFrame,
                                      bench: Option[DataFrame] = None)
       : Unit = {
-    val fs = new org.apache.hadoop.fs.Path(p.decisionsDay(k))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (k > 1)
-      require(fs.exists(new org.apache.hadoop.fs.Path(
-        p.decisionsDay(k - 1) + "/_SUCCESS")),
+      require(Ledger.done(spark, p.decisionsDay(k - 1)),
         s"processDay4: day $k arrived before day ${k - 1}")
     val d = drop.localCheckpoint(true)
     // decode-once: extend the media artifact FIRST (anti-joined, so a
@@ -384,21 +354,12 @@ object MultiDay {
       .localCheckpoint(true)
     val imgHashed = MediaHashes.imageOf(sigs)
     val audHashed = MediaHashes.audioOf(sigs)
-    val pinned = fs.exists(new org.apache.hadoop.fs.Path(
-      p.decisionsDay(k) + "/_SUCCESS"))
-    val dec =
-      if (pinned)
-        spark.read.parquet(p.decisionsDay(k)).localCheckpoint(true)
-      else {
-        val x = (bench match {
-          case Some(b) =>
-            decisions6(spark, p, d, imgHashed, audHashed, corpusFetch, b)
-          case None =>
-            decisions4(spark, p, d, imgHashed, audHashed, corpusFetch)
-        }).localCheckpoint(true)
-        x.write.mode("overwrite").parquet(p.decisionsDay(k))
-        x
-      }
+    val dec = Ledger.pin(spark, p.decisionsDay(k))(bench match {
+      case Some(b) =>
+        decisions6(spark, p, d, imgHashed, audHashed, corpusFetch, b)
+      case None =>
+        decisions4(spark, p, d, imgHashed, audHashed, corpusFetch)
+    })
     val admIds = dec.where(col("decision") === "admitted")
       .select("doc_id").localCheckpoint(true)
     // the four appends touch disjoint artifacts and read only pinned
@@ -416,37 +377,14 @@ object MultiDay {
         audHashed.join(admMedia, "media_id")))
   }
 
-  /** The BATCH engine path: bootstrap, days 1–2, derive + apply the
-    * sentinel-planted day 3 — each through the same ledgered
-    * [[processDay4]] the streaming path invokes per micro-batch.
-    */
-  def runDays4Batch(spark: SparkSession, dir: String, p: Paths4): Unit = {
-    bootstrap4(spark, dir, p)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    (1 to 2).foreach { k =>
-      processDay4(spark, p, k, spark.read.parquet(p.dropDay(k)),
-        fetch): Unit
-    }
-    writeDay3Drop(spark, dir, p)
-    processDay4(spark, p, 3, spark.read.parquet(p.dropDay(3)), fetch): Unit
-  }
-
-  /** The batch path WITH MAINTENANCE INTERLEAVED — the operational
-    * calendar a production pipeline actually runs (admit, then settle
-    * the file debt in the maintenance slot, then admit again):
-    * content-invariant compactions of the lexical hash/band tables,
-    * the semantic cell partitions, and the media artifact execute
-    * BETWEEN the days. Decisions must be bit-identical to the plain
-    * chain — q558 gates this path against the SAME composed oracle as
-    * q542/q545 (third engine path, one oracle), turning "compaction
-    * changes nothing" from a per-op claim into a lifecycle-level
-    * proof.
-    */
   /** The full maintenance set — content-invariant compactions of all
     * FOUR indexes + the media artifact (each staging + rename-swap,
-    * self-healing on replay via [[graft.core.Layout.healTorn]]);
-    * shared by the batch maintained chain and the streamed
-    * `op = "compact"` calendar slot.
+    * self-healing on replay via [[graft.core.Layout.healTorn]]): the
+    * mm calendar's `op = "compact"` slot. Interleaved between the
+    * days, decisions must stay bit-identical to the plain chain — q558
+    * gates that against the SAME composed oracle as q542/q545, turning
+    * "compaction changes nothing" from a per-op claim into a
+    * lifecycle-level proof.
     */
   def maintain4(spark: SparkSession, p: Paths4): Unit =
     // five disjoint artifacts, each compaction self-contained — overlap
@@ -456,19 +394,6 @@ object MultiDay {
       () => PhashIndex.compact(spark, p.ph),
       () => PhashIndex.compact(spark, p.aud),
       () => MediaHashes.compact(spark, p.media))
-
-  def runDays4BatchMaintained(spark: SparkSession, dir: String,
-                              p: Paths4): Unit = {
-    bootstrap4(spark, dir, p)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    (1 to 2).foreach { k =>
-      processDay4(spark, p, k, spark.read.parquet(p.dropDay(k)),
-        fetch): Unit
-      maintain4(spark, p)
-    }
-    writeDay3Drop(spark, dir, p)
-    processDay4(spark, p, 3, spark.read.parquet(p.dropDay(3)), fetch): Unit
-  }
 
   /** The indexed-docs text frame a retention day's lexical stillHeld
     * pass scans, derived from the lexical index's OWN band table (the
@@ -487,11 +412,7 @@ object MultiDay {
     */
   def indexedDocs(spark: SparkSession, p: Paths4,
                   corpusFetch: DataFrame): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(p.root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val drops = (1 to NDays4)
-      .filter(k => fs.exists(new org.apache.hadoop.fs.Path(
-        p.dropDay(k) + "/_SUCCESS")))
+    val drops = (1 to NDays4).filter(k => Ledger.done(spark, p.dropDay(k)))
       .map(k => spark.read.parquet(p.dropDay(k)).select("doc_id", "text"))
     // one text per id: corpus text == drop text for organic ids (the
     // drops are derived from the corpus tables), and sentinel ids
@@ -507,29 +428,6 @@ object MultiDay {
       s"indexedDocs: $missing indexed ids resolve in neither the " +
         "corpus fetch nor any staged drop — stillHeld would over-delete")
     texts.join(members, "doc_id")
-  }
-
-  /** The batch CALENDAR — admission days with a LEDGERED retention
-    * day interleaved (the r12 verdict's "stream the retention
-    * calendar" task, batch engine path): days 1–2 admit, the ttl2
-    * slot expires day 1's admissions from all four indexes, day 3
-    * admits against the RETAINED state — so a day-3 clone of an
-    * expired day-1 doc genuinely re-admits (retention re-opens
-    * admission THROUGH the calendar, the q551 story as a calendar
-    * slot). Decisions for days 1–2 are bit-identical to the plain
-    * chain; day 3's oracle models the interleaved horizon (q569).
-    */
-  def runDays4Calendar(spark: SparkSession, dir: String,
-                       p: Paths4): Unit = {
-    bootstrap4(spark, dir, p)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    (1 to 2).foreach { k =>
-      processDay4(spark, p, k, spark.read.parquet(p.dropDay(k)),
-        fetch): Unit
-    }
-    ttl4Day(spark, p, "ttl2", Seq(1), indexedDocs(spark, p, fetch)): Unit
-    writeDay3Drop(spark, dir, p)
-    processDay4(spark, p, 3, spark.read.parquet(p.dropDay(3)), fetch): Unit
   }
 
   /** All N days' pinned verdicts as one frame. */
@@ -624,18 +522,6 @@ object MultiDay {
       .write.mode("overwrite").parquet(p.dropDay(2))
   }
 
-  /** The batch engine path of the full-stack lifecycle. */
-  def runDays6Batch(spark: SparkSession, dir: String, p: Paths4): Unit = {
-    bootstrap6(spark, dir, p)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    val bench = benchOf(spark, dir)
-    processDay6(spark, p, 1, spark.read.parquet(p.dropDay(1)), fetch,
-      bench): Unit
-    writeDay2Drop6(spark, dir, p)
-    processDay6(spark, p, 2, spark.read.parquet(p.dropDay(2)), fetch,
-      bench): Unit
-  }
-
   /** Both full-stack days' pinned verdicts, all six stage columns. */
   def allDecisions6(spark: SparkSession, p: Paths4): DataFrame =
     allDecisions6Upto(spark, p, 2)
@@ -686,29 +572,6 @@ object MultiDay {
       .write.mode("overwrite").parquet(p.dropDay(3))
   }
 
-  /** The six-stage BATCH CALENDAR (r12 verdict task 3): the proven
-    * two-day full stack verbatim, then the LEDGERED ttl2 retention
-    * slot (expire day 1 from all four indexes), then the
-    * [[writeDay3Drop6Cal]] witness day admitted against the RETAINED
-    * state — N = 3 days with retention interleaved, one oracle across
-    * engines (q572/q574).
-    */
-  def runDays6Calendar(spark: SparkSession, dir: String,
-                       p: Paths4): Unit = {
-    bootstrap6(spark, dir, p)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    val bench = benchOf(spark, dir)
-    processDay6(spark, p, 1, spark.read.parquet(p.dropDay(1)), fetch,
-      bench): Unit
-    writeDay2Drop6(spark, dir, p)
-    processDay6(spark, p, 2, spark.read.parquet(p.dropDay(2)), fetch,
-      bench): Unit
-    ttl4Day(spark, p, "ttl2", Seq(1), indexedDocs(spark, p, fetch)): Unit
-    writeDay3Drop6Cal(spark, dir, p)
-    processDay6(spark, p, 3, spark.read.parquet(p.dropDay(3)), fetch,
-      bench): Unit
-  }
-
   /** RETENTION (TTL) over the multimodal lifecycle — the reference's
     * ring-buffer age-out (src/table_store/table/table.h:335
     * `ExpireRowBatches`) as a lifecycle operation on all FOUR indexes
@@ -718,135 +581,93 @@ object MultiDay {
     * docs"; retention says "remove everything older than T" — the day
     * ledger IS the age record, no per-row timestamp needed). Victims
     * are derived from the pipeline's own pinned decisions
-    * (admission-day age), then:
+    * (admission-day age), then deleted by [[delete4]].
+    *
+    * LEDGERED like the admission days ([[processDay4]]): a committed
+    * TTL day is a pure no-op on replay (returns false) that reads only
+    * the ledger — `corpusDocs` (the indexed-docs text frame the
+    * lexical stillHeld pass scans, usually [[indexedDocs]]) is derived
+    * inside the slot, never for a replay. A TTL that died before its
+    * ledger row re-runs convergently (every step is an overwrite or
+    * anti-join). The gate card pins the ledger content and the replay
+    * no-op.
+    */
+  def ttl4Day(spark: SparkSession, p: Paths4, dayId: String,
+              expireDays: Seq[Int], corpusDocs: => DataFrame): Boolean =
+    Ledger.once(spark, p.ledger, dayId) {
+      val victims = expireDays.map { k =>
+        spark.read.parquet(p.decisionsDay(k))
+          .where(col("decision") === "admitted").select("doc_id")
+      }.reduce(_.unionByName(_)).localCheckpoint(true)
+      delete4(spark, p, corpusDocs, victims)
+    }.isDefined
+
+  /** Delete pinned `victims` from all four indexes:
     *
     *  - lexical: [[Dedup.deleteFromDedupIndex]] (band rows out; a
-    *    content hash leaves only when no RETAINED doc still carries
-    *    it — the stillHeld pass over the surviving indexed docs);
+    *    content hash leaves only when no RETAINED doc of `docs` still
+    *    carries it — the stillHeld pass);
     *  - semantic: [[SemIndex.delete]] (touched cells rewritten);
     *  - image + audio: [[PhashIndex.delete]] (hash-sized rewrites).
     *
     * The media artifact is deliberately NOT pruned: decode-once means
     * an expired asset re-offered later reuses its stored signatures —
     * signatures are pure payload functions, not admission state.
-    * Every step is an overwrite or anti-join ⇒ a crashed TTL re-runs
-    * convergently. `corpusDocs` is the indexed-docs text frame
-    * (snapshot + admitted days) the lexical stillHeld pass scans.
     */
-  /** [[ttl4]] as a LEDGERED maintenance day — the same exactly-once
-    * contract the admission days carry ([[processDay4]]) and the
-    * curation-side retention already has ([[CurationNDay.ttlDay]]):
-    * a committed TTL day is a pure no-op on replay (returns false),
-    * a TTL that died before its ledger row re-runs convergently
-    * (every [[ttl4]] step is an overwrite or anti-join). The gate
-    * card pins the ledger content and the replay no-op.
-    */
-  def ttl4Day(spark: SparkSession, p: Paths4, dayId: String,
-              expireDays: Seq[Int], corpusDocs: DataFrame): Boolean =
-    if (CurationNDay.ledgerSeen(spark, p.ledger, dayId)) false
-    else {
-      ttl4(spark, p, expireDays, corpusDocs)
-      CurationNDay.appendLedger(spark, p.ledger, dayId)
-      true
-    }
-
-  def ttl4(spark: SparkSession, p: Paths4, expireDays: Seq[Int],
-           corpusDocs: DataFrame): Unit = {
-    val victims = expireDays.map { k =>
-      spark.read.parquet(p.decisionsDay(k))
-        .where(col("decision") === "admitted").select("doc_id")
-    }.reduce(_.unionByName(_)).localCheckpoint(true)
+  private def delete4(spark: SparkSession, p: Paths4, docs: DataFrame,
+                      victims: DataFrame): Unit =
     // four disjoint index artifacts, victims pinned — overlap (§2.6)
     graft.core.Par.run(
-      () => Dedup.deleteFromDedupIndex(spark, p.lex, corpusDocs,
-        corpusDocs.join(victims, "doc_id"), "text", "doc_id"),
+      () => Dedup.deleteFromDedupIndex(spark, p.lex, docs,
+        docs.join(victims, "doc_id"), "text", "doc_id"),
       () => SemIndex.delete(spark, p.sem, victims),
       () => PhashIndex.delete(spark, p.ph, victims),
       () => PhashIndex.delete(spark, p.aud, victims))
-  }
 
   /** Retained BYTE mass per admission horizon — the input to the
-    * size-cap trigger ([[cap4Day]]): for every indexed doc (the
-    * lexical band table's own membership via [[indexedDocs]] — so a
-    * doc an earlier slot expired counts zero, exactly "what is in the
-    * ring buffer now"), its text-byte mass bucketed by ADMISSION day
-    * (pinned decisions; day 0 = the snapshot — a member admitted on
-    * no pinned day). The metric is the audio-track payload length —
-    * the byte analog of the reference's byte-capped ring buffer
-    * (src/table_store/table/table.cc:44) on the fixture's one sized
-    * payload column; character length, so any engine re-derives it.
-    * One index-sized pass; the result is one row per day.
+    * size-cap trigger ([[cap4Day]]): [[CurationNDay.massTable]] over
+    * every indexed doc (the lexical band table's own membership via
+    * [[indexedDocs]] — so a doc an earlier slot expired counts zero,
+    * exactly "what is in the ring buffer now"). The metric is the
+    * audio-track payload length — the byte analog of the reference's
+    * byte-capped ring buffer (src/table_store/table/table.cc:44) on
+    * the fixture's one sized payload column; character length, so any
+    * engine re-derives it.
     */
   def retainedMasses(spark: SparkSession, p: Paths4,
                      corpusFetch: DataFrame): Map[Int, Long] =
     massesOf(spark, p, indexedDocs(spark, p, corpusFetch))
 
-  /** [[retainedMasses]] over an already-derived indexed-docs frame —
-    * callers holding one (the cap slot needs the same frame for its
-    * victim derivation) avoid re-deriving it.
-    */
   private def massesOf(spark: SparkSession, p: Paths4,
-                       docs: DataFrame): Map[Int, Long] = {
-    val fs = new org.apache.hadoop.fs.Path(p.root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pinnedDays = (1 to NDays4).filter(k =>
-      fs.exists(new org.apache.hadoop.fs.Path(
-        p.decisionsDay(k) + "/_SUCCESS")))
-    val admDay = pinnedDays.map { k =>
-      spark.read.parquet(p.decisionsDay(k))
-        .where(col("decision") === "admitted")
-        .select(col("doc_id"), lit(k).as("__day"))
-    }.reduceOption(_.unionByName(_))
-    val tagged = admDay match {
-      case Some(d) => docs.join(d, Seq("doc_id"), "left")
-        .withColumn("__day", coalesce(col("__day"), lit(0)))
-      case None => docs.withColumn("__day", lit(0))
-    }
-    val measured = tagged.groupBy("__day")
-      .agg(sum(length(col("text"))).as("m"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    ((0 +: pinnedDays).map(k => k -> measured.getOrElse(k, 0L))).toMap
-  }
+                       docs: DataFrame): Map[Int, Long] =
+    CurationNDay.massTable(spark,
+      docs.select(col("doc_id"), length(col("text")).as("m")),
+      p.decisionsDay, NDays4)
 
   /** SIZE-CAPPED retention over the multimodal lifecycle — the
-    * [[CurationNDay.capDay]] product for the four-index side (the
-    * reference's actual ring-buffer trigger is BYTES, table.cc:44;
-    * the mm side previously had only age-TTL): choose the OLDEST
+    * [[CurationNDay.capDayPinned]] product for the four-index side
+    * (the reference's actual ring-buffer trigger is BYTES,
+    * table.cc:44): [[CurationNDay.horizonOf]] chooses the OLDEST
     * admission horizon whose retained byte mass ([[retainedMasses]])
-    * fits `maxBytes` (whole-day granularity — the row-batch analog;
-    * the snapshot is day 0, so horizon 1 expires the snapshot alone),
-    * PIN the horizon before any mutation (the decision-pin rule for
-    * retention — a replayed calendar slot whose cap committed can
-    * still read what the cap decided), then expire everything older
-    * from all four indexes at once (the [[ttl4]] delete machinery
-    * with membership-derived victims, so the four artifacts stay
-    * consistent views of the capped corpus). An UNDER-CAP corpus
-    * commits as a LEDGERED no-op with horizon 0 (the reference cap
-    * expires only while over); a cap even the newest day alone
-    * exceeds loud-fails (whole-day expiry cannot satisfy it).
-    * Returns the chosen horizon, or 0 for the no-op /
-    * already-committed cases.
+    * fits `maxBytes` (the snapshot is day 0, so horizon 1 expires the
+    * snapshot alone), the horizon is PINNED before any mutation (a
+    * replayed calendar slot whose cap committed can still read what
+    * the cap decided), then everything older leaves all four indexes
+    * at once ([[delete4]] with membership-derived victims). An
+    * UNDER-CAP corpus commits as a LEDGERED no-op with horizon 0; a
+    * cap even the newest day alone exceeds loud-fails. Returns the
+    * chosen horizon, or 0 for the no-op / already-committed cases.
     */
   def cap4Day(spark: SparkSession, p: Paths4, dayId: String,
               maxBytes: Long, corpusFetch: DataFrame): Int =
-    if (CurationNDay.ledgerSeen(spark, p.ledger, dayId)) 0
-    else {
+    Ledger.once(spark, p.ledger, dayId) {
       // derive the membership frame ONCE: the masses and the victim
-      // set both read it (previously re-derived per use)
+      // set both read it
       val docs = indexedDocs(spark, p, corpusFetch).localCheckpoint(true)
       val masses = massesOf(spark, p, docs)
-      val days = masses.keys.toSeq.sorted
-      if (masses.values.sum <= maxBytes) {
-        CurationNDay.pinHorizon(spark, p.capHorizon(dayId), 0)
-        CurationNDay.appendLedger(spark, p.ledger, dayId)
-        0
-      } else {
-        val keepFrom = days.filter(_ >= 1).find { k =>
-          days.filter(_ >= k).map(masses).sum <= maxBytes
-        }.getOrElse(sys.error(
-          s"cap4Day: day ${days.max} alone exceeds the $maxBytes-byte " +
-            "cap — whole-day expiry cannot satisfy it"))
-        CurationNDay.pinHorizon(spark, p.capHorizon(dayId), keepFrom)
+      val keepFrom = CurationNDay.horizonOf(masses, maxBytes, dayId)
+      Ledger.pinHorizon(spark, p.capHorizon(dayId), keepFrom)
+      if (keepFrom > 0) {
         val young = (keepFrom to NDays4)
           .filter(k => masses.contains(k))
           .map { k =>
@@ -856,16 +677,10 @@ object MultiDay {
         val victims = docs.select("doc_id")
           .join(young, Seq("doc_id"), "left_anti")
           .localCheckpoint(true) // age-out set pinned before mutation
-        graft.core.Par.run(
-          () => Dedup.deleteFromDedupIndex(spark, p.lex, docs,
-            docs.join(victims, "doc_id"), "text", "doc_id"),
-          () => SemIndex.delete(spark, p.sem, victims),
-          () => PhashIndex.delete(spark, p.ph, victims),
-          () => PhashIndex.delete(spark, p.aud, victims))
-        CurationNDay.appendLedger(spark, p.ledger, dayId)
-        keepFrom
+        delete4(spark, p, docs, victims)
       }
-    }
+      keepFrom
+    }.getOrElse(0)
 
   /** The FIXTURE cap for the mid-calendar slot: `m2 + m1 / 2` bytes —
     * deterministically BETWEEN tail(2) = m2 and tail(1) = m1 + m2 at
@@ -879,31 +694,6 @@ object MultiDay {
                       corpusFetch: DataFrame): Long = {
     val masses = retainedMasses(spark, p, corpusFetch)
     masses.getOrElse(2, 0L) + masses.getOrElse(1, 0L) / 2L
-  }
-
-  /** The batch SIZE-CAP CALENDAR (the q569 shape with the cap slot in
-    * place of the TTL): days 1–2 admit, the cap2 slot expires to the
-    * pinned horizon (deterministically 2 — snapshot + day 1 out, the
-    * [[capFixtureBytes]] contract), day 3 admits against the capped
-    * indexes (the day-1 clone sentinel genuinely RE-ADMITS — the cap
-    * re-opened admission through the calendar), then an UNDER-CAP
-    * slot (cap3 at exactly the retained mass) commits as a ledgered
-    * no-op — both cap branches witnessed in one lifecycle.
-    */
-  def runDays4CapCalendar(spark: SparkSession, dir: String,
-                          p: Paths4): Unit = {
-    bootstrap4(spark, dir, p)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    (1 to 2).foreach { k =>
-      processDay4(spark, p, k, spark.read.parquet(p.dropDay(k)),
-        fetch): Unit
-    }
-    cap4Day(spark, p, "cap2", capFixtureBytes(spark, p, fetch),
-      fetch): Unit
-    writeDay3Drop(spark, dir, p)
-    processDay4(spark, p, 3, spark.read.parquet(p.dropDay(3)), fetch): Unit
-    cap4Day(spark, p, "cap3",
-      retainedMasses(spark, p, fetch).values.sum, fetch): Unit
   }
 
   /** The four indexes' cards as one long frame — q543's consistency

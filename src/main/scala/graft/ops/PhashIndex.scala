@@ -119,19 +119,8 @@ object PhashIndex {
   def processDay(spark: SparkSession, p: Paths, k: Int,
                  delta: DataFrame, withinBatch: Boolean = false,
                  label: String = "phash"): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(p.decisionsDay(k))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pinned = fs.exists(new org.apache.hadoop.fs.Path(
-      p.decisionsDay(k) + "/_SUCCESS"))
-    val dec =
-      if (pinned)
-        spark.read.parquet(p.decisionsDay(k)).localCheckpoint(true)
-      else {
-        val x = decisions(spark, p, delta, withinBatch, label)
-          .localCheckpoint(true)
-        x.write.mode("overwrite").parquet(p.decisionsDay(k))
-        x
-      }
+    val dec = graft.core.Ledger.pin(spark, p.decisionsDay(k))(
+      decisions(spark, p, delta, withinBatch, label))
     append(spark, p,
       hashRows(delta).join(
         dec.where(col("decision") === "admitted").select("media_id"),

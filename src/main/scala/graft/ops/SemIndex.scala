@@ -166,25 +166,15 @@ object SemIndex {
   /** One semantic day: decisions PINNED before the index mutation,
     * admitted vectors appended. Same replay contract as
     * [[CurationNDay.processDayBody]]: a re-run whose pin completed
-    * (`_SUCCESS` present) REUSES it — recomputing against an index
+    * ([[graft.core.Ledger.pin]]) REUSES it — recomputing against an index
     * that already absorbed this day's own vectors would flag every
     * prior admission as its own semantic dup — and the append is
     * anti-joined, so a replayed day converges to the identical state.
     */
   def processDay(spark: SparkSession, p: Paths, k: Int,
                  delta: DataFrame): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(p.decisionsDay(k))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pinned = fs.exists(new org.apache.hadoop.fs.Path(
-      p.decisionsDay(k) + "/_SUCCESS"))
-    val dec =
-      if (pinned)
-        spark.read.parquet(p.decisionsDay(k)).localCheckpoint(true)
-      else {
-        val d = decisions(spark, p, delta).localCheckpoint(true)
-        d.write.mode("overwrite").parquet(p.decisionsDay(k))
-        d
-      }
+    val dec = graft.core.Ledger.pin(spark, p.decisionsDay(k))(
+      decisions(spark, p, delta))
     append(spark, p,
       dec.where(col("decision") === "admitted").select("vec_id")
         .join(delta, "vec_id"))

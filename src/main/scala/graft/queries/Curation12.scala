@@ -41,7 +41,8 @@ object Curation12 {
 
   private val mmBatch = Fixture.rooted("graft_mm_batch_") { (s, d, root) =>
     val p = MultiDay.Paths4(root)
-    MultiDay.runDays4Batch(s, d, p)
+    graft.streaming.MultiStream.batch(s, d, p,
+      graft.streaming.MultiStream.DaysCal)
     p
   }
 
@@ -130,8 +131,7 @@ object Curation12 {
         graft.ops.MediaHashes.fetchAudio(s, p.media, ids1),
         docs)
       .localCheckpoint(true)
-    (p, reoffer, replayNoOp,
-      CurationNDay.ledgerDays(s, p.ledger))
+    (p, reoffer, replayNoOp, graft.core.Ledger.ids(s, p.ledger))
   }
 
   /** TTL on the curation N-day lifecycle, on a FRESH batch root (the
@@ -143,7 +143,8 @@ object Curation12 {
     */
   private val ttlLife = Fixture.rooted("graft_curation_ttl_") { (s, d, root) =>
     val a = graft.ops.CurationDay.Artifacts(root)
-    CurationNDay.runDaysBatch(s, d, a)
+    graft.streaming.CurationStream.batch(s, d, a,
+      graft.streaming.CurationStream.DaysCal)
     val pre = s.read.parquet(a.corpusDir).localCheckpoint(true)
     CurationNDay.ttlDay(s, a, "ttl1", keepFromDay = 2,
       a.manifestDay(CurationNDay.NDays), a.manifestRetract(1)): Unit
@@ -161,39 +162,45 @@ object Curation12 {
     (a, dec)
   }
 
-  /** The maintained batch lifecycle (compactions interleaved between
-    * days — lexical tables, semantic cells, media artifact): a third
-    * engine path whose decisions must equal the same composed oracle.
+  /** The maintained batch lifecycle (ledgered compact slots
+    * `compact1`/`compact2` interleaved between days — lexical tables,
+    * semantic cells, media artifact): a third engine path whose
+    * decisions must equal the same composed oracle (q558 reads only
+    * this root's decisions).
     */
   private val mmMaintained = Fixture.rooted("graft_mm_maint_") { (s, d, root) =>
     val p = MultiDay.Paths4(root)
-    MultiDay.runDays4BatchMaintained(s, d, p)
+    graft.streaming.MultiStream.batch(s, d, p,
+      graft.streaming.MultiStream.CompactCal)
     p
   }
 
   /** SIZE-capped retention on its own fresh lifecycle (pack layouts
-    * must be intact — the masses are read from them). The gate's cap
+    * must be intact — the caps are read from them; the horizon comes
+    * from the decision-pinned masses, equal to the pack masses before
+    * any tape rebuild). The gate's cap
     * is SCALE-PROPORTIONAL — 55% of the total admitted token mass,
     * exact integer arithmetic both engines derive from the same
     * persisted masses — so the horizon decision is genuinely computed
     * at every sf (on the sf0.01 fixture: total 12560, cap 6908, tail
     * masses 9827 > 6908 ≥ 6502 ⇒ keepFrom = 3) and the q557 row
-    * never trips [[CurationNDay.capDay]]'s newest-day loud-fail on a
+    * never trips [[CurationNDay.capDayPinned]]'s newest-day loud-fail on a
     * bigger fixture the way a fixture-sized absolute cap would.
     */
   private val capLife = Fixture.rooted("graft_curation_cap_") { (s, d, root) =>
     val a = graft.ops.CurationDay.Artifacts(root)
-    CurationNDay.runDaysBatch(s, d, a)
+    graft.streaming.CurationStream.batch(s, d, a,
+      graft.streaming.CurationStream.DaysCal)
     def mass(k: Int): Long = CurationNDay.packMass(s, a, k)
     // the UNDER-CAP check first (q578): a cap covering the WHOLE
     // retained mass — day-0 snapshot included — must commit as a
     // ledgered no-op and expire nothing
     val total0 = (0 to CurationNDay.NDays).map(mass).sum
-    val k0 = CurationNDay.capDay(s, a, "cap0", maxTokens = total0,
+    val k0 = CurationNDay.capDayPinned(s, a, "cap0", maxTokens = total0,
       a.manifestDay(CurationNDay.NDays), s"$root/m_noop")
     require(k0 == 0, s"capLife: under-cap check expired days ($k0)")
     val total = (1 to CurationNDay.NDays).map(mass).sum
-    val k = CurationNDay.capDay(s, a, "cap1",
+    val k = CurationNDay.capDayPinned(s, a, "cap1",
       maxTokens = total * 55L / 100L,
       a.manifestDay(CurationNDay.NDays), a.manifestRetract(1))
     (a, k)
@@ -211,7 +218,8 @@ object Curation12 {
     */
   private[queries] val mm6 = Fixture.rooted("graft_mm6_") { (s, d, root) =>
     val p = MultiDay.Paths4(root)
-    MultiDay.runDays6Batch(s, d, p)
+    graft.streaming.MultiStream.batch(s, d, p,
+      graft.streaming.MultiStream.Days6Cal)
     p
   }
 

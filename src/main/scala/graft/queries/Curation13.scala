@@ -70,7 +70,8 @@ object Curation13 {
     */
   private val mmCalBatch = Fixture.rooted("graft_mm_calb_") { (s, d, root) =>
     val p = graft.ops.MultiDay.Paths4(root)
-    graft.ops.MultiDay.runDays4Calendar(s, d, p)
+    graft.streaming.MultiStream.batch(s, d, p,
+      graft.streaming.MultiStream.TtlCal)
     p
   }
 
@@ -80,7 +81,8 @@ object Curation13 {
     */
   private val mm6Cal = Fixture.rooted("graft_mm6_cal_") { (s, d, root) =>
     val p = graft.ops.MultiDay.Paths4(root)
-    graft.ops.MultiDay.runDays6Calendar(s, d, p)
+    graft.streaming.MultiStream.batch(s, d, p,
+      graft.streaming.MultiStream.Ttl6Cal)
     p
   }
 
@@ -173,7 +175,7 @@ object Curation13 {
       s.read.parquet(a.manifestDay(graft.ops.CurationNDay.NDays))
         .withColumn("keep_from_day", lit(0L))
         .withColumn("ledger_days",
-          lit(graft.ops.CurationNDay.ledgerDays(s, a.ledger)
+          lit(graft.core.Ledger.ids(s, a.ledger)
             .mkString(",")))
         .orderBy("shard")
     }),

@@ -36,7 +36,8 @@ object Curation14 {
     */
   private val capBatch = Fixture.rooted("graft_mm_capb_") { (s, d, root) =>
     val p = MultiDay.Paths4(root)
-    MultiDay.runDays4CapCalendar(s, d, p)
+    graft.streaming.MultiStream.batch(s, d, p,
+      graft.streaming.MultiStream.CapCal)
     p
   }
 
@@ -146,12 +147,12 @@ object Curation14 {
     "q588_mm_cap_cards" -> ((s, dir) => {
       val p = capBatch(s, dir)
       def horizon(id: String): Long =
-        graft.ops.CurationNDay.readHorizon(s, p.capHorizon(id)).toLong
+        graft.core.Ledger.horizon(s, p.capHorizon(id)).toLong
       MultiDay.indexCards4(s, p)
         .withColumn("keep_from_2", lit(horizon("cap2")))
         .withColumn("keep_from_3", lit(horizon("cap3")))
         .withColumn("ledger_days",
-          lit(graft.ops.CurationNDay.ledgerDays(s, p.ledger)
+          lit(graft.core.Ledger.ids(s, p.ledger)
             .mkString(",")))
         .orderBy("modality", "metric")
     }),

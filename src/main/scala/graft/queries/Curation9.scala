@@ -12,8 +12,10 @@ import graft.queries.Q._
   * `foreachBatch` invokes the ledger-gated
   * [[graft.ops.CurationNDay.processDay]] — WITH a kill/restart
   * between days 2 and 3 and a replayed-committed-day no-op witnessed
-  * inside the run — while [[graft.ops.CurationNDay.runDaysBatch]]
-  * applies the identical days in a plain driver loop. q505/q508 gate
+  * inside the run — while the batch interpreter
+  * ([[graft.streaming.CurationStream.batch]]) applies the SAME
+  * calendar value ([[graft.streaming.CurationStream.DaysCal]]) in a
+  * plain driver loop. q505/q508 gate
   * both paths' full decision ledgers, q506/q509 both final manifests,
   * against ONE full-recompute DuckDB re-derivation of the
   * four-times-grown corpus; q507 gates the day-4 persisted-state
@@ -40,7 +42,7 @@ object Curation9 {
   /** The BATCH N-day lifecycle over the same day splits. */
   private val nDayBatch = Fixture.rooted("graft_curation_nday_") { (s, d, root) =>
     val a = CurationDay.Artifacts(root)
-    CurationNDay.runDaysBatch(s, d, a)
+    CurationStream.batch(s, d, a, CurationStream.DaysCal)
     a
   }
 

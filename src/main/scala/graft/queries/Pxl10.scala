@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.pxl.PxlRunner
 import graft.functions.ProtocolOps
 import Q._
+import PxlGate._
 
 /** Round-6 verbatim-widget tranche, part 1: the remaining vis.json widget
   * functions of the DB-stats family (mysql/pgsql/redis/cql) — latency
@@ -20,22 +21,6 @@ import Q._
   * re-scans or collects.
   */
 object Pxl10 {
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-
-  private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-  private val startNs = nowNs - 45L * 86400L * 1000000000L
-  private val splitNs = graft.functions.PixieFunctions.tsNsLit("2024-01-15")
-
-  /** Mean-of-noninteger-doubles canonicalization (q123 convention):
-    * round at 9 dp in per-window units then rescale, identically in both
-    * engines, because partial-sum order makes the last ulp engine-
-    * specific.
-    */
-  private def canon(c: String) =
-    round(col(c) * 1e10, 9) / 1e10
 
   val queries: Map[String, QFn] = Map(
     // mysql_stats latency_histogram: 5ms-binned latency counts over the
@@ -106,13 +91,6 @@ object Pxl10 {
   )
 
   // ---- oracles -------------------------------------------------------
-
-  private def eventsCte: String =
-    s"""e AS (SELECT epoch_us(ts) * 1000 AS t, epoch_us(ts) AS us, user_id,
-       |        event_id, value,
-       |        CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 0 ELSE 1 END AS g
-       |      FROM events WHERE epoch_us(ts) * 1000 >= $startNs
-       |        AND epoch_us(ts) * 1000 < $nowNs)""".stripMargin
 
   /** add_source_dest_columns over the tracerBase synth (q133 shape). */
   private val sourceDestCte =

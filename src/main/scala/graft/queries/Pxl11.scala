@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.pxl.PxlRunner
 import Q._
+import PxlGate._
 
 /** Round-6 verbatim-widget tranche, part 2: service_stats edge widgets
   * (latency histogram, incoming/outgoing edge summaries, svc_graph),
@@ -19,21 +20,10 @@ import Q._
   */
 object Pxl11 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
   val ServiceStatsPath = s"$RefPx/service_stats/service_stats.pxl"
   val PodPath = s"$RefPx/pod/pod.pxl"
   val IpPath = s"$RefPx/ip/ip.pxl"
   val JvmStatsPath = s"$RefPx/jvm_stats/jvm_stats.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-
-  private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-  private val startNs = nowNs - 45L * 86400L * 1000000000L
-  private val splitNs = graft.functions.PixieFunctions.tsNsLit("2024-01-15")
-
-  private def canon(c: String) = round(col(c) * 1e10, 9) / 1e10
 
   val queries: Map[String, QFn] = Map(
     // service_stats latency_histogram: 50ms bins over the health/ready/
@@ -108,13 +98,6 @@ object Pxl11 {
   )
 
   // ---- oracles -------------------------------------------------------
-
-  private def eventsCte: String =
-    s"""e AS (SELECT epoch_us(ts) * 1000 AS t, epoch_us(ts) AS us, user_id,
-       |        event_id, value,
-       |        CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 0 ELSE 1 END AS g
-       |      FROM events WHERE epoch_us(ts) * 1000 >= $startNs
-       |        AND epoch_us(ts) * 1000 < $nowNs)""".stripMargin
 
   /** The service_stats http filter: no health/ready checks, no
     * unresolved ('-') requesters.

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.pxl.PxlRunner
 import Q._
+import PxlGate._
 
 /** Round-6 verbatim-widget tranche 3 — DB-family completions: the
   * cql/pgsql/pod_edge latency histograms, the four flow-graph
@@ -19,18 +20,7 @@ import Q._
   */
 object Pxl12 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
   val TracepointsPath = s"$RefPx/tracepoint_status/tracepoint_status.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-
-  private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-  private val startNs = nowNs - 45L * 86400L * 1000000000L
-  private val splitNs = graft.functions.PixieFunctions.tsNsLit("2024-01-15")
-
-  private def canon(c: String) = round(col(c) * 1e10, 9) / 1e10
 
   val queries: Map[String, QFn] = Map(
     // cql_stats latency_histogram: 50ms bins over all cql traffic (pod
@@ -105,13 +95,6 @@ object Pxl12 {
   )
 
   // ---- oracles -------------------------------------------------------
-
-  private def eventsCte: String =
-    s"""e AS (SELECT epoch_us(ts) * 1000 AS t, epoch_us(ts) AS us, user_id,
-       |        event_id, value,
-       |        CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 0 ELSE 1 END AS g
-       |      FROM events WHERE epoch_us(ts) * 1000 >= $startNs
-       |        AND epoch_us(ts) * 1000 < $nowNs)""".stripMargin
 
   /** px.script_reference deep link for flow-graph endpoints (pod vs ip
     * target — q158/q179 convention, struct-declaration key order).

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.pxl.PxlRunner
 import Q._
+import PxlGate._
 
 /** Round-6 verbatim-widget tranche 4 — amqp + kafka completions:
   * amqp_data's stats/pod-list/flow-graph widgets, kafka_overview's
@@ -19,20 +20,11 @@ import Q._
   */
 object Pxl13 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
   val KafkaOverviewPath = s"$RefPx/kafka_overview/kafka_overview.pxl"
   val KafkaPCLatencyPath =
     s"$RefPx/kafka_producer_consumer_latency/kafka_producer_consumer_latency.pxl"
   val KafkaRebalPath =
     s"$RefPx/kafka_consumer_rebalancing/kafka_consumer_rebalancing.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-
-  private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-  private val startNs = nowNs - 45L * 86400L * 1000000000L
-  private val splitNs = graft.functions.PixieFunctions.tsNsLit("2024-01-15")
 
   val queries: Map[String, QFn] = Map(
     // amqp_average_stats: Content Header frames only; body_size plucks
@@ -110,13 +102,6 @@ object Pxl13 {
   )
 
   // ---- oracles -------------------------------------------------------
-
-  private def eventsCte: String =
-    s"""e AS (SELECT epoch_us(ts) * 1000 AS t, epoch_us(ts) AS us, user_id,
-       |        event_id, value,
-       |        CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 0 ELSE 1 END AS g
-       |      FROM events WHERE epoch_us(ts) * 1000 >= $startNs
-       |        AND epoch_us(ts) * 1000 < $nowNs)""".stripMargin
 
   /** Tracer source/destination CTE (q171/q173 shape). */
   private def srcDstCte: String =

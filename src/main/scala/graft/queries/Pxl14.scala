@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.pxl.PxlRunner
 import Q._
+import PxlGate._
 
 /** Round-6 verbatim-widget tranche 5 — pod/pods/service LET widgets:
   * pod.pxl's inbound latency timeseries, per-container request
@@ -17,19 +18,8 @@ import Q._
   */
 object Pxl14 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
   val PodsPath = s"$RefPx/pods/pods.pxl"
   val ServicePath = s"$RefPx/service/service.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-
-  private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-  private val startNs = nowNs - 45L * 86400L * 1000000000L
-  private val splitNs = graft.functions.PixieFunctions.tsNsLit("2024-01-15")
-
-  private def canon(c: String) = round(col(c) * 1e10, 9) / 1e10
 
   val queries: Map[String, QFn] = Map(
     // pod.pxl inbound_latency_timeseries: per-10s floored quantiles over
@@ -97,13 +87,6 @@ object Pxl14 {
   )
 
   // ---- oracles -------------------------------------------------------
-
-  private def eventsCte: String =
-    s"""e AS (SELECT epoch_us(ts) * 1000 AS t, epoch_us(ts) AS us, user_id,
-       |        event_id, value,
-       |        CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 0 ELSE 1 END AS g
-       |      FROM events WHERE epoch_us(ts) * 1000 >= $startNs
-       |        AND epoch_us(ts) * 1000 < $nowNs)""".stripMargin
 
   /** pod-7-gen1 inbound (server-traced) non-health rows. */
   private val pod7InboundCte =

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.pxl.PxlRunner
 import Q._
+import PxlGate._
 
 /** Round-6 verbatim-widget tranche 6 — the pxviews graph family:
   * services.pxl's inbound summary + service graph, namespace.pxl's
@@ -21,22 +22,12 @@ import Q._
   */
 object Pxl15 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
   val ServicesPath = s"$RefPx/services/services.pxl"
   val NamespacePath = s"$RefPx/namespace/namespace.pxl"
   val ClusterPath = s"$RefPx/cluster/cluster.pxl"
   val HeapsPath = s"$RefPx/collect_agent_heaps/collect_agent_heaps.pxl"
 
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-
-  private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-  private val startNs = nowNs - 45L * 86400L * 1000000000L
-  private val splitNs = graft.functions.PixieFunctions.tsNsLit("2024-01-15")
   private val windowNs = 45L * 86400L * 1000000000L
-
-  private def canon(c: String) = round(col(c) * 1e10, 9) / 1e10
 
   val queries: Map[String, QFn] = Map(
     // services.pxl inbound_let_summary: requesting-entity rollup with
@@ -101,13 +92,6 @@ object Pxl15 {
   )
 
   // ---- oracles -------------------------------------------------------
-
-  private def eventsCte: String =
-    s"""e AS (SELECT epoch_us(ts) * 1000 AS t, epoch_us(ts) AS us, user_id,
-       |        event_id, value,
-       |        CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 0 ELSE 1 END AS g
-       |      FROM events WHERE epoch_us(ts) * 1000 >= $startNs
-       |        AND epoch_us(ts) * 1000 < $nowNs)""".stripMargin
 
   /** The ns1 helper rows: resolved, non-health, BOTH trace roles. */
   private val ns1HelperCte =

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.pxl.PxlRunner
 import Q._
+import PxlGate._
 
 /** Round-6 verbatim-script tranche 7 — beyond the px/ bundle: the
   * pxbeta service-endpoint scripts (request-path clustering through
@@ -29,14 +30,6 @@ object Pxl16 {
   val EndpointPath = s"$RefScripts/pxbeta/service_endpoint/service_endpoint.pxl"
   val DnsFilteredPath = s"$RefScripts/sotw/dns_queries_filtered/data.pxl"
   val FqdnListPath = s"$RefScripts/sotw/dns_external_fqdn_list/data.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-
-  private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-  private val startNs = nowNs - 45L * 86400L * 1000000000L
-  private val splitNs = graft.functions.PixieFunctions.tsNsLit("2024-01-15")
 
   val queries: Map[String, QFn] = Map(
     // service_endpoints endpoints: the clustered endpoint catalog with
@@ -96,13 +89,6 @@ object Pxl16 {
   )
 
   // ---- oracles -------------------------------------------------------
-
-  private def eventsCte: String =
-    s"""e AS (SELECT epoch_us(ts) * 1000 AS t, epoch_us(ts) AS us, user_id,
-       |        event_id, value,
-       |        CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 0 ELSE 1 END AS g
-       |      FROM events WHERE epoch_us(ts) * 1000 >= $startNs
-       |        AND epoch_us(ts) * 1000 < $nowNs)""".stripMargin
 
   /** svc-1 inbound rows (flags are all False in the pxbeta scripts —
     * health/ready/unresolved rows stay) with the sf-adaptive endpoint.

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.pxl.PxlRunner
 import Q._
+import PxlGate._
 
 /** Round-4 verbatim-script tranche: the highest-traffic bundled scripts
   * that had no gate entry — pods.pxl, service.pxl, cluster.pxl (through
@@ -19,7 +20,6 @@ import Q._
   */
 object Pxl2 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
   val PodsPxlPath = s"$RefPx/pods/pods.pxl"
   val ServicePxlPath = s"$RefPx/service/service.pxl"
   val ClusterPxlPath = s"$RefPx/cluster/cluster.pxl"
@@ -33,14 +33,6 @@ object Pxl2 {
   val MuxDataPxlPath = s"$RefPx/mux_data/data.pxl"
   val NatsDataPxlPath = s"$RefPx/nats_data/nats_data.pxl"
   val KafkaDataPxlPath = s"$RefPx/kafka_data/kafka_data.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-
-  private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-  private val startNs = nowNs - 45L * 86400L * 1000000000L
-  private val splitNs = graft.functions.PixieFunctions.tsNsLit("2024-01-15")
 
   val queries: Map[String, QFn] = Map(
     // pods.pxl `pods`: container->pod rollup with pod_name_to_start_time/

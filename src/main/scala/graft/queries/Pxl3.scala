@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.pxl.PxlRunner
 import graft.sources.CatalogUdtfs
 import Q._
+import PxlGate._
 
 /** Round-4 verbatim-script tranche 2: the UDTF-driven admin scripts
   * (agent_status, schemas, funcs, tracepoint_status), the Stirling
@@ -19,7 +20,6 @@ import Q._
   */
 object Pxl3 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
   val AgentStatusPath = s"$RefPx/agent_status/agent_status.pxl"
   val SchemasPath = s"$RefPx/schemas/schemas.pxl"
   val FuncsPath = s"$RefPx/funcs/funcs.pxl"
@@ -28,14 +28,6 @@ object Pxl3 {
   val HttpFilteredPath = s"$RefPx/http_data_filtered/data.pxl"
   val HttpPostPath = s"$RefPx/http_post_requests/data.pxl"
   val UpidsPath = s"$RefPx/upids/upids.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-
-  private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-  private val startNs = nowNs - 45L * 86400L * 1000000000L
-  private val splitNs = graft.functions.PixieFunctions.tsNsLit("2024-01-15")
 
   val queries: Map[String, QFn] = Map(
     // agent_status.pxl: top-level px.display(px.GetAgentStatus()).
@@ -151,14 +143,6 @@ object Pxl3 {
       "lang" -> "VARCHAR", "source" -> "VARCHAR", "n_chars" -> "BIGINT"),
     "embeddings" -> Seq("vec_id" -> "BIGINT", "embedding" -> "FLOAT[]",
       "label" -> "INTEGER"))
-
-  /** Shared event-window CTE (Pxl2 convention): g = generation. */
-  private def eventsCte: String =
-    s"""e AS (SELECT epoch_us(ts) * 1000 AS t, epoch_us(ts) AS us, user_id,
-       |        event_id, value,
-       |        CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 0 ELSE 1 END AS g
-       |      FROM events WHERE epoch_us(ts) * 1000 >= $startNs
-       |        AND epoch_us(ts) * 1000 < $nowNs)""".stripMargin
 
   private val statusSql =
     """CASE event_id % 3 WHEN 0 THEN 'OK' WHEN 1 THEN 'INTERNAL'

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.pxl.PxlRunner
 import graft.functions.ProtocolOps
 import Q._
+import PxlGate._
 
 /** Round-5 verbatim-script tranche: the flow-graph family
   * (net/dns/mysql/pgsql/cql/redis), the protocol stats family
@@ -23,7 +24,6 @@ import Q._
   */
 object Pxl4 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
   val NetFlowPath = s"$RefPx/net_flow_graph/net_flow_graph.pxl"
   val DnsFlowPath = s"$RefPx/dns_flow_graph/dns_flow_graph.pxl"
   val MysqlFlowPath = s"$RefPx/mysql_flow_graph/mysql_flow_graph.pxl"
@@ -37,14 +37,6 @@ object Pxl4 {
   val KafkaOverviewPath = s"$RefPx/kafka_overview/kafka_overview.pxl"
   val AmqpDataPath = s"$RefPx/amqp_data/amqp_data.pxl"
   val FlamegraphPath = s"$RefPx/perf_flamegraph/flamegraph.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-
-  private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-  private val startNs = nowNs - 45L * 86400L * 1000000000L
-  private val splitNs = graft.functions.PixieFunctions.tsNsLit("2024-01-15")
 
   /** Float-ulp canonicalization for the flow-graph rollup's
     * request_throughput (a MEAN over per-window count/window_ns doubles):
@@ -168,14 +160,6 @@ object Pxl4 {
   )
 
   // ---- oracles -------------------------------------------------------
-
-  /** Shared event-window CTE: g = pod generation, us = µs timestamp. */
-  private def eventsCte: String =
-    s"""e AS (SELECT epoch_us(ts) * 1000 AS t, epoch_us(ts) AS us, user_id,
-       |        event_id, value,
-       |        CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 0 ELSE 1 END AS g
-       |      FROM events WHERE epoch_us(ts) * 1000 >= $startNs
-       |        AND epoch_us(ts) * 1000 < $nowNs)""".stripMargin
 
   /** The tracerBase self-IP (the event's own pod incarnation). */
   private val selfIpSql =

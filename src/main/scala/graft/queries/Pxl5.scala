@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.pxl.PxlRunner
 import Q._
+import PxlGate._
 
 /** Round-5 verbatim-script tranche 2: the node/namespace/service
   * drill-down family (nodes.pxl, node.pxl via the real pxviews module,
@@ -21,7 +22,6 @@ import Q._
   */
 object Pxl5 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
   val NodesPath = s"$RefPx/nodes/nodes.pxl"
   val NodePath = s"$RefPx/node/node.pxl"
   val NamespacePath = s"$RefPx/namespace/namespace.pxl"
@@ -29,14 +29,6 @@ object Pxl5 {
   val SlowRequestsPath = s"$RefPx/slow_http_requests/slow_http_requests.pxl"
   val InboundConnsPath = s"$RefPx/inbound_conns/data.pxl"
   val OutboundConnsPath = s"$RefPx/outbound_conns/data.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-
-  private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-  private val startNs = nowNs - 45L * 86400L * 1000000000L
-  private val splitNs = graft.functions.PixieFunctions.tsNsLit("2024-01-15")
 
   /** Float-ulp canonicalization (Pxl4.canonThroughput convention) for
     * sums/means of per-window counter-delta rates: integer-valued after
@@ -173,13 +165,6 @@ object Pxl5 {
   )
 
   // ---- oracles -------------------------------------------------------
-
-  private def eventsCte: String =
-    s"""e AS (SELECT epoch_us(ts) * 1000 AS t, epoch_us(ts) AS us, user_id,
-       |        event_id, value,
-       |        CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 0 ELSE 1 END AS g
-       |      FROM events WHERE epoch_us(ts) * 1000 >= $startNs
-       |        AND epoch_us(ts) * 1000 < $nowNs)""".stripMargin
 
   private val podStatusSql =
     """CASE user_id % 4 WHEN 0 THEN 'Running' WHEN 1 THEN 'Pending'

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.pxl.PxlRunner
 import Q._
+import PxlGate._
 
 /** Round-5 verbatim-script tranche 3: dns_query_summary (DNS body
   * parsing + per-resolver rollup), the raw network_stats viewer, the
@@ -19,26 +20,12 @@ import Q._
   */
 object Pxl6 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
   val DnsQuerySummaryPath = s"$RefPx/dns_query_summary/dns_query_summary.pxl"
   val NetworkStatsPath = s"$RefPx/network_stats/stats.pxl"
   val ServiceResourcePath = s"$RefPx/service_resource_usage/usage.pxl"
   val PodMemoryPath = s"$RefPx/pod_memory_usage/pod.pxl"
   val MostHttpPath = s"$RefPx/most_http_data/data.pxl"
   val LargestHttpPath = s"$RefPx/largest_http_request/data.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-
-  private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-  private val startNs = nowNs - 45L * 86400L * 1000000000L
-  private val splitNs = graft.functions.PixieFunctions.tsNsLit("2024-01-15")
-
-  /** Deterministic "now" pinned at the fixture tail (q65 convention),
-    * memoized per (context, dataset) in [[Q.tailNowNs]]. */
-  private def tailNow(s: org.apache.spark.sql.SparkSession, dir: String): Long =
-    Q.tailNowNs(s, dir)
 
   val queries: Map[String, QFn] = Map(
     // dns_query_summary.pxl: pluck the queries/answers arrays, parse the
@@ -52,7 +39,7 @@ object Pxl6 {
     // network_stats.pxl: raw select= projection + head over the -30s tail.
     "q153_pxl_network_stats_raw" -> ((s, dir) =>
       PxlRunner.run(script(NetworkStatsPath),
-          Pxl.env(s, dir, tailNow(s, dir)))("output")
+          Pxl.env(s, dir, tailNowNs(s, dir)))("output")
         .orderBy("time_")),
 
     // service_resource_usage.pxl services_for_cluster: process rollup
@@ -72,32 +59,25 @@ object Pxl6 {
     // -1m tail; spaced output column names.
     "q155_pxl_pod_memory" -> ((s, dir) =>
       PxlRunner.run(script(PodMemoryPath),
-          Pxl.env(s, dir, tailNow(s, dir)))("output")
+          Pxl.env(s, dir, tailNowNs(s, dir)))("output")
         .orderBy("pod", "timestamp")),
 
     // most_http_data.pxl: global-max agg self-merged back (get_max_elm)
     // onto the per-(pod, path) byte sums.
     "q156_pxl_most_http_data" -> ((s, dir) =>
       PxlRunner.run(script(MostHttpPath),
-          Pxl.env(s, dir, tailNow(s, dir)))("max_path_pod")
+          Pxl.env(s, dir, tailNowNs(s, dir)))("max_path_pod")
         .orderBy("pod", "req_path")),
 
     // largest_http_request.pxl: same max-row pattern at row level, then
     // the per-(pod, path, size) request count.
     "q157_pxl_largest_http" -> ((s, dir) =>
       PxlRunner.run(script(LargestHttpPath),
-          Pxl.env(s, dir, tailNow(s, dir)))("number of reqs")
+          Pxl.env(s, dir, tailNowNs(s, dir)))("number of reqs")
         .orderBy("pod", "req_path"))
   )
 
   // ---- oracles -------------------------------------------------------
-
-  private def eventsCte: String =
-    s"""e AS (SELECT epoch_us(ts) * 1000 AS t, epoch_us(ts) AS us, user_id,
-       |        event_id, value,
-       |        CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 0 ELSE 1 END AS g
-       |      FROM events WHERE epoch_us(ts) * 1000 >= $startNs
-       |        AND epoch_us(ts) * 1000 < $nowNs)""".stripMargin
 
   /** Tail-window CTE for the quick-look scripts (now = max event + 1µs). */
   private def tailCte(windowNs: Long): String =

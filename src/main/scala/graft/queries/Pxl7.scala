@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.pxl.PxlRunner
 import Q._
+import PxlGate._
 
 /** Round-5 verbatim-script tranche 4: the normalized-SQL LET scripts
   * (sql_queries, sql_query — px.normalize_pgsql/mysql struct plucking
@@ -16,22 +17,10 @@ import Q._
   */
 object Pxl7 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
   val SqlQueriesPath = s"$RefPx/sql_queries/normed_sql_queries.pxl"
   val SqlQueryPath = s"$RefPx/sql_query/normed_sql_query.pxl"
   val JvmDataPath = s"$RefPx/jvm_data/stats.pxl"
   val AgentDiagPath = s"$RefPx/agent_status_diagnostics/agent_status.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-
-  private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-  private val startNs = nowNs - 45L * 86400L * 1000000000L
-  private val splitNs = graft.functions.PixieFunctions.tsNsLit("2024-01-15")
-
-  private def tailNow(s: org.apache.spark.sql.SparkSession, dir: String): Long =
-    Q.tailNowNs(s, dir)
 
   val queries: Map[String, QFn] = Map(
     // sql_queries: normalize pgsql Query/Execute + mysql COM_QUERY/
@@ -52,7 +41,7 @@ object Pxl7 {
     // upid_to_pid/cmdline scalars.
     "q160_pxl_jvm_data" -> ((s, dir) =>
       PxlRunner.run(script(JvmDataPath),
-          Pxl.env(s, dir, tailNow(s, dir)))("output")
+          Pxl.env(s, dir, tailNowNs(s, dir)))("output")
         .orderBy("time_", "pid")),
 
     // agent_status_diagnostics: UDTF source with a bool arg + global agg.
@@ -61,13 +50,6 @@ object Pxl7 {
   )
 
   // ---- oracles -------------------------------------------------------
-
-  private def eventsCte: String =
-    s"""e AS (SELECT epoch_us(ts) * 1000 AS t, epoch_us(ts) AS us, user_id,
-       |        event_id, value,
-       |        CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 0 ELSE 1 END AS g
-       |      FROM events WHERE epoch_us(ts) * 1000 >= $startNs
-       |        AND epoch_us(ts) * 1000 < $nowNs)""".stripMargin
 
   /** pg + mysql normalized-query streams (sql_queries/sql_query shape).
     * The synth queries carry one id literal, so normalization yields

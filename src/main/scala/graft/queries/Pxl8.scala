@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.pxl.PxlRunner
 import Q._
+import PxlGate._
 
 /** Round-5 verbatim-script tranche 5: pod_lifetime_resource,
   * pixie_quality_metrics (latency sanity counters), the edge-stats
@@ -18,41 +19,29 @@ import Q._
   */
 object Pxl8 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
   val PodLifetimePath = s"$RefPx/pod_lifetime_resource/resource.pxl"
   val QualityPath = s"$RefPx/pixie_quality_metrics/pixie_quality_metrics.pxl"
   val PodEdgePath = s"$RefPx/pod_edge_stats/pod_edge_stats.pxl"
   val SvcEdgePath = s"$RefPx/service_edge_stats/service_edge_stats.pxl"
   val IpPath = s"$RefPx/ip/ip.pxl"
 
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-
-  private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-  private val startNs = nowNs - 45L * 86400L * 1000000000L
-  private val splitNs = graft.functions.PixieFunctions.tsNsLit("2024-01-15")
-
-  private def tailNow(s: org.apache.spark.sql.SparkSession, dir: String): Long =
-    Q.tailNowNs(s, dir)
-
   val queries: Map[String, QFn] = Map(
     // pod_lifetime_resource: whole-lifetime (not windowed) per-pod
     // resource totals with spaced display names.
     "q162_pxl_pod_lifetime" -> ((s, dir) =>
       PxlRunner.run(script(PodLifetimePath),
-          Pxl.env(s, dir, tailNow(s, dir)))("output")
+          Pxl.env(s, dir, tailNowNs(s, dir)))("output")
         .orderBy("pod_name")),
 
     // pixie_quality_metrics: latency sanity counters (huge/negative)
     // over http and mysql tracer tables.
     "q163_pxl_quality_http" -> ((s, dir) =>
       PxlRunner.run(script(QualityPath),
-          Pxl.env(s, dir, tailNow(s, dir)))("http_latencies")),
+          Pxl.env(s, dir, tailNowNs(s, dir)))("http_latencies")),
 
     "q164_pxl_quality_mysql" -> ((s, dir) =>
       PxlRunner.run(script(QualityPath),
-          Pxl.env(s, dir, tailNow(s, dir)))("mysql_latencies")),
+          Pxl.env(s, dir, tailNowNs(s, dir)))("mysql_latencies")),
 
     // pod_edge_stats: traffic between one (requesting, responding) pod
     // pair; the self-edge is the fixture's only resolvable pair. The raw
@@ -95,13 +84,6 @@ object Pxl8 {
   )
 
   // ---- oracles -------------------------------------------------------
-
-  private def eventsCte: String =
-    s"""e AS (SELECT epoch_us(ts) * 1000 AS t, epoch_us(ts) AS us, user_id,
-       |        event_id, value,
-       |        CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 0 ELSE 1 END AS g
-       |      FROM events WHERE epoch_us(ts) * 1000 >= $startNs
-       |        AND epoch_us(ts) * 1000 < $nowNs)""".stripMargin
 
   private def tailCte(windowNs: Long): String =
     s"""mx AS (SELECT max(epoch_us(ts)) * 1000 + 1000 AS now_ns FROM events),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.pxl.PxlRunner
 import Q._
+import PxlGate._
 
 /** Round-5 verbatim-script tranche 6 — the LAST unported bundled
   * scripts: http_trace_id (Otel traceparent extraction with RE2-style
@@ -20,21 +21,12 @@ import Q._
   */
 object Pxl9 {
 
-  private val RefPx = s"${Pxl.RefDir}/src/pxl_scripts/px"
   val HttpTraceIdPath = s"$RefPx/http_trace_id/script.pxl"
   val DiffFlamePath = s"$RefPx/differential_flamegraph/differential.pxl"
   val KafkaRebalPath =
     s"$RefPx/kafka_consumer_rebalancing/kafka_consumer_rebalancing.pxl"
   val KafkaPCLatencyPath =
     s"$RefPx/kafka_producer_consumer_latency/kafka_producer_consumer_latency.pxl"
-
-  private def script(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-
-  private val nowNs = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-  private val startNs = nowNs - 45L * 86400L * 1000000000L
-  private val splitNs = graft.functions.PixieFunctions.tsNsLit("2024-01-15")
 
   val queries: Map[String, QFn] = Map(
     // http_trace_id: traceparent header pluck + \1-backreference regex
@@ -86,13 +78,6 @@ object Pxl9 {
   )
 
   // ---- oracles -------------------------------------------------------
-
-  private def eventsCte: String =
-    s"""e AS (SELECT epoch_us(ts) * 1000 AS t, epoch_us(ts) AS us, user_id,
-       |        event_id, value,
-       |        CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 0 ELSE 1 END AS g
-       |      FROM events WHERE epoch_us(ts) * 1000 >= $startNs
-       |        AND epoch_us(ts) * 1000 < $nowNs)""".stripMargin
 
   /** Tracer source/destination CTE over `from` (no deep links). */
   private def srcDstCte(from: String): String =

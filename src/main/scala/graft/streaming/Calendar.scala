@@ -6,12 +6,20 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
-/** The ONE streamed lifecycle interpreter. Every streamed calendar
-  * ([[CurationStream]], [[MultiStream]] four- and six-stage,
-  * [[SemStream]]) is a list of [[Calendar.Step]]s run against its
-  * family's [[Calendar.Binding]]; this object owns the only lifecycle
-  * `foreachBatch` body, the only landing writer and the only delivery
-  * (mtime) ladder. The reference's analog is its script-runner cron
+/** The ONE lifecycle calendar and its two interpreters. Every
+  * lifecycle calendar ([[CurationStream]], [[MultiStream]] four- and
+  * six-stage, [[SemStream]]) is a list of [[Calendar.Step]]s run
+  * against its family's [[Calendar.Binding]], by either engine:
+  *
+  *  - [[run]], the STREAMED interpreter: each step lands a file and a
+  *    file source delivers it to `foreachBatch`. This object owns the
+  *    only lifecycle `foreachBatch` body, the only landing writer and
+  *    the only delivery (mtime) ladder;
+  *  - [[batch]], the BATCH interpreter: the same steps against the
+  *    same binding, applied directly in a driver loop.
+  *
+  * A batch/stream gate pair therefore runs ONE calendar value through
+  * two interpreters. The reference's analog is its script-runner cron
   * driving both queries and table maintenance through one scheduler
   * (src/vizier/services/query_broker/script_runner/); here one file
   * source delivers both admissions and maintenance to `foreachBatch`.
@@ -35,10 +43,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   * DELIVERY / RECOVERY. The file source's checkpoint gives
   * at-least-once micro-batches across stop/restart; each family's
   * admission body is day-ledgered, and every control slot is
-  * LEDGERED (single-phase slots ride their operation's own ledger
-  * row; multi-phase slots wrap the phases in [[slot]], whose
-  * `<id>_done` row commits LAST), which upgrades delivery to
-  * exactly-once per slot. A replayed file is a pure no-op.
+  * LEDGERED through [[graft.core.Ledger.once]] (single-phase slots
+  * ride their operation's own ledger row; multi-phase slots wrap the
+  * phases in a `<id>_done` row that commits LAST), which upgrades
+  * delivery to exactly-once per slot. A replayed file is a pure
+  * no-op — and so is a replayed step under [[batch]].
   */
 object Calendar {
 
@@ -46,7 +55,7 @@ object Calendar {
   val OpCap = "cap"
   val OpCompact = "compact"
 
-  /** One calendar step, interpreted in order by [[run]]. */
+  /** One calendar step, interpreted in order by [[run]] or [[batch]]. */
   sealed trait Step
   /** Land day k's drop (or, with `replay`, a re-offer of it). */
   final case class Land(day: Int, replay: Boolean = false) extends Step
@@ -125,17 +134,37 @@ object Calendar {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         controls(batch).foreach { s =>
           if (s.admit)
-            b.admit(s.day, batch
-              .where(col("day") === s.day && col("op").isNull)
-              .select(b.payload.map(f => col(f.name)): _*))
-          s.ops.foreach { case (op, args) =>
-            b.slots.getOrElse(op, sys.error(s"calendar: no $op slot"))(s.day, args)
-          }
+            b.admit(s.day, payload(b, batch
+              .where(col("day") === s.day && col("op").isNull)))
+          s.ops.foreach { case (op, args) => slot(b, op)(s.day, args) }
         }
       }
       .start()
 
-  /** Interpret `steps` in order against `b`. */
+  private def payload(b: Binding, df: DataFrame): DataFrame =
+    df.select(b.payload.map(f => col(f.name)): _*)
+
+  private def slot(b: Binding, op: String): (Int, Seq[Long]) => Unit =
+    b.slots.getOrElse(op, sys.error(s"calendar: no $op slot"))
+
+  /** The batch interpreter: apply `steps` in order against `b` with
+    * no stream. A land step admits day k's drop projected to the
+    * payload columns (what the stream hands the admission body; a
+    * replay is offered again and its ledger makes it a no-op); a
+    * control step runs its op's slot with `Seq(arg())`; derive runs;
+    * [[Run]] has nothing to drain.
+    */
+  def batch(spark: SparkSession, b: Binding, steps: Seq[Step]): Unit =
+    steps.foreach {
+      case Land(k, _) => b.admit(k, payload(b, b.drop(k)))
+      case Control(op, k, arg, _) => slot(b, op)(k, Seq(arg()))
+      case Derive(f) => f()
+      case Run =>
+    }
+
+  /** The streamed interpreter: land each step's file in order, start
+    * the stream at each [[Run]], drain it, stop it.
+    */
   def run(spark: SparkSession, b: Binding, steps: Seq[Step]): Unit =
     steps.foreach {
       case l @ Land(k, _) =>
@@ -188,18 +217,4 @@ object Calendar {
     fs.setTimes(dst,
       fs.getFileStatus(new Path(b.anchor)).getModificationTime + offset, -1L)
   }
-
-  /** The multi-phase slot guard: false when `doneId` already
-    * committed (the replayed-control no-op); otherwise run the phases
-    * and commit the done row LAST, so a torn slot re-runs everything
-    * on replay.
-    */
-  def slot(spark: SparkSession, ledger: String, doneId: String)
-          (body: => Unit): Boolean =
-    if (graft.ops.CurationNDay.ledgerSeen(spark, ledger, doneId)) false
-    else {
-      body
-      graft.ops.CurationNDay.appendLedger(spark, ledger, doneId)
-      true
-    }
 }

@@ -3,18 +3,21 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{LongType, StringType, StructField}
 
+import graft.core.Ledger
 import graft.ops.{CurationDay, CurationNDay}
-import Calendar.{Control, Derive, Land, OpCap, OpCompact, OpTtl, Run}
+import Calendar.{Control, Derive, Land, OpCap, OpCompact, OpTtl, Run, Step}
 
 /** The curation day as a STREAMING job (SURVEY §1.3 — the engine is
   * streaming-first, and the r10 flagship was batch-incremental): daily
   * document drops LAND AS FILES in a directory, a Structured Streaming
   * file source delivers them, and the [[Calendar]] interpreter's
   * `foreachBatch` drives each day through the exact
-  * [[CurationNDay.processDay]] the batch loop uses — ledger-gated
+  * [[CurationNDay.processDay]] the batch interpreter runs — ledger-gated
   * exactly-once ingest + index-backed incremental decisions + admit
   * (index append, manifest fold, persisted-state folds). This object
-  * is the curation [[binding]] plus its calendars; delivery and
+  * is the curation [[binding]] plus its calendars (a calendar with a
+  * batch twin is one named value, e.g. [[DaysCal]], run by both
+  * engines); delivery and
   * recovery semantics are the interpreter's (see [[Calendar]]), and
   * an out-of-order drop fails loudly via the day-(k−1) artifact
   * require.
@@ -37,7 +40,8 @@ object CurationStream {
 
   /** The curation binding: payload (doc_id, text), day k's staged
     * drop, the ledgered [[CurationNDay.processDay]] admission, and the
-    * three control slots, each a multi-phase [[Calendar.slot]]:
+    * three control slots, each multi-phase under one `<op><k>_done`
+    * row ([[graft.core.Ledger.once]], committed last):
     *
     *  - ttl (arg = keepFromDay): the ledgered [[CurationNDay.ttlDay]]
     *    + [[graft.ops.Pack.rebuild]] — the `ttl<k>_done` row commits
@@ -63,15 +67,15 @@ object CurationStream {
       (k, drop) => CurationNDay.processDay(spark, a, k, drop, fetch): Unit,
       Map(
         OpTtl -> ((k, args) => args.foreach { keepFrom =>
-          Calendar.slot(spark, a.ledger, s"ttl${k}_done") {
+          Ledger.once(spark, a.ledger, s"ttl${k}_done") {
             ttl(spark, a, k, keepFrom.toInt): Unit
             graft.ops.Pack.rebuild(spark, a, N)
           }: Unit
         }),
         OpCap -> ((k, args) => args.foreach { maxTok =>
-          Calendar.slot(spark, a.ledger, s"cap${k}_done") {
+          Ledger.once(spark, a.ledger, s"cap${k}_done") {
             cap(spark, a, k, maxTok): Unit
-            if (CurationNDay.readHorizon(spark, a.capHorizon(s"cap$k")) > 0)
+            if (Ledger.horizon(spark, a.capHorizon(s"cap$k")) > 0)
               graft.ops.Pack.rebuild(spark, a, N)
           }: Unit
         }),
@@ -91,21 +95,50 @@ object CurationStream {
 
   private def compact(spark: SparkSession, a: CurationDay.Artifacts,
                       k: Int): Boolean =
-    Calendar.slot(spark, a.ledger, s"compact${k}_done") {
+    Ledger.once(spark, a.ledger, s"compact${k}_done") {
       graft.ops.Dedup.compactDedupIndex(spark, a.index, CompactParts)
-    }
+    }.isDefined
 
-  /** Bootstrap the N-day lifecycle and bind it to the documents fetch. */
-  private def boot(spark: SparkSession, dir: String,
-                   a: CurationDay.Artifacts): (Calendar.Binding, DataFrame) = {
-    CurationNDay.bootstrapNDay(spark, dir, a)
-    val fetch = graft.core.Tables.plain(spark, dir, "documents")
-    (binding(spark, a, fetch), fetch)
+  /** One bootstrapped N-day lifecycle a calendar runs over: the
+    * documents fetch and the binding.
+    */
+  final case class Life(spark: SparkSession, dir: String,
+                        a: CurationDay.Artifacts) {
+    val fetch: DataFrame = graft.core.Tables.plain(spark, dir, "documents")
+    val b: Calendar.Binding = binding(spark, a, fetch)
+    def ledger: Seq[String] = Ledger.ids(spark, a.ledger)
   }
 
-  private def day4(spark: SparkSession, dir: String,
-                   a: CurationDay.Artifacts): Derive =
-    Derive(() => CurationNDay.writeDay4Drop(spark, dir, a))
+  /** A named calendar: its steps over the bootstrapped lifecycle. */
+  type Cal = Life => Seq[Step]
+
+  /** Bootstrap the N-day lifecycle. */
+  private def boot(spark: SparkSession, dir: String,
+                   a: CurationDay.Artifacts): Life = {
+    CurationNDay.bootstrapNDay(spark, dir, a)
+    Life(spark, dir, a)
+  }
+
+  /** Bootstrap, then run `c` through the BATCH interpreter — the
+    * batch twin of `c`'s streamed gate, one oracle across engines.
+    */
+  def batch(spark: SparkSession, dir: String, a: CurationDay.Artifacts,
+            c: Cal): Unit = {
+    val l = boot(spark, dir, a)
+    Calendar.batch(spark, l.b, c(l))
+  }
+
+  private def day4(l: Life): Derive =
+    Derive(() => CurationNDay.writeDay4Drop(l.spark, l.dir, l.a))
+
+  /** The N-day lifecycle (q505–q510): land days 1–2; stream them; STOP
+    * the query (the kill); derive the sentinel-planted day 4; land
+    * days 3–4; RESTART from the same checkpoint; drain.
+    */
+  val DaysCal: Cal = l => Seq(
+    Land(1), Land(2), Run, // the kill
+    day4(l), Land(3), Land(4),
+    Run) // same checkpoint: the restart
 
   private val N = CurationNDay.NDays
 
@@ -128,19 +161,19 @@ object CurationStream {
   def runTtlCalendarStreamed(spark: SparkSession, dir: String,
                              a: CurationDay.Artifacts)
       : (Boolean, Seq[String]) = {
-    val (b, _) = boot(spark, dir, a)
-    Calendar.run(spark, b, Seq(
+    val l = boot(spark, dir, a)
+    Calendar.run(spark, l.b, Seq(
       Land(1), Land(2), Run, // the kill
-      day4(spark, dir, a), Land(3), Land(4),
+      day4(l), Land(3), Land(4),
       Control(OpTtl, N, () => 2L), Control(OpTtl, N, () => 2L, replay = true),
       Run)) // same checkpoint: the restart
-    (!ttl(spark, a, N, 2), CurationNDay.ledgerDays(spark, a.ledger))
+    (!ttl(spark, a, N, 2), l.ledger)
   }
 
   /** The STREAMED SIZE-CAP calendar: days 1–4, the kill, then the cap
     * control (55% of the admitted token mass — the q557 scale-
     * proportional contract) plus its replay, the restart, drain. The
-    * slot computes the horizon from the persisted pack masses, PINS
+    * slot computes the horizon from the decision-pinned masses, PINS
     * it, expires to it, rebuilds the tape, and commits its done row;
     * the replayed control is a pure no-op. Returns (replayNoOp,
     * ledgerDays, pinnedHorizon).
@@ -148,18 +181,17 @@ object CurationStream {
   def runCapCalendarStreamed(spark: SparkSession, dir: String,
                              a: CurationDay.Artifacts)
       : (Boolean, Seq[String], Int) = {
-    val (b, _) = boot(spark, dir, a)
+    val l = boot(spark, dir, a)
     lazy val maxTok =
       (1 to N).map(CurationNDay.packMass(spark, a, _)).sum * 55L / 100L
-    Calendar.run(spark, b, Seq(
+    Calendar.run(spark, l.b, Seq(
       Land(1), Land(2), Run,
-      day4(spark, dir, a), Land(3), Land(4), Run, // the kill
+      day4(l), Land(3), Land(4), Run, // the kill
       Control(OpCap, N, () => maxTok),
       Control(OpCap, N, () => maxTok, replay = true),
       Run)) // same checkpoint: the restart
-    val horizon = CurationNDay.readHorizon(spark, a.capHorizon(s"cap$N"))
-    (cap(spark, a, N, maxTok) == 0, CurationNDay.ledgerDays(spark, a.ledger),
-      horizon)
+    val horizon = Ledger.horizon(spark, a.capHorizon(s"cap$N"))
+    (cap(spark, a, N, maxTok) == 0, l.ledger, horizon)
   }
 
   /** The STREAMED COMPACTION calendar — the mm chain's
@@ -178,19 +210,18 @@ object CurationStream {
   def runCompactCalendarStreamed(spark: SparkSession, dir: String,
                                  a: CurationDay.Artifacts)
       : (Boolean, Seq[String], Boolean) = {
-    val (b, _) = boot(spark, dir, a)
-    Calendar.run(spark, b, Seq(
+    val l = boot(spark, dir, a)
+    Calendar.run(spark, l.b, Seq(
       Land(1), Control(OpCompact, 1), Land(2), Run)) // the kill
     // day 2's append re-fragmented the compact1 result
     val fragmented = partFiles(spark, a, "hashes") > CompactParts
-    Calendar.run(spark, b, Seq(
-      day4(spark, dir, a), Land(3), Land(4),
+    Calendar.run(spark, l.b, Seq(
+      day4(l), Land(3), Land(4),
       Control(OpCompact, N), Control(OpCompact, N, replay = true),
       Run)) // same checkpoint: the restart
     val done = settled(spark, a)
     // replay witness: the committed compact4 slot re-offered directly
-    (!compact(spark, a, N), CurationNDay.ledgerDays(spark, a.ledger),
-      fragmented && done)
+    (!compact(spark, a, N), l.ledger, fragmented && done)
   }
 
   /** The CURATION-side FULL MAINTENANCE CALENDAR — all three control
@@ -215,14 +246,14 @@ object CurationStream {
   def runFullCalendarStreamed(spark: SparkSession, dir: String,
                               a: CurationDay.Artifacts)
       : (Boolean, Seq[String], Int, Boolean) = {
-    val (b, _) = boot(spark, dir, a)
+    val l = boot(spark, dir, a)
     lazy val maxTok = {
       val m = CurationNDay.pinnedMasses(spark, a)
       m.getOrElse(4, 0L) + m.getOrElse(3, 0L) + m.getOrElse(2, 0L) / 2L
     }
-    Calendar.run(spark, b, Seq(
+    Calendar.run(spark, l.b, Seq(
       Land(1), Control(OpCompact, 1), Land(2), Run, // kill 1
-      day4(spark, dir, a), Land(3), Land(4),
+      day4(l), Land(3), Land(4),
       Control(OpTtl, N, () => 2L), Control(OpTtl, N, () => 2L, replay = true),
       Run, // restart 1, kill 2
       Control(OpCap, N, () => maxTok),
@@ -230,29 +261,24 @@ object CurationStream {
       Control(OpCompact, N),
       Run)) // restart 2
     val done = settled(spark, a)
-    val horizon = CurationNDay.readHorizon(spark, a.capHorizon(s"cap$N"))
+    val horizon = Ledger.horizon(spark, a.capHorizon(s"cap$N"))
     val replayNoOp = !ttl(spark, a, N, 2) &&
       cap(spark, a, N, maxTok) == 0 && !compact(spark, a, N)
-    (replayNoOp, CurationNDay.ledgerDays(spark, a.ledger), horizon, done)
+    (replayNoOp, l.ledger, horizon, done)
   }
 
-  /** The full STREAMED N-day lifecycle with a kill/restart witnessed
-    * mid-chain (the gate row runs THIS, so recovery is part of the
-    * official evidence, not just a spec): bootstrap; land days 1–2;
-    * stream them; STOP the query (the kill); manually re-offer day 2
-    * (a replayed, already-committed day must no-op via the ledger);
-    * derive + land days 3–4; RESTART from the same checkpoint; drain.
-    * Returns (replayNoOp, ledgerDays) for the report row to pin.
+  /** [[DaysCal]] streamed — the gate row runs THIS, so recovery is
+    * part of the official evidence, not just a spec. Returns
+    * (replayNoOp, ledgerDays) for the report row to pin: replayNoOp
+    * witnesses a committed day (day 2) offered again being a pure
+    * no-op.
     */
   def runDaysStreamed(spark: SparkSession, dir: String,
                       a: CurationDay.Artifacts): (Boolean, Seq[String]) = {
-    val (b, fetch) = boot(spark, dir, a)
-    Calendar.run(spark, b, Seq(Land(1), Land(2), Run))
-    // replay witness: a committed day offered again is a pure no-op
+    val l = boot(spark, dir, a)
+    Calendar.run(spark, l.b, DaysCal(l))
     val replayNoOp = !CurationNDay.processDay(spark, a, 2,
-      spark.read.parquet(a.dropDay(2)), fetch)
-    Calendar.run(spark, b, Seq(day4(spark, dir, a), Land(3), Land(4),
-      Run)) // same checkpoint: the restart
-    (replayNoOp, CurationNDay.ledgerDays(spark, a.ledger))
+      spark.read.parquet(a.dropDay(2)), l.fetch)
+    (replayNoOp, l.ledger)
   }
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField}
 
-import graft.ops.{CurationNDay, SemIndex}
+import graft.core.Ledger
+import graft.ops.SemIndex
 import Calendar.{Land, Run}
 
 /** The SEMANTIC index's admission stream — the [[Calendar]]
@@ -56,10 +57,8 @@ object SemStream {
             .select(lit(9500001L).as("vec_id"), col("embedding")))
       },
       (k, drop) =>
-        if (!CurationNDay.ledgerSeen(spark, ledger, s"sem$k")) {
-          SemIndex.processDay(spark, p, k, drop): Unit
-          CurationNDay.appendLedger(spark, ledger, s"sem$k")
-        })
+        Ledger.once(spark, ledger, s"sem$k")(
+          SemIndex.processDay(spark, p, k, drop)): Unit)
     // replay witness: day 1 re-offered under a new file name — the
     // source delivers it again, the ledger must no-op it
     Calendar.run(spark, b, Seq(Land(1), Run, // the kill
@@ -73,6 +72,6 @@ object SemStream {
         .where(col("decision") === "admitted").count()
       spark.read.parquet(p.index).count() == before + d2adm
     }
-    (CurationNDay.ledgerDays(spark, ledger), stable)
+    (Ledger.ids(spark, ledger), stable)
   }
 }

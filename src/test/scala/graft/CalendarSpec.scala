@@ -4,10 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.Calendar
 import graft.streaming.Calendar._
 
-/** The streamed lifecycle interpreter's contract, checked without
-  * starting a stream: the delivery ladder's order within and across
-  * day slots, the loud failure on an unknown control op, and the one
-  * bounded control read of a micro-batch.
+/** The lifecycle interpreters' contract, checked without starting a
+  * stream: the delivery ladder's order within and across day slots,
+  * the loud failure on an unknown control op, the one bounded control
+  * read of a micro-batch, and the batch interpreter's walk of the same
+  * steps.
   */
 class CalendarSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -55,5 +56,29 @@ class CalendarSpec extends AnyFunSuite {
       DaySlot(2, admit = false, Seq(OpCap -> Seq(400L, 500L))),
       DaySlot(3, admit = true,
         Seq(OpTtl -> Seq(2L), OpCompact -> Seq(0L)))))
+  }
+
+  test("batch interpreter: steps in order, Run ignored, replayed Land re-offered, controls get Seq(arg())") {
+    val calls = scala.collection.mutable.ArrayBuffer.empty[String]
+    val b = Binding("no_landing", "no_checkpoint", "no_anchor",
+      Seq(org.apache.spark.sql.types.StructField("id",
+        org.apache.spark.sql.types.LongType)),
+      k => Seq((k.toLong, s"x$k")).toDF("id", "extra"),
+      (k, drop) => calls += s"admit $k ${drop.columns.mkString(",")} " +
+        drop.collect().map(_.getLong(0)).mkString(","),
+      Map(OpTtl -> ((k, args) => calls += s"ttl $k ${args.mkString(",")}")))
+    var evals = 0L
+    Calendar.batch(spark, b, Seq(
+      Land(1), Run,
+      Control(OpTtl, 2, () => { evals += 1; 40L + evals }),
+      Derive(() => calls += "derive"),
+      Land(1, replay = true), Land(3), Run))
+    assert(calls == Seq("admit 1 id 1", "ttl 2 41", "derive",
+      "admit 1 id 1", "admit 3 id 3"))
+    assert(evals == 1L) // arg() evaluated once, when its step runs
+    val e = intercept[RuntimeException] {
+      Calendar.batch(spark, b, Seq(Control("refit", 2)))
+    }
+    assert(e.getMessage.contains("no refit slot"))
   }
 }

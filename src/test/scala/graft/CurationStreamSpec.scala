@@ -43,7 +43,7 @@ class CurationStreamSpec extends AnyFunSuite {
       assert(replayNoOp, "replayed committed day must be a ledger no-op")
       assert(days == Seq("day1", "day2", "day3", "day4"),
         s"each day exactly once, got $days")
-      CurationNDay.runDaysBatch(spark, sf, ab)
+      CurationStream.batch(spark, sf, ab, CurationStream.DaysCal)
       assert(rowsOf(CurationNDay.allDecisions(spark, as)) ==
         rowsOf(CurationNDay.allDecisions(spark, ab)))
       assert(rowsOf(spark.read.parquet(as.manifestDay(4))) ==
@@ -75,13 +75,13 @@ class CurationStreamSpec extends AnyFunSuite {
       // day 2 CRASHES after all artifact writes, before its ledger row
       CurationNDay.processDayBody(spark, at, 2,
         spark.read.parquet(at.dropDay(2)), fetch)
-      assert(CurationNDay.ledgerDays(spark, at.ledger) == Seq("day1"))
+      assert(graft.core.Ledger.ids(spark, at.ledger) == Seq("day1"))
       // the landing zone re-offers day 2 (at-least-once delivery);
       // the stream re-runs the whole day — idempotent by construction
       graft.streaming.Calendar.run(spark,
         CurationStream.binding(spark, at, fetch),
         Seq(graft.streaming.Calendar.Land(2), graft.streaming.Calendar.Run))
-      assert(CurationNDay.ledgerDays(spark, at.ledger) ==
+      assert(graft.core.Ledger.ids(spark, at.ledger) ==
         Seq("day1", "day2"))
       // control: the same two days with no crash
       CurationNDay.bootstrapNDay(spark, sf, ab)

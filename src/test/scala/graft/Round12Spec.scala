@@ -203,7 +203,7 @@ class Round12Spec extends AnyFunSuite {
       graft.streaming.Calendar.run(spark,
         graft.streaming.MultiStream.binding(spark, p, fetch),
         Seq(graft.streaming.Calendar.Run))
-      assert(graft.ops.CurationNDay.ledgerDays(spark, p.ledger)
+      assert(graft.core.Ledger.ids(spark, p.ledger)
         == Seq("mm1", "mm2"))
       (1 to 2).foreach { k =>
         assert(fs.exists(new org.apache.hadoop.fs.Path(

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Round-13 hardening properties — the r12 ADVICE items closed at
   * source: swapInto's torn-swap self-recovery, the single-promote
   * serving-pair refit cutover, the empty-index refit no-op, the
-  * under-cap capDay no-op, and the per-(corpus_id, band) append
+  * under-cap capDayPinned no-op, and the per-(corpus_id, band) append
   * anti-join backfilling a torn band append.
   */
 class Round13Spec extends AnyFunSuite {
@@ -137,19 +137,25 @@ class Round13Spec extends AnyFunSuite {
     val root = tmp("graft_r13_cap_")
     try {
       val a = graft.ops.CurationDay.Artifacts(root)
-      // fabricate the model-sized pack layouts (one row per doc):
-      // day 0 (snapshot) + days 1..NDays
+      // fabricate a 10-token doc per day — day 0 (snapshot) + days
+      // 1..NDays: its pack layout row, its corpus row, and (days >= 1)
+      // the decision pin that admitted it
+      val text = Seq.fill(10)("w").mkString(" ")
       (0 to graft.ops.CurationNDay.NDays).foreach { k =>
         Seq((k, 100L + k, 10L)).toDF("day", "doc_id", "n_tok")
           .write.mode("overwrite").parquet(a.packDay(k))
+        Seq((100L + k, text, 0)).toDF("doc_id", "text", "shard")
+          .write.partitionBy("shard").mode("append").parquet(a.corpusDir)
+        if (k >= 1)
+          Seq((100L + k, "admitted")).toDF("doc_id", "decision")
+            .write.mode("overwrite").parquet(a.decisionsDay(k))
       }
       val total = 10L * (graft.ops.CurationNDay.NDays + 1)
       // cap >= snapshot + every day: nothing may be expired
-      val k = graft.ops.CurationNDay.capDay(spark, a, "cap_noop",
+      val k = graft.ops.CurationNDay.capDayPinned(spark, a, "cap_noop",
         maxTokens = total, s"$root/m_in", s"$root/m_out")
       assert(k == 0)
-      assert(graft.ops.CurationNDay.ledgerSeen(spark, a.ledger,
-        "cap_noop"))
+      assert(graft.core.Ledger.seen(spark, a.ledger, "cap_noop"))
       // the horizon is PINNED even for the no-op (keep_from_day = 0),
       // so a replayed calendar slot can read what the cap decided
       assert(spark.read.parquet(a.capHorizon("cap_noop"))
@@ -161,7 +167,7 @@ class Round13Spec extends AnyFunSuite {
       assert(!fsOf(root).exists(
         new org.apache.hadoop.fs.Path(s"$root/m_out")))
       // replay: committed, still 0, still no mutation
-      assert(graft.ops.CurationNDay.capDay(spark, a, "cap_noop",
+      assert(graft.ops.CurationNDay.capDayPinned(spark, a, "cap_noop",
         maxTokens = total, s"$root/m_in", s"$root/m_out") == 0)
     } finally graft.queries.Curation2.deleteDir(
       new java.io.File(root).getParent)
@@ -209,7 +215,7 @@ class Round13Spec extends AnyFunSuite {
     val root = tmp("graft_r13_ttl4_")
     try {
       val p = graft.ops.MultiDay.Paths4(root)
-      graft.ops.CurationNDay.appendLedger(spark, p.ledger, "ttlX")
+      graft.core.Ledger.once(spark, p.ledger, "ttlX")(()): Unit
       // corpusDocs = null: the guard must answer from the ledger alone
       // — ANY touch of the inputs or indexes would throw here
       assert(!graft.ops.MultiDay.ttl4Day(spark, p, "ttlX", Seq(1), null))
