@@ -46,7 +46,10 @@ object PxlRunner {
     * the ctx metadata resolver ((df, property, outName) => df with the
     * resolved column attached), and the metadata scalar-call surface
     * (px.ip_to_pod_id(col) style — joins under the hood, so they resolve
-    * through a callback: (df, fnName, inCol, outCol) => df').
+    * through a callback: (df, fnName, inCol, outCol) => df'). `modules`
+    * maps an importable module name to a thunk yielding its PxL source;
+    * the thunk runs only when a script executes `import <name>`, so
+    * building an env reads no module file.
     */
   final case class PxlEnv(
       nowNs: Long,
@@ -55,7 +58,7 @@ object PxlRunner {
       metaFns: Set[String] = Set.empty,
       meta: (DataFrame, String, String, String) => DataFrame =
         (_, fn, _, _) => throw new PxlError(s"metadata fn $fn: no resolver bound"),
-      modules: Map[String, String] = Map.empty,
+      modules: Map[String, () => String] = Map.empty,
       sketchQuantiles: Boolean = false,
       /** UDTF sources (`px.GetAgentStatus()` style): name + stringified
         * args -> relation. Bound to graft.sources.CatalogUdtfs.
@@ -969,7 +972,7 @@ object PxlRunner {
         val modScope = mutable.LinkedHashMap[String, V]()
         val saved = scopes
         scopes = List(modScope)
-        try execStmts(PxlParser.parse(env.modules(m)))
+        try execStmts(PxlParser.parse(env.modules(m)()))
         finally scopes = saved
         moduleScope(m) = VModule(modScope)
       case ImportS(m) => throw new PxlError(s"unknown module $m")

@@ -587,7 +587,7 @@ object Pxl {
             graft.meta.MetadataOps.resolve(fn, df, fullDim, in, out)
         blankOnMiss(resolved, out)
       },
-      modules = Map("pxviews" -> pxviewsSource),
+      modules = Map("pxviews" -> (() => pxviewsSource)),
       sketchQuantiles = sketchQuantiles,
       udtfs = (name, args) => {
         import graft.sources.CatalogUdtfs
@@ -615,7 +615,9 @@ object Pxl {
   }
 
   /** The REAL bundled helper library, loaded verbatim (it ships embedded
-    * in a C++ raw string literal — strip the R"( ... )" wrapper).
+    * in a C++ raw string literal — strip the R"( ... )" wrapper). Read
+    * from the [[RefDir]] checkout at most once per JVM, and only when a
+    * script executes `import pxviews`; [[env]] binds it as a thunk.
     */
   lazy val pxviewsSource: String = {
     val raw = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
@@ -634,7 +636,9 @@ object Pxl {
     else df
 
   /** Root of the reference checkout the verbatim scripts are read from
-    * at runtime (they are test INPUTS, not copied sources). Point
+    * at runtime (they are test INPUTS, not copied sources). Only those
+    * scripts and an `import pxviews` ([[pxviewsSource]]) need it; scripts
+    * authored here that import nothing run without a checkout. Point
     * SPARK_GRAFT_REF_DIR elsewhere to run against another checkout.
     */
   val RefDir: String =

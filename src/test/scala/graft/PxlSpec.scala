@@ -632,4 +632,30 @@ class PxlSpec extends AnyFunSuite {
       Pxl.env(spark, dir, graft.functions.PixieFunctions.tsNsLit("2024-01-01")))("w")
     assert(tiny.count() == 0)
   }
+
+  test("module sources are read on import, never when an env is built") {
+    // Pxl.env binds pxviews as a thunk over the checkout's file; a script
+    // that imports nothing must not touch it (hosts without a checkout).
+    var reads = 0
+    val env = Pxl.env(spark, dir, graft.functions.PixieFunctions.tsNsLit("2024-02-01"))
+      .copy(modules = Map("pxviews" -> (() => {
+        reads += 1
+        throw new IllegalStateException("pxviews source unavailable")
+      })))
+    val plain = PxlRunner.run(
+      """import px
+        |df = px.DataFrame(table='http_events', start_time='-60d')
+        |px.display(df.head(3), 'x')
+        |""".stripMargin, env)("x")
+    assert(plain.count() == 3)
+    assert(reads == 0)
+    val err = intercept[IllegalStateException](PxlRunner.run(
+      """import px
+        |import pxviews
+        |df = px.DataFrame(table='http_events', start_time='-60d')
+        |px.display(df, 'x')
+        |""".stripMargin, env))
+    assert(err.getMessage == "pxviews source unavailable")
+    assert(reads == 1)
+  }
 }
