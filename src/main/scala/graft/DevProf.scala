@@ -17,12 +17,8 @@ object DevProf {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // A/B knob for the Tables.spread experiment: -1 disables the spread.
-    sys.env.get("SPARK_GRAFT_SPREAD_MIN")
-      .foreach(v => spark.conf.set("spark.graft.spreadMinBytes", v))
-    sys.env.get("SPARK_GRAFT_SPREAD_TABLES")
-      .foreach(v => spark.conf.set("spark.graft.spreadTables", v))
-    // generic conf overrides for A/B runs: "k=v;;k=v"
+    // conf overrides for A/B runs: "k=v;;k=v" (e.g. the Tables.spread
+    // experiment: "spark.graft.spreadMinBytes=-1" disables the spread)
     sys.env.get("SPARK_GRAFT_DEV_CONF").foreach(_.split(";;").foreach { kv =>
       val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
     graft.core.Tables.all.foreach(t => graft.core.Tables(spark, dir, t).count())

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.PxTable
 import graft.functions.PixieFunctions._
+import graft.queries._
+import graft.queries.Q.Gates
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -33,45 +35,27 @@ object SparkEntry {
       .df
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++ graft.queries.Functions.queries ++
-      graft.queries.NorthStar.queries ++ graft.queries.Meta.queries ++
-      graft.queries.Surface.queries ++ graft.queries.Ml.queries ++
-      graft.queries.Extended.queries ++ graft.queries.Pxl.queries ++
-      graft.queries.Pxl2.queries ++ graft.queries.Pxl3.queries ++
-      graft.queries.Pxl4.queries ++ graft.queries.Pxl5.queries ++
-      graft.queries.Pxl6.queries ++ graft.queries.Pxl7.queries ++
-      graft.queries.Pxl8.queries ++ graft.queries.Pxl9.queries ++
-      graft.queries.Pxl10.queries ++ graft.queries.Pxl11.queries ++
-      graft.queries.Pxl12.queries ++ graft.queries.Pxl13.queries ++ graft.queries.Pxl14.queries ++ graft.queries.Pxl15.queries ++ graft.queries.Pxl16.queries ++
-      graft.queries.Curation.queries ++ graft.queries.Curation2.queries ++
-      graft.queries.Curation3.queries ++ graft.queries.Curation4.queries ++
-      graft.queries.Curation5.queries ++ graft.queries.Curation6.queries ++
-      graft.queries.Curation7.queries ++ graft.queries.Curation8.queries ++
-      graft.queries.Curation9.queries ++ graft.queries.Curation10.queries ++
-      graft.queries.Curation11.queries ++ graft.queries.Curation12.queries ++
-      graft.queries.Curation13.queries ++ graft.queries.Curation14.queries
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+  /** The gate files, each one [[graft.queries.Q.Gates]]: a `queries` map
+    * and an `oracles` map over the same keys.
     */
-  def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracles ++ graft.queries.Functions.oracles ++
-      graft.queries.NorthStar.oracles ++ graft.queries.Meta.oracles ++
-      graft.queries.Surface.oracles ++ graft.queries.Ml.oracles ++
-      graft.queries.Extended.oracles ++ graft.queries.Pxl.oracles ++
-      graft.queries.Pxl2.oracles ++ graft.queries.Pxl3.oracles ++
-      graft.queries.Pxl4.oracles ++ graft.queries.Pxl5.oracles ++
-      graft.queries.Pxl6.oracles ++ graft.queries.Pxl7.oracles ++
-      graft.queries.Pxl8.oracles ++ graft.queries.Pxl9.oracles ++
-      graft.queries.Pxl10.oracles ++ graft.queries.Pxl11.oracles ++
-      graft.queries.Pxl12.oracles ++ graft.queries.Pxl13.oracles ++ graft.queries.Pxl14.oracles ++ graft.queries.Pxl15.oracles ++ graft.queries.Pxl16.oracles ++
-      graft.queries.Curation.oracles ++ graft.queries.Curation2.oracles ++
-      graft.queries.Curation3.oracles ++ graft.queries.Curation4.oracles ++
-      graft.queries.Curation5.oracles ++ graft.queries.Curation6.oracles ++
-      graft.queries.Curation7.oracles ++ graft.queries.Curation8.oracles ++
-      graft.queries.Curation9.oracles ++ graft.queries.Curation10.oracles ++
-      graft.queries.Curation11.oracles ++ graft.queries.Curation12.oracles ++
-      graft.queries.Curation13.oracles ++ graft.queries.Curation14.oracles
+  lazy val gates: Seq[Gates] = Seq(
+    Relational, Functions, NorthStar, Meta, Surface, Ml, Extended,
+    Pxl, Pxl2, Pxl3, Pxl4, Pxl5, Pxl6, Pxl7, Pxl8, Pxl9, Pxl10, Pxl11,
+    Pxl12, Pxl13, Pxl14, Pxl15, Pxl16,
+    Curation, Curation2, Curation3, Curation4, Curation5, Curation6,
+    Curation7, Curation8, Curation9, Curation10, Curation11, Curation12,
+    Curation13, Curation14)
+
+  private lazy val registry = Gates.merge(gates)
+
+  /** Every gate query by key, merged once from [[gates]]. The merge
+    * fails loudly when a key appears in two files or a file's oracle
+    * keys differ from its query keys.
+    */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = registry._1
+
+  /** For each key in [[queries]], the equivalent ANSI SQL that DuckDB
+    * runs on the same parquet tables; the key sets are equal.
+    */
+  def oracleSql: Map[String, String] = registry._2
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -144,6 +144,15 @@ object MlAggregators {
     */
   def kmeansFit(c: Column, k: Int, iters: Int, cap: Int = 128): Column =
     udaf(new KMeansAgg(k, cap, iters)).apply(c)
+
+  /** The centroids of a [[kmeansFit]] model string `[[x,..],[x,..],..]`. */
+  def kmeansCentroids(model: String): Seq[Seq[Double]] =
+    model.stripPrefix("[[").stripSuffix("]]").split("\\],\\[")
+      .map(_.split(",").map(_.toDouble).toSeq).toSeq
+
+  /** The init-only `k`-cell quantizer of `c` over `df`: one agg job. */
+  def fitCentroids(df: DataFrame, c: Column, k: Int): Seq[Seq[Double]] =
+    kmeansCentroids(df.agg(kmeansFit(c, k, iters = 0).as("m")).head().getString(0))
   def pprof(stack: Column, count: Column): Column =
     udaf(new PprofAgg).apply(stack, count)
 }

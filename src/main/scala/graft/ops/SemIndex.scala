@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.MlAggregators
 
 /** The PERSISTED SEMANTIC dedup index — the embedding-space sibling of
   * the lexical [[Dedup.writeDedupIndex]] lifecycle, completing the
@@ -71,12 +72,7 @@ object SemIndex {
   def bootstrap(spark: SparkSession, snapshot: DataFrame,
                 p: Paths): Unit = {
     import spark.implicits._
-    val model = vecs(snapshot)
-      .agg(graft.functions.MlAggregators.kmeansFit(col("e"), NCells,
-        iters = 0).as("m"))
-      .head().getString(0)
-    val seeds = model.stripPrefix("[[").stripSuffix("]]").split("\\],\\[")
-      .map(_.split(",").map(_.toDouble).toSeq).toSeq
+    val seeds = MlAggregators.fitCentroids(vecs(snapshot), col("e"), NCells)
     seeds.zipWithIndex.map { case (se, i) => (i + 1, se) }
       .toDF("sid", "se")
       .repartition(1).write.mode("overwrite").parquet(p.seeds)
@@ -359,12 +355,7 @@ object SemIndex {
     import spark.implicits._
     val v = spark.read.parquet(src.index)
       .select(col("vec_id"), col("e").cast("array<double>").as("e"))
-    val model = v
-      .agg(graft.functions.MlAggregators.kmeansFit(col("e"), nCells,
-        iters = 0).as("m"))
-      .head().getString(0)
-    val seeds = model.stripPrefix("[[").stripSuffix("]]").split("\\],\\[")
-      .map(_.split(",").map(_.toDouble).toSeq).toSeq
+    val seeds = MlAggregators.fitCentroids(v, col("e"), nCells)
     seeds.zipWithIndex.map { case (se, i) => (i + 1, se) }
       .toDF("sid", "se")
       .repartition(1).write.mode("overwrite").parquet(dst.seeds)

@@ -1,8 +1,12 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.functions.MlAggregators
 import graft.ops.{Corpus, Dedup, Similarity}
 import Q._
+import graft.ops.Dedup.h60Sql
+import NorthStar.{K, BANDS, NGRAM, sh, sigCtes, bandsSql, candCtes, interCtes, pairsCte,
+  reachCtes, compCte}
 
 /** Round-7 curation tranche: incremental (snapshot+delta) dedup, soft
   * dedup reweighting, segment-level boilerplate removal, weighted
@@ -11,11 +15,7 @@ import Q._
   * the same constants as the Scala operators (the NorthStar pattern) so
   * both engines evaluate the identical algorithm.
   */
-object Curation {
-
-  private[queries] val K = 16
-  private[queries] val BANDS = 4
-  private[queries] val NGRAM = 3
+object Curation extends Gates {
 
   val queries: Map[String, QFn] = Map(
     // Incremental dedup: the corpus is doc_id % 5 != 0, the incoming
@@ -125,19 +125,16 @@ object Curation {
     "q275_ann_ivfpq" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val (m, sd, ksub, ncell) = (4, 16, 8, 8)
-      def parse(s0: String) = s0.stripPrefix("[[").stripSuffix("]]")
-        .split("\\],\\[").map(_.split(",").map(_.toDouble).toSeq).toSeq
-      val cells = parse(emb.agg(graft.functions.MlAggregators.kmeansFit(
-          col("embedding").cast("array<double>"), ncell, iters = 0).as("m"))
-        .head().getString(0))
+      val cells = MlAggregators.fitCentroids(emb,
+        col("embedding").cast("array<double>"), ncell)
       val resid = Similarity.l2Residuals(emb, "vec_id", "embedding", cells)
       val cbRow = resid.agg(
-        graft.functions.MlAggregators.kmeansFit(
+        MlAggregators.kmeansFit(
           slice(col("residual"), 1, sd), ksub, iters = 0).as("m0"),
-        (1 until m).map(j => graft.functions.MlAggregators.kmeansFit(
+        (1 until m).map(j => MlAggregators.kmeansFit(
           slice(col("residual"), j * sd + 1, sd), ksub,
           iters = 0).as(s"m$j")): _*).head()
-      val cbs = (0 until m).map(j => parse(cbRow.getString(j)))
+      val cbs = (0 until m).map(j => MlAggregators.kmeansCentroids(cbRow.getString(j)))
       Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 10), "vec_id",
           "embedding", 5, 64, cells, 2, cbs)
         .select(col("query_id"), col("neighbor_id"), col("rank"))
@@ -202,16 +199,7 @@ object Curation {
         .filter(col("source") =!= "src0")
       val out = graft.streaming.Streaming
         .streamingContamination(stream, evalSet, "text", "doc_id", 8)
-      val qn = "q279_mem_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      out.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start().awaitTermination()
-      val res = s.table(qn).orderBy("doc_id")
-      val rows = res.collect()
-      s.catalog.dropTempView(qn)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
+      drainMemory(s, out, "complete")(_.orderBy("doc_id"))
     }),
 
     // Count-Min-Sketch heavy-hitter contract: exact top-20 words +
@@ -235,26 +223,7 @@ object Curation {
 
   // ---- generated oracle SQL ------------------------------------------
 
-  private[queries] val sh = Dedup.shinglesSql("text", NGRAM)
-  private def h60(x: String) = Dedup.h60Sql(x)
   private val P = Dedup.P
-
-  /** MinHash signature CTEs over `src`, CTE names suffixed so two
-    * signature sets (corpus + batch) can coexist in one oracle query.
-    */
-  private[queries] def sigCtes(src: String, sfx: String) =
-    s"""sh$sfx AS (SELECT doc_id, unnest($sh) AS sh FROM $src),
-       |h$sfx AS (SELECT doc_id, (${h60("sh")}) % $P AS h FROM sh$sfx),
-       |sig$sfx AS (SELECT doc_id,
-       |${Dedup.perms(K).zipWithIndex.map { case ((a, b), i) =>
-             s"  min(($a * h + $b) % $P) AS s$i" }.mkString(",\n")}
-       |FROM h$sfx GROUP BY doc_id)""".stripMargin
-
-  private[queries] def bandsSql(sfx: String) = (0 until BANDS).map { b =>
-    val cols = (b * (K / BANDS) until (b + 1) * (K / BANDS))
-      .map(i => s"CAST(s$i AS VARCHAR)").mkString(" || ',' || ")
-    s"SELECT doc_id, $b AS band, md5($cols) AS bh FROM sig$sfx"
-  }.mkString("\nUNION ALL\n")
 
   /** The incremental (snapshot + delta) dedup decision SQL,
     * parameterized by the corpus/batch predicates so the q352
@@ -448,24 +417,11 @@ object Curation {
 
     "q270_soft_dedup" ->
       s"""WITH RECURSIVE ${sigCtes("documents", "")},
-         |bands AS (${bandsSql("")}),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |    AND a.doc_id < b.doc_id),
-         |g AS (SELECT DISTINCT doc_id, unnest($sh) AS g FROM documents),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id),
-         |inter AS (SELECT cand.da, cand.db, count(*) AS i
-         |  FROM cand JOIN g ga ON ga.doc_id = cand.da
-         |            JOIN g gb ON gb.doc_id = cand.db AND gb.g = ga.g
-         |  GROUP BY 1, 2),
-         |pairs AS (SELECT da, db FROM inter
-         |  JOIN sizes sa ON da = sa.doc_id JOIN sizes sb ON db = sb.doc_id
-         |  WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
-         |e AS (SELECT da AS u, db AS v FROM pairs UNION SELECT db, da FROM pairs),
-         |reach AS (SELECT u AS a, v AS b FROM e
-         |  UNION SELECT r.a, e.v FROM reach r JOIN e ON r.b = e.u),
-         |comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
-         |  FROM reach GROUP BY a),
+         |$candCtes,
+         |${interCtes("documents")},
+         |${pairsCte("pairs")},
+         |${reachCtes("pairs")},
+         |$compCte,
          |allc AS (SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
          |  FROM documents d LEFT JOIN comp c USING (doc_id)),
          |csize AS (SELECT component, count(*) AS cluster_size
@@ -477,31 +433,18 @@ object Curation {
 
     "q284_leakage_safe_split" ->
       s"""WITH RECURSIVE ${sigCtes("documents", "")},
-         |bands AS (${bandsSql("")}),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |    AND a.doc_id < b.doc_id),
-         |g AS (SELECT DISTINCT doc_id, unnest($sh) AS g FROM documents),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id),
-         |inter AS (SELECT cand.da, cand.db, count(*) AS i
-         |  FROM cand JOIN g ga ON ga.doc_id = cand.da
-         |            JOIN g gb ON gb.doc_id = cand.db AND gb.g = ga.g
-         |  GROUP BY 1, 2),
-         |pairs AS (SELECT da, db FROM inter
-         |  JOIN sizes sa ON da = sa.doc_id JOIN sizes sb ON db = sb.doc_id
-         |  WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
-         |e AS (SELECT da AS u, db AS v FROM pairs UNION SELECT db, da FROM pairs),
-         |reach AS (SELECT u AS a, v AS b FROM e
-         |  UNION SELECT r.a, e.v FROM reach r JOIN e ON r.b = e.u),
-         |comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
-         |  FROM reach GROUP BY a),
+         |$candCtes,
+         |${interCtes("documents")},
+         |${pairsCte("pairs")},
+         |${reachCtes("pairs")},
+         |$compCte,
          |allc AS (SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component
          |  FROM documents d LEFT JOIN comp c USING (doc_id))
          |SELECT doc_id, component,
          |  CASE WHEN h < 10 THEN 'test' WHEN h < 20 THEN 'val'
          |       ELSE 'train' END AS split
          |FROM (SELECT doc_id, component,
-         |    (${h60("CAST(component AS VARCHAR)")}) % 100 AS h FROM allc)
+         |    (${h60Sql("CAST(component AS VARCHAR)")}) % 100 AS h FROM allc)
          |ORDER BY doc_id""".stripMargin,
 
     "q271_boilerplate_segments" ->
@@ -527,7 +470,7 @@ object Curation {
 
     "q272_weighted_sample" ->
       s"""WITH ks AS (SELECT doc_id, n_chars,
-         |    CAST(floor(ln(((${h60("CAST(doc_id AS VARCHAR)")}) % $P + 1)
+         |    CAST(floor(ln(((${h60Sql("CAST(doc_id AS VARCHAR)")}) % $P + 1)
          |      / ${P + 1}.0) / n_chars * 1000000) AS BIGINT) AS es_key
          |  FROM documents),
          |sel AS (SELECT * FROM ks ORDER BY es_key DESC, doc_id LIMIT 40)
@@ -535,22 +478,14 @@ object Curation {
 
     "q273_minhash_calibration" ->
       s"""WITH ${sigCtes("documents", "")},
-         |bands AS (${bandsSql("")}),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |    AND a.doc_id < b.doc_id),
+         |$candCtes,
          |m AS (SELECT cand.da, cand.db,
          |    CAST(${(0 until K).map(i =>
                s"(CASE WHEN sa.s$i = sb.s$i THEN 1 ELSE 0 END)")
                .mkString(" + ")} AS BIGINT) AS sig_matches
          |  FROM cand JOIN sig sa ON sa.doc_id = cand.da
          |            JOIN sig sb ON sb.doc_id = cand.db),
-         |g AS (SELECT DISTINCT doc_id, unnest($sh) AS g FROM documents),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id),
-         |inter AS (SELECT cand.da, cand.db, count(*) AS i
-         |  FROM cand JOIN g ga ON ga.doc_id = cand.da
-         |            JOIN g gb ON gb.doc_id = cand.db AND gb.g = ga.g
-         |  GROUP BY 1, 2)
+         |${interCtes("documents")}
          |SELECT doc_a, doc_b, sig_matches, est_micro, jac_micro,
          |  abs(est_micro - jac_micro) AS err_micro
          |FROM (SELECT m.da AS doc_a, m.db AS doc_b, m.sig_matches,

@@ -10,7 +10,7 @@ import graft.queries.Q._
   * accumulate a file batch per day (q512 cent histogram, q513
   * distinct keys — answers invariant, file counts pinned shrinking).
   */
-object Curation10 {
+object Curation10 extends Gates {
 
   import graft.ops.Scale
 
@@ -218,10 +218,10 @@ object Curation10 {
             .select(lit(9300100L).as("doc_id"),
               lit(CapPrefix + " probe").as("text")))
         graft.ops.Dedup.writeDedupIndex(corpus, "text", "doc_id", root,
-          Curation.NGRAM, Curation.K, Curation.BANDS)
+          NorthStar.NGRAM, NorthStar.K, NorthStar.BANDS)
         graft.ops.Dedup.incrementalDedupCapped(root, corpus, batch,
-            "text", "doc_id", Curation.NGRAM, Curation.K,
-            Curation.BANDS, 0.8, bucketCap = 8)
+            "text", "doc_id", NorthStar.NGRAM, NorthStar.K,
+            NorthStar.BANDS, 0.8, bucketCap = 8)
           .orderBy("doc_id")
           .localCheckpoint(true)
       } finally Curation2.deleteDir(root)
@@ -249,23 +249,8 @@ object Curation10 {
          |FROM ($distinctOracle) ORDER BY event_type""".stripMargin,
 
     "q512_cent_state_compaction" ->
-      """WITH v AS (SELECT event_type AS g,
-        |    CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS c
-        |  FROM events WHERE event_type IS NOT NULL
-        |    AND value IS NOT NULL AND NOT isnan(value)),
-        |k AS (SELECT g, c, CAST(count(*) AS BIGINT) AS k FROM v
-        |  GROUP BY 1, 2),
-        |ct AS (SELECT g, c, k,
-        |    CAST(sum(k) OVER (PARTITION BY g ORDER BY c) AS BIGINT)
-        |      AS cum,
-        |    CAST(sum(k) OVER (PARTITION BY g) AS BIGINT) AS n FROM k)
-        |SELECT g AS event_type, CAST(max(n) AS BIGINT) AS n_rows,
-        |  min(CASE WHEN cum * 1000000 >= 500000 * n THEN c END)
-        |    AS p50_cents,
-        |  min(CASE WHEN cum * 1000000 >= 900000 * n THEN c END)
-        |    AS p90_cents,
-        |  min(CASE WHEN cum * 1000000 >= 990000 * n THEN c END)
-        |    AS p99_cents,
+      s"""WITH ${Curation7.centCountCtes},
+        |${Curation8.centQuantileCols},
         |  '1' AS files_reduced, '1' AS single_file
         |FROM ct GROUP BY g ORDER BY event_type""".stripMargin,
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.queries.Q._
+import graft.ops.Dedup.h60Sql
 
 /** Round-11 batch, part 2 — the trainer-facing PACK tape over the
   * streamed N-day lifecycle: the curated corpus laid out as one
@@ -13,11 +14,9 @@ import graft.queries.Q._
   * last_seq); q520 gates the per-day pack report (mass, sequence
   * span, boundary-straddling docs, stream position).
   */
-object Curation11 {
+object Curation11 extends Gates {
 
   import graft.ops.{CurationDay, CurationNDay, Pack, SemIndex}
-
-  private def h60(x: String) = graft.ops.Dedup.h60Sql(x)
 
   /** The two-day SEMANTIC-index lifecycle, once per dir per JVM:
     * bootstrap (frozen seeds + cell-partitioned snapshot index on
@@ -381,7 +380,7 @@ object Curation11 {
        |  UNION ALL SELECT 3, doc_id, text FROM admf3
        |  UNION ALL SELECT 4, doc_id, text FROM admf4),
        |pt AS (SELECT day, doc_id,
-       |    CAST((${h60("CAST(doc_id AS VARCHAR)")})
+       |    CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
        |      % ${CurationDay.NShards} AS INT) AS shard,
        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
        |  FROM pd),
@@ -489,25 +488,8 @@ object Curation11 {
        |  FROM documents d, xs, ys
        |  WHERE xs.x < 16 + $gid % 8
        |    AND ys.y < 16 + $gid % 5),
-       |cells AS (SELECT doc_id, (y * 8) // h AS cy, (x * 9) // w AS cx,
-       |    sum(v) AS s, count(*) AS c FROM px GROUP BY 1, 2, 3),
-       |bits AS (SELECT a.doc_id, a.cy, a.cx,
-       |    CASE WHEN a.s * b.c > b.s * a.c THEN 1 ELSE 0 END AS bit
-       |  FROM cells a JOIN cells b
-       |    ON a.doc_id = b.doc_id AND a.cy = b.cy AND b.cx = a.cx + 1
-       |  WHERE a.cx < 8),
-       |rowb AS (SELECT doc_id, cy,
-       |    CAST(sum(bit * (CAST(1 AS BIGINT) << cx)) AS BIGINT) AS rb
-       |  FROM bits GROUP BY doc_id, cy),
-       |rb2 AS (SELECT doc_id,
-       |${(0 until 8).map(i =>
-            s"  max(CASE WHEN cy = $i THEN rb END) AS r$i").mkString(",\n")}
-       |  FROM rowb GROUP BY doc_id),
-       |pbands AS (
-       |  SELECT doc_id, 0 AS band, r0 * 256 + r1 AS bv FROM rb2
-       |  UNION ALL SELECT doc_id, 1, r2 * 256 + r3 FROM rb2
-       |  UNION ALL SELECT doc_id, 2, r4 * 256 + r5 FROM rb2
-       |  UNION ALL SELECT doc_id, 3, r6 * 256 + r7 FROM rb2)""".stripMargin
+       |${NorthStar.dhashCtes},
+       |${NorthStar.rowBandsCtes("pbands")}""".stripMargin
 
   /** Day `sfx`'s verdicts: delta = the `d$sfx(doc_id)` CTE, index id
     * set = the `idx$sfx(doc_id)` CTE; band-collide then exact
@@ -612,6 +594,24 @@ object Curation11 {
        |  UNION ALL SELECT d.doc_id, d.text FROM documents d
        |    JOIN madm2 USING (doc_id))""".stripMargin
 
+  /** The q525 IVF probe over the grown index idx3: queries qs (vec_id % 8
+      * = 6), their two nearest cells qc, and the cosines sc in those cells.
+      */
+  private[queries] val semProbeCtes: String =
+    """qs AS (SELECT vec_id AS qid, e,
+      |    sqrt(list_sum(list_transform(e, x -> x * x))) AS qn
+      |  FROM v WHERE vec_id % 8 = 6),
+      |qc AS (SELECT qid, CAST(sid AS INT) AS cell FROM (
+      |  SELECT qs.qid, sn.sid, row_number() OVER (PARTITION BY qs.qid
+      |      ORDER BY list_sum(list_transform(range(64),
+      |        i -> qs.e[i+1] * se[i+1])) / (qs.qn * snrm) DESC, sid)
+      |      AS rn
+      |  FROM qs, sn) WHERE rn <= 2),
+      |sc AS (SELECT q.qid, x.vec_id,
+      |    list_sum(list_transform(range(64), i -> q.e[i+1] * x.e[i+1]))
+      |      / (q.qn * x.nrm) AS cos
+      |  FROM qc JOIN qs q USING (qid) JOIN idx3 x ON x.cell = qc.cell)""".stripMargin
+
   val oracles: Map[String, String] = Map(
 
     "q540_multimodal_day_decisions" ->
@@ -652,24 +652,12 @@ object Curation11 {
       s"""WITH $semCtes
          |SELECT cell, count(*) AS n_vecs,
          |  min(vec_id) AS min_vec, max(vec_id) AS max_vec,
-         |  bit_xor(${h60("CAST(vec_id AS VARCHAR)")}) AS checksum
+         |  bit_xor(${h60Sql("CAST(vec_id AS VARCHAR)")}) AS checksum
          |FROM idx3 GROUP BY cell ORDER BY cell""".stripMargin,
 
     "q525_sem_search" ->
       s"""WITH $semCtes,
-         |qs AS (SELECT vec_id AS qid, e,
-         |    sqrt(list_sum(list_transform(e, x -> x * x))) AS qn
-         |  FROM v WHERE vec_id % 8 = 6),
-         |qc AS (SELECT qid, CAST(sid AS INT) AS cell FROM (
-         |  SELECT qs.qid, sn.sid, row_number() OVER (PARTITION BY qs.qid
-         |      ORDER BY list_sum(list_transform(range(64),
-         |        i -> qs.e[i+1] * se[i+1])) / (qs.qn * snrm) DESC, sid)
-         |      AS rn
-         |  FROM qs, sn) WHERE rn <= 2),
-         |sc AS (SELECT q.qid, x.vec_id,
-         |    list_sum(list_transform(range(64), i -> q.e[i+1] * x.e[i+1]))
-         |      / (q.qn * x.nrm) AS cos
-         |  FROM qc JOIN qs q USING (qid) JOIN idx3 x ON x.cell = qc.cell)
+         |$semProbeCtes
          |SELECT qid, CAST(rank AS INT) AS rank, vec_id,
          |  round(cos, 6) + 0.0 AS cos FROM (
          |  SELECT *, row_number() OVER (PARTITION BY qid
@@ -682,14 +670,14 @@ object Curation11 {
       s"""WITH $semCtes
          |SELECT cell, count(*) AS n_vecs,
          |  min(vec_id) AS min_vec, max(vec_id) AS max_vec,
-         |  bit_xor(${h60("CAST(vec_id AS VARCHAR)")}) AS checksum
+         |  bit_xor(${h60Sql("CAST(vec_id AS VARCHAR)")}) AS checksum
          |FROM idx3 GROUP BY cell ORDER BY cell""".stripMargin,
 
     "q528_pack_rebuild" ->
       s"""WITH ${Curation9.nDayCtes},
          |${Curation9.retractionCtes},
          |pt AS (SELECT 0 AS day, doc_id,
-         |    CAST((${h60("CAST(doc_id AS VARCHAR)")})
+         |    CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
          |      % ${CurationDay.NShards} AS INT) AS shard,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
          |  FROM corpus5),
@@ -706,19 +694,7 @@ object Curation11 {
 
     "q529_sem_search_recall" ->
       s"""WITH $semCtes,
-         |qs AS (SELECT vec_id AS qid, e,
-         |    sqrt(list_sum(list_transform(e, x -> x * x))) AS qn
-         |  FROM v WHERE vec_id % 8 = 6),
-         |qc AS (SELECT qid, CAST(sid AS INT) AS cell FROM (
-         |  SELECT qs.qid, sn.sid, row_number() OVER (PARTITION BY qs.qid
-         |      ORDER BY list_sum(list_transform(range(64),
-         |        i -> qs.e[i+1] * se[i+1])) / (qs.qn * snrm) DESC, sid)
-         |      AS rn
-         |  FROM qs, sn) WHERE rn <= 2),
-         |sc AS (SELECT q.qid, x.vec_id,
-         |    list_sum(list_transform(range(64), i -> q.e[i+1] * x.e[i+1]))
-         |      / (q.qn * x.nrm) AS cos
-         |  FROM qc JOIN qs q USING (qid) JOIN idx3 x ON x.cell = qc.cell),
+         |$semProbeCtes,
          |approx AS (SELECT qid, vec_id FROM (
          |  SELECT *, row_number() OVER (PARTITION BY qid
          |    ORDER BY cos DESC, vec_id) AS rank FROM sc) WHERE rank <= 5),
@@ -764,7 +740,7 @@ object Curation11 {
       s"""WITH $semCtes
          |SELECT cell, count(*) AS n_vecs,
          |  min(vec_id) AS min_vec, max(vec_id) AS max_vec,
-         |  bit_xor(${h60("CAST(vec_id AS VARCHAR)")}) AS checksum,
+         |  bit_xor(${h60Sql("CAST(vec_id AS VARCHAR)")}) AS checksum,
          |  'sem1,sem2' AS ledger_days, '1' AS replay_stable
          |FROM idx3 GROUP BY cell ORDER BY cell""".stripMargin,
 
@@ -790,7 +766,7 @@ object Curation11 {
          |     ORDER BY c DESC, sid) AS rn FROM csr) WHERE rn = 1)
          |SELECT cell, count(*) AS n_vecs,
          |  min(vec_id) AS min_vec, max(vec_id) AS max_vec,
-         |  bit_xor(${h60("CAST(vec_id AS VARCHAR)")}) AS checksum
+         |  bit_xor(${h60Sql("CAST(vec_id AS VARCHAR)")}) AS checksum
          |FROM cellr GROUP BY cell ORDER BY cell""".stripMargin,
 
     "q536_lsh_design_curve" ->
@@ -857,20 +833,20 @@ object Curation11 {
     "q531_manifest_diff" ->
       s"""WITH ${Curation9.nDayCtes},
          |${Curation9.retractionCtes},
-         |mfb AS (SELECT CAST((${h60("CAST(doc_id AS VARCHAR)")})
+         |mfb AS (SELECT CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
          |      % ${CurationDay.NShards} AS INT) AS shard,
          |    CAST(count(*) AS BIGINT) AS n_docs,
          |    CAST(sum(len(string_split(text, ' '))) AS BIGINT)
          |      AS n_tokens,
-         |    bit_xor(${h60("CAST(doc_id AS VARCHAR) || ':' || text")})
+         |    bit_xor(${h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")})
          |      AS ck
          |  FROM grown4 GROUP BY 1),
-         |mfa AS (SELECT CAST((${h60("CAST(doc_id AS VARCHAR)")})
+         |mfa AS (SELECT CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
          |      % ${CurationDay.NShards} AS INT) AS shard,
          |    CAST(count(*) AS BIGINT) AS n_docs,
          |    CAST(sum(len(string_split(text, ' '))) AS BIGINT)
          |      AS n_tokens,
-         |    bit_xor(${h60("CAST(doc_id AS VARCHAR) || ':' || text")})
+         |    bit_xor(${h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")})
          |      AS ck
          |  FROM corpus5 GROUP BY 1)
          |SELECT shard,
@@ -953,8 +929,8 @@ object Curation11 {
 
     "q523_group_split" ->
       s"""WITH a AS (SELECT *,
-         |    CASE WHEN (${h60("source")}) % 1000000 < 100000 THEN 'test'
-         |      WHEN (${h60("source")}) % 1000000 < 200000 THEN 'val'
+         |    CASE WHEN (${h60Sql("source")}) % 1000000 < 100000 THEN 'test'
+         |      WHEN (${h60Sql("source")}) % 1000000 < 200000 THEN 'val'
          |      ELSE 'train' END AS split
          |  FROM documents),
          |per AS (SELECT split, source, count(*) AS n_docs,

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.queries.Q._
+import graft.ops.Dedup.h60Sql
 
 /** Round-12 batch — the STREAMED, LEDGERED, 4-STAGE multimodal
   * admission lifecycle (the round-11 verdict's top task, plus the
@@ -25,11 +26,9 @@ import graft.queries.Q._
   *    [[graft.ops.Multimodal.audioFingerprint]] energy-sign bytes —
   *    one banded-Hamming index implementation, two modalities).
   */
-object Curation12 {
+object Curation12 extends Gates {
 
   import graft.ops.{CurationNDay, MultiDay, PhashIndex, SemIndex}
-
-  private def h60(x: String) = graft.ops.Dedup.h60Sql(x)
 
   // ---- Spark-side lifecycles (once per dir per JVM) -----------------
 
@@ -862,6 +861,163 @@ object Curation12 {
        |idxa3 AS (SELECT doc_id FROM idxa2
        |  UNION ALL SELECT doc_id FROM decBa2 WHERE decision = 'admitted')""".stripMargin
 
+  /** The retained N-day corpus after the day-1 TTL: admitted days 2..4. */
+  private[queries] val ttlCorpusCte: String =
+    """corpusT AS MATERIALIZED (
+      |  SELECT doc_id, text FROM admf2
+      |  UNION ALL SELECT doc_id, text FROM admf3
+      |  UNION ALL SELECT doc_id, text FROM admf4)""".stripMargin
+
+  /** `from`'s docs with shard, token count and content hash h, as `name`. */
+  private[queries] def shardCte(name: String, from: String): String =
+    s"""$name AS (SELECT doc_id,
+       |    CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
+       |      % ${graft.ops.CurationDay.NShards} AS INT) AS shard,
+       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
+       |    (${h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
+       |  FROM $from)""".stripMargin
+
+  /** The shard manifest's per-shard columns over a [[shardCte]]. */
+  private[queries] val manifestCols: String =
+    """SELECT shard, count(*) AS n_docs,
+      |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+      |  min(doc_id) AS min_id, max(doc_id) AS max_id,
+      |  bit_xor(h) AS checksum""".stripMargin
+
+  /** The packing tape rebuilt over `from`'s docs: pt, tape and its rows. */
+  private[queries] def tapeSql(from: String): String =
+    s"""pt AS (SELECT 0 AS day, doc_id,
+       |    CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
+       |      % ${graft.ops.CurationDay.NShards} AS INT) AS shard,
+       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
+       |  FROM $from),
+       |tape AS (SELECT day, doc_id, shard, n_tok,
+       |    CAST(sum(n_tok) OVER (ORDER BY shard, doc_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+       |      AS BIGINT) AS cum
+       |  FROM pt)
+       |SELECT day, doc_id, shard, n_tok,
+       |  cum - n_tok AS start_tok,
+       |  (cum - n_tok) // ${graft.ops.Pack.SeqLen} AS first_seq,
+       |  (cum - 1) // ${graft.ops.Pack.SeqLen} AS last_seq
+       |FROM tape ORDER BY doc_id""".stripMargin
+
+  /** The q557 cap machinery (masses → 55% cap → horizon → capped
+    * corpus), shared by the streamed-cap oracles.
+    */
+  private[queries] val capCtes: String =
+    s"""mass AS (
+       |  SELECT 1 AS day, CAST(sum(len(string_split(text, ' ')))
+       |    AS BIGINT) AS m FROM admf1
+       |  UNION ALL SELECT 2, CAST(sum(len(string_split(text, ' ')))
+       |    AS BIGINT) FROM admf2
+       |  UNION ALL SELECT 3, CAST(sum(len(string_split(text, ' ')))
+       |    AS BIGINT) FROM admf3
+       |  UNION ALL SELECT 4, CAST(sum(len(string_split(text, ' ')))
+       |    AS BIGINT) FROM admf4),
+       |cap AS (SELECT (CAST(sum(m) AS BIGINT) * 55) // 100 AS c
+       |  FROM mass),
+       |keepk AS (SELECT CAST(min(k) AS BIGINT) AS k FROM (
+       |  SELECT ks.k, sum(m) AS tail
+       |  FROM (SELECT unnest(range(1, 5)) AS k) ks
+       |  JOIN mass ON mass.day >= ks.k GROUP BY ks.k)
+       |  WHERE tail <= (SELECT c FROM cap)),
+       |corpusC AS MATERIALIZED (
+       |  SELECT doc_id, text FROM admf1
+       |    WHERE (SELECT k FROM keepk) <= 1
+       |  UNION ALL SELECT doc_id, text FROM admf2
+       |    WHERE (SELECT k FROM keepk) <= 2
+       |  UNION ALL SELECT doc_id, text FROM admf3
+       |    WHERE (SELECT k FROM keepk) <= 3
+       |  UNION ALL SELECT doc_id, text FROM admf4
+       |    WHERE (SELECT k FROM keepk) <= 4)""".stripMargin
+
+  /** q543's lexical corpus after day 3 and the three days' admission counts. */
+  private[queries] val mmCardAdmCtes: String =
+    """lcorp4 AS (SELECT doc_id, text FROM lcorp3
+      |  UNION ALL SELECT d.doc_id, d.text FROM pdocs d
+      |    JOIN madm3 USING (doc_id)),
+      |adm AS (SELECT count(*) AS n1 FROM madm1),
+      |adm2c AS (SELECT count(*) AS n2 FROM madm2),
+      |adm3c AS (SELECT count(*) AS n3 FROM madm3)""".stripMargin
+
+  /** q543's card rows (modality, metric, value) over lcorp4 and the counts. */
+  private[queries] val mmCardRows: String =
+    """  SELECT 'lexical' AS modality, 'n_hashes' AS metric,
+      |    CAST(count(DISTINCT md5(text)) AS BIGINT) AS value
+      |    FROM lcorp4
+      |  UNION ALL SELECT 'lexical', 'n_band_rows',
+      |    4 * count(*) FROM lcorp4
+      |  UNION ALL SELECT 'semantic', 'n_vecs',
+      |    (SELECT count(*) FROM msnapv) + (SELECT n1 FROM adm)
+      |      + (SELECT n2 FROM adm2c) + (SELECT n3 FROM adm3c)
+      |  UNION ALL SELECT 'perceptual', 'n_hashes',
+      |    (SELECT count(*) FROM idxP3) + (SELECT n3 FROM adm3c)
+      |  UNION ALL SELECT 'perceptual', 'n_band_rows',
+      |    4 * ((SELECT count(*) FROM idxP3) + (SELECT n3 FROM adm3c))
+      |  UNION ALL SELECT 'audio', 'n_hashes',
+      |    (SELECT count(*) FROM idxP3) + (SELECT n3 FROM adm3c)
+      |  UNION ALL SELECT 'audio', 'n_band_rows',
+      |    4 * ((SELECT count(*) FROM idxP3) + (SELECT n3 FROM adm3c))
+      |  UNION ALL SELECT 'media', 'n_assets',
+      |    (SELECT count(*) FROM pdocs) + 3)
+      |ORDER BY modality, metric""".stripMargin
+
+  /** The two six-stage days' composed decisions. */
+  private[queries] val mm6DecisionRows: String =
+    """SELECT * FROM (
+      |  SELECT 1 AS day, doc_id, d_lex, d_sem, d_ph, d_aud,
+      |    d_contam, d_qual, decision FROM fin61
+      |  UNION ALL SELECT 2, doc_id, d_lex, d_sem, d_ph, d_aud,
+      |    d_contam, d_qual, decision FROM fin62)
+      |ORDER BY day, doc_id""".stripMargin
+
+  /** The six-stage card rows over lcorp63. */
+  private[queries] val mm6CardRows: String =
+    """  SELECT 'lexical' AS modality, 'n_hashes' AS metric,
+      |    CAST(count(DISTINCT md5(text)) AS BIGINT) AS value
+      |    FROM lcorp63
+      |  UNION ALL SELECT 'lexical', 'n_band_rows',
+      |    4 * count(*) FROM lcorp63
+      |  UNION ALL SELECT 'semantic', 'n_vecs', count(*) FROM lcorp63
+      |  UNION ALL SELECT 'perceptual', 'n_hashes',
+      |    count(*) FROM lcorp63
+      |  UNION ALL SELECT 'perceptual', 'n_band_rows',
+      |    4 * count(*) FROM lcorp63
+      |  UNION ALL SELECT 'audio', 'n_hashes', count(*) FROM lcorp63
+      |  UNION ALL SELECT 'audio', 'n_band_rows',
+      |    4 * count(*) FROM lcorp63
+      |  UNION ALL SELECT 'media', 'n_assets',
+      |    (SELECT count(*) FROM pool6)
+      |      + (SELECT count(*) FROM sm6 WHERE src IS NOT NULL))
+      |ORDER BY modality, metric""".stripMargin
+
+  /** The retained docs after the day-1 TTL: snapshot + day-2/-3 admissions. */
+  private[queries] val ttlRetCte: String =
+    """ret AS MATERIALIZED (SELECT doc_id, text FROM pdocs
+      |  WHERE doc_id % 8 >= 4
+      |  UNION ALL SELECT d.doc_id, d.text FROM pdocs d
+      |    JOIN madm2 USING (doc_id)
+      |  UNION ALL SELECT d.doc_id, d.text FROM pdocs d
+      |    JOIN madm3 USING (doc_id))""".stripMargin
+
+  /** The card rows over the retained docs `ret`. */
+  private[queries] val ttlCardRows: String =
+    """  SELECT 'lexical' AS modality, 'n_hashes' AS metric,
+      |    CAST(count(DISTINCT md5(text)) AS BIGINT) AS value FROM ret
+      |  UNION ALL SELECT 'lexical', 'n_band_rows',
+      |    4 * count(*) FROM ret
+      |  UNION ALL SELECT 'semantic', 'n_vecs', count(*) FROM ret
+      |  UNION ALL SELECT 'perceptual', 'n_hashes', count(*) FROM ret
+      |  UNION ALL SELECT 'perceptual', 'n_band_rows',
+      |    4 * count(*) FROM ret
+      |  UNION ALL SELECT 'audio', 'n_hashes', count(*) FROM ret
+      |  UNION ALL SELECT 'audio', 'n_band_rows',
+      |    4 * count(*) FROM ret
+      |  UNION ALL SELECT 'media', 'n_assets',
+      |    (SELECT count(*) FROM pdocs) + 3)
+      |ORDER BY modality, metric""".stripMargin
+
   val oracles: Map[String, String] = Map(
 
     "q542_mm_stream_decisions" -> mmDecisionsSql,
@@ -874,33 +1030,10 @@ object Curation12 {
 
     "q543_mm_stream_cards" ->
       s"""WITH $mmCtes,
-         |lcorp4 AS (SELECT doc_id, text FROM lcorp3
-         |  UNION ALL SELECT d.doc_id, d.text FROM pdocs d
-         |    JOIN madm3 USING (doc_id)),
-         |adm AS (SELECT count(*) AS n1 FROM madm1),
-         |adm2c AS (SELECT count(*) AS n2 FROM madm2),
-         |adm3c AS (SELECT count(*) AS n3 FROM madm3)
+         |$mmCardAdmCtes
          |SELECT *, 'mm1,mm2,mm3' AS ledger_days, '1' AS replay_stable
          |FROM (
-         |  SELECT 'lexical' AS modality, 'n_hashes' AS metric,
-         |    CAST(count(DISTINCT md5(text)) AS BIGINT) AS value
-         |    FROM lcorp4
-         |  UNION ALL SELECT 'lexical', 'n_band_rows',
-         |    4 * count(*) FROM lcorp4
-         |  UNION ALL SELECT 'semantic', 'n_vecs',
-         |    (SELECT count(*) FROM msnapv) + (SELECT n1 FROM adm)
-         |      + (SELECT n2 FROM adm2c) + (SELECT n3 FROM adm3c)
-         |  UNION ALL SELECT 'perceptual', 'n_hashes',
-         |    (SELECT count(*) FROM idxP3) + (SELECT n3 FROM adm3c)
-         |  UNION ALL SELECT 'perceptual', 'n_band_rows',
-         |    4 * ((SELECT count(*) FROM idxP3) + (SELECT n3 FROM adm3c))
-         |  UNION ALL SELECT 'audio', 'n_hashes',
-         |    (SELECT count(*) FROM idxP3) + (SELECT n3 FROM adm3c)
-         |  UNION ALL SELECT 'audio', 'n_band_rows',
-         |    4 * ((SELECT count(*) FROM idxP3) + (SELECT n3 FROM adm3c))
-         |  UNION ALL SELECT 'media', 'n_assets',
-         |    (SELECT count(*) FROM pdocs) + 3)
-         |ORDER BY modality, metric""".stripMargin,
+         |$mmCardRows""".stripMargin,
 
     "q544_media_hashes" ->
       s"""WITH $mmCtes
@@ -914,22 +1047,12 @@ object Curation12 {
 
     "q559_mm6_decisions" ->
       s"""WITH $mm6Ctes
-         |SELECT * FROM (
-         |  SELECT 1 AS day, doc_id, d_lex, d_sem, d_ph, d_aud,
-         |    d_contam, d_qual, decision FROM fin61
-         |  UNION ALL SELECT 2, doc_id, d_lex, d_sem, d_ph, d_aud,
-         |    d_contam, d_qual, decision FROM fin62)
-         |ORDER BY day, doc_id""".stripMargin,
+         |$mm6DecisionRows""".stripMargin,
 
     // second engine path, same composed six-stage answer
     "q561_mm6_stream_decisions" ->
       s"""WITH $mm6Ctes
-         |SELECT * FROM (
-         |  SELECT 1 AS day, doc_id, d_lex, d_sem, d_ph, d_aud,
-         |    d_contam, d_qual, decision FROM fin61
-         |  UNION ALL SELECT 2, doc_id, d_lex, d_sem, d_ph, d_aud,
-         |    d_contam, d_qual, decision FROM fin62)
-         |ORDER BY day, doc_id""".stripMargin,
+         |$mm6DecisionRows""".stripMargin,
 
     "q562_mm6_stream_cards" ->
       s"""WITH $mm6Ctes,
@@ -938,23 +1061,7 @@ object Curation12 {
          |    JOIN madm62 USING (doc_id))
          |SELECT *, 'mm1,mm2' AS ledger_days, '1' AS replay_stable
          |FROM (
-         |  SELECT 'lexical' AS modality, 'n_hashes' AS metric,
-         |    CAST(count(DISTINCT md5(text)) AS BIGINT) AS value
-         |    FROM lcorp63
-         |  UNION ALL SELECT 'lexical', 'n_band_rows',
-         |    4 * count(*) FROM lcorp63
-         |  UNION ALL SELECT 'semantic', 'n_vecs', count(*) FROM lcorp63
-         |  UNION ALL SELECT 'perceptual', 'n_hashes',
-         |    count(*) FROM lcorp63
-         |  UNION ALL SELECT 'perceptual', 'n_band_rows',
-         |    4 * count(*) FROM lcorp63
-         |  UNION ALL SELECT 'audio', 'n_hashes', count(*) FROM lcorp63
-         |  UNION ALL SELECT 'audio', 'n_band_rows',
-         |    4 * count(*) FROM lcorp63
-         |  UNION ALL SELECT 'media', 'n_assets',
-         |    (SELECT count(*) FROM pool6)
-         |      + (SELECT count(*) FROM sm6 WHERE src IS NOT NULL))
-         |ORDER BY modality, metric""".stripMargin,
+         |$mm6CardRows""".stripMargin,
 
     "q560_mm6_cards" ->
       s"""WITH $mm6Ctes,
@@ -962,23 +1069,7 @@ object Curation12 {
          |  UNION ALL SELECT p.doc_id, p.text FROM pool6 p
          |    JOIN madm62 USING (doc_id))
          |SELECT * FROM (
-         |  SELECT 'lexical' AS modality, 'n_hashes' AS metric,
-         |    CAST(count(DISTINCT md5(text)) AS BIGINT) AS value
-         |    FROM lcorp63
-         |  UNION ALL SELECT 'lexical', 'n_band_rows',
-         |    4 * count(*) FROM lcorp63
-         |  UNION ALL SELECT 'semantic', 'n_vecs', count(*) FROM lcorp63
-         |  UNION ALL SELECT 'perceptual', 'n_hashes',
-         |    count(*) FROM lcorp63
-         |  UNION ALL SELECT 'perceptual', 'n_band_rows',
-         |    4 * count(*) FROM lcorp63
-         |  UNION ALL SELECT 'audio', 'n_hashes', count(*) FROM lcorp63
-         |  UNION ALL SELECT 'audio', 'n_band_rows',
-         |    4 * count(*) FROM lcorp63
-         |  UNION ALL SELECT 'media', 'n_assets',
-         |    (SELECT count(*) FROM pool6)
-         |      + (SELECT count(*) FROM sm6 WHERE src IS NOT NULL))
-         |ORDER BY modality, metric""".stripMargin,
+         |$mm6CardRows""".stripMargin,
 
     "q555_mm_funnel" -> {
       val days = (1 to 3).flatMap { k =>
@@ -1037,7 +1128,7 @@ object Curation12 {
          |$refitCtes
          |SELECT cell, count(*) AS n_vecs,
          |  min(vec_id) AS min_vec, max(vec_id) AS max_vec,
-         |  bit_xor(${h60("CAST(vec_id AS VARCHAR)")}) AS checksum,
+         |  bit_xor(${h60Sql("CAST(vec_id AS VARCHAR)")}) AS checksum,
          |  (SELECT k FROM kc) AS n_cells_after
          |FROM cellr GROUP BY cell ORDER BY cell""".stripMargin,
 
@@ -1074,55 +1165,19 @@ object Curation12 {
     // semantics); the media artifact keeps every decoded asset.
     "q550_mm_ttl_cards" ->
       s"""WITH $mmCtes,
-         |ret AS MATERIALIZED (SELECT doc_id, text FROM pdocs
-         |  WHERE doc_id % 8 >= 4
-         |  UNION ALL SELECT d.doc_id, d.text FROM pdocs d
-         |    JOIN madm2 USING (doc_id)
-         |  UNION ALL SELECT d.doc_id, d.text FROM pdocs d
-         |    JOIN madm3 USING (doc_id))
+         |$ttlRetCte
          |SELECT * FROM (
-         |  SELECT 'lexical' AS modality, 'n_hashes' AS metric,
-         |    CAST(count(DISTINCT md5(text)) AS BIGINT) AS value FROM ret
-         |  UNION ALL SELECT 'lexical', 'n_band_rows',
-         |    4 * count(*) FROM ret
-         |  UNION ALL SELECT 'semantic', 'n_vecs', count(*) FROM ret
-         |  UNION ALL SELECT 'perceptual', 'n_hashes', count(*) FROM ret
-         |  UNION ALL SELECT 'perceptual', 'n_band_rows',
-         |    4 * count(*) FROM ret
-         |  UNION ALL SELECT 'audio', 'n_hashes', count(*) FROM ret
-         |  UNION ALL SELECT 'audio', 'n_band_rows',
-         |    4 * count(*) FROM ret
-         |  UNION ALL SELECT 'media', 'n_assets',
-         |    (SELECT count(*) FROM pdocs) + 3)
-         |ORDER BY modality, metric""".stripMargin,
+         |$ttlCardRows""".stripMargin,
 
     // The q550 card with the TTL ledger facts pinned: ledger ==
     // [mm1, mm2, mm3, ttl1] exactly, replayed TTL a no-op.
     "q568_mm_ttl_ledger" ->
       s"""WITH $mmCtes,
-         |ret AS MATERIALIZED (SELECT doc_id, text FROM pdocs
-         |  WHERE doc_id % 8 >= 4
-         |  UNION ALL SELECT d.doc_id, d.text FROM pdocs d
-         |    JOIN madm2 USING (doc_id)
-         |  UNION ALL SELECT d.doc_id, d.text FROM pdocs d
-         |    JOIN madm3 USING (doc_id))
+         |$ttlRetCte
          |SELECT *, 'mm1,mm2,mm3,ttl1' AS ledger_days,
          |  '1' AS replay_stable
          |FROM (
-         |  SELECT 'lexical' AS modality, 'n_hashes' AS metric,
-         |    CAST(count(DISTINCT md5(text)) AS BIGINT) AS value FROM ret
-         |  UNION ALL SELECT 'lexical', 'n_band_rows',
-         |    4 * count(*) FROM ret
-         |  UNION ALL SELECT 'semantic', 'n_vecs', count(*) FROM ret
-         |  UNION ALL SELECT 'perceptual', 'n_hashes', count(*) FROM ret
-         |  UNION ALL SELECT 'perceptual', 'n_band_rows',
-         |    4 * count(*) FROM ret
-         |  UNION ALL SELECT 'audio', 'n_hashes', count(*) FROM ret
-         |  UNION ALL SELECT 'audio', 'n_band_rows',
-         |    4 * count(*) FROM ret
-         |  UNION ALL SELECT 'media', 'n_assets',
-         |    (SELECT count(*) FROM pdocs) + 3)
-         |ORDER BY modality, metric""".stripMargin,
+         |$ttlCardRows""".stripMargin,
 
     // Day-1 re-offer against the retained indexes: the day-1 stage
     // machinery verbatim, index sets = snapshot + day-2/-3 admissions.
@@ -1164,86 +1219,26 @@ object Curation12 {
     // (admitted days >= 2 only — snapshot + day 1 aged out).
     "q552_ttl_manifest" ->
       s"""WITH ${Curation9.nDayCtes},
-         |corpusT AS MATERIALIZED (
-         |  SELECT doc_id, text FROM admf2
-         |  UNION ALL SELECT doc_id, text FROM admf3
-         |  UNION ALL SELECT doc_id, text FROM admf4),
-         |m AS (SELECT doc_id,
-         |    CAST((${h60("CAST(doc_id AS VARCHAR)")})
-         |      % ${graft.ops.CurationDay.NShards} AS INT) AS shard,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    (${h60("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
-         |  FROM corpusT)
-         |SELECT shard, count(*) AS n_docs,
-         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-         |  min(doc_id) AS min_id, max(doc_id) AS max_id,
-         |  bit_xor(h) AS checksum
+         |$ttlCorpusCte,
+         |${shardCte("m", "corpusT")}
+         |$manifestCols
          |FROM m GROUP BY shard ORDER BY shard""".stripMargin,
 
     // The rebuilt tape over the retained corpus (q528's contract at
     // the TTL boundary).
     "q553_ttl_tape" ->
       s"""WITH ${Curation9.nDayCtes},
-         |corpusT AS MATERIALIZED (
-         |  SELECT doc_id, text FROM admf2
-         |  UNION ALL SELECT doc_id, text FROM admf3
-         |  UNION ALL SELECT doc_id, text FROM admf4),
-         |pt AS (SELECT 0 AS day, doc_id,
-         |    CAST((${h60("CAST(doc_id AS VARCHAR)")})
-         |      % ${graft.ops.CurationDay.NShards} AS INT) AS shard,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-         |  FROM corpusT),
-         |tape AS (SELECT day, doc_id, shard, n_tok,
-         |    CAST(sum(n_tok) OVER (ORDER BY shard, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) AS cum
-         |  FROM pt)
-         |SELECT day, doc_id, shard, n_tok,
-         |  cum - n_tok AS start_tok,
-         |  (cum - n_tok) // ${graft.ops.Pack.SeqLen} AS first_seq,
-         |  (cum - 1) // ${graft.ops.Pack.SeqLen} AS last_seq
-         |FROM tape ORDER BY doc_id""".stripMargin,
+         |$ttlCorpusCte,
+         |${tapeSql("corpusT")}""".stripMargin,
 
     // Size-capped retention: the horizon is COMPUTED from the per-day
     // token masses (smallest k whose tail mass fits the cap), then
     // the manifest is the q552 shape at that horizon.
     "q557_cap_manifest" ->
       s"""WITH ${Curation9.nDayCtes},
-         |mass AS (
-         |  SELECT 1 AS day, CAST(sum(len(string_split(text, ' ')))
-         |    AS BIGINT) AS m FROM admf1
-         |  UNION ALL SELECT 2, CAST(sum(len(string_split(text, ' ')))
-         |    AS BIGINT) FROM admf2
-         |  UNION ALL SELECT 3, CAST(sum(len(string_split(text, ' ')))
-         |    AS BIGINT) FROM admf3
-         |  UNION ALL SELECT 4, CAST(sum(len(string_split(text, ' ')))
-         |    AS BIGINT) FROM admf4),
-         |cap AS (SELECT (CAST(sum(m) AS BIGINT) * 55) // 100 AS c
-         |  FROM mass),
-         |keepk AS (SELECT CAST(min(k) AS BIGINT) AS k FROM (
-         |  SELECT ks.k, sum(m) AS tail
-         |  FROM (SELECT unnest(range(1, 5)) AS k) ks
-         |  JOIN mass ON mass.day >= ks.k GROUP BY ks.k)
-         |  WHERE tail <= (SELECT c FROM cap)),
-         |corpusC AS MATERIALIZED (
-         |  SELECT doc_id, text FROM admf1
-         |    WHERE (SELECT k FROM keepk) <= 1
-         |  UNION ALL SELECT doc_id, text FROM admf2
-         |    WHERE (SELECT k FROM keepk) <= 2
-         |  UNION ALL SELECT doc_id, text FROM admf3
-         |    WHERE (SELECT k FROM keepk) <= 3
-         |  UNION ALL SELECT doc_id, text FROM admf4
-         |    WHERE (SELECT k FROM keepk) <= 4),
-         |mC AS (SELECT doc_id,
-         |    CAST((${h60("CAST(doc_id AS VARCHAR)")})
-         |      % ${graft.ops.CurationDay.NShards} AS INT) AS shard,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    (${h60("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
-         |  FROM corpusC)
-         |SELECT shard, count(*) AS n_docs,
-         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-         |  min(doc_id) AS min_id, max(doc_id) AS max_id,
-         |  bit_xor(h) AS checksum,
+         |$capCtes,
+         |${shardCte("mC", "corpusC")}
+         |$manifestCols,
          |  (SELECT k FROM keepk) AS keep_from_day
          |FROM mC GROUP BY shard ORDER BY shard""".stripMargin,
 
@@ -1252,10 +1247,7 @@ object Curation12 {
     // dup_exact_corpus — the q518 shape at the TTL boundary.
     "q554_ttl_reoffer" ->
       s"""WITH ${Curation9.nDayCtes},
-         |corpusT AS MATERIALIZED (
-         |  SELECT doc_id, text FROM admf2
-         |  UNION ALL SELECT doc_id, text FROM admf3
-         |  UNION ALL SELECT doc_id, text FROM admf4),
+         |$ttlCorpusCte,
          |victT AS (SELECT doc_id, text FROM grown4
          |  WHERE doc_id NOT IN (SELECT doc_id FROM corpusT)),
          |batchT AS (
@@ -1267,7 +1259,7 @@ object Curation12 {
          |${Curation8.postGateCtes("T")}
          |SELECT doc_id, decision,
          |  CASE WHEN decision = 'admitted'
-         |    THEN CAST((${h60("CAST(doc_id AS VARCHAR)")})
+         |    THEN CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
          |      % ${graft.ops.CurationDay.NShards} AS INT) END AS shard
          |FROM finalT ORDER BY doc_id""".stripMargin)
 }

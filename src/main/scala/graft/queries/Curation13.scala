@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.queries.Q._
+import graft.ops.Dedup.h60Sql
 
 /** Round-13 batch — the perceptual indexes' QUERY path (the r12
   * verdict's top task): the banded-Hamming index family
@@ -17,7 +18,7 @@ import graft.queries.Q._
   *    bits — exact inclusion–exclusion binomials, engine vs a
   *    recursive-CTE oracle.
   */
-object Curation13 {
+object Curation13 extends Gates {
 
   import graft.ops.{Multimodal, PhashIndex}
 
@@ -337,6 +338,54 @@ object Curation13 {
 
   // ---- oracles ------------------------------------------------------
 
+  /** The image candidates' bit match: the same cell of both hashes. */
+  private[queries] val imgKey = "y.cy = x.cy\n      AND y.cx = x.cx"
+
+  /** Exact Hamming distance of every candidate in cS over `bits`, bits
+    * matched on `key`: dS(qid, cid, dist).
+    */
+  private[queries] def distCte(bits: String, key: String): String =
+    s"""dS AS (SELECT c.qid, c.cid,
+       |    CAST(sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)
+       |      AS BIGINT) AS dist
+       |  FROM cS c JOIN $bits x ON x.doc_id = c.qid
+       |    JOIN $bits y ON y.doc_id = c.cid AND $key
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** Query/index split and the probed candidates cS: SOME band of
+    * `bands` within Hamming 1 (the engine's 1-bit bucket variants).
+    */
+  private[queries] def probedCands(bands: String): String =
+    s"""qsS AS (SELECT doc_id FROM documents WHERE doc_id % 4 = 3),
+       |ixS AS (SELECT doc_id FROM documents
+       |  WHERE doc_id % 4 IN (0, 1, 2)),
+       |cS AS (SELECT DISTINCT a.doc_id AS qid, b.doc_id AS cid
+       |  FROM $bands a JOIN $bands b ON a.band = b.band
+       |    AND bit_count(xor(CAST(a.bv AS BIGINT),
+       |      CAST(b.bv AS BIGINT))) <= 1
+       |  WHERE a.doc_id IN (SELECT doc_id FROM qsS)
+       |    AND b.doc_id IN (SELECT doc_id FROM ixS))""".stripMargin
+
+  /** Measured banding curve: every (query, index) pair's exact distance
+    * over the bit self-join `join`, candidacy = membership in `cand`.
+    */
+  private[queries] def curveSql(join: String, cand: String): String =
+    s"""bfS AS (SELECT x.doc_id AS qid, y.doc_id AS cid,
+       |    CAST(sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)
+       |      AS BIGINT) AS dist
+       |  FROM $join
+       |  WHERE x.doc_id IN (SELECT doc_id FROM qsS)
+       |    AND y.doc_id IN (SELECT doc_id FROM ixS)
+       |  GROUP BY 1, 2)
+       |SELECT dist, CAST(count(*) AS BIGINT) AS n_pairs,
+       |  CAST(sum(CASE WHEN c.cid IS NOT NULL THEN 1 ELSE 0 END)
+       |    AS BIGINT) AS n_cand,
+       |  (CAST(sum(CASE WHEN c.cid IS NOT NULL THEN 1 ELSE 0 END)
+       |    AS BIGINT) * 1000000) // CAST(count(*) AS BIGINT)
+       |    AS cand_ppm
+       |FROM bfS b LEFT JOIN $cand c ON c.qid = b.qid AND c.cid = b.cid
+       |GROUP BY dist ORDER BY dist""".stripMargin
+
   /** Query/index split + banded candidates + exact Hamming distances
     * for the image signatures ([[Curation11.phashCtes]] raw
     * re-derivation, pair grouping).
@@ -349,13 +398,7 @@ object Curation13 {
        |  FROM pbands a JOIN pbands b ON a.band = b.band AND a.bv = b.bv
        |  WHERE a.doc_id IN (SELECT doc_id FROM qsS)
        |    AND b.doc_id IN (SELECT doc_id FROM ixS)),
-       |dS AS (SELECT c.qid, c.cid,
-       |    CAST(sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)
-       |      AS BIGINT) AS dist
-       |  FROM cS c JOIN bits x ON x.doc_id = c.qid
-       |    JOIN bits y ON y.doc_id = c.cid AND y.cy = x.cy
-       |      AND y.cx = x.cx
-       |  GROUP BY 1, 2)""".stripMargin
+       |${distCte("bits", imgKey)}""".stripMargin
 
   /** The audio analog over [[Curation12.audioCtes]]' abands/abits. */
   private def audSearchCtes: String =
@@ -366,12 +409,7 @@ object Curation13 {
        |  FROM abands a JOIN abands b ON a.band = b.band AND a.bv = b.bv
        |  WHERE a.doc_id IN (SELECT doc_id FROM qsS)
        |    AND b.doc_id IN (SELECT doc_id FROM ixS)),
-       |dS AS (SELECT c.qid, c.cid,
-       |    CAST(sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)
-       |      AS BIGINT) AS dist
-       |  FROM cS c JOIN abits x ON x.doc_id = c.qid
-       |    JOIN abits y ON y.doc_id = c.cid AND y.i = x.i
-       |  GROUP BY 1, 2)""".stripMargin
+       |${distCte("abits", "y.i = x.i")}""".stripMargin
 
   private[queries] def searchSql(ctes: String): String =
     s"""WITH $ctes
@@ -553,38 +591,6 @@ object Curation13 {
        |    FROM finR)
        |ORDER BY day, doc_id""".stripMargin
 
-  private def h60(x: String) = graft.ops.Dedup.h60Sql(x)
-
-  /** The q557 cap machinery (masses → 55% cap → horizon → capped
-    * corpus), shared by the streamed-cap oracles.
-    */
-  private def capCtes: String =
-    s"""mass AS (
-       |  SELECT 1 AS day, CAST(sum(len(string_split(text, ' ')))
-       |    AS BIGINT) AS m FROM admf1
-       |  UNION ALL SELECT 2, CAST(sum(len(string_split(text, ' ')))
-       |    AS BIGINT) FROM admf2
-       |  UNION ALL SELECT 3, CAST(sum(len(string_split(text, ' ')))
-       |    AS BIGINT) FROM admf3
-       |  UNION ALL SELECT 4, CAST(sum(len(string_split(text, ' ')))
-       |    AS BIGINT) FROM admf4),
-       |cap AS (SELECT (CAST(sum(m) AS BIGINT) * 55) // 100 AS c
-       |  FROM mass),
-       |keepk AS (SELECT CAST(min(k) AS BIGINT) AS k FROM (
-       |  SELECT ks.k, sum(m) AS tail
-       |  FROM (SELECT unnest(range(1, 5)) AS k) ks
-       |  JOIN mass ON mass.day >= ks.k GROUP BY ks.k)
-       |  WHERE tail <= (SELECT c FROM cap)),
-       |corpusC AS MATERIALIZED (
-       |  SELECT doc_id, text FROM admf1
-       |    WHERE (SELECT k FROM keepk) <= 1
-       |  UNION ALL SELECT doc_id, text FROM admf2
-       |    WHERE (SELECT k FROM keepk) <= 2
-       |  UNION ALL SELECT doc_id, text FROM admf3
-       |    WHERE (SELECT k FROM keepk) <= 3
-       |  UNION ALL SELECT doc_id, text FROM admf4
-       |    WHERE (SELECT k FROM keepk) <= 4)""".stripMargin
-
   val oracles: Map[String, String] = Map(
 
     // The six-stage calendar funnel: the same stage stack re-derived
@@ -613,17 +619,9 @@ object Curation13 {
     // the calendar facts.
     "q581_cap_stream_manifest" ->
       s"""WITH ${Curation9.nDayCtes},
-         |$capCtes,
-         |mC AS (SELECT doc_id,
-         |    CAST((${h60("CAST(doc_id AS VARCHAR)")})
-         |      % ${graft.ops.CurationDay.NShards} AS INT) AS shard,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    (${h60("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
-         |  FROM corpusC)
-         |SELECT shard, count(*) AS n_docs,
-         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-         |  min(doc_id) AS min_id, max(doc_id) AS max_id,
-         |  bit_xor(h) AS checksum,
+         |${Curation12.capCtes},
+         |${Curation12.shardCte("mC", "corpusC")}
+         |${Curation12.manifestCols},
          |  (SELECT k FROM keepk) AS keep_from_day,
          |  'cap4,cap4_done,day1,day2,day3,day4' AS ledger_days,
          |  '1' AS replay_stable
@@ -632,40 +630,15 @@ object Curation13 {
     // The tape the cap slot rebuilt, over the capped corpus.
     "q582_cap_stream_tape" ->
       s"""WITH ${Curation9.nDayCtes},
-         |$capCtes,
-         |pt AS (SELECT 0 AS day, doc_id,
-         |    CAST((${h60("CAST(doc_id AS VARCHAR)")})
-         |      % ${graft.ops.CurationDay.NShards} AS INT) AS shard,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-         |  FROM corpusC),
-         |tape AS (SELECT day, doc_id, shard, n_tok,
-         |    CAST(sum(n_tok) OVER (ORDER BY shard, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) AS cum
-         |  FROM pt)
-         |SELECT day, doc_id, shard, n_tok,
-         |  cum - n_tok AS start_tok,
-         |  (cum - n_tok) // ${graft.ops.Pack.SeqLen} AS first_seq,
-         |  (cum - 1) // ${graft.ops.Pack.SeqLen} AS last_seq
-         |FROM tape ORDER BY doc_id""".stripMargin,
+         |${Curation12.capCtes},
+         |${Curation12.tapeSql("corpusC")}""".stripMargin,
 
     // q552's manifest re-derivation + the streamed calendar facts.
     "q576_cur_ttl_stream_manifest" ->
       s"""WITH ${Curation9.nDayCtes},
-         |corpusT AS MATERIALIZED (
-         |  SELECT doc_id, text FROM admf2
-         |  UNION ALL SELECT doc_id, text FROM admf3
-         |  UNION ALL SELECT doc_id, text FROM admf4),
-         |m AS (SELECT doc_id,
-         |    CAST((${h60("CAST(doc_id AS VARCHAR)")})
-         |      % ${graft.ops.CurationDay.NShards} AS INT) AS shard,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    (${h60("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
-         |  FROM corpusT)
-         |SELECT shard, count(*) AS n_docs,
-         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-         |  min(doc_id) AS min_id, max(doc_id) AS max_id,
-         |  bit_xor(h) AS checksum,
+         |${Curation12.ttlCorpusCte},
+         |${Curation12.shardCte("m", "corpusT")}
+         |${Curation12.manifestCols},
          |  'day1,day2,day3,day4,ttl4,ttl4_done' AS ledger_days,
          |  '1' AS replay_stable
          |FROM m GROUP BY shard ORDER BY shard""".stripMargin,
@@ -673,41 +646,16 @@ object Curation13 {
     // q553's rebuilt-tape re-derivation over the retained corpus.
     "q577_cur_ttl_stream_tape" ->
       s"""WITH ${Curation9.nDayCtes},
-         |corpusT AS MATERIALIZED (
-         |  SELECT doc_id, text FROM admf2
-         |  UNION ALL SELECT doc_id, text FROM admf3
-         |  UNION ALL SELECT doc_id, text FROM admf4),
-         |pt AS (SELECT 0 AS day, doc_id,
-         |    CAST((${h60("CAST(doc_id AS VARCHAR)")})
-         |      % ${graft.ops.CurationDay.NShards} AS INT) AS shard,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-         |  FROM corpusT),
-         |tape AS (SELECT day, doc_id, shard, n_tok,
-         |    CAST(sum(n_tok) OVER (ORDER BY shard, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) AS cum
-         |  FROM pt)
-         |SELECT day, doc_id, shard, n_tok,
-         |  cum - n_tok AS start_tok,
-         |  (cum - n_tok) // ${graft.ops.Pack.SeqLen} AS first_seq,
-         |  (cum - 1) // ${graft.ops.Pack.SeqLen} AS last_seq
-         |FROM tape ORDER BY doc_id""".stripMargin,
+         |${Curation12.ttlCorpusCte},
+         |${Curation12.tapeSql("corpusT")}""".stripMargin,
 
     // The under-cap manifest: the q552 shape over the FULL corpus
     // (grown4 — snapshot + every admitted day), keep_from_day = 0,
     // both cap slots ledgered.
     "q578_cap_noop_manifest" ->
       s"""WITH ${Curation9.nDayCtes},
-         |m AS (SELECT doc_id,
-         |    CAST((${h60("CAST(doc_id AS VARCHAR)")})
-         |      % ${graft.ops.CurationDay.NShards} AS INT) AS shard,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    (${h60("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
-         |  FROM grown4)
-         |SELECT shard, count(*) AS n_docs,
-         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-         |  min(doc_id) AS min_id, max(doc_id) AS max_id,
-         |  bit_xor(h) AS checksum,
+         |${Curation12.shardCte("m", "grown4")}
+         |${Curation12.manifestCols},
          |  CAST(0 AS BIGINT) AS keep_from_day,
          |  'cap0,cap1,day1,day2,day3,day4' AS ledger_days
          |FROM m GROUP BY shard ORDER BY shard""".stripMargin,
@@ -824,41 +772,14 @@ object Curation13 {
 
     "q583_banding_measured_audio" ->
       s"""WITH $audSearchCtes,
-         |bfS AS (SELECT x.doc_id AS qid, y.doc_id AS cid,
-         |    CAST(sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS dist
-         |  FROM abits x JOIN abits y ON y.i = x.i
-         |  WHERE x.doc_id IN (SELECT doc_id FROM qsS)
-         |    AND y.doc_id IN (SELECT doc_id FROM ixS)
-         |  GROUP BY 1, 2)
-         |SELECT dist, CAST(count(*) AS BIGINT) AS n_pairs,
-         |  CAST(sum(CASE WHEN c.cid IS NOT NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_cand,
-         |  (CAST(sum(CASE WHEN c.cid IS NOT NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) * 1000000) // CAST(count(*) AS BIGINT)
-         |    AS cand_ppm
-         |FROM bfS b LEFT JOIN cS c ON c.qid = b.qid AND c.cid = b.cid
-         |GROUP BY dist ORDER BY dist""".stripMargin,
+         |${curveSql("abits x JOIN abits y ON y.i = x.i", "cS")}""".stripMargin,
 
     // Measured banding curve: all (query, index) pairs' exact
     // distances, candidacy = membership in the banded cS pair set.
     "q579_banding_measured" ->
       s"""WITH $imgSearchCtes,
-         |bfS AS (SELECT x.doc_id AS qid, y.doc_id AS cid,
-         |    CAST(sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS dist
-         |  FROM bits x JOIN bits y ON y.cy = x.cy AND y.cx = x.cx
-         |  WHERE x.doc_id IN (SELECT doc_id FROM qsS)
-         |    AND y.doc_id IN (SELECT doc_id FROM ixS)
-         |  GROUP BY 1, 2)
-         |SELECT dist, CAST(count(*) AS BIGINT) AS n_pairs,
-         |  CAST(sum(CASE WHEN c.cid IS NOT NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_cand,
-         |  (CAST(sum(CASE WHEN c.cid IS NOT NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) * 1000000) // CAST(count(*) AS BIGINT)
-         |    AS cand_ppm
-         |FROM bfS b LEFT JOIN cS c ON c.qid = b.qid AND c.cid = b.cid
-         |GROUP BY dist ORDER BY dist""".stripMargin,
+         |${curveSql("bits x JOIN bits y ON y.cy = x.cy AND y.cx = x.cx",
+            "cS")}""".stripMargin,
 
     // The 8×8 config: same inclusion–exclusion machinery with C(8,j)
     // coefficients and C(64−8j, d) clean-band terms, all from one

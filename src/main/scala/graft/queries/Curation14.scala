@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.queries.Q._
+import graft.ops.Dedup.h60Sql
 
 /** Round-14 batch — the r13 verdict's ranked tasks:
   *
@@ -25,7 +26,7 @@ import graft.queries.Q._
   *    design curve): top-k + the recall delta against the probes = 0
   *    card (q564).
   */
-object Curation14 {
+object Curation14 extends Gates {
 
   import graft.ops.{Dedup, MultiDay, PhashIndex}
 
@@ -544,34 +545,11 @@ object Curation14 {
     // ... and its cards re-derivation with the compact slots ledgered
     "q592_mm_compact_stream_cards" ->
       s"""WITH ${Curation12.mmCtes},
-         |lcorp4 AS (SELECT doc_id, text FROM lcorp3
-         |  UNION ALL SELECT d.doc_id, d.text FROM pdocs d
-         |    JOIN madm3 USING (doc_id)),
-         |adm AS (SELECT count(*) AS n1 FROM madm1),
-         |adm2c AS (SELECT count(*) AS n2 FROM madm2),
-         |adm3c AS (SELECT count(*) AS n3 FROM madm3)
+         |${Curation12.mmCardAdmCtes}
          |SELECT *, 'compact1,compact2,mm1,mm2,mm3' AS ledger_days,
          |  '1' AS replay_stable
          |FROM (
-         |  SELECT 'lexical' AS modality, 'n_hashes' AS metric,
-         |    CAST(count(DISTINCT md5(text)) AS BIGINT) AS value
-         |    FROM lcorp4
-         |  UNION ALL SELECT 'lexical', 'n_band_rows',
-         |    4 * count(*) FROM lcorp4
-         |  UNION ALL SELECT 'semantic', 'n_vecs',
-         |    (SELECT count(*) FROM msnapv) + (SELECT n1 FROM adm)
-         |      + (SELECT n2 FROM adm2c) + (SELECT n3 FROM adm3c)
-         |  UNION ALL SELECT 'perceptual', 'n_hashes',
-         |    (SELECT count(*) FROM idxP3) + (SELECT n3 FROM adm3c)
-         |  UNION ALL SELECT 'perceptual', 'n_band_rows',
-         |    4 * ((SELECT count(*) FROM idxP3) + (SELECT n3 FROM adm3c))
-         |  UNION ALL SELECT 'audio', 'n_hashes',
-         |    (SELECT count(*) FROM idxP3) + (SELECT n3 FROM adm3c)
-         |  UNION ALL SELECT 'audio', 'n_band_rows',
-         |    4 * ((SELECT count(*) FROM idxP3) + (SELECT n3 FROM adm3c))
-         |  UNION ALL SELECT 'media', 'n_assets',
-         |    (SELECT count(*) FROM pdocs) + 3)
-         |ORDER BY modality, metric""".stripMargin,
+         |${Curation12.mmCardRows}""".stripMargin,
 
     "q593_lex_reject_evidence" -> {
       val ex = "(SELECT doc_id FROM decisionsEV " +
@@ -618,22 +596,8 @@ object Curation14 {
     "q595_phash_search_probes" -> {
       val probed =
         s"""${Curation11.phashCtes("(d.doc_id - d.doc_id % 2)")},
-           |qsS AS (SELECT doc_id FROM documents WHERE doc_id % 4 = 3),
-           |ixS AS (SELECT doc_id FROM documents
-           |  WHERE doc_id % 4 IN (0, 1, 2)),
-           |cS AS (SELECT DISTINCT a.doc_id AS qid, b.doc_id AS cid
-           |  FROM pbands a JOIN pbands b ON a.band = b.band
-           |    AND bit_count(xor(CAST(a.bv AS BIGINT),
-           |      CAST(b.bv AS BIGINT))) <= 1
-           |  WHERE a.doc_id IN (SELECT doc_id FROM qsS)
-           |    AND b.doc_id IN (SELECT doc_id FROM ixS)),
-           |dS AS (SELECT c.qid, c.cid,
-           |    CAST(sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS dist
-           |  FROM cS c JOIN bits x ON x.doc_id = c.qid
-           |    JOIN bits y ON y.doc_id = c.cid AND y.cy = x.cy
-           |      AND y.cx = x.cx
-           |  GROUP BY 1, 2)""".stripMargin
+           |${Curation13.probedCands("pbands")},
+           |${Curation13.distCte("bits", Curation13.imgKey)}""".stripMargin
       Curation13.searchSql(probed)
     },
 
@@ -683,62 +647,22 @@ object Curation14 {
          |      CAST(b.bv AS BIGINT))) <= 1
          |  WHERE a.doc_id IN (SELECT doc_id FROM qsS)
          |    AND b.doc_id IN (SELECT doc_id FROM ixS)),
-         |bfS AS (SELECT x.doc_id AS qid, y.doc_id AS cid,
-         |    CAST(sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS dist
-         |  FROM bits x JOIN bits y ON y.cy = x.cy AND y.cx = x.cx
-         |  WHERE x.doc_id IN (SELECT doc_id FROM qsS)
-         |    AND y.doc_id IN (SELECT doc_id FROM ixS)
-         |  GROUP BY 1, 2)
-         |SELECT dist, CAST(count(*) AS BIGINT) AS n_pairs,
-         |  CAST(sum(CASE WHEN c.cid IS NOT NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_cand,
-         |  (CAST(sum(CASE WHEN c.cid IS NOT NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) * 1000000) // CAST(count(*) AS BIGINT)
-         |    AS cand_ppm
-         |FROM bfS b LEFT JOIN cS1 c ON c.qid = b.qid AND c.cid = b.cid
-         |GROUP BY dist ORDER BY dist""".stripMargin,
+         |${Curation13.curveSql(
+            "bits x JOIN bits y ON y.cy = x.cy AND y.cx = x.cx", "cS1")}""".stripMargin,
 
     "q599_audio_probe_recall" -> {
       val audProbed =
         s"""${Curation12.audioCtes()},
-           |qsS AS (SELECT doc_id FROM documents WHERE doc_id % 4 = 3),
-           |ixS AS (SELECT doc_id FROM documents
-           |  WHERE doc_id % 4 IN (0, 1, 2)),
-           |cS AS (SELECT DISTINCT a.doc_id AS qid, b.doc_id AS cid
-           |  FROM abands a JOIN abands b ON a.band = b.band
-           |    AND bit_count(xor(CAST(a.bv AS BIGINT),
-           |      CAST(b.bv AS BIGINT))) <= 1
-           |  WHERE a.doc_id IN (SELECT doc_id FROM qsS)
-           |    AND b.doc_id IN (SELECT doc_id FROM ixS)),
-           |dS AS (SELECT c.qid, c.cid,
-           |    CAST(sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS dist
-           |  FROM cS c JOIN abits x ON x.doc_id = c.qid
-           |    JOIN abits y ON y.doc_id = c.cid AND y.i = x.i
-           |  GROUP BY 1, 2)""".stripMargin
+           |${Curation13.probedCands("abands")},
+           |${Curation13.distCte("abits", "y.i = x.i")}""".stripMargin
       Curation13.recallSql(audProbed, "abits", "y.i = x.i")
     },
 
     "q596_phash_probe_recall" -> {
       val probed =
         s"""${Curation11.phashCtes("(d.doc_id - d.doc_id % 2)")},
-           |qsS AS (SELECT doc_id FROM documents WHERE doc_id % 4 = 3),
-           |ixS AS (SELECT doc_id FROM documents
-           |  WHERE doc_id % 4 IN (0, 1, 2)),
-           |cS AS (SELECT DISTINCT a.doc_id AS qid, b.doc_id AS cid
-           |  FROM pbands a JOIN pbands b ON a.band = b.band
-           |    AND bit_count(xor(CAST(a.bv AS BIGINT),
-           |      CAST(b.bv AS BIGINT))) <= 1
-           |  WHERE a.doc_id IN (SELECT doc_id FROM qsS)
-           |    AND b.doc_id IN (SELECT doc_id FROM ixS)),
-           |dS AS (SELECT c.qid, c.cid,
-           |    CAST(sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS dist
-           |  FROM cS c JOIN bits x ON x.doc_id = c.qid
-           |    JOIN bits y ON y.doc_id = c.cid AND y.cy = x.cy
-           |      AND y.cx = x.cx
-           |  GROUP BY 1, 2)""".stripMargin
+           |${Curation13.probedCands("pbands")},
+           |${Curation13.distCte("bits", Curation13.imgKey)}""".stripMargin
       Curation13.recallSql(probed, "bits", "y.cy = x.cy AND y.cx = x.cx")
     },
 
@@ -750,18 +674,9 @@ object Curation14 {
     // four admission days + both compact slots (sorted), replay
     // no-op'd, files genuinely fragmented-then-settled.
     "q601_cur_compact_stream_cards" -> {
-      val h60 = (x: String) => graft.ops.Dedup.h60Sql(x)
       s"""WITH ${Curation9.nDayCtes},
-         |m AS (SELECT doc_id,
-         |    CAST((${h60("CAST(doc_id AS VARCHAR)")})
-         |      % ${graft.ops.CurationDay.NShards} AS INT) AS shard,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    (${h60("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
-         |  FROM grown4)
-         |SELECT shard, count(*) AS n_docs,
-         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-         |  min(doc_id) AS min_id, max(doc_id) AS max_id,
-         |  bit_xor(h) AS checksum,
+         |${Curation12.shardCte("m", "grown4")}
+         |${Curation12.manifestCols},
          |  'compact1_done,compact4_done,day1,day2,day3,day4'
          |    AS ledger_days,
          |  '1' AS replay_stable, '1' AS files_settled
@@ -890,21 +805,17 @@ object Curation14 {
     // 2 aged out snapshot + day 1; the cap's pinned horizon 3 expired
     // day 2) + the calendar-fact literals
     "q607_cur_full_cal_cards" -> {
-      val h60 = (x: String) => graft.ops.Dedup.h60Sql(x)
       s"""WITH ${Curation9.nDayCtes},
          |corpusF AS MATERIALIZED (
          |  SELECT doc_id, text FROM admf3
          |  UNION ALL SELECT doc_id, text FROM admf4),
          |mF AS (SELECT doc_id,
-         |    CAST((${h60("CAST(doc_id AS VARCHAR)")})
+         |    CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
          |      % ${graft.ops.CurationDay.NShards} AS INT) AS shard,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    (${h60("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
+         |    (${h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
          |  FROM corpusF)
-         |SELECT shard, count(*) AS n_docs,
-         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-         |  min(doc_id) AS min_id, max(doc_id) AS max_id,
-         |  bit_xor(h) AS checksum,
+         |${Curation12.manifestCols},
          |  CAST(3 AS BIGINT) AS keep_from,
          |  'cap4,cap4_done,compact1_done,compact4_done,'
          |    || 'day1,day2,day3,day4,ttl4,ttl4_done' AS ledger_days,

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Similarity, TextOps}
 import Q._
+import NorthStar.{K, BANDS, NGRAM, sigCtes, candCtes, interCtes, reachCtes, compCte}
 
 /** Round-7 session-5 tranche (q319–q342): canonical text
   * normalization (NFC Expression + control strip + collapse) and
@@ -15,9 +16,7 @@ import Q._
   * generated from the same constants as the Scala operators (the
   * NorthStar pattern).
   */
-object Curation2 {
-
-  private val K = 16; private val BANDS = 4; private val NGRAM = 3
+object Curation2 extends Gates {
 
   /** Fresh scratch directory for a persisted-index round trip; paired
     * with [[deleteDir]] so gate/bench runs leave nothing behind.
@@ -35,27 +34,8 @@ object Curation2 {
     }
     rec(new java.io.File(path))
   }
-  private val sh = Dedup.shinglesSql("text", NGRAM)
-  private val P = Dedup.P
-
-  /** MinHash signature + band CTEs (the Curation pattern, regenerated
-    * from the same Dedup constants).
-    */
-  private def sigCtesFor(src: String) =
-    s"""shx AS (SELECT doc_id, unnest($sh) AS sh FROM $src),
-       |hx AS (SELECT doc_id, (${Dedup.h60Sql("sh")}) % $P AS h FROM shx),
-       |sig AS (SELECT doc_id,
-       |${Dedup.perms(K).zipWithIndex.map { case ((a, b), i) =>
-             s"  min(($a * h + $b) % $P) AS s$i" }.mkString(",\n")}
-       |FROM hx GROUP BY doc_id)""".stripMargin
-
-  private val sigCtes = sigCtesFor("documents")
-
-  private val bandsSql = (0 until BANDS).map { b =>
-    val cols = (b * (K / BANDS) until (b + 1) * (K / BANDS))
-      .map(i => s"CAST(s$i AS VARCHAR)").mkString(" || ',' || ")
-    s"SELECT doc_id, $b AS band, md5($cols) AS bh FROM sig"
-  }.mkString("\nUNION ALL\n")
+  /** The documents' MinHash signature CTEs (shx, hx, sig). */
+  private val docSig = sigCtes("documents", "x", "sig")
 
   /** Script-injection augment: %5==0 docs get a Cyrillic phrase, %5==1
     * a Han phrase — deterministic multilingual mess both engines
@@ -381,16 +361,7 @@ object Curation2 {
           TextOps.normalizeCol(col("text")).as("norm_text"))
         .groupBy(md5(col("norm_text").cast("binary")).as("content_hash"))
         .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("n_copies"))
-      val qn = "q346_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = agg.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = s.table(qn).orderBy("content_hash")
-      val rows = out.collect()
-      s.catalog.dropTempView(qn)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      drainMemory(s, agg, "complete")(_.orderBy("content_hash"))
     }),
 
     // Dedup diversity lift: distinct-n per slice BEFORE vs AFTER exact
@@ -572,16 +543,10 @@ object Curation2 {
         |HAVING count(DISTINCT source) > 1
         |ORDER BY content_hash""".stripMargin,
     "q325_keep_best" ->
-      s"""WITH RECURSIVE $sigCtes,
-         |bands AS ($bandsSql),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |    AND a.doc_id < b.doc_id),
-         |e AS (SELECT da AS u, db AS v FROM cand UNION SELECT db, da FROM cand),
-         |reach AS (SELECT u AS a, v AS b FROM e
-         |  UNION SELECT r.a, e.v FROM reach r JOIN e ON r.b = e.u),
-         |comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
-         |  FROM reach GROUP BY a),
+      s"""WITH RECURSIVE $docSig,
+         |$candCtes,
+         |${reachCtes("cand")},
+         |$compCte,
          |allc AS (SELECT d.doc_id,
          |    coalesce(c.component, d.doc_id) AS component,
          |    CAST(d.n_chars AS DOUBLE) AS score
@@ -710,17 +675,9 @@ object Curation2 {
          |ORDER BY doc_id""".stripMargin
     },
     "q330_containment" ->
-      s"""WITH $sigCtes,
-         |bands AS ($bandsSql),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |    AND a.doc_id < b.doc_id),
-         |g AS (SELECT DISTINCT doc_id, unnest($sh) AS g FROM documents),
-         |sizes AS (SELECT doc_id, count(*) AS ng FROM g GROUP BY doc_id),
-         |inter AS (SELECT cand.da, cand.db, count(*) AS i
-         |  FROM cand JOIN g ga ON ga.doc_id = cand.da
-         |            JOIN g gb ON gb.doc_id = cand.db AND gb.g = ga.g
-         |  GROUP BY 1, 2)
+      s"""WITH $docSig,
+         |$candCtes,
+         |${interCtes("documents", "ng")}
          |SELECT da AS doc_a, db AS doc_b, CAST(i AS BIGINT) AS inter_grams,
          |  round(CAST(i AS DOUBLE) / sa.ng, 6) AS containment_a,
          |  round(CAST(i AS DOUBLE) / sb.ng, 6) AS containment_b,
@@ -841,17 +798,9 @@ object Curation2 {
     "q335_threshold_sweep" -> {
       val ths = Seq(0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9)
       val values = ths.map(v => s"(CAST($v AS DOUBLE))").mkString(", ")
-      s"""WITH $sigCtes,
-         |bands AS ($bandsSql),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |    AND a.doc_id < b.doc_id),
-         |g AS (SELECT DISTINCT doc_id, unnest($sh) AS g FROM documents),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id),
-         |inter AS (SELECT cand.da, cand.db, count(*) AS i
-         |  FROM cand JOIN g ga ON ga.doc_id = cand.da
-         |            JOIN g gb ON gb.doc_id = cand.db AND gb.g = ga.g
-         |  GROUP BY 1, 2),
+      s"""WITH $docSig,
+         |$candCtes,
+         |${interCtes("documents")},
          |sc AS (SELECT da, db, CAST(i AS DOUBLE) / (sa.n + sb.n - i) AS j
          |  FROM inter JOIN sizes sa ON da = sa.doc_id
          |             JOIN sizes sb ON db = sb.doc_id),
@@ -875,26 +824,15 @@ object Curation2 {
          |  FROM hx0 JOIN grp USING (h) WHERE doc_id <> keeper),
          |surv AS (SELECT * FROM documents
          |  WHERE doc_id NOT IN (SELECT doc_id FROM ed)),
-         |${sigCtesFor("surv")},
-         |bands AS ($bandsSql),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |    AND a.doc_id < b.doc_id),
-         |g AS (SELECT DISTINCT doc_id, unnest($sh) AS g FROM surv),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id),
-         |inter AS (SELECT cand.da, cand.db, count(*) AS i
-         |  FROM cand JOIN g ga ON ga.doc_id = cand.da
-         |            JOIN g gb ON gb.doc_id = cand.db AND gb.g = ga.g
-         |  GROUP BY 1, 2),
+         |${sigCtes("surv", "x", "sig")},
+         |$candCtes,
+         |${interCtes("surv")},
          |pr AS (SELECT da, db, CAST(i AS DOUBLE) / (sa.n + sb.n - i) AS j
          |  FROM inter JOIN sizes sa ON da = sa.doc_id
          |             JOIN sizes sb ON db = sb.doc_id
          |  WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
-         |e AS (SELECT da AS u, db AS v FROM pr UNION SELECT db, da FROM pr),
-         |reach AS (SELECT u AS a, v AS b FROM e
-         |  UNION SELECT r.a, e.v FROM reach r JOIN e ON r.b = e.u),
-         |comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
-         |  FROM reach GROUP BY a),
+         |${reachCtes("pr")},
+         |$compCte,
          |ev AS (SELECT d AS doc_id, max(j) AS evidence FROM
          |  (SELECT da AS d, j FROM pr UNION ALL SELECT db, j FROM pr)
          |  GROUP BY d),

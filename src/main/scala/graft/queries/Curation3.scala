@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Similarity, TextOps, UrlOps}
 import Q._
+import NorthStar.{K, BANDS, NGRAM}
 
 /** Round-8 tranche (q348+): incremental index maintenance for BOTH
   * persisted indexes (SQ8 ANN append + compaction, dedup-index
@@ -12,9 +13,7 @@ import Q._
   * unigram-LM surprisal). Oracle SQL is generated from the same
   * constants as the Scala operators (the NorthStar pattern).
   */
-object Curation3 {
-
-  private val K = 16; private val BANDS = 4; private val NGRAM = 3
+object Curation3 extends Gates {
 
   /** Deterministic messy-URL augment both engines re-derive (the
     * documents fixture has no URL column — same pattern as Curation2's
@@ -193,15 +192,7 @@ object Curation3 {
         .agg(count(lit(1)).as("n_copies"),
           size(collect_set(col("raw"))).cast("long").as("n_raw_forms"),
           min(col("doc_id")).as("keeper_id"))
-      val qn = "q356_mem_" + java.util.UUID.randomUUID().toString
-        .replace("-", "")
-      val q = agg.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      try s.table(qn).orderBy("canonical_url").localCheckpoint(true)
-      finally s.catalog.dropTempView(qn)
+      drainMemory(s, agg, "complete")(_.orderBy("canonical_url"))
     }),
 
     // Crawl-frontier seen-URL check: bloom prefilter over the seen
@@ -629,6 +620,22 @@ object Curation3 {
        |  count(DISTINCT raw) AS n_raw_forms, min(doc_id) AS keeper_id
        |FROM u GROUP BY cu ORDER BY cu""".stripMargin
 
+  /** Cosines of the first ten vectors (the queries) against every other
+      * vector: v, n, q and s(qid, nid, cos).
+      */
+  private[queries] val queryCosCtes: String =
+    """v AS (SELECT vec_id,
+      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+      |  FROM embeddings),
+      |n AS (SELECT vec_id, e,
+      |    sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
+      |q AS (SELECT vec_id AS qid, e AS qe, nrm AS qn FROM n
+      |  WHERE vec_id < 10),
+      |s AS (SELECT qid, vec_id AS nid,
+      |    list_sum(list_transform(range(64), i -> qe[i+1] * e[i+1]))
+      |      / (qn * nrm) AS cos
+      |  FROM q, n WHERE vec_id <> qid)""".stripMargin
+
   val oracles: Map[String, String] = Map(
     "q348_sq8_index_append" -> Curation2.oracles("q326_ann_sq8"),
     "q351_sq8_index_compact" -> Curation2.oracles("q326_ann_sq8"),
@@ -824,17 +831,7 @@ object Curation3 {
          |ORDER BY doc_a, doc_b""".stripMargin,
 
     "q371_contrastive_triplets" ->
-      """WITH v AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        |  FROM embeddings),
-        |n AS (SELECT vec_id, e,
-        |    sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
-        |q AS (SELECT vec_id AS qid, e AS qe, nrm AS qn FROM n
-        |  WHERE vec_id < 10),
-        |s AS (SELECT qid, vec_id AS nid,
-        |    list_sum(list_transform(range(64), i -> qe[i+1] * e[i+1]))
-        |      / (qn * nrm) AS cos
-        |  FROM q, n WHERE vec_id <> qid),
+      s"""WITH $queryCosCtes,
         |r AS (SELECT *, row_number() OVER (PARTITION BY qid
         |    ORDER BY cos DESC, nid) AS rank FROM s),
         |p AS (SELECT qid, nid AS pos_id FROM r WHERE rank = 1),
@@ -861,17 +858,7 @@ object Curation3 {
         |FROM b""".stripMargin,
 
     "q369_hard_negatives" ->
-      """WITH v AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        |  FROM embeddings),
-        |n AS (SELECT vec_id, e,
-        |    sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
-        |q AS (SELECT vec_id AS qid, e AS qe, nrm AS qn FROM n
-        |  WHERE vec_id < 10),
-        |s AS (SELECT qid, vec_id AS nid,
-        |    list_sum(list_transform(range(64), i -> qe[i+1] * e[i+1]))
-        |      / (qn * nrm) AS cos
-        |  FROM q, n WHERE vec_id <> qid)
+      s"""WITH $queryCosCtes
         |SELECT qid AS query_id, nid AS neighbor_id,
         |  CAST(rank AS INTEGER) AS rank,
         |  CAST(round(cos, 6) AS REAL) AS score

@@ -10,7 +10,7 @@ import graft.queries.Q._
   * PageRank). Every query ships with a full DuckDB re-derivation;
   * ratios are exact integer ppm per the [[graft.ops.Corpus]] rules.
   */
-object Curation4 {
+object Curation4 extends Gates {
 
   import graft.functions.PixieFunctions.idiv
 
@@ -437,25 +437,10 @@ object Curation4 {
           graft.functions.PixieFunctions.nsToUs(col("ts")).as("ts_us"),
           (col("event_type") === "error").cast("long").as("e"))
         .as[graft.streaming.Streaming.AlertEvent]
-      val qn = "q453_mem_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.Streaming
+      val alerts = graft.streaming.Streaming
         .streamingAlerts(stream, binUs = 3600L * 1000000L,
           hiPpm = 300000L, loPpm = 150000L)
-        .toDF().writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        val out = s.table(qn)
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-          .orderBy("k", "b")
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(qn)
-      }
+      drainMemory(s, alerts, "append")(_.orderBy("k", "b"))
     }))
 
   /** Stream the events table as the typed [[graft.streaming.Streaming
@@ -475,23 +460,9 @@ object Curation4 {
     * window frame (steps array column) as a batch DataFrame.
     */
   private def replayPaths(s: org.apache.spark.sql.SparkSession, dir: String,
-                          pathLen: Int): org.apache.spark.sql.DataFrame = {
-    val qn = "q39x_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = graft.streaming.Streaming.streamingPaths(eventStream(s, dir), pathLen)
-      .toDF().writeStream.format("memory").queryName(qn)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try {
-      q.awaitTermination()
-      val out = s.table(qn)
-      val rows = out.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-    } finally {
-      if (q.isActive) q.stop()
-      s.catalog.dropTempView(qn)
-    }
-  }
+                          pathLen: Int): org.apache.spark.sql.DataFrame =
+    drainMemory(s, graft.streaming.Streaming
+      .streamingPaths(eventStream(s, dir), pathLen), "append")()
 
   /** q383's predicate rectangles (xlo, xhi, ylo, yhi) over
     * (l_partkey, l_suppkey) — narrow-x, narrow-y, narrow-both, and a
@@ -623,20 +594,38 @@ object Curation4 {
        |       ELSE 'unknown' END""".stripMargin
   }
 
+  /** Events per type in `binUs`-wide bins on the dense (type × bin)
+    * grid: base, rng, grid, and the busy cells c(et, b, c).
+    */
+  private def binGridCtes(binUs: Long): String =
+    s"""base AS (SELECT event_type AS et,
+       |    epoch_us(ts) // $binUs AS b FROM events),
+       |rng AS (SELECT min(b) AS b0, max(b) AS b1 FROM base),
+       |grid AS (SELECT et, gb.b FROM (SELECT DISTINCT et FROM base)
+       |  CROSS JOIN (SELECT unnest(range(b0, b1 + 1)) AS b FROM rng) gb),
+       |c AS (SELECT et, b, CAST(count(*) AS BIGINT) AS c FROM base
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** Per user the first view, then the click and the purchase within 7
+    * days of it: base, s0, c1, c2.
+    */
+  private[queries] val funnelCtes: String =
+    """base AS (SELECT user_id AS u, event_type AS et,
+      |    epoch_us(ts) AS ts FROM events),
+      |s0 AS (SELECT u, min(ts) AS t0 FROM base WHERE et = 'view' GROUP BY u),
+      |c1 AS (SELECT b.u, min(s0.t0) AS t0, min(b.ts) AS tk
+      |  FROM base b JOIN s0 ON b.u = s0.u
+      |  WHERE b.et = 'click' AND b.ts > s0.t0
+      |    AND b.ts <= s0.t0 + 604800000000 GROUP BY b.u),
+      |c2 AS (SELECT b.u, min(c1.t0) AS t0, min(b.ts) AS tk
+      |  FROM base b JOIN c1 ON b.u = c1.u
+      |  WHERE b.et = 'purchase' AND b.ts > c1.tk
+      |    AND b.ts <= c1.t0 + 604800000000 GROUP BY b.u)""".stripMargin
+
   val oracles: Map[String, String] = Map(
 
     "q373_funnel" ->
-      """WITH base AS (SELECT user_id AS u, event_type AS et,
-        |    epoch_us(ts) AS ts FROM events),
-        |s0 AS (SELECT u, min(ts) AS t0 FROM base WHERE et = 'view' GROUP BY u),
-        |c1 AS (SELECT b.u, min(s0.t0) AS t0, min(b.ts) AS tk
-        |  FROM base b JOIN s0 ON b.u = s0.u
-        |  WHERE b.et = 'click' AND b.ts > s0.t0
-        |    AND b.ts <= s0.t0 + 604800000000 GROUP BY b.u),
-        |c2 AS (SELECT b.u, min(c1.t0) AS t0, min(b.ts) AS tk
-        |  FROM base b JOIN c1 ON b.u = c1.u
-        |  WHERE b.et = 'purchase' AND b.ts > c1.tk
-        |    AND b.ts <= c1.t0 + 604800000000 GROUP BY b.u),
+      s"""WITH $funnelCtes,
         |cnts AS (
         |  SELECT CAST(0 AS BIGINT) AS stage, 'view' AS event_type,
         |    (SELECT CAST(count(*) AS BIGINT) FROM s0) AS n_users
@@ -745,13 +734,7 @@ object Curation4 {
         |GROUP BY 1, 2, 3 ORDER BY 1""".stripMargin,
 
     "q381_rate_changepoint" ->
-      """WITH base AS (SELECT event_type AS et,
-        |    epoch_us(ts) // 60000000 AS b FROM events),
-        |rng AS (SELECT min(b) AS b0, max(b) AS b1 FROM base),
-        |grid AS (SELECT et, gb.b FROM (SELECT DISTINCT et FROM base)
-        |  CROSS JOIN (SELECT unnest(range(b0, b1 + 1)) AS b FROM rng) gb),
-        |c AS (SELECT et, b, CAST(count(*) AS BIGINT) AS c FROM base
-        |  GROUP BY 1, 2),
+      s"""WITH ${binGridCtes(60000000L)},
         |f AS (SELECT g.et, g.b, coalesce(c.c, 0) AS c FROM grid g
         |  LEFT JOIN c ON c.et = g.et AND c.b = g.b),
         |tot AS (SELECT et, CAST(sum(c) AS BIGINT) AS t FROM f GROUP BY et),
@@ -812,13 +795,7 @@ object Curation4 {
          |ORDER BY pred_id, layout""".stripMargin,
 
     "q386_rate_anomalies" ->
-      """WITH base AS (SELECT event_type AS et,
-        |    epoch_us(ts) // 3600000000 AS b FROM events),
-        |rng AS (SELECT min(b) AS b0, max(b) AS b1 FROM base),
-        |grid AS (SELECT et, gb.b FROM (SELECT DISTINCT et FROM base)
-        |  CROSS JOIN (SELECT unnest(range(b0, b1 + 1)) AS b FROM rng) gb),
-        |c AS (SELECT et, b, CAST(count(*) AS BIGINT) AS c FROM base
-        |  GROUP BY 1, 2),
+      s"""WITH ${binGridCtes(3600000000L)},
         |f AS (SELECT g.et, g.b, coalesce(c.c, 0) AS c,
         |    rng.b1 - rng.b0 + 1 AS n
         |  FROM grid g LEFT JOIN c ON c.et = g.et AND c.b = g.b
@@ -896,17 +873,7 @@ object Curation4 {
         |  csum // n AS mean_c FROM a ORDER BY et""".stripMargin,
 
     "q392_funnel_times" ->
-      """WITH base AS (SELECT user_id AS u, event_type AS et,
-        |    epoch_us(ts) AS ts FROM events),
-        |s0 AS (SELECT u, min(ts) AS t0 FROM base WHERE et = 'view' GROUP BY u),
-        |c1 AS (SELECT b.u, min(s0.t0) AS t0, min(b.ts) AS tk
-        |  FROM base b JOIN s0 ON b.u = s0.u
-        |  WHERE b.et = 'click' AND b.ts > s0.t0
-        |    AND b.ts <= s0.t0 + 604800000000 GROUP BY b.u),
-        |c2 AS (SELECT b.u, min(c1.t0) AS t0, min(b.ts) AS tk
-        |  FROM base b JOIN c1 ON b.u = c1.u
-        |  WHERE b.et = 'purchase' AND b.ts > c1.tk
-        |    AND b.ts <= c1.t0 + 604800000000 GROUP BY b.u),
+      s"""WITH $funnelCtes,
         |d1 AS (SELECT c1.tk - s0.t0 AS dt FROM c1 JOIN s0 ON s0.u = c1.u),
         |d2 AS (SELECT c2.tk - c1.tk AS dt FROM c2 JOIN c1 ON c1.u = c2.u),
         |r1 AS (SELECT dt, row_number() OVER (ORDER BY dt) AS r,
@@ -930,13 +897,7 @@ object Curation4 {
         |ORDER BY stage""".stripMargin,
 
     "q393_sen_trend" ->
-      """WITH base AS (SELECT event_type AS et,
-        |    epoch_us(ts) // 21600000000 AS b FROM events),
-        |rng AS (SELECT min(b) AS b0, max(b) AS b1 FROM base),
-        |grid AS (SELECT et, gb.b FROM (SELECT DISTINCT et FROM base)
-        |  CROSS JOIN (SELECT unnest(range(b0, b1 + 1)) AS b FROM rng) gb),
-        |c AS (SELECT et, b, CAST(count(*) AS BIGINT) AS c FROM base
-        |  GROUP BY 1, 2),
+      s"""WITH ${binGridCtes(21600000000L)},
         |f AS (SELECT g.et, g.b, coalesce(c.c, 0) AS c FROM grid g
         |  LEFT JOIN c ON c.et = g.et AND c.b = g.b),
         |p AS (SELECT a.et, a.b AS bi, a.c AS ci, j.b AS bj, j.c AS cj,
@@ -1211,13 +1172,7 @@ object Curation4 {
         |) ORDER BY "check", target""".stripMargin,
 
     "q408_seasonal_deviation" ->
-      """WITH base AS (SELECT event_type AS et,
-        |    epoch_us(ts) // 3600000000 AS b FROM events),
-        |rng AS (SELECT min(b) AS b0, max(b) AS b1 FROM base),
-        |grid AS (SELECT et, gb.b FROM (SELECT DISTINCT et FROM base)
-        |  CROSS JOIN (SELECT unnest(range(b0, b1 + 1)) AS b FROM rng) gb),
-        |c AS (SELECT et, b, CAST(count(*) AS BIGINT) AS c FROM base
-        |  GROUP BY 1, 2),
+      s"""WITH ${binGridCtes(3600000000L)},
         |f AS (SELECT g.et, g.b, g.b % 24 AS hod, coalesce(c.c, 0) AS c
         |  FROM grid g LEFT JOIN c ON c.et = g.et AND c.b = g.b),
         |bl AS (SELECT et, hod,

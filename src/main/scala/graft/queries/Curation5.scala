@@ -12,7 +12,7 @@ import graft.queries.Q._
   * the [[graft.ops.Corpus]] exactness rules (integer quantization
   * before cross-row sums; ONE final double formula rounded at 1e-6).
   */
-object Curation5 {
+object Curation5 extends Gates {
 
   import graft.functions.PixieFunctions.{idiv, nsToUs}
 
@@ -328,21 +328,48 @@ object Curation5 {
         .as[graft.streaming.Streaming.DebEvent]
       val bursts = graft.streaming.Streaming
         .streamingDebounce(stream, gapUs = 86400000000L)
-      val qn = "q426_mem_" + java.util.UUID.randomUUID().toString
-        .replace("-", "")
-      val q = bursts.writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        val out = s.table(qn)
-          .orderBy("user_id", "event_type", "burst_no")
-          .localCheckpoint(true)
-        s.catalog.dropTempView(qn)
-        out
-      } finally if (q.isActive) q.stop()
+      drainMemory(s, bursts, "append")(
+        _.orderBy("user_id", "event_type", "burst_no"))
     }))
+
+  /** Hourly event counts per type on the dense (type × hour) grid between
+      * the first and last busy hour: base, c, rng, grid, f(et, b, c).
+      */
+  private[queries] val hourlyGridCtes: String =
+    """base AS (SELECT event_type AS et,
+      |    epoch_us(ts) // 3600000000 AS b FROM events),
+      |c AS (SELECT et, b, CAST(count(*) AS BIGINT) AS c FROM base
+      |  GROUP BY 1, 2),
+      |rng AS (SELECT min(b) AS b0, max(b) AS b1 FROM c),
+      |grid AS (SELECT et, gb.b FROM (SELECT DISTINCT et FROM c)
+      |  CROSS JOIN (SELECT unnest(range(b0, b1 + 1)) AS b FROM rng) gb),
+      |f AS (SELECT g.et, g.b, coalesce(c.c, 0) AS c FROM grid g
+      |  LEFT JOIN c ON c.et = g.et AND c.b = g.b)""".stripMargin
+
+  /** Slope, intercept and r2 of the integer least-squares sums in `d`. */
+  private[queries] val olsFitCols: String =
+    """  CASE WHEN dxx <> 0 THEN
+      |    round(CAST(dxy AS DOUBLE) / CAST(dxx AS DOUBLE), 6) + 0.0 END
+      |    AS slope,
+      |  CASE WHEN dxx <> 0 THEN
+      |    round(CAST(inum AS DOUBLE) / CAST(dxx AS DOUBLE), 6) + 0.0 END
+      |    AS intercept,
+      |  CASE WHEN dxx <> 0 AND dyy <> 0 THEN
+      |    round(CAST(dxy AS DOUBLE) * CAST(dxy AS DOUBLE)
+      |      / (CAST(dxx AS DOUBLE) * CAST(dyy AS DOUBLE)), 6) END
+      |    AS r2""".stripMargin
+
+  /** Per (user, type) bursts split on >24h gaps: e, f, g(.., burst_no). */
+  private[queries] val burstCtes: String =
+    """e AS (SELECT user_id, event_type, epoch_us(ts) AS t,
+      |    event_id FROM events),
+      |f AS (SELECT *, CASE WHEN lag(t) OVER w IS NULL
+      |      OR t - lag(t) OVER w > 86400000000 THEN 1 ELSE 0 END AS nb
+      |  FROM e WINDOW w AS (PARTITION BY user_id, event_type
+      |    ORDER BY t, event_id)),
+      |g AS (SELECT *, CAST(sum(nb) OVER (PARTITION BY user_id,
+      |    event_type ORDER BY t, event_id) AS BIGINT) AS burst_no
+      |  FROM f)""".stripMargin
 
   private val baseOracles: Map[String, String] = Map(
 
@@ -377,15 +404,7 @@ object Curation5 {
         |ORDER BY event_type, hod, vb""".stripMargin,
 
     "q412_cusum_drift" ->
-      """WITH base AS (SELECT event_type AS et,
-        |    epoch_us(ts) // 3600000000 AS b FROM events),
-        |c AS (SELECT et, b, CAST(count(*) AS BIGINT) AS c FROM base
-        |  GROUP BY 1, 2),
-        |rng AS (SELECT min(b) AS b0, max(b) AS b1 FROM c),
-        |grid AS (SELECT et, gb.b FROM (SELECT DISTINCT et FROM c)
-        |  CROSS JOIN (SELECT unnest(range(b0, b1 + 1)) AS b FROM rng) gb),
-        |f AS (SELECT g.et, g.b, coalesce(c.c, 0) AS c FROM grid g
-        |  LEFT JOIN c ON c.et = g.et AND c.b = g.b),
+      s"""WITH $hourlyGridCtes,
         |m AS (SELECT et, CAST(sum(c) AS BIGINT) * 1000
         |    // CAST(count(*) AS BIGINT) AS mm FROM f GROUP BY 1),
         |x AS (SELECT f.et, f.b, f.c, m.mm,
@@ -455,15 +474,7 @@ object Curation5 {
         |FROM k WHERE ra = 1 AND rb = 1 ORDER BY id_a""".stripMargin,
 
     "q415_ols_trend" ->
-      """WITH base AS (SELECT event_type AS et,
-        |    epoch_us(ts) // 3600000000 AS b FROM events),
-        |c AS (SELECT et, b, CAST(count(*) AS BIGINT) AS c FROM base
-        |  GROUP BY 1, 2),
-        |rng AS (SELECT min(b) AS b0, max(b) AS b1 FROM c),
-        |grid AS (SELECT et, gb.b FROM (SELECT DISTINCT et FROM c)
-        |  CROSS JOIN (SELECT unnest(range(b0, b1 + 1)) AS b FROM rng) gb),
-        |f AS (SELECT g.et, g.b, coalesce(c.c, 0) AS c FROM grid g
-        |  LEFT JOIN c ON c.et = g.et AND c.b = g.b),
+      s"""WITH $hourlyGridCtes,
         |raw AS (SELECT et, CAST(count(*) AS BIGINT) AS n,
         |    CAST(min(b) AS BIGINT) AS b0, CAST(sum(b) AS BIGINT) AS sb,
         |    CAST(sum(c) AS BIGINT) AS sy,
@@ -478,16 +489,7 @@ object Curation5 {
         |    n * syy - sy * sy AS dyy, n * sxy - sx * sy AS dxy,
         |    sy * sxx - sx * sxy AS inum FROM sh)
         |SELECT et AS event_type, n AS n_bins,
-        |  CASE WHEN dxx <> 0 THEN
-        |    round(CAST(dxy AS DOUBLE) / CAST(dxx AS DOUBLE), 6) + 0.0 END
-        |    AS slope,
-        |  CASE WHEN dxx <> 0 THEN
-        |    round(CAST(inum AS DOUBLE) / CAST(dxx AS DOUBLE), 6) + 0.0 END
-        |    AS intercept,
-        |  CASE WHEN dxx <> 0 AND dyy <> 0 THEN
-        |    round(CAST(dxy AS DOUBLE) * CAST(dxy AS DOUBLE)
-        |      / (CAST(dxx AS DOUBLE) * CAST(dyy AS DOUBLE)), 6) END
-        |    AS r2
+        |$olsFitCols
         |FROM d ORDER BY event_type""".stripMargin,
 
     "q416_benford" -> {
@@ -554,15 +556,7 @@ object Curation5 {
     "q418_session_window" -> Extended.oracles("q63_sessions"),
 
     "q419_debounce" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS t,
-        |    event_id FROM events),
-        |f AS (SELECT *, CASE WHEN lag(t) OVER w IS NULL
-        |      OR t - lag(t) OVER w > 86400000000 THEN 1 ELSE 0 END AS nb
-        |  FROM e WINDOW w AS (PARTITION BY user_id, event_type
-        |    ORDER BY t, event_id)),
-        |g AS (SELECT *, CAST(sum(nb) OVER (PARTITION BY user_id,
-        |    event_type ORDER BY t, event_id) AS BIGINT) AS burst_no
-        |  FROM f)
+      s"""WITH $burstCtes
         |SELECT user_id, event_type, burst_no, ts_us, event_id,
         |  burst_size, burst_size - 1 AS n_suppressed
         |FROM (SELECT user_id, event_type, burst_no, t AS ts_us, event_id,
@@ -668,7 +662,7 @@ object Curation5 {
         |FROM j ORDER BY cp""".stripMargin,
 
     "q424_zipf_fit" ->
-      """WITH c AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM
+      s"""WITH c AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM
         |  (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
         |  WHERE w <> '' GROUP BY w HAVING count(*) >= 2),
         |r AS (SELECT c, CAST(row_number() OVER (ORDER BY c DESC, w)
@@ -686,16 +680,7 @@ object Curation5 {
         |d AS (SELECT n, n * sxx - sx * sx AS dxx, n * syy - sy * sy AS dyy,
         |    n * sxy - sx * sy AS dxy, sy * sxx - sx * sxy AS inum FROM s)
         |SELECT n AS n_words,
-        |  CASE WHEN dxx <> 0 THEN
-        |    round(CAST(dxy AS DOUBLE) / CAST(dxx AS DOUBLE), 6) + 0.0 END
-        |    AS slope,
-        |  CASE WHEN dxx <> 0 THEN
-        |    round(CAST(inum AS DOUBLE) / CAST(dxx AS DOUBLE), 6) + 0.0 END
-        |    AS intercept,
-        |  CASE WHEN dxx <> 0 AND dyy <> 0 THEN
-        |    round(CAST(dxy AS DOUBLE) * CAST(dxy AS DOUBLE)
-        |      / (CAST(dxx AS DOUBLE) * CAST(dyy AS DOUBLE)), 6) END
-        |    AS r2
+        |$olsFitCols
         |FROM d""".stripMargin,
 
     "q425_mutual_info" ->
@@ -744,15 +729,7 @@ object Curation5 {
         |FROM p ORDER BY doc_id""".stripMargin,
 
     "q430_lead_lag" ->
-      """WITH base AS (SELECT event_type AS et,
-        |    epoch_us(ts) // 3600000000 AS b FROM events),
-        |c AS (SELECT et, b, CAST(count(*) AS BIGINT) AS c FROM base
-        |  GROUP BY 1, 2),
-        |rng AS (SELECT min(b) AS b0, max(b) AS b1 FROM c),
-        |grid AS (SELECT et, gb.b FROM (SELECT DISTINCT et FROM c)
-        |  CROSS JOIN (SELECT unnest(range(b0, b1 + 1)) AS b FROM rng) gb),
-        |f AS (SELECT g.et, g.b, coalesce(c.c, 0) AS c FROM grid g
-        |  LEFT JOIN c ON c.et = g.et AND c.b = g.b),
+      s"""WITH $hourlyGridCtes,
         |al AS (SELECT et AS et_a, b, c AS ca, lg AS lag, b + lg AS bb
         |  FROM f, (SELECT unnest(range(-6, 7)) AS lg)),
         |j AS (SELECT al.et_a, fb.et AS et_b, al.lag, al.ca, fb.c AS cb
@@ -809,15 +786,7 @@ object Curation5 {
         |FROM p ORDER BY user_id""".stripMargin,
 
     "q432_burstiness" ->
-      """WITH base AS (SELECT event_type AS et,
-        |    epoch_us(ts) // 3600000000 AS b FROM events),
-        |c AS (SELECT et, b, CAST(count(*) AS BIGINT) AS c FROM base
-        |  GROUP BY 1, 2),
-        |rng AS (SELECT min(b) AS b0, max(b) AS b1 FROM c),
-        |grid AS (SELECT et, gb.b FROM (SELECT DISTINCT et FROM c)
-        |  CROSS JOIN (SELECT unnest(range(b0, b1 + 1)) AS b FROM rng) gb),
-        |f AS (SELECT g.et, g.b, coalesce(c.c, 0) AS c FROM grid g
-        |  LEFT JOIN c ON c.et = g.et AND c.b = g.b),
+      s"""WITH $hourlyGridCtes,
         |s AS (SELECT et, CAST(count(*) AS BIGINT) AS n,
         |    CAST(sum(c) AS BIGINT) AS sy,
         |    CAST(sum(c * c) AS BIGINT) AS syy FROM f GROUP BY 1)
@@ -879,15 +848,7 @@ object Curation5 {
         |ORDER BY id_a, id_b""".stripMargin,
 
     "q429_residual_anomalies" ->
-      """WITH base AS (SELECT event_type AS et,
-        |    epoch_us(ts) // 3600000000 AS b FROM events),
-        |c AS (SELECT et, b, CAST(count(*) AS BIGINT) AS c FROM base
-        |  GROUP BY 1, 2),
-        |rng AS (SELECT min(b) AS b0, max(b) AS b1 FROM c),
-        |grid AS (SELECT et, gb.b FROM (SELECT DISTINCT et FROM c)
-        |  CROSS JOIN (SELECT unnest(range(b0, b1 + 1)) AS b FROM rng) gb),
-        |f AS (SELECT g.et, g.b, coalesce(c.c, 0) AS c FROM grid g
-        |  LEFT JOIN c ON c.et = g.et AND c.b = g.b),
+      s"""WITH $hourlyGridCtes,
         |raw AS (SELECT et, CAST(count(*) AS BIGINT) AS n,
         |    CAST(min(b) AS BIGINT) AS b0, CAST(sum(b) AS BIGINT) AS sb,
         |    CAST(sum(c) AS BIGINT) AS sy,
@@ -920,15 +881,7 @@ object Curation5 {
         |FROM rk WHERE rank <= 5 ORDER BY event_type, rank""".stripMargin,
 
     "q426_streaming_debounce" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS t,
-        |    event_id FROM events),
-        |f AS (SELECT *, CASE WHEN lag(t) OVER w IS NULL
-        |      OR t - lag(t) OVER w > 86400000000 THEN 1 ELSE 0 END AS nb
-        |  FROM e WINDOW w AS (PARTITION BY user_id, event_type
-        |    ORDER BY t, event_id)),
-        |g AS (SELECT *, CAST(sum(nb) OVER (PARTITION BY user_id,
-        |    event_type ORDER BY t, event_id) AS BIGINT) AS burst_no
-        |  FROM f),
+      s"""WITH $burstCtes,
         |bursts AS (SELECT user_id, event_type, burst_no, ts_us,
         |    event_id, burst_size, burst_size - 1 AS n_suppressed
         |  FROM (SELECT user_id, event_type, burst_no, t AS ts_us,

@@ -13,7 +13,7 @@ import graft.queries.Q._
   * logs, truncating integer division on positive operands, ONE final
   * double formula).
   */
-object Curation6 {
+object Curation6 extends Gates {
 
   import graft.functions.PixieFunctions.{idiv, nsToUs}
 

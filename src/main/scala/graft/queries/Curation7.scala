@@ -14,7 +14,7 @@ import graft.functions.PixieFunctions.idiv
   * integer cents/ranks end-to-end, ONE final double formula, zero-sign
   * normalized ([[graft.core.Exact]]).
   */
-object Curation7 {
+object Curation7 extends Gates {
 
   val queries: Map[String, QFn] = Map(
 
@@ -712,6 +712,15 @@ object Curation7 {
        |FROM a12 GROUP BY u ORDER BY node""".stripMargin
   }
 
+  /** Per-type value histogram in integer cents: v(g, c), k(g, c, k). */
+  private[queries] val centCountCtes: String =
+    """v AS (SELECT event_type AS g,
+      |    CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS c
+      |  FROM events WHERE event_type IS NOT NULL
+      |    AND value IS NOT NULL AND NOT isnan(value)),
+      |k AS (SELECT g, c, CAST(count(*) AS BIGINT) AS k FROM v
+      |  GROUP BY 1, 2)""".stripMargin
+
   val oracles: Map[String, String] = Map(
 
     "q455_hll_distinct_fold" ->
@@ -841,12 +850,7 @@ object Curation7 {
          |ORDER BY s.user_id, s.session_id""".stripMargin,
 
     "q467_quantile_bands" ->
-      """WITH v AS (SELECT event_type AS g,
-        |    CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS c
-        |  FROM events WHERE event_type IS NOT NULL
-        |    AND value IS NOT NULL AND NOT isnan(value)),
-        |k AS (SELECT g, c, CAST(count(*) AS BIGINT) AS k FROM v
-        |  GROUP BY 1, 2),
+      s"""WITH $centCountCtes,
         |ct AS (SELECT g, c, k,
         |    CAST(sum(k) OVER (PARTITION BY g ORDER BY c
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -1281,12 +1285,7 @@ object Curation7 {
         |GROUP BY 1 ORDER BY hod""".stripMargin,
 
     "q457_winsorized_mean" ->
-      """WITH v AS (SELECT event_type AS g,
-        |    CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS c
-        |  FROM events WHERE event_type IS NOT NULL
-        |    AND value IS NOT NULL AND NOT isnan(value)),
-        |k AS (SELECT g, c, CAST(count(*) AS BIGINT) AS k FROM v
-        |  GROUP BY 1, 2),
+      s"""WITH $centCountCtes,
         |ct AS (SELECT g, c, k,
         |    CAST(sum(k) OVER (PARTITION BY g ORDER BY c
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)

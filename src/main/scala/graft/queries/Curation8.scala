@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.queries.Q._
+import graft.ops.Dedup.h60Sql
 import graft.functions.PixieFunctions.idiv
 
 /** Round-10 batch. Opens with the OTel export path as a GATE row
@@ -14,7 +15,7 @@ import graft.functions.PixieFunctions.idiv
   * the expected rows. Any drift in the Gauge or Span encoding now
   * fails the official gate, not just a spec.
   */
-object Curation8 {
+object Curation8 extends Gates {
 
   import graft.ops.{CurationDay, Scale}
 
@@ -280,7 +281,7 @@ object Curation8 {
       val idx = Curation2.tempIndexDir("graft_dedup_stats_")
       try {
         graft.ops.Dedup.writeDedupIndex(corpus, "text", "doc_id", idx,
-          Curation.NGRAM, Curation.K, Curation.BANDS)
+          NorthStar.NGRAM, NorthStar.K, NorthStar.BANDS)
         graft.ops.Dedup.dedupIndexStats(s, idx).localCheckpoint(true)
       } finally Curation2.deleteDir(idx)
     }),
@@ -400,7 +401,6 @@ object Curation8 {
 
   private val sh8 = graft.ops.Dedup.shinglesSql("text", 8)
   private val sh2 = graft.ops.Dedup.shinglesSql("text", 2)
-  private def h60(x: String) = graft.ops.Dedup.h60Sql(x)
 
   /** The full-recompute re-derivation of the curation day, shared by
     * q488-q491: day-0 batch curation of the snapshot (exact-dedup
@@ -528,23 +528,67 @@ object Curation8 {
       |WHERE ts IS NOT NULL AND event_type IS NOT NULL
       |GROUP BY 1 ORDER BY event_type""".stripMargin
 
+  /** The cents histogram's cumulative counts and its p50/p90/p99. */
+  private[queries] val centQuantileCols: String =
+    """ct AS (SELECT g, c, k,
+      |    CAST(sum(k) OVER (PARTITION BY g ORDER BY c) AS BIGINT)
+      |      AS cum,
+      |    CAST(sum(k) OVER (PARTITION BY g) AS BIGINT) AS n FROM k)
+      |SELECT g AS event_type, CAST(max(n) AS BIGINT) AS n_rows,
+      |  min(CASE WHEN cum * 1000000 >= 500000 * n THEN c END)
+      |    AS p50_cents,
+      |  min(CASE WHEN cum * 1000000 >= 900000 * n THEN c END)
+      |    AS p90_cents,
+      |  min(CASE WHEN cum * 1000000 >= 990000 * n THEN c END)
+      |    AS p99_cents""".stripMargin
+
+  /** The per-decision counts n_admitted .. n_low_quality. */
+  private[queries] val decisionCountCols: String =
+    """  CAST(sum(CASE WHEN decision = 'admitted' THEN 1 ELSE 0 END)
+      |    AS BIGINT) AS n_admitted,
+      |  CAST(sum(CASE WHEN decision = 'dup_exact_corpus' THEN 1
+      |    ELSE 0 END) AS BIGINT) AS n_dup_exact_corpus,
+      |  CAST(sum(CASE WHEN decision = 'dup_exact_batch' THEN 1
+      |    ELSE 0 END) AS BIGINT) AS n_dup_exact_batch,
+      |  CAST(sum(CASE WHEN decision = 'near_dup_corpus' THEN 1
+      |    ELSE 0 END) AS BIGINT) AS n_near_dup_corpus,
+      |  CAST(sum(CASE WHEN decision = 'contaminated' THEN 1
+      |    ELSE 0 END) AS BIGINT) AS n_contaminated,
+      |  CAST(sum(CASE WHEN decision = 'low_quality' THEN 1
+      |    ELSE 0 END) AS BIGINT) AS n_low_quality""".stripMargin
+
+  /** Per-language token mass and its 30%-capped, redistributed ppm shares. */
+  private[queries] val budgetCtes: String =
+    """per AS (SELECT lang,
+      |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS t
+      |  FROM documents WHERE lang IS NOT NULL GROUP BY 1),
+      |tt AS (SELECT CAST(sum(t) AS BIGINT) AS total FROM per),
+      |raw AS (SELECT lang, t, t * 1000000 // total AS raw_ppm,
+      |    total FROM per, tt),
+      |sums AS (SELECT
+      |    CAST(sum(CASE WHEN raw_ppm > 300000 THEN 300000
+      |      ELSE raw_ppm END) AS BIGINT) AS assigned,
+      |    CAST(sum(CASE WHEN raw_ppm > 300000 THEN 0
+      |      ELSE raw_ppm END) AS BIGINT) AS raw_uncapped
+      |  FROM raw)""".stripMargin
+
   val oracles: Map[String, String] = Map(
 
     "q488_curation_day_decisions" ->
       s"""WITH $dayCtes
          |SELECT doc_id, decision,
          |  CASE WHEN decision = 'admitted'
-         |    THEN CAST((${h60("CAST(doc_id AS VARCHAR)")})
+         |    THEN CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
          |      % ${CurationDay.NShards} AS INT) END AS shard
          |FROM final ORDER BY doc_id""".stripMargin,
 
     "q489_curation_day_manifest" ->
       s"""WITH $dayCtes,
          |m AS (SELECT doc_id,
-         |    CAST((${h60("CAST(doc_id AS VARCHAR)")})
+         |    CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
          |      % ${CurationDay.NShards} AS INT) AS shard,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    (${h60("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
+         |    (${h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
          |  FROM grown)
          |SELECT shard, count(*) AS n_docs,
          |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
@@ -556,7 +600,7 @@ object Curation8 {
       s"""WITH $twoDayCtes
          |SELECT doc_id, decision,
          |  CASE WHEN decision = 'admitted'
-         |    THEN CAST((${h60("CAST(doc_id AS VARCHAR)")})
+         |    THEN CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
          |      % ${CurationDay.NShards} AS INT) END AS shard
          |FROM final2 ORDER BY doc_id""".stripMargin,
 
@@ -568,10 +612,10 @@ object Curation8 {
     "q494_curation_day2_manifest" ->
       s"""WITH $twoDayCtes,
          |m AS (SELECT doc_id,
-         |    CAST((${h60("CAST(doc_id AS VARCHAR)")})
+         |    CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
          |      % ${CurationDay.NShards} AS INT) AS shard,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    (${h60("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
+         |    (${h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
          |  FROM grown2)
          |SELECT shard, count(*) AS n_docs,
          |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
@@ -584,18 +628,7 @@ object Curation8 {
     "q491_curation_day_report" ->
       s"""WITH $dayCtes,
          |cnt AS (SELECT CAST(count(*) AS BIGINT) AS n_delta,
-         |  CAST(sum(CASE WHEN decision = 'admitted' THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_admitted,
-         |  CAST(sum(CASE WHEN decision = 'dup_exact_corpus' THEN 1
-         |    ELSE 0 END) AS BIGINT) AS n_dup_exact_corpus,
-         |  CAST(sum(CASE WHEN decision = 'dup_exact_batch' THEN 1
-         |    ELSE 0 END) AS BIGINT) AS n_dup_exact_batch,
-         |  CAST(sum(CASE WHEN decision = 'near_dup_corpus' THEN 1
-         |    ELSE 0 END) AS BIGINT) AS n_near_dup_corpus,
-         |  CAST(sum(CASE WHEN decision = 'contaminated' THEN 1
-         |    ELSE 0 END) AS BIGINT) AS n_contaminated,
-         |  CAST(sum(CASE WHEN decision = 'low_quality' THEN 1
-         |    ELSE 0 END) AS BIGINT) AS n_low_quality
+         |$decisionCountCols
          |  FROM final),
          |tot AS (SELECT CAST(count(*) AS BIGINT) AS corpus_docs,
          |  CAST(sum(CAST(len(string_split(text, ' ')) AS BIGINT))
@@ -673,18 +706,7 @@ object Curation8 {
     },
 
     "q498_token_budget_plan" ->
-      """WITH per AS (SELECT lang,
-        |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS t
-        |  FROM documents WHERE lang IS NOT NULL GROUP BY 1),
-        |tt AS (SELECT CAST(sum(t) AS BIGINT) AS total FROM per),
-        |raw AS (SELECT lang, t, t * 1000000 // total AS raw_ppm,
-        |    total FROM per, tt),
-        |sums AS (SELECT
-        |    CAST(sum(CASE WHEN raw_ppm > 300000 THEN 300000
-        |      ELSE raw_ppm END) AS BIGINT) AS assigned,
-        |    CAST(sum(CASE WHEN raw_ppm > 300000 THEN 0
-        |      ELSE raw_ppm END) AS BIGINT) AS raw_uncapped
-        |  FROM raw),
+      s"""WITH $budgetCtes,
         |fin AS (SELECT lang, t, raw_ppm, total,
         |    CASE WHEN raw_ppm > 300000 THEN 300000
         |      ELSE raw_ppm + (CASE WHEN raw_uncapped > 0
@@ -706,39 +728,13 @@ object Curation8 {
       graft.queries.Curation7.oracles("q461_kcore"),
 
     "q504_quantile_state" ->
-      """WITH v AS (SELECT event_type AS g,
-        |    CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS c
-        |  FROM events WHERE event_type IS NOT NULL
-        |    AND value IS NOT NULL AND NOT isnan(value)),
-        |k AS (SELECT g, c, CAST(count(*) AS BIGINT) AS k FROM v
-        |  GROUP BY 1, 2),
-        |ct AS (SELECT g, c, k,
-        |    CAST(sum(k) OVER (PARTITION BY g ORDER BY c) AS BIGINT)
-        |      AS cum,
-        |    CAST(sum(k) OVER (PARTITION BY g) AS BIGINT) AS n FROM k)
-        |SELECT g AS event_type, CAST(max(n) AS BIGINT) AS n_rows,
-        |  min(CASE WHEN cum * 1000000 >= 500000 * n THEN c END)
-        |    AS p50_cents,
-        |  min(CASE WHEN cum * 1000000 >= 900000 * n THEN c END)
-        |    AS p90_cents,
-        |  min(CASE WHEN cum * 1000000 >= 990000 * n THEN c END)
-        |    AS p99_cents
+      s"""WITH ${Curation7.centCountCtes},
+        |$centQuantileCols
         |FROM ct GROUP BY g ORDER BY event_type""".stripMargin,
 
     "q503_sampling_manifest" -> {
       val h = graft.ops.Dedup.h60Sql("CAST(doc_id AS VARCHAR)")
-      s"""WITH per AS (SELECT lang,
-         |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS t
-         |  FROM documents WHERE lang IS NOT NULL GROUP BY 1),
-         |tt AS (SELECT CAST(sum(t) AS BIGINT) AS total FROM per),
-         |raw AS (SELECT lang, t, t * 1000000 // total AS raw_ppm,
-         |    total FROM per, tt),
-         |sums AS (SELECT
-         |    CAST(sum(CASE WHEN raw_ppm > 300000 THEN 300000
-         |      ELSE raw_ppm END) AS BIGINT) AS assigned,
-         |    CAST(sum(CASE WHEN raw_ppm > 300000 THEN 0
-         |      ELSE raw_ppm END) AS BIGINT) AS raw_uncapped
-         |  FROM raw),
+      s"""WITH $budgetCtes,
          |fin AS (SELECT lang, t, total,
          |    CASE WHEN raw_ppm > 300000 THEN 300000
          |      ELSE raw_ppm + (CASE WHEN raw_uncapped > 0
@@ -762,8 +758,8 @@ object Curation8 {
 
     "q502_dedup_index_stats" ->
       s"""WITH corpus AS (SELECT * FROM documents WHERE doc_id % 5 <> 0),
-         |${Curation.sigCtes("corpus", "c")},
-         |bands AS (${Curation.bandsSql("c")}),
+         |${NorthStar.sigCtes("corpus", "c")},
+         |bands AS (${NorthStar.bandsSql("c")}),
          |bk AS (SELECT band, bh, CAST(count(*) AS BIGINT) AS c
          |  FROM bands GROUP BY 1, 2)
          |SELECT

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.queries.Q._
+import graft.ops.Dedup.h60Sql
 
 /** Round-11 batch, part 1 — the flagship: the curation day as a
   * STREAMING job, welded to an N-DAY (N = 4) lifecycle drift proof.
@@ -24,7 +25,7 @@ import graft.queries.Q._
   * per-day decision mix plus the stream's recovery facts (replay
   * no-op, exactly-once ledger).
   */
-object Curation9 {
+object Curation9 extends Gates {
 
   import graft.ops.{CurationDay, CurationNDay}
   import graft.streaming.CurationStream
@@ -148,8 +149,6 @@ object Curation9 {
 
   // ---- oracle: the four-day full recompute --------------------------
 
-  private def h60(x: String) = graft.ops.Dedup.h60Sql(x)
-
   /** Day k's corpus/batch/decision/post-gate chain (suffix k),
     * referencing `corpus$k` (k = 1 uses the bootstrap `corpus`).
     */
@@ -194,7 +193,7 @@ object Curation9 {
     (1 to 4).map { k =>
       s"""SELECT $k AS day, doc_id, decision,
          |  CASE WHEN decision = 'admitted'
-         |    THEN CAST((${h60("CAST(doc_id AS VARCHAR)")})
+         |    THEN CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
          |      % ${CurationDay.NShards} AS INT) END AS shard
          |FROM final$k""".stripMargin
     }.mkString("\nUNION ALL\n")
@@ -207,10 +206,10 @@ object Curation9 {
   private val manifestOracle: String =
     s"""WITH $nDayCtes,
        |m AS (SELECT doc_id,
-       |    CAST((${h60("CAST(doc_id AS VARCHAR)")})
+       |    CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
        |      % ${CurationDay.NShards} AS INT) AS shard,
        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-       |    (${h60("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
+       |    (${h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
        |  FROM grown4)
        |SELECT shard, count(*) AS n_docs,
        |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
@@ -274,7 +273,7 @@ object Curation9 {
     "q516_curated_corpus" ->
       s"""WITH $nDayCtes
          |SELECT doc_id,
-         |  CAST((${h60("CAST(doc_id AS VARCHAR)")})
+         |  CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
          |    % ${CurationDay.NShards} AS INT) AS shard, text
          |FROM grown4 ORDER BY doc_id""".stripMargin,
 
@@ -282,10 +281,10 @@ object Curation9 {
       s"""WITH $nDayCtes,
          |$retractionCtes,
          |m AS (SELECT doc_id,
-         |    CAST((${h60("CAST(doc_id AS VARCHAR)")})
+         |    CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
          |      % ${CurationDay.NShards} AS INT) AS shard,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    (${h60("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
+         |    (${h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
          |  FROM corpus5)
          |SELECT shard, count(*) AS n_docs,
          |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
@@ -300,7 +299,7 @@ object Curation9 {
          |${Curation8.postGateCtes("5")}
          |SELECT doc_id, decision,
          |  CASE WHEN decision = 'admitted'
-         |    THEN CAST((${h60("CAST(doc_id AS VARCHAR)")})
+         |    THEN CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
          |      % ${CurationDay.NShards} AS INT) END AS shard
          |FROM final5 ORDER BY doc_id""".stripMargin,
 
@@ -319,18 +318,7 @@ object Curation9 {
              s"SELECT $k AS day, decision FROM final$k")
              .mkString("\nUNION ALL\n")})
          |SELECT day, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(CASE WHEN decision = 'admitted' THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_admitted,
-         |  CAST(sum(CASE WHEN decision = 'dup_exact_corpus' THEN 1
-         |    ELSE 0 END) AS BIGINT) AS n_dup_exact_corpus,
-         |  CAST(sum(CASE WHEN decision = 'dup_exact_batch' THEN 1
-         |    ELSE 0 END) AS BIGINT) AS n_dup_exact_batch,
-         |  CAST(sum(CASE WHEN decision = 'near_dup_corpus' THEN 1
-         |    ELSE 0 END) AS BIGINT) AS n_near_dup_corpus,
-         |  CAST(sum(CASE WHEN decision = 'contaminated' THEN 1
-         |    ELSE 0 END) AS BIGINT) AS n_contaminated,
-         |  CAST(sum(CASE WHEN decision = 'low_quality' THEN 1
-         |    ELSE 0 END) AS BIGINT) AS n_low_quality,
+         |${Curation8.decisionCountCols},
          |  '1' AS replay_noop,
          |  'day1,day2,day3,day4' AS ledger_days
          |FROM f GROUP BY day ORDER BY day""".stripMargin)

@@ -5,11 +5,12 @@ import graft.functions.{MlScalars, PixieFunctions}
 import graft.functions.PixieFunctions._
 import graft.meta.K8sMetadata
 import Q._
+import graft.ops.Dedup.h60Sql
 
 /** Coverage tail: px time functions, the full k8s entity lookup family,
   * scalar ML surface, and a pxl-script-corpus shape (net_flow_graph).
   */
-object Extended {
+object Extended extends Gates {
 
   private val SplitTs = "2024-01-15"
 
@@ -241,15 +242,9 @@ object Extended {
         .withColumn("value", floor(col("value") * 1000000.0 + 0.5))
       val counts = graft.streaming.Streaming
         .windowedCounts(stream, "ts", 86400, 0, "event_type")
-      val qn = "q75_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = counts.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).select(col("bucket"), col("event_type"), col("n"),
-          (col("sum_value") / 1000000.0).as("sum_value"))
-        .orderBy("bucket", "event_type")
+      drainMemory(s, counts, "complete")(_.select(col("bucket"),
+          col("event_type"), col("n"), (col("sum_value") / 1000000.0).as("sum_value"))
+        .orderBy("bucket", "event_type"))
     }),
 
     // EmptySource (plan.proto:354-360): one empty batch with a schema —
@@ -272,13 +267,7 @@ object Extended {
         .as[graft.streaming.Streaming.SessionEvent]
       val sessions = graft.streaming.Streaming
         .sessionize(stream, gapNs = 3600L * 1000000000L)
-      val qn = "q94_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = sessions.writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).orderBy("user_id", "start_ns")
+      drainMemory(s, sessions, "append")(_.orderBy("user_id", "start_ns"))
     }),
 
     // Stream-static as-of join in the oracle gate: the streaming fact
@@ -293,14 +282,8 @@ object Extended {
             .as("ts"))
       val resolved = graft.meta.K8sMetadata.resolveAsOf(
         stream, dim, "user_id", "owner_id", "ts", Seq("pod_name", "service_name"))
-      val qn = "q95_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = resolved.writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).select("event_id", "user_id", "ts", "pod_name", "service_name")
-        .orderBy("event_id")
+      drainMemory(s, resolved, "append")(_.select("event_id", "user_id", "ts",
+        "pod_name", "service_name").orderBy("event_id"))
     }),
 
     // dns_stats script shape (src/pxl_scripts/px/dns_*): tumbling px.bin
@@ -318,9 +301,6 @@ object Extended {
     })
   )
 
-  private def h60(x: String) = s"CAST(('0x' || substr(md5($x), 1, 15)) AS BIGINT)"
-  private def h1Sql(x: String) = s"((${h60(x)}) % 2000001 - 1000000) / 1000000.0"
-
   /** Hashing-trick embedding component i of the single-token q54 input
     * 'vecN' at dim=4: the token's one ±1 lands in bucket h%4 with sign
     * by h%2, the L2 norm of a one-hot ±1 vector is exactly 1 — so
@@ -328,7 +308,7 @@ object Extended {
     * .textEmbeddingHashed re-derived for a single token).
     */
   private def hashedESql(i: Int): String = {
-    val h = h60("'vec' || vec_id")
+    val h = h60Sql("'vec' || vec_id")
     s"CASE WHEN ($h) % 4 = $i THEN " +
       s"(CASE WHEN ($h) % 2 = 0 THEN 1.0 ELSE -1.0 END) ELSE 0.0 END"
   }

@@ -11,7 +11,7 @@ import Q._
   * long (DuckDB returns BIGINT); ulp-sensitive transcendentals are cast to
   * float32 on both sides.
   */
-object Functions {
+object Functions extends Gates {
 
   val queries: Map[String, QFn] = Map(
     // px.bin(time_, 1h) + two aggregates — the canonical windowing idiom

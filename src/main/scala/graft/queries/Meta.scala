@@ -9,7 +9,7 @@ import Q._
 /** UPID/UINT128 semantics + the k8s metadata (`ctx`) resolution layer
   * (SURVEY §2.5 metadata_ops, §2.9).
   */
-object Meta {
+object Meta extends Gates {
 
   private val SplitTs = "2024-01-15"
 

@@ -18,7 +18,7 @@ import Q._
   * schemas (an independent check that the Spark read produces exactly the
   * declared relation, including the TIMESTAMP(NANOS)->int64-ns rule).
   */
-object Ml {
+object Ml extends Gates {
 
   // Synthesized request paths over events: one static family, one
   // 6-segment family where user_id (15..150 distinct) and event_id%50
@@ -118,9 +118,10 @@ object Ml {
       CatalogUdtfs.udtfNames.map(n => s"('$n','udtf','UDTF')"),
     "name, module, kind")
 
-  // Hand-written schema expectation (independent of the Spark read path).
+  // Hand-written schema expectation (independent of the Spark read path),
+  // shared with the PxL schema oracles (q110/q111).
   // events.ts is parquet TIMESTAMP(NANOS) -> engine reads int64 ns (BIGINT).
-  private val schemaRows: Seq[(String, Seq[(String, String)])] = Seq(
+  private[queries] val schemaRows: Seq[(String, Seq[(String, String)])] = Seq(
     "region" -> Seq("r_regionkey" -> "INTEGER", "r_name" -> "VARCHAR"),
     "nation" -> Seq("n_nationkey" -> "INTEGER", "n_name" -> "VARCHAR",
       "n_regionkey" -> "INTEGER"),
@@ -194,7 +195,7 @@ object Ml {
       s"('$u','${rj.replace("'", "''")}')"
     }, "udtf, row_json")
 
-  private val schemaValues = valuesSql(
+  private[queries] val schemaValues = valuesSql(
     schemaRows.flatMap { case (tn, cols) =>
       cols.zipWithIndex.map { case ((cn, ty), i) =>
         s"('$tn','$cn',${i + 1},'$ty')"

@@ -1,8 +1,11 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.MlAggregators
 import graft.ops.{Corpus, Dedup, Multimodal, Similarity, TextOps}
 import Q._
+import graft.ops.Dedup.h60Sql
 
 /** North-star LLM-data-pipeline operators (SURVEY §7.9) over the
   * documents/embeddings tables: dedup (exact / MinHash+LSH / SimHash /
@@ -10,9 +13,17 @@ import Q._
   * plumbing. Oracle SQL is *generated from the same constants* as the
   * Scala operators so both engines evaluate the identical algorithm.
   */
-object NorthStar {
+object NorthStar extends Gates {
 
-  private val K = 16; private val BANDS = 4; private val NGRAM = 3
+  /** MinHash/LSH parameters of every n-gram dedup gate: signature
+    * length, bands, shingle width.
+    */
+  private[queries] val K = 16; private[queries] val BANDS = 4
+  private[queries] val NGRAM = 3
+
+  /** The init-only 8-cell quantizer of the embeddings (q76 contract). */
+  private def cells8(emb: DataFrame) =
+    MlAggregators.fitCentroids(emb, col("embedding").cast("array<double>"), 8)
 
   val queries: Map[String, QFn] = Map(
     // Exact dedup: content-hash groups, surviving id, copy count.
@@ -76,11 +87,7 @@ object NorthStar {
     // on. Fully deterministic -> full SQL oracle.
     "q76_ann_ivf" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val model = emb.agg(graft.functions.MlAggregators.kmeansFit(
-          col("embedding").cast("array<double>"), 8, iters = 0).as("m"))
-        .head().getString(0)
-      val seeds = model.stripPrefix("[[").stripSuffix("]]").split("\\],\\[")
-        .map(_.split(",").map(_.toDouble))
+      val seeds = cells8(emb).map(_.toArray).toArray
       Similarity.ivfCosineTopK(emb, emb.filter(col("vec_id") < 10), "vec_id",
           "embedding", 5, seeds, nProbe = 2)
         .select(col("query_id"), col("neighbor_id"), col("rank"))
@@ -96,14 +103,12 @@ object NorthStar {
       val emb = t(s, dir, "embeddings")
       val (m, sd) = (4, 16)
       val row = emb.agg(
-        graft.functions.MlAggregators.kmeansFit(
+        MlAggregators.kmeansFit(
           slice(col("embedding").cast("array<double>"), 1, sd), 8, iters = 0).as("m0"),
-        (1 until m).map(j => graft.functions.MlAggregators.kmeansFit(
+        (1 until m).map(j => MlAggregators.kmeansFit(
           slice(col("embedding").cast("array<double>"), j * sd + 1, sd), 8,
           iters = 0).as(s"m$j")): _*).head()
-      val cbs = (0 until m).map(j => row.getString(j)
-        .stripPrefix("[[").stripSuffix("]]").split("\\],\\[")
-        .map(_.split(",").map(_.toDouble).toSeq).toSeq)
+      val cbs = (0 until m).map(j => MlAggregators.kmeansCentroids(row.getString(j)))
       Similarity.pqTopK(emb, emb.filter(col("vec_id") < 10), "vec_id",
           "embedding", 5, 64, cbs)
         .select(col("query_id"), col("neighbor_id"), col("rank"))
@@ -119,11 +124,7 @@ object NorthStar {
     // a gate dependency.
     "q251_semantic_dedup" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val model = emb.agg(graft.functions.MlAggregators.kmeansFit(
-          col("embedding").cast("array<double>"), 8, iters = 0).as("m"))
-        .head().getString(0)
-      val seeds = model.stripPrefix("[[").stripSuffix("]]").split("\\],\\[")
-        .map(_.split(",").map(_.toDouble).toSeq).toSeq
+      val seeds = cells8(emb)
       Dedup.semanticDedup(emb, "vec_id", "embedding", 64, seeds, minCos = 0.2)
         .orderBy("doc_a", "doc_b")
     }),
@@ -371,11 +372,7 @@ object NorthStar {
     // init-only quantizer, keep the 20 most-central docs per cell.
     "q263_cluster_balanced_select" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val model = emb.agg(graft.functions.MlAggregators.kmeansFit(
-          col("embedding").cast("array<double>"), 8, iters = 0).as("m"))
-        .head().getString(0)
-      val seeds = model.stripPrefix("[[").stripSuffix("]]").split("\\],\\[")
-        .map(_.split(",").map(_.toDouble).toSeq).toSeq
+      val seeds = cells8(emb)
       Corpus.clusterBalancedSelect(emb, "vec_id", "embedding", seeds, 20)
         .orderBy("cell", "rank")
     }),
@@ -435,20 +432,7 @@ object NorthStar {
       val agg = stream
         .groupBy(md5(col("text").cast("binary")).as("content_hash"))
         .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("n_copies"))
-      val qn = "q245_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = agg.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // The complete-mode sink already holds the full result in driver
-      // memory; lift it out and DROP the temp view so repeated runs in a
-      // long-lived session (bench loops) don't accumulate pinned result
-      // sets, one per invocation.
-      val out = s.table(qn).orderBy("content_hash")
-      val rows = out.collect()
-      s.catalog.dropTempView(qn)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      drainMemory(s, agg, "complete")(_.orderBy("content_hash"))
     }),
 
     // MinHash-LSH candidate pairs ON THE STREAM: ingest-time near-dup
@@ -459,19 +443,9 @@ object NorthStar {
       val stream = graft.core.Tables.stream(s, dir, "documents")
       val pairs = graft.streaming.Streaming
         .streamingBandPairs(stream, "text", "doc_id", NGRAM, K, BANDS)
-      val qn = "q260_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = pairs.writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
       // at-least-once emission per colliding band -> distinct at read
-      // (the downstream batch verify stage's first step); drop the temp
-      // view after collecting, as q245 does.
-      val out = s.table(qn).distinct().orderBy("doc_a", "doc_b")
-      val rows = out.collect()
-      s.catalog.dropTempView(qn)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      // (the downstream batch verify stage's first step)
+      drainMemory(s, pairs, "append")(_.distinct().orderBy("doc_a", "doc_b"))
     }),
 
     // GPT-style sequence packing: concatenated token stream in
@@ -545,11 +519,7 @@ object NorthStar {
       val keptEmb = tp(s, dir, "embeddings")
         .join(keepers.select(col("doc_id").as("vec_id")), "vec_id")
         .localCheckpoint(false)
-      val model = keptEmb.agg(graft.functions.MlAggregators.kmeansFit(
-          col("embedding").cast("array<double>"), 8, iters = 0).as("m"))
-        .head().getString(0)
-      val seeds = model.stripPrefix("[[").stripSuffix("]]").split("\\],\\[")
-        .map(_.split(",").map(_.toDouble).toSeq).toSeq
+      val seeds = cells8(keptEmb)
       val semPairs = Dedup
         .semanticDedup(keptEmb, "vec_id", "embedding", 64, seeds, minCos = 0.35)
         .select("doc_a", "doc_b")
@@ -775,16 +745,7 @@ object NorthStar {
         .select(col("doc_id").as("media_id"),
           png(col("doc_id") - pmod(col("doc_id"), lit(3L))).as("payload"))
       val pairs = graft.streaming.Streaming.streamingPhashPairs(media)
-      val qn = "q298_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = pairs.writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = s.table(qn).distinct().orderBy("doc_a", "doc_b")
-      val rows = out.collect()
-      s.catalog.dropTempView(qn)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      drainMemory(s, pairs, "append")(_.distinct().orderBy("doc_a", "doc_b"))
     }),
 
     // Labeled retrieval quality: precision@{1,5,10} of cosine top-k
@@ -848,16 +809,7 @@ object NorthStar {
             slice(wr, size(wr) - 7, lit(8)), slice(wr, 1, 12))).as("text"))
       val pairs = graft.streaming.Streaming.streamingStitchPairs(
         stream.select("doc_id", "text").union(derived), "text", "doc_id", 8)
-      val qn = "q314_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = pairs.writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = s.table(qn).distinct().orderBy("doc_a", "doc_b")
-      val rows = out.collect()
-      s.catalog.dropTempView(qn)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      drainMemory(s, pairs, "append")(_.distinct().orderBy("doc_a", "doc_b"))
     }),
 
     // Per-doc unigram entropy (micro-nat quantized terms — exact at any
@@ -914,11 +866,7 @@ object NorthStar {
     // (q251 contract) => fully SQL-re-derivable.
     "q307_cluster_purity" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val model = emb.agg(graft.functions.MlAggregators.kmeansFit(
-          col("embedding").cast("array<double>"), 8, iters = 0).as("m"))
-        .head().getString(0)
-      val seeds = model.stripPrefix("[[").stripSuffix("]]").split("\\],\\[")
-        .map(_.split(",").map(_.toDouble).toSeq).toSeq
+      val seeds = cells8(emb)
       val lab = Similarity.cellAssign(emb, "vec_id", "embedding", seeds)
         .select(col("id").as("vec_id"), col("cell"))
         .join(emb.select("vec_id", "label"), "vec_id")
@@ -957,11 +905,7 @@ object NorthStar {
     // Same init-only 8-cell quantizer contract as q251.
     "q306_contamination_cells" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val model = emb.agg(graft.functions.MlAggregators.kmeansFit(
-          col("embedding").cast("array<double>"), 8, iters = 0).as("m"))
-        .head().getString(0)
-      val seeds = model.stripPrefix("[[").stripSuffix("]]").split("\\],\\[")
-        .map(_.split(",").map(_.toDouble).toSeq).toSeq
+      val seeds = cells8(emb)
       Corpus.embeddingContaminationCells(
           emb.filter(col("vec_id") >= 16), emb.filter(col("vec_id") < 16),
           "vec_id", "embedding", seeds, minCos = 0.2)
@@ -1047,25 +991,113 @@ object NorthStar {
 
   // ---- generated oracle SQL ------------------------------------------
 
-  private val sh = Dedup.shinglesSql("text", NGRAM)
-  private def h60 (x: String) = Dedup.h60Sql(x)
+  private[queries] val sh = Dedup.shinglesSql("text", NGRAM)
   private val P = Dedup.P
 
-  private def sigCtes(src: String) =
-    s"""sh AS (SELECT doc_id, unnest($sh) AS sh FROM $src),
-       |h AS (SELECT doc_id, (${h60("sh")}) % $P AS h FROM sh),
-       |sig AS (SELECT doc_id,
+  /** MinHash signature CTEs over `src`: sh$sfx, h$sfx and the signature
+    * CTE `sig` (default sig$sfx), so two signature sets (corpus + batch)
+    * can coexist in one oracle query.
+    */
+  private[queries] def sigCtes(src: String, sfx: String = "",
+                               sig: String = ""): String =
+    s"""sh$sfx AS (SELECT doc_id, unnest($sh) AS sh FROM $src),
+       |h$sfx AS (SELECT doc_id, (${h60Sql("sh")}) % $P AS h FROM sh$sfx),
+       |${if (sig.isEmpty) s"sig$sfx" else sig} AS (SELECT doc_id,
        |${Dedup.perms(K).zipWithIndex.map { case ((a, b), i) =>
              s"  min(($a * h + $b) % $P) AS s$i" }.mkString(",\n")}
-       |FROM h GROUP BY doc_id)""".stripMargin
+       |FROM h$sfx GROUP BY doc_id)""".stripMargin
 
   private val sigCte = "WITH " + sigCtes("documents")
 
-  private val bandsSql = (0 until BANDS).map { b =>
-    val cols = (b * (K / BANDS) until (b + 1) * (K / BANDS))
-      .map(i => s"CAST(s$i AS VARCHAR)").mkString(" || ',' || ")
-    s"SELECT doc_id, $b AS band, md5($cols) AS bh FROM sig"
-  }.mkString("\nUNION ALL\n")
+  private[queries] def bandsSql(sfx: String = ""): String =
+    (0 until BANDS).map { b =>
+      val cols = (b * (K / BANDS) until (b + 1) * (K / BANDS))
+        .map(i => s"CAST(s$i AS VARCHAR)").mkString(" || ',' || ")
+      s"SELECT doc_id, $b AS band, md5($cols) AS bh FROM sig$sfx"
+    }.mkString("\nUNION ALL\n")
+
+  /** LSH band collisions of the `sig` CTE: bands, cand(da, db), da < db. */
+  private[queries] val candCtes: String =
+    s"""bands AS (${bandsSql()}),
+       |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
+       |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
+       |    AND a.doc_id < b.doc_id)""".stripMargin
+
+  /** Exact shingle overlap of every candidate over `src`'s texts: g,
+    * sizes(doc_id, `n`) and inter(da, db, i).
+    */
+  private[queries] def interCtes(src: String, n: String = "n"): String =
+    s"""g AS (SELECT DISTINCT doc_id, unnest($sh) AS g FROM $src),
+       |sizes AS (SELECT doc_id, count(*) AS $n FROM g GROUP BY doc_id),
+       |inter AS (SELECT cand.da, cand.db, count(*) AS i
+       |  FROM cand JOIN g ga ON ga.doc_id = cand.da
+       |            JOIN g gb ON gb.doc_id = cand.db AND gb.g = ga.g
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** The candidates whose exact Jaccard is at least 0.8, as `name`(da, db). */
+  private[queries] def pairsCte(name: String): String =
+    s"""$name AS (SELECT da, db FROM inter
+       |  JOIN sizes sa ON da = sa.doc_id JOIN sizes sb ON db = sb.doc_id
+       |  WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8)""".stripMargin
+
+  /** Recursive reachability over the undirected pair CTE `edges`(da, db):
+    * e(u, v) and reach(a, b); needs `WITH RECURSIVE`.
+    */
+  private[queries] def reachCtes(edges: String): String =
+    s"""e AS (SELECT da AS u, db AS v FROM $edges UNION SELECT db, da FROM $edges),
+       |reach AS (SELECT u AS a, v AS b FROM e
+       |  UNION SELECT r.a, e.v FROM reach r JOIN e ON r.b = e.u)""".stripMargin
+
+  /** Each reached doc's component: its least reachable id. */
+  private[queries] val compCte: String =
+    """comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
+      |  FROM reach GROUP BY a)""".stripMargin
+
+  /** dHash of the generated rasters in `px`(doc_id, w, h, x, y, v): 9x8
+    * block sums, the horizontal-neighbour mean comparison bits, and the
+    * row bytes rowb(doc_id, cy, rb).
+    */
+  private[queries] val dhashCtes: String =
+    """cells AS (SELECT doc_id, (y * 8) // h AS cy, (x * 9) // w AS cx,
+      |    sum(v) AS s, count(*) AS c FROM px GROUP BY 1, 2, 3),
+      |bits AS (SELECT a.doc_id, a.cy, a.cx,
+      |    CASE WHEN a.s * b.c > b.s * a.c THEN 1 ELSE 0 END AS bit
+      |  FROM cells a JOIN cells b
+      |    ON a.doc_id = b.doc_id AND a.cy = b.cy AND b.cx = a.cx + 1
+      |  WHERE a.cx < 8),
+      |rowb AS (SELECT doc_id, cy,
+      |    CAST(sum(bit * (CAST(1 AS BIGINT) << cx)) AS BIGINT) AS rb
+      |  FROM bits GROUP BY doc_id, cy)""".stripMargin
+
+  /** The eight row bytes r0..r7 of `rowb` as rb2, and `name`(doc_id,
+    * band, bv): four 16-bit Hamming bands.
+    */
+  private[queries] def rowBandsCtes(name: String): String =
+    s"""rb2 AS (SELECT doc_id,
+       |${(0 until 8).map(i =>
+            s"  max(CASE WHEN cy = $i THEN rb END) AS r$i").mkString(",\n")}
+       |  FROM rowb GROUP BY doc_id),
+       |$name AS (
+       |  SELECT doc_id, 0 AS band, r0 * 256 + r1 AS bv FROM rb2
+       |  UNION ALL SELECT doc_id, 1, r2 * 256 + r3 FROM rb2
+       |  UNION ALL SELECT doc_id, 2, r4 * 256 + r5 FROM rb2
+       |  UNION ALL SELECT doc_id, 3, r6 * 256 + r7 FROM rb2)""".stripMargin
+
+  /** q285's rasters generated from each doc's group-of-3 base id. */
+  private val groupPxCtes: String =
+    """xs AS (SELECT unnest(range(0, 24)) AS x),
+      |     ys AS (SELECT unnest(range(0, 21)) AS y),
+      |px AS (
+      |  SELECT d.doc_id, 16 + (d.doc_id - d.doc_id % 3) % 8 AS w,
+      |    16 + (d.doc_id - d.doc_id % 3) % 5 AS h, xs.x, ys.y,
+      |    ((d.doc_id - d.doc_id % 3) * 53
+      |       + (3 + (d.doc_id - d.doc_id % 3) % 9) * xs.x
+      |       + (5 + (d.doc_id - d.doc_id % 3) % 7) * ys.y
+      |       + (2 + (d.doc_id - d.doc_id % 3) % 4) * xs.x * xs.x
+      |       + (3 + (d.doc_id - d.doc_id % 3) % 6) * ys.y * ys.y) % 256 AS v
+      |  FROM documents d, xs, ys
+      |  WHERE xs.x < 16 + (d.doc_id - d.doc_id % 3) % 8
+      |    AND ys.y < 16 + (d.doc_id - d.doc_id % 3) % 5)""".stripMargin
 
   private val simhashBits = (0 until 32)
   private val markerSql = TextOps.langMarkers.map { case (lang, ms) =>
@@ -1104,10 +1136,11 @@ object NorthStar {
        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
   }
 
-  private val q76OracleSql: String =
-    """WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |n AS (SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
+  /** The init-only 8-cell quantizer over `v`(vec_id, e): norms n, the
+    * canonical picks seeds/sn and every vector's cosines cs(vec_id, sid, c).
+    */
+  private[queries] val quantizerCtes: String =
+    """n AS (SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
       |cv AS (SELECT e, row_number() OVER (ORDER BY e) AS rn
       |       FROM (SELECT DISTINCT e FROM v) ORDER BY e LIMIT 128),
       |ccount AS (SELECT count(*) AS c FROM cv),
@@ -1118,7 +1151,12 @@ object NorthStar {
       |       FROM seeds),
       |cs AS (SELECT n.vec_id, sid,
       |    list_sum(list_transform(range(64), i -> n.e[i+1] * se[i+1])) / (n.nrm * snrm) AS c
-      |  FROM n, sn),
+      |  FROM n, sn)""".stripMargin
+
+  private val q76OracleSql: String =
+    s"""WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+      |  FROM embeddings),
+      |$quantizerCtes,
       |cellof AS (SELECT vec_id, sid AS cell FROM
       |  (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, sid) AS rn
       |   FROM cs) WHERE rn = 1),
@@ -1189,20 +1227,9 @@ object NorthStar {
     * selection): `cellof` ends with (vec_id, cell, c = winning cosine).
     */
   private val cellAssignCtes: String =
-    """v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+    s"""v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
       |  FROM embeddings),
-      |n AS (SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
-      |cv AS (SELECT e, row_number() OVER (ORDER BY e) AS rn
-      |       FROM (SELECT DISTINCT e FROM v) ORDER BY e LIMIT 128),
-      |ccount AS (SELECT count(*) AS c FROM cv),
-      |seeds AS (SELECT r.i + 1 AS sid,
-      |    list_transform(cv.e, x -> round_even(x * 1000000, 0) / 1000000) AS se
-      |  FROM range(8) r(i), ccount, cv WHERE cv.rn = (r.i * ccount.c) // 8 + 1),
-      |sn AS (SELECT sid, se, sqrt(list_sum(list_transform(se, x -> x * x))) AS snrm
-      |       FROM seeds),
-      |cs AS (SELECT n.vec_id, sid,
-      |    list_sum(list_transform(range(64), i -> n.e[i+1] * se[i+1])) / (n.nrm * snrm) AS c
-      |  FROM n, sn),
+      |$quantizerCtes,
       |cellof AS (SELECT vec_id, sid AS cell, c FROM
       |  (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, sid) AS rn
       |   FROM cs) WHERE rn = 1)""".stripMargin
@@ -1365,14 +1392,103 @@ object NorthStar {
        |    AS contamination_ratio
        |FROM tot LEFT JOIN hit USING(doc_id) ORDER BY doc_id""".stripMargin
 
+  /** `v` and `n`: every embedding as doubles with its label and L2 norm. */
+  private[queries] val labelledVecCtes: String =
+    """v AS (SELECT vec_id, label,
+      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
+      |n AS (SELECT vec_id, label, e,
+      |    sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v)""".stripMargin
+
+  /** q264's 7-NN label vote: hold-out u, labelled l, cosines s, the
+    * top-7 votes and their ranking p.
+    */
+  private[queries] val knnCtes: String =
+    """u AS (SELECT * FROM n WHERE vec_id % 5 = 0),
+      |l AS (SELECT * FROM n WHERE vec_id % 5 <> 0),
+      |s AS (SELECT u.vec_id AS id, l.label AS lab,
+      |    list_sum(list_transform(range(64), i -> u.e[i+1] * l.e[i+1]))
+      |      / (u.nrm * l.nrm) AS cos
+      |  FROM u CROSS JOIN l),
+      |tk AS (SELECT id, lab FROM
+      |  (SELECT id, lab, row_number() OVER
+      |     (PARTITION BY id ORDER BY cos DESC, lab) AS rn FROM s)
+      |  WHERE rn <= 7),
+      |vt AS (SELECT id, lab, count(*) AS votes FROM tk GROUP BY id, lab),
+      |p AS (SELECT id, lab, votes, row_number() OVER
+      |    (PARTITION BY id ORDER BY votes DESC, lab) AS rn FROM vt)""".stripMargin
+
+  /** Gopher shape stats per doc: words, mean word length, stop-word ratio. */
+  private[queries] val gopherShapeCte: String =
+    """q AS (SELECT doc_id,
+      |    CAST(len(string_split(text,' ')) AS BIGINT) AS n_words,
+      |    CAST(length(text) - len(string_split(text,' ')) + 1 AS DOUBLE)
+      |      / len(string_split(text,' ')) AS avg_word_len,
+      |    CAST(len(list_filter(string_split(text,' '),
+      |      x -> x IN ('the','a','of','to','and','in','is'))) AS DOUBLE)
+      |      / len(string_split(text,' ')) AS stop_ratio
+      |  FROM documents)""".stripMargin
+
+  /** Gopher repetition stats: top-2-gram counts t2 and the duplicate
+    * 5-/10-gram ratios d5, d10.
+    */
+  private[queries] val repetitionCtes: String =
+    s"""g2 AS (SELECT doc_id, unnest(${Dedup.shinglesSql("text", 2)}) AS g FROM documents),
+       |c2 AS (SELECT doc_id, g, count(*) AS c FROM g2 GROUP BY doc_id, g),
+       |t2 AS (SELECT doc_id, g, c,
+       |    row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, g DESC) AS rn
+       |  FROM c2),
+       |g5 AS (SELECT doc_id, unnest(${Dedup.shinglesSql("text", 5)}) AS g FROM documents),
+       |d5 AS (SELECT doc_id, round(CAST(count(*) - count(DISTINCT g) AS DOUBLE)
+       |    / count(*), 6) AS dup5_ratio FROM g5 GROUP BY doc_id),
+       |g10 AS (SELECT doc_id, unnest(${Dedup.shinglesSql("text", 10)}) AS g FROM documents),
+       |d10 AS (SELECT doc_id, round(CAST(count(*) - count(DISTINCT g) AS DOUBLE)
+       |    / count(*), 6) AS dup10_ratio FROM g10 GROUP BY doc_id)""".stripMargin
+
+  /** Greedy 512-token packing of t(doc_id, source, n_tok) in (source,
+    * doc_id) order.
+    */
+  private[queries] val packTail: String =
+    """c AS (SELECT doc_id, source, n_tok,
+      |    CAST(coalesce(sum(n_tok) OVER (ORDER BY source, doc_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+      |      AS start_tok FROM t)
+      |SELECT doc_id, source, n_tok, start_tok,
+      |  start_tok // 512 AS first_seq,
+      |  (start_tok + n_tok - 1) // 512 AS last_seq
+      |FROM c ORDER BY doc_id""".stripMargin
+
+  /** Drops the words covered by `cov`(doc_id, wi) from each doc in `d`. */
+  private[queries] val spanKeepTail: String =
+    """w AS (SELECT doc_id, t.i - 1 AS wi, ws[t.i] AS w
+      |  FROM d, unnest(range(1, len(ws) + 1)) t(i)),
+      |kept AS (SELECT w.doc_id,
+      |    array_to_string(list(w.w ORDER BY w.wi), ' ') AS clean_text,
+      |    count(*) AS n_kept
+      |  FROM w LEFT JOIN cov ON cov.doc_id = w.doc_id AND cov.wi = w.wi
+      |  WHERE cov.wi IS NULL GROUP BY w.doc_id)
+      |SELECT d.doc_id, coalesce(clean_text, '') AS clean_text,
+      |  CAST(len(ws) - coalesce(n_kept, 0) AS BIGINT) AS n_removed
+      |FROM d LEFT JOIN kept USING(doc_id) ORDER BY doc_id""".stripMargin
+
+  /** q285's generated rasters px(doc_id, w, h, x, y, v), one per doc. */
+  private[queries] val rasterPxCtes: String =
+    """xs AS (SELECT unnest(range(0, 24)) AS x),
+      |     ys AS (SELECT unnest(range(0, 21)) AS y),
+      |px AS (
+      |  SELECT d.doc_id, 16 + d.doc_id % 8 AS w, 16 + d.doc_id % 5 AS h,
+      |    xs.x, ys.y,
+      |    (d.doc_id * 53 + (3 + d.doc_id % 9) * xs.x
+      |       + (5 + d.doc_id % 7) * ys.y
+      |       + (2 + d.doc_id % 4) * xs.x * xs.x
+      |       + (3 + d.doc_id % 6) * ys.y * ys.y) % 256 AS v
+      |  FROM documents d, xs, ys
+      |  WHERE xs.x < 16 + d.doc_id % 8 AND ys.y < 16 + d.doc_id % 5)""".stripMargin
+
   val oracles: Map[String, String] = Map(
     "q246_ann_pq" -> q246OracleSql,
     "q251_semantic_dedup" -> q251OracleSql,
     "q317_retrieval_quality" ->
-      """WITH v AS (SELECT vec_id, label,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-        |n AS (SELECT vec_id, label, e,
-        |    sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
+      s"""WITH $labelledVecCtes,
         |q AS (SELECT vec_id AS qid, label AS qlab, e AS qe, nrm AS qn
         |  FROM n WHERE vec_id < 20),
         |s AS (SELECT qid, qlab, vec_id AS nid, n.label AS nlab,
@@ -1392,13 +1508,8 @@ object NorthStar {
     // reproduce it exactly (same SQL as q239's oracle)
     "q318_incremental_cc" ->
       s"""WITH RECURSIVE ${sigCtes("documents")},
-         |bands AS ($bandsSql),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |    AND a.doc_id < b.doc_id),
-         |e AS (SELECT da AS u, db AS v FROM cand UNION SELECT db, da FROM cand),
-         |reach AS (SELECT u AS a, v AS b FROM e
-         |  UNION SELECT r.a, e.v FROM reach r JOIN e ON r.b = e.u)
+         |$candCtes,
+         |${reachCtes("cand")}
          |SELECT a AS doc_id, least(a, min(b)) AS component
          |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
     "q315_decontaminate_spans" -> {
@@ -1411,16 +1522,7 @@ object NorthStar {
          |  FROM d, unnest(range(1, len(sh) + 1)) g(i)),
          |cov AS (SELECT DISTINCT sp.doc_id, sp.pos + j.jj AS wi
          |  FROM sp JOIN ev USING(span), unnest(range(0, 8)) j(jj)),
-         |w AS (SELECT doc_id, t.i - 1 AS wi, ws[t.i] AS w
-         |  FROM d, unnest(range(1, len(ws) + 1)) t(i)),
-         |kept AS (SELECT w.doc_id,
-         |    array_to_string(list(w.w ORDER BY w.wi), ' ') AS clean_text,
-         |    count(*) AS n_kept
-         |  FROM w LEFT JOIN cov ON cov.doc_id = w.doc_id AND cov.wi = w.wi
-         |  WHERE cov.wi IS NULL GROUP BY w.doc_id)
-         |SELECT d.doc_id, coalesce(clean_text, '') AS clean_text,
-         |  CAST(len(ws) - coalesce(n_kept, 0) AS BIGINT) AS n_removed
-         |FROM d LEFT JOIN kept USING(doc_id) ORDER BY doc_id""".stripMargin
+         |$spanKeepTail""".stripMargin
     },
     "q316_source_drift" ->
       s"""WITH oldv AS (SELECT source, text FROM documents WHERE doc_id % 11 <> 3),
@@ -1506,10 +1608,7 @@ object NorthStar {
          |ORDER BY tot.doc_id, su.suite""".stripMargin,
     "q309_weighted_jaccard" ->
       s"""WITH ${sigCtes("documents")},
-         |bands AS ($bandsSql),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |    AND a.doc_id < b.doc_id),
+         |$candCtes,
          |g AS (SELECT DISTINCT doc_id, unnest($sh) AS g FROM documents),
          |nd AS (SELECT count(*) AS n FROM documents),
          |w AS (SELECT g.g, CAST(floor(ln(CAST(nd.n AS DOUBLE) / count(*))
@@ -1542,23 +1641,8 @@ object NorthStar {
         |FROM m JOIN ct USING (cell) WHERE rn = 1 ORDER BY cell""".stripMargin,
     // q308: the q264 kNN CTEs + a per-true-label accuracy rollup.
     "q308_knn_accuracy" ->
-      """WITH v AS (SELECT vec_id, label,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-        |n AS (SELECT vec_id, label, e,
-        |    sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
-        |u AS (SELECT * FROM n WHERE vec_id % 5 = 0),
-        |l AS (SELECT * FROM n WHERE vec_id % 5 <> 0),
-        |s AS (SELECT u.vec_id AS id, l.label AS lab,
-        |    list_sum(list_transform(range(64), i -> u.e[i+1] * l.e[i+1]))
-        |      / (u.nrm * l.nrm) AS cos
-        |  FROM u CROSS JOIN l),
-        |tk AS (SELECT id, lab FROM
-        |  (SELECT id, lab, row_number() OVER
-        |     (PARTITION BY id ORDER BY cos DESC, lab) AS rn FROM s)
-        |  WHERE rn <= 7),
-        |vt AS (SELECT id, lab, count(*) AS votes FROM tk GROUP BY id, lab),
-        |p AS (SELECT id, lab, votes, row_number() OVER
-        |    (PARTITION BY id ORDER BY votes DESC, lab) AS rn FROM vt),
+      s"""WITH $labelledVecCtes,
+        |$knnCtes,
         |pred AS (SELECT id, lab AS label_pred FROM p WHERE rn = 1)
         |SELECT n.label AS true_label, count(*) AS n_vecs,
         |  CAST(sum(CASE WHEN pred.label_pred = n.label THEN 1 ELSE 0 END)
@@ -1595,19 +1679,9 @@ object NorthStar {
       s"""WITH keepers AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
          |d2 AS (SELECT d.* FROM documents d JOIN keepers k ON d.doc_id = k.doc_id),
          |${sigCtes("d2")},
-         |bands AS ($bandsSql),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |    AND a.doc_id < b.doc_id),
-         |g AS (SELECT DISTINCT doc_id, unnest($sh) AS g FROM d2),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id),
-         |inter AS (SELECT cand.da, cand.db, count(*) AS i
-         |  FROM cand JOIN g ga ON ga.doc_id = cand.da
-         |            JOIN g gb ON gb.doc_id = cand.db AND gb.g = ga.g
-         |  GROUP BY 1, 2),
-         |pairs AS (SELECT da, db FROM inter
-         |  JOIN sizes sa ON da = sa.doc_id JOIN sizes sb ON db = sb.doc_id
-         |  WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
+         |$candCtes,
+         |${interCtes("d2")},
+         |${pairsCte("pairs")},
          |dropped AS (SELECT DISTINCT greatest(da, db) AS doc_id FROM pairs)
          |SELECT source, count(*) AS n_survivors,
          |  CAST(sum(n_chars) AS BIGINT) AS chars_kept
@@ -1619,21 +1693,21 @@ object NorthStar {
     "q25_minhash_sig" ->
       s"$sigCte SELECT * FROM sig ORDER BY doc_id",
     "q26_minhash_pairs" ->
-      s"""$sigCte, bands AS ($bandsSql)
+      s"""$sigCte, bands AS (${bandsSql()})
          |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
          |  AND a.doc_id < b.doc_id
          |ORDER BY doc_a, doc_b""".stripMargin,
     // the streaming replay must equal the batch candidate set exactly
     "q260_streaming_minhash_pairs" ->
-      s"""$sigCte, bands AS ($bandsSql)
+      s"""$sigCte, bands AS (${bandsSql()})
          |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
          |  AND a.doc_id < b.doc_id
          |ORDER BY doc_a, doc_b""".stripMargin,
     "q27_simhash" ->
       s"""WITH w AS (SELECT DISTINCT doc_id, unnest(string_split(text,' ')) AS w FROM documents),
-         |h AS (SELECT doc_id, (${h60("w")}) % 4294967296 AS h FROM w),
+         |h AS (SELECT doc_id, (${h60Sql("w")}) % 4294967296 AS h FROM w),
          |s AS (SELECT doc_id,
          |${simhashBits.map(b => s"  CAST(sum(CASE WHEN (h // ${1L << b}) % 2 = 1 THEN 1 ELSE -1 END) AS BIGINT) AS b$b").mkString(",\n")}
          |FROM h GROUP BY doc_id)
@@ -1641,16 +1715,8 @@ object NorthStar {
          |${simhashBits.map(b => s"(CASE WHEN b$b > 0 THEN ${1L << b} ELSE 0 END)").mkString(" + ")} AS simhash
          |FROM s ORDER BY doc_id""".stripMargin,
     "q28_ngram_jaccard" ->
-      s"""$sigCte, bands AS ($bandsSql),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |    AND a.doc_id < b.doc_id),
-         |g AS (SELECT DISTINCT doc_id, unnest($sh) AS g FROM documents),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id),
-         |inter AS (SELECT cand.da, cand.db, count(*) AS i
-         |  FROM cand JOIN g ga ON ga.doc_id = cand.da
-         |            JOIN g gb ON gb.doc_id = cand.db AND gb.g = ga.g
-         |  GROUP BY 1, 2)
+      s"""$sigCte, $candCtes,
+         |${interCtes("documents")}
          |SELECT da AS doc_a, db AS doc_b, i AS inter,
          |  CAST(i AS DOUBLE) / (sa.n + sb.n - i) AS jaccard
          |FROM inter JOIN sizes sa ON da = sa.doc_id JOIN sizes sb ON db = sb.doc_id
@@ -1727,25 +1793,8 @@ object NorthStar {
          |    / count(*), 6) AS dup_ratio
          |FROM sp JOIN f USING(span) GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     "q259_gopher_filter" ->
-      s"""WITH q AS (SELECT doc_id,
-         |    CAST(len(string_split(text,' ')) AS BIGINT) AS n_words,
-         |    CAST(length(text) - len(string_split(text,' ')) + 1 AS DOUBLE)
-         |      / len(string_split(text,' ')) AS avg_word_len,
-         |    CAST(len(list_filter(string_split(text,' '),
-         |      x -> x IN ('the','a','of','to','and','in','is'))) AS DOUBLE)
-         |      / len(string_split(text,' ')) AS stop_ratio
-         |  FROM documents),
-         |g2 AS (SELECT doc_id, unnest(${Dedup.shinglesSql("text", 2)}) AS g FROM documents),
-         |c2 AS (SELECT doc_id, g, count(*) AS c FROM g2 GROUP BY doc_id, g),
-         |t2 AS (SELECT doc_id, g, c,
-         |    row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, g DESC) AS rn
-         |  FROM c2),
-         |g5 AS (SELECT doc_id, unnest(${Dedup.shinglesSql("text", 5)}) AS g FROM documents),
-         |d5 AS (SELECT doc_id, round(CAST(count(*) - count(DISTINCT g) AS DOUBLE)
-         |    / count(*), 6) AS dup5_ratio FROM g5 GROUP BY doc_id),
-         |g10 AS (SELECT doc_id, unnest(${Dedup.shinglesSql("text", 10)}) AS g FROM documents),
-         |d10 AS (SELECT doc_id, round(CAST(count(*) - count(DISTINCT g) AS DOUBLE)
-         |    / count(*), 6) AS dup10_ratio FROM g10 GROUP BY doc_id),
+      s"""WITH $gopherShapeCte,
+         |$repetitionCtes,
          |r AS (SELECT d.doc_id,
          |    round(t2.c * CAST(len(t2.g) AS DOUBLE) / len(d.text), 6) AS top2_char_ratio,
          |    dup5_ratio, dup10_ratio
@@ -1772,16 +1821,7 @@ object NorthStar {
          |cov AS (SELECT DISTINCT sp.doc_id, sp.pos + j.jj AS wi
          |  FROM sp JOIN freq USING(span), unnest(range(0, 8)) j(jj)
          |  WHERE dfreq >= 2),
-         |w AS (SELECT doc_id, t.i - 1 AS wi, ws[t.i] AS w
-         |  FROM d, unnest(range(1, len(ws) + 1)) t(i)),
-         |kept AS (SELECT w.doc_id,
-         |    array_to_string(list(w.w ORDER BY w.wi), ' ') AS clean_text,
-         |    count(*) AS n_kept
-         |  FROM w LEFT JOIN cov ON cov.doc_id = w.doc_id AND cov.wi = w.wi
-         |  WHERE cov.wi IS NULL GROUP BY w.doc_id)
-         |SELECT d.doc_id, coalesce(clean_text, '') AS clean_text,
-         |  CAST(len(ws) - coalesce(n_kept, 0) AS BIGINT) AS n_removed
-         |FROM d LEFT JOIN kept USING(doc_id) ORDER BY doc_id""".stripMargin
+         |$spanKeepTail""".stripMargin
     },
     "q237_contamination" -> contaminationOracle,
     // q248 is the bloom-accelerated path — same exact answer by
@@ -1853,23 +1893,8 @@ object NorthStar {
          |SELECT doc_id, avg_logp, n_tok, start_tok
          |FROM tb WHERE start_tok < 12000 ORDER BY doc_id""".stripMargin,
     "q264_knn_label_prop" ->
-      """WITH v AS (SELECT vec_id, label,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings),
-        |n AS (SELECT vec_id, label, e,
-        |    sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
-        |u AS (SELECT * FROM n WHERE vec_id % 5 = 0),
-        |l AS (SELECT * FROM n WHERE vec_id % 5 <> 0),
-        |s AS (SELECT u.vec_id AS id, l.label AS lab,
-        |    list_sum(list_transform(range(64), i -> u.e[i+1] * l.e[i+1]))
-        |      / (u.nrm * l.nrm) AS cos
-        |  FROM u CROSS JOIN l),
-        |tk AS (SELECT id, lab FROM
-        |  (SELECT id, lab, row_number() OVER
-        |     (PARTITION BY id ORDER BY cos DESC, lab) AS rn FROM s)
-        |  WHERE rn <= 7),
-        |vt AS (SELECT id, lab, count(*) AS votes FROM tk GROUP BY id, lab),
-        |p AS (SELECT id, lab, votes, row_number() OVER
-        |    (PARTITION BY id ORDER BY votes DESC, lab) AS rn FROM vt)
+      s"""WITH $labelledVecCtes,
+        |$knnCtes
         |SELECT id AS vec_id, lab AS label_pred, votes
         |FROM p WHERE rn = 1 ORDER BY vec_id""".stripMargin,
     "q265_nearest_centroid" ->
@@ -1935,28 +1960,11 @@ object NorthStar {
       """SELECT md5(text) AS content_hash, min(doc_id) AS keeper_id,
         |count(*) AS n_copies FROM documents GROUP BY 1 ORDER BY content_hash""".stripMargin,
     "q244_pack_sequences" ->
-      """WITH t AS (SELECT doc_id, source,
+      s"""WITH t AS (SELECT doc_id, source,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok FROM documents),
-        |c AS (SELECT doc_id, source, n_tok,
-        |    CAST(coalesce(sum(n_tok) OVER (ORDER BY source, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |      AS start_tok FROM t)
-        |SELECT doc_id, source, n_tok, start_tok,
-        |  start_tok // 512 AS first_seq,
-        |  (start_tok + n_tok - 1) // 512 AS last_seq
-        |FROM c ORDER BY doc_id""".stripMargin,
+        |$packTail""".stripMargin,
     "q241_repetition" ->
-      s"""WITH g2 AS (SELECT doc_id, unnest(${Dedup.shinglesSql("text", 2)}) AS g FROM documents),
-         |c2 AS (SELECT doc_id, g, count(*) AS c FROM g2 GROUP BY doc_id, g),
-         |t2 AS (SELECT doc_id, g, c,
-         |    row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, g DESC) AS rn
-         |  FROM c2),
-         |g5 AS (SELECT doc_id, unnest(${Dedup.shinglesSql("text", 5)}) AS g FROM documents),
-         |d5 AS (SELECT doc_id, round(CAST(count(*) - count(DISTINCT g) AS DOUBLE)
-         |    / count(*), 6) AS dup5_ratio FROM g5 GROUP BY doc_id),
-         |g10 AS (SELECT doc_id, unnest(${Dedup.shinglesSql("text", 10)}) AS g FROM documents),
-         |d10 AS (SELECT doc_id, round(CAST(count(*) - count(DISTINCT g) AS DOUBLE)
-         |    / count(*), 6) AS dup10_ratio FROM g10 GROUP BY doc_id)
+      s"""WITH $repetitionCtes
          |SELECT d.doc_id, t2.g AS top2_gram, t2.c AS top2_count,
          |  round(t2.c * CAST(len(t2.g) AS DOUBLE) / len(d.text), 6) AS top2_char_ratio,
          |  dup5_ratio, dup10_ratio
@@ -1967,26 +1975,15 @@ object NorthStar {
          |ORDER BY d.doc_id""".stripMargin,
     "q239_dup_components" ->
       s"""WITH RECURSIVE ${sigCtes("documents")},
-         |bands AS ($bandsSql),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |    AND a.doc_id < b.doc_id),
-         |e AS (SELECT da AS u, db AS v FROM cand UNION SELECT db, da FROM cand),
-         |reach AS (SELECT u AS a, v AS b FROM e
-         |  UNION SELECT r.a, e.v FROM reach r JOIN e ON r.b = e.u)
+         |$candCtes,
+         |${reachCtes("cand")}
          |SELECT a AS doc_id, least(a, min(b)) AS component
          |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
     "q256_cc_priority_survivors" ->
       s"""WITH RECURSIVE ${sigCtes("documents")},
-         |bands AS ($bandsSql),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |    AND a.doc_id < b.doc_id),
-         |e AS (SELECT da AS u, db AS v FROM cand UNION SELECT db, da FROM cand),
-         |reach AS (SELECT u AS a, v AS b FROM e
-         |  UNION SELECT r.a, e.v FROM reach r JOIN e ON r.b = e.u),
-         |comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
-         |  FROM reach GROUP BY a),
+         |$candCtes,
+         |${reachCtes("cand")},
+         |$compCte,
          |p AS (SELECT comp.doc_id, component,
          |    CAST(regexp_extract(source, '([0-9]+)$$', 1) AS BIGINT) AS pri
          |  FROM comp JOIN documents USING(doc_id))
@@ -1998,22 +1995,10 @@ object NorthStar {
       s"""WITH RECURSIVE keepers AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
          |d2 AS (SELECT d.* FROM documents d JOIN keepers k ON d.doc_id = k.doc_id),
          |${sigCtes("d2")},
-         |bands AS ($bandsSql),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |    AND a.doc_id < b.doc_id),
-         |g AS (SELECT DISTINCT doc_id, unnest($sh) AS g FROM d2),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id),
-         |inter AS (SELECT cand.da, cand.db, count(*) AS i
-         |  FROM cand JOIN g ga ON ga.doc_id = cand.da
-         |            JOIN g gb ON gb.doc_id = cand.db AND gb.g = ga.g
-         |  GROUP BY 1, 2),
-         |pairs AS (SELECT da, db FROM inter
-         |  JOIN sizes sa ON da = sa.doc_id JOIN sizes sb ON db = sb.doc_id
-         |  WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
-         |e AS (SELECT da AS u, db AS v FROM pairs UNION SELECT db, da FROM pairs),
-         |reach AS (SELECT u AS a, v AS b FROM e
-         |  UNION SELECT r.a, e.v FROM reach r JOIN e ON r.b = e.u),
+         |$candCtes,
+         |${interCtes("d2")},
+         |${pairsCte("pairs")},
+         |${reachCtes("pairs")},
          |dropped AS (SELECT a AS doc_id FROM reach GROUP BY a HAVING min(b) < a)
          |SELECT source, count(*) AS n_survivors,
          |  CAST(sum(n_chars) AS BIGINT) AS chars_kept
@@ -2023,33 +2008,12 @@ object NorthStar {
       s"""WITH RECURSIVE keepers AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
          |d2 AS (SELECT d.* FROM documents d JOIN keepers k ON d.doc_id = k.doc_id),
          |${sigCtes("d2")},
-         |bands AS ($bandsSql),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |    AND a.doc_id < b.doc_id),
-         |g AS (SELECT DISTINCT doc_id, unnest($sh) AS g FROM d2),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id),
-         |inter AS (SELECT cand.da, cand.db, count(*) AS i
-         |  FROM cand JOIN g ga ON ga.doc_id = cand.da
-         |            JOIN g gb ON gb.doc_id = cand.db AND gb.g = ga.g
-         |  GROUP BY 1, 2),
-         |lex AS (SELECT da, db FROM inter
-         |  JOIN sizes sa ON da = sa.doc_id JOIN sizes sb ON db = sb.doc_id
-         |  WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
+         |$candCtes,
+         |${interCtes("d2")},
+         |${pairsCte("lex")},
          |v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
          |  FROM embeddings JOIN keepers k2 ON vec_id = k2.doc_id),
-         |n AS (SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm FROM v),
-         |cv AS (SELECT e, row_number() OVER (ORDER BY e) AS rn
-         |       FROM (SELECT DISTINCT e FROM v) ORDER BY e LIMIT 128),
-         |ccount AS (SELECT count(*) AS c FROM cv),
-         |seeds AS (SELECT r.i + 1 AS sid,
-         |    list_transform(cv.e, x -> round_even(x * 1000000, 0) / 1000000) AS se
-         |  FROM range(8) r(i), ccount, cv WHERE cv.rn = (r.i * ccount.c) // 8 + 1),
-         |sn AS (SELECT sid, se, sqrt(list_sum(list_transform(se, x -> x * x))) AS snrm
-         |       FROM seeds),
-         |cs AS (SELECT n.vec_id, sid,
-         |    list_sum(list_transform(range(64), i -> n.e[i+1] * se[i+1])) / (n.nrm * snrm) AS c
-         |  FROM n, sn),
+         |$quantizerCtes,
          |cellof AS (SELECT vec_id, sid AS cell FROM
          |  (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, sid) AS rn
          |   FROM cs) WHERE rn = 1),
@@ -2070,7 +2034,7 @@ object NorthStar {
          |GROUP BY source ORDER BY source""".stripMargin,
     "q34_fingerprint" ->
       s"""WITH w AS (SELECT DISTINCT doc_id, unnest(string_split(text,' ')) AS w FROM documents),
-         |h AS (SELECT doc_id, (${h60("w")}) % $P AS h FROM w)
+         |h AS (SELECT doc_id, (${h60Sql("w")}) % $P AS h FROM w)
          |SELECT doc_id, bit_xor(h) AS xor_fp, CAST(sum(h) AS BIGINT) AS sum_fp,
          |  count(*) AS n_distinct_words
          |FROM h GROUP BY doc_id ORDER BY doc_id""".stripMargin,
@@ -2103,27 +2067,8 @@ object NorthStar {
     // block grid, bit = integer cross-multiplied mean comparison of
     // horizontal neighbors.
     "q285_image_phash" ->
-      s"""WITH xs AS (SELECT unnest(range(0, 24)) AS x),
-         |     ys AS (SELECT unnest(range(0, 21)) AS y),
-         |px AS (
-         |  SELECT d.doc_id, 16 + d.doc_id % 8 AS w, 16 + d.doc_id % 5 AS h,
-         |    xs.x, ys.y,
-         |    (d.doc_id * 53 + (3 + d.doc_id % 9) * xs.x
-         |       + (5 + d.doc_id % 7) * ys.y
-         |       + (2 + d.doc_id % 4) * xs.x * xs.x
-         |       + (3 + d.doc_id % 6) * ys.y * ys.y) % 256 AS v
-         |  FROM documents d, xs, ys
-         |  WHERE xs.x < 16 + d.doc_id % 8 AND ys.y < 16 + d.doc_id % 5),
-         |cells AS (SELECT doc_id, (y * 8) // h AS cy, (x * 9) // w AS cx,
-         |    sum(v) AS s, count(*) AS c FROM px GROUP BY 1, 2, 3),
-         |bits AS (SELECT a.doc_id, a.cy, a.cx,
-         |    CASE WHEN a.s * b.c > b.s * a.c THEN 1 ELSE 0 END AS bit
-         |  FROM cells a JOIN cells b
-         |    ON a.doc_id = b.doc_id AND a.cy = b.cy AND b.cx = a.cx + 1
-         |  WHERE a.cx < 8),
-         |rowb AS (SELECT doc_id, cy,
-         |    CAST(sum(bit * (CAST(1 AS BIGINT) << cx)) AS BIGINT) AS rb
-         |  FROM bits GROUP BY doc_id, cy)
+      s"""WITH $rasterPxCtes,
+         |$dhashCtes
          |SELECT doc_id AS media_id,
          |  string_agg(printf('%02x', rb), '' ORDER BY cy) AS phash,
          |${(0 until 8).map(i =>
@@ -2133,38 +2078,9 @@ object NorthStar {
     // doc_id rounded down to its group-of-3 base), then 16-bit band
     // collisions -> exact-Hamming verify at <= 3.
     "q286_image_neardup" ->
-      s"""WITH xs AS (SELECT unnest(range(0, 24)) AS x),
-         |     ys AS (SELECT unnest(range(0, 21)) AS y),
-         |px AS (
-         |  SELECT d.doc_id, 16 + (d.doc_id - d.doc_id % 3) % 8 AS w,
-         |    16 + (d.doc_id - d.doc_id % 3) % 5 AS h, xs.x, ys.y,
-         |    ((d.doc_id - d.doc_id % 3) * 53
-         |       + (3 + (d.doc_id - d.doc_id % 3) % 9) * xs.x
-         |       + (5 + (d.doc_id - d.doc_id % 3) % 7) * ys.y
-         |       + (2 + (d.doc_id - d.doc_id % 3) % 4) * xs.x * xs.x
-         |       + (3 + (d.doc_id - d.doc_id % 3) % 6) * ys.y * ys.y) % 256 AS v
-         |  FROM documents d, xs, ys
-         |  WHERE xs.x < 16 + (d.doc_id - d.doc_id % 3) % 8
-         |    AND ys.y < 16 + (d.doc_id - d.doc_id % 3) % 5),
-         |cells AS (SELECT doc_id, (y * 8) // h AS cy, (x * 9) // w AS cx,
-         |    sum(v) AS s, count(*) AS c FROM px GROUP BY 1, 2, 3),
-         |bits AS (SELECT a.doc_id, a.cy, a.cx,
-         |    CASE WHEN a.s * b.c > b.s * a.c THEN 1 ELSE 0 END AS bit
-         |  FROM cells a JOIN cells b
-         |    ON a.doc_id = b.doc_id AND a.cy = b.cy AND b.cx = a.cx + 1
-         |  WHERE a.cx < 8),
-         |rowb AS (SELECT doc_id, cy,
-         |    CAST(sum(bit * (CAST(1 AS BIGINT) << cx)) AS BIGINT) AS rb
-         |  FROM bits GROUP BY doc_id, cy),
-         |rb2 AS (SELECT doc_id,
-         |${(0 until 8).map(i =>
-              s"  max(CASE WHEN cy = $i THEN rb END) AS r$i").mkString(",\n")}
-         |  FROM rowb GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, r0 * 256 + r1 AS bv FROM rb2
-         |  UNION ALL SELECT doc_id, 1, r2 * 256 + r3 FROM rb2
-         |  UNION ALL SELECT doc_id, 2, r4 * 256 + r5 FROM rb2
-         |  UNION ALL SELECT doc_id, 3, r6 * 256 + r7 FROM rb2),
+      s"""WITH $groupPxCtes,
+         |$dhashCtes,
+         |${rowBandsCtes("bands")},
          |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |  FROM bands a JOIN bands b
          |    ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id),
@@ -2203,15 +2119,9 @@ object NorthStar {
         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
     "q289_dup_cluster_histogram" ->
       s"""WITH RECURSIVE ${sigCtes("documents")},
-         |bands AS ($bandsSql),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |    AND a.doc_id < b.doc_id),
-         |e AS (SELECT da AS u, db AS v FROM cand UNION SELECT db, da FROM cand),
-         |reach AS (SELECT u AS a, v AS b FROM e
-         |  UNION SELECT r.a, e.v FROM reach r JOIN e ON r.b = e.u),
-         |comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
-         |  FROM reach GROUP BY a),
+         |$candCtes,
+         |${reachCtes("cand")},
+         |$compCte,
          |sizes AS (SELECT component, count(*) AS cluster_size
          |  FROM comp GROUP BY component)
          |SELECT cluster_size, count(*) AS n_clusters,
@@ -2261,25 +2171,8 @@ object NorthStar {
     // (q259's CTEs), the CCNet bigram-LM fluency threshold (lmCtes),
     // and the q31 marker lang-ID gate.
     "q293_filter_stack" -> {
-      s"""WITH q AS (SELECT doc_id,
-         |    CAST(len(string_split(text,' ')) AS BIGINT) AS n_words,
-         |    CAST(length(text) - len(string_split(text,' ')) + 1 AS DOUBLE)
-         |      / len(string_split(text,' ')) AS avg_word_len,
-         |    CAST(len(list_filter(string_split(text,' '),
-         |      x -> x IN ('the','a','of','to','and','in','is'))) AS DOUBLE)
-         |      / len(string_split(text,' ')) AS stop_ratio
-         |  FROM documents),
-         |g2 AS (SELECT doc_id, unnest(${Dedup.shinglesSql("text", 2)}) AS g FROM documents),
-         |c2 AS (SELECT doc_id, g, count(*) AS c FROM g2 GROUP BY doc_id, g),
-         |t2 AS (SELECT doc_id, g, c,
-         |    row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, g DESC) AS rn
-         |  FROM c2),
-         |g5 AS (SELECT doc_id, unnest(${Dedup.shinglesSql("text", 5)}) AS g FROM documents),
-         |d5 AS (SELECT doc_id, round(CAST(count(*) - count(DISTINCT g) AS DOUBLE)
-         |    / count(*), 6) AS dup5_ratio FROM g5 GROUP BY doc_id),
-         |g10 AS (SELECT doc_id, unnest(${Dedup.shinglesSql("text", 10)}) AS g FROM documents),
-         |d10 AS (SELECT doc_id, round(CAST(count(*) - count(DISTINCT g) AS DOUBLE)
-         |    / count(*), 6) AS dup10_ratio FROM g10 GROUP BY doc_id),
+      s"""WITH $gopherShapeCte,
+         |$repetitionCtes,
          |gopher AS (SELECT d.doc_id, d.source,
          |    (q.n_words BETWEEN 50 AND 100000
          |     AND q.avg_word_len BETWEEN 3.0 AND 10.0
@@ -2329,38 +2222,9 @@ object NorthStar {
     // The q286 band pipeline WITHOUT the Hamming verify: the streaming
     // replay must reproduce exactly the batch band-collision candidates.
     "q298_streaming_phash" ->
-      s"""WITH xs AS (SELECT unnest(range(0, 24)) AS x),
-         |     ys AS (SELECT unnest(range(0, 21)) AS y),
-         |px AS (
-         |  SELECT d.doc_id, 16 + (d.doc_id - d.doc_id % 3) % 8 AS w,
-         |    16 + (d.doc_id - d.doc_id % 3) % 5 AS h, xs.x, ys.y,
-         |    ((d.doc_id - d.doc_id % 3) * 53
-         |       + (3 + (d.doc_id - d.doc_id % 3) % 9) * xs.x
-         |       + (5 + (d.doc_id - d.doc_id % 3) % 7) * ys.y
-         |       + (2 + (d.doc_id - d.doc_id % 3) % 4) * xs.x * xs.x
-         |       + (3 + (d.doc_id - d.doc_id % 3) % 6) * ys.y * ys.y) % 256 AS v
-         |  FROM documents d, xs, ys
-         |  WHERE xs.x < 16 + (d.doc_id - d.doc_id % 3) % 8
-         |    AND ys.y < 16 + (d.doc_id - d.doc_id % 3) % 5),
-         |cells AS (SELECT doc_id, (y * 8) // h AS cy, (x * 9) // w AS cx,
-         |    sum(v) AS s, count(*) AS c FROM px GROUP BY 1, 2, 3),
-         |bits AS (SELECT a.doc_id, a.cy, a.cx,
-         |    CASE WHEN a.s * b.c > b.s * a.c THEN 1 ELSE 0 END AS bit
-         |  FROM cells a JOIN cells b
-         |    ON a.doc_id = b.doc_id AND a.cy = b.cy AND b.cx = a.cx + 1
-         |  WHERE a.cx < 8),
-         |rowb AS (SELECT doc_id, cy,
-         |    CAST(sum(bit * (CAST(1 AS BIGINT) << cx)) AS BIGINT) AS rb
-         |  FROM bits GROUP BY doc_id, cy),
-         |rb2 AS (SELECT doc_id,
-         |${(0 until 8).map(i =>
-              s"  max(CASE WHEN cy = $i THEN rb END) AS r$i").mkString(",\n")}
-         |  FROM rowb GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, r0 * 256 + r1 AS bv FROM rb2
-         |  UNION ALL SELECT doc_id, 1, r2 * 256 + r3 FROM rb2
-         |  UNION ALL SELECT doc_id, 2, r4 * 256 + r5 FROM rb2
-         |  UNION ALL SELECT doc_id, 3, r6 * 256 + r7 FROM rb2)
+      s"""WITH $groupPxCtes,
+         |$dhashCtes,
+         |${rowBandsCtes("bands")}
          |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |FROM bands a JOIN bands b
          |  ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
@@ -2375,14 +2239,7 @@ object NorthStar {
          |  FROM words),
          |t AS (SELECT doc_id, source, CAST(sum(nt) AS BIGINT) AS n_tok
          |  FROM wt GROUP BY doc_id, source),
-         |c AS (SELECT doc_id, source, n_tok,
-         |    CAST(coalesce(sum(n_tok) OVER (ORDER BY source, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-         |      AS start_tok FROM t)
-         |SELECT doc_id, source, n_tok, start_tok,
-         |  start_tok // 512 AS first_seq,
-         |  (start_tok + n_tok - 1) // 512 AS last_seq
-         |FROM c ORDER BY doc_id""".stripMargin,
+         |$packTail""".stripMargin,
     "q297_ann_truncated" ->
       """WITH v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
         |  FROM embeddings),
@@ -2413,17 +2270,7 @@ object NorthStar {
         |    ['dup', 'nonexistentword'])) = 0 AS keep
         |FROM documents ORDER BY doc_id""".stripMargin,
     "q304_image_feature_knn" ->
-      s"""WITH xs AS (SELECT unnest(range(0, 24)) AS x),
-         |     ys AS (SELECT unnest(range(0, 21)) AS y),
-         |px AS (
-         |  SELECT d.doc_id, 16 + d.doc_id % 8 AS w, 16 + d.doc_id % 5 AS h,
-         |    xs.x, ys.y,
-         |    (d.doc_id * 53 + (3 + d.doc_id % 9) * xs.x
-         |       + (5 + d.doc_id % 7) * ys.y
-         |       + (2 + d.doc_id % 4) * xs.x * xs.x
-         |       + (3 + d.doc_id % 6) * ys.y * ys.y) % 256 AS v
-         |  FROM documents d, xs, ys
-         |  WHERE xs.x < 16 + d.doc_id % 8 AND ys.y < 16 + d.doc_id % 5),
+      s"""WITH $rasterPxCtes,
          |cells AS (SELECT doc_id, (y * 8) // h AS cy, (x * 9) // w AS cx,
          |    sum(v) AS s, count(*) AS c FROM px GROUP BY 1, 2, 3),
          |fv AS (SELECT doc_id, list(CAST(s AS DOUBLE) / c ORDER BY cy, cx) AS e

@@ -14,7 +14,7 @@ import Q._
   * script of the same canonical shape over the whole table so the
   * front-end is value-checked at full row count.
   */
-object Pxl {
+object Pxl extends Gates {
 
   private val SplitTs = "2024-01-15"
   private def splitNs = graft.functions.PixieFunctions.tsNsLit(SplitTs)

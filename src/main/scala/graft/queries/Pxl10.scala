@@ -20,7 +20,7 @@ import PxlGate._
   * command timeseries shuffle once on (window, command). Nothing here
   * re-scans or collects.
   */
-object Pxl10 {
+object Pxl10 extends Gates {
 
   val queries: Map[String, QFn] = Map(
     // mysql_stats latency_histogram: 5ms-binned latency counts over the
@@ -107,13 +107,6 @@ object Pxl10 {
       |        CASE WHEN is_server THEN ra_name ELSE pod END AS source,
       |        CASE WHEN is_server THEN pod ELSE ra_name END AS destination
       |      FROM w)""".stripMargin
-
-  /** px.script_reference deep link (pod vs ip target, q158 convention). */
-  private def linkSql(c: String, flag: String): String =
-    s"""CASE WHEN $flag
-       |    THEN '{"label":"' || $c || '","script":"px/pod","args":{"start_time":"-45d","pod":"' || $c || '"}}'
-       |    ELSE '{"label":"' || $c || '","script":"px/ip","args":{"start_time":"-45d","ip":"' || $c || '"}}'
-       |  END""".stripMargin
 
   /** px.bin over the DOUBLE latency at 5 ms: value - fmod(value, w),
     * truncated — exact in both engines (values are well inside 2^53).

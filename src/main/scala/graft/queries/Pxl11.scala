@@ -18,7 +18,7 @@ import PxlGate._
   * aggregates keyed by the output tuple; ip_info is a global 1-row
   * rollup of the per-pod rates.
   */
-object Pxl11 {
+object Pxl11 extends Gates {
 
   val ServiceStatsPath = s"$RefPx/service_stats/service_stats.pxl"
   val PodPath = s"$RefPx/pod/pod.pxl"
@@ -110,6 +110,10 @@ object Pxl11 {
     * the responding svc on this fixture) then the whole-range summary.
     */
   private def edgeSummaryOracle(svcFilter: String): String =
+    edgeSummarySql(s"$httpFilter $svcFilter")
+
+  /** The edge-summary oracle over the http events passing `where`. */
+  private[queries] def edgeSummarySql(where: String): String =
     s"""WITH $eventsCte,
        |w AS (SELECT t - t % 10000000000 AS ts_bin, user_id, g,
        |        'svc-' || (user_id % 10) AS svc,
@@ -117,7 +121,7 @@ object Pxl11 {
        |        CASE WHEN 100 + event_id % 460 >= 400 THEN 1 ELSE 0 END
        |          AS failure,
        |        100 + event_id % 1000 AS resp_sz
-       |      FROM e WHERE $httpFilter $svcFilter),
+       |      FROM e WHERE $where),
        |q AS (SELECT ts_bin, user_id, g, svc,
        |        avg(CAST(failure AS DOUBLE)) AS erw,
        |        count(latency) AS tt,

@@ -18,7 +18,7 @@ import PxlGate._
   * second small aggregate per edge; the deep-link wrapping is a
   * per-row codegen'd `to_json(struct(..))` with no extra pass.
   */
-object Pxl12 {
+object Pxl12 extends Gates {
 
   val TracepointsPath = s"$RefPx/tracepoint_status/tracepoint_status.pxl"
 
@@ -96,15 +96,6 @@ object Pxl12 {
 
   // ---- oracles -------------------------------------------------------
 
-  /** px.script_reference deep link for flow-graph endpoints (pod vs ip
-    * target — q158/q179 convention, struct-declaration key order).
-    */
-  private def linkSql(c: String, flag: String): String =
-    s"""CASE WHEN $flag
-       |    THEN '{"label":"' || $c || '","script":"px/pod","args":{"start_time":"-45d","pod":"' || $c || '"}}'
-       |    ELSE '{"label":"' || $c || '","script":"px/ip","args":{"start_time":"-45d","ip":"' || $c || '"}}'
-       |  END""".stripMargin
-
   /** The shared flow-graph edge windows (q123–q126 shape) narrowed to
     * one namespace, summarized per edge, endpoints deep-linked.
     */
@@ -138,22 +129,6 @@ object Pxl12 {
        |  CAST(sum(tt) AS BIGINT) AS throughput_total
        |FROM q GROUP BY source, destination, is_src, is_dst
        |ORDER BY source, destination""".stripMargin
-
-  /** pg + mysql normalized-query streams (q158/q159 shape). */
-  private val sqlStreamsCte =
-    s"""pg AS (SELECT t - t % 10000000000 AS ts_bin,
-       |        'SELECT * FROM rel' || (event_id % 7) || ' WHERE id=$$1'
-       |          AS normed_query,
-       |        '["' || (event_id % 100) || '"]' AS params,
-       |        value AS latency
-       |      FROM e WHERE event_id % 4 IN (0, 1)),
-       |my AS (SELECT t - t % 10000000000 AS ts_bin,
-       |        'SELECT * FROM t' || (event_id % 5) || ' WHERE id=?'
-       |          AS normed_query,
-       |        '["' || (event_id % 100) || '"]' AS params,
-       |        value AS latency
-       |      FROM e WHERE event_id % 32 IN (3, 23)),
-       |u AS (SELECT * FROM pg UNION ALL SELECT * FROM my)""".stripMargin
 
   /** px/sql_query deep link on the normalized query (add_query_links:
     * args {start, pod, query} in declaration order).
@@ -193,7 +168,7 @@ object Pxl12 {
 
     "q201_pxl_sql_summary" ->
       s"""WITH $eventsCte,
-         |$sqlStreamsCte,
+         |${Pxl7.sqlStreamsCte},
          |q AS (SELECT ts_bin, normed_query,
          |        CAST(floor(quantile_cont(latency, 0.50)) AS BIGINT) AS p50,
          |        count(latency) AS tt
@@ -207,7 +182,7 @@ object Pxl12 {
 
     "q202_pxl_sql_query_summary" ->
       s"""WITH $eventsCte,
-         |$sqlStreamsCte,
+         |${Pxl7.sqlStreamsCte},
          |q AS (SELECT ts_bin, normed_query, params,
          |        CAST(floor(quantile_cont(latency, 0.50)) AS BIGINT) AS p50,
          |        count(latency) AS tt

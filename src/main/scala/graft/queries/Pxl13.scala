@@ -18,7 +18,7 @@ import PxlGate._
   * shared q131/q132 single-fork path; the time-window scalar is the
   * keyless 1-row broadcast merge; nothing collects.
   */
-object Pxl13 {
+object Pxl13 extends Gates {
 
   val KafkaOverviewPath = s"$RefPx/kafka_overview/kafka_overview.pxl"
   val KafkaPCLatencyPath =
@@ -103,26 +103,9 @@ object Pxl13 {
 
   // ---- oracles -------------------------------------------------------
 
-  /** Tracer source/destination CTE (q171/q173 shape). */
+  /** [[PxlGate.srcDstCte]] over the event window, with namespaces. */
   private def srcDstCte: String =
-    s"""w AS (SELECT *, 'pod-' || user_id || '-gen' || g AS pod,
-       |        'ns' || (user_id % 10 % 3) AS namespace,
-       |        event_id % 3 <> 0 AS is_server, event_id % 5 <> 0 AS is_ra_pod,
-       |        CASE WHEN event_id % 5 = 0 THEN '-'
-       |             ELSE 'pod-' || user_id || '-gen' || g END AS ra_name
-       |      FROM e),
-       |x AS (SELECT *,
-       |        CASE WHEN is_server THEN is_ra_pod ELSE true END AS is_src_pod,
-       |        CASE WHEN is_server THEN true ELSE is_ra_pod END AS is_dst_pod,
-       |        CASE WHEN is_server THEN ra_name ELSE pod END AS src0,
-       |        CASE WHEN is_server THEN pod ELSE ra_name END AS dst0
-       |      FROM w)""".stripMargin
-
-  private def linkSql(c: String, flag: String): String =
-    s"""CASE WHEN $flag
-       |    THEN '{"label":"' || $c || '","script":"px/pod","args":{"start_time":"-45d","pod":"' || $c || '"}}'
-       |    ELSE '{"label":"' || $c || '","script":"px/ip","args":{"start_time":"-45d","ip":"' || $c || '"}}'
-       |  END""".stripMargin
+    PxlGate.srcDstCte("e", "'ns' || (user_id % 10 % 3) AS namespace,")
 
   /** Produce/fetch unnested rows with deep-linked endpoints + the
     * process_stats time window (q131 convention).
@@ -269,23 +252,6 @@ object Pxl13 {
          |        CASE WHEN is_server THEN ra_name ELSE pod END AS src0,
          |        CASE WHEN is_server THEN pod ELSE ra_name END AS dst0
          |      FROM w)
-         |SELECT t AS time_, src0 AS source, dst0 AS destination,
-         |  1024 + event_id % 32768 AS remote_port,
-         |  CASE WHEN event_id % 70 = 11 THEN 'JoinGroup'
-         |       ELSE 'SyncGroup' END AS req_cmd,
-         |  CASE WHEN event_id % 70 = 11
-         |    THEN '{"group_id":"cg-' || (user_id % 4) || '"}'
-         |    ELSE '{"group_id":"cg-' || (user_id % 4) ||
-         |      '","generation_id":' || (user_id % 3) ||
-         |      ',"member_id":"m-' || user_id || '"}' END AS req_body,
-         |  CASE WHEN event_id % 70 = 11
-         |    THEN '{"generation_id":' || (user_id % 3) ||
-         |      ',"member_id":"m-' || user_id || '"}'
-         |    ELSE '{"topics":[{"name":"t' || ((user_id + 1) % 4) ||
-         |      '","partitions":[{"index":' || ((event_id + 1) % 3) ||
-         |      ',"message_set":{"size":' || (100 + (event_id * 2) % 900) ||
-         |      '}}]}]}' END AS resp,
-         |  value AS latency
-         |FROM x ORDER BY time_""".stripMargin
+         |$rebalRows""".stripMargin
   )
 }

@@ -16,7 +16,7 @@ import PxlGate._
   * merge-back; the summaries join two aggregates of the SAME scan on
   * the group key (exchange reuse, no re-scan).
   */
-object Pxl14 {
+object Pxl14 extends Gates {
 
   val PodsPath = s"$RefPx/pods/pods.pxl"
   val ServicePath = s"$RefPx/service/service.pxl"
@@ -168,29 +168,9 @@ object Pxl14 {
 
     // q187's edge-summary math keyed (requestor, responder).
     "q219_pxl_svc_edge_summary" ->
-      s"""WITH $eventsCte,
-         |w AS (SELECT t - t % 10000000000 AS ts_bin, user_id, g,
-         |        'svc-' || (user_id % 10) AS svc,
-         |        value AS latency,
-         |        CASE WHEN 100 + event_id % 460 >= 400 THEN 1 ELSE 0 END
-         |          AS failure,
-         |        100 + event_id % 1000 AS resp_sz
-         |      FROM e WHERE user_id % 10 = 1
-         |        AND event_id % 25 <> 0 AND event_id % 25 <> 1
-         |        AND event_id % 5 <> 0),
-         |q AS (SELECT ts_bin, user_id, g, svc,
-         |        avg(CAST(failure AS DOUBLE)) AS erw,
-         |        count(latency) AS tt,
-         |        CAST(sum(resp_sz) AS BIGINT) AS bt
-         |      FROM w GROUP BY 1, 2, 3, 4)
-         |SELECT svc AS requestor, svc AS responder,
-         |  round(avg(tt / 10000000000) * 10000000000, 9) / 10000000000
-         |    AS request_throughput,
-         |  round(avg(bt / 10000000000) * 10000000000, 9) / 10000000000
-         |    AS bytes_throughput,
-         |  round(avg(erw * (tt / 10000000000)) * 10000000000, 9)
-         |    / 10000000000 AS error_rate
-         |FROM q GROUP BY svc ORDER BY requestor, responder""".stripMargin,
+      Pxl11.edgeSummarySql("user_id % 10 = 1\n" +
+        "        AND event_id % 25 <> 0 AND event_id % 25 <> 1\n" +
+        "        AND event_id % 5 <> 0"),
 
     // service.pxl: (service, requesting ip) groups for svc-1 users.
     "q220_pxl_service_inbound_summary" ->

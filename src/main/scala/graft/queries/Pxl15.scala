@@ -20,7 +20,7 @@ import PxlGate._
   * the cluster overview joins per-service aggregates — broadcast-sized
   * build sides by construction.
   */
-object Pxl15 {
+object Pxl15 extends Gates {
 
   val ServicesPath = s"$RefPx/services/services.pxl"
   val NamespacePath = s"$RefPx/namespace/namespace.pxl"

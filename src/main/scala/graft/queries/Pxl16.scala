@@ -23,7 +23,7 @@ import PxlGate._
   * (like the reference); everything else is the standard one-shuffle
   * windowed LET shape; predict/match are per-row scalars.
   */
-object Pxl16 {
+object Pxl16 extends Gates {
 
   private val RefScripts = s"${Pxl.RefDir}/src/pxl_scripts"
   val EndpointsPath = s"$RefScripts/pxbeta/service_endpoints/service_endpoints.pxl"

@@ -18,7 +18,7 @@ import PxlGate._
   * keyed by (upid, window) then (pod, window) — both shapes hold at
   * 1000 executors (no fact-table shuffle beyond the group-by keys).
   */
-object Pxl2 {
+object Pxl2 extends Gates {
 
   val PodsPxlPath = s"$RefPx/pods/pods.pxl"
   val ServicePxlPath = s"$RefPx/service/service.pxl"
@@ -183,15 +183,6 @@ object Pxl2 {
   private val podStatusSql =
     """CASE user_id % 4 WHEN 0 THEN 'Running' WHEN 1 THEN 'Pending'
       |     WHEN 2 THEN 'Succeeded' ELSE 'Failed' END""".stripMargin
-
-  /** Deep-link JSON for the tracer scripts' source/destination columns
-    * (px.script_reference, pod vs ip target).
-    */
-  private def linkSql(c: String, flag: String): String =
-    s"""CASE WHEN $flag
-       |    THEN '{"label":"' || $c || '","script":"px/pod","args":{"start_time":"-45d","pod":"' || $c || '"}}'
-       |    ELSE '{"label":"' || $c || '","script":"px/ip","args":{"start_time":"-45d","ip":"' || $c || '"}}'
-       |  END""".stripMargin
 
   /** Shared oracle skeleton for the data-tracer family: the
     * add_source_dest_columns / add_source_dest_links derivation over the

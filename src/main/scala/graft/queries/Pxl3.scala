@@ -18,7 +18,7 @@ import PxlGate._
   * data plane); the stirling_error / http filter scripts are scan →
   * broadcast-dim as-of join → filter, nothing shuffles the fact table.
   */
-object Pxl3 {
+object Pxl3 extends Gates {
 
   val AgentStatusPath = s"$RefPx/agent_status/agent_status.pxl"
   val SchemasPath = s"$RefPx/schemas/schemas.pxl"
@@ -107,43 +107,6 @@ object Pxl3 {
   private def valuesSql(rows: Seq[String], cols: String): String =
     rows.mkString(s"(VALUES ", ", ", s") AS v($cols)")
 
-  /** Hand-written column counts per fixture table (independent of the
-    * Spark read path; mirrors Ml.schemaRows).
-    */
-  private val tableCols: Seq[(String, Int)] = Seq(
-    "region" -> 2, "nation" -> 3, "customer" -> 5, "supplier" -> 4,
-    "part" -> 6, "orders" -> 6, "lineitem" -> 11, "events" -> 6,
-    "documents" -> 5, "embeddings" -> 3)
-
-  private val schemaRows: Seq[(String, Seq[(String, String)])] = Seq(
-    "region" -> Seq("r_regionkey" -> "INTEGER", "r_name" -> "VARCHAR"),
-    "nation" -> Seq("n_nationkey" -> "INTEGER", "n_name" -> "VARCHAR",
-      "n_regionkey" -> "INTEGER"),
-    "customer" -> Seq("c_custkey" -> "BIGINT", "c_name" -> "VARCHAR",
-      "c_nationkey" -> "INTEGER", "c_acctbal" -> "DOUBLE",
-      "c_mktsegment" -> "VARCHAR"),
-    "supplier" -> Seq("s_suppkey" -> "BIGINT", "s_name" -> "VARCHAR",
-      "s_nationkey" -> "INTEGER", "s_acctbal" -> "DOUBLE"),
-    "part" -> Seq("p_partkey" -> "BIGINT", "p_name" -> "VARCHAR",
-      "p_brand" -> "VARCHAR", "p_type" -> "VARCHAR", "p_size" -> "INTEGER",
-      "p_retailprice" -> "DOUBLE"),
-    "orders" -> Seq("o_orderkey" -> "BIGINT", "o_custkey" -> "BIGINT",
-      "o_orderstatus" -> "VARCHAR", "o_totalprice" -> "DOUBLE",
-      "o_orderdate" -> "TIMESTAMP", "o_orderpriority" -> "VARCHAR"),
-    "lineitem" -> Seq("l_orderkey" -> "BIGINT", "l_partkey" -> "BIGINT",
-      "l_suppkey" -> "BIGINT", "l_linenumber" -> "INTEGER",
-      "l_quantity" -> "DOUBLE", "l_extendedprice" -> "DOUBLE",
-      "l_discount" -> "DOUBLE", "l_tax" -> "DOUBLE",
-      "l_returnflag" -> "VARCHAR", "l_linestatus" -> "VARCHAR",
-      "l_shipdate" -> "TIMESTAMP"),
-    "events" -> Seq("event_id" -> "BIGINT", "ts" -> "BIGINT",
-      "user_id" -> "BIGINT", "event_type" -> "VARCHAR",
-      "value" -> "DOUBLE", "props" -> "VARCHAR"),
-    "documents" -> Seq("doc_id" -> "BIGINT", "text" -> "VARCHAR",
-      "lang" -> "VARCHAR", "source" -> "VARCHAR", "n_chars" -> "BIGINT"),
-    "embeddings" -> Seq("vec_id" -> "BIGINT", "embedding" -> "FLOAT[]",
-      "label" -> "INTEGER"))
-
   private val statusSql =
     """CASE event_id % 3 WHEN 0 THEN 'OK' WHEN 1 THEN 'INTERNAL'
       |     ELSE 'FAILED_PRECONDITION' END""".stripMargin
@@ -161,19 +124,14 @@ object Pxl3 {
 
     "q110_pxl_schemas_tables" -> (
       s"""SELECT table_name, CAST(n_cols AS BIGINT) AS n_cols
-         |FROM ${valuesSql(tableCols.map { case (t, n) => s"('$t',$n)" },
+         |FROM ${valuesSql(Ml.schemaRows.map { case (t, cs) => s"('$t',${cs.size})" },
             "table_name, n_cols")}
          |ORDER BY table_name""".stripMargin),
 
     "q111_pxl_schemas_cols" -> (
       s"""SELECT table_name, column_name,
          |  CAST(column_index AS BIGINT) AS column_index, data_type
-         |FROM ${valuesSql(
-            schemaRows.flatMap { case (tn, cols) =>
-              cols.zipWithIndex.map { case ((cn, ty), i) =>
-                s"('$tn','$cn',${i + 1},'$ty')"
-              }
-            }, "table_name, column_name, column_index, data_type")}
+         |FROM ${Ml.schemaValues}
          |ORDER BY table_name, column_index""".stripMargin),
 
     "q112_pxl_funcs_udf" -> (

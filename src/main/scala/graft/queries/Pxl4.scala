@@ -22,7 +22,7 @@ import PxlGate._
   * no explode skew); the flamegraph is two aggregations plus a
   * broadcast-size merge keyed by pod.
   */
-object Pxl4 {
+object Pxl4 extends Gates {
 
   val NetFlowPath = s"$RefPx/net_flow_graph/net_flow_graph.pxl"
   val DnsFlowPath = s"$RefPx/dns_flow_graph/dns_flow_graph.pxl"

@@ -20,7 +20,7 @@ import PxlGate._
   * keys. slow_http_requests joins a per-service p99 (tiny, broadcast)
   * back onto the row stream.
   */
-object Pxl5 {
+object Pxl5 extends Gates {
 
   val NodesPath = s"$RefPx/nodes/nodes.pxl"
   val NodePath = s"$RefPx/node/node.pxl"
@@ -193,6 +193,26 @@ object Pxl5 {
        |        AND event_id % 25 <> 0 AND event_id % 25 <> 1
        |        AND event_id % 5 <> 0)""".stripMargin
 
+  /** Server-side http rows srv and their per-service rates and latency
+      * quantiles (rates, q) over the `h` helper CTE.
+      */
+  private[queries] val srvLetCtes: String =
+    s"""srv AS (SELECT * FROM h WHERE event_id % 3 <> 0),
+       |pw AS (SELECT ts_bin, service, count(latency) AS tput,
+       |         CAST(sum(req_body_size0) AS BIGINT) AS inb,
+       |         CAST(sum(resp_body_size) AS BIGINT) AS outb
+       |       FROM srv GROUP BY 1, 2),
+       |rates AS (SELECT service,
+       |    ${canonSql("avg(tput / 10000000000)")} AS http_request_throughput,
+       |    ${canonSql("avg(inb / 10000000000)")} AS inbound_http_throughput,
+       |    ${canonSql("avg(outb / 10000000000)")} AS outbound_http_throughput
+       |  FROM pw GROUP BY 1),
+       |q AS (SELECT service,
+       |        quantile_cont(latency, 0.50) AS latency_p50,
+       |        quantile_cont(latency, 0.99) AS latency_p99,
+       |        avg(CAST(failure AS DOUBLE)) AS http_error_rate
+       |      FROM srv GROUP BY 1)""".stripMargin
+
   val oracles: Map[String, String] = Map(
     "q136_pxl_nodes_list" ->
       s"""WITH $eventsCte
@@ -346,21 +366,7 @@ object Pxl5 {
          |           'pod-' || user_id || '-gen' || g AS pod
          |         FROM e WHERE user_id % 10 % 3 = 1),
          |pc AS (SELECT service, count(pod) AS pod_count FROM pods GROUP BY 1),
-         |srv AS (SELECT * FROM h WHERE event_id % 3 <> 0),
-         |pw AS (SELECT ts_bin, service, count(latency) AS tput,
-         |         CAST(sum(req_body_size0) AS BIGINT) AS inb,
-         |         CAST(sum(resp_body_size) AS BIGINT) AS outb
-         |       FROM srv GROUP BY 1, 2),
-         |rates AS (SELECT service,
-         |    ${canonSql("avg(tput / 10000000000)")} AS http_request_throughput,
-         |    ${canonSql("avg(inb / 10000000000)")} AS inbound_http_throughput,
-         |    ${canonSql("avg(outb / 10000000000)")} AS outbound_http_throughput
-         |  FROM pw GROUP BY 1),
-         |q AS (SELECT service,
-         |        quantile_cont(latency, 0.50) AS latency_p50,
-         |        quantile_cont(latency, 0.99) AS latency_p99,
-         |        avg(CAST(failure AS DOUBLE)) AS http_error_rate
-         |      FROM srv GROUP BY 1)
+         |$srvLetCtes
          |SELECT pc.service, pod_count,
          |  http_request_throughput, http_error_rate,
          |  inbound_http_throughput, outbound_http_throughput,
@@ -372,21 +378,7 @@ object Pxl5 {
     "q146_pxl_ns_let_summary" ->
       s"""WITH $eventsCte,
          |${httpHelperCte(1)},
-         |srv AS (SELECT * FROM h WHERE event_id % 3 <> 0),
-         |pw AS (SELECT ts_bin, service, count(latency) AS tput,
-         |         CAST(sum(req_body_size0) AS BIGINT) AS inb,
-         |         CAST(sum(resp_body_size) AS BIGINT) AS outb
-         |       FROM srv GROUP BY 1, 2),
-         |rates AS (SELECT service,
-         |    ${canonSql("avg(tput / 10000000000)")} AS http_request_throughput,
-         |    ${canonSql("avg(inb / 10000000000)")} AS inbound_http_throughput,
-         |    ${canonSql("avg(outb / 10000000000)")} AS outbound_http_throughput
-         |  FROM pw GROUP BY 1),
-         |q AS (SELECT service,
-         |        quantile_cont(latency, 0.50) AS latency_p50,
-         |        quantile_cont(latency, 0.99) AS latency_p99,
-         |        avg(CAST(failure AS DOUBLE)) AS http_error_rate
-         |      FROM srv GROUP BY 1)
+         |$srvLetCtes
          |SELECT rates.service, http_request_throughput, http_error_rate,
          |  inbound_http_throughput, outbound_http_throughput,
          |  latency_p50, latency_p99

@@ -18,7 +18,7 @@ import PxlGate._
   * data tail — tiny but deterministic, and the whole operator chain
   * (global-max agg + self-merge) still executes.
   */
-object Pxl6 {
+object Pxl6 extends Gates {
 
   val DnsQuerySummaryPath = s"$RefPx/dns_query_summary/dns_query_summary.pxl"
   val NetworkStatsPath = s"$RefPx/network_stats/stats.pxl"

@@ -15,7 +15,7 @@ import PxlGate._
   * one (window, query) aggregation — the normalizer is a per-row scalar
   * (no shuffle), and the append is a union, not a join.
   */
-object Pxl7 {
+object Pxl7 extends Gates {
 
   val SqlQueriesPath = s"$RefPx/sql_queries/normed_sql_queries.pxl"
   val SqlQueryPath = s"$RefPx/sql_query/normed_sql_query.pxl"
@@ -55,7 +55,7 @@ object Pxl7 {
     * The synth queries carry one id literal, so normalization yields
     * `... WHERE id=$$1` / `... WHERE id=?` with params ["<id>"].
     */
-  private val sqlStreamsCte =
+  private[queries] val sqlStreamsCte =
     s"""pg AS (SELECT t - t % 10000000000 AS ts_bin,
        |        'SELECT * FROM rel' || (event_id % 7) || ' WHERE id=$$1'
        |          AS normed_query,

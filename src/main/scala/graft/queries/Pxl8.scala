@@ -17,7 +17,7 @@ import PxlGate._
   * broadcast (1-row side); pod_edge_stats' remote-IP prefilter is a
   * distinct-remote_addr aggregate joined back (tiny build side).
   */
-object Pxl8 {
+object Pxl8 extends Gates {
 
   val PodLifetimePath = s"$RefPx/pod_lifetime_resource/resource.pxl"
   val QualityPath = s"$RefPx/pixie_quality_metrics/pixie_quality_metrics.pxl"

@@ -19,7 +19,7 @@ import PxlGate._
   * key; the differential flamegraph joins two already-aggregated pod
   * profiles (bounded by distinct stack ids).
   */
-object Pxl9 {
+object Pxl9 extends Gates {
 
   val HttpTraceIdPath = s"$RefPx/http_trace_id/script.pxl"
   val DiffFlamePath = s"$RefPx/differential_flamegraph/differential.pxl"
@@ -78,26 +78,6 @@ object Pxl9 {
   )
 
   // ---- oracles -------------------------------------------------------
-
-  /** Tracer source/destination CTE over `from` (no deep links). */
-  private def srcDstCte(from: String): String =
-    s"""w AS (SELECT *, 'pod-' || user_id || '-gen' || g AS pod,
-       |        event_id % 3 <> 0 AS is_server, event_id % 5 <> 0 AS is_ra_pod,
-       |        CASE WHEN event_id % 5 = 0 THEN '-'
-       |             ELSE 'pod-' || user_id || '-gen' || g END AS ra_name
-       |      FROM $from),
-       |x AS (SELECT *,
-       |        CASE WHEN is_server THEN is_ra_pod ELSE true END AS is_src_pod,
-       |        CASE WHEN is_server THEN true ELSE is_ra_pod END AS is_dst_pod,
-       |        CASE WHEN is_server THEN ra_name ELSE pod END AS src0,
-       |        CASE WHEN is_server THEN pod ELSE ra_name END AS dst0
-       |      FROM w)""".stripMargin
-
-  private def linkSql(c: String, flag: String): String =
-    s"""CASE WHEN $flag
-       |    THEN '{"label":"' || $c || '","script":"px/pod","args":{"start_time":"-45d","pod":"' || $c || '"}}'
-       |    ELSE '{"label":"' || $c || '","script":"px/ip","args":{"start_time":"-45d","ip":"' || $c || '"}}'
-       |  END""".stripMargin
 
   /** join/sync pair stream (group/generation/member are all functions
     * of user_id in the synth, so the 3-key equijoin is a user_id join).
@@ -166,24 +146,7 @@ object Pxl9 {
       s"""WITH $eventsCte,
          |x0 AS (SELECT * FROM e WHERE event_id % 70 IN (11, 14)),
          |${srcDstCte("x0")}
-         |SELECT t AS time_, src0 AS source, dst0 AS destination,
-         |  1024 + event_id % 32768 AS remote_port,
-         |  CASE WHEN event_id % 70 = 11 THEN 'JoinGroup'
-         |       ELSE 'SyncGroup' END AS req_cmd,
-         |  CASE WHEN event_id % 70 = 11
-         |    THEN '{"group_id":"cg-' || (user_id % 4) || '"}'
-         |    ELSE '{"group_id":"cg-' || (user_id % 4) ||
-         |      '","generation_id":' || (user_id % 3) ||
-         |      ',"member_id":"m-' || user_id || '"}' END AS req_body,
-         |  CASE WHEN event_id % 70 = 11
-         |    THEN '{"generation_id":' || (user_id % 3) ||
-         |      ',"member_id":"m-' || user_id || '"}'
-         |    ELSE '{"topics":[{"name":"t' || ((user_id + 1) % 4) ||
-         |      '","partitions":[{"index":' || ((event_id + 1) % 3) ||
-         |      ',"message_set":{"size":' || (100 + (event_id * 2) % 900) ||
-         |      '}}]}]}' END AS resp,
-         |  value AS latency
-         |FROM x ORDER BY time_""".stripMargin,
+         |$rebalRows""".stripMargin,
 
     "q174_pxl_kafka_rebal_delay" ->
       s"""WITH $eventsCte,

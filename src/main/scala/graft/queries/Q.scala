@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared helpers keeping the Spark query and its DuckDB oracle in
@@ -12,6 +12,35 @@ import org.apache.spark.sql.functions._
   */
 object Q {
   type QFn = (SparkSession, String) => DataFrame
+
+  /** One gate file: its queries and their DuckDB oracles, keyed alike. */
+  trait Gates {
+    def queries: Map[String, QFn]
+    def oracles: Map[String, String]
+  }
+
+  object Gates {
+
+    /** The gate registry: every file's queries and oracles as one map
+      * each. Fails when a file's oracle keys differ from its query keys,
+      * or when a key appears in two files (`Map ++` would silently keep
+      * the later one).
+      */
+    def merge(files: Seq[Gates]): (Map[String, QFn], Map[String, String]) = {
+      def name(g: Gates) = g.getClass.getName.stripSuffix("$")
+      for (g <- files) {
+        val (qs, os) = (g.queries.keySet, g.oracles.keySet)
+        require(qs == os, s"${name(g)}: oracles without a query: " +
+          s"${(os -- qs).toSeq.sorted.mkString(", ")}; queries without an " +
+          s"oracle: ${(qs -- os).toSeq.sorted.mkString(", ")}")
+      }
+      val twice = files.flatMap(g => g.queries.keys.map(_ -> name(g)))
+        .groupBy(_._1).filter(_._2.size > 1).toSeq.sortBy(_._1)
+        .map { case (k, in) => s"$k in ${in.map(_._2).mkString(" and ")}" }
+      require(twice.isEmpty, s"gate keys in two files: ${twice.mkString("; ")}")
+      (files.flatMap(_.queries).toMap, files.flatMap(_.oracles).toMap)
+    }
+  }
 
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     graft.core.Tables(s, dir, name)
@@ -103,6 +132,26 @@ object Q {
         dfCache.put(k, new java.lang.ref.SoftReference(df))
         df
       }
+  }
+
+  /** Runs the stream `df` to completion (AvailableNow) into a memory
+    * sink in output `mode` and returns `read` of the sink's table as a
+    * local frame; the query is stopped and its temp view dropped, so
+    * repeated runs in one session pin nothing.
+    */
+  def drainMemory(s: SparkSession, df: Dataset[_], mode: String)(
+      read: DataFrame => DataFrame = d => d): DataFrame = {
+    val qn = "mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val q = df.writeStream.format("memory").queryName(qn).outputMode(mode)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try {
+      q.awaitTermination()
+      val out = read(s.table(qn))
+      s.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
+    } finally {
+      if (q.isActive) q.stop()
+      s.catalog.dropTempView(qn)
+    }
   }
 
   /** The fixture's "now" anchor — max event ts ceiled to the next µs —

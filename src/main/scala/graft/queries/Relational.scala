@@ -11,7 +11,7 @@ import Q._
   * AND sequences; every double aggregate uses the quantized-sum parity
   * pattern (see Q).
   */
-object Relational {
+object Relational extends Gates {
 
   val queries: Map[String, QFn] = Map(
     // 1. MemorySource: named-table scan + column projection + time range

@@ -12,7 +12,7 @@ import Q._
   * or constructed-output checks on synthesized inputs (URI, SQL-norm) —
   * both styles validate values exactly, row by row.
   */
-object Surface {
+object Surface extends Gates {
 
   private val uriSparkExpr = (dir: String) => concat(
     lit("https://u"), pmod(col("p_partkey"), lit(5)), lit("@shop"),
