@@ -35,10 +35,10 @@ object SparkEntry {
       .df
   }
 
-  /** The gate files, each one [[graft.queries.Q.Gates]]: a `queries` map
-    * and an `oracles` map over the same keys.
+  /** The gate files, each one [[graft.queries.Q.Gates]]: a list of
+    * [[graft.queries.Q.Gate]] records, each a query with its oracle.
     */
-  lazy val gates: Seq[Gates] = Seq(
+  lazy val gateFiles: Seq[Gates] = Seq(
     Relational, Functions, NorthStar, Meta, Surface, Ml, Extended,
     Pxl, Pxl2, Pxl3, Pxl4, Pxl5, Pxl6, Pxl7, Pxl8, Pxl9, Pxl10, Pxl11,
     Pxl12, Pxl13, Pxl14, Pxl15, Pxl16,
@@ -46,16 +46,15 @@ object SparkEntry {
     Curation7, Curation8, Curation9, Curation10, Curation11, Curation12,
     Curation13, Curation14)
 
-  private lazy val registry = Gates.merge(gates)
+  private lazy val registry = Gates.merge(gateFiles)
 
-  /** Every gate query by key, merged once from [[gates]]. The merge
-    * fails loudly when a key appears in two files or a file's oracle
-    * keys differ from its query keys.
+  /** Every gate query by name, built once from the records of
+    * [[gateFiles]]. Building fails loudly when a name occurs twice.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] = registry._1
 
-  /** For each key in [[queries]], the equivalent ANSI SQL that DuckDB
-    * runs on the same parquet tables; the key sets are equal.
+  /** For each name in [[queries]], the equivalent ANSI SQL that DuckDB
+    * runs on the same parquet tables; the name sets are equal.
     */
   def oracleSql: Map[String, String] = registry._2
 }

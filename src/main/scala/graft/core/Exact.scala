@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions.{lit, round}
   * BYTE-different, so a byte-sensitive hash gate fails. Every rounded
   * double whose operand can be negative (covariances, correlations,
   * slopes, deltas, z-scores, log-ratios) must be rounded through
-  * [[zround]] / [[zroundSql]] on BOTH sides: adding `+0.0` after the
-  * round normalizes `-0.0` to `+0.0` under IEEE round-to-nearest
+  * [[zround]] on the Spark side, and its oracle writes the same
+  * `round(x, n) + 0.0` inline: adding `+0.0` after the round
+  * normalizes `-0.0` to `+0.0` under IEEE round-to-nearest
   * (`-0.0 + 0.0 == +0.0`) and is a bit-exact no-op for every other value,
   * including ±inf and NaN.
   */
@@ -22,7 +23,4 @@ object Exact {
 
   /** `round(c, scale)` with the zero sign normalized to `+0.0`. */
   def zround(c: Column, scale: Int): Column = round(c, scale) + lit(0.0)
-
-  /** DuckDB-SQL twin of [[zround]] — splice into oracle SQL. */
-  def zroundSql(x: String, scale: Int): String = s"(round($x, $scale) + 0.0)"
 }

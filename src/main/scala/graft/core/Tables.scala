@@ -31,7 +31,7 @@ object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     ensureTimeConfig(spark)
     val df = nsView(spark.read.parquet(s"$dir/$name.parquet"))
-    if (spreadTables(spark)(name)) spread(spark, df, s"$dir/$name.parquet")
+    if (SpreadTables(name)) spread(spark, df, s"$dir/$name.parquet")
     else df
   }
 
@@ -71,11 +71,11 @@ object Tables {
     * and the extra exchange measurably hurts (the CPU-heavy event sites —
     * protocol decode, PII redact — opt in explicitly via Q.spreadIfNarrow
     * instead).
-    * Override with `spark.graft.spreadTables` (comma list, empty = none).
     */
-  private def spreadTables(spark: SparkSession): Set[String] =
-    spark.conf.get("spark.graft.spreadTables", "documents,embeddings")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
+  private val SpreadTables = Set("documents", "embeddings")
+
+  /** Tables smaller than this stay single-task under [[spread]]. */
+  private val SpreadMinBytes = 49152L
 
   /** Scale-adaptive scan spread: when a table's on-disk bytes pack into
     * fewer scan splits than the session has cores (FilePartition packing
@@ -89,7 +89,7 @@ object Tables {
     * Scale contract: the trigger is the measured file size, not a tuned
     * constant — at production scale `scanPartitions >= cores` and this is
     * a no-op, so no fact table is ever gratuitously shuffled. Tables under
-    * `spark.graft.spreadMinBytes` (default 48k) stay single-task: their
+    * [[SpreadMinBytes]] (48k) stay single-task: their
     * per-row work cannot dominate, and the exchange would be pure
     * overhead on dimension-table lookups. Filters and column pruning
     * still reach the scan (PushPredicateThroughNonJoin / ColumnPruning
@@ -98,8 +98,6 @@ object Tables {
     */
   private[graft] def spread(spark: SparkSession, df: DataFrame,
                             path: String): DataFrame = {
-    val minBytes = spark.conf.get("spark.graft.spreadMinBytes", "49152").toLong
-    if (minBytes < 0) return df
     val cores = spark.sparkContext.defaultParallelism
     val f = new java.io.File(path)
     val bytes =
@@ -110,7 +108,8 @@ object Tables {
     val maxPartBytes = org.apache.spark.network.util.JavaUtils
       .byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
     val scanPartitions = math.max(1L, (bytes + maxPartBytes - 1) / maxPartBytes)
-    if (bytes >= minBytes && scanPartitions < cores) df.repartition(cores) else df
+    if (bytes >= SpreadMinBytes && scanPartitions < cores) df.repartition(cores)
+    else df
   }
 
   /** int64-ns view of the event-time column. `withColumn` replaces in

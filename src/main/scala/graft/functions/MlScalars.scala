@@ -95,7 +95,7 @@ object MlScalars {
     * [[graft.ops.TextOps.bpeTrain]] on the fixture corpus (sf0.001
     * documents, 48 merges, '▁' word prefix) — the merge list IS the
     * model artifact, exactly as sentencepiece ships a learned model
-    * file. Regenerate with `runMain graft.DevProf bpetrain <sfDir> 48`.
+    * file. Regenerate with `runMain graft.BpeTrain <sfDir> 48`.
     * BpeSpec asserts the trainer reproduces this table.
     */
   val sentencePieceMerges: Seq[(String, String)] = Seq(

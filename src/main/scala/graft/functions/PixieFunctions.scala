@@ -60,12 +60,8 @@ object PixieFunctions {
     java.time.Instant.parse(fmt).getEpochSecond * 1000000000L
   }
 
-  // ---- time ops (reference: time_to_int64 / int64_to_time,
-  //      px.now/px.seconds..., planner/ir/time.cc duration strings) -----
-
-  /** TIME64NS convention: longs are ns since epoch. */
-  def timeToInt64(ts: Column): Column = unix_micros(ts) * 1000L
-  def int64ToTime(ns: Column): Column = timestamp_micros((ns / 1000L).cast(LongType))
+  // ---- time ops (reference: px.now/px.seconds...,
+  //      planner/ir/time.cc duration strings) -----------------------
 
   /** px.parse_duration('-30s') — compile-time in the reference
     * (planner/ir/time.cc:25-44); here a plain Scala helper returning ns.
@@ -121,7 +117,6 @@ object PixieFunctions {
 
   // ---- string_ops ----------------------------------------------------
 
-  def containsStr(s: Column, sub: Column): Column = s.contains(sub)
   /** Pixie find: first index of sub, -1 if absent (0-based). */
   def find(s: Column, sub: String): Column = locate(sub, s) - 1
   def stripPrefix(prefix: String, s: Column): Column =

@@ -98,28 +98,6 @@ object Graph {
     pr.select(col("node"), col("pr_ppm"))
   }
 
-  /** The syndication graph: an undirected (kept as both directed arcs)
-    * domain graph where the weight of (a, b) is the number of distinct
-    * exact-content hashes the two sources both host — the
-    * [[Corpus.syndication]] signal lifted to graph edges.
-    *
-    * Shape: distinct (hash, source) pairs, then a hash-keyed self-join
-    * (fan-out bounded by per-hash source count — boilerplate-heavy
-    * hashes are exactly the syndication signal, not a skew accident)
-    * and a pair-keyed count.
-    */
-  def syndicationEdges(df: DataFrame, textCol: String,
-                       sourceCol: String): DataFrame = {
-    val hs = df.where(col(textCol).isNotNull)
-      .select(md5(col(textCol).cast("binary")).as("h"),
-        col(sourceCol).as("s"))
-      .distinct()
-    hs.join(hs.select(col("h"), col("s").as("s2")), "h")
-      .where(col("s") =!= col("s2"))
-      .groupBy(col("s").as("src"), col("s2").as("dst"))
-      .agg(count(lit(1)).as("w"))
-  }
-
   /** Lexical-affinity edges: both directed arcs between every pair of
     * sources, weighted by the INTEGER dot product of their hashed
     * word-bucket profiles ([[Corpus.wordProfile]] — the same

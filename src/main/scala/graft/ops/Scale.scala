@@ -609,8 +609,8 @@ object Scale {
     n
   }
 
-  /** Exactly-once batch ingest behind a persisted LEDGER: a batch id
-    * that is already in the ledger is a NO-OP (returns false), so
+  /** Exactly-once batch ingest behind a persisted [[graft.core.Ledger]]:
+    * a batch id that is already in the ledger is a NO-OP (returns false), so
     * retried/replayed drops never double-ingest — the file-batch-
     * level dedup every at-least-once delivery pipeline needs in
     * front of a lake table. The ledger is model-sized (one row per
@@ -632,31 +632,14 @@ object Scale {
                   tablePath: String, ledgerPath: String,
                   batchId: String, batch: DataFrame): Boolean = {
     require(batchId.nonEmpty, "ingestBatch: non-empty batchId")
-    val ledgerSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("batch_id",
-        org.apache.spark.sql.types.StringType)))
-    // day-0: no ledger directory yet. Resolve the ledger PATH's own
-    // filesystem (not the default FS) so an object-store/HDFS ledger
-    // is honored on a cluster whose fs.defaultFS differs.
-    val ledgerP = new org.apache.hadoop.fs.Path(ledgerPath)
-    val fs = ledgerP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val seen = fs.exists(ledgerP) &&
-      spark.read.schema(ledgerSchema).parquet(ledgerPath)
-        .where(col("batch_id") === batchId)
-        .limit(1).count() > 0
-    if (seen) false
-    else {
+    // ledger row LAST (Ledger.once): a crash between the two writes
+    // re-ingests the batch on retry (at-least-once below, exactly-once
+    // above — duplicated rows carry the same __batch id and are
+    // removable by id, which is the recoverable direction)
+    graft.core.Ledger.once(spark, ledgerPath, batchId) {
       batch.withColumn("__batch", lit(batchId))
         .write.mode("append").parquet(tablePath)
-      // ledger row LAST: a crash between the two writes re-ingests
-      // the batch on retry (at-least-once below, exactly-once above
-      // — duplicated rows would carry the same __batch id and are
-      // removable by id, which is the recoverable direction)
-      import spark.implicits._
-      Seq(batchId).toDF("batch_id")
-        .write.mode("append").parquet(ledgerPath)
-      true
-    }
+    }.isDefined
   }
 
   /** Per-(group, shard) HLL sketch state — the APPROXIMATE twin of

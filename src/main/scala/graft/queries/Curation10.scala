@@ -27,7 +27,7 @@ object Curation10 extends Gates {
   private def ev(s: org.apache.spark.sql.SparkSession, dir: String) =
     t(s, dir, "events").where(col("event_type").isNotNull)
 
-  val queries: Map[String, QFn] = Map(
+  lazy val gates: Seq[Gate] = Seq(
 
     // Torn-append audit + recovery, end to end in one gate row:
     // bootstrap the sharded distinct state, leave a delta append
@@ -36,7 +36,7 @@ object Curation10 extends Gates {
     // append (the documented recovery), verify the audit is clean,
     // and read the healed per-group cardinalities — which must equal
     // a full count(DISTINCT) recompute.
-    "q511_distinct_state_audit" -> ((s, dir) => {
+    Gate("q511_distinct_state_audit", (s, dir) => {
       val root = Curation2.tempIndexDir("graft_distinct_audit_")
       val p = s"$root/state"
       try {
@@ -57,13 +57,16 @@ object Curation10 extends Gates {
           .orderBy("event_type")
           .localCheckpoint(true)
       } finally Curation2.deleteDir(root)
-    }),
+    }, oracle =
+      s"""SELECT event_type, n_unique, '1' AS torn_detected,
+         |  '1' AS audit_after_retry_ok
+         |FROM ($distinctOracle) ORDER BY event_type""".stripMargin),
 
     // Cent-histogram compaction: bootstrap + two in-place appends
     // (duplicate (group, cent) rows by design), compact to one file,
     // then exact quantiles off the COMPACTED state == the full
     // order-statistic recompute. File count pinned shrinking to 1.
-    "q512_cent_state_compaction" -> ((s, dir) => {
+    Gate("q512_cent_state_compaction", (s, dir) => {
       val root = Curation2.tempIndexDir("graft_cent_compact_")
       val p = s"$root/state"
       try {
@@ -89,12 +92,16 @@ object Curation10 extends Gates {
           .orderBy("event_type")
           .localCheckpoint(true)
       } finally Curation2.deleteDir(root)
-    }),
+    }, oracle =
+      s"""WITH ${Curation7.centCountCtes},
+        |${Curation8.centQuantileCols},
+        |  '1' AS files_reduced, '1' AS single_file
+        |FROM ct GROUP BY g ORDER BY event_type""".stripMargin),
 
     // Distinct-keys compaction: bootstrap + two appends (a file batch
     // per touched shard each), compact to one file per shard, audit
     // still clean, cardinalities invariant == full recompute.
-    "q513_distinct_state_compaction" -> ((s, dir) => {
+    Gate("q513_distinct_state_compaction", (s, dir) => {
       val root = Curation2.tempIndexDir("graft_distinct_compact_")
       val p = s"$root/state"
       try {
@@ -119,7 +126,10 @@ object Curation10 extends Gates {
           .orderBy("event_type")
           .localCheckpoint(true)
       } finally Curation2.deleteDir(root)
-    }),
+    }, oracle =
+      s"""SELECT event_type, n_unique, '1' AS files_reduced,
+         |  '1' AS one_file_per_shard, '1' AS audit_ok
+         |FROM ($distinctOracle) ORDER BY event_type""".stripMargin),
 
     // OTel Summary + Log wire roundtrip — the two signal shapes q487
     // left spec-only, now oracle-gated with the same machinery: a
@@ -129,7 +139,7 @@ object Curation10 extends Gates {
     // the INDEPENDENT wire reader, and the decoded frame hash-matches
     // a DuckDB re-derivation. Closes plan.proto:363-549's four-signal
     // surface on the official gate.
-    "q514_otel_summary_log" -> ((s, dir) => {
+    Gate("q514_otel_summary_log", (s, dir) => {
       import s.implicits._
       import graft.streaming.{OtelSink, OtlpWireCapture, OtlpProtoReader => R}
       import graft.functions.PixieFunctions.idiv
@@ -191,75 +201,7 @@ object Curation10 extends Gates {
             "severity", "body")
           .orderBy("signal", "attr", "t_ns")
       } finally { sw.close(); lw.close() }
-    }),
-
-    // LSH bucket-cap policy on a PLANTED hot bucket: 30 corpus docs
-    // sharing a 45-word prefix (the boilerplate-degeneracy shape)
-    // drive their shared buckets past the cap; a probe doc with the
-    // same prefix arrives in the delta. The capped candidate
-    // generator keeps each bucket's 8 lowest-id members, decisions
-    // carry the hit_capped_bucket disclosure column, and the oracle
-    // re-derives the IDENTICAL rank-cap policy in SQL — capped
-    // behavior is gated, not just bounded. Round11Spec additionally
-    // pins that the plant really exceeds the cap and the probe really
-    // gets flagged (non-vacuity).
-    "q515_lsh_bucket_cap" -> ((s, dir) => {
-      val root = Curation2.tempIndexDir("graft_bucket_cap_")
-      try {
-        val docs = t(s, dir, "documents").select("doc_id", "text")
-        val plantC = s.range(1, 31)
-          .select((col("id") + 9300000L).as("doc_id"),
-            concat(lit(CapPrefix + " w"), col("id").cast("string"))
-              .as("text"))
-        val corpus = docs.where(pmod(col("doc_id"), lit(5L)) =!= 0)
-          .unionByName(plantC)
-        val batch = docs.where(pmod(col("doc_id"), lit(5L)) === 0)
-          .unionByName(s.range(1)
-            .select(lit(9300100L).as("doc_id"),
-              lit(CapPrefix + " probe").as("text")))
-        graft.ops.Dedup.writeDedupIndex(corpus, "text", "doc_id", root,
-          NorthStar.NGRAM, NorthStar.K, NorthStar.BANDS)
-        graft.ops.Dedup.incrementalDedupCapped(root, corpus, batch,
-            "text", "doc_id", NorthStar.NGRAM, NorthStar.K,
-            NorthStar.BANDS, 0.8, bucketCap = 8)
-          .orderBy("doc_id")
-          .localCheckpoint(true)
-      } finally Curation2.deleteDir(root)
-    }))
-
-  /** 45 distinct pseudo-words — shared boilerplate prefix for the
-    * q515 hot-bucket plant (engine and oracle build the same strings
-    * from this one constant).
-    */
-  private[queries] val CapPrefix: String =
-    (1 to 45).map("p" + _).mkString(" ")
-
-  private val distinctOracle: String =
-    """SELECT event_type,
-      |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_unique
-      |FROM events
-      |WHERE event_type IS NOT NULL AND user_id IS NOT NULL
-      |GROUP BY 1""".stripMargin
-
-  val oracles: Map[String, String] = Map(
-
-    "q511_distinct_state_audit" ->
-      s"""SELECT event_type, n_unique, '1' AS torn_detected,
-         |  '1' AS audit_after_retry_ok
-         |FROM ($distinctOracle) ORDER BY event_type""".stripMargin,
-
-    "q512_cent_state_compaction" ->
-      s"""WITH ${Curation7.centCountCtes},
-        |${Curation8.centQuantileCols},
-        |  '1' AS files_reduced, '1' AS single_file
-        |FROM ct GROUP BY g ORDER BY event_type""".stripMargin,
-
-    "q513_distinct_state_compaction" ->
-      s"""SELECT event_type, n_unique, '1' AS files_reduced,
-         |  '1' AS one_file_per_shard, '1' AS audit_ok
-         |FROM ($distinctOracle) ORDER BY event_type""".stripMargin,
-
-    "q514_otel_summary_log" ->
+    }, oracle =
       """WITH base AS (SELECT event_type, epoch_us(ts) * 1000 AS tns,
         |    CASE WHEN value IS NULL OR isnan(value) THEN NULL
         |      ELSE value END AS v
@@ -299,9 +241,41 @@ object Curation10 extends Gates {
         |    CASE WHEN event_type = 'error' THEN 'ERROR' ELSE 'INFO' END,
         |    event_type || ':' || CAST(n AS VARCHAR)
         |  FROM lg)
-        |ORDER BY signal, attr, t_ns""".stripMargin,
+        |ORDER BY signal, attr, t_ns""".stripMargin),
 
-    "q515_lsh_bucket_cap" ->
+    // LSH bucket-cap policy on a PLANTED hot bucket: 30 corpus docs
+    // sharing a 45-word prefix (the boilerplate-degeneracy shape)
+    // drive their shared buckets past the cap; a probe doc with the
+    // same prefix arrives in the delta. The capped candidate
+    // generator keeps each bucket's 8 lowest-id members, decisions
+    // carry the hit_capped_bucket disclosure column, and the oracle
+    // re-derives the IDENTICAL rank-cap policy in SQL — capped
+    // behavior is gated, not just bounded. Round11Spec additionally
+    // pins that the plant really exceeds the cap and the probe really
+    // gets flagged (non-vacuity).
+    Gate("q515_lsh_bucket_cap", (s, dir) => {
+      val root = Curation2.tempIndexDir("graft_bucket_cap_")
+      try {
+        val docs = t(s, dir, "documents").select("doc_id", "text")
+        val plantC = s.range(1, 31)
+          .select((col("id") + 9300000L).as("doc_id"),
+            concat(lit(CapPrefix + " w"), col("id").cast("string"))
+              .as("text"))
+        val corpus = docs.where(pmod(col("doc_id"), lit(5L)) =!= 0)
+          .unionByName(plantC)
+        val batch = docs.where(pmod(col("doc_id"), lit(5L)) === 0)
+          .unionByName(s.range(1)
+            .select(lit(9300100L).as("doc_id"),
+              lit(CapPrefix + " probe").as("text")))
+        graft.ops.Dedup.writeDedupIndex(corpus, "text", "doc_id", root,
+          NorthStar.NGRAM, NorthStar.K, NorthStar.BANDS)
+        graft.ops.Dedup.incrementalDedupCapped(root, corpus, batch,
+            "text", "doc_id", NorthStar.NGRAM, NorthStar.K,
+            NorthStar.BANDS, 0.8, bucketCap = 8)
+          .orderBy("doc_id")
+          .localCheckpoint(true)
+      } finally Curation2.deleteDir(root)
+    }, oracle =
       s"""WITH plantc AS (SELECT CAST(9300000 + i AS BIGINT) AS doc_id,
          |    '$CapPrefix w' || CAST(i AS VARCHAR) AS text
          |  FROM generate_series(1, 30) t(i)),
@@ -321,5 +295,19 @@ object Curation10 extends Gates {
          |SELECT d.doc_id, d.decision,
          |  (hot.doc_id IS NOT NULL) AS hit_capped_bucket
          |FROM decisions d LEFT JOIN hot ON hot.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin)
+         |ORDER BY d.doc_id""".stripMargin))
+
+  /** 45 distinct pseudo-words — shared boilerplate prefix for the
+    * q515 hot-bucket plant (engine and oracle build the same strings
+    * from this one constant).
+    */
+  private[queries] val CapPrefix: String =
+    (1 to 45).map("p" + _).mkString(" ")
+
+  private val distinctOracle: String =
+    """SELECT event_type,
+      |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_unique
+      |FROM events
+      |WHERE event_type IS NOT NULL AND user_id IS NOT NULL
+      |GROUP BY 1""".stripMargin
 }

@@ -143,68 +143,141 @@ object Curation11 extends Gates {
     (p, all)
   }
 
-  val queries: Map[String, QFn] = Map(
+  lazy val gates: Seq[Gate] = Seq(
 
-    "q540_multimodal_day_decisions" -> ((s, dir) =>
-      multiLife(s, dir)._2.orderBy("day", "doc_id")),
+    Gate("q540_multimodal_day_decisions", (s, dir) =>
+      multiLife(s, dir)._2.orderBy("day", "doc_id"), oracle =
+      s"""WITH $multiCtes
+         |SELECT * FROM (
+         |  SELECT 1 AS day, doc_id, decision FROM finalm1
+         |  UNION ALL SELECT 2, doc_id, decision FROM finalm2)
+         |ORDER BY day, doc_id""".stripMargin),
 
-    "q541_multimodal_index_cards" -> ((s, dir) =>
+    Gate("q541_multimodal_index_cards", (s, dir) =>
       graft.ops.MultiDay.indexCards(s, multiLife(s, dir)._1)
-        .orderBy("modality", "metric")),
+        .orderBy("modality", "metric"), oracle =
+      s"""WITH $multiCtes
+         |SELECT * FROM (
+         |  SELECT 'lexical' AS modality, 'n_hashes' AS metric,
+         |    CAST(count(DISTINCT md5(text)) AS BIGINT) AS value
+         |    FROM mcorp3
+         |  UNION ALL SELECT 'lexical', 'n_band_rows',
+         |    4 * count(*) FROM mcorp3
+         |  UNION ALL SELECT 'semantic', 'n_vecs',
+         |    (SELECT count(*) FROM msnapv)
+         |      + (SELECT count(*) FROM madm1)
+         |      + (SELECT count(*) FROM madm2)
+         |  UNION ALL SELECT 'perceptual', 'n_hashes',
+         |    (SELECT count(*) FROM idxq2)
+         |      + (SELECT count(*) FROM madm2)
+         |  UNION ALL SELECT 'perceptual', 'n_band_rows',
+         |    4 * ((SELECT count(*) FROM idxq2)
+         |      + (SELECT count(*) FROM madm2)))
+         |ORDER BY modality, metric""".stripMargin),
 
-    "q538_phash_index_decisions" -> ((s, dir) =>
-      phashLife(s, dir)._2.orderBy("day", "media_id")),
+    Gate("q538_phash_index_decisions", (s, dir) =>
+      phashLife(s, dir)._2.orderBy("day", "media_id"), oracle =
+      s"""WITH $phashLifeCtes
+         |SELECT * FROM (
+         |  SELECT 1 AS day, media_id, decision FROM decp1
+         |  UNION ALL SELECT 2, media_id, decision FROM decp2)
+         |ORDER BY day, media_id""".stripMargin),
 
-    "q539_phash_index_card" -> ((s, dir) =>
+    Gate("q539_phash_index_card", (s, dir) =>
       graft.ops.PhashIndex.indexCard(s, phashLife(s, dir)._1)
-        .orderBy("band")),
+        .orderBy("band"), oracle =
+      s"""WITH $phashLifeCtes
+         |SELECT band, CAST(sum(cnt) AS BIGINT) AS n_rows,
+         |  CAST(count(*) AS BIGINT) AS n_buckets,
+         |  CAST(max(cnt) AS BIGINT) AS max_bucket
+         |FROM (SELECT band, bv, count(*) AS cnt FROM pbands
+         |  WHERE doc_id IN (SELECT doc_id FROM idxp3)
+         |  GROUP BY 1, 2)
+         |GROUP BY band ORDER BY band""".stripMargin),
 
-    "q521_sem_index_decisions" -> ((s, dir) =>
-      semLife(s, dir)._2.orderBy("day", "vec_id")),
+    Gate("q521_sem_index_decisions", (s, dir) =>
+      semLife(s, dir)._2.orderBy("day", "vec_id"), oracle =
+      s"""WITH $semCtes
+         |SELECT * FROM (
+         |  SELECT 1 AS day, vec_id, cell, decision FROM dec1
+         |  UNION ALL SELECT 2, vec_id, cell, decision FROM dec2)
+         |ORDER BY day, vec_id""".stripMargin),
 
     // The STREAMED path's decisions, read back from the pinned per-day
     // files — must equal the batch path's oracle row for row.
-    "q533_sem_stream_decisions" -> ((s, dir) => {
+    Gate("q533_sem_stream_decisions", (s, dir) => {
       val p = semStreamed(s, dir)._1
       (1 to 2).map { k =>
         s.read.parquet(p.decisionsDay(k))
           .select(lit(k).as("day"), col("vec_id"), col("cell"),
             col("decision"))
       }.reduce(_.unionByName(_)).orderBy("day", "vec_id")
-    }),
+    }, oracle =
+      // same oracle as the batch path (two delivery engines, one answer)
+      s"""WITH $semCtes
+         |SELECT * FROM (
+         |  SELECT 1 AS day, vec_id, cell, decision FROM dec1
+         |  UNION ALL SELECT 2, vec_id, cell, decision FROM dec2)
+         |ORDER BY day, vec_id""".stripMargin),
 
     // The streamed index card + the recovery facts pinned (ledger
     // exactly [sem1, sem2]; the re-offered committed day added zero
     // rows).
-    "q534_sem_stream_card" -> ((s, dir) => {
+    Gate("q534_sem_stream_card", (s, dir) => {
       val (p, days, stable) = semStreamed(s, dir)
       SemIndex.indexStats(s, p)
         .withColumn("ledger_days", lit(days.mkString(",")))
         .withColumn("replay_stable", lit(if (stable) "1" else "0"))
         .orderBy("cell")
-    }),
+    }, oracle =
+      s"""WITH $semCtes
+         |SELECT cell, count(*) AS n_vecs,
+         |  min(vec_id) AS min_vec, max(vec_id) AS max_vec,
+         |  bit_xor(${h60Sql("CAST(vec_id AS VARCHAR)")}) AS checksum,
+         |  'sem1,sem2' AS ledger_days, '1' AS replay_stable
+         |FROM idx3 GROUP BY cell ORDER BY cell""".stripMargin),
 
-    "q522_sem_index_card" -> ((s, dir) =>
-      SemIndex.indexStats(s, semLife(s, dir)._1).orderBy("cell")),
+    Gate("q522_sem_index_card", (s, dir) =>
+      SemIndex.indexStats(s, semLife(s, dir)._1).orderBy("cell"), oracle =
+      s"""WITH $semCtes
+         |SELECT cell, count(*) AS n_vecs,
+         |  min(vec_id) AS min_vec, max(vec_id) AS max_vec,
+         |  bit_xor(${h60Sql("CAST(vec_id AS VARCHAR)")}) AS checksum
+         |FROM idx3 GROUP BY cell ORDER BY cell""".stripMargin),
 
     // The pack tape after the four STREAMED days (day 0 = snapshot,
     // days 1-4 appended inside each day transaction), read back from
     // the per-day layout files alone.
-    "q519_pack_tape" -> ((s, dir) =>
+    Gate("q519_pack_tape", (s, dir) =>
       Pack.fullLayout(s, Curation9.streamed(s, dir)._1, CurationNDay.NDays)
-        .orderBy("day", "doc_id")),
+        .orderBy("day", "doc_id"), oracle =
+      s"""WITH $tapeCtes
+         |SELECT day, doc_id, shard, n_tok,
+         |  cum - n_tok AS start_tok,
+         |  (cum - n_tok) // $L AS first_seq,
+         |  (cum - 1) // $L AS last_seq
+         |FROM tape ORDER BY day, doc_id""".stripMargin),
 
-    "q520_pack_report" -> ((s, dir) =>
+    Gate("q520_pack_report", (s, dir) =>
       Pack.packReport(
           Pack.fullLayout(s, Curation9.streamed(s, dir)._1,
             CurationNDay.NDays))
-        .orderBy("day")),
+        .orderBy("day"), oracle =
+      s"""WITH $tapeCtes
+         |SELECT day, count(*) AS n_docs,
+         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+         |  min((cum - n_tok) // $L) AS seq_lo,
+         |  max((cum - 1) // $L) AS seq_hi,
+         |  CAST(sum(CASE WHEN (cum - n_tok) // $L <> (cum - 1) // $L
+         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_straddle,
+         |  max(cum) AS next_tok
+         |FROM tape GROUP BY day ORDER BY day""".stripMargin),
 
     // Leakage-safe corpus split: documents split train/val/test by a
     // deterministic ppm hash draw on the SOURCE (domain) key — the
     // per-(split, source) census plus the leak invariant column
     // (n_splits per source must be 1, checked in the oracle too).
-    "q523_group_split" -> ((s, dir) => {
+    Gate("q523_group_split", (s, dir) => {
       val assigned = graft.ops.Corpus.groupSplit(
         t(s, dir, "documents"), "source",
         valPpm = 100000L, testPpm = 100000L)
@@ -215,26 +288,79 @@ object Curation11 extends Gates {
           .agg(countDistinct(col("split")).as("n_splits_of_source")),
           "source")
         .orderBy("split", "source")
-    }),
+    }, oracle =
+      s"""WITH a AS (SELECT *,
+         |    CASE WHEN (${h60Sql("source")}) % 1000000 < 100000 THEN 'test'
+         |      WHEN (${h60Sql("source")}) % 1000000 < 200000 THEN 'val'
+         |      ELSE 'train' END AS split
+         |  FROM documents),
+         |per AS (SELECT split, source, count(*) AS n_docs,
+         |    CAST(sum(n_chars) AS BIGINT) AS n_chars
+         |  FROM a GROUP BY 1, 2),
+         |leak AS (SELECT source,
+         |    CAST(count(DISTINCT split) AS BIGINT) AS n_splits_of_source
+         |  FROM a GROUP BY 1)
+         |SELECT source, split, n_docs, n_chars, n_splits_of_source
+         |FROM per JOIN leak USING (source)
+         |ORDER BY split, source""".stripMargin),
 
     // The lifecycle datasheet over the STREAMED artifacts: every
     // number read from persisted state, gated against a from-scratch
     // re-derivation.
-    "q524_data_card" -> ((s, dir) =>
+    Gate("q524_data_card", (s, dir) =>
       CurationNDay.dataCard(s, Curation9.streamed(s, dir)._1)
-        .orderBy("section", "metric")),
+        .orderBy("section", "metric"), oracle =
+      s"""WITH $tapeCtes,
+         |ev AS (SELECT event_type, user_id, value FROM events
+         |  WHERE ts IS NOT NULL AND event_type IS NOT NULL)
+         |SELECT * FROM (
+         |  SELECT 'decisions' AS section, decision AS metric,
+         |    CAST(count(*) AS BIGINT) AS value FROM (
+         |      SELECT decision FROM final1
+         |      UNION ALL SELECT decision FROM final2
+         |      UNION ALL SELECT decision FROM final3
+         |      UNION ALL SELECT decision FROM final4) GROUP BY 2
+         |  UNION ALL SELECT 'corpus', 'n_docs', count(*) FROM grown4
+         |  UNION ALL SELECT 'corpus', 'n_tokens',
+         |    CAST(sum(len(string_split(text, ' '))) AS BIGINT)
+         |    FROM grown4
+         |  UNION ALL SELECT 'pack', 'n_tokens', max(cum) FROM tape
+         |  UNION ALL SELECT 'pack', 'n_seqs',
+         |    (max(cum) + ${L - 1}) // $L FROM tape
+         |  UNION ALL SELECT 'pack', 'tail_pad',
+         |    ($L - max(cum) % $L) % $L FROM tape
+         |  UNION ALL SELECT 'pack', 'n_straddle',
+         |    CAST(sum(CASE WHEN (cum - n_tok) // $L <> (cum - 1) // $L
+         |      THEN 1 ELSE 0 END) AS BIGINT) FROM tape
+         |  UNION ALL SELECT 'index', 'n_hashes',
+         |    count(DISTINCT md5(text)) FROM grown4
+         |  UNION ALL SELECT 'index', 'n_band_rows',
+         |    4 * count(*) FROM grown4
+         |  UNION ALL SELECT 'states', 'n_event_types',
+         |    count(DISTINCT event_type) FROM ev
+         |  UNION ALL SELECT 'states', 'n_events', count(*) FROM ev
+         |  UNION ALL SELECT 'states', 'n_type_user_pairs',
+         |    count(DISTINCT (event_type, user_id)) FROM ev)
+         |ORDER BY section, metric""".stripMargin),
 
     // IVF top-k retrieval served off the grown semantic index (the
     // admission artifact doubling as the search structure): queries =
     // vec_id%8==6, k=5, nprobe=2 — probed-cell-exact answers vs the
     // oracle's re-derivation of seeds, cells, and ranking.
-    "q525_sem_search" -> ((s, dir) =>
+    Gate("q525_sem_search", (s, dir) =>
       graft.ops.SemIndex.search(s, semLife(s, dir)._1,
           t(s, dir, "embeddings")
             .where(pmod(col("vec_id"), lit(8L)) === 6L)
             .select("vec_id", "embedding"),
           k = 5, nprobe = 2)
-        .orderBy("qid", "rank")),
+        .orderBy("qid", "rank"), oracle =
+      s"""WITH $semCtes,
+         |$semProbeCtes
+         |SELECT qid, CAST(rank AS INT) AS rank, vec_id,
+         |  round(cos, 6) + 0.0 AS cos FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY qid
+         |    ORDER BY cos DESC, vec_id) AS rank FROM sc)
+         |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin),
 
     // Compaction: rewrite every cell partition to one file; the card
     // after compaction must equal the pre-compaction oracle (contents
@@ -244,38 +370,81 @@ object Curation11 extends Gates {
     // staging + rename-swap cutover (Layout.swapInto) — no instant
     // leaves half-written data at the live path, closing the r11
     // concurrent-reader disclosure.
-    "q526_sem_index_compacted" -> ((s, dir) => {
+    Gate("q526_sem_index_compacted", (s, dir) => {
       val p = semLife(s, dir)._1
       graft.ops.SemIndex.compact(s, p)
       graft.ops.SemIndex.indexStats(s, p).orderBy("cell")
-    }),
+    }, oracle =
+      // compaction is content-invariant: the card after equals the
+      // same re-derivation that gates q522
+      s"""WITH $semCtes
+         |SELECT cell, count(*) AS n_vecs,
+         |  min(vec_id) AS min_vec, max(vec_id) AS max_vec,
+         |  bit_xor(${h60Sql("CAST(vec_id AS VARCHAR)")}) AS checksum
+         |FROM idx3 GROUP BY cell ORDER BY cell""".stripMargin),
 
     // The tape after a RETRACTION: positions shift, so the repair is
     // a rebuild over the shrunk corpus (run on the BATCH lifecycle's
     // artifacts, whose corpus q517/q518's retraction day already
     // shrank) — rebuilt tape == the oracle's single-epoch layout over
     // corpus5.
-    "q528_pack_rebuild" -> ((s, dir) => {
+    Gate("q528_pack_rebuild", (s, dir) => {
       val a = Curation9.retracted(s, dir)._1
       graft.ops.Pack.rebuild(s, a, CurationNDay.NDays)
       graft.ops.Pack.fullLayout(s, a, 0).orderBy("doc_id")
-    }),
+    }, oracle =
+      s"""WITH ${Curation9.nDayCtes},
+         |${Curation9.retractionCtes},
+         |pt AS (SELECT 0 AS day, doc_id,
+         |    CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
+         |      % ${CurationDay.NShards} AS INT) AS shard,
+         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
+         |  FROM corpus5),
+         |tape AS (SELECT day, doc_id, shard, n_tok,
+         |    CAST(sum(n_tok) OVER (ORDER BY shard, doc_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+         |      AS BIGINT) AS cum
+         |  FROM pt)
+         |SELECT day, doc_id, shard, n_tok,
+         |  cum - n_tok AS start_tok,
+         |  (cum - n_tok) // $L AS first_seq,
+         |  (cum - 1) // $L AS last_seq
+         |FROM tape ORDER BY doc_id""".stripMargin),
 
     // Recall@5 of the nprobe=2 IVF search vs exact brute force over
     // the same grown index — the ANN operating-point evidence, exact
     // per-query ppm.
-    "q529_sem_search_recall" -> ((s, dir) =>
+    Gate("q529_sem_search_recall", (s, dir) =>
       graft.ops.SemIndex.searchRecall(s, semLife(s, dir)._1,
           t(s, dir, "embeddings")
             .where(pmod(col("vec_id"), lit(8L)) === 6L)
             .select("vec_id", "embedding"),
           k = 5, nprobe = 2)
-        .orderBy("qid")),
+        .orderBy("qid"), oracle =
+      s"""WITH $semCtes,
+         |$semProbeCtes,
+         |approx AS (SELECT qid, vec_id FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY qid
+         |    ORDER BY cos DESC, vec_id) AS rank FROM sc) WHERE rank <= 5),
+         |scb AS (SELECT q.qid, x.vec_id,
+         |    list_sum(list_transform(range(64), i -> q.e[i+1] * x.e[i+1]))
+         |      / (q.qn * x.nrm) AS cos
+         |  FROM qs q, idx3 x),
+         |exact AS (SELECT qid, vec_id FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY qid
+         |    ORDER BY cos DESC, vec_id) AS rank FROM scb) WHERE rank <= 5)
+         |SELECT e.qid, count(*) AS k_exact,
+         |  CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |    AS BIGINT) AS n_hit,
+         |  CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |    AS BIGINT) * 1000000 // count(*) AS recall_ppm
+         |FROM exact e LEFT JOIN approx a USING (qid, vec_id)
+         |GROUP BY e.qid ORDER BY e.qid""".stripMargin),
 
     // Budget-capped admission: strict (priority desc, id) prefix until
     // the token quota is spent; priority = distinct-word ratio in ppm
     // (a quality proxy both engines derive identically).
-    "q530_budget_admit" -> ((s, dir) => {
+    Gate("q530_budget_admit", (s, dir) => {
       val w = split(col("text"), " ")
       graft.ops.Corpus.budgetAdmit(
           t(s, dir, "documents")
@@ -287,35 +456,82 @@ object Curation11 extends Gates {
           "doc_id", "n_tok", col("prio"), budgetTokens = 10000L)
         .select("doc_id", "n_tok", "prio", "start_tok", "decision")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      s"""WITH d AS (SELECT doc_id,
+         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
+         |    CAST(len(list_distinct(string_split(text, ' ')))
+         |      AS BIGINT) * 1000000
+         |      // CAST(len(string_split(text, ' ')) AS BIGINT) AS prio
+         |  FROM documents),
+         |o AS (SELECT *, CAST(sum(n_tok) OVER (ORDER BY prio DESC, doc_id
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+         |    AS BIGINT) AS cum FROM d)
+         |SELECT doc_id, n_tok, prio, cum - n_tok AS start_tok,
+         |  CASE WHEN cum <= 10000 THEN 'admitted' ELSE 'deferred' END
+         |    AS decision
+         |FROM o ORDER BY doc_id""".stripMargin),
 
     // Re-fit at 16 cells + re-index (the occupancy-contract repair
     // when the corpus outgrows its cells): the new index's card ==
     // the oracle's 16-cell quantizer over the same grown vector set.
     // Writes a NEW root; the 8-cell lifecycle index is untouched.
-    "q535_sem_refit" -> ((s, dir) => {
+    Gate("q535_sem_refit", (s, dir) => {
       val src = semLife(s, dir)._1
       val dst = SemIndex.Paths(src.root + "_refit16")
       sys.addShutdownHook(Curation2.deleteDir(dst.root))
       graft.ops.SemIndex.refit(s, src, dst, nCells = 16)
       SemIndex.indexStats(s, dst).orderBy("cell")
-    }),
+    }, oracle =
+      s"""WITH $semCtes,
+         |cvr AS (SELECT e, row_number() OVER (ORDER BY e) AS rn
+         |  FROM (SELECT DISTINCT e FROM idx3) ORDER BY e LIMIT 128),
+         |ccr AS (SELECT count(*) AS c FROM cvr),
+         |seedsr AS (SELECT r.i + 1 AS sid,
+         |    list_transform(cvr.e, x -> round_even(x * 1000000, 0) / 1000000)
+         |      AS se
+         |  FROM range(16) r(i), ccr, cvr
+         |  WHERE cvr.rn = (r.i * ccr.c) // 16 + 1),
+         |snr AS (SELECT sid, se,
+         |    sqrt(list_sum(list_transform(se, x -> x * x))) AS snrm
+         |  FROM seedsr),
+         |csr AS (SELECT idx3.vec_id, sid,
+         |    list_sum(list_transform(range(64), i -> idx3.e[i+1] * se[i+1]))
+         |      / (idx3.nrm * snrm) AS c
+         |  FROM idx3, snr),
+         |cellr AS (SELECT vec_id, CAST(sid AS INT) AS cell FROM
+         |  (SELECT *, row_number() OVER (PARTITION BY vec_id
+         |     ORDER BY c DESC, sid) AS rn FROM csr) WHERE rn = 1)
+         |SELECT cell, count(*) AS n_vecs,
+         |  min(vec_id) AS min_vec, max(vec_id) AS max_vec,
+         |  bit_xor(${h60Sql("CAST(vec_id AS VARCHAR)")}) AS checksum
+         |FROM cellr GROUP BY cell ORDER BY cell""".stripMargin),
 
     // The MinHash-LSH banding design curve at the family's k=16: every
     // divisor banding's collision probability across the similarity
     // grid + its effective threshold — the numbers behind the gate's
     // (4 bands × 4 rows) choice and the grow-bits-with-log(n) rule.
-    "q536_lsh_design_curve" -> ((s, dir) =>
+    Gate("q536_lsh_design_curve", (s, dir) =>
       graft.ops.Dedup.lshDesignCurve(s, 16,
           (1L to 19L).map(_ * 50000L))
-        .orderBy("bands", "s_ppm")),
+        .orderBy("bands", "s_ppm"), oracle =
+      """WITH cfg AS (SELECT CAST(b AS INT) AS bands,
+        |    CAST(16 // b AS INT) AS rows_per_band
+        |  FROM range(1, 17) r(b) WHERE 16 % b = 0),
+        |grid AS (SELECT CAST(s AS BIGINT) AS s_ppm
+        |  FROM range(50000, 950001, 50000) g(s))
+        |SELECT bands, rows_per_band, s_ppm,
+        |  round(1.0 - power(1.0 - power(s_ppm / 1000000.0,
+        |    rows_per_band), bands), 6) + 0.0 AS p_collision,
+        |  CAST(floor(power(1.0 / bands, 1.0 / rows_per_band)
+        |    * 1000000.0 + 0.5) AS BIGINT) AS threshold_ppm
+        |FROM cfg, grid ORDER BY bands, s_ppm""".stripMargin),
 
     // Language-mix drift per ADMITTED day vs the curated snapshot —
     // the monitor a multilingual pipeline alarms on when one day's
     // crawl skews the mix (PSI over lang, one psiPanel pass; base =
     // the snapshot ids from the tape's day 0, days = the admitted
     // decisions joined back to the documents table for lang).
-    "q537_lang_drift" -> ((s, dir) => {
+    Gate("q537_lang_drift", (s, dir) => {
       val a = Curation9.streamed(s, dir)._1
       val lang = t(s, dir, "documents").select("doc_id", "lang")
       val base = s.read.parquet(a.packDay(0)).select("doc_id")
@@ -325,35 +541,125 @@ object Curation11 extends Gates {
         .join(lang, "doc_id")
       graft.ops.Quality.psiPanel(base, cur, "lang", "day")
         .orderBy("day")
-    }),
+    }, oracle =
+      s"""WITH ${Curation9.nDayCtes},
+         |lg AS (SELECT doc_id, lang FROM documents),
+         |bl AS (SELECT lang FROM corpus JOIN lg USING (doc_id)),
+         |cl AS (
+         |  SELECT 1 AS day, lang FROM admf1 JOIN lg USING (doc_id)
+         |  UNION ALL SELECT 2, lang FROM admf2 JOIN lg USING (doc_id)
+         |  UNION ALL SELECT 3, lang FROM admf3 JOIN lg USING (doc_id)
+         |  UNION ALL SELECT 4, lang FROM admf4 JOIN lg USING (doc_id)),
+         |bc AS (SELECT lang, CAST(count(*) AS BIGINT) AS b
+         |  FROM bl GROUP BY 1),
+         |cc AS (SELECT day, lang, CAST(count(*) AS BIGINT) AS c
+         |  FROM cl GROUP BY 1, 2),
+         |frame AS (SELECT DISTINCT day, lang FROM (
+         |  SELECT day, lang FROM cc
+         |  UNION ALL SELECT d.day, bc.lang
+         |    FROM (SELECT DISTINCT day FROM cc) d, bc)),
+         |j AS (SELECT f.day, f.lang, coalesce(b, 0) AS b,
+         |    coalesce(c, 0) AS c
+         |  FROM frame f LEFT JOIN bc USING (lang)
+         |    LEFT JOIN cc USING (day, lang)),
+         |t AS (SELECT day, CAST(count(*) AS BIGINT) AS kk,
+         |    sum(b) AS tb, sum(c) AS tc FROM j GROUP BY 1)
+         |SELECT day, CAST(count(*) AS BIGINT) AS n_bins,
+         |  round(sum(CAST(floor(
+         |    ((b + 1.0) / (tb + kk) - (c + 1.0) / (tc + kk))
+         |    * ln(((b + 1.0) / (tb + kk)) / ((c + 1.0) / (tc + kk)))
+         |    * 1000000000.0 + 0.5) AS BIGINT)) / 1000000000.0, 6)
+         |    + 0.0 AS psi
+         |FROM j JOIN t USING (day) GROUP BY day ORDER BY day""".stripMargin),
 
     // Dataset diff between manifest epochs: the post-retraction
     // steward report — per-shard doc/token deltas + checksum-level
     // change classification, pure manifest arithmetic.
-    "q531_manifest_diff" -> ((s, dir) => {
+    Gate("q531_manifest_diff", (s, dir) => {
       val a = Curation9.retracted(s, dir)._1
       graft.core.Layout.manifestDiff(
           s.read.parquet(a.manifestDay(CurationNDay.NDays)),
           s.read.parquet(a.manifestRetract(1)))
         .orderBy("shard")
-    }),
+    }, oracle =
+      s"""WITH ${Curation9.nDayCtes},
+         |${Curation9.retractionCtes},
+         |mfb AS (SELECT CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
+         |      % ${CurationDay.NShards} AS INT) AS shard,
+         |    CAST(count(*) AS BIGINT) AS n_docs,
+         |    CAST(sum(len(string_split(text, ' '))) AS BIGINT)
+         |      AS n_tokens,
+         |    bit_xor(${h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")})
+         |      AS ck
+         |  FROM grown4 GROUP BY 1),
+         |mfa AS (SELECT CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
+         |      % ${CurationDay.NShards} AS INT) AS shard,
+         |    CAST(count(*) AS BIGINT) AS n_docs,
+         |    CAST(sum(len(string_split(text, ' '))) AS BIGINT)
+         |      AS n_tokens,
+         |    bit_xor(${h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")})
+         |      AS ck
+         |  FROM corpus5 GROUP BY 1)
+         |SELECT shard,
+         |  coalesce(b.n_docs, 0) AS docs_before,
+         |  coalesce(a.n_docs, 0) AS docs_after,
+         |  coalesce(a.n_docs, 0) - coalesce(b.n_docs, 0) AS docs_delta,
+         |  coalesce(a.n_tokens, 0) - coalesce(b.n_tokens, 0)
+         |    AS tokens_delta,
+         |  CASE WHEN b.ck IS NULL THEN 'new'
+         |    WHEN a.ck IS NULL THEN 'gone'
+         |    WHEN b.ck = a.ck THEN 'unchanged'
+         |    ELSE 'changed' END AS status
+         |FROM mfb b FULL JOIN mfa a USING (shard)
+         |ORDER BY shard""".stripMargin),
 
     // The recall-vs-nprobe tuning curve over the grown semantic
     // index (endpoint nprobe=NCells is exact: recall_ppm = 1e6).
-    "q532_sem_recall_curve" -> ((s, dir) =>
+    Gate("q532_sem_recall_curve", (s, dir) =>
       graft.ops.SemIndex.recallCurve(s, semLife(s, dir)._1,
           t(s, dir, "embeddings")
             .where(pmod(col("vec_id"), lit(8L)) === 6L)
             .select("vec_id", "embedding"),
           k = 5)
-        .orderBy("nprobe")),
+        .orderBy("nprobe"), oracle =
+      s"""WITH $semCtes,
+         |qs AS (SELECT vec_id AS qid, e,
+         |    sqrt(list_sum(list_transform(e, x -> x * x))) AS qn
+         |  FROM v WHERE vec_id % 8 = 6),
+         |qr AS (SELECT qid, CAST(sid AS INT) AS cell,
+         |    CAST(rn AS INT) AS crank FROM (
+         |  SELECT qs.qid, sn.sid, row_number() OVER (PARTITION BY qs.qid
+         |      ORDER BY list_sum(list_transform(range(64),
+         |        i -> qs.e[i+1] * se[i+1])) / (qs.qn * snrm) DESC, sid)
+         |      AS rn
+         |  FROM qs, sn)),
+         |pairs AS (SELECT q.qid, x.vec_id,
+         |    list_sum(list_transform(range(64), i -> q.e[i+1] * x.e[i+1]))
+         |      / (q.qn * x.nrm) AS cos, qr.crank
+         |  FROM qs q JOIN qr ON qr.qid = q.qid
+         |    JOIN idx3 x ON x.cell = qr.cell),
+         |nps AS (SELECT CAST(unnest(range(1, ${SemIndex.NCells + 1}))
+         |    AS INT) AS np),
+         |vis AS (SELECT np, qid, vec_id, cos FROM pairs
+         |  JOIN nps ON crank <= np),
+         |topk AS (SELECT np, qid, vec_id FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY np, qid
+         |    ORDER BY cos DESC, vec_id) AS r FROM vis) WHERE r <= 5),
+         |ex AS (SELECT qid, vec_id FROM topk
+         |  WHERE np = ${SemIndex.NCells}),
+         |kt AS (SELECT CAST(count(*) AS BIGINT) AS k_total FROM ex),
+         |h AS (SELECT np, CAST(count(*) AS BIGINT) AS hits
+         |  FROM topk JOIN ex USING (qid, vec_id) GROUP BY np)
+         |SELECT np AS nprobe, hits, k_total,
+         |  hits * 1000000 // k_total AS recall_ppm
+         |FROM h, kt ORDER BY nprobe""".stripMargin),
 
     // PSI drift monitor over the lifecycle's event days: each day's
     // event_type mix vs the bootstrap window, add-one smoothed,
     // micro-nat-quantized terms (the alarm a production ingest pins a
     // threshold on). The whole panel is ONE psiPanel pass (two scans),
     // not a scan pair per day.
-    "q527_psi_drift" -> ((s, dir) => {
+    Gate("q527_psi_drift", (s, dir) => {
       val cuts = CurationNDay.Cuts
       val ev = t(s, dir, "events")
         .where(col("ts").isNotNull && col("event_type").isNotNull)
@@ -364,6 +670,36 @@ object Curation11 extends Gates {
               .when(col("ts") < cuts(3), 3).otherwise(4)),
           "event_type", "day")
         .orderBy("day")
+    }, oracle = {
+      val cuts = Seq("2024-01-08", "2024-01-15", "2024-01-22",
+        "2024-01-28").map(d => s"TIMESTAMP '$d 00:00:00'")
+      def dayPred(k: Int): String =
+        if (k == 4) s"ts >= ${cuts(3)}"
+        else s"ts >= ${cuts(k - 1)} AND ts < ${cuts(k)}"
+      def dayPsi(k: Int): String =
+        s"""cc$k AS (SELECT event_type, CAST(count(*) AS BIGINT) AS c
+           |  FROM ev WHERE ${dayPred(k)} GROUP BY 1),
+           |j$k AS (SELECT coalesce(b, 0) AS b, coalesce(c, 0) AS c
+           |  FROM bc FULL JOIN cc$k USING (event_type)),
+           |t$k AS (SELECT CAST(count(*) AS BIGINT) AS kk,
+           |    sum(b) AS tb, sum(c) AS tc FROM j$k),
+           |psi$k AS (SELECT $k AS day,
+           |    CAST(count(*) AS BIGINT) AS n_bins,
+           |    round(sum(CAST(floor(
+           |      ((b + 1.0) / (tb + kk) - (c + 1.0) / (tc + kk))
+           |      * ln(((b + 1.0) / (tb + kk)) / ((c + 1.0) / (tc + kk)))
+           |      * 1000000000.0 + 0.5) AS BIGINT)) / 1000000000.0, 6)
+           |      + 0.0 AS psi
+           |  FROM j$k, t$k)""".stripMargin
+      s"""WITH ev AS (SELECT event_type, ts FROM events
+         |  WHERE ts IS NOT NULL AND event_type IS NOT NULL),
+         |bc AS (SELECT event_type, CAST(count(*) AS BIGINT) AS b
+         |  FROM ev WHERE ts < ${cuts(0)} GROUP BY 1),
+         |${(1 to 4).map(dayPsi).mkString(",\n")}
+         |SELECT * FROM (
+         |  SELECT * FROM psi1 UNION ALL SELECT * FROM psi2
+         |  UNION ALL SELECT * FROM psi3 UNION ALL SELECT * FROM psi4)
+         |ORDER BY day""".stripMargin
     }))
 
   // ---- oracle: the whole token tape, re-derived from scratch --------
@@ -611,388 +947,4 @@ object Curation11 extends Gates {
       |    list_sum(list_transform(range(64), i -> q.e[i+1] * x.e[i+1]))
       |      / (q.qn * x.nrm) AS cos
       |  FROM qc JOIN qs q USING (qid) JOIN idx3 x ON x.cell = qc.cell)""".stripMargin
-
-  val oracles: Map[String, String] = Map(
-
-    "q540_multimodal_day_decisions" ->
-      s"""WITH $multiCtes
-         |SELECT * FROM (
-         |  SELECT 1 AS day, doc_id, decision FROM finalm1
-         |  UNION ALL SELECT 2, doc_id, decision FROM finalm2)
-         |ORDER BY day, doc_id""".stripMargin,
-
-    "q541_multimodal_index_cards" ->
-      s"""WITH $multiCtes
-         |SELECT * FROM (
-         |  SELECT 'lexical' AS modality, 'n_hashes' AS metric,
-         |    CAST(count(DISTINCT md5(text)) AS BIGINT) AS value
-         |    FROM mcorp3
-         |  UNION ALL SELECT 'lexical', 'n_band_rows',
-         |    4 * count(*) FROM mcorp3
-         |  UNION ALL SELECT 'semantic', 'n_vecs',
-         |    (SELECT count(*) FROM msnapv)
-         |      + (SELECT count(*) FROM madm1)
-         |      + (SELECT count(*) FROM madm2)
-         |  UNION ALL SELECT 'perceptual', 'n_hashes',
-         |    (SELECT count(*) FROM idxq2)
-         |      + (SELECT count(*) FROM madm2)
-         |  UNION ALL SELECT 'perceptual', 'n_band_rows',
-         |    4 * ((SELECT count(*) FROM idxq2)
-         |      + (SELECT count(*) FROM madm2)))
-         |ORDER BY modality, metric""".stripMargin,
-
-    "q521_sem_index_decisions" ->
-      s"""WITH $semCtes
-         |SELECT * FROM (
-         |  SELECT 1 AS day, vec_id, cell, decision FROM dec1
-         |  UNION ALL SELECT 2, vec_id, cell, decision FROM dec2)
-         |ORDER BY day, vec_id""".stripMargin,
-
-    "q522_sem_index_card" ->
-      s"""WITH $semCtes
-         |SELECT cell, count(*) AS n_vecs,
-         |  min(vec_id) AS min_vec, max(vec_id) AS max_vec,
-         |  bit_xor(${h60Sql("CAST(vec_id AS VARCHAR)")}) AS checksum
-         |FROM idx3 GROUP BY cell ORDER BY cell""".stripMargin,
-
-    "q525_sem_search" ->
-      s"""WITH $semCtes,
-         |$semProbeCtes
-         |SELECT qid, CAST(rank AS INT) AS rank, vec_id,
-         |  round(cos, 6) + 0.0 AS cos FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY qid
-         |    ORDER BY cos DESC, vec_id) AS rank FROM sc)
-         |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-
-    // compaction is content-invariant: the card after equals the
-    // same re-derivation that gates q522
-    "q526_sem_index_compacted" ->
-      s"""WITH $semCtes
-         |SELECT cell, count(*) AS n_vecs,
-         |  min(vec_id) AS min_vec, max(vec_id) AS max_vec,
-         |  bit_xor(${h60Sql("CAST(vec_id AS VARCHAR)")}) AS checksum
-         |FROM idx3 GROUP BY cell ORDER BY cell""".stripMargin,
-
-    "q528_pack_rebuild" ->
-      s"""WITH ${Curation9.nDayCtes},
-         |${Curation9.retractionCtes},
-         |pt AS (SELECT 0 AS day, doc_id,
-         |    CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
-         |      % ${CurationDay.NShards} AS INT) AS shard,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-         |  FROM corpus5),
-         |tape AS (SELECT day, doc_id, shard, n_tok,
-         |    CAST(sum(n_tok) OVER (ORDER BY shard, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) AS cum
-         |  FROM pt)
-         |SELECT day, doc_id, shard, n_tok,
-         |  cum - n_tok AS start_tok,
-         |  (cum - n_tok) // $L AS first_seq,
-         |  (cum - 1) // $L AS last_seq
-         |FROM tape ORDER BY doc_id""".stripMargin,
-
-    "q529_sem_search_recall" ->
-      s"""WITH $semCtes,
-         |$semProbeCtes,
-         |approx AS (SELECT qid, vec_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY qid
-         |    ORDER BY cos DESC, vec_id) AS rank FROM sc) WHERE rank <= 5),
-         |scb AS (SELECT q.qid, x.vec_id,
-         |    list_sum(list_transform(range(64), i -> q.e[i+1] * x.e[i+1]))
-         |      / (q.qn * x.nrm) AS cos
-         |  FROM qs q, idx3 x),
-         |exact AS (SELECT qid, vec_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY qid
-         |    ORDER BY cos DESC, vec_id) AS rank FROM scb) WHERE rank <= 5)
-         |SELECT e.qid, count(*) AS k_exact,
-         |  CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_hit,
-         |  CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) * 1000000 // count(*) AS recall_ppm
-         |FROM exact e LEFT JOIN approx a USING (qid, vec_id)
-         |GROUP BY e.qid ORDER BY e.qid""".stripMargin,
-
-    "q530_budget_admit" ->
-      s"""WITH d AS (SELECT doc_id,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    CAST(len(list_distinct(string_split(text, ' ')))
-         |      AS BIGINT) * 1000000
-         |      // CAST(len(string_split(text, ' ')) AS BIGINT) AS prio
-         |  FROM documents),
-         |o AS (SELECT *, CAST(sum(n_tok) OVER (ORDER BY prio DESC, doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |    AS BIGINT) AS cum FROM d)
-         |SELECT doc_id, n_tok, prio, cum - n_tok AS start_tok,
-         |  CASE WHEN cum <= 10000 THEN 'admitted' ELSE 'deferred' END
-         |    AS decision
-         |FROM o ORDER BY doc_id""".stripMargin,
-
-    // same oracle as the batch path (two delivery engines, one answer)
-    "q533_sem_stream_decisions" ->
-      s"""WITH $semCtes
-         |SELECT * FROM (
-         |  SELECT 1 AS day, vec_id, cell, decision FROM dec1
-         |  UNION ALL SELECT 2, vec_id, cell, decision FROM dec2)
-         |ORDER BY day, vec_id""".stripMargin,
-
-    "q534_sem_stream_card" ->
-      s"""WITH $semCtes
-         |SELECT cell, count(*) AS n_vecs,
-         |  min(vec_id) AS min_vec, max(vec_id) AS max_vec,
-         |  bit_xor(${h60Sql("CAST(vec_id AS VARCHAR)")}) AS checksum,
-         |  'sem1,sem2' AS ledger_days, '1' AS replay_stable
-         |FROM idx3 GROUP BY cell ORDER BY cell""".stripMargin,
-
-    "q535_sem_refit" ->
-      s"""WITH $semCtes,
-         |cvr AS (SELECT e, row_number() OVER (ORDER BY e) AS rn
-         |  FROM (SELECT DISTINCT e FROM idx3) ORDER BY e LIMIT 128),
-         |ccr AS (SELECT count(*) AS c FROM cvr),
-         |seedsr AS (SELECT r.i + 1 AS sid,
-         |    list_transform(cvr.e, x -> round_even(x * 1000000, 0) / 1000000)
-         |      AS se
-         |  FROM range(16) r(i), ccr, cvr
-         |  WHERE cvr.rn = (r.i * ccr.c) // 16 + 1),
-         |snr AS (SELECT sid, se,
-         |    sqrt(list_sum(list_transform(se, x -> x * x))) AS snrm
-         |  FROM seedsr),
-         |csr AS (SELECT idx3.vec_id, sid,
-         |    list_sum(list_transform(range(64), i -> idx3.e[i+1] * se[i+1]))
-         |      / (idx3.nrm * snrm) AS c
-         |  FROM idx3, snr),
-         |cellr AS (SELECT vec_id, CAST(sid AS INT) AS cell FROM
-         |  (SELECT *, row_number() OVER (PARTITION BY vec_id
-         |     ORDER BY c DESC, sid) AS rn FROM csr) WHERE rn = 1)
-         |SELECT cell, count(*) AS n_vecs,
-         |  min(vec_id) AS min_vec, max(vec_id) AS max_vec,
-         |  bit_xor(${h60Sql("CAST(vec_id AS VARCHAR)")}) AS checksum
-         |FROM cellr GROUP BY cell ORDER BY cell""".stripMargin,
-
-    "q536_lsh_design_curve" ->
-      """WITH cfg AS (SELECT CAST(b AS INT) AS bands,
-        |    CAST(16 // b AS INT) AS rows_per_band
-        |  FROM range(1, 17) r(b) WHERE 16 % b = 0),
-        |grid AS (SELECT CAST(s AS BIGINT) AS s_ppm
-        |  FROM range(50000, 950001, 50000) g(s))
-        |SELECT bands, rows_per_band, s_ppm,
-        |  round(1.0 - power(1.0 - power(s_ppm / 1000000.0,
-        |    rows_per_band), bands), 6) + 0.0 AS p_collision,
-        |  CAST(floor(power(1.0 / bands, 1.0 / rows_per_band)
-        |    * 1000000.0 + 0.5) AS BIGINT) AS threshold_ppm
-        |FROM cfg, grid ORDER BY bands, s_ppm""".stripMargin,
-
-    "q538_phash_index_decisions" ->
-      s"""WITH $phashLifeCtes
-         |SELECT * FROM (
-         |  SELECT 1 AS day, media_id, decision FROM decp1
-         |  UNION ALL SELECT 2, media_id, decision FROM decp2)
-         |ORDER BY day, media_id""".stripMargin,
-
-    "q539_phash_index_card" ->
-      s"""WITH $phashLifeCtes
-         |SELECT band, CAST(sum(cnt) AS BIGINT) AS n_rows,
-         |  CAST(count(*) AS BIGINT) AS n_buckets,
-         |  CAST(max(cnt) AS BIGINT) AS max_bucket
-         |FROM (SELECT band, bv, count(*) AS cnt FROM pbands
-         |  WHERE doc_id IN (SELECT doc_id FROM idxp3)
-         |  GROUP BY 1, 2)
-         |GROUP BY band ORDER BY band""".stripMargin,
-
-    "q537_lang_drift" ->
-      s"""WITH ${Curation9.nDayCtes},
-         |lg AS (SELECT doc_id, lang FROM documents),
-         |bl AS (SELECT lang FROM corpus JOIN lg USING (doc_id)),
-         |cl AS (
-         |  SELECT 1 AS day, lang FROM admf1 JOIN lg USING (doc_id)
-         |  UNION ALL SELECT 2, lang FROM admf2 JOIN lg USING (doc_id)
-         |  UNION ALL SELECT 3, lang FROM admf3 JOIN lg USING (doc_id)
-         |  UNION ALL SELECT 4, lang FROM admf4 JOIN lg USING (doc_id)),
-         |bc AS (SELECT lang, CAST(count(*) AS BIGINT) AS b
-         |  FROM bl GROUP BY 1),
-         |cc AS (SELECT day, lang, CAST(count(*) AS BIGINT) AS c
-         |  FROM cl GROUP BY 1, 2),
-         |frame AS (SELECT DISTINCT day, lang FROM (
-         |  SELECT day, lang FROM cc
-         |  UNION ALL SELECT d.day, bc.lang
-         |    FROM (SELECT DISTINCT day FROM cc) d, bc)),
-         |j AS (SELECT f.day, f.lang, coalesce(b, 0) AS b,
-         |    coalesce(c, 0) AS c
-         |  FROM frame f LEFT JOIN bc USING (lang)
-         |    LEFT JOIN cc USING (day, lang)),
-         |t AS (SELECT day, CAST(count(*) AS BIGINT) AS kk,
-         |    sum(b) AS tb, sum(c) AS tc FROM j GROUP BY 1)
-         |SELECT day, CAST(count(*) AS BIGINT) AS n_bins,
-         |  round(sum(CAST(floor(
-         |    ((b + 1.0) / (tb + kk) - (c + 1.0) / (tc + kk))
-         |    * ln(((b + 1.0) / (tb + kk)) / ((c + 1.0) / (tc + kk)))
-         |    * 1000000000.0 + 0.5) AS BIGINT)) / 1000000000.0, 6)
-         |    + 0.0 AS psi
-         |FROM j JOIN t USING (day) GROUP BY day ORDER BY day""".stripMargin,
-
-    "q531_manifest_diff" ->
-      s"""WITH ${Curation9.nDayCtes},
-         |${Curation9.retractionCtes},
-         |mfb AS (SELECT CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
-         |      % ${CurationDay.NShards} AS INT) AS shard,
-         |    CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-         |      AS n_tokens,
-         |    bit_xor(${h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")})
-         |      AS ck
-         |  FROM grown4 GROUP BY 1),
-         |mfa AS (SELECT CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
-         |      % ${CurationDay.NShards} AS INT) AS shard,
-         |    CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-         |      AS n_tokens,
-         |    bit_xor(${h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")})
-         |      AS ck
-         |  FROM corpus5 GROUP BY 1)
-         |SELECT shard,
-         |  coalesce(b.n_docs, 0) AS docs_before,
-         |  coalesce(a.n_docs, 0) AS docs_after,
-         |  coalesce(a.n_docs, 0) - coalesce(b.n_docs, 0) AS docs_delta,
-         |  coalesce(a.n_tokens, 0) - coalesce(b.n_tokens, 0)
-         |    AS tokens_delta,
-         |  CASE WHEN b.ck IS NULL THEN 'new'
-         |    WHEN a.ck IS NULL THEN 'gone'
-         |    WHEN b.ck = a.ck THEN 'unchanged'
-         |    ELSE 'changed' END AS status
-         |FROM mfb b FULL JOIN mfa a USING (shard)
-         |ORDER BY shard""".stripMargin,
-
-    "q532_sem_recall_curve" ->
-      s"""WITH $semCtes,
-         |qs AS (SELECT vec_id AS qid, e,
-         |    sqrt(list_sum(list_transform(e, x -> x * x))) AS qn
-         |  FROM v WHERE vec_id % 8 = 6),
-         |qr AS (SELECT qid, CAST(sid AS INT) AS cell,
-         |    CAST(rn AS INT) AS crank FROM (
-         |  SELECT qs.qid, sn.sid, row_number() OVER (PARTITION BY qs.qid
-         |      ORDER BY list_sum(list_transform(range(64),
-         |        i -> qs.e[i+1] * se[i+1])) / (qs.qn * snrm) DESC, sid)
-         |      AS rn
-         |  FROM qs, sn)),
-         |pairs AS (SELECT q.qid, x.vec_id,
-         |    list_sum(list_transform(range(64), i -> q.e[i+1] * x.e[i+1]))
-         |      / (q.qn * x.nrm) AS cos, qr.crank
-         |  FROM qs q JOIN qr ON qr.qid = q.qid
-         |    JOIN idx3 x ON x.cell = qr.cell),
-         |nps AS (SELECT CAST(unnest(range(1, ${SemIndex.NCells + 1}))
-         |    AS INT) AS np),
-         |vis AS (SELECT np, qid, vec_id, cos FROM pairs
-         |  JOIN nps ON crank <= np),
-         |topk AS (SELECT np, qid, vec_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY np, qid
-         |    ORDER BY cos DESC, vec_id) AS r FROM vis) WHERE r <= 5),
-         |ex AS (SELECT qid, vec_id FROM topk
-         |  WHERE np = ${SemIndex.NCells}),
-         |kt AS (SELECT CAST(count(*) AS BIGINT) AS k_total FROM ex),
-         |h AS (SELECT np, CAST(count(*) AS BIGINT) AS hits
-         |  FROM topk JOIN ex USING (qid, vec_id) GROUP BY np)
-         |SELECT np AS nprobe, hits, k_total,
-         |  hits * 1000000 // k_total AS recall_ppm
-         |FROM h, kt ORDER BY nprobe""".stripMargin,
-
-    "q527_psi_drift" -> {
-      val cuts = Seq("2024-01-08", "2024-01-15", "2024-01-22",
-        "2024-01-28").map(d => s"TIMESTAMP '$d 00:00:00'")
-      def dayPred(k: Int): String =
-        if (k == 4) s"ts >= ${cuts(3)}"
-        else s"ts >= ${cuts(k - 1)} AND ts < ${cuts(k)}"
-      def dayPsi(k: Int): String =
-        s"""cc$k AS (SELECT event_type, CAST(count(*) AS BIGINT) AS c
-           |  FROM ev WHERE ${dayPred(k)} GROUP BY 1),
-           |j$k AS (SELECT coalesce(b, 0) AS b, coalesce(c, 0) AS c
-           |  FROM bc FULL JOIN cc$k USING (event_type)),
-           |t$k AS (SELECT CAST(count(*) AS BIGINT) AS kk,
-           |    sum(b) AS tb, sum(c) AS tc FROM j$k),
-           |psi$k AS (SELECT $k AS day,
-           |    CAST(count(*) AS BIGINT) AS n_bins,
-           |    round(sum(CAST(floor(
-           |      ((b + 1.0) / (tb + kk) - (c + 1.0) / (tc + kk))
-           |      * ln(((b + 1.0) / (tb + kk)) / ((c + 1.0) / (tc + kk)))
-           |      * 1000000000.0 + 0.5) AS BIGINT)) / 1000000000.0, 6)
-           |      + 0.0 AS psi
-           |  FROM j$k, t$k)""".stripMargin
-      s"""WITH ev AS (SELECT event_type, ts FROM events
-         |  WHERE ts IS NOT NULL AND event_type IS NOT NULL),
-         |bc AS (SELECT event_type, CAST(count(*) AS BIGINT) AS b
-         |  FROM ev WHERE ts < ${cuts(0)} GROUP BY 1),
-         |${(1 to 4).map(dayPsi).mkString(",\n")}
-         |SELECT * FROM (
-         |  SELECT * FROM psi1 UNION ALL SELECT * FROM psi2
-         |  UNION ALL SELECT * FROM psi3 UNION ALL SELECT * FROM psi4)
-         |ORDER BY day""".stripMargin
-    },
-
-    "q523_group_split" ->
-      s"""WITH a AS (SELECT *,
-         |    CASE WHEN (${h60Sql("source")}) % 1000000 < 100000 THEN 'test'
-         |      WHEN (${h60Sql("source")}) % 1000000 < 200000 THEN 'val'
-         |      ELSE 'train' END AS split
-         |  FROM documents),
-         |per AS (SELECT split, source, count(*) AS n_docs,
-         |    CAST(sum(n_chars) AS BIGINT) AS n_chars
-         |  FROM a GROUP BY 1, 2),
-         |leak AS (SELECT source,
-         |    CAST(count(DISTINCT split) AS BIGINT) AS n_splits_of_source
-         |  FROM a GROUP BY 1)
-         |SELECT source, split, n_docs, n_chars, n_splits_of_source
-         |FROM per JOIN leak USING (source)
-         |ORDER BY split, source""".stripMargin,
-
-    "q524_data_card" ->
-      s"""WITH $tapeCtes,
-         |ev AS (SELECT event_type, user_id, value FROM events
-         |  WHERE ts IS NOT NULL AND event_type IS NOT NULL)
-         |SELECT * FROM (
-         |  SELECT 'decisions' AS section, decision AS metric,
-         |    CAST(count(*) AS BIGINT) AS value FROM (
-         |      SELECT decision FROM final1
-         |      UNION ALL SELECT decision FROM final2
-         |      UNION ALL SELECT decision FROM final3
-         |      UNION ALL SELECT decision FROM final4) GROUP BY 2
-         |  UNION ALL SELECT 'corpus', 'n_docs', count(*) FROM grown4
-         |  UNION ALL SELECT 'corpus', 'n_tokens',
-         |    CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-         |    FROM grown4
-         |  UNION ALL SELECT 'pack', 'n_tokens', max(cum) FROM tape
-         |  UNION ALL SELECT 'pack', 'n_seqs',
-         |    (max(cum) + ${L - 1}) // $L FROM tape
-         |  UNION ALL SELECT 'pack', 'tail_pad',
-         |    ($L - max(cum) % $L) % $L FROM tape
-         |  UNION ALL SELECT 'pack', 'n_straddle',
-         |    CAST(sum(CASE WHEN (cum - n_tok) // $L <> (cum - 1) // $L
-         |      THEN 1 ELSE 0 END) AS BIGINT) FROM tape
-         |  UNION ALL SELECT 'index', 'n_hashes',
-         |    count(DISTINCT md5(text)) FROM grown4
-         |  UNION ALL SELECT 'index', 'n_band_rows',
-         |    4 * count(*) FROM grown4
-         |  UNION ALL SELECT 'states', 'n_event_types',
-         |    count(DISTINCT event_type) FROM ev
-         |  UNION ALL SELECT 'states', 'n_events', count(*) FROM ev
-         |  UNION ALL SELECT 'states', 'n_type_user_pairs',
-         |    count(DISTINCT (event_type, user_id)) FROM ev)
-         |ORDER BY section, metric""".stripMargin,
-
-    "q519_pack_tape" ->
-      s"""WITH $tapeCtes
-         |SELECT day, doc_id, shard, n_tok,
-         |  cum - n_tok AS start_tok,
-         |  (cum - n_tok) // $L AS first_seq,
-         |  (cum - 1) // $L AS last_seq
-         |FROM tape ORDER BY day, doc_id""".stripMargin,
-
-    "q520_pack_report" ->
-      s"""WITH $tapeCtes
-         |SELECT day, count(*) AS n_docs,
-         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-         |  min((cum - n_tok) // $L) AS seq_lo,
-         |  max((cum - 1) // $L) AS seq_hi,
-         |  CAST(sum(CASE WHEN (cum - n_tok) // $L <> (cum - 1) // $L
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_straddle,
-         |  max(cum) AS next_tok
-         |FROM tape GROUP BY day ORDER BY day""".stripMargin)
 }

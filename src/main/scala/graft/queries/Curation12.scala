@@ -233,160 +233,362 @@ object Curation12 extends Gates {
     (p, noop, days)
   }
 
-  val queries: Map[String, QFn] = Map(
+  /** A streamed lifecycle's index `cards` with its calendar facts
+    * pinned: the ledger's day ids, and whether the replayed step was a
+    * no-op.
+    */
+  private[queries] def ledgerCards(cards: org.apache.spark.sql.DataFrame,
+      noop: Boolean, days: Seq[String]) =
+    cards.withColumn("ledger_days", lit(days.mkString(",")))
+      .withColumn("replay_stable", lit(if (noop) "1" else "0"))
+      .orderBy("modality", "metric")
+
+  lazy val gates: Seq[Gate] = Seq(
 
     // The full admission stack's pinned verdicts — all six stage
     // columns disclosed per doc per day.
-    "q559_mm6_decisions" -> ((s, dir) =>
-      MultiDay.allDecisions6(s, mm6(s, dir)).orderBy("day", "doc_id")),
+    Gate("q559_mm6_decisions", (s, dir) =>
+      MultiDay.allDecisions6(s, mm6(s, dir)).orderBy("day", "doc_id"), oracle =
+      s"""WITH $mm6Ctes
+         |$mm6DecisionRows""".stripMargin),
 
     // The STREAMED six-stage path — decisions must equal the batch
     // chain's oracle row for row.
-    "q561_mm6_stream_decisions" -> ((s, dir) =>
+    Gate("q561_mm6_stream_decisions", (s, dir) =>
       MultiDay.allDecisions6(s, mm6Stream(s, dir)._1)
-        .orderBy("day", "doc_id")),
+        .orderBy("day", "doc_id"), oracle =
+      // second engine path, same composed six-stage answer
+      s"""WITH $mm6Ctes
+         |$mm6DecisionRows""".stripMargin),
 
     // Its index cards + the recovery facts pinned (ledger exactly
     // [mm1, mm2]; the re-offered committed day added nothing).
-    "q562_mm6_stream_cards" -> ((s, dir) => {
+    Gate("q562_mm6_stream_cards", (s, dir) => {
       val (p, noop, days) = mm6Stream(s, dir)
-      MultiDay.indexCards4(s, p)
-        .withColumn("ledger_days", lit(days.mkString(",")))
-        .withColumn("replay_stable", lit(if (noop) "1" else "0"))
-        .orderBy("modality", "metric")
-    }),
+      ledgerCards(MultiDay.indexCards4(s, p), noop, days)
+    }, oracle =
+      s"""WITH $mm6Ctes,
+         |lcorp63 AS (SELECT doc_id, text FROM lcorp62
+         |  UNION ALL SELECT p.doc_id, p.text FROM pool6 p
+         |    JOIN madm62 USING (doc_id))
+         |SELECT *, 'mm1,mm2' AS ledger_days, '1' AS replay_stable
+         |FROM (
+         |$mm6CardRows""".stripMargin),
 
     // The four index cards + media count under six-stage admission:
     // every artifact counts exactly the six-stage survivors.
-    "q560_mm6_cards" -> ((s, dir) =>
+    Gate("q560_mm6_cards", (s, dir) =>
       MultiDay.indexCards4(s, mm6(s, dir))
-        .orderBy("modality", "metric")),
+        .orderBy("modality", "metric"), oracle =
+      s"""WITH $mm6Ctes,
+         |lcorp63 AS (SELECT doc_id, text FROM lcorp62
+         |  UNION ALL SELECT p.doc_id, p.text FROM pool6 p
+         |    JOIN madm62 USING (doc_id))
+         |SELECT * FROM (
+         |$mm6CardRows""".stripMargin),
 
     // Size-capped retention: the manifest after expiring to the
     // computed horizon, the horizon disclosed on every row.
-    "q557_cap_manifest" -> ((s, dir) => {
+    Gate("q557_cap_manifest", (s, dir) => {
       val (a, k) = capLife(s, dir)
       s.read.parquet(a.manifestRetract(1))
         .withColumn("keep_from_day", lit(k.toLong))
         .orderBy("shard")
-    }),
+    }, oracle =
+      // Size-capped retention: the horizon is COMPUTED from the per-day
+      // token masses (smallest k whose tail mass fits the cap), then
+      // the manifest is the q552 shape at that horizon.
+      s"""WITH ${Curation9.nDayCtes},
+         |$capCtes,
+         |${shardCte("mC", "corpusC")}
+         |$manifestCols,
+         |  (SELECT k FROM keepk) AS keep_from_day
+         |FROM mC GROUP BY shard ORDER BY shard""".stripMargin),
 
     // The occupancy health card over the grown lifecycle index — the
     // numbers that DECIDE the refit (trigger genuinely firing at
     // target occupancy 16 on the organically grown index).
-    "q548_sem_occupancy" -> ((s, dir) =>
+    Gate("q548_sem_occupancy", (s, dir) =>
       SemIndex.occupancyCard(s, Curation11.semLife(s, dir)._1, 16L)
-        .orderBy("cell")),
+        .orderBy("cell"), oracle =
+      // The occupancy card over the grown q521 index (idx3) — exact
+      // integer arithmetic, trigger genuinely firing at target 16.
+      s"""WITH ${Curation11.semCtes},
+         |per AS (SELECT cell, CAST(count(*) AS BIGINT) AS n_vecs
+         |  FROM idx3 GROUP BY cell),
+         |tot AS (SELECT CAST(sum(n_vecs) AS BIGINT) AS n_total,
+         |    CAST(count(*) AS BIGINT) AS n_cells FROM per)
+         |SELECT cell, n_vecs, n_total, n_cells,
+         |  n_total // n_cells AS mean_occ,
+         |  CAST(16 AS BIGINT) AS target_occ,
+         |  CAST(CASE WHEN n_total > 16 * n_cells THEN 1 ELSE 0 END
+         |    AS BIGINT) AS refit_needed,
+         |  (n_total + 15) // 16 AS new_ncells
+         |FROM per, tot ORDER BY cell""".stripMargin),
 
     // The fired refit: the post-cutover index card at the card's own
     // ⌈n/16⌉ cell count, the new count disclosed on every row.
-    "q549_sem_refit_fired" -> ((s, dir) => {
+    Gate("q549_sem_refit_fired", (s, dir) => {
       val (p, nc) = refitLife(s, dir)
       SemIndex.indexStats(s, p)
         .withColumn("n_cells_after", lit(nc))
         .orderBy("cell")
-    }),
+    }, oracle =
+      // The fired refit at the DYNAMIC ⌈n/16⌉ cell count — the q535
+      // re-derivation with the cell count computed from the data.
+      s"""WITH ${Curation11.semCtes},
+         |$refitCtes
+         |SELECT cell, count(*) AS n_vecs,
+         |  min(vec_id) AS min_vec, max(vec_id) AS max_vec,
+         |  bit_xor(${h60Sql("CAST(vec_id AS VARCHAR)")}) AS checksum,
+         |  (SELECT k FROM kc) AS n_cells_after
+         |FROM cellr GROUP BY cell ORDER BY cell""".stripMargin),
 
     // The four index cards after TTL'ing day 1's admissions: every
     // index describes exactly snapshot + day-2 + day-3 survivors; the
     // media artifact is NOT pruned (decode-once outlives admission).
-    "q550_mm_ttl_cards" -> ((s, dir) =>
+    Gate("q550_mm_ttl_cards", (s, dir) =>
       MultiDay.indexCards4(s, mmTtl(s, dir)._1)
-        .orderBy("modality", "metric")),
+        .orderBy("modality", "metric"), oracle =
+      // The four cards after TTL'ing day 1's admissions: retained =
+      // snapshot + day-2 + day-3 admissions; the lexical hash set
+      // collapses to the retained docs' distinct hashes (stillHeld
+      // semantics); the media artifact keeps every decoded asset.
+      s"""WITH $mmCtes,
+         |$ttlRetCte
+         |SELECT * FROM (
+         |$ttlCardRows""".stripMargin),
 
     // The TTL day's LEDGER facts (r12 verdict task 4): the same
     // retained-index cards with the ledger content pinned (admission
     // days mm1-mm3 plus the committed ttl1 row) and the replayed TTL
     // witnessed as a pure no-op.
-    "q568_mm_ttl_ledger" -> ((s, dir) => {
+    Gate("q568_mm_ttl_ledger", (s, dir) => {
       val (p, _, noop, days) = mmTtl(s, dir)
-      MultiDay.indexCards4(s, p)
-        .withColumn("ledger_days", lit(days.mkString(",")))
-        .withColumn("replay_stable", lit(if (noop) "1" else "0"))
-        .orderBy("modality", "metric")
-    }),
+      ledgerCards(MultiDay.indexCards4(s, p), noop, days)
+    }, oracle =
+      // The q550 card with the TTL ledger facts pinned: ledger ==
+      // [mm1, mm2, mm3, ttl1] exactly, replayed TTL a no-op.
+      s"""WITH $mmCtes,
+         |$ttlRetCte
+         |SELECT *, 'mm1,mm2,mm3,ttl1' AS ledger_days,
+         |  '1' AS replay_stable
+         |FROM (
+         |$ttlCardRows""".stripMargin),
 
     // Day 1 re-offered against the retained indexes: previously
     // index-blocked docs whose only obstacle was day-1 state readmit.
-    "q551_mm_ttl_reoffer" -> ((s, dir) =>
-      mmTtl(s, dir)._2.orderBy("doc_id")),
+    Gate("q551_mm_ttl_reoffer", (s, dir) =>
+      mmTtl(s, dir)._2.orderBy("doc_id"), oracle =
+      // Day-1 re-offer against the retained indexes: the day-1 stage
+      // machinery verbatim, index sets = snapshot + day-2/-3 admissions.
+      s"""WITH $mmCtes,
+         |lcorpT AS MATERIALIZED (SELECT doc_id, text FROM pdocs
+         |  WHERE doc_id % 8 >= 4
+         |  UNION ALL SELECT d.doc_id, d.text FROM pdocs d
+         |    JOIN madm2 USING (doc_id)
+         |  UNION ALL SELECT d.doc_id, d.text FROM pdocs d
+         |    JOIN madm3 USING (doc_id)),
+         |${Curation.dedupDecisionCtes("lcorpT", "lb1", "LT")},
+         |ixsemT AS (SELECT cell, vec_id, e, nrm FROM ixms
+         |  UNION ALL SELECT cell, vec_id, e, nrm FROM ixs2
+         |    WHERE vec_id IN (SELECT doc_id FROM madm2)
+         |  UNION ALL SELECT cell, vec_id, e, nrm FROM ixs3
+         |    WHERE vec_id IN (SELECT doc_id FROM madm3)),
+         |${semDay4("sT", "ixsemT", "ixs1")},
+         |idxPT AS (SELECT doc_id FROM pdocs WHERE doc_id % 8 >= 4
+         |  UNION ALL SELECT doc_id FROM madm2
+         |  UNION ALL SELECT doc_id FROM madm3),
+         |${bandedDay("PT", "xpbands", "xbits", imgJoin, "dP1", "idxPT",
+            "phash")},
+         |${bandedDay("AT", "xabands", "xabits", audJoin, "dP1", "idxPT",
+            "audio")}
+         |SELECT l.doc_id, l.decision AS d_lex, s.decision AS d_sem,
+         |  p.decision AS d_ph, a.decision AS d_aud,
+         |  CASE WHEN l.decision <> 'admitted' THEN l.decision
+         |    WHEN s.decision <> 'admitted' THEN s.decision
+         |    WHEN p.decision <> 'admitted' THEN p.decision
+         |    WHEN a.decision <> 'admitted' THEN a.decision
+         |    ELSE 'admitted' END AS decision
+         |FROM decisionsLT l JOIN decSsT s ON s.vec_id = l.doc_id
+         |  JOIN decBPT p ON p.doc_id = l.doc_id
+         |  JOIN decBAT a ON a.doc_id = l.doc_id
+         |ORDER BY l.doc_id""".stripMargin),
 
-    "q552_ttl_manifest" -> ((s, dir) =>
+    Gate("q552_ttl_manifest", (s, dir) =>
       s.read.parquet(ttlLife(s, dir)._1.manifestRetract(1))
-        .orderBy("shard")),
+        .orderBy("shard"), oracle =
+      // TTL manifest: shard manifest over the retained N-day corpus
+      // (admitted days >= 2 only — snapshot + day 1 aged out).
+      s"""WITH ${Curation9.nDayCtes},
+         |$ttlCorpusCte,
+         |${shardCte("m", "corpusT")}
+         |$manifestCols
+         |FROM m GROUP BY shard ORDER BY shard""".stripMargin),
 
-    "q553_ttl_tape" -> ((s, dir) => {
+    Gate("q553_ttl_tape", (s, dir) => {
       val a = ttlLife(s, dir)._1
       graft.ops.Pack.fullLayout(s, a, 0).orderBy("doc_id")
-    }),
+    }, oracle =
+      // The rebuilt tape over the retained corpus (q528's contract at
+      // the TTL boundary).
+      s"""WITH ${Curation9.nDayCtes},
+         |$ttlCorpusCte,
+         |${tapeSql("corpusT")}""".stripMargin),
 
-    "q554_ttl_reoffer" -> ((s, dir) =>
-      ttlLife(s, dir)._2.orderBy("doc_id")),
+    Gate("q554_ttl_reoffer", (s, dir) =>
+      ttlLife(s, dir)._2.orderBy("doc_id"), oracle =
+      // TTL re-offer: the oldest victim's text readmits (unless a
+      // retained doc still carries it), the surviving control stays
+      // dup_exact_corpus — the q518 shape at the TTL boundary.
+      s"""WITH ${Curation9.nDayCtes},
+         |$ttlCorpusCte,
+         |victT AS (SELECT doc_id, text FROM grown4
+         |  WHERE doc_id NOT IN (SELECT doc_id FROM corpusT)),
+         |batchT AS (
+         |  SELECT CAST(9900001 AS BIGINT) AS doc_id, text FROM victT
+         |    WHERE doc_id = (SELECT min(doc_id) FROM victT)
+         |  UNION ALL SELECT 9900002, text FROM corpusT
+         |    WHERE doc_id = (SELECT min(doc_id) FROM corpusT)),
+         |${Curation.dedupDecisionCtes("corpusT", "batchT", "T")},
+         |${Curation8.postGateCtes("T")}
+         |SELECT doc_id, decision,
+         |  CASE WHEN decision = 'admitted'
+         |    THEN CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
+         |      % ${graft.ops.CurationDay.NShards} AS INT) END AS shard
+         |FROM finalT ORDER BY doc_id""".stripMargin),
 
     // The streamed 3-day multimodal lifecycle's pinned per-day
     // verdicts, all four stage columns disclosed.
-    "q542_mm_stream_decisions" -> ((s, dir) =>
+    Gate("q542_mm_stream_decisions", (s, dir) =>
       MultiDay.allDecisions4(s, mmStream(s, dir)._1)
-        .orderBy("day", "doc_id")),
+        .orderBy("day", "doc_id"), oracle = mmDecisionsSql),
 
     // The four index cards + the media artifact size + the recovery
     // facts pinned (ledger exactly [mm1, mm2, mm3]; the re-offered
     // committed day was a pure no-op).
-    "q543_mm_stream_cards" -> ((s, dir) => {
+    Gate("q543_mm_stream_cards", (s, dir) => {
       val (p, noop, days) = mmStream(s, dir)
-      MultiDay.indexCards4(s, p)
-        .withColumn("ledger_days", lit(days.mkString(",")))
-        .withColumn("replay_stable", lit(if (noop) "1" else "0"))
-        .orderBy("modality", "metric")
-    }),
+      ledgerCards(MultiDay.indexCards4(s, p), noop, days)
+    }, oracle =
+      s"""WITH $mmCtes,
+         |$mmCardAdmCtes
+         |SELECT *, 'mm1,mm2,mm3' AS ledger_days, '1' AS replay_stable
+         |FROM (
+         |$mmCardRows""".stripMargin),
 
     // The decode-once media artifact: every asset's image dHash bytes
     // + audio fingerprint bytes, decoded exactly once per lifetime.
-    "q544_media_hashes" -> ((s, dir) =>
+    Gate("q544_media_hashes", (s, dir) =>
       graft.ops.MediaHashes.read(s, mmStream(s, dir)._1.media)
-        .orderBy("media_id")),
+        .orderBy("media_id"), oracle =
+      s"""WITH $mmCtes
+         |SELECT p.doc_id AS media_id,
+         |  r0, r1, r2, r3, r4, r5, r6, r7,
+         |  a0, a1, a2, a3, a4, a5, a6, a7
+         |FROM xrb2 p JOIN xarb a ON a.doc_id = p.doc_id
+         |WHERE p.doc_id IN (SELECT doc_id FROM pdocs)
+         |  OR p.doc_id IN (SELECT sdoc FROM sm)
+         |ORDER BY media_id""".stripMargin),
 
     // The BATCH engine path over the identical ledgered day step —
     // must equal q542's oracle row for row.
-    "q545_mm_batch_decisions" -> ((s, dir) =>
+    Gate("q545_mm_batch_decisions", (s, dir) =>
       MultiDay.allDecisions4(s, mmBatch(s, dir))
-        .orderBy("day", "doc_id")),
+        .orderBy("day", "doc_id"), oracle =
+      // two delivery engines, one answer
+      mmDecisionsSql),
 
     // The MAINTAINED chain (compactions between days) — decisions
     // bit-identical to the plain chain and the stream: maintenance
     // invariance proved at lifecycle level, not per op.
-    "q558_mm_maintained_decisions" -> ((s, dir) =>
+    Gate("q558_mm_maintained_decisions", (s, dir) =>
       MultiDay.allDecisions4(s, mmMaintained(s, dir))
-        .orderBy("day", "doc_id")),
+        .orderBy("day", "doc_id"), oracle =
+      // third path: maintenance interleaved, same answer
+      mmDecisionsSql),
 
     // The admission-funnel card: per (day, stage) verdict mix straight
     // off the pinned decisions — the per-modality disclosure a steward
     // reads before trusting the combined verdict (model-sized; no
     // corpus scan).
-    "q555_mm_funnel" -> ((s, dir) =>
+    Gate("q555_mm_funnel", (s, dir) =>
       MultiDay.allDecisions4(s, mmStream(s, dir)._1)
         .selectExpr("day",
           "stack(5, 'aud', d_aud, 'lex', d_lex, 'overall', decision, " +
             "'ph', d_ph, 'sem', d_sem) AS (stage, verdict)")
         .groupBy("day", "stage", "verdict")
         .agg(count(lit(1)).as("n_docs"))
-        .orderBy("day", "stage", "verdict")),
+        .orderBy("day", "stage", "verdict"), oracle = {
+      val days = (1 to 3).flatMap { k =>
+        Seq(s"SELECT $k AS day, 'lex' AS stage, d_lex AS verdict FROM fin$k",
+          s"SELECT $k, 'sem', d_sem FROM fin$k",
+          s"SELECT $k, 'ph', d_ph FROM fin$k",
+          s"SELECT $k, 'aud', d_aud FROM fin$k",
+          s"SELECT $k, 'overall', decision FROM fin$k")
+      }.mkString("\n  UNION ALL ")
+      s"""WITH $mmCtes
+         |SELECT day, stage, verdict,
+         |  CAST(count(*) AS BIGINT) AS n_docs
+         |FROM (
+         |  $days)
+         |GROUP BY 1, 2, 3
+         |ORDER BY day, stage, verdict""".stripMargin
+    }),
 
     // IVF search served off the occupancy-refit index — the cutover
     // leaves a serving artifact (same queries/k/nprobe as q525).
-    "q556_refit_search" -> ((s, dir) =>
+    Gate("q556_refit_search", (s, dir) =>
       SemIndex.search(s, refitLife(s, dir)._1,
           t(s, dir, "embeddings")
             .where(pmod(col("vec_id"), lit(8L)) === 6L)
             .select("vec_id", "embedding"),
           k = 5, nprobe = 2)
-        .orderBy("qid", "rank")),
+        .orderBy("qid", "rank"), oracle =
+      // IVF retrieval SERVED off the refit index (the same queries as
+      // q525, nprobe = 2, against the ⌈n/16⌉-cell re-bin): the
+      // maintenance cutover leaves a fully serving search artifact.
+      s"""WITH ${Curation11.semCtes},
+         |$refitCtes,
+         |qs AS (SELECT vec_id AS qid, e,
+         |    sqrt(list_sum(list_transform(e, x -> x * x))) AS qn
+         |  FROM v WHERE vec_id % 8 = 6),
+         |qc AS (SELECT qid, cell FROM (
+         |  SELECT qs.qid, snr.sid AS cell,
+         |      row_number() OVER (PARTITION BY qs.qid
+         |      ORDER BY list_sum(list_transform(range(64),
+         |        i -> qs.e[i+1] * se[i+1])) / (qs.qn * snrm) DESC, sid)
+         |      AS rn
+         |  FROM qs, snr) WHERE rn <= 2),
+         |sc AS (SELECT q.qid, x.vec_id,
+         |    list_sum(list_transform(range(64), i -> q.e[i+1] * x.e[i+1]))
+         |      / (q.qn * x.nrm) AS cos
+         |  FROM qc JOIN qs q USING (qid)
+         |    JOIN cellr x ON x.cell = qc.cell)
+         |SELECT qid, CAST(rank AS INT) AS rank, vec_id,
+         |  round(cos, 6) + 0.0 AS cos FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY qid
+         |    ORDER BY cos DESC, vec_id) AS rank FROM sc)
+         |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin),
 
-    "q546_audio_index_decisions" -> ((s, dir) =>
-      audioLife(s, dir)._2.orderBy("day", "media_id")),
+    Gate("q546_audio_index_decisions", (s, dir) =>
+      audioLife(s, dir)._2.orderBy("day", "media_id"), oracle =
+      s"""WITH $audioLifeCtes
+         |SELECT * FROM (
+         |  SELECT 1 AS day, doc_id AS media_id, decision FROM decBa1
+         |  UNION ALL SELECT 2, doc_id, decision FROM decBa2)
+         |ORDER BY day, media_id""".stripMargin),
 
-    "q547_audio_index_card" -> ((s, dir) =>
-      PhashIndex.indexCard(s, audioLife(s, dir)._1).orderBy("band")))
+    Gate("q547_audio_index_card", (s, dir) =>
+      PhashIndex.indexCard(s, audioLife(s, dir)._1).orderBy("band"), oracle =
+      s"""WITH $audioLifeCtes
+         |SELECT band, CAST(sum(cnt) AS BIGINT) AS n_rows,
+         |  CAST(count(*) AS BIGINT) AS n_buckets,
+         |  CAST(max(cnt) AS BIGINT) AS max_bucket
+         |FROM (SELECT band, bv, count(*) AS cnt FROM yabands
+         |  WHERE doc_id IN (SELECT doc_id FROM idxa3)
+         |  GROUP BY 1, 2)
+         |GROUP BY band ORDER BY band""".stripMargin))
 
   // ---- oracle: the AUDIO fingerprint, re-derived byte-by-byte ------
 
@@ -1017,249 +1219,4 @@ object Curation12 extends Gates {
       |  UNION ALL SELECT 'media', 'n_assets',
       |    (SELECT count(*) FROM pdocs) + 3)
       |ORDER BY modality, metric""".stripMargin
-
-  val oracles: Map[String, String] = Map(
-
-    "q542_mm_stream_decisions" -> mmDecisionsSql,
-
-    // two delivery engines, one answer
-    "q545_mm_batch_decisions" -> mmDecisionsSql,
-
-    // third path: maintenance interleaved, same answer
-    "q558_mm_maintained_decisions" -> mmDecisionsSql,
-
-    "q543_mm_stream_cards" ->
-      s"""WITH $mmCtes,
-         |$mmCardAdmCtes
-         |SELECT *, 'mm1,mm2,mm3' AS ledger_days, '1' AS replay_stable
-         |FROM (
-         |$mmCardRows""".stripMargin,
-
-    "q544_media_hashes" ->
-      s"""WITH $mmCtes
-         |SELECT p.doc_id AS media_id,
-         |  r0, r1, r2, r3, r4, r5, r6, r7,
-         |  a0, a1, a2, a3, a4, a5, a6, a7
-         |FROM xrb2 p JOIN xarb a ON a.doc_id = p.doc_id
-         |WHERE p.doc_id IN (SELECT doc_id FROM pdocs)
-         |  OR p.doc_id IN (SELECT sdoc FROM sm)
-         |ORDER BY media_id""".stripMargin,
-
-    "q559_mm6_decisions" ->
-      s"""WITH $mm6Ctes
-         |$mm6DecisionRows""".stripMargin,
-
-    // second engine path, same composed six-stage answer
-    "q561_mm6_stream_decisions" ->
-      s"""WITH $mm6Ctes
-         |$mm6DecisionRows""".stripMargin,
-
-    "q562_mm6_stream_cards" ->
-      s"""WITH $mm6Ctes,
-         |lcorp63 AS (SELECT doc_id, text FROM lcorp62
-         |  UNION ALL SELECT p.doc_id, p.text FROM pool6 p
-         |    JOIN madm62 USING (doc_id))
-         |SELECT *, 'mm1,mm2' AS ledger_days, '1' AS replay_stable
-         |FROM (
-         |$mm6CardRows""".stripMargin,
-
-    "q560_mm6_cards" ->
-      s"""WITH $mm6Ctes,
-         |lcorp63 AS (SELECT doc_id, text FROM lcorp62
-         |  UNION ALL SELECT p.doc_id, p.text FROM pool6 p
-         |    JOIN madm62 USING (doc_id))
-         |SELECT * FROM (
-         |$mm6CardRows""".stripMargin,
-
-    "q555_mm_funnel" -> {
-      val days = (1 to 3).flatMap { k =>
-        Seq(s"SELECT $k AS day, 'lex' AS stage, d_lex AS verdict FROM fin$k",
-          s"SELECT $k, 'sem', d_sem FROM fin$k",
-          s"SELECT $k, 'ph', d_ph FROM fin$k",
-          s"SELECT $k, 'aud', d_aud FROM fin$k",
-          s"SELECT $k, 'overall', decision FROM fin$k")
-      }.mkString("\n  UNION ALL ")
-      s"""WITH $mmCtes
-         |SELECT day, stage, verdict,
-         |  CAST(count(*) AS BIGINT) AS n_docs
-         |FROM (
-         |  $days)
-         |GROUP BY 1, 2, 3
-         |ORDER BY day, stage, verdict""".stripMargin
-    },
-
-    "q546_audio_index_decisions" ->
-      s"""WITH $audioLifeCtes
-         |SELECT * FROM (
-         |  SELECT 1 AS day, doc_id AS media_id, decision FROM decBa1
-         |  UNION ALL SELECT 2, doc_id, decision FROM decBa2)
-         |ORDER BY day, media_id""".stripMargin,
-
-    "q547_audio_index_card" ->
-      s"""WITH $audioLifeCtes
-         |SELECT band, CAST(sum(cnt) AS BIGINT) AS n_rows,
-         |  CAST(count(*) AS BIGINT) AS n_buckets,
-         |  CAST(max(cnt) AS BIGINT) AS max_bucket
-         |FROM (SELECT band, bv, count(*) AS cnt FROM yabands
-         |  WHERE doc_id IN (SELECT doc_id FROM idxa3)
-         |  GROUP BY 1, 2)
-         |GROUP BY band ORDER BY band""".stripMargin,
-
-    // The occupancy card over the grown q521 index (idx3) — exact
-    // integer arithmetic, trigger genuinely firing at target 16.
-    "q548_sem_occupancy" ->
-      s"""WITH ${Curation11.semCtes},
-         |per AS (SELECT cell, CAST(count(*) AS BIGINT) AS n_vecs
-         |  FROM idx3 GROUP BY cell),
-         |tot AS (SELECT CAST(sum(n_vecs) AS BIGINT) AS n_total,
-         |    CAST(count(*) AS BIGINT) AS n_cells FROM per)
-         |SELECT cell, n_vecs, n_total, n_cells,
-         |  n_total // n_cells AS mean_occ,
-         |  CAST(16 AS BIGINT) AS target_occ,
-         |  CAST(CASE WHEN n_total > 16 * n_cells THEN 1 ELSE 0 END
-         |    AS BIGINT) AS refit_needed,
-         |  (n_total + 15) // 16 AS new_ncells
-         |FROM per, tot ORDER BY cell""".stripMargin,
-
-    // The fired refit at the DYNAMIC ⌈n/16⌉ cell count — the q535
-    // re-derivation with the cell count computed from the data.
-    "q549_sem_refit_fired" ->
-      s"""WITH ${Curation11.semCtes},
-         |$refitCtes
-         |SELECT cell, count(*) AS n_vecs,
-         |  min(vec_id) AS min_vec, max(vec_id) AS max_vec,
-         |  bit_xor(${h60Sql("CAST(vec_id AS VARCHAR)")}) AS checksum,
-         |  (SELECT k FROM kc) AS n_cells_after
-         |FROM cellr GROUP BY cell ORDER BY cell""".stripMargin,
-
-    // IVF retrieval SERVED off the refit index (the same queries as
-    // q525, nprobe = 2, against the ⌈n/16⌉-cell re-bin): the
-    // maintenance cutover leaves a fully serving search artifact.
-    "q556_refit_search" ->
-      s"""WITH ${Curation11.semCtes},
-         |$refitCtes,
-         |qs AS (SELECT vec_id AS qid, e,
-         |    sqrt(list_sum(list_transform(e, x -> x * x))) AS qn
-         |  FROM v WHERE vec_id % 8 = 6),
-         |qc AS (SELECT qid, cell FROM (
-         |  SELECT qs.qid, snr.sid AS cell,
-         |      row_number() OVER (PARTITION BY qs.qid
-         |      ORDER BY list_sum(list_transform(range(64),
-         |        i -> qs.e[i+1] * se[i+1])) / (qs.qn * snrm) DESC, sid)
-         |      AS rn
-         |  FROM qs, snr) WHERE rn <= 2),
-         |sc AS (SELECT q.qid, x.vec_id,
-         |    list_sum(list_transform(range(64), i -> q.e[i+1] * x.e[i+1]))
-         |      / (q.qn * x.nrm) AS cos
-         |  FROM qc JOIN qs q USING (qid)
-         |    JOIN cellr x ON x.cell = qc.cell)
-         |SELECT qid, CAST(rank AS INT) AS rank, vec_id,
-         |  round(cos, 6) + 0.0 AS cos FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY qid
-         |    ORDER BY cos DESC, vec_id) AS rank FROM sc)
-         |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-
-    // The four cards after TTL'ing day 1's admissions: retained =
-    // snapshot + day-2 + day-3 admissions; the lexical hash set
-    // collapses to the retained docs' distinct hashes (stillHeld
-    // semantics); the media artifact keeps every decoded asset.
-    "q550_mm_ttl_cards" ->
-      s"""WITH $mmCtes,
-         |$ttlRetCte
-         |SELECT * FROM (
-         |$ttlCardRows""".stripMargin,
-
-    // The q550 card with the TTL ledger facts pinned: ledger ==
-    // [mm1, mm2, mm3, ttl1] exactly, replayed TTL a no-op.
-    "q568_mm_ttl_ledger" ->
-      s"""WITH $mmCtes,
-         |$ttlRetCte
-         |SELECT *, 'mm1,mm2,mm3,ttl1' AS ledger_days,
-         |  '1' AS replay_stable
-         |FROM (
-         |$ttlCardRows""".stripMargin,
-
-    // Day-1 re-offer against the retained indexes: the day-1 stage
-    // machinery verbatim, index sets = snapshot + day-2/-3 admissions.
-    "q551_mm_ttl_reoffer" ->
-      s"""WITH $mmCtes,
-         |lcorpT AS MATERIALIZED (SELECT doc_id, text FROM pdocs
-         |  WHERE doc_id % 8 >= 4
-         |  UNION ALL SELECT d.doc_id, d.text FROM pdocs d
-         |    JOIN madm2 USING (doc_id)
-         |  UNION ALL SELECT d.doc_id, d.text FROM pdocs d
-         |    JOIN madm3 USING (doc_id)),
-         |${Curation.dedupDecisionCtes("lcorpT", "lb1", "LT")},
-         |ixsemT AS (SELECT cell, vec_id, e, nrm FROM ixms
-         |  UNION ALL SELECT cell, vec_id, e, nrm FROM ixs2
-         |    WHERE vec_id IN (SELECT doc_id FROM madm2)
-         |  UNION ALL SELECT cell, vec_id, e, nrm FROM ixs3
-         |    WHERE vec_id IN (SELECT doc_id FROM madm3)),
-         |${semDay4("sT", "ixsemT", "ixs1")},
-         |idxPT AS (SELECT doc_id FROM pdocs WHERE doc_id % 8 >= 4
-         |  UNION ALL SELECT doc_id FROM madm2
-         |  UNION ALL SELECT doc_id FROM madm3),
-         |${bandedDay("PT", "xpbands", "xbits", imgJoin, "dP1", "idxPT",
-            "phash")},
-         |${bandedDay("AT", "xabands", "xabits", audJoin, "dP1", "idxPT",
-            "audio")}
-         |SELECT l.doc_id, l.decision AS d_lex, s.decision AS d_sem,
-         |  p.decision AS d_ph, a.decision AS d_aud,
-         |  CASE WHEN l.decision <> 'admitted' THEN l.decision
-         |    WHEN s.decision <> 'admitted' THEN s.decision
-         |    WHEN p.decision <> 'admitted' THEN p.decision
-         |    WHEN a.decision <> 'admitted' THEN a.decision
-         |    ELSE 'admitted' END AS decision
-         |FROM decisionsLT l JOIN decSsT s ON s.vec_id = l.doc_id
-         |  JOIN decBPT p ON p.doc_id = l.doc_id
-         |  JOIN decBAT a ON a.doc_id = l.doc_id
-         |ORDER BY l.doc_id""".stripMargin,
-
-    // TTL manifest: shard manifest over the retained N-day corpus
-    // (admitted days >= 2 only — snapshot + day 1 aged out).
-    "q552_ttl_manifest" ->
-      s"""WITH ${Curation9.nDayCtes},
-         |$ttlCorpusCte,
-         |${shardCte("m", "corpusT")}
-         |$manifestCols
-         |FROM m GROUP BY shard ORDER BY shard""".stripMargin,
-
-    // The rebuilt tape over the retained corpus (q528's contract at
-    // the TTL boundary).
-    "q553_ttl_tape" ->
-      s"""WITH ${Curation9.nDayCtes},
-         |$ttlCorpusCte,
-         |${tapeSql("corpusT")}""".stripMargin,
-
-    // Size-capped retention: the horizon is COMPUTED from the per-day
-    // token masses (smallest k whose tail mass fits the cap), then
-    // the manifest is the q552 shape at that horizon.
-    "q557_cap_manifest" ->
-      s"""WITH ${Curation9.nDayCtes},
-         |$capCtes,
-         |${shardCte("mC", "corpusC")}
-         |$manifestCols,
-         |  (SELECT k FROM keepk) AS keep_from_day
-         |FROM mC GROUP BY shard ORDER BY shard""".stripMargin,
-
-    // TTL re-offer: the oldest victim's text readmits (unless a
-    // retained doc still carries it), the surviving control stays
-    // dup_exact_corpus — the q518 shape at the TTL boundary.
-    "q554_ttl_reoffer" ->
-      s"""WITH ${Curation9.nDayCtes},
-         |$ttlCorpusCte,
-         |victT AS (SELECT doc_id, text FROM grown4
-         |  WHERE doc_id NOT IN (SELECT doc_id FROM corpusT)),
-         |batchT AS (
-         |  SELECT CAST(9900001 AS BIGINT) AS doc_id, text FROM victT
-         |    WHERE doc_id = (SELECT min(doc_id) FROM victT)
-         |  UNION ALL SELECT 9900002, text FROM corpusT
-         |    WHERE doc_id = (SELECT min(doc_id) FROM corpusT)),
-         |${Curation.dedupDecisionCtes("corpusT", "batchT", "T")},
-         |${Curation8.postGateCtes("T")}
-         |SELECT doc_id, decision,
-         |  CASE WHEN decision = 'admitted'
-         |    THEN CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
-         |      % ${graft.ops.CurationDay.NShards} AS INT) END AS shard
-         |FROM finalT ORDER BY doc_id""".stripMargin)
 }

@@ -116,12 +116,12 @@ object Curation13 extends Gates {
     (a, noop, days, horizon)
   }
 
-  val queries: Map[String, QFn] = Map(
+  lazy val gates: Seq[Gate] = Seq(
 
     // The six-stage calendar's admission-funnel card: per (day, stage,
     // verdict) counts straight off the pinned decisions — the q555
     // disclosure at all six stages plus the combined verdict.
-    "q580_mm6_cal_funnel" -> ((s, dir) =>
+    Gate("q580_mm6_cal_funnel", (s, dir) =>
       graft.ops.MultiDay.allDecisions6Upto(s, mm6Cal(s, dir), 3)
         .selectExpr("day",
           "stack(7, 'aud', d_aud, 'contam', d_contam, 'lex', d_lex, " +
@@ -129,49 +129,96 @@ object Curation13 extends Gates {
             "'sem', d_sem) AS (stage, verdict)")
         .groupBy("day", "stage", "verdict")
         .agg(count(lit(1)).as("n_docs"))
-        .orderBy("day", "stage", "verdict")),
+        .orderBy("day", "stage", "verdict"), oracle =
+      // The six-stage calendar funnel: the same stage stack re-derived
+      // from the composed fin61/fin62/fin63 frames.
+      {
+        val days = (1 to 3).flatMap { k =>
+          Seq(s"SELECT $k AS day, 'lex' AS stage, d_lex AS verdict " +
+              s"FROM fin6$k",
+            s"SELECT $k, 'sem', d_sem FROM fin6$k",
+            s"SELECT $k, 'ph', d_ph FROM fin6$k",
+            s"SELECT $k, 'aud', d_aud FROM fin6$k",
+            s"SELECT $k, 'contam', d_contam FROM fin6$k",
+            s"SELECT $k, 'qual', d_qual FROM fin6$k",
+            s"SELECT $k, 'overall', decision FROM fin6$k")
+        }.mkString("\n  UNION ALL ")
+        s"""WITH $mm6CalCtes
+           |SELECT day, stage, verdict,
+           |  CAST(count(*) AS BIGINT) AS n_docs
+           |FROM (
+           |  $days)
+           |GROUP BY 1, 2, 3
+           |ORDER BY day, stage, verdict""".stripMargin
+      }),
 
     // The streamed size-cap slot: the post-cap manifest at the PINNED
     // horizon, with the calendar facts (ledger rows for the cap slot
     // and its done row; replayed control a no-op).
-    "q581_cap_stream_manifest" -> ((s, dir) => {
+    Gate("q581_cap_stream_manifest", (s, dir) => {
       val (a, noop, days, horizon) = capStream(s, dir)
       s.read.parquet(a.manifestRetract(1))
         .withColumn("keep_from_day", lit(horizon.toLong))
         .withColumn("ledger_days", lit(days.mkString(",")))
         .withColumn("replay_stable", lit(if (noop) "1" else "0"))
         .orderBy("shard")
-    }),
+    }, oracle =
+      // The streamed size-cap slot: the q557 manifest re-derivation plus
+      // the calendar facts.
+      s"""WITH ${Curation9.nDayCtes},
+         |${Curation12.capCtes},
+         |${Curation12.shardCte("mC", "corpusC")}
+         |${Curation12.manifestCols},
+         |  (SELECT k FROM keepk) AS keep_from_day,
+         |  'cap4,cap4_done,day1,day2,day3,day4' AS ledger_days,
+         |  '1' AS replay_stable
+         |FROM mC GROUP BY shard ORDER BY shard""".stripMargin),
 
     // The tape the cap slot rebuilt in-stream, over the capped corpus.
-    "q582_cap_stream_tape" -> ((s, dir) => {
+    Gate("q582_cap_stream_tape", (s, dir) => {
       val a = capStream(s, dir)._1
       graft.ops.Pack.fullLayout(s, a, 0).orderBy("doc_id")
-    }),
+    }, oracle =
+      // The tape the cap slot rebuilt, over the capped corpus.
+      s"""WITH ${Curation9.nDayCtes},
+         |${Curation12.capCtes},
+         |${Curation12.tapeSql("corpusC")}""".stripMargin),
 
     // The streamed curation retention slot: the post-TTL manifest
     // (the q552 shape) with the calendar facts pinned — ledger holds
     // the four admission days + the expiry row + the slot's done row,
     // and the replayed control added nothing.
-    "q576_cur_ttl_stream_manifest" -> ((s, dir) => {
+    Gate("q576_cur_ttl_stream_manifest", (s, dir) => {
       val (a, noop, days) = curTtlStream(s, dir)
       s.read.parquet(a.manifestRetract(1))
         .withColumn("ledger_days", lit(days.mkString(",")))
         .withColumn("replay_stable", lit(if (noop) "1" else "0"))
         .orderBy("shard")
-    }),
+    }, oracle =
+      // q552's manifest re-derivation + the streamed calendar facts.
+      s"""WITH ${Curation9.nDayCtes},
+         |${Curation12.ttlCorpusCte},
+         |${Curation12.shardCte("m", "corpusT")}
+         |${Curation12.manifestCols},
+         |  'day1,day2,day3,day4,ttl4,ttl4_done' AS ledger_days,
+         |  '1' AS replay_stable
+         |FROM m GROUP BY shard ORDER BY shard""".stripMargin),
 
     // The tape the slot rebuilt in-stream (the q553 shape).
-    "q577_cur_ttl_stream_tape" -> ((s, dir) => {
+    Gate("q577_cur_ttl_stream_tape", (s, dir) => {
       val a = curTtlStream(s, dir)._1
       graft.ops.Pack.fullLayout(s, a, 0).orderBy("doc_id")
-    }),
+    }, oracle =
+      // q553's rebuilt-tape re-derivation over the retained corpus.
+      s"""WITH ${Curation9.nDayCtes},
+         |${Curation12.ttlCorpusCte},
+         |${Curation12.tapeSql("corpusT")}""".stripMargin),
 
     // The UNDER-CAP no-op (the r12 ADVICE fix made gateable): a cap
     // covering the whole corpus — snapshot included — commits as a
     // ledgered no-op; the day-4 manifest is untouched, nothing
     // expires, the ledger pins both cap slots.
-    "q578_cap_noop_manifest" -> ((s, dir) => {
+    Gate("q578_cap_noop_manifest", (s, dir) => {
       val a = Curation12.capLifeArtifacts(s, dir)
       s.read.parquet(a.manifestDay(graft.ops.CurationNDay.NDays))
         .withColumn("keep_from_day", lit(0L))
@@ -179,107 +226,170 @@ object Curation13 extends Gates {
           lit(graft.core.Ledger.ids(s, a.ledger)
             .mkString(",")))
         .orderBy("shard")
-    }),
+    }, oracle =
+      // The under-cap manifest: the q552 shape over the FULL corpus
+      // (grown4 — snapshot + every admitted day), keep_from_day = 0,
+      // both cap slots ledgered.
+      s"""WITH ${Curation9.nDayCtes},
+         |${Curation12.shardCte("m", "grown4")}
+         |${Curation12.manifestCols},
+         |  CAST(0 AS BIGINT) AS keep_from_day,
+         |  'cap0,cap1,day1,day2,day3,day4' AS ledger_days
+         |FROM m GROUP BY shard ORDER BY shard""".stripMargin),
 
     // The six-stage calendar's pinned verdicts: the q559 two days
     // bit-identical, then the ttl2 slot, then the witness day 3 — the
     // post-TTL re-offer re-admits, the day-2 clone shows all four
     // retained dups, the post-gate rejection fires again, and the
     // same-day duplicate loses every within-batch pass.
-    "q572_mm6_cal_decisions" -> ((s, dir) =>
+    Gate("q572_mm6_cal_decisions", (s, dir) =>
       graft.ops.MultiDay.allDecisions6Upto(s, mm6Cal(s, dir), 3)
-        .orderBy("day", "doc_id")),
+        .orderBy("day", "doc_id"), oracle = mm6CalDecisionsSql),
 
     // Its index cards: every artifact counts snapshot + day-2 +
     // day-3 survivors (day 1 aged out mid-calendar).
-    "q573_mm6_cal_cards" -> ((s, dir) =>
+    Gate("q573_mm6_cal_cards", (s, dir) =>
       graft.ops.MultiDay.indexCards4(s, mm6Cal(s, dir))
-        .orderBy("modality", "metric")),
+        .orderBy("modality", "metric"), oracle = mm6CalCardsSql("")),
 
     // The STREAMED six-stage calendar — same oracle as q572, plus the
     // recovery facts (ledger exactly [mm1, mm2, mm3, ttl2]; replayed
     // control added nothing).
-    "q574_mm6_cal_stream_decisions" -> ((s, dir) =>
+    Gate("q574_mm6_cal_stream_decisions", (s, dir) =>
       graft.ops.MultiDay.allDecisions6Upto(s, mm6CalStream(s, dir)._1, 3)
-        .orderBy("day", "doc_id")),
+        .orderBy("day", "doc_id"), oracle =
+      // two engines, one three-day-with-retention answer
+      mm6CalDecisionsSql),
 
-    "q575_mm6_cal_stream_cards" -> ((s, dir) => {
+    Gate("q575_mm6_cal_stream_cards", (s, dir) => {
       val (p, noop, days) = mm6CalStream(s, dir)
-      graft.ops.MultiDay.indexCards4(s, p)
-        .withColumn("ledger_days", lit(days.mkString(",")))
-        .withColumn("replay_stable", lit(if (noop) "1" else "0"))
-        .orderBy("modality", "metric")
-    }),
+      Curation12.ledgerCards(graft.ops.MultiDay.indexCards4(s, p), noop, days)
+    }, oracle = mm6CalCardsSql(
+      ", 'mm1,mm2,mm3,ttl2' AS ledger_days, '1' AS replay_stable")),
 
     // The streamed calendar's pinned verdicts: days 1-2 as the plain
     // chain, day 3 admitted against the POST-TTL indexes — the
     // interleaved horizon modeled by one composed oracle.
-    "q569_mm_cal_decisions" -> ((s, dir) =>
+    Gate("q569_mm_cal_decisions", (s, dir) =>
       graft.ops.MultiDay.allDecisions4(s, mmCal(s, dir)._1)
-        .orderBy("day", "doc_id")),
+        .orderBy("day", "doc_id"), oracle = mmCalDecisionsSql),
 
     // Its index cards + calendar recovery facts: ledger exactly
     // [mm1, mm2, mm3, ttl2]; the replayed control added nothing.
-    "q570_mm_cal_cards" -> ((s, dir) => {
+    Gate("q570_mm_cal_cards", (s, dir) => {
       val (p, noop, days) = mmCal(s, dir)
-      graft.ops.MultiDay.indexCards4(s, p)
-        .withColumn("ledger_days", lit(days.mkString(",")))
-        .withColumn("replay_stable", lit(if (noop) "1" else "0"))
-        .orderBy("modality", "metric")
-    }),
+      Curation12.ledgerCards(graft.ops.MultiDay.indexCards4(s, p), noop, days)
+    }, oracle =
+      // Cards after the full calendar: retained = snapshot + day-2 +
+      // day-3 admissions (day 1 aged out BEFORE day 3 admitted); the
+      // media artifact keeps every decoded asset (decode-once outlives
+      // admission); ledger pins the ttl2 slot; replayed control no-op.
+      s"""WITH $mmCalCtes,
+         |retC AS MATERIALIZED (SELECT doc_id, text FROM lcorpR
+         |  UNION ALL SELECT d.doc_id, d.text FROM xdocs d
+         |    JOIN madmR ON madmR.doc_id = d.doc_id)
+         |SELECT *, 'mm1,mm2,mm3,ttl2' AS ledger_days,
+         |  '1' AS replay_stable
+         |FROM (
+         |  SELECT 'lexical' AS modality, 'n_hashes' AS metric,
+         |    CAST(count(DISTINCT md5(text)) AS BIGINT) AS value
+         |    FROM retC
+         |  UNION ALL SELECT 'lexical', 'n_band_rows',
+         |    4 * count(*) FROM retC
+         |  UNION ALL SELECT 'semantic', 'n_vecs', count(*) FROM retC
+         |  UNION ALL SELECT 'perceptual', 'n_hashes', count(*) FROM retC
+         |  UNION ALL SELECT 'perceptual', 'n_band_rows',
+         |    4 * count(*) FROM retC
+         |  UNION ALL SELECT 'audio', 'n_hashes', count(*) FROM retC
+         |  UNION ALL SELECT 'audio', 'n_band_rows',
+         |    4 * count(*) FROM retC
+         |  UNION ALL SELECT 'media', 'n_assets',
+         |    (SELECT count(*) FROM pdocs) + 3)
+         |ORDER BY modality, metric""".stripMargin),
 
     // The batch calendar — second engine path, same oracle as q569.
-    "q571_mm_cal_batch_decisions" -> ((s, dir) =>
+    Gate("q571_mm_cal_batch_decisions", (s, dir) =>
       graft.ops.MultiDay.allDecisions4(s, mmCalBatch(s, dir))
-        .orderBy("day", "doc_id")),
+        .orderBy("day", "doc_id"), oracle =
+      // two delivery engines, one interleaved-calendar answer
+      mmCalDecisionsSql),
 
     // Image top-5: banded candidates, exact-Hamming rank off the
     // stored signatures.
-    "q563_phash_search" -> ((s, dir) => {
+    Gate("q563_phash_search", (s, dir) => {
       val (pi, _, qi, _) = searchLife(s, dir)
       PhashIndex.search(s, pi, qi, 5).orderBy("qid", "rank")
-    }),
+    }, oracle = searchSql(imgSearchCtes)),
 
     // Recall@5 of the banded image search vs exact brute force over
     // the same index — the planted distance-0 pair partners must all
     // be surfaced.
-    "q564_phash_search_recall" -> ((s, dir) => {
+    Gate("q564_phash_search_recall", (s, dir) => {
       val (pi, _, qi, _) = searchLife(s, dir)
       PhashIndex.searchRecall(s, pi, qi, 5).orderBy("qid")
-    }),
+    }, oracle =
+      recallSql(imgSearchCtes, "bits", "y.cy = x.cy AND y.cx = x.cx")),
 
     // The SAME search machinery over the audio index.
-    "q565_audio_search" -> ((s, dir) => {
+    Gate("q565_audio_search", (s, dir) => {
       val (_, pa, _, qa) = searchLife(s, dir)
       PhashIndex.search(s, pa, qa, 5).orderBy("qid", "rank")
-    }),
+    }, oracle = searchSql(audSearchCtes)),
 
-    "q566_audio_search_recall" -> ((s, dir) => {
+    Gate("q566_audio_search_recall", (s, dir) => {
       val (_, pa, _, qa) = searchLife(s, dir)
       PhashIndex.searchRecall(s, pa, qa, 5).orderBy("qid")
-    }),
+    }, oracle =
+      recallSql(audSearchCtes, "abits", "y.i = x.i")),
 
     // The banding design curve — pure closed-form arithmetic, no
     // table input (the disclosure the PhashIndex docstring cites).
-    "q567_banding_curve" -> ((s, dir) =>
-      PhashIndex.designCurve(s).orderBy("dist")),
+    Gate("q567_banding_curve", (s, dir) =>
+      PhashIndex.designCurve(s).orderBy("dist"), oracle =
+      // Exact binomials by the C(n,d+1) = C(n,d)(n−d)/(d+1) integer
+      // recurrence in HUGEINT; inclusion–exclusion over clean bands.
+      s"""WITH RECURSIVE binom(n, d, v) AS (
+         |  SELECT n, 0, CAST(1 AS HUGEINT)
+         |    FROM (VALUES (64), (48), (32), (16), (0)) t(n)
+         |  UNION ALL
+         |  SELECT n, d + 1, v * (n - d) // (d + 1) FROM binom
+         |    WHERE d < n),
+         |ds AS (SELECT unnest(range(0, 65)) AS d)
+         |SELECT CAST(ds.d AS BIGINT) AS dist,
+         |  CAST(((4 * coalesce(b48.v, 0) - 6 * coalesce(b32.v, 0)
+         |    + 4 * coalesce(b16.v, 0) - coalesce(b0.v, 0)) * 1000000)
+         |    // b64.v AS BIGINT) AS collide_ppm
+         |FROM ds
+         |JOIN binom b64 ON b64.n = 64 AND b64.d = ds.d
+         |LEFT JOIN binom b48 ON b48.n = 48 AND b48.d = ds.d
+         |LEFT JOIN binom b32 ON b32.n = 32 AND b32.d = ds.d
+         |LEFT JOIN binom b16 ON b16.n = 16 AND b16.d = ds.d
+         |LEFT JOIN binom b0 ON b0.n = 0 AND b0.d = ds.d
+         |ORDER BY dist""".stripMargin),
 
     // The MEASURED candidate rate per true Hamming distance over the
     // fixture's image signatures — the empirical curve published next
     // to q567's theory (d <= 3 must read 1e6 ppm in both).
-    "q579_banding_measured" -> ((s, dir) => {
+    Gate("q579_banding_measured", (s, dir) => {
       val (pi, _, qi, _) = searchLife(s, dir)
       PhashIndex.bandingMeasured(s, pi, qi).orderBy("dist")
-    }),
+    }, oracle =
+      // Measured banding curve: all (query, index) pairs' exact
+      // distances, candidacy = membership in the banded cS pair set.
+      s"""WITH $imgSearchCtes,
+         |${curveSql("bits x JOIN bits y ON y.cy = x.cy AND y.cx = x.cx",
+            "cS")}""".stripMargin),
 
     // The audio modality's measured curve — energy fingerprints are
     // MORE structured than dHashes, so its empirical decay differs
     // from both the theory and the image curve; publishing all three
     // is the complete banding disclosure.
-    "q583_banding_measured_audio" -> ((s, dir) => {
+    Gate("q583_banding_measured_audio", (s, dir) => {
       val (_, pa, _, qa) = searchLife(s, dir)
       PhashIndex.bandingMeasured(s, pa, qa).orderBy("dist")
-    }),
+    }, oracle =
+      s"""WITH $audSearchCtes,
+         |${curveSql("abits x JOIN abits y ON y.i = x.i", "cS")}""".stripMargin),
 
     // REJECT EVIDENCE — the steward's "who blocked this doc" query,
     // served off the SAME search path the indexes expose (q563's
@@ -288,7 +398,7 @@ object Curation13 extends Gates {
     // exact Hamming distance (guaranteed <= MaxDist: the blocking
     // member is still indexed). The admission ledger says WHAT was
     // decided; this discloses WHY.
-    "q584_mm6_reject_evidence" -> ((s, dir) => {
+    Gate("q584_mm6_reject_evidence", (s, dir) => {
       val p = Curation12.mm6(s, dir)
       val dec2 = s.read.parquet(p.decisionsDay(2))
       val ids2 = s.read.parquet(p.dropDay(2))
@@ -307,22 +417,81 @@ object Curation13 extends Gates {
         .unionByName(ev("audio", "d_aud",
           graft.ops.MediaHashes.fetchAudio(s, p.media, ids2), p.aud))
         .orderBy("stage", "doc_id")
-    }),
+    }, oracle =
+      // Reject evidence: per perceptual corpus rejection, the nearest
+      // CURRENT-index partner (rank 1 by dist, id) — banded candidates
+      // then exact Hamming, over the post-day-2 index id sets.
+      {
+        def ev(stage: String, decCol: String, bands: String,
+               bits: String, bitJoin: String): String =
+          s"""rej_$stage AS (SELECT doc_id FROM fin62
+             |  WHERE $decCol = 'dup_${stage}_corpus'),
+             |cEv_$stage AS (SELECT DISTINCT a.doc_id AS qid,
+             |    b.doc_id AS cid
+             |  FROM $bands a JOIN $bands b ON a.band = b.band
+             |    AND a.bv = b.bv
+             |  WHERE a.doc_id IN (SELECT doc_id FROM rej_$stage)
+             |    AND b.doc_id IN (SELECT doc_id FROM idxCurE)),
+             |dEv_$stage AS (SELECT c.qid, c.cid,
+             |    CAST(sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)
+             |      AS BIGINT) AS dist
+             |  FROM cEv_$stage c JOIN $bits x ON x.doc_id = c.qid
+             |    JOIN $bits y ON y.doc_id = c.cid AND $bitJoin
+             |  GROUP BY 1, 2),
+             |top_$stage AS (SELECT '$stage' AS stage, qid AS doc_id,
+             |    cid AS partner_id, dist FROM (
+             |  SELECT *, row_number() OVER (PARTITION BY qid
+             |    ORDER BY dist, cid) AS rn FROM dEv_$stage)
+             |  WHERE rn = 1)""".stripMargin
+        s"""WITH $mm6CalCtes,
+           |idxCurE AS (SELECT doc_id FROM idxPL62
+           |  UNION ALL SELECT doc_id FROM madm62),
+           |${ev("phash", "d_ph", "xpb6", "xbi6",
+              "y.cy = x.cy AND y.cx = x.cx")},
+           |${ev("audio", "d_aud", "xab6", "xabi6", "y.i = x.i")}
+           |SELECT * FROM (
+           |  SELECT * FROM top_phash
+           |  UNION ALL SELECT * FROM top_audio)
+           |ORDER BY stage, doc_id""".stripMargin
+      }),
 
     // The ALTERNATIVE banding config's closed-form curve (8 bands ×
     // 8 bits over the same 64 signature bits) — the comparison a
     // deployment reads before picking 4×16: 8×8 is exact to d ≤ 7
     // but admits far more candidates at every larger distance (the
     // recall/cost trade the two curves quantify together).
-    "q586_banding_curve_8x8" -> ((s, dir) =>
+    Gate("q586_banding_curve_8x8", (s, dir) =>
       PhashIndex.designCurve(s, bands = 8, bitsPerBand = 8)
-        .orderBy("dist")),
+        .orderBy("dist"), oracle =
+      // The 8×8 config: same inclusion–exclusion machinery with C(8,j)
+      // coefficients and C(64−8j, d) clean-band terms, all from one
+      // recursive binomial CTE.
+      s"""WITH RECURSIVE binom(n, d, v) AS (
+         |  SELECT n, 0, CAST(1 AS HUGEINT)
+         |    FROM (VALUES (64), (56), (48), (40), (32), (24), (16),
+         |      (8), (0)) t(n)
+         |  UNION ALL
+         |  SELECT n, d + 1, v * (n - d) // (d + 1) FROM binom
+         |    WHERE d < n),
+         |ds AS (SELECT unnest(range(0, 65)) AS d),
+         |terms AS (SELECT ds.d,
+         |    CAST(CASE WHEN j.j % 2 = 1 THEN 1 ELSE -1 END AS HUGEINT)
+         |      * cb.v * coalesce(bn.v, 0) AS t
+         |  FROM ds
+         |  CROSS JOIN (SELECT unnest(range(1, 9)) AS j) j
+         |  JOIN binom cb ON cb.n = 8 AND cb.d = j.j
+         |  LEFT JOIN binom bn ON bn.n = 64 - 8 * j.j AND bn.d = ds.d),
+         |num AS (SELECT d, sum(t) AS nm FROM terms GROUP BY d)
+         |SELECT CAST(num.d AS BIGINT) AS dist,
+         |  CAST((num.nm * 1000000) // b64.v AS BIGINT) AS collide_ppm
+         |FROM num JOIN binom b64 ON b64.n = 64 AND b64.d = num.d
+         |ORDER BY dist""".stripMargin),
 
     // The semantic stage's reject evidence: the top-cosine partner in
     // the rejected doc's own cell (nprobe = 1 — the dedup probe's
     // regime), served off SemIndex.search. The day-1-admitted clone
     // sentinel reads back its source at cosine 1.
-    "q585_sem_reject_evidence" -> ((s, dir) => {
+    Gate("q585_sem_reject_evidence", (s, dir) => {
       val p = Curation12.mm6(s, dir)
       val dec2 = s.read.parquet(p.decisionsDay(2))
       val rej = dec2.where(col("d_sem") === "dup_sem_corpus")
@@ -334,9 +503,27 @@ object Curation13 extends Gates {
         .select(col("qid").as("doc_id"), col("vec_id").as("partner_id"),
           col("cos"))
         .orderBy("doc_id")
-    }))
+    }, oracle =
+      // Semantic reject evidence: top-cosine partner within the
+      // rejected doc's own cell over the post-day-2 cell index.
+      s"""WITH $mm6CalCtes,
+         |rejS AS (SELECT doc_id FROM fin62
+         |  WHERE d_sem = 'dup_sem_corpus'),
+         |ixcurE AS (SELECT cell, vec_id, e, nrm FROM ixsem62
+         |  UNION ALL SELECT cell, vec_id, e, nrm FROM ixsL62
+         |    WHERE vec_id IN (SELECT doc_id FROM madm62)),
+         |scEv AS (SELECT q.vec_id AS qid, x.vec_id,
+         |    list_sum(list_transform(range(64),
+         |      i -> q.e[i+1] * x.e[i+1])) / (q.nrm * x.nrm) AS cos
+         |  FROM ixsL62 q JOIN ixcurE x ON x.cell = q.cell
+         |  WHERE q.vec_id IN (SELECT doc_id FROM rejS))
+         |SELECT qid AS doc_id, vec_id AS partner_id,
+         |  round(cos, 6) + 0.0 AS cos FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY qid
+         |    ORDER BY cos DESC, vec_id) AS rn FROM scEv)
+         |WHERE rn = 1 ORDER BY doc_id""".stripMargin))
 
-  // ---- oracles ------------------------------------------------------
+  // ---- oracle fragments ---------------------------------------------
 
   /** The image candidates' bit match: the same cell of both hashes. */
   private[queries] val imgKey = "y.cy = x.cy\n      AND y.cx = x.cx"
@@ -590,241 +777,4 @@ object Curation13 extends Gates {
        |  UNION ALL SELECT 3, doc_id, d_lex, d_sem, d_ph, d_aud, decision
        |    FROM finR)
        |ORDER BY day, doc_id""".stripMargin
-
-  val oracles: Map[String, String] = Map(
-
-    // The six-stage calendar funnel: the same stage stack re-derived
-    // from the composed fin61/fin62/fin63 frames.
-    "q580_mm6_cal_funnel" -> {
-      val days = (1 to 3).flatMap { k =>
-        Seq(s"SELECT $k AS day, 'lex' AS stage, d_lex AS verdict " +
-            s"FROM fin6$k",
-          s"SELECT $k, 'sem', d_sem FROM fin6$k",
-          s"SELECT $k, 'ph', d_ph FROM fin6$k",
-          s"SELECT $k, 'aud', d_aud FROM fin6$k",
-          s"SELECT $k, 'contam', d_contam FROM fin6$k",
-          s"SELECT $k, 'qual', d_qual FROM fin6$k",
-          s"SELECT $k, 'overall', decision FROM fin6$k")
-      }.mkString("\n  UNION ALL ")
-      s"""WITH $mm6CalCtes
-         |SELECT day, stage, verdict,
-         |  CAST(count(*) AS BIGINT) AS n_docs
-         |FROM (
-         |  $days)
-         |GROUP BY 1, 2, 3
-         |ORDER BY day, stage, verdict""".stripMargin
-    },
-
-    // The streamed size-cap slot: the q557 manifest re-derivation plus
-    // the calendar facts.
-    "q581_cap_stream_manifest" ->
-      s"""WITH ${Curation9.nDayCtes},
-         |${Curation12.capCtes},
-         |${Curation12.shardCte("mC", "corpusC")}
-         |${Curation12.manifestCols},
-         |  (SELECT k FROM keepk) AS keep_from_day,
-         |  'cap4,cap4_done,day1,day2,day3,day4' AS ledger_days,
-         |  '1' AS replay_stable
-         |FROM mC GROUP BY shard ORDER BY shard""".stripMargin,
-
-    // The tape the cap slot rebuilt, over the capped corpus.
-    "q582_cap_stream_tape" ->
-      s"""WITH ${Curation9.nDayCtes},
-         |${Curation12.capCtes},
-         |${Curation12.tapeSql("corpusC")}""".stripMargin,
-
-    // q552's manifest re-derivation + the streamed calendar facts.
-    "q576_cur_ttl_stream_manifest" ->
-      s"""WITH ${Curation9.nDayCtes},
-         |${Curation12.ttlCorpusCte},
-         |${Curation12.shardCte("m", "corpusT")}
-         |${Curation12.manifestCols},
-         |  'day1,day2,day3,day4,ttl4,ttl4_done' AS ledger_days,
-         |  '1' AS replay_stable
-         |FROM m GROUP BY shard ORDER BY shard""".stripMargin,
-
-    // q553's rebuilt-tape re-derivation over the retained corpus.
-    "q577_cur_ttl_stream_tape" ->
-      s"""WITH ${Curation9.nDayCtes},
-         |${Curation12.ttlCorpusCte},
-         |${Curation12.tapeSql("corpusT")}""".stripMargin,
-
-    // The under-cap manifest: the q552 shape over the FULL corpus
-    // (grown4 — snapshot + every admitted day), keep_from_day = 0,
-    // both cap slots ledgered.
-    "q578_cap_noop_manifest" ->
-      s"""WITH ${Curation9.nDayCtes},
-         |${Curation12.shardCte("m", "grown4")}
-         |${Curation12.manifestCols},
-         |  CAST(0 AS BIGINT) AS keep_from_day,
-         |  'cap0,cap1,day1,day2,day3,day4' AS ledger_days
-         |FROM m GROUP BY shard ORDER BY shard""".stripMargin,
-
-    "q572_mm6_cal_decisions" -> mm6CalDecisionsSql,
-
-    // two engines, one three-day-with-retention answer
-    "q574_mm6_cal_stream_decisions" -> mm6CalDecisionsSql,
-
-    "q573_mm6_cal_cards" -> mm6CalCardsSql(""),
-
-    "q575_mm6_cal_stream_cards" -> mm6CalCardsSql(
-      ", 'mm1,mm2,mm3,ttl2' AS ledger_days, '1' AS replay_stable"),
-
-    "q569_mm_cal_decisions" -> mmCalDecisionsSql,
-
-    // two delivery engines, one interleaved-calendar answer
-    "q571_mm_cal_batch_decisions" -> mmCalDecisionsSql,
-
-    // Cards after the full calendar: retained = snapshot + day-2 +
-    // day-3 admissions (day 1 aged out BEFORE day 3 admitted); the
-    // media artifact keeps every decoded asset (decode-once outlives
-    // admission); ledger pins the ttl2 slot; replayed control no-op.
-    "q570_mm_cal_cards" ->
-      s"""WITH $mmCalCtes,
-         |retC AS MATERIALIZED (SELECT doc_id, text FROM lcorpR
-         |  UNION ALL SELECT d.doc_id, d.text FROM xdocs d
-         |    JOIN madmR ON madmR.doc_id = d.doc_id)
-         |SELECT *, 'mm1,mm2,mm3,ttl2' AS ledger_days,
-         |  '1' AS replay_stable
-         |FROM (
-         |  SELECT 'lexical' AS modality, 'n_hashes' AS metric,
-         |    CAST(count(DISTINCT md5(text)) AS BIGINT) AS value
-         |    FROM retC
-         |  UNION ALL SELECT 'lexical', 'n_band_rows',
-         |    4 * count(*) FROM retC
-         |  UNION ALL SELECT 'semantic', 'n_vecs', count(*) FROM retC
-         |  UNION ALL SELECT 'perceptual', 'n_hashes', count(*) FROM retC
-         |  UNION ALL SELECT 'perceptual', 'n_band_rows',
-         |    4 * count(*) FROM retC
-         |  UNION ALL SELECT 'audio', 'n_hashes', count(*) FROM retC
-         |  UNION ALL SELECT 'audio', 'n_band_rows',
-         |    4 * count(*) FROM retC
-         |  UNION ALL SELECT 'media', 'n_assets',
-         |    (SELECT count(*) FROM pdocs) + 3)
-         |ORDER BY modality, metric""".stripMargin,
-
-    "q563_phash_search" -> searchSql(imgSearchCtes),
-
-    "q564_phash_search_recall" ->
-      recallSql(imgSearchCtes, "bits", "y.cy = x.cy AND y.cx = x.cx"),
-
-    "q565_audio_search" -> searchSql(audSearchCtes),
-
-    "q566_audio_search_recall" ->
-      recallSql(audSearchCtes, "abits", "y.i = x.i"),
-
-    // Reject evidence: per perceptual corpus rejection, the nearest
-    // CURRENT-index partner (rank 1 by dist, id) — banded candidates
-    // then exact Hamming, over the post-day-2 index id sets.
-    "q584_mm6_reject_evidence" -> {
-      def ev(stage: String, decCol: String, bands: String,
-             bits: String, bitJoin: String): String =
-        s"""rej_$stage AS (SELECT doc_id FROM fin62
-           |  WHERE $decCol = 'dup_${stage}_corpus'),
-           |cEv_$stage AS (SELECT DISTINCT a.doc_id AS qid,
-           |    b.doc_id AS cid
-           |  FROM $bands a JOIN $bands b ON a.band = b.band
-           |    AND a.bv = b.bv
-           |  WHERE a.doc_id IN (SELECT doc_id FROM rej_$stage)
-           |    AND b.doc_id IN (SELECT doc_id FROM idxCurE)),
-           |dEv_$stage AS (SELECT c.qid, c.cid,
-           |    CAST(sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS dist
-           |  FROM cEv_$stage c JOIN $bits x ON x.doc_id = c.qid
-           |    JOIN $bits y ON y.doc_id = c.cid AND $bitJoin
-           |  GROUP BY 1, 2),
-           |top_$stage AS (SELECT '$stage' AS stage, qid AS doc_id,
-           |    cid AS partner_id, dist FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY qid
-           |    ORDER BY dist, cid) AS rn FROM dEv_$stage)
-           |  WHERE rn = 1)""".stripMargin
-      s"""WITH $mm6CalCtes,
-         |idxCurE AS (SELECT doc_id FROM idxPL62
-         |  UNION ALL SELECT doc_id FROM madm62),
-         |${ev("phash", "d_ph", "xpb6", "xbi6",
-            "y.cy = x.cy AND y.cx = x.cx")},
-         |${ev("audio", "d_aud", "xab6", "xabi6", "y.i = x.i")}
-         |SELECT * FROM (
-         |  SELECT * FROM top_phash
-         |  UNION ALL SELECT * FROM top_audio)
-         |ORDER BY stage, doc_id""".stripMargin
-    },
-
-    // Semantic reject evidence: top-cosine partner within the
-    // rejected doc's own cell over the post-day-2 cell index.
-    "q585_sem_reject_evidence" ->
-      s"""WITH $mm6CalCtes,
-         |rejS AS (SELECT doc_id FROM fin62
-         |  WHERE d_sem = 'dup_sem_corpus'),
-         |ixcurE AS (SELECT cell, vec_id, e, nrm FROM ixsem62
-         |  UNION ALL SELECT cell, vec_id, e, nrm FROM ixsL62
-         |    WHERE vec_id IN (SELECT doc_id FROM madm62)),
-         |scEv AS (SELECT q.vec_id AS qid, x.vec_id,
-         |    list_sum(list_transform(range(64),
-         |      i -> q.e[i+1] * x.e[i+1])) / (q.nrm * x.nrm) AS cos
-         |  FROM ixsL62 q JOIN ixcurE x ON x.cell = q.cell
-         |  WHERE q.vec_id IN (SELECT doc_id FROM rejS))
-         |SELECT qid AS doc_id, vec_id AS partner_id,
-         |  round(cos, 6) + 0.0 AS cos FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY qid
-         |    ORDER BY cos DESC, vec_id) AS rn FROM scEv)
-         |WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    "q583_banding_measured_audio" ->
-      s"""WITH $audSearchCtes,
-         |${curveSql("abits x JOIN abits y ON y.i = x.i", "cS")}""".stripMargin,
-
-    // Measured banding curve: all (query, index) pairs' exact
-    // distances, candidacy = membership in the banded cS pair set.
-    "q579_banding_measured" ->
-      s"""WITH $imgSearchCtes,
-         |${curveSql("bits x JOIN bits y ON y.cy = x.cy AND y.cx = x.cx",
-            "cS")}""".stripMargin,
-
-    // The 8×8 config: same inclusion–exclusion machinery with C(8,j)
-    // coefficients and C(64−8j, d) clean-band terms, all from one
-    // recursive binomial CTE.
-    "q586_banding_curve_8x8" ->
-      s"""WITH RECURSIVE binom(n, d, v) AS (
-         |  SELECT n, 0, CAST(1 AS HUGEINT)
-         |    FROM (VALUES (64), (56), (48), (40), (32), (24), (16),
-         |      (8), (0)) t(n)
-         |  UNION ALL
-         |  SELECT n, d + 1, v * (n - d) // (d + 1) FROM binom
-         |    WHERE d < n),
-         |ds AS (SELECT unnest(range(0, 65)) AS d),
-         |terms AS (SELECT ds.d,
-         |    CAST(CASE WHEN j.j % 2 = 1 THEN 1 ELSE -1 END AS HUGEINT)
-         |      * cb.v * coalesce(bn.v, 0) AS t
-         |  FROM ds
-         |  CROSS JOIN (SELECT unnest(range(1, 9)) AS j) j
-         |  JOIN binom cb ON cb.n = 8 AND cb.d = j.j
-         |  LEFT JOIN binom bn ON bn.n = 64 - 8 * j.j AND bn.d = ds.d),
-         |num AS (SELECT d, sum(t) AS nm FROM terms GROUP BY d)
-         |SELECT CAST(num.d AS BIGINT) AS dist,
-         |  CAST((num.nm * 1000000) // b64.v AS BIGINT) AS collide_ppm
-         |FROM num JOIN binom b64 ON b64.n = 64 AND b64.d = num.d
-         |ORDER BY dist""".stripMargin,
-
-    // Exact binomials by the C(n,d+1) = C(n,d)(n−d)/(d+1) integer
-    // recurrence in HUGEINT; inclusion–exclusion over clean bands.
-    "q567_banding_curve" ->
-      s"""WITH RECURSIVE binom(n, d, v) AS (
-         |  SELECT n, 0, CAST(1 AS HUGEINT)
-         |    FROM (VALUES (64), (48), (32), (16), (0)) t(n)
-         |  UNION ALL
-         |  SELECT n, d + 1, v * (n - d) // (d + 1) FROM binom
-         |    WHERE d < n),
-         |ds AS (SELECT unnest(range(0, 65)) AS d)
-         |SELECT CAST(ds.d AS BIGINT) AS dist,
-         |  CAST(((4 * coalesce(b48.v, 0) - 6 * coalesce(b32.v, 0)
-         |    + 4 * coalesce(b16.v, 0) - coalesce(b0.v, 0)) * 1000000)
-         |    // b64.v AS BIGINT) AS collide_ppm
-         |FROM ds
-         |JOIN binom b64 ON b64.n = 64 AND b64.d = ds.d
-         |LEFT JOIN binom b48 ON b48.n = 48 AND b48.d = ds.d
-         |LEFT JOIN binom b32 ON b32.n = 32 AND b32.d = ds.d
-         |LEFT JOIN binom b16 ON b16.n = 16 AND b16.d = ds.d
-         |LEFT JOIN binom b0 ON b0.n = 0 AND b0.d = ds.d
-         |ORDER BY dist""".stripMargin)
 }

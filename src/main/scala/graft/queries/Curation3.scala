@@ -75,13 +75,13 @@ object Curation3 extends Gates {
       |(CASE WHEN doc_id % 4 = 0 THEN '?id=' || CAST(doc_id % 10 AS VARCHAR)
       |      WHEN doc_id % 4 = 1 THEN '?a=1&b=2' ELSE '' END)""".stripMargin
 
-  val queries: Map[String, QFn] = Map(
+  lazy val gates: Seq[Gate] = Seq(
     // Incremental SQ8 maintenance: index built on the 80% snapshot, the
     // 20% delta folded in WITHOUT re-encoding the corpus (bounds-drift
     // check -> append with stored bounds, or rebuild if violated).
     // Either path must equal a full rebuild over snapshot+delta — so
     // this shares q326's full-corpus oracle verbatim.
-    "q348_sq8_index_append" -> ((s, dir) => {
+    Gate("q348_sq8_index_append", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val corpus = emb.where(pmod(col("vec_id"), lit(5L)) =!= 0)
       val delta = emb.where(pmod(col("vec_id"), lit(5L)) === 0)
@@ -97,26 +97,35 @@ object Curation3 extends Gates {
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
       } finally Curation2.deleteDir(idx)
-    }),
+    }, oracle = Curation2.sq8OracleSql("TRUE")),
 
     // URL dedup: canonicalize the messy raw forms, one hash agg per
     // canonical key; copies, collapsed raw spellings, min-id keeper.
-    "q349_url_dedup" -> ((s, dir) => {
+    Gate("q349_url_dedup", (s, dir) => {
       val docs = t(s, dir, "documents").withColumn("url", rawUrlCol)
       UrlOps.urlDedup(docs, "url", "doc_id").orderBy("canonical_url")
-    }),
+    }, oracle = q349OracleSql),
 
     // Per-registered-domain rollup: doc/URL counts, URL-dup rate, and
     // the exact quality mean — the frame domainCap budgets a crawl on.
-    "q350_domain_rollup" -> ((s, dir) => {
+    Gate("q350_domain_rollup", (s, dir) => {
       val docs = t(s, dir, "documents").withColumn("url", rawUrlCol)
       UrlOps.domainQualityRollup(docs, "url", "n_chars").orderBy("domain")
-    }),
+    }, oracle =
+      s"""WITH u AS (SELECT doc_id, n_chars,
+         |    lower(source) || '.com' AS domain, $canonUrlSql AS cu
+         |  FROM documents)
+         |SELECT domain, count(*) AS n_docs, count(DISTINCT cu) AS n_urls,
+         |  round(1.0 - CAST(count(DISTINCT cu) AS DOUBLE) / count(*), 6)
+         |    AS url_dup_rate,
+         |  round(CAST(sum(CAST(floor(CAST(n_chars AS DOUBLE) * 1e6 + 0.5)
+         |      AS BIGINT)) AS DOUBLE) / 1e6 / count(*), 6) AS mean_quality
+         |FROM u GROUP BY domain ORDER BY domain""".stripMargin),
 
     // Index compaction after appends: the append leaves small files;
     // compaction rewrites the codes into right-sized partitions and
     // must not change a single answer — shares q326's oracle too.
-    "q351_sq8_index_compact" -> ((s, dir) => {
+    Gate("q351_sq8_index_compact", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val corpus = emb.where(pmod(col("vec_id"), lit(5L)) =!= 0)
       val delta = emb.where(pmod(col("vec_id"), lit(5L)) === 0)
@@ -131,13 +140,13 @@ object Curation3 extends Gates {
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
       } finally Curation2.deleteDir(idx)
-    }),
+    }, oracle = Curation2.sq8OracleSql("TRUE")),
 
     // Dedup-index append: ingest batch1 into the persisted index, then
     // serve batch2's decisions from the appended index. The oracle
     // re-derives batch2's decisions against the GROWN corpus directly
     // (corpus' = %5 != 1) — proving appended index == rebuilt index.
-    "q352_dedup_index_append" -> ((s, dir) => {
+    Gate("q352_dedup_index_append", (s, dir) => {
       // exchange-bound consumer: spread opt-out (r14 regression +2.3 s)
       val docs = tp(s, dir, "documents")
       val corpus0 = docs.where(pmod(col("doc_id"), lit(5L)).isin(2L, 3L, 4L))
@@ -155,34 +164,80 @@ object Curation3 extends Gates {
           .orderBy("doc_id")
           .localCheckpoint(true)
       } finally Curation2.deleteDir(idx)
-    }),
+    }, oracle =
+      Curation.incrementalDedupOracle("doc_id % 5 <> 1", "doc_id % 5 = 1")),
 
     // Gopher repetition filters, intra-doc: duplicate-2-gram fraction
     // and top-gram share per doc — map-only (sorted-array fold).
-    "q353_repetition_signals" -> ((s, dir) =>
+    Gate("q353_repetition_signals", (s, dir) =>
       TextOps.repetitionSignals(t(s, dir, "documents"), "text", "doc_id",
           n = 2)
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), oracle =
+      s"""WITH g AS (SELECT doc_id,
+         |    unnest(${Dedup.shinglesSql("text", 2)}) AS g FROM documents),
+         |cnt AS (SELECT doc_id, g, count(*) AS c FROM g GROUP BY 1, 2),
+         |agg AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS total,
+         |    count(*) AS dist, CAST(max(c) AS BIGINT) AS mx
+         |  FROM cnt GROUP BY doc_id)
+         |SELECT d.doc_id,
+         |  coalesce(total, 0) AS total_grams,
+         |  coalesce(dist, 0) AS distinct_grams,
+         |  round(CAST(coalesce(total, 0) - coalesce(dist, 0) AS DOUBLE)
+         |    / greatest(coalesce(total, 0), 1), 6) AS dup_gram_frac,
+         |  round(CAST(coalesce(mx, 0) AS DOUBLE)
+         |    / greatest(coalesce(total, 0), 1), 6) AS top_gram_frac
+         |FROM documents d LEFT JOIN agg USING (doc_id)
+         |ORDER BY d.doc_id""".stripMargin),
 
     // Inter-doc segment dedup: 20-word segments, a segment seen in >1
     // doc flags every holder; per-doc duplicated-segment fraction.
-    "q354_segment_dup" -> ((s, dir) =>
+    Gate("q354_segment_dup", (s, dir) =>
       TextOps.segmentDupFraction(t(s, dir, "documents"), "text", "doc_id",
           w = 20)
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), oracle =
+      """WITH wl AS (SELECT doc_id,
+        |    list_filter(string_split(text, ' '), x -> x <> '') AS ws
+        |  FROM documents),
+        |sg AS (SELECT doc_id, ws,
+        |    unnest(range(0, CAST(ceil(len(ws) / 20.0) AS INT))) AS seg
+        |  FROM wl WHERE len(ws) > 0),
+        |st AS (SELECT doc_id, md5(array_to_string(
+        |    list_slice(ws, seg * 20 + 1, seg * 20 + 20), ' ')) AS h
+        |  FROM sg),
+        |sh AS (SELECT h, count(DISTINCT doc_id) AS nd FROM st GROUP BY h)
+        |SELECT doc_id, count(*) AS n_segments,
+        |  CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_dup_segments,
+        |  round(CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS DOUBLE)
+        |    / count(*), 6) AS dup_segment_frac
+        |FROM st JOIN sh USING (h) GROUP BY doc_id
+        |ORDER BY doc_id""".stripMargin),
 
     // Unigram-LM surprisal (perplexity-proxy quality): mean -ln p(w)
     // per doc under the corpus's own unigram model, micro-nat exact.
-    "q355_unigram_surprisal" -> ((s, dir) =>
+    Gate("q355_unigram_surprisal", (s, dir) =>
       TextOps.unigramSurprisal(t(s, dir, "documents"), "text", "doc_id")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), oracle =
+      """WITH wx AS (SELECT doc_id, w FROM
+        |    (SELECT doc_id, unnest(string_split(text, ' ')) AS w
+        |     FROM documents) WHERE w <> ''),
+        |c AS (SELECT w, count(*) AS c FROM wx GROUP BY w),
+        |n AS (SELECT CAST(sum(c) AS BIGINT) AS nn FROM c),
+        |q AS (SELECT doc_id,
+        |    CAST(floor(-ln(CAST(c AS DOUBLE) / nn) * 1e6 + 0.5) AS BIGINT)
+        |      AS q
+        |  FROM wx JOIN c USING (w), n)
+        |SELECT doc_id, count(*) AS n_words,
+        |  round(CAST(sum(q) AS DOUBLE) / 1e6 / count(*), 6)
+        |    AS mean_surprisal_nats
+        |FROM q GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // Streaming ingest-time URL dedup: the canonicalizer is a
     // stateless map inside the stream, the per-canonical rollup is the
     // stateful agg (collect_set for the raw-form count — streaming
     // forbids COUNT DISTINCT, and the set's SIZE equals it exactly).
     // AvailableNow replay == the batch q349 answer, shared oracle.
-    "q356_streaming_url_dedup" -> ((s, dir) => {
+    Gate("q356_streaming_url_dedup", (s, dir) => {
       val docs = graft.core.Tables.stream(s, dir, "documents")
         .withColumn("url", rawUrlCol)
       val agg = docs
@@ -193,17 +248,24 @@ object Curation3 extends Gates {
           size(collect_set(col("raw"))).cast("long").as("n_raw_forms"),
           min(col("doc_id")).as("keeper_id"))
       drainMemory(s, agg, "complete")(_.orderBy("canonical_url"))
-    }),
+    }, oracle =
+      // the streaming replay must equal the batch q349 answer exactly
+      q349OracleSql),
 
     // Crawl-frontier seen-URL check: bloom prefilter over the seen
     // canonical set, exact join only for bloom-positives.
-    "q357_url_frontier" -> ((s, dir) => {
+    Gate("q357_url_frontier", (s, dir) => {
       val docs = t(s, dir, "documents").withColumn("url", rawUrlCol)
       val seen = docs.where(pmod(col("doc_id"), lit(5L)) =!= 0)
       val frontier = docs.where(pmod(col("doc_id"), lit(5L)) === 0)
       UrlOps.urlSeenFilter(seen, frontier, "url", "doc_id")
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      s"""WITH u AS (SELECT doc_id, $canonUrlSql AS cu FROM documents),
+         |seen AS (SELECT DISTINCT cu FROM u WHERE doc_id % 5 <> 0)
+         |SELECT doc_id, cu AS canonical_url,
+         |  cu IN (SELECT cu FROM seen) AS seen
+         |FROM u WHERE doc_id % 5 = 0 ORDER BY doc_id""".stripMargin),
 
     // The per-doc CURATION DECISION CARD — every dedup/quality verdict
     // a pipeline applies, in one frame with a transparent keep rule:
@@ -212,7 +274,7 @@ object Curation3 extends Gates {
     // and repetition fractions vs fixed thresholds. Five individually-
     // gated lineages (q24/q325/q349/q354/q353) joined by doc_id — the
     // composed "why was my doc dropped" answer, fully SQL-re-derived.
-    "q358_curation_card" -> ((s, dir) => {
+    Gate("q358_curation_card", (s, dir) => {
       val docs = t(s, dir, "documents").withColumn("url", rawUrlCol)
       val exactLoser = docs
         .select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
@@ -256,13 +318,40 @@ object Curation3 extends Gates {
           !col("url_loser") && col("dup_segment_frac") <= 0.5 &&
           col("dup_gram_frac") <= 0.3)
         .orderBy("doc_id")
-    }),
+    }, oracle =
+      s"""WITH RECURSIVE $ccCtes,
+         |ex AS (SELECT doc_id, md5(text) AS h FROM documents),
+         |exk AS (SELECT h, min(doc_id) AS k FROM ex GROUP BY h),
+         |$segFracCtes,
+         |$repFracCtes,
+         |u AS (SELECT doc_id, $canonUrlSql AS cu FROM documents),
+         |uk AS (SELECT cu, min(doc_id) AS k FROM u GROUP BY cu)
+         |SELECT d.doc_id,
+         |  d.doc_id <> exk.k AS exact_loser,
+         |  coalesce(comp.component <> d.doc_id, FALSE) AS near_loser,
+         |  coalesce(sega.dup_segment_frac, 0.0) AS dup_segment_frac,
+         |  rep.dup_gram_frac,
+         |  d.doc_id <> uk.k AS url_loser,
+         |  d.doc_id = exk.k
+         |    AND NOT coalesce(comp.component <> d.doc_id, FALSE)
+         |    AND d.doc_id = uk.k
+         |    AND coalesce(sega.dup_segment_frac, 0.0) <= 0.5
+         |    AND rep.dup_gram_frac <= 0.3 AS keep
+         |FROM documents d
+         |JOIN ex ON ex.doc_id = d.doc_id
+         |JOIN exk ON exk.h = ex.h
+         |LEFT JOIN comp ON comp.doc_id = d.doc_id
+         |LEFT JOIN sega ON sega.doc_id = d.doc_id
+         |JOIN rep ON rep.doc_id = d.doc_id
+         |JOIN u ON u.doc_id = d.doc_id
+         |JOIN uk ON uk.cu = u.cu
+         |ORDER BY d.doc_id""".stripMargin),
 
     // Per-source redundancy report: exact-text and canonical-URL dup
     // rates plus the micro-quantized means of the per-doc segment-dup
     // and repetition fractions — the "which source is worth paying
     // for" monitoring rollup. All keyed aggs; output O(#sources).
-    "q359_redundancy_report" -> ((s, dir) => {
+    Gate("q359_redundancy_report", (s, dir) => {
       val docs = t(s, dir, "documents").withColumn("url", rawUrlCol)
       val base = docs.groupBy("source").agg(
         count(lit(1)).as("n_docs"),
@@ -288,13 +377,35 @@ object Curation3 extends Gates {
             .as("url_dup_rate"),
           col("mean_seg_dup"), col("mean_rep"))
         .orderBy("source")
-    }),
+    }, oracle =
+      s"""WITH $segFracCtes,
+         |$repFracCtes,
+         |u AS (SELECT doc_id, $canonUrlSql AS cu FROM documents),
+         |d AS (SELECT doc_id, source, md5(text) AS h FROM documents),
+         |base AS (SELECT source, count(*) AS n_docs,
+         |    count(DISTINCT h) AS nt, count(DISTINCT cu) AS nu
+         |  FROM d JOIN u USING (doc_id) GROUP BY source),
+         |segs AS (SELECT source,
+         |    CAST(sum(CAST(floor(dup_segment_frac * 1e6 + 0.5) AS BIGINT))
+         |      AS BIGINT) AS s, count(*) AS n
+         |  FROM sega JOIN documents USING (doc_id) GROUP BY source),
+         |reps AS (SELECT source,
+         |    CAST(sum(CAST(floor(dup_gram_frac * 1e6 + 0.5) AS BIGINT))
+         |      AS BIGINT) AS s, count(*) AS n
+         |  FROM rep JOIN documents USING (doc_id) GROUP BY source)
+         |SELECT base.source, n_docs,
+         |  round(1.0 - CAST(nt AS DOUBLE) / n_docs, 6) AS exact_dup_rate,
+         |  round(1.0 - CAST(nu AS DOUBLE) / n_docs, 6) AS url_dup_rate,
+         |  round(CAST(segs.s AS DOUBLE) / 1e6 / segs.n, 6) AS mean_seg_dup,
+         |  round(CAST(reps.s AS DOUBLE) / 1e6 / reps.n, 6) AS mean_rep
+         |FROM base JOIN segs USING (source) JOIN reps USING (source)
+         |ORDER BY source""".stripMargin),
 
     // Classifier evaluation scorecard: NB lang model trained on the
     // %5!=0 slice, held-out %5==0 predictions vs true labels —
     // per-class support/TP/FP/FN + precision/recall/F1 (F1 straight
     // from the counts, never from rounded p/r).
-    "q360_classifier_eval" -> ((s, dir) => {
+    Gate("q360_classifier_eval", (s, dir) => {
       val docs = t(s, dir, "documents")
       val train = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
       val test = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
@@ -304,17 +415,58 @@ object Curation3 extends Gates {
           test.select(col("doc_id"), col("lang")), "doc_id", "predicted",
           "lang")
         .orderBy("cls")
-    }),
+    }, oracle =
+      s"""WITH ${NorthStar.nbPredCtes("lang")},
+         |truth AS (SELECT doc_id, lang AS y FROM te),
+         |j AS (SELECT truth.doc_id, y, cls AS p FROM truth
+         |  JOIN pred USING (doc_id)),
+         |classes AS (SELECT y AS cls FROM j UNION SELECT p FROM j),
+         |bt AS (SELECT y AS cls, count(*) AS support,
+         |    CAST(sum(CASE WHEN p = y THEN 1 ELSE 0 END) AS BIGINT) AS tp
+         |  FROM j GROUP BY y),
+         |bp AS (SELECT p AS cls, count(*) AS n_pred FROM j GROUP BY p),
+         |r AS (SELECT classes.cls, coalesce(support, 0) AS support,
+         |    coalesce(tp, 0) AS tp,
+         |    coalesce(n_pred, 0) - coalesce(tp, 0) AS fp,
+         |    coalesce(support, 0) - coalesce(tp, 0) AS fn
+         |  FROM classes LEFT JOIN bt USING (cls) LEFT JOIN bp USING (cls))
+         |SELECT cls, support, tp, fp, fn,
+         |  CASE WHEN tp + fp > 0
+         |    THEN round(CAST(tp AS DOUBLE) / (tp + fp), 6)
+         |    ELSE 0.0 END AS "precision",
+         |  CASE WHEN support > 0
+         |    THEN round(CAST(tp AS DOUBLE) / support, 6)
+         |    ELSE 0.0 END AS recall,
+         |  CASE WHEN tp * 2 + fp + fn > 0
+         |    THEN round(CAST(tp AS DOUBLE) * 2 / (tp * 2 + fp + fn), 6)
+         |    ELSE 0.0 END AS f1
+         |FROM r ORDER BY cls""".stripMargin),
 
     // Quality-filter threshold sweep: the keep-rate tradeoff curve
     // over n_chars cutoffs (doc and token mass kept per threshold).
-    "q361_filter_sweep" -> ((s, dir) => {
+    Gate("q361_filter_sweep", (s, dir) => {
       val docs = t(s, dir, "documents")
         .withColumn("n_tok", size(split(col("text"), " ")).cast("long"))
       graft.ops.Corpus.filterSweep(docs, "n_chars", "n_tok",
           Seq(0.0, 100.0, 200.0, 300.0, 400.0, 500.0))
         .orderBy("threshold")
-    }),
+    }, oracle =
+      """WITH d AS (SELECT n_chars,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
+        |  FROM documents),
+        |x AS (SELECT CAST(t AS DOUBLE) AS threshold, n_chars, n_tok
+        |  FROM d, unnest([0.0, 100.0, 200.0, 300.0, 400.0, 500.0]) u(t))
+        |SELECT threshold, count(*) AS n_docs,
+        |  CAST(sum(CASE WHEN n_chars >= threshold THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS n_kept,
+        |  round(CAST(sum(CASE WHEN n_chars >= threshold THEN 1 ELSE 0 END)
+        |    AS DOUBLE) / count(*), 6) AS doc_share,
+        |  CAST(sum(n_tok) AS BIGINT) AS tokens_total,
+        |  CAST(sum(CASE WHEN n_chars >= threshold THEN n_tok ELSE 0 END)
+        |    AS BIGINT) AS tokens_kept,
+        |  round(CAST(sum(CASE WHEN n_chars >= threshold THEN n_tok
+        |      ELSE 0 END) AS DOUBLE) / sum(n_tok), 6) AS token_share
+        |FROM x GROUP BY threshold ORDER BY threshold""".stripMargin),
 
     // Streaming ANN ingest: the snapshot index is built in batch, then
     // the delta slice ARRIVES AS A STREAM and each micro-batch folds
@@ -323,7 +475,7 @@ object Curation3 extends Gates {
     // must answer exactly like a full rebuild — shares q326's oracle,
     // completing the serving story: batch build -> streaming ingest ->
     // compaction, all decision-identical.
-    "q363_streaming_sq8_ingest" -> ((s, dir) => {
+    Gate("q363_streaming_sq8_ingest", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val corpus = emb.where(pmod(col("vec_id"), lit(5L)) =!= 0)
       val idx = Curation2.tempIndexDir("graft_sq8_stream_")
@@ -356,12 +508,14 @@ object Curation3 extends Gates {
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
       } finally Curation2.deleteDir(idx)
-    }),
+    }, oracle =
+      // streamed delta ingest == full rebuild, by the append contract
+      Curation2.sq8OracleSql("TRUE")),
 
     // Dedup-index compaction: append batch1, COMPACT the hash/band
     // tables, then serve batch2 — decisions must still equal the
     // grown-corpus rebuild (shares q352's oracle).
-    "q366_dedup_index_compact" -> ((s, dir) => {
+    Gate("q366_dedup_index_compact", (s, dir) => {
       val docs = t(s, dir, "documents")
       val corpus0 = docs.where(pmod(col("doc_id"), lit(5L)).isin(2L, 3L, 4L))
       val batch1 = docs.where(pmod(col("doc_id"), lit(5L)) === 0)
@@ -379,17 +533,26 @@ object Curation3 extends Gates {
           .orderBy("doc_id")
           .localCheckpoint(true)
       } finally Curation2.deleteDir(idx)
-    }),
+    }, oracle =
+      // compaction must not change a single decision
+      Curation.incrementalDedupOracle("doc_id % 5 <> 1", "doc_id % 5 = 1")),
 
     // Hard-negative mining (DPR-style): per query the cosine band
     // ranks 6..15 — below the top-5 "positives", above the easy tail.
-    "q369_hard_negatives" -> ((s, dir) => {
+    Gate("q369_hard_negatives", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       Similarity.hardNegatives(emb, emb.filter(col("vec_id") < 10),
           "vec_id", "embedding", skip = 5, k = 10)
         .withColumn("score", round(col("score"), 6).cast("float"))
         .orderBy("query_id", "rank")
-    }),
+    }, oracle =
+      s"""WITH $queryCosCtes
+        |SELECT qid AS query_id, nid AS neighbor_id,
+        |  CAST(rank AS INTEGER) AS rank,
+        |  CAST(round(cos, 6) AS REAL) AS score
+        |FROM (SELECT *, row_number() OVER (PARTITION BY qid
+        |        ORDER BY cos DESC, nid) AS rank FROM s)
+        |WHERE rank > 5 AND rank <= 15 ORDER BY query_id, rank""".stripMargin),
 
     // Related-pair mining: the 0.4 <= J < 0.8 paraphrase/revision band
     // — positive pairs for contrastive training, not dedup fodder.
@@ -398,7 +561,7 @@ object Curation3 extends Gates {
     // the original plus ~2/3 as many unique filler words, landing its
     // Jaccard squarely in the band (J = (m-2)/(m+2m/3) in 0.46-0.59);
     // both engines re-derive the augment from the same formula.
-    "q370_related_pairs" -> ((s, dir) => {
+    Gate("q370_related_pairs", (s, dir) => {
       val docs = t(s, dir, "documents")
       val w = split(col("text"), " ")
       val nf = call_function("div", size(w).cast("long") * 2L, lit(3L))
@@ -422,36 +585,94 @@ object Curation3 extends Gates {
           docs.select("doc_id", "text").unionByName(revisions),
           "text", "doc_id", lo = 0.4, hi = 0.8, NGRAM, K, BANDS)
         .orderBy("doc_a", "doc_b")
-    }),
+    }, oracle =
+      s"""WITH aug AS (SELECT doc_id, text FROM documents
+         |  UNION ALL
+         |  SELECT doc_id + 1000000, text || ' ' || array_to_string(
+         |    list_transform(
+         |      range(1, (2 * len(string_split(text, ' '))) // 3 + 1),
+         |      i -> 'pad' || CAST(doc_id AS VARCHAR) || 'x' ||
+         |        CAST(i AS VARCHAR)), ' ')
+         |  FROM documents WHERE doc_id % 10 = 0),
+         |${sigBandCtes("aug")},
+         |g AS (SELECT DISTINCT doc_id AS did,
+         |    unnest(${Dedup.shinglesSql("text", NGRAM)}) AS g
+         |  FROM aug),
+         |sz AS (SELECT did, count(*) AS n FROM g GROUP BY did),
+         |inter AS (SELECT cand.da, cand.db, count(*) AS i FROM cand
+         |  JOIN g ga ON ga.did = cand.da
+         |  JOIN g gb2 ON gb2.did = cand.db AND gb2.g = ga.g
+         |  GROUP BY 1, 2),
+         |jac AS (SELECT da, db, i,
+         |    CAST(i AS DOUBLE) / (sa.n + sb.n - i) AS j
+         |  FROM inter
+         |  JOIN sz sa ON sa.did = inter.da
+         |  JOIN sz sb ON sb.did = inter.db)
+         |SELECT da AS doc_a, db AS doc_b, CAST(i AS BIGINT) AS inter,
+         |  round(j, 6) AS jaccard
+         |FROM jac WHERE j >= 0.4 AND j < 0.8
+         |ORDER BY doc_a, doc_b""".stripMargin),
 
     // DPR triplet builder: per query the rank-1 positive + the
     // rank-6..15 hard negatives as one training row.
-    "q371_contrastive_triplets" -> ((s, dir) => {
+    Gate("q371_contrastive_triplets", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       Similarity.contrastiveTriplets(emb, emb.filter(col("vec_id") < 10),
           "vec_id", "embedding", negSkip = 5, negK = 10)
         .orderBy("query_id")
-    }),
+    }, oracle =
+      s"""WITH $queryCosCtes,
+        |r AS (SELECT *, row_number() OVER (PARTITION BY qid
+        |    ORDER BY cos DESC, nid) AS rank FROM s),
+        |p AS (SELECT qid, nid AS pos_id FROM r WHERE rank = 1),
+        |ng AS (SELECT qid, array_to_string(
+        |    list(CAST(nid AS VARCHAR) ORDER BY rank), ',') AS neg_ids
+        |  FROM r WHERE rank > 5 AND rank <= 15 GROUP BY qid)
+        |SELECT p.qid AS query_id, pos_id,
+        |  coalesce(neg_ids, '') AS neg_ids
+        |FROM p LEFT JOIN ng ON ng.qid = p.qid
+        |ORDER BY query_id""".stripMargin),
 
     // SQ8 index health stats: codes count, dim, bounds geometry —
     // everything re-derivable from the raw embeddings by the oracle.
-    "q372_sq8_index_stats" -> ((s, dir) => {
+    Gate("q372_sq8_index_stats", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val idx = Curation2.tempIndexDir("graft_sq8_stats_")
       try {
         Similarity.writeSq8Index(emb, "vec_id", "embedding", idx)
         Similarity.sq8IndexStats(s, idx).localCheckpoint(true)
       } finally Curation2.deleteDir(idx)
-    }),
+    }, oracle =
+      """WITH v AS (SELECT vec_id,
+        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+        |  FROM embeddings),
+        |dd AS (SELECT u.i AS d, e[u.i + 1] AS x
+        |  FROM v, unnest(range(64)) u(i)),
+        |b AS (SELECT d, min(x) AS lo, max(x) AS hi FROM dd GROUP BY d)
+        |SELECT (SELECT count(*) FROM embeddings) AS n_codes,
+        |  count(*) AS dim,
+        |  round(min(lo), 6) + 0.0 AS min_lo, round(max(hi), 6) + 0.0 AS max_hi,
+        |  round(CAST(sum(CAST(floor((hi - lo) * 1e6 + 0.5) AS BIGINT))
+        |    AS DOUBLE) / 1e6 / count(*), 6) AS mean_width
+        |FROM b""".stripMargin),
 
     // Domain-stratified split: the split key is the registered domain,
     // so no site straddles train/test (site-level style/boilerplate
     // leakage — the web analog of the q284 cluster-keyed rule).
-    "q367_domain_safe_split" -> ((s, dir) =>
+    Gate("q367_domain_safe_split", (s, dir) =>
       UrlOps.domainSafeSplit(
           t(s, dir, "documents").withColumn("url", rawUrlCol),
           "url", "doc_id", valPct = 10, testPct = 10)
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), oracle = {
+      val h = Dedup.h60Sql("domain")
+      s"""WITH u AS (SELECT doc_id, lower(source) || '.com' AS domain
+         |  FROM documents)
+         |SELECT doc_id, domain,
+         |  CASE WHEN ($h) % 100 < 10 THEN 'test'
+         |       WHEN ($h) % 100 < 20 THEN 'val'
+         |       ELSE 'train' END AS split
+         |FROM u ORDER BY doc_id""".stripMargin
+    }),
 
     // The ROUND-8 FLAGSHIP: crawl-to-corpus in one plan — URL dedup ->
     // exact text dedup -> repetition filter -> per-domain cap ->
@@ -460,7 +681,7 @@ object Curation3 extends Gates {
     // individually gated (q349/q24/q353/q301/q362); this row proves
     // the modern pipeline composes end-to-end with one SQL
     // re-derivation.
-    "q368_crawl_pipeline" -> ((s, dir) => {
+    Gate("q368_crawl_pipeline", (s, dir) => {
       val docs = t(s, dir, "documents").withColumn("url", rawUrlCol)
       val urlKeep = docs
         .select(col("doc_id"), UrlOps.canonicalUrl(col("url")).as("cu"))
@@ -485,17 +706,65 @@ object Curation3 extends Gates {
       graft.core.Layout.shardManifest(sharded, "shard", "doc_id", "n_tok",
           "text")
         .orderBy("shard")
+    }, oracle = {
+      val hs = Dedup.h60Sql("CAST(doc_id AS VARCHAR)")
+      val hc = Dedup.h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")
+      s"""WITH u AS (SELECT doc_id, text, n_chars, source, $canonUrlSql AS cu
+         |  FROM documents),
+         |k1 AS (SELECT min(doc_id) AS doc_id FROM u GROUP BY cu),
+         |s1 AS (SELECT u.* FROM u JOIN k1 USING (doc_id)),
+         |k2 AS (SELECT min(doc_id) AS doc_id FROM s1 GROUP BY md5(text)),
+         |s2 AS (SELECT s1.* FROM s1 JOIN k2 USING (doc_id)),
+         |rep AS (SELECT doc_id, round(CAST(total - dist AS DOUBLE)
+         |    / greatest(total, 1), 6) AS f FROM
+         |  (SELECT doc_id, CAST(len(grams) AS BIGINT) AS total,
+         |     CAST(len(list_distinct(grams)) AS BIGINT) AS dist FROM
+         |    (SELECT doc_id, ${Dedup.shinglesSql("text", 2)} AS grams
+         |     FROM s2))),
+         |s3 AS (SELECT s2.* FROM s2 JOIN rep USING (doc_id)
+         |  WHERE f <= 0.3),
+         |d3 AS (SELECT *, lower(source) || '.com' AS domain FROM s3),
+         |rk AS (SELECT *, row_number() OVER (PARTITION BY domain
+         |    ORDER BY n_chars DESC, doc_id) AS rn FROM d3),
+         |s4 AS (SELECT * FROM rk WHERE rn <= 40),
+         |sh AS (SELECT doc_id, CAST(($hs) % 4 AS INT) AS shard,
+         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
+         |    ($hc) AS h
+         |  FROM s4)
+         |SELECT shard, count(*) AS n_docs,
+         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+         |  min(doc_id) AS min_id, max(doc_id) AS max_id,
+         |  bit_xor(h) AS checksum
+         |FROM sh GROUP BY shard ORDER BY shard""".stripMargin
     }),
 
     // Packing-efficiency sweep: per candidate seqLen, sequence counts
     // and pad shares under pad-per-doc vs concatenate-and-chunk.
-    "q364_packing_sweep" -> ((s, dir) => {
+    Gate("q364_packing_sweep", (s, dir) => {
       val docs = t(s, dir, "documents")
         .withColumn("n_tok", size(split(col("text"), " ")).cast("long"))
       graft.ops.Corpus.packingSweep(docs, "n_tok",
           Seq(64L, 128L, 256L, 512L))
         .orderBy("seq_len")
-    }),
+    }, oracle =
+      """WITH d AS (SELECT CAST(len(string_split(text, ' ')) AS BIGINT)
+        |    AS tok FROM documents),
+        |x AS (SELECT CAST(L AS BIGINT) AS seq_len, tok
+        |  FROM d, unnest([64, 128, 256, 512]) u(L)),
+        |a AS (SELECT seq_len, count(*) AS n_docs,
+        |    CAST(sum(tok) AS BIGINT) AS tokens_total,
+        |    CAST(sum((tok + seq_len - 1) // seq_len) AS BIGINT)
+        |      AS n_seq_padded
+        |  FROM x GROUP BY seq_len),
+        |b AS (SELECT *, CAST((tokens_total + seq_len - 1) // seq_len
+        |    AS BIGINT) AS n_seq_packed FROM a)
+        |SELECT seq_len, n_docs, tokens_total, n_seq_padded,
+        |  round(CAST(n_seq_padded * seq_len - tokens_total AS DOUBLE)
+        |    / (n_seq_padded * seq_len), 6) AS pad_share_padded,
+        |  n_seq_packed,
+        |  round(CAST(n_seq_packed * seq_len - tokens_total AS DOUBLE)
+        |    / (n_seq_packed * seq_len), 6) AS pad_share_packed
+        |FROM b ORDER BY seq_len""".stripMargin),
 
     // Dedup detection scorecard vs PLANTED ground truth: every %10==0
     // doc gets a 3-word-suffix clone; the near-dup pipeline
@@ -504,7 +773,7 @@ object Curation3 extends Gates {
     // Jaccard legitimately falls under the threshold are counted
     // against it, deterministically) and how many clone-touching
     // pairs are spurious (precision). One row.
-    "q365_dedup_scorecard" -> ((s, dir) => {
+    Gate("q365_dedup_scorecard", (s, dir) => {
       val docs = t(s, dir, "documents")
       val clones = docs.where(pmod(col("doc_id"), lit(10L)) === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"),
@@ -528,12 +797,41 @@ object Curation3 extends Gates {
           when(col("n_clone_pairs") > 0,
             round(col("n_detected").cast("double") / col("n_clone_pairs"),
               6)).otherwise(lit(0.0)).as("precision"))
-    }),
+    }, oracle =
+      s"""WITH aug AS (SELECT doc_id, text FROM documents
+         |  UNION ALL
+         |  SELECT doc_id + 1000000, text || ' planted clone marker'
+         |  FROM documents WHERE doc_id % 10 = 0),
+         |${sigBandCtes("aug")},
+         |g AS (SELECT DISTINCT doc_id AS did,
+         |    unnest(${Dedup.shinglesSql("text", NGRAM)}) AS g FROM aug),
+         |sz AS (SELECT did, count(*) AS n FROM g GROUP BY did),
+         |inter AS (SELECT cand.da, cand.db, count(*) AS i FROM cand
+         |  JOIN g ga ON ga.did = cand.da
+         |  JOIN g gb2 ON gb2.did = cand.db AND gb2.g = ga.g
+         |  GROUP BY 1, 2),
+         |jac AS (SELECT da, db FROM inter
+         |  JOIN sz sa ON sa.did = inter.da
+         |  JOIN sz sb ON sb.did = inter.db
+         |  WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
+         |cp AS (SELECT * FROM jac WHERE da >= 1000000 OR db >= 1000000),
+         |np AS (SELECT count(*) AS n_planted FROM documents
+         |  WHERE doc_id % 10 = 0),
+         |dc AS (SELECT count(*) AS n FROM cp WHERE db = da + 1000000),
+         |cc AS (SELECT count(*) AS n FROM cp)
+         |SELECT n_planted, CAST(dc.n AS BIGINT) AS n_detected,
+         |  CAST(cc.n AS BIGINT) AS n_clone_pairs,
+         |  CAST(cc.n - dc.n AS BIGINT) AS n_spurious,
+         |  round(CAST(dc.n AS DOUBLE) / n_planted, 6) AS recall,
+         |  CASE WHEN cc.n > 0
+         |    THEN round(CAST(dc.n AS DOUBLE) / cc.n, 6)
+         |    ELSE 0.0 END AS "precision"
+         |FROM np, dc, cc""".stripMargin),
 
     // Shard manifest: per-shard doc/token mass + id range + an
     // order-independent bit_xor checksum — the curation->training
     // reproducibility handshake over the q-shardAssign layout.
-    "q362_shard_manifest" -> ((s, dir) => {
+    Gate("q362_shard_manifest", (s, dir) => {
       val docs = t(s, dir, "documents")
         .withColumn("n_tok", size(split(col("text"), " ")).cast("long"))
       val sharded = graft.ops.Corpus.shardAssign(docs, "doc_id", 8)
@@ -542,6 +840,19 @@ object Curation3 extends Gates {
       graft.core.Layout.shardManifest(sharded, "shard", "doc_id", "n_tok",
           "text")
         .orderBy("shard")
+    }, oracle = {
+      val h = Dedup.h60Sql("CAST(doc_id AS VARCHAR)")
+      val hc = Dedup.h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")
+      s"""WITH sh AS (SELECT doc_id,
+         |    CAST(($h) % 8 AS INT) AS shard,
+         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
+         |    ($hc) AS h
+         |  FROM documents)
+         |SELECT shard, count(*) AS n_docs,
+         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+         |  min(doc_id) AS min_id, max(doc_id) AS max_id,
+         |  bit_xor(h) AS checksum
+         |FROM sh GROUP BY shard ORDER BY shard""".stripMargin
     })
   )
 
@@ -635,359 +946,4 @@ object Curation3 extends Gates {
       |    list_sum(list_transform(range(64), i -> qe[i+1] * e[i+1]))
       |      / (qn * nrm) AS cos
       |  FROM q, n WHERE vec_id <> qid)""".stripMargin
-
-  val oracles: Map[String, String] = Map(
-    "q348_sq8_index_append" -> Curation2.oracles("q326_ann_sq8"),
-    "q351_sq8_index_compact" -> Curation2.oracles("q326_ann_sq8"),
-    // the streaming replay must equal the batch q349 answer exactly
-    "q356_streaming_url_dedup" -> q349OracleSql,
-    // streamed delta ingest == full rebuild, by the append contract
-    "q363_streaming_sq8_ingest" -> Curation2.oracles("q326_ann_sq8"),
-    "q357_url_frontier" ->
-      s"""WITH u AS (SELECT doc_id, $canonUrlSql AS cu FROM documents),
-         |seen AS (SELECT DISTINCT cu FROM u WHERE doc_id % 5 <> 0)
-         |SELECT doc_id, cu AS canonical_url,
-         |  cu IN (SELECT cu FROM seen) AS seen
-         |FROM u WHERE doc_id % 5 = 0 ORDER BY doc_id""".stripMargin,
-    "q352_dedup_index_append" ->
-      Curation.incrementalDedupOracle("doc_id % 5 <> 1", "doc_id % 5 = 1"),
-    // compaction must not change a single decision
-    "q366_dedup_index_compact" ->
-      Curation.incrementalDedupOracle("doc_id % 5 <> 1", "doc_id % 5 = 1"),
-
-    "q349_url_dedup" -> q349OracleSql,
-
-    "q350_domain_rollup" ->
-      s"""WITH u AS (SELECT doc_id, n_chars,
-         |    lower(source) || '.com' AS domain, $canonUrlSql AS cu
-         |  FROM documents)
-         |SELECT domain, count(*) AS n_docs, count(DISTINCT cu) AS n_urls,
-         |  round(1.0 - CAST(count(DISTINCT cu) AS DOUBLE) / count(*), 6)
-         |    AS url_dup_rate,
-         |  round(CAST(sum(CAST(floor(CAST(n_chars AS DOUBLE) * 1e6 + 0.5)
-         |      AS BIGINT)) AS DOUBLE) / 1e6 / count(*), 6) AS mean_quality
-         |FROM u GROUP BY domain ORDER BY domain""".stripMargin,
-
-    "q353_repetition_signals" ->
-      s"""WITH g AS (SELECT doc_id,
-         |    unnest(${Dedup.shinglesSql("text", 2)}) AS g FROM documents),
-         |cnt AS (SELECT doc_id, g, count(*) AS c FROM g GROUP BY 1, 2),
-         |agg AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS total,
-         |    count(*) AS dist, CAST(max(c) AS BIGINT) AS mx
-         |  FROM cnt GROUP BY doc_id)
-         |SELECT d.doc_id,
-         |  coalesce(total, 0) AS total_grams,
-         |  coalesce(dist, 0) AS distinct_grams,
-         |  round(CAST(coalesce(total, 0) - coalesce(dist, 0) AS DOUBLE)
-         |    / greatest(coalesce(total, 0), 1), 6) AS dup_gram_frac,
-         |  round(CAST(coalesce(mx, 0) AS DOUBLE)
-         |    / greatest(coalesce(total, 0), 1), 6) AS top_gram_frac
-         |FROM documents d LEFT JOIN agg USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-
-    "q354_segment_dup" ->
-      """WITH wl AS (SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |sg AS (SELECT doc_id, ws,
-        |    unnest(range(0, CAST(ceil(len(ws) / 20.0) AS INT))) AS seg
-        |  FROM wl WHERE len(ws) > 0),
-        |st AS (SELECT doc_id, md5(array_to_string(
-        |    list_slice(ws, seg * 20 + 1, seg * 20 + 20), ' ')) AS h
-        |  FROM sg),
-        |sh AS (SELECT h, count(DISTINCT doc_id) AS nd FROM st GROUP BY h)
-        |SELECT doc_id, count(*) AS n_segments,
-        |  CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_dup_segments,
-        |  round(CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / count(*), 6) AS dup_segment_frac
-        |FROM st JOIN sh USING (h) GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    "q358_curation_card" ->
-      s"""WITH RECURSIVE $ccCtes,
-         |ex AS (SELECT doc_id, md5(text) AS h FROM documents),
-         |exk AS (SELECT h, min(doc_id) AS k FROM ex GROUP BY h),
-         |$segFracCtes,
-         |$repFracCtes,
-         |u AS (SELECT doc_id, $canonUrlSql AS cu FROM documents),
-         |uk AS (SELECT cu, min(doc_id) AS k FROM u GROUP BY cu)
-         |SELECT d.doc_id,
-         |  d.doc_id <> exk.k AS exact_loser,
-         |  coalesce(comp.component <> d.doc_id, FALSE) AS near_loser,
-         |  coalesce(sega.dup_segment_frac, 0.0) AS dup_segment_frac,
-         |  rep.dup_gram_frac,
-         |  d.doc_id <> uk.k AS url_loser,
-         |  d.doc_id = exk.k
-         |    AND NOT coalesce(comp.component <> d.doc_id, FALSE)
-         |    AND d.doc_id = uk.k
-         |    AND coalesce(sega.dup_segment_frac, 0.0) <= 0.5
-         |    AND rep.dup_gram_frac <= 0.3 AS keep
-         |FROM documents d
-         |JOIN ex ON ex.doc_id = d.doc_id
-         |JOIN exk ON exk.h = ex.h
-         |LEFT JOIN comp ON comp.doc_id = d.doc_id
-         |LEFT JOIN sega ON sega.doc_id = d.doc_id
-         |JOIN rep ON rep.doc_id = d.doc_id
-         |JOIN u ON u.doc_id = d.doc_id
-         |JOIN uk ON uk.cu = u.cu
-         |ORDER BY d.doc_id""".stripMargin,
-
-    "q359_redundancy_report" ->
-      s"""WITH $segFracCtes,
-         |$repFracCtes,
-         |u AS (SELECT doc_id, $canonUrlSql AS cu FROM documents),
-         |d AS (SELECT doc_id, source, md5(text) AS h FROM documents),
-         |base AS (SELECT source, count(*) AS n_docs,
-         |    count(DISTINCT h) AS nt, count(DISTINCT cu) AS nu
-         |  FROM d JOIN u USING (doc_id) GROUP BY source),
-         |segs AS (SELECT source,
-         |    CAST(sum(CAST(floor(dup_segment_frac * 1e6 + 0.5) AS BIGINT))
-         |      AS BIGINT) AS s, count(*) AS n
-         |  FROM sega JOIN documents USING (doc_id) GROUP BY source),
-         |reps AS (SELECT source,
-         |    CAST(sum(CAST(floor(dup_gram_frac * 1e6 + 0.5) AS BIGINT))
-         |      AS BIGINT) AS s, count(*) AS n
-         |  FROM rep JOIN documents USING (doc_id) GROUP BY source)
-         |SELECT base.source, n_docs,
-         |  round(1.0 - CAST(nt AS DOUBLE) / n_docs, 6) AS exact_dup_rate,
-         |  round(1.0 - CAST(nu AS DOUBLE) / n_docs, 6) AS url_dup_rate,
-         |  round(CAST(segs.s AS DOUBLE) / 1e6 / segs.n, 6) AS mean_seg_dup,
-         |  round(CAST(reps.s AS DOUBLE) / 1e6 / reps.n, 6) AS mean_rep
-         |FROM base JOIN segs USING (source) JOIN reps USING (source)
-         |ORDER BY source""".stripMargin,
-
-    "q360_classifier_eval" ->
-      s"""WITH ${NorthStar.nbPredCtes("lang")},
-         |truth AS (SELECT doc_id, lang AS y FROM te),
-         |j AS (SELECT truth.doc_id, y, cls AS p FROM truth
-         |  JOIN pred USING (doc_id)),
-         |classes AS (SELECT y AS cls FROM j UNION SELECT p FROM j),
-         |bt AS (SELECT y AS cls, count(*) AS support,
-         |    CAST(sum(CASE WHEN p = y THEN 1 ELSE 0 END) AS BIGINT) AS tp
-         |  FROM j GROUP BY y),
-         |bp AS (SELECT p AS cls, count(*) AS n_pred FROM j GROUP BY p),
-         |r AS (SELECT classes.cls, coalesce(support, 0) AS support,
-         |    coalesce(tp, 0) AS tp,
-         |    coalesce(n_pred, 0) - coalesce(tp, 0) AS fp,
-         |    coalesce(support, 0) - coalesce(tp, 0) AS fn
-         |  FROM classes LEFT JOIN bt USING (cls) LEFT JOIN bp USING (cls))
-         |SELECT cls, support, tp, fp, fn,
-         |  CASE WHEN tp + fp > 0
-         |    THEN round(CAST(tp AS DOUBLE) / (tp + fp), 6)
-         |    ELSE 0.0 END AS "precision",
-         |  CASE WHEN support > 0
-         |    THEN round(CAST(tp AS DOUBLE) / support, 6)
-         |    ELSE 0.0 END AS recall,
-         |  CASE WHEN tp * 2 + fp + fn > 0
-         |    THEN round(CAST(tp AS DOUBLE) * 2 / (tp * 2 + fp + fn), 6)
-         |    ELSE 0.0 END AS f1
-         |FROM r ORDER BY cls""".stripMargin,
-
-    "q361_filter_sweep" ->
-      """WITH d AS (SELECT n_chars,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-        |  FROM documents),
-        |x AS (SELECT CAST(t AS DOUBLE) AS threshold, n_chars, n_tok
-        |  FROM d, unnest([0.0, 100.0, 200.0, 300.0, 400.0, 500.0]) u(t))
-        |SELECT threshold, count(*) AS n_docs,
-        |  CAST(sum(CASE WHEN n_chars >= threshold THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_kept,
-        |  round(CAST(sum(CASE WHEN n_chars >= threshold THEN 1 ELSE 0 END)
-        |    AS DOUBLE) / count(*), 6) AS doc_share,
-        |  CAST(sum(n_tok) AS BIGINT) AS tokens_total,
-        |  CAST(sum(CASE WHEN n_chars >= threshold THEN n_tok ELSE 0 END)
-        |    AS BIGINT) AS tokens_kept,
-        |  round(CAST(sum(CASE WHEN n_chars >= threshold THEN n_tok
-        |      ELSE 0 END) AS DOUBLE) / sum(n_tok), 6) AS token_share
-        |FROM x GROUP BY threshold ORDER BY threshold""".stripMargin,
-
-    "q370_related_pairs" ->
-      s"""WITH aug AS (SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, text || ' ' || array_to_string(
-         |    list_transform(
-         |      range(1, (2 * len(string_split(text, ' '))) // 3 + 1),
-         |      i -> 'pad' || CAST(doc_id AS VARCHAR) || 'x' ||
-         |        CAST(i AS VARCHAR)), ' ')
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |${sigBandCtes("aug")},
-         |g AS (SELECT DISTINCT doc_id AS did,
-         |    unnest(${Dedup.shinglesSql("text", NGRAM)}) AS g
-         |  FROM aug),
-         |sz AS (SELECT did, count(*) AS n FROM g GROUP BY did),
-         |inter AS (SELECT cand.da, cand.db, count(*) AS i FROM cand
-         |  JOIN g ga ON ga.did = cand.da
-         |  JOIN g gb2 ON gb2.did = cand.db AND gb2.g = ga.g
-         |  GROUP BY 1, 2),
-         |jac AS (SELECT da, db, i,
-         |    CAST(i AS DOUBLE) / (sa.n + sb.n - i) AS j
-         |  FROM inter
-         |  JOIN sz sa ON sa.did = inter.da
-         |  JOIN sz sb ON sb.did = inter.db)
-         |SELECT da AS doc_a, db AS doc_b, CAST(i AS BIGINT) AS inter,
-         |  round(j, 6) AS jaccard
-         |FROM jac WHERE j >= 0.4 AND j < 0.8
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "q371_contrastive_triplets" ->
-      s"""WITH $queryCosCtes,
-        |r AS (SELECT *, row_number() OVER (PARTITION BY qid
-        |    ORDER BY cos DESC, nid) AS rank FROM s),
-        |p AS (SELECT qid, nid AS pos_id FROM r WHERE rank = 1),
-        |ng AS (SELECT qid, array_to_string(
-        |    list(CAST(nid AS VARCHAR) ORDER BY rank), ',') AS neg_ids
-        |  FROM r WHERE rank > 5 AND rank <= 15 GROUP BY qid)
-        |SELECT p.qid AS query_id, pos_id,
-        |  coalesce(neg_ids, '') AS neg_ids
-        |FROM p LEFT JOIN ng ON ng.qid = p.qid
-        |ORDER BY query_id""".stripMargin,
-
-    "q372_sq8_index_stats" ->
-      """WITH v AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        |  FROM embeddings),
-        |dd AS (SELECT u.i AS d, e[u.i + 1] AS x
-        |  FROM v, unnest(range(64)) u(i)),
-        |b AS (SELECT d, min(x) AS lo, max(x) AS hi FROM dd GROUP BY d)
-        |SELECT (SELECT count(*) FROM embeddings) AS n_codes,
-        |  count(*) AS dim,
-        |  round(min(lo), 6) + 0.0 AS min_lo, round(max(hi), 6) + 0.0 AS max_hi,
-        |  round(CAST(sum(CAST(floor((hi - lo) * 1e6 + 0.5) AS BIGINT))
-        |    AS DOUBLE) / 1e6 / count(*), 6) AS mean_width
-        |FROM b""".stripMargin,
-
-    "q369_hard_negatives" ->
-      s"""WITH $queryCosCtes
-        |SELECT qid AS query_id, nid AS neighbor_id,
-        |  CAST(rank AS INTEGER) AS rank,
-        |  CAST(round(cos, 6) AS REAL) AS score
-        |FROM (SELECT *, row_number() OVER (PARTITION BY qid
-        |        ORDER BY cos DESC, nid) AS rank FROM s)
-        |WHERE rank > 5 AND rank <= 15 ORDER BY query_id, rank""".stripMargin,
-
-    "q367_domain_safe_split" -> {
-      val h = Dedup.h60Sql("domain")
-      s"""WITH u AS (SELECT doc_id, lower(source) || '.com' AS domain
-         |  FROM documents)
-         |SELECT doc_id, domain,
-         |  CASE WHEN ($h) % 100 < 10 THEN 'test'
-         |       WHEN ($h) % 100 < 20 THEN 'val'
-         |       ELSE 'train' END AS split
-         |FROM u ORDER BY doc_id""".stripMargin
-    },
-
-    "q368_crawl_pipeline" -> {
-      val hs = Dedup.h60Sql("CAST(doc_id AS VARCHAR)")
-      val hc = Dedup.h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")
-      s"""WITH u AS (SELECT doc_id, text, n_chars, source, $canonUrlSql AS cu
-         |  FROM documents),
-         |k1 AS (SELECT min(doc_id) AS doc_id FROM u GROUP BY cu),
-         |s1 AS (SELECT u.* FROM u JOIN k1 USING (doc_id)),
-         |k2 AS (SELECT min(doc_id) AS doc_id FROM s1 GROUP BY md5(text)),
-         |s2 AS (SELECT s1.* FROM s1 JOIN k2 USING (doc_id)),
-         |rep AS (SELECT doc_id, round(CAST(total - dist AS DOUBLE)
-         |    / greatest(total, 1), 6) AS f FROM
-         |  (SELECT doc_id, CAST(len(grams) AS BIGINT) AS total,
-         |     CAST(len(list_distinct(grams)) AS BIGINT) AS dist FROM
-         |    (SELECT doc_id, ${Dedup.shinglesSql("text", 2)} AS grams
-         |     FROM s2))),
-         |s3 AS (SELECT s2.* FROM s2 JOIN rep USING (doc_id)
-         |  WHERE f <= 0.3),
-         |d3 AS (SELECT *, lower(source) || '.com' AS domain FROM s3),
-         |rk AS (SELECT *, row_number() OVER (PARTITION BY domain
-         |    ORDER BY n_chars DESC, doc_id) AS rn FROM d3),
-         |s4 AS (SELECT * FROM rk WHERE rn <= 40),
-         |sh AS (SELECT doc_id, CAST(($hs) % 4 AS INT) AS shard,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    ($hc) AS h
-         |  FROM s4)
-         |SELECT shard, count(*) AS n_docs,
-         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-         |  min(doc_id) AS min_id, max(doc_id) AS max_id,
-         |  bit_xor(h) AS checksum
-         |FROM sh GROUP BY shard ORDER BY shard""".stripMargin
-    },
-
-    "q364_packing_sweep" ->
-      """WITH d AS (SELECT CAST(len(string_split(text, ' ')) AS BIGINT)
-        |    AS tok FROM documents),
-        |x AS (SELECT CAST(L AS BIGINT) AS seq_len, tok
-        |  FROM d, unnest([64, 128, 256, 512]) u(L)),
-        |a AS (SELECT seq_len, count(*) AS n_docs,
-        |    CAST(sum(tok) AS BIGINT) AS tokens_total,
-        |    CAST(sum((tok + seq_len - 1) // seq_len) AS BIGINT)
-        |      AS n_seq_padded
-        |  FROM x GROUP BY seq_len),
-        |b AS (SELECT *, CAST((tokens_total + seq_len - 1) // seq_len
-        |    AS BIGINT) AS n_seq_packed FROM a)
-        |SELECT seq_len, n_docs, tokens_total, n_seq_padded,
-        |  round(CAST(n_seq_padded * seq_len - tokens_total AS DOUBLE)
-        |    / (n_seq_padded * seq_len), 6) AS pad_share_padded,
-        |  n_seq_packed,
-        |  round(CAST(n_seq_packed * seq_len - tokens_total AS DOUBLE)
-        |    / (n_seq_packed * seq_len), 6) AS pad_share_packed
-        |FROM b ORDER BY seq_len""".stripMargin,
-
-    "q365_dedup_scorecard" ->
-      s"""WITH aug AS (SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, text || ' planted clone marker'
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |${sigBandCtes("aug")},
-         |g AS (SELECT DISTINCT doc_id AS did,
-         |    unnest(${Dedup.shinglesSql("text", NGRAM)}) AS g FROM aug),
-         |sz AS (SELECT did, count(*) AS n FROM g GROUP BY did),
-         |inter AS (SELECT cand.da, cand.db, count(*) AS i FROM cand
-         |  JOIN g ga ON ga.did = cand.da
-         |  JOIN g gb2 ON gb2.did = cand.db AND gb2.g = ga.g
-         |  GROUP BY 1, 2),
-         |jac AS (SELECT da, db FROM inter
-         |  JOIN sz sa ON sa.did = inter.da
-         |  JOIN sz sb ON sb.did = inter.db
-         |  WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
-         |cp AS (SELECT * FROM jac WHERE da >= 1000000 OR db >= 1000000),
-         |np AS (SELECT count(*) AS n_planted FROM documents
-         |  WHERE doc_id % 10 = 0),
-         |dc AS (SELECT count(*) AS n FROM cp WHERE db = da + 1000000),
-         |cc AS (SELECT count(*) AS n FROM cp)
-         |SELECT n_planted, CAST(dc.n AS BIGINT) AS n_detected,
-         |  CAST(cc.n AS BIGINT) AS n_clone_pairs,
-         |  CAST(cc.n - dc.n AS BIGINT) AS n_spurious,
-         |  round(CAST(dc.n AS DOUBLE) / n_planted, 6) AS recall,
-         |  CASE WHEN cc.n > 0
-         |    THEN round(CAST(dc.n AS DOUBLE) / cc.n, 6)
-         |    ELSE 0.0 END AS "precision"
-         |FROM np, dc, cc""".stripMargin,
-
-    "q362_shard_manifest" -> {
-      val h = Dedup.h60Sql("CAST(doc_id AS VARCHAR)")
-      val hc = Dedup.h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")
-      s"""WITH sh AS (SELECT doc_id,
-         |    CAST(($h) % 8 AS INT) AS shard,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    ($hc) AS h
-         |  FROM documents)
-         |SELECT shard, count(*) AS n_docs,
-         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-         |  min(doc_id) AS min_id, max(doc_id) AS max_id,
-         |  bit_xor(h) AS checksum
-         |FROM sh GROUP BY shard ORDER BY shard""".stripMargin
-    },
-
-    "q355_unigram_surprisal" ->
-      """WITH wx AS (SELECT doc_id, w FROM
-        |    (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-        |     FROM documents) WHERE w <> ''),
-        |c AS (SELECT w, count(*) AS c FROM wx GROUP BY w),
-        |n AS (SELECT CAST(sum(c) AS BIGINT) AS nn FROM c),
-        |q AS (SELECT doc_id,
-        |    CAST(floor(-ln(CAST(c AS DOUBLE) / nn) * 1e6 + 0.5) AS BIGINT)
-        |      AS q
-        |  FROM wx JOIN c USING (w), n)
-        |SELECT doc_id, count(*) AS n_words,
-        |  round(CAST(sum(q) AS DOUBLE) / 1e6 / count(*), 6)
-        |    AS mean_surprisal_nats
-        |FROM q GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  )
 }

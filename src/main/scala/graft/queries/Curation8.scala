@@ -83,7 +83,7 @@ object Curation8 extends Gates {
     CurationDay.foldedStates(s, day(s, d)).localCheckpoint(true)
   }
 
-  val queries: Map[String, QFn] = Map(
+  lazy val gates: Seq[Gate] = Seq(
 
     // ---- The round-10 flagship: the fully INCREMENTAL curation day.
     // q488 per-doc verdicts, q489 manifest fold, q490 state folds,
@@ -93,14 +93,32 @@ object Curation8 extends Gates {
     // corpus (the single documents-file scan is the id-pruned dedup
     // candidate verify fetch).
 
-    "q488_curation_day_decisions" -> ((s, dir) =>
-      dayDecisions(s, dir).orderBy("doc_id")),
+    Gate("q488_curation_day_decisions", (s, dir) =>
+      dayDecisions(s, dir).orderBy("doc_id"), oracle =
+      s"""WITH $dayCtes
+         |SELECT doc_id, decision,
+         |  CASE WHEN decision = 'admitted'
+         |    THEN CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
+         |      % ${CurationDay.NShards} AS INT) END AS shard
+         |FROM final ORDER BY doc_id""".stripMargin),
 
-    "q489_curation_day_manifest" -> ((s, dir) =>
-      dayManifest(s, dir).orderBy("shard")),
+    Gate("q489_curation_day_manifest", (s, dir) =>
+      dayManifest(s, dir).orderBy("shard"), oracle =
+      s"""WITH $dayCtes,
+         |m AS (SELECT doc_id,
+         |    CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
+         |      % ${CurationDay.NShards} AS INT) AS shard,
+         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
+         |    (${h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
+         |  FROM grown)
+         |SELECT shard, count(*) AS n_docs,
+         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+         |  min(doc_id) AS min_id, max(doc_id) AS max_id,
+         |  bit_xor(h) AS checksum
+         |FROM m GROUP BY shard ORDER BY shard""".stripMargin),
 
-    "q490_curation_day_states" -> ((s, dir) =>
-      dayStates(s, dir).orderBy("event_type")),
+    Gate("q490_curation_day_states", (s, dir) =>
+      dayStates(s, dir).orderBy("event_type"), oracle = fullStateOracle),
 
     // ---- Two-day lifecycle: day-2 runs against artifacts that
     // ALREADY absorbed day 1 (appended dedup index, folded manifest,
@@ -110,10 +128,16 @@ object Curation8 extends Gates {
     // paths, one oracle — the q483 pattern); q494's twice-folded
     // manifest == the manifest over the twice-grown curated corpus.
 
-    "q492_curation_day2_decisions" -> ((s, dir) =>
-      twoDay(s, dir)._2.orderBy("doc_id")),
+    Gate("q492_curation_day2_decisions", (s, dir) =>
+      twoDay(s, dir)._2.orderBy("doc_id"), oracle =
+      s"""WITH $twoDayCtes
+         |SELECT doc_id, decision,
+         |  CASE WHEN decision = 'admitted'
+         |    THEN CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
+         |      % ${CurationDay.NShards} AS INT) END AS shard
+         |FROM final2 ORDER BY doc_id""".stripMargin),
 
-    "q493_curation_day2_states" -> ((s, dir) => {
+    Gate("q493_curation_day2_states", (s, dir) => {
       val a = twoDay(s, dir)._1
       val d2 = s.read.parquet(a.day2Events)
       graft.ops.Scale.foldAggState(s.read.parquet(a.aggState1), d2,
@@ -121,14 +145,30 @@ object Curation8 extends Gates {
         .join(graft.ops.Scale.foldDistinctState(s, a.distinctState, d2,
           "event_type", "user_id", 16), "event_type")
         .orderBy("event_type")
-    }),
+    }, oracle =
+      // two engine paths, one oracle (the q483 pattern): the chained
+      // build -> fold -> append -> fold state answers q490's
+      // full-recompute SQL
+      fullStateOracle),
 
-    "q494_curation_day2_manifest" -> ((s, dir) => {
+    Gate("q494_curation_day2_manifest", (s, dir) => {
       val a = twoDay(s, dir)._1
       s.read.parquet(a.manifest2).orderBy("shard")
-    }),
+    }, oracle =
+      s"""WITH $twoDayCtes,
+         |m AS (SELECT doc_id,
+         |    CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
+         |      % ${CurationDay.NShards} AS INT) AS shard,
+         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
+         |    (${h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
+         |  FROM grown2)
+         |SELECT shard, count(*) AS n_docs,
+         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+         |  min(doc_id) AS min_id, max(doc_id) AS max_id,
+         |  bit_xor(h) AS checksum
+         |FROM m GROUP BY shard ORDER BY shard""".stripMargin),
 
-    "q491_curation_day_report" -> ((s, dir) => {
+    Gate("q491_curation_day_report", (s, dir) => {
       val dec = dayDecisions(s, dir)
       val cnt = dec.agg(
         count(lit(1)).as("n_delta"),
@@ -150,45 +190,133 @@ object Curation8 extends Gates {
       val ev = dayStates(s, dir)
         .agg(sum(col("n_rows")).as("total_events"))
       cnt.crossJoin(broadcast(man)).crossJoin(broadcast(ev))
-    }),
+    }, oracle =
+      s"""WITH $dayCtes,
+         |cnt AS (SELECT CAST(count(*) AS BIGINT) AS n_delta,
+         |$decisionCountCols
+         |  FROM final),
+         |tot AS (SELECT CAST(count(*) AS BIGINT) AS corpus_docs,
+         |  CAST(sum(CAST(len(string_split(text, ' ')) AS BIGINT))
+         |    AS BIGINT) AS corpus_tokens FROM grown),
+         |ev AS (SELECT CAST(count(*) AS BIGINT) AS total_events
+         |  FROM events
+         |  WHERE ts IS NOT NULL AND event_type IS NOT NULL)
+         |SELECT cnt.*, tot.*, ev.* FROM cnt, tot, ev""".stripMargin),
 
     // Heaps-law vocabulary growth: 8 equal-count doc-id-order
     // prefixes, cumulative doc/token/vocab counts + marginal
     // new-vocab rate — the "when does more of this source stop
     // buying vocabulary" curve.
-    "q495_vocab_growth" -> ((s, dir) =>
+    Gate("q495_vocab_growth", (s, dir) =>
       graft.ops.Corpus.vocabGrowth(t(s, dir, "documents"), "text",
           "doc_id")
-        .orderBy("step")),
+        .orderBy("step"), oracle =
+      s"""WITH d AS (SELECT doc_id, text,
+         |    row_number() OVER (ORDER BY doc_id) AS rn,
+         |    count(*) OVER () AS n FROM documents),
+         |s AS (SELECT doc_id, text,
+         |    CAST(((rn - 1) * 8) // n AS BIGINT) AS step FROM d),
+         |wx AS (SELECT step, w FROM (SELECT step,
+         |    unnest(string_split(text, ' ')) AS w FROM s) WHERE w <> ''),
+         |tok AS (SELECT step, CAST(count(*) AS BIGINT) AS tk
+         |  FROM wx GROUP BY 1),
+         |dc AS (SELECT step, CAST(count(*) AS BIGINT) AS dk
+         |  FROM s GROUP BY 1),
+         |gx AS (SELECT step,
+         |    unnest(${graft.ops.Dedup.shinglesSql("text", 2)}) AS g FROM s),
+         |fv AS (SELECT g, min(step) AS step FROM gx GROUP BY g),
+         |nv AS (SELECT step, CAST(count(*) AS BIGINT) AS nw
+         |  FROM fv GROUP BY 1)
+        |SELECT tok.step,
+        |  CAST(sum(dk) OVER win AS BIGINT) AS n_docs_cum,
+        |  CAST(sum(tk) OVER win AS BIGINT) AS n_tokens_cum,
+        |  CAST(sum(coalesce(nw, 0)) OVER win AS BIGINT) AS n_vocab_cum,
+        |  coalesce(nw, 0) * 1000000 // greatest(tk, 1) AS new_vocab_ppm
+        |FROM tok JOIN dc USING (step) LEFT JOIN nv USING (step)
+        |WINDOW win AS (ORDER BY tok.step
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |ORDER BY tok.step""".stripMargin),
 
     // Inter-arrival gap ladder per event type ((type, user)-keyed
     // consecutive gaps, fixed human-scale integer boundaries).
-    "q496_inter_arrival" -> ((s, dir) =>
+    Gate("q496_inter_arrival", (s, dir) =>
       graft.ops.Events.interArrival(t(s, dir, "events"), "user_id",
           "event_type", "ts")
-        .orderBy("event_type", "bucket")),
+        .orderBy("event_type", "bucket"), oracle =
+      """WITH e AS (SELECT event_type, user_id, epoch_us(ts) AS tus,
+        |    event_id FROM events
+        |  WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
+        |g AS (SELECT event_type,
+        |    tus - lag(tus) OVER (PARTITION BY event_type, user_id
+        |      ORDER BY tus, event_id) AS gap
+        |  FROM e),
+        |b AS (SELECT event_type,
+        |    CASE WHEN gap < 1000000 THEN 'a_lt_1s'
+        |      WHEN gap < 10000000 THEN 'b_1s_10s'
+        |      WHEN gap < 60000000 THEN 'c_10s_1m'
+        |      WHEN gap < 600000000 THEN 'd_1m_10m'
+        |      WHEN gap < 3600000000 THEN 'e_10m_1h'
+        |      WHEN gap < 21600000000 THEN 'f_1h_6h'
+        |      WHEN gap < 86400000000 THEN 'g_6h_1d'
+        |      ELSE 'h_ge_1d' END AS bucket
+        |  FROM g WHERE gap IS NOT NULL),
+        |c AS (SELECT event_type, bucket, CAST(count(*) AS BIGINT) AS n
+        |  FROM b GROUP BY 1, 2)
+        |SELECT event_type, bucket, n,
+        |  n * 1000000 // (CAST(sum(n) OVER (PARTITION BY event_type)
+        |    AS BIGINT)) AS share_ppm
+        |FROM c ORDER BY event_type, bucket""".stripMargin),
 
     // N-gram diversity (TTR) per source for n = 1..3.
-    "q497_ngram_diversity" -> ((s, dir) =>
+    Gate("q497_ngram_diversity", (s, dir) =>
       graft.ops.Corpus.ngramDiversity(t(s, dir, "documents"), "text",
           "source")
-        .orderBy("source", "n")),
+        .orderBy("source", "n"), oracle = {
+      def one(n: Int) = {
+        val sh = graft.ops.Dedup.shinglesSql("text", n)
+        s"""SELECT source, CAST($n AS BIGINT) AS n,
+           |  CAST(count(*) AS BIGINT) AS n_grams,
+           |  CAST(count(DISTINCT g) AS BIGINT) AS n_distinct,
+           |  CAST(count(DISTINCT g) AS BIGINT) * 1000000
+           |    // greatest(CAST(count(*) AS BIGINT), 1) AS ttr_ppm
+           |FROM (SELECT source, unnest($sh) AS g FROM documents)
+           |GROUP BY source""".stripMargin
+      }
+      (1 to 3).map(one).mkString("\nUNION ALL\n") +
+        "\nORDER BY source, n"
+    }),
 
     // Token-budget mixture plan: 1.2x-corpus budget (upsampling
     // regime), 30% per-lang cap, cap-and-redistribute, sampling
     // rates + epoch counts (the fixture exercises capped/uncapped
     // AND single/multi-epoch branches).
-    "q498_token_budget_plan" -> ((s, dir) =>
+    Gate("q498_token_budget_plan", (s, dir) =>
       graft.ops.Corpus.tokenBudgetPlan(t(s, dir, "documents"), "text",
           "lang")
-        .orderBy("lang")),
+        .orderBy("lang"), oracle =
+      s"""WITH $budgetCtes,
+        |fin AS (SELECT lang, t, raw_ppm, total,
+        |    CASE WHEN raw_ppm > 300000 THEN 300000
+        |      ELSE raw_ppm + (CASE WHEN raw_uncapped > 0
+        |        THEN (1000000 - assigned) * raw_ppm // raw_uncapped
+        |        ELSE 0 END) END AS final_ppm,
+        |    (total * 6 + 4) // 5 AS budget
+        |  FROM raw, sums)
+        |SELECT lang, t AS n_tokens, raw_ppm,
+        |  CAST(final_ppm AS BIGINT) AS final_ppm,
+        |  CAST(budget * final_ppm // 1000000 AS BIGINT) AS target_tokens,
+        |  CAST(budget * final_ppm // 1000000 * 1000000
+        |    // greatest(t, 1) AS BIGINT) AS sample_ppm,
+        |  CAST((budget * final_ppm // 1000000 * 1000000
+        |    // greatest(t, 1) + 999999) // 1000000 AS BIGINT) AS epochs
+        |FROM fin ORDER BY lang""".stripMargin),
 
     // The frontier k-core peel under the RELIABLE checkpoint swap
     // (graft.reliableCkpt=1 + a real checkpoint dir): byte-identical
     // answer to q461's localCheckpoint mode — the cluster swap as a
     // GATE row, not just a spec (two engine MODES, one oracle: the
     // q483 pattern applied to execution infrastructure).
-    "q501_kcore_reliable_ckpt" -> ((s, dir) => {
+    Gate("q501_kcore_reliable_ckpt", (s, dir) => {
       val ck = Curation2.tempIndexDir("graft_reliable_ckpt_")
       // the checkpoint dir CANNOT be unset on a SparkContext, so when
       // none was set before, the dir must stay valid for the session
@@ -215,7 +343,9 @@ object Curation8 extends Gates {
             .localCheckpoint(true) // decouple from the ckpt files below
         }
       } finally prev.foreach(s.sparkContext.setCheckpointDir)
-    }),
+    }, oracle =
+      // the swap changes execution infrastructure, never the answer
+      graft.queries.Curation7.kcoreSql),
 
     // Persisted quantile (cent-histogram) state: bootstrap from the
     // pre-Jan-28 events, fold the rest, read exact p50/p90/p99 off
@@ -224,7 +354,7 @@ object Curation8 extends Gates {
     // CMS q458, window q462, session q469). Fold == rebuild by
     // construction (additive counts); the oracle is the full
     // order-statistic recompute over all events.
-    "q504_quantile_state" -> ((s, dir) => {
+    Gate("q504_quantile_state", (s, dir) => {
       val ev = t(s, dir, "events")
         .where(col("event_type").isNotNull && col("value").isNotNull &&
           !isnan(col("value")))
@@ -242,7 +372,10 @@ object Curation8 extends Gates {
           .orderBy("event_type")
           .localCheckpoint(true)
       } finally Curation2.deleteDir(p)
-    }),
+    }, oracle =
+      s"""WITH ${Curation7.centCountCtes},
+        |$centQuantileCols
+        |FROM ct GROUP BY g ORDER BY event_type""".stripMargin),
 
     // Sampling manifest: the q498 token-budget plan projected onto
     // the shard layout — per (shard, lang) cell: token mass, the
@@ -252,7 +385,7 @@ object Curation8 extends Gates {
     // for token budgets). Cell targets are exact integer ppm draws,
     // so sum(cell targets) per lang <= the plan's lang target with
     // only truncation slack.
-    "q503_sampling_manifest" -> ((s, dir) => {
+    Gate("q503_sampling_manifest", (s, dir) => {
       val docs = t(s, dir, "documents")
       val plan = graft.ops.Corpus.tokenBudgetPlan(docs, "text", "lang")
         .select("lang", "sample_ppm")
@@ -269,13 +402,35 @@ object Curation8 extends Gates {
           idiv(col("n_tokens") * col("sample_ppm"), 1000000L)
             .as("target_tokens"))
         .orderBy("shard", "lang")
+    }, oracle = {
+      val h = graft.ops.Dedup.h60Sql("CAST(doc_id AS VARCHAR)")
+      s"""WITH $budgetCtes,
+         |fin AS (SELECT lang, t, total,
+         |    CASE WHEN raw_ppm > 300000 THEN 300000
+         |      ELSE raw_ppm + (CASE WHEN raw_uncapped > 0
+         |        THEN (1000000 - assigned) * raw_ppm // raw_uncapped
+         |        ELSE 0 END) END AS final_ppm,
+         |    (total * 6 + 4) // 5 AS budget
+         |  FROM raw, sums),
+         |plan AS (SELECT lang,
+         |    CAST(budget * final_ppm // 1000000 * 1000000
+         |      // greatest(t, 1) AS BIGINT) AS sample_ppm
+         |  FROM fin),
+         |cells AS (SELECT CAST(($h) % 4 AS INT) AS shard, lang,
+         |    CAST(sum(len(string_split(text, ' '))) AS BIGINT)
+         |      AS n_tokens
+         |  FROM documents GROUP BY 1, 2)
+         |SELECT shard, cells.lang, n_tokens, sample_ppm,
+         |  n_tokens * sample_ppm // 1000000 AS target_tokens
+         |FROM cells JOIN plan ON plan.lang = cells.lang
+         |ORDER BY shard, cells.lang""".stripMargin
     }),
 
     // Dedup-index health card over the q283-split index: hash-set
     // size, band rows, bands/doc, LSH bucket count + hottest bucket
     // (the candidate-explosion early warning an ops dashboard reads
     // before admitting a delta day).
-    "q502_dedup_index_stats" -> ((s, dir) => {
+    Gate("q502_dedup_index_stats", (s, dir) => {
       val docs = t(s, dir, "documents")
       val corpus = docs.where(pmod(col("doc_id"), lit(5L)) =!= 0)
       val idx = Curation2.tempIndexDir("graft_dedup_stats_")
@@ -284,7 +439,23 @@ object Curation8 extends Gates {
           NorthStar.NGRAM, NorthStar.K, NorthStar.BANDS)
         graft.ops.Dedup.dedupIndexStats(s, idx).localCheckpoint(true)
       } finally Curation2.deleteDir(idx)
-    }),
+    }, oracle =
+      s"""WITH corpus AS (SELECT * FROM documents WHERE doc_id % 5 <> 0),
+         |${NorthStar.sigCtes("corpus", "c")},
+         |bands AS (${NorthStar.bandsSql("c")}),
+         |bk AS (SELECT band, bh, CAST(count(*) AS BIGINT) AS c
+         |  FROM bands GROUP BY 1, 2)
+         |SELECT
+         |  (SELECT CAST(count(DISTINCT md5(text)) AS BIGINT) FROM corpus)
+         |    AS n_hashes,
+         |  (SELECT CAST(count(*) AS BIGINT) FROM bands) AS n_band_rows,
+         |  (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) FROM bands)
+         |    AS n_docs,
+         |  (SELECT CAST(count(*) AS BIGINT) FROM bk) AS n_buckets,
+         |  (SELECT CAST(max(c) AS BIGINT) FROM bk) AS max_bucket,
+         |  (SELECT CAST(count(*) AS BIGINT) FROM bands)
+         |    // greatest((SELECT CAST(count(DISTINCT doc_id) AS BIGINT)
+         |      FROM bands), 1) AS bands_per_doc""".stripMargin),
 
     // Schema-evolution report: two event-file batches written under
     // DIFFERENT schemas (batch B adds event_type) into one directory,
@@ -292,7 +463,7 @@ object Curation8 extends Gates {
     // presence, and the non-null row mass it actually holds. The
     // presence/type columns pin the footer-level merge; the row-mass
     // column is data-bound (the oracle re-derives it from events).
-    "q499_schema_evolution" -> ((s, dir) => {
+    Gate("q499_schema_evolution", (s, dir) => {
       val p = Curation2.tempIndexDir("graft_schema_evo_")
       try {
         val ev = t(s, dir, "events").where(col("event_id").isNotNull)
@@ -306,13 +477,32 @@ object Curation8 extends Gates {
           .orderBy("column")
           .localCheckpoint(true)
       } finally Curation2.deleteDir(p)
-    }),
+    }, oracle =
+      """WITH ev AS (SELECT * FROM events WHERE event_id IS NOT NULL),
+        |a AS (SELECT * FROM ev WHERE event_id % 2 = 0),
+        |b AS (SELECT * FROM ev WHERE event_id % 2 = 1)
+        |SELECT * FROM (
+        |  SELECT 'event_id' AS "column", 'bigint' AS dtype,
+        |    CAST(4 AS BIGINT) AS n_files,
+        |    CAST(4 AS BIGINT) AS n_files_present,
+        |    (SELECT CAST(count(event_id) AS BIGINT) FROM ev)
+        |      AS n_rows_nonnull
+        |  UNION ALL
+        |  SELECT 'event_type', 'string', 4, 2,
+        |    (SELECT CAST(count(event_type) AS BIGINT) FROM b)
+        |  UNION ALL
+        |  SELECT 'user_id', 'bigint', 4, 4,
+        |    (SELECT CAST(count(user_id) AS BIGINT) FROM ev)
+        |  UNION ALL
+        |  SELECT 'value', 'double', 4, 4,
+        |    (SELECT CAST(count(value) AS BIGINT) FROM ev))
+        |ORDER BY "column"""".stripMargin),
 
     // Exactly-once batch ingest: b1 ingested, b1 REPLAYED (must
     // no-op against the ledger), b2 ingested — the table holds each
     // batch exactly once and the replay's return value is pinned in
     // the output row.
-    "q500_idempotent_ingest" -> ((s, dir) => {
+    Gate("q500_idempotent_ingest", (s, dir) => {
       val p = Curation2.tempIndexDir("graft_ingest_")
       try {
         val ev = t(s, dir, "events").where(col("event_id").isNotNull)
@@ -332,7 +522,13 @@ object Curation8 extends Gates {
           .orderBy("__batch", "event_type")
           .localCheckpoint(true)
       } finally Curation2.deleteDir(p)
-    }),
+    }, oracle =
+      """SELECT CASE WHEN event_id % 2 = 0 THEN 'b1' ELSE 'b2' END
+        |    AS __batch,
+        |  event_type, CAST(count(*) AS BIGINT) AS n,
+        |  '101' AS ingest_results
+        |FROM events WHERE event_id IS NOT NULL
+        |GROUP BY 1, 2 ORDER BY __batch, event_type""".stripMargin),
 
     // OTel export oracle gate: per-(event_type, day) grid -> Gauge
     // datapoints (daily counts) + Spans (day activity intervals with
@@ -342,7 +538,7 @@ object Curation8 extends Gates {
     // (the 5x30 grid, never corpus rows) — in production the same
     // bytes stream to a collector per partition and no decode side
     // exists.
-    "q487_otel_roundtrip" -> ((s, dir) => {
+    Gate("q487_otel_roundtrip", (s, dir) => {
       import s.implicits._
       import graft.streaming.{OtelSink, OtlpWireCapture, OtlpProtoReader => R}
       val dayNs = 86400000000000L
@@ -395,7 +591,26 @@ object Curation8 extends Gates {
             "trace_id", "span_id")
           .orderBy("signal", "name", "attr", "t0_ns")
       } finally { gaugeWire.close(); spanWire.close() }
-    }))
+    }, oracle =
+      """WITH g AS (SELECT event_type,
+        |    epoch_us(ts) // 86400000000 AS day,
+        |    CAST(count(*) AS BIGINT) AS n,
+        |    min(epoch_us(ts)) AS t0, max(epoch_us(ts)) AS t1
+        |  FROM events WHERE event_type IS NOT NULL GROUP BY 1, 2)
+        |SELECT * FROM (
+        |  SELECT 'gauge' AS signal, 'events.daily.count' AS name,
+        |    event_type AS attr, day * 86400000000000 AS t0_ns,
+        |    CAST(NULL AS BIGINT) AS t1_ns, CAST(n AS DOUBLE) AS value,
+        |    CAST(NULL AS VARCHAR) AS trace_id,
+        |    CAST(NULL AS VARCHAR) AS span_id
+        |  FROM g
+        |  UNION ALL
+        |  SELECT 'span', event_type, CAST(n AS VARCHAR), t0 * 1000,
+        |    t1 * 1000, CAST(NULL AS DOUBLE),
+        |    md5(event_type || ':' || CAST(day AS VARCHAR)),
+        |    substr(md5(event_type || ':' || CAST(day AS VARCHAR)), 1, 16)
+        |  FROM g)
+        |ORDER BY signal, name, attr, t0_ns""".stripMargin))
 
   // ---- generated oracle SQL for the curation day -----------------
 
@@ -571,256 +786,4 @@ object Curation8 extends Gates {
       |    CAST(sum(CASE WHEN raw_ppm > 300000 THEN 0
       |      ELSE raw_ppm END) AS BIGINT) AS raw_uncapped
       |  FROM raw)""".stripMargin
-
-  val oracles: Map[String, String] = Map(
-
-    "q488_curation_day_decisions" ->
-      s"""WITH $dayCtes
-         |SELECT doc_id, decision,
-         |  CASE WHEN decision = 'admitted'
-         |    THEN CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
-         |      % ${CurationDay.NShards} AS INT) END AS shard
-         |FROM final ORDER BY doc_id""".stripMargin,
-
-    "q489_curation_day_manifest" ->
-      s"""WITH $dayCtes,
-         |m AS (SELECT doc_id,
-         |    CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
-         |      % ${CurationDay.NShards} AS INT) AS shard,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    (${h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
-         |  FROM grown)
-         |SELECT shard, count(*) AS n_docs,
-         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-         |  min(doc_id) AS min_id, max(doc_id) AS max_id,
-         |  bit_xor(h) AS checksum
-         |FROM m GROUP BY shard ORDER BY shard""".stripMargin,
-
-    "q492_curation_day2_decisions" ->
-      s"""WITH $twoDayCtes
-         |SELECT doc_id, decision,
-         |  CASE WHEN decision = 'admitted'
-         |    THEN CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
-         |      % ${CurationDay.NShards} AS INT) END AS shard
-         |FROM final2 ORDER BY doc_id""".stripMargin,
-
-    // two engine paths, one oracle (the q483 pattern): the chained
-    // build -> fold -> append -> fold state answers q490's
-    // full-recompute SQL
-    "q493_curation_day2_states" -> fullStateOracle,
-
-    "q494_curation_day2_manifest" ->
-      s"""WITH $twoDayCtes,
-         |m AS (SELECT doc_id,
-         |    CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
-         |      % ${CurationDay.NShards} AS INT) AS shard,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    (${h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
-         |  FROM grown2)
-         |SELECT shard, count(*) AS n_docs,
-         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-         |  min(doc_id) AS min_id, max(doc_id) AS max_id,
-         |  bit_xor(h) AS checksum
-         |FROM m GROUP BY shard ORDER BY shard""".stripMargin,
-
-    "q490_curation_day_states" -> fullStateOracle,
-
-    "q491_curation_day_report" ->
-      s"""WITH $dayCtes,
-         |cnt AS (SELECT CAST(count(*) AS BIGINT) AS n_delta,
-         |$decisionCountCols
-         |  FROM final),
-         |tot AS (SELECT CAST(count(*) AS BIGINT) AS corpus_docs,
-         |  CAST(sum(CAST(len(string_split(text, ' ')) AS BIGINT))
-         |    AS BIGINT) AS corpus_tokens FROM grown),
-         |ev AS (SELECT CAST(count(*) AS BIGINT) AS total_events
-         |  FROM events
-         |  WHERE ts IS NOT NULL AND event_type IS NOT NULL)
-         |SELECT cnt.*, tot.*, ev.* FROM cnt, tot, ev""".stripMargin,
-
-    "q495_vocab_growth" ->
-      s"""WITH d AS (SELECT doc_id, text,
-         |    row_number() OVER (ORDER BY doc_id) AS rn,
-         |    count(*) OVER () AS n FROM documents),
-         |s AS (SELECT doc_id, text,
-         |    CAST(((rn - 1) * 8) // n AS BIGINT) AS step FROM d),
-         |wx AS (SELECT step, w FROM (SELECT step,
-         |    unnest(string_split(text, ' ')) AS w FROM s) WHERE w <> ''),
-         |tok AS (SELECT step, CAST(count(*) AS BIGINT) AS tk
-         |  FROM wx GROUP BY 1),
-         |dc AS (SELECT step, CAST(count(*) AS BIGINT) AS dk
-         |  FROM s GROUP BY 1),
-         |gx AS (SELECT step,
-         |    unnest(${graft.ops.Dedup.shinglesSql("text", 2)}) AS g FROM s),
-         |fv AS (SELECT g, min(step) AS step FROM gx GROUP BY g),
-         |nv AS (SELECT step, CAST(count(*) AS BIGINT) AS nw
-         |  FROM fv GROUP BY 1)
-        |SELECT tok.step,
-        |  CAST(sum(dk) OVER win AS BIGINT) AS n_docs_cum,
-        |  CAST(sum(tk) OVER win AS BIGINT) AS n_tokens_cum,
-        |  CAST(sum(coalesce(nw, 0)) OVER win AS BIGINT) AS n_vocab_cum,
-        |  coalesce(nw, 0) * 1000000 // greatest(tk, 1) AS new_vocab_ppm
-        |FROM tok JOIN dc USING (step) LEFT JOIN nv USING (step)
-        |WINDOW win AS (ORDER BY tok.step
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY tok.step""".stripMargin,
-
-    "q496_inter_arrival" ->
-      """WITH e AS (SELECT event_type, user_id, epoch_us(ts) AS tus,
-        |    event_id FROM events
-        |  WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
-        |g AS (SELECT event_type,
-        |    tus - lag(tus) OVER (PARTITION BY event_type, user_id
-        |      ORDER BY tus, event_id) AS gap
-        |  FROM e),
-        |b AS (SELECT event_type,
-        |    CASE WHEN gap < 1000000 THEN 'a_lt_1s'
-        |      WHEN gap < 10000000 THEN 'b_1s_10s'
-        |      WHEN gap < 60000000 THEN 'c_10s_1m'
-        |      WHEN gap < 600000000 THEN 'd_1m_10m'
-        |      WHEN gap < 3600000000 THEN 'e_10m_1h'
-        |      WHEN gap < 21600000000 THEN 'f_1h_6h'
-        |      WHEN gap < 86400000000 THEN 'g_6h_1d'
-        |      ELSE 'h_ge_1d' END AS bucket
-        |  FROM g WHERE gap IS NOT NULL),
-        |c AS (SELECT event_type, bucket, CAST(count(*) AS BIGINT) AS n
-        |  FROM b GROUP BY 1, 2)
-        |SELECT event_type, bucket, n,
-        |  n * 1000000 // (CAST(sum(n) OVER (PARTITION BY event_type)
-        |    AS BIGINT)) AS share_ppm
-        |FROM c ORDER BY event_type, bucket""".stripMargin,
-
-    "q497_ngram_diversity" -> {
-      def one(n: Int) = {
-        val sh = graft.ops.Dedup.shinglesSql("text", n)
-        s"""SELECT source, CAST($n AS BIGINT) AS n,
-           |  CAST(count(*) AS BIGINT) AS n_grams,
-           |  CAST(count(DISTINCT g) AS BIGINT) AS n_distinct,
-           |  CAST(count(DISTINCT g) AS BIGINT) * 1000000
-           |    // greatest(CAST(count(*) AS BIGINT), 1) AS ttr_ppm
-           |FROM (SELECT source, unnest($sh) AS g FROM documents)
-           |GROUP BY source""".stripMargin
-      }
-      (1 to 3).map(one).mkString("\nUNION ALL\n") +
-        "\nORDER BY source, n"
-    },
-
-    "q498_token_budget_plan" ->
-      s"""WITH $budgetCtes,
-        |fin AS (SELECT lang, t, raw_ppm, total,
-        |    CASE WHEN raw_ppm > 300000 THEN 300000
-        |      ELSE raw_ppm + (CASE WHEN raw_uncapped > 0
-        |        THEN (1000000 - assigned) * raw_ppm // raw_uncapped
-        |        ELSE 0 END) END AS final_ppm,
-        |    (total * 6 + 4) // 5 AS budget
-        |  FROM raw, sums)
-        |SELECT lang, t AS n_tokens, raw_ppm,
-        |  CAST(final_ppm AS BIGINT) AS final_ppm,
-        |  CAST(budget * final_ppm // 1000000 AS BIGINT) AS target_tokens,
-        |  CAST(budget * final_ppm // 1000000 * 1000000
-        |    // greatest(t, 1) AS BIGINT) AS sample_ppm,
-        |  CAST((budget * final_ppm // 1000000 * 1000000
-        |    // greatest(t, 1) + 999999) // 1000000 AS BIGINT) AS epochs
-        |FROM fin ORDER BY lang""".stripMargin,
-
-    // the swap changes execution infrastructure, never the answer
-    "q501_kcore_reliable_ckpt" ->
-      graft.queries.Curation7.oracles("q461_kcore"),
-
-    "q504_quantile_state" ->
-      s"""WITH ${Curation7.centCountCtes},
-        |$centQuantileCols
-        |FROM ct GROUP BY g ORDER BY event_type""".stripMargin,
-
-    "q503_sampling_manifest" -> {
-      val h = graft.ops.Dedup.h60Sql("CAST(doc_id AS VARCHAR)")
-      s"""WITH $budgetCtes,
-         |fin AS (SELECT lang, t, total,
-         |    CASE WHEN raw_ppm > 300000 THEN 300000
-         |      ELSE raw_ppm + (CASE WHEN raw_uncapped > 0
-         |        THEN (1000000 - assigned) * raw_ppm // raw_uncapped
-         |        ELSE 0 END) END AS final_ppm,
-         |    (total * 6 + 4) // 5 AS budget
-         |  FROM raw, sums),
-         |plan AS (SELECT lang,
-         |    CAST(budget * final_ppm // 1000000 * 1000000
-         |      // greatest(t, 1) AS BIGINT) AS sample_ppm
-         |  FROM fin),
-         |cells AS (SELECT CAST(($h) % 4 AS INT) AS shard, lang,
-         |    CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-         |      AS n_tokens
-         |  FROM documents GROUP BY 1, 2)
-         |SELECT shard, cells.lang, n_tokens, sample_ppm,
-         |  n_tokens * sample_ppm // 1000000 AS target_tokens
-         |FROM cells JOIN plan ON plan.lang = cells.lang
-         |ORDER BY shard, cells.lang""".stripMargin
-    },
-
-    "q502_dedup_index_stats" ->
-      s"""WITH corpus AS (SELECT * FROM documents WHERE doc_id % 5 <> 0),
-         |${NorthStar.sigCtes("corpus", "c")},
-         |bands AS (${NorthStar.bandsSql("c")}),
-         |bk AS (SELECT band, bh, CAST(count(*) AS BIGINT) AS c
-         |  FROM bands GROUP BY 1, 2)
-         |SELECT
-         |  (SELECT CAST(count(DISTINCT md5(text)) AS BIGINT) FROM corpus)
-         |    AS n_hashes,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM bands) AS n_band_rows,
-         |  (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) FROM bands)
-         |    AS n_docs,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM bk) AS n_buckets,
-         |  (SELECT CAST(max(c) AS BIGINT) FROM bk) AS max_bucket,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM bands)
-         |    // greatest((SELECT CAST(count(DISTINCT doc_id) AS BIGINT)
-         |      FROM bands), 1) AS bands_per_doc""".stripMargin,
-
-    "q499_schema_evolution" ->
-      """WITH ev AS (SELECT * FROM events WHERE event_id IS NOT NULL),
-        |a AS (SELECT * FROM ev WHERE event_id % 2 = 0),
-        |b AS (SELECT * FROM ev WHERE event_id % 2 = 1)
-        |SELECT * FROM (
-        |  SELECT 'event_id' AS "column", 'bigint' AS dtype,
-        |    CAST(4 AS BIGINT) AS n_files,
-        |    CAST(4 AS BIGINT) AS n_files_present,
-        |    (SELECT CAST(count(event_id) AS BIGINT) FROM ev)
-        |      AS n_rows_nonnull
-        |  UNION ALL
-        |  SELECT 'event_type', 'string', 4, 2,
-        |    (SELECT CAST(count(event_type) AS BIGINT) FROM b)
-        |  UNION ALL
-        |  SELECT 'user_id', 'bigint', 4, 4,
-        |    (SELECT CAST(count(user_id) AS BIGINT) FROM ev)
-        |  UNION ALL
-        |  SELECT 'value', 'double', 4, 4,
-        |    (SELECT CAST(count(value) AS BIGINT) FROM ev))
-        |ORDER BY "column"""".stripMargin,
-
-    "q500_idempotent_ingest" ->
-      """SELECT CASE WHEN event_id % 2 = 0 THEN 'b1' ELSE 'b2' END
-        |    AS __batch,
-        |  event_type, CAST(count(*) AS BIGINT) AS n,
-        |  '101' AS ingest_results
-        |FROM events WHERE event_id IS NOT NULL
-        |GROUP BY 1, 2 ORDER BY __batch, event_type""".stripMargin,
-
-    "q487_otel_roundtrip" ->
-      """WITH g AS (SELECT event_type,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    min(epoch_us(ts)) AS t0, max(epoch_us(ts)) AS t1
-        |  FROM events WHERE event_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT * FROM (
-        |  SELECT 'gauge' AS signal, 'events.daily.count' AS name,
-        |    event_type AS attr, day * 86400000000000 AS t0_ns,
-        |    CAST(NULL AS BIGINT) AS t1_ns, CAST(n AS DOUBLE) AS value,
-        |    CAST(NULL AS VARCHAR) AS trace_id,
-        |    CAST(NULL AS VARCHAR) AS span_id
-        |  FROM g
-        |  UNION ALL
-        |  SELECT 'span', event_type, CAST(n AS VARCHAR), t0 * 1000,
-        |    t1 * 1000, CAST(NULL AS DOUBLE),
-        |    md5(event_type || ':' || CAST(day AS VARCHAR)),
-        |    substr(md5(event_type || ':' || CAST(day AS VARCHAR)), 1, 16)
-        |  FROM g)
-        |ORDER BY signal, name, attr, t0_ns""".stripMargin)
 }

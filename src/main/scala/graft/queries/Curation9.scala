@@ -78,54 +78,117 @@ object Curation9 extends Gates {
     (a, dec5)
   }
 
-  val queries: Map[String, QFn] = Map(
+  lazy val gates: Seq[Gate] = Seq(
 
-    "q505_curation_stream_decisions" -> ((s, dir) =>
+    Gate("q505_curation_stream_decisions", (s, dir) =>
       CurationNDay.allDecisions(s, streamed(s, dir)._1)
-        .orderBy("day", "doc_id")),
+        .orderBy("day", "doc_id"), oracle = decisionsOracle),
 
     // The pipeline's PRODUCT, gated directly: the materialized
     // shard-partitioned corpus after the four streamed days ==
     // the four-times-grown curated corpus, row for row, text and
     // shard placement included.
-    "q516_curated_corpus" -> ((s, dir) =>
+    Gate("q516_curated_corpus", (s, dir) =>
       s.read.parquet(streamed(s, dir)._1.corpusDir)
         .select("doc_id", "shard", "text")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), oracle =
+      s"""WITH $nDayCtes
+         |SELECT doc_id,
+         |  CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
+         |    % ${CurationDay.NShards} AS INT) AS shard, text
+         |FROM grown4 ORDER BY doc_id""".stripMargin),
 
     // Retraction day: the manifest after retracting doc_id%16==1
     // (untouched shards carried, touched shards recomputed from their
     // pruned post-delete partitions) == the manifest over
     // grown4-minus-retracted.
-    "q517_retraction_manifest" -> ((s, dir) => {
+    Gate("q517_retraction_manifest", (s, dir) => {
       val a = retracted(s, dir)._1
       s.read.parquet(a.manifestRetract(1)).orderBy("shard")
-    }),
+    }, oracle =
+      s"""WITH $nDayCtes,
+         |$retractionCtes,
+         |m AS (SELECT doc_id,
+         |    CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
+         |      % ${CurationDay.NShards} AS INT) AS shard,
+         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
+         |    (${h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
+         |  FROM corpus5)
+         |SELECT shard, count(*) AS n_docs,
+         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+         |  min(doc_id) AS min_id, max(doc_id) AS max_id,
+         |  bit_xor(h) AS checksum
+         |FROM m GROUP BY shard ORDER BY shard""".stripMargin),
 
     // Post-retraction re-offer: retracted texts come back ADMITTED
     // (their hashes/bands really left the index), the surviving-doc
     // copy stays dup_exact_corpus — decisions against the shrunk
     // index == the oracle's recompute over corpus5.
-    "q518_post_retraction_decisions" -> ((s, dir) =>
-      retracted(s, dir)._2.orderBy("doc_id")),
+    Gate("q518_post_retraction_decisions", (s, dir) =>
+      retracted(s, dir)._2.orderBy("doc_id"), oracle =
+      s"""WITH $nDayCtes,
+         |$retractionCtes,
+         |${Curation.dedupDecisionCtes("corpus5", "batch5", "5")},
+         |${Curation8.postGateCtes("5")}
+         |SELECT doc_id, decision,
+         |  CASE WHEN decision = 'admitted'
+         |    THEN CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
+         |      % ${CurationDay.NShards} AS INT) END AS shard
+         |FROM final5 ORDER BY doc_id""".stripMargin),
 
-    "q506_curation_stream_manifest" -> ((s, dir) =>
+    Gate("q506_curation_stream_manifest", (s, dir) =>
       s.read.parquet(streamed(s, dir)._1.manifestDay(CurationNDay.NDays))
-        .orderBy("shard")),
+        .orderBy("shard"), oracle = manifestOracle),
 
-    "q507_curation_stream_states" -> ((s, dir) =>
+    Gate("q507_curation_stream_states", (s, dir) =>
       CurationNDay.statesPanel(s, streamed(s, dir)._1)
-        .orderBy("event_type")),
+        .orderBy("event_type"), oracle =
+      // Four-times-folded state panel == the full event history.
+      """WITH base AS (SELECT event_type, user_id,
+        |    CASE WHEN value IS NULL OR isnan(value) THEN NULL
+        |      ELSE value END AS v
+        |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL),
+        |c AS (SELECT event_type,
+        |    CAST(floor(v * 100.0 + 0.5) AS BIGINT) AS cent
+        |  FROM base WHERE v IS NOT NULL),
+        |k AS (SELECT event_type, cent, CAST(count(*) AS BIGINT) AS k
+        |  FROM c GROUP BY 1, 2),
+        |ct AS (SELECT event_type, cent, k,
+        |    CAST(sum(k) OVER (PARTITION BY event_type ORDER BY cent)
+        |      AS BIGINT) AS cum,
+        |    CAST(sum(k) OVER (PARTITION BY event_type) AS BIGINT) AS n
+        |  FROM k),
+        |q AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n_values,
+        |    min(CASE WHEN cum * 1000000 >= 500000 * n THEN cent END)
+        |      AS p50_cents,
+        |    min(CASE WHEN cum * 1000000 >= 900000 * n THEN cent END)
+        |      AS p90_cents,
+        |    min(CASE WHEN cum * 1000000 >= 990000 * n THEN cent END)
+        |      AS p99_cents
+        |  FROM ct GROUP BY 1),
+        |a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows,
+        |    CAST(sum(CAST(floor(v * 100.0 + 0.5) AS BIGINT)) AS BIGINT)
+        |      AS sum_cents,
+        |    round(CAST(sum(CAST(floor(v * 100.0 + 0.5) AS BIGINT))
+        |      AS DOUBLE) / 100.0 / count(*), 6) + 0.0 AS mean,
+        |    CAST(count(DISTINCT user_id) AS BIGINT) AS n_unique
+        |  FROM base GROUP BY 1)
+        |SELECT a.event_type, n_rows, sum_cents, mean, n_unique,
+        |  n_values, p50_cents, p90_cents, p99_cents
+        |FROM a LEFT JOIN q ON q.event_type = a.event_type
+        |ORDER BY a.event_type""".stripMargin),
 
-    "q508_curation_nday_decisions" -> ((s, dir) =>
+    Gate("q508_curation_nday_decisions", (s, dir) =>
       CurationNDay.allDecisions(s, nDayBatch(s, dir))
-        .orderBy("day", "doc_id")),
+        .orderBy("day", "doc_id"), oracle =
+      // same oracle, second engine path (batch loop)
+      decisionsOracle),
 
-    "q509_curation_nday_manifest" -> ((s, dir) =>
+    Gate("q509_curation_nday_manifest", (s, dir) =>
       s.read.parquet(nDayBatch(s, dir).manifestDay(CurationNDay.NDays))
-        .orderBy("shard")),
+        .orderBy("shard"), oracle = manifestOracle),
 
-    "q510_curation_stream_report" -> ((s, dir) => {
+    Gate("q510_curation_stream_report", (s, dir) => {
       val (a, replayNoOp, days) = streamed(s, dir)
       CurationNDay.allDecisions(s, a)
         .groupBy("day")
@@ -145,7 +208,16 @@ object Curation9 extends Gates {
         .withColumn("replay_noop", lit(if (replayNoOp) "1" else "0"))
         .withColumn("ledger_days", lit(days.mkString(",")))
         .orderBy("day")
-    }))
+    }, oracle =
+      s"""WITH $nDayCtes,
+         |f AS (${(1 to 4).map(k =>
+             s"SELECT $k AS day, decision FROM final$k")
+             .mkString("\nUNION ALL\n")})
+         |SELECT day, CAST(count(*) AS BIGINT) AS n_docs,
+         |${Curation8.decisionCountCols},
+         |  '1' AS replay_noop,
+         |  'day1,day2,day3,day4' AS ledger_days
+         |FROM f GROUP BY day ORDER BY day""".stripMargin))
 
   // ---- oracle: the four-day full recompute --------------------------
 
@@ -217,42 +289,6 @@ object Curation9 extends Gates {
        |  bit_xor(h) AS checksum
        |FROM m GROUP BY shard ORDER BY shard""".stripMargin
 
-  /** Four-times-folded state panel == the full event history. */
-  private val statesOracle: String =
-    """WITH base AS (SELECT event_type, user_id,
-      |    CASE WHEN value IS NULL OR isnan(value) THEN NULL
-      |      ELSE value END AS v
-      |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL),
-      |c AS (SELECT event_type,
-      |    CAST(floor(v * 100.0 + 0.5) AS BIGINT) AS cent
-      |  FROM base WHERE v IS NOT NULL),
-      |k AS (SELECT event_type, cent, CAST(count(*) AS BIGINT) AS k
-      |  FROM c GROUP BY 1, 2),
-      |ct AS (SELECT event_type, cent, k,
-      |    CAST(sum(k) OVER (PARTITION BY event_type ORDER BY cent)
-      |      AS BIGINT) AS cum,
-      |    CAST(sum(k) OVER (PARTITION BY event_type) AS BIGINT) AS n
-      |  FROM k),
-      |q AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n_values,
-      |    min(CASE WHEN cum * 1000000 >= 500000 * n THEN cent END)
-      |      AS p50_cents,
-      |    min(CASE WHEN cum * 1000000 >= 900000 * n THEN cent END)
-      |      AS p90_cents,
-      |    min(CASE WHEN cum * 1000000 >= 990000 * n THEN cent END)
-      |      AS p99_cents
-      |  FROM ct GROUP BY 1),
-      |a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows,
-      |    CAST(sum(CAST(floor(v * 100.0 + 0.5) AS BIGINT)) AS BIGINT)
-      |      AS sum_cents,
-      |    round(CAST(sum(CAST(floor(v * 100.0 + 0.5) AS BIGINT))
-      |      AS DOUBLE) / 100.0 / count(*), 6) + 0.0 AS mean,
-      |    CAST(count(DISTINCT user_id) AS BIGINT) AS n_unique
-      |  FROM base GROUP BY 1)
-      |SELECT a.event_type, n_rows, sum_cents, mean, n_unique,
-      |  n_values, p50_cents, p90_cents, p99_cents
-      |FROM a LEFT JOIN q ON q.event_type = a.event_type
-      |ORDER BY a.event_type""".stripMargin
-
   /** Retraction re-derivation on top of the four-day chain: victims,
     * the shrunk corpus, and the day-5 re-offer batch.
     */
@@ -267,59 +303,4 @@ object Curation9 extends Gates {
        |    WHERE doc_id = (SELECT max(doc_id) FROM rtext)
        |  UNION ALL SELECT 9400003, text FROM corpus5
        |    WHERE doc_id = (SELECT min(doc_id) FROM corpus5))""".stripMargin
-
-  val oracles: Map[String, String] = Map(
-
-    "q516_curated_corpus" ->
-      s"""WITH $nDayCtes
-         |SELECT doc_id,
-         |  CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
-         |    % ${CurationDay.NShards} AS INT) AS shard, text
-         |FROM grown4 ORDER BY doc_id""".stripMargin,
-
-    "q517_retraction_manifest" ->
-      s"""WITH $nDayCtes,
-         |$retractionCtes,
-         |m AS (SELECT doc_id,
-         |    CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
-         |      % ${CurationDay.NShards} AS INT) AS shard,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    (${h60Sql("CAST(doc_id AS VARCHAR) || ':' || text")}) AS h
-         |  FROM corpus5)
-         |SELECT shard, count(*) AS n_docs,
-         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-         |  min(doc_id) AS min_id, max(doc_id) AS max_id,
-         |  bit_xor(h) AS checksum
-         |FROM m GROUP BY shard ORDER BY shard""".stripMargin,
-
-    "q518_post_retraction_decisions" ->
-      s"""WITH $nDayCtes,
-         |$retractionCtes,
-         |${Curation.dedupDecisionCtes("corpus5", "batch5", "5")},
-         |${Curation8.postGateCtes("5")}
-         |SELECT doc_id, decision,
-         |  CASE WHEN decision = 'admitted'
-         |    THEN CAST((${h60Sql("CAST(doc_id AS VARCHAR)")})
-         |      % ${CurationDay.NShards} AS INT) END AS shard
-         |FROM final5 ORDER BY doc_id""".stripMargin,
-
-    "q505_curation_stream_decisions" -> decisionsOracle,
-    // same oracle, second engine path (batch loop)
-    "q508_curation_nday_decisions" -> decisionsOracle,
-
-    "q506_curation_stream_manifest" -> manifestOracle,
-    "q509_curation_nday_manifest" -> manifestOracle,
-
-    "q507_curation_stream_states" -> statesOracle,
-
-    "q510_curation_stream_report" ->
-      s"""WITH $nDayCtes,
-         |f AS (${(1 to 4).map(k =>
-             s"SELECT $k AS day, decision FROM final$k")
-             .mkString("\nUNION ALL\n")})
-         |SELECT day, CAST(count(*) AS BIGINT) AS n_docs,
-         |${Curation8.decisionCountCols},
-         |  '1' AS replay_noop,
-         |  'day1,day2,day3,day4' AS ledger_days
-         |FROM f GROUP BY day ORDER BY day""".stripMargin)
 }

@@ -13,11 +13,11 @@ object Meta extends Gates {
 
   private val SplitTs = "2024-01-15"
 
-  val queries: Map[String, QFn] = Map(
+  lazy val gates: Seq[Gate] = Seq(
     // UINT128/UPID: construct binary(16), round-trip every helper, and
     // produce the canonical string form. start_ts uses µs (DuckDB's ns
     // view of the nanos column is µs-truncated).
-    "q37_upid" -> ((s, dir) => {
+    Gate("q37_upid", (s, dir) => {
       val ev = t(s, dir, "events")
         .withColumn("upid",
           Upid.makeUpid(col("user_id"), col("event_id"), nsToUs(col("ts"))))
@@ -29,26 +29,37 @@ object Meta extends Gates {
         Upid.upidToStartTs(col("upid")).as("start_us"),
         Upid.upidToString(col("upid")).as("upid_str")
       ).orderBy("event_id")
-    }),
+    }, oracle =
+      """SELECT event_id,
+        |  printf('%08x%08x%016x', user_id, event_id, epoch_us(ts)) AS upid_hex,
+        |  user_id AS asid, event_id AS pid, epoch_us(ts) AS start_us,
+        |  user_id || ':' || event_id || ':' || epoch_us(ts) AS upid_str
+        |FROM events ORDER BY event_id""".stripMargin),
 
     // ctx metadata resolution: point-in-time broadcast as-of join against
     // a 2-generation dimension — the same key resolves to gen0 before the
     // split and gen1 after (the reference's agent-snapshot semantics).
-    "q38_metadata_asof" -> ((s, dir) => {
+    Gate("q38_metadata_asof", (s, dir) => {
       val ev = t(s, dir, "events")
       val dim = K8sMetadata.syntheticPodDim(ev, tsNsLit(SplitTs))
       K8sMetadata.resolveAsOf(ev, dim, "user_id", "owner_id", "ts",
           Seq("pod_name", "service_name"))
         .select("event_id", "pod_name", "service_name")
         .orderBy("event_id")
-    }),
+    }, oracle =
+      s"""WITH $dimSql
+         |SELECT e.event_id, d.pod_name,
+         |  'svc-' || (e.user_id % 10) AS service_name
+         |FROM events e LEFT JOIN dim d ON e.user_id = d.owner_id
+         |  AND epoch_ns(e.ts) >= d.start_ns AND epoch_ns(e.ts) < d.stop_ns
+         |ORDER BY event_id""".stripMargin),
 
     // The FULL metadata_ops registry swept in one query: every binding
     // family (upid_*, pod_id/name_*, container_*, replicaset_*,
     // deployment_*, service_*, namespace, ip_*, has_*, constants)
     // resolves through its keyed broadcast lookup against the full
     // entity dimension, and every attribute formula is value-checked.
-    "q64_metadata_sweep" -> ((s, dir) => {
+    Gate("q64_metadata_sweep", (s, dir) => {
       import graft.meta.MetadataOps
       val ev = t(s, dir, "events").select(col("event_id"), col("user_id"), col("ts"))
       val dim = MetadataOps.fullEntityDim(ev, tsNsLit(SplitTs))
@@ -98,54 +109,10 @@ object Meta extends Gates {
           "pod_id_from_ip", "container_name", "container_status",
           "container_start_ns", "has_service_id", "vizier_name", "num_cpus")
         .orderBy("event_id")
-    }),
-
-    // Per-service rollup through the metadata join (the http_request_stats
-    // by-service shape).
-    "q39_service_rollup" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val dim = K8sMetadata.syntheticPodDim(ev, tsNsLit(SplitTs))
-      K8sMetadata.resolveAsOf(ev, dim, "user_id", "owner_id", "ts",
-          Seq("service_name"))
-        .groupBy("service_name")
-        .agg(count(lit(1)).as("n"), qsum(col("value")).as("sum_value"))
-        .orderBy("service_name")
-    })
-  )
-
-  private val splitNs = graft.functions.PixieFunctions.tsNsLit(SplitTs)
-  private val dimSql =
-    s"""ids AS (SELECT DISTINCT user_id FROM events),
-       |dim AS (
-       |  SELECT user_id AS owner_id, 'pod-' || user_id || '-gen0' AS pod_name,
-       |         0 AS start_ns, $splitNs AS stop_ns FROM ids
-       |  UNION ALL
-       |  SELECT user_id, 'pod-' || user_id || '-gen1',
-       |         $splitNs, 9223372036854775807 FROM ids)""".stripMargin
-
-  val oracles: Map[String, String] = Map(
-    "q37_upid" ->
-      """SELECT event_id,
-        |  printf('%08x%08x%016x', user_id, event_id, epoch_us(ts)) AS upid_hex,
-        |  user_id AS asid, event_id AS pid, epoch_us(ts) AS start_us,
-        |  user_id || ':' || event_id || ':' || epoch_us(ts) AS upid_str
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q38_metadata_asof" ->
-      s"""WITH $dimSql
-         |SELECT e.event_id, d.pod_name,
-         |  'svc-' || (e.user_id % 10) AS service_name
-         |FROM events e LEFT JOIN dim d ON e.user_id = d.owner_id
-         |  AND epoch_ns(e.ts) >= d.start_ns AND epoch_ns(e.ts) < d.stop_ns
-         |ORDER BY event_id""".stripMargin,
-    "q39_service_rollup" ->
-      s"""SELECT 'svc-' || (user_id % 10) AS service_name, count(*) AS n,
-         |  ${qsumSql("value")} AS sum_value
-         |FROM events GROUP BY 1 ORDER BY service_name""".stripMargin,
-
-    // Every attribute is a pure function of (user_id, generation) by the
-    // fullEntityDim construction, so the oracle re-derives the whole
-    // sweep without a dimension join.
-    "q64_metadata_sweep" ->
+    }, oracle =
+      // Every attribute is a pure function of (user_id, generation) by the
+      // fullEntityDim construction, so the oracle re-derives the whole
+      // sweep without a dimension join.
       s"""WITH e AS (SELECT event_id, user_id,
          |    CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 0 ELSE 1 END AS g,
          |    user_id % 10 AS s
@@ -186,6 +153,31 @@ object Meta extends Gates {
          |  (s < 7) AS has_service_id,
          |  'graft-vizier' AS vizier_name,
          |  CAST(32 AS BIGINT) AS num_cpus
-         |FROM e ORDER BY event_id""".stripMargin
+         |FROM e ORDER BY event_id""".stripMargin),
+
+    // Per-service rollup through the metadata join (the http_request_stats
+    // by-service shape).
+    Gate("q39_service_rollup", (s, dir) => {
+      val ev = t(s, dir, "events")
+      val dim = K8sMetadata.syntheticPodDim(ev, tsNsLit(SplitTs))
+      K8sMetadata.resolveAsOf(ev, dim, "user_id", "owner_id", "ts",
+          Seq("service_name"))
+        .groupBy("service_name")
+        .agg(count(lit(1)).as("n"), qsum(col("value")).as("sum_value"))
+        .orderBy("service_name")
+    }, oracle =
+      s"""SELECT 'svc-' || (user_id % 10) AS service_name, count(*) AS n,
+         |  ${qsumSql("value")} AS sum_value
+         |FROM events GROUP BY 1 ORDER BY service_name""".stripMargin)
   )
+
+  private val splitNs = graft.functions.PixieFunctions.tsNsLit(SplitTs)
+  private val dimSql =
+    s"""ids AS (SELECT DISTINCT user_id FROM events),
+       |dim AS (
+       |  SELECT user_id AS owner_id, 'pod-' || user_id || '-gen0' AS pod_name,
+       |         0 AS start_ns, $splitNs AS stop_ns FROM ids
+       |  UNION ALL
+       |  SELECT user_id, 'pod-' || user_id || '-gen1',
+       |         $splitNs, 9223372036854775807 FROM ids)""".stripMargin
 }

@@ -38,58 +38,84 @@ object Ml extends Gates {
       |          (CASE WHEN event_id % 2 = 0 THEN 'posts' ELSE 'comments' END) ||
       |          '/' || (event_id % 50) END""".stripMargin
 
-  val queries: Map[String, QFn] = Map(
+  lazy val gates: Seq[Gate] = Seq(
     // _build_request_path_clusters (request_path_ops.cc): endpoint
     // templates with parameter segments wildcarded by cardinality.
-    "q46_request_path" -> ((s, dir) =>
+    Gate("q46_request_path", (s, dir) =>
       RequestPath.clusters(pathsSpark(t(s, dir, "events")), col("path"), 10)
-        .orderBy("template")),
+        .orderBy("template"), oracle = (
+      s"""WITH p AS (SELECT DISTINCT $pathsSql AS path FROM events),
+         |c AS (SELECT path,
+         |        CASE WHEN path = '/healthz' THEN '/healthz'
+         |             WHEN path LIKE '%/posts/%' THEN '/api/v1/users/*/posts/*'
+         |             ELSE '/api/v1/users/*/comments/*' END AS template
+         |      FROM p)
+         |SELECT template, COUNT(DISTINCT path) AS n_paths
+         |FROM c GROUP BY template ORDER BY template""".stripMargin)),
 
     // _kmeans UDA (ml_ops.h): per-group clustering where the input has
     // exactly k=3 well-separated distinct 1-d points, so the converged
     // centroids are analytically known. Exercises partial/merge across
     // the shuffle (two groups interleaved over all partitions).
-    "q47_kmeans" -> ((s, dir) => {
+    Gate("q47_kmeans", (s, dir) => {
       val pt = array(floor(pmod(col("event_id"), lit(6)) / lit(2)).cast("double") * lit(100.0))
       t(s, dir, "events")
         .groupBy(pmod(col("event_id"), lit(2)).as("g"))
         .agg(MlAggregators.kmeans(pt, 3).as("centroids"))
         .orderBy("g")
-    }),
+    }, oracle = (
+      "SELECT (event_id % 2) AS g, '[[0.0],[100.0],[200.0]]' AS centroids " +
+        "FROM events GROUP BY 1 ORDER BY 1")),
 
     // pprof UDA (pprof_ops.cc): stack-histogram merge to a canonical
     // sorted profile JSON.
-    "q48_pprof" -> ((s, dir) =>
+    Gate("q48_pprof", (s, dir) =>
       t(s, dir, "events")
         .groupBy(pmod(col("user_id"), lit(3)).as("g"))
         .agg(MlAggregators.pprof(
           concat(lit("app;srv;"), col("event_type")),
           pmod(col("event_id"), lit(5))).as("profile"))
-        .orderBy("g")),
+        .orderBy("g"), oracle = (
+      """WITH s AS (SELECT user_id % 3 AS g, 'app;srv;' || event_type AS stack,
+        |             SUM(event_id % 5) AS cnt
+        |           FROM events WHERE event_type IS NOT NULL GROUP BY 1, 2)
+        |SELECT g, '{' || string_agg('"' || stack || '":' || cnt, ',' ORDER BY stack) || '}' AS profile
+        |FROM s GROUP BY g ORDER BY g""".stripMargin)),
 
     // GetUDFList/GetUDAList/GetUDTFList (md_udtfs.cc): the registered
     // function surface as one relation.
-    "q49_catalog" -> ((s, dir) =>
+    Gate("q49_catalog", (s, dir) =>
       CatalogUdtfs.getUdfList(s).withColumn("kind", lit("UDF"))
         .union(CatalogUdtfs.getUdaList(s).withColumn("kind", lit("UDA")))
         .union(CatalogUdtfs.getUdtfList(s)
           .withColumn("module", lit("udtf")).withColumn("kind", lit("UDTF")))
-        .orderBy("kind", "name")),
+        .orderBy("kind", "name"), oracle =
+      s"SELECT name, module, kind FROM $catalogValues ORDER BY kind, name"),
 
     // GetSchemas x GetTables: every column of every registered table with
     // ordinal + engine type name, plus the table's column count.
-    "q50_schemas" -> ((s, dir) =>
+    Gate("q50_schemas", (s, dir) =>
       CatalogUdtfs.getSchemas(s, dir)
         .join(CatalogUdtfs.getTables(s, dir), Seq("table_name"))
-        .orderBy("table_name", "column_index")),
+        .orderBy("table_name", "column_index"), oracle = (
+      s"""WITH s AS (SELECT * FROM $schemaValues)
+         |SELECT table_name, column_name, CAST(column_index AS BIGINT) AS column_index, data_type,
+         |       COUNT(*) OVER (PARTITION BY table_name) AS n_cols
+         |FROM s ORDER BY table_name, column_index""".stripMargin)),
 
     // GetAgentStatus: the single local agent.
-    "q51_agents" -> ((s, dir) => CatalogUdtfs.getAgentStatus(s)),
+    Gate("q51_agents", (s, dir) => CatalogUdtfs.getAgentStatus(s), oracle = (
+      "SELECT '00000000-0000-0000-0000-000000000001' AS agent_id, " +
+        "CAST(1 AS BIGINT) AS asid, 'host-local' AS hostname, " +
+        "'10.11.1.1:8080' AS ip_address, 'AGENT_STATE_HEALTHY' AS agent_state, " +
+        "CAST(1700000000000000000 AS BIGINT) AS create_time, " +
+        "CAST(5000000 AS BIGINT) AS last_heartbeat_ns, " +
+        "true AS kernel_headers_installed")),
 
     // The md_udtfs long tail (md_udtfs.cc:32-60): every remaining UDTF
     // relation melted to (udtf, row_json) so one gate entry value-checks
     // all seven (the empty tracepoint relation contributes its count).
-    "q70_udtf_md" -> ((s, dir) => {
+    Gate("q70_udtf_md", (s, dir) => {
       def melt(name: String, df: org.apache.spark.sql.DataFrame) =
         df.select(lit(name).as("udtf"),
           to_json(struct(df.columns.map(col): _*)).as("row_json"))
@@ -103,7 +129,8 @@ object Ml extends Gates {
         .unionAll(melt("GetTracepointStatus", tp))
         .unionAll(melt("GetCronScriptHistory", CatalogUdtfs.getCronScriptHistory(s)))
         .orderBy("udtf", "row_json")
-    })
+    }, oracle =
+      s"SELECT udtf, row_json FROM $q70Values ORDER BY udtf, row_json")
   )
 
   private def valuesSql(rows: Seq[String], cols: String): String =
@@ -202,47 +229,4 @@ object Ml extends Gates {
       }
     },
     "table_name, column_name, column_index, data_type")
-
-  val oracles: Map[String, String] = Map(
-    "q46_request_path" -> (
-      s"""WITH p AS (SELECT DISTINCT $pathsSql AS path FROM events),
-         |c AS (SELECT path,
-         |        CASE WHEN path = '/healthz' THEN '/healthz'
-         |             WHEN path LIKE '%/posts/%' THEN '/api/v1/users/*/posts/*'
-         |             ELSE '/api/v1/users/*/comments/*' END AS template
-         |      FROM p)
-         |SELECT template, COUNT(DISTINCT path) AS n_paths
-         |FROM c GROUP BY template ORDER BY template""".stripMargin),
-
-    "q47_kmeans" -> (
-      "SELECT (event_id % 2) AS g, '[[0.0],[100.0],[200.0]]' AS centroids " +
-        "FROM events GROUP BY 1 ORDER BY 1"),
-
-    "q48_pprof" -> (
-      """WITH s AS (SELECT user_id % 3 AS g, 'app;srv;' || event_type AS stack,
-        |             SUM(event_id % 5) AS cnt
-        |           FROM events WHERE event_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT g, '{' || string_agg('"' || stack || '":' || cnt, ',' ORDER BY stack) || '}' AS profile
-        |FROM s GROUP BY g ORDER BY g""".stripMargin),
-
-    "q49_catalog" ->
-      s"SELECT name, module, kind FROM $catalogValues ORDER BY kind, name",
-
-    "q70_udtf_md" ->
-      s"SELECT udtf, row_json FROM $q70Values ORDER BY udtf, row_json",
-
-    "q50_schemas" -> (
-      s"""WITH s AS (SELECT * FROM $schemaValues)
-         |SELECT table_name, column_name, CAST(column_index AS BIGINT) AS column_index, data_type,
-         |       COUNT(*) OVER (PARTITION BY table_name) AS n_cols
-         |FROM s ORDER BY table_name, column_index""".stripMargin),
-
-    "q51_agents" -> (
-      "SELECT '00000000-0000-0000-0000-000000000001' AS agent_id, " +
-        "CAST(1 AS BIGINT) AS asid, 'host-local' AS hostname, " +
-        "'10.11.1.1:8080' AS ip_address, 'AGENT_STATE_HEALTHY' AS agent_state, " +
-        "CAST(1700000000000000000 AS BIGINT) AS create_time, " +
-        "CAST(5000000 AS BIGINT) AS last_heartbeat_ns, " +
-        "true AS kernel_headers_installed")
-  )
 }

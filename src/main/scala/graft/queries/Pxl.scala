@@ -19,23 +19,37 @@ object Pxl extends Gates {
   private val SplitTs = "2024-01-15"
   private def splitNs = graft.functions.PixieFunctions.tsNsLit(SplitTs)
 
+  /** The event's pod generation: 0 before the split, 1 from it on. */
+  private def podGen = when(col("ts") < splitNs, lit(0)).otherwise(lit(1))
+
+  /** The pod IP of the event's own pod incarnation. */
+  private def selfIp = concat(lit("10."), podGen + 10, lit("."),
+    pmod(col("user_id"), lit(250)), lit("."),
+    lit(1) + call_function("div", col("user_id"), lit(250L)))
+
+  /** The upid stand-in of an event's own process. */
+  private def eventUpid = graft.types.Upid.makeUpid(col("user_id"),
+    col("event_id"), graft.functions.PixieFunctions.nsToUs(col("ts"))).as("upid")
+
+  /** A synthesized stirling table over the events fixture (or `src`):
+    * µs-aligned `time_` and `user_id`, then `cols`. The engine stores
+    * ns; µs is stirling's capture resolution, and it keeps raw `time_`
+    * outputs oracle-comparable.
+    */
+  private def synth(s: SparkSession, dir: String, src: Option[DataFrame])(
+      cols: Column*): DataFrame =
+    src.getOrElse(t(s, dir, "events")).select(Seq(
+      (graft.functions.PixieFunctions.idiv(col("ts"), 1000L) * 1000L).as("time_"),
+      col("user_id")) ++ cols: _*)
+
   /** The reference's http_events shape synthesized from the events
     * fixture: time_ (ns), upid stand-in (user_id), resp_status, latency.
     */
   def httpEvents(s: SparkSession, dir: String,
                  src: Option[DataFrame] = None): DataFrame = {
-    val g = when(col("ts") < splitNs, lit(0)).otherwise(lit(1))
-    val selfIp = concat(lit("10."), g + 10, lit("."),
-      pmod(col("user_id"), lit(250)), lit("."),
-      lit(1) + call_function("div", col("user_id"), lit(250L)))
     val status = lit(100) + pmod(col("event_id"), lit(460))
-    src.getOrElse(t(s, dir, "events")).select(
-      // the engine stores ns; this table models stirling's µs-resolution
-      // capture (also what keeps raw time_ outputs oracle-comparable)
-      (graft.functions.PixieFunctions.idiv(col("ts"), 1000L) * 1000L).as("time_"),
-      col("user_id"),
-      graft.types.Upid.makeUpid(col("user_id"), col("event_id"),
-        graft.functions.PixieFunctions.nsToUs(col("ts"))).as("upid"),
+    synth(s, dir, src)(
+      eventUpid,
       status.as("resp_status"),
       col("value").as("latency"),
       when(pmod(col("event_id"), lit(25)) === 0, lit("/healthz"))
@@ -77,23 +91,15 @@ object Pxl extends Gates {
     * [[httpEvents]], and the event latency.
     */
   private def tracerBase(s: SparkSession, dir: String,
-                         src: Option[DataFrame]): DataFrame = {
-    val g = when(col("ts") < splitNs, lit(0)).otherwise(lit(1))
-    val selfIp = concat(lit("10."), g + 10, lit("."),
-      pmod(col("user_id"), lit(250)), lit("."),
-      lit(1) + call_function("div", col("user_id"), lit(250L)))
-    src.getOrElse(t(s, dir, "events")).select(
-      (graft.functions.PixieFunctions.idiv(col("ts"), 1000L) * 1000L).as("time_"),
-      col("user_id"), col("event_id"),
-      graft.types.Upid.makeUpid(col("user_id"), col("event_id"),
-        graft.functions.PixieFunctions.nsToUs(col("ts"))).as("upid"),
+                         src: Option[DataFrame]): DataFrame =
+    synth(s, dir, src)(col("event_id"),
+      eventUpid,
       when(pmod(col("event_id"), lit(3)) === 0, lit(1)).otherwise(lit(2))
         .as("trace_role"),
       when(pmod(col("event_id"), lit(5)) === 0, lit("-"))
         .otherwise(selfIp).as("remote_addr"),
       (lit(1024) + pmod(col("event_id"), lit(32768))).as("remote_port"),
       col("value").as("latency"))
-  }
 
   /** mysql_events shape (stirling's mysql table): command byte, response
     * code/status, bodies, latency + the tracer base columns.
@@ -259,11 +265,10 @@ object Pxl extends Gates {
     */
   def networkStats(s: SparkSession, dir: String,
                    src: Option[DataFrame] = None): DataFrame = {
-    val g = when(col("ts") < splitNs, lit(0)).otherwise(lit(1))
     val us = graft.functions.PixieFunctions.idiv(col("ts"), 1000L)
     src.getOrElse(t(s, dir, "events")).select(
       (us * 1000L).as("time_"),
-      concat(lit("pid-"), col("user_id"), lit("-g"), g).as("pod_id"),
+      concat(lit("pid-"), col("user_id"), lit("-g"), podGen).as("pod_id"),
       us.as("rx_bytes"),
       graft.functions.PixieFunctions.idiv(us, 2L).as("tx_bytes"),
       graft.functions.PixieFunctions.idiv(us, 700L).as("rx_packets"),
@@ -279,11 +284,8 @@ object Pxl extends Gates {
     */
   def processStats(s: SparkSession, dir: String,
                    src: Option[DataFrame] = None): DataFrame =
-    src.getOrElse(t(s, dir, "events")).select(
-      (graft.functions.PixieFunctions.idiv(col("ts"), 1000L) * 1000L).as("time_"),
-      col("user_id"),
-      graft.types.Upid.makeUpid(col("user_id"), col("event_id"),
-        graft.functions.PixieFunctions.nsToUs(col("ts"))).as("upid"),
+    synth(s, dir, src)(
+      eventUpid,
       ((lit(100) + pmod(col("event_id"), lit(900))) * 1048576L).as("vsize_bytes"),
       ((lit(50) + pmod(col("event_id"), lit(450))) * 1048576L).as("rss_bytes"),
       (pmod(col("event_id"), lit(1000)) * 1000000L).as("cpu_utime_ns"),
@@ -301,16 +303,9 @@ object Pxl extends Gates {
     * response headers/bodies as JSON text, trace role, requester address.
     */
   def dnsEvents(s: SparkSession, dir: String,
-                src: Option[DataFrame] = None): DataFrame = {
-    val g = when(col("ts") < splitNs, lit(0)).otherwise(lit(1))
-    val selfIp = concat(lit("10."), g + 10, lit("."),
-      pmod(col("user_id"), lit(250)), lit("."),
-      lit(1) + call_function("div", col("user_id"), lit(250L)))
-    src.getOrElse(t(s, dir, "events")).select(
-      (graft.functions.PixieFunctions.idiv(col("ts"), 1000L) * 1000L).as("time_"),
-      col("user_id"),
-      graft.types.Upid.makeUpid(col("user_id"), col("event_id"),
-        graft.functions.PixieFunctions.nsToUs(col("ts"))).as("upid"),
+                src: Option[DataFrame] = None): DataFrame =
+    synth(s, dir, src)(
+      eventUpid,
       when(pmod(col("event_id"), lit(3)) === 0, lit(1)).otherwise(lit(2))
         .as("trace_role"),
       when(pmod(col("event_id"), lit(5)) === 0, lit("-"))
@@ -330,7 +325,6 @@ object Pxl extends Gates {
           lit(""".local","addr":"203.0.113."""), pmod(col("event_id"), lit(250)),
           lit(""""}]}""")))
         .otherwise(lit("""{"answers":[]}""")).as("resp_body"))
-  }
 
   /** conn_stats shape (stirling's conn_stats table): per-connection
     * MONOTONE byte counters — pxviews.connection_throughput_stats takes
@@ -340,9 +334,7 @@ object Pxl extends Gates {
     */
   def connStats(s: SparkSession, dir: String,
                 src: Option[DataFrame] = None): DataFrame =
-    src.getOrElse(t(s, dir, "events")).select(
-      (graft.functions.PixieFunctions.idiv(col("ts"), 1000L) * 1000L).as("time_"),
-      col("user_id"),
+    synth(s, dir, src)(
       graft.types.Upid.makeUpid(col("user_id"), lit(1000) + col("user_id"),
         lit(1700000000000000000L)).as("upid"),
       (lit(1) + pmod(col("event_id"), lit(2))).as("trace_role"),
@@ -364,9 +356,7 @@ object Pxl extends Gates {
     */
   def stirlingError(s: SparkSession, dir: String,
                     src: Option[DataFrame] = None): DataFrame =
-    src.getOrElse(t(s, dir, "events")).select(
-      (graft.functions.PixieFunctions.idiv(col("ts"), 1000L) * 1000L).as("time_"),
-      col("user_id"),
+    synth(s, dir, src)(
       when(pmod(col("event_id"), lit(5)) === 0, "socket_tracer")
         .when(pmod(col("event_id"), lit(5)) === 1, "perf_profiler")
         .when(pmod(col("event_id"), lit(5)) === 2, "jvm_stats")
@@ -389,11 +379,8 @@ object Pxl extends Gates {
   def stackTraces(s: SparkSession, dir: String,
                   src: Option[DataFrame] = None): DataFrame = {
     val id = pmod(col("event_id"), lit(20))
-    src.getOrElse(t(s, dir, "events")).select(
-      (graft.functions.PixieFunctions.idiv(col("ts"), 1000L) * 1000L).as("time_"),
-      col("user_id"),
-      graft.types.Upid.makeUpid(col("user_id"), col("event_id"),
-        graft.functions.PixieFunctions.nsToUs(col("ts"))).as("upid"),
+    synth(s, dir, src)(
+      eventUpid,
       id.as("stack_trace_id"),
       concat(lit("app;frame_"), id, lit(";leaf_"), pmod(id, lit(5)))
         .as("stack_trace"),
@@ -405,9 +392,7 @@ object Pxl extends Gates {
     */
   def probeStatus(s: SparkSession, dir: String,
                   src: Option[DataFrame] = None): DataFrame =
-    src.getOrElse(t(s, dir, "events")).select(
-      (graft.functions.PixieFunctions.idiv(col("ts"), 1000L) * 1000L).as("time_"),
-      col("user_id"),
+    synth(s, dir, src)(
       concat(lit("tp-"), pmod(col("event_id"), lit(8))).as("tracepoint"),
       when(pmod(col("event_id"), lit(3)) === 0, "OK")
         .when(pmod(col("event_id"), lit(3)) === 1, "INTERNAL")
@@ -423,9 +408,7 @@ object Pxl extends Gates {
     */
   def jvmStats(s: SparkSession, dir: String,
                src: Option[DataFrame] = None): DataFrame =
-    src.getOrElse(t(s, dir, "events")).select(
-      (graft.functions.PixieFunctions.idiv(col("ts"), 1000L) * 1000L).as("time_"),
-      col("user_id"),
+    synth(s, dir, src)(
       graft.types.Upid.makeUpid(col("user_id"), col("user_id") * 2,
         lit(1700000000000000000L)).as("upid"),
       (col("event_id") * 1000000L).as("young_gc_time"),
@@ -799,134 +782,15 @@ object Pxl extends Gates {
       |px.display(out, 'redis')
       |""".stripMargin
 
-  val queries: Map[String, QFn] = Map(
+  lazy val gates: Seq[Gate] = Seq(
     // The verbatim reference script, end-to-end through parser+runner.
     // now = max event time, so its '-30s' window covers the data tail.
-    "q65_pxl_http_stats" -> ((s, dir) => {
+    Gate("q65_pxl_http_stats", (s, dir) => {
       val script = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(StatsPxlPath)), "UTF-8")
       PxlRunner.run(script, env(s, dir, nowNs(s, dir)))("output")
         .orderBy("service")
-    }),
-
-    "q66_pxl_service_stats" -> ((s, dir) => {
-      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-      PxlRunner.run(ServiceStatsScript, env(s, dir, now))("svc")
-        .orderBy("service")
-    }),
-
-    "q67_pxl_service_let" -> ((s, dir) => {
-      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-      PxlRunner.run(ServiceLetScript, env(s, dir, now))("let")
-        .orderBy("time_", "service")
-    }),
-
-    "q68_pxl_namespaces" -> ((s, dir) => {
-      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-      PxlRunner.run(NamespacesScript, env(s, dir, now))("ns")
-        .orderBy("namespace")
-    }),
-
-    "q69_pxl_mysql_let" -> ((s, dir) => {
-      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-      PxlRunner.run(MysqlLetScript, env(s, dir, now))("mysql")
-        .orderBy("timestamp", "pod", "cmd")
-    }),
-
-    "q71_pxl_pods" -> ((s, dir) => {
-      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-      PxlRunner.run(PodsScript, env(s, dir, now))("pods")
-        .orderBy("namespace", "pod")
-    }),
-
-    "q72_pxl_redis_let" -> ((s, dir) => {
-      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-      PxlRunner.run(RedisLetScript, env(s, dir, now))("redis")
-        .orderBy("timestamp", "pod", "req_cmd")
-    }),
-
-    // The VERBATIM def-based reference script, executed through the
-    // exec_funcs entry point (SURVEY §3 entry 2): svc_let computes the
-    // service LET time series; http_code_histogram the status rollup.
-    "q73_pxl_svc_let" -> ((s, dir) => {
-      val script = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(ServiceStatsPxlPath)), "UTF-8")
-      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-      PxlRunner.runFunction(script, env(s, dir, now), "svc_let",
-          Seq("-45d", "svc-1"))
-        .orderBy("time_", "k8s")
-    }),
-
-    "q74_pxl_http_code_hist" -> ((s, dir) => {
-      val script = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(ServiceStatsPxlPath)), "UTF-8")
-      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-      PxlRunner.runFunction(script, env(s, dir, now), "http_code_histogram",
-          Seq("-45d", "svc-3"))
-        .orderBy("resp_status")
-    }),
-
-    // The verbatim HTTP Data Tracer (the most-used bundled script):
-    // ctx node/pod/namespace, upid scalar, ip->pod->name fallback chain
-    // with the ''-on-miss contract, script_reference deep links with
-    // dict args, head cap — full row-level trace output, hash-checked.
-    "q77_pxl_http_data" -> ((s, dir) => {
-      val script = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(HttpDataPxlPath)), "UTF-8")
-      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-      PxlRunner.runFunction(script, env(s, dir, now), "http_data",
-          Seq("-45d", "", "", "1000000"))
-        .orderBy("time_", "req_body")
-    }),
-
-    // Verbatim pid_memory_usage/usage.pxl over the process_stats table:
-    // top-level script (no defs), upid-keyed groupby, upid_to_cmdline/
-    // pid/asid scalars, spaced column names. The '-30s' window is the
-    // data tail (now pinned to max event time, as q65).
-    "q79_pxl_pid_memory" -> ((s, dir) => {
-      val script = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(PidMemoryPxlPath)), "UTF-8")
-      PxlRunner.run(script, env(s, dir, nowNs(s, dir)))("output")
-        .orderBy("pid")
-    }),
-
-    // Verbatim jvm_stats/jvm_stats.pxl: monotonic GC counters resolved
-    // max-min per (upid, window), then rolled up per pod — the two-level
-    // sharded-by-UPID aggregation the script documents.
-    "q80_pxl_jvm_stats" -> ((s, dir) => {
-      val script = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(JvmStatsPxlPath)), "UTF-8")
-      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-      PxlRunner.runFunction(script, env(s, dir, now), "jvm_stats",
-          Seq("-45d", "", ""))
-        .orderBy("timestamp", "pod")
-    }),
-
-    // Verbatim namespaces.pxl through the REAL pxviews helper library
-    // (loaded as a module from the reference's pxl_lib): pod/service
-    // counts per namespace from pxviews.pod_resource_stats.
-    "q82_pxl_namespaces_lib" -> ((s, dir) => {
-      val script = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(NamespacesPxlPath)), "UTF-8")
-      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-      PxlRunner.runFunction(script, env(s, dir, now), "namespaces_for_cluster",
-          Seq("-45d"))
-        .orderBy("namespace")
-    }),
-
-    // Same script, the per-namespace resource rollup function.
-    "q83_pxl_ns_process_stats" -> ((s, dir) => {
-      val script = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(NamespacesPxlPath)), "UTF-8")
-      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-      PxlRunner.runFunction(script, env(s, dir, now),
-          "process_stats_by_namespace", Seq("-45d"))
-        .orderBy("namespace")
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q65_pxl_http_stats" ->
+    }, oracle =
       """WITH mx AS (SELECT max(epoch_us(ts)) * 1000 + 1000 AS now_ns FROM events),
         |e AS (SELECT epoch_us(ts) * 1000 AS t, user_id,
         |        100 + event_id % 460 AS resp_status, value AS latency
@@ -953,9 +817,39 @@ object Pxl extends Gates {
         |  throughput_total AS "throughput total"
         |FROM qa JOIN rps ON qa.service = rps.service
         |WHERE qa.service <> ''
-        |ORDER BY qa.service""".stripMargin,
+        |ORDER BY qa.service""".stripMargin),
 
-    "q67_pxl_service_let" -> {
+    Gate("q66_pxl_service_stats", (s, dir) => {
+      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
+      PxlRunner.run(ServiceStatsScript, env(s, dir, now))("svc")
+        .orderBy("service")
+    }, oracle = {
+      val start = graft.functions.PixieFunctions.tsNsLit("2024-02-01") -
+        45L * 86400L * 1000000000L
+      s"""WITH e AS (SELECT epoch_us(ts) * 1000 AS t, user_id,
+         |        100 + event_id % 460 AS resp_status, value AS latency
+         |      FROM events WHERE epoch_us(ts) * 1000 >= $start),
+         |w AS (SELECT *, 'svc-' || (user_id % 10) AS service,
+         |        CASE WHEN resp_status >= 400 THEN 1 ELSE 0 END AS failure,
+         |        t - t % 3600000000000 AS range_group FROM e),
+         |pw AS (SELECT service, range_group, count(resp_status) AS n
+         |       FROM w GROUP BY 1, 2),
+         |ps AS (SELECT service, count(n) AS windows,
+         |         avg(CAST(n AS DOUBLE)) AS avg_per_window FROM pw GROUP BY 1),
+         |er AS (SELECT service, avg(CAST(failure AS DOUBLE)) AS err_rate,
+         |         count(resp_status) AS total, max(latency) AS max_latency
+         |       FROM w GROUP BY 1)
+         |SELECT ps.service, windows, avg_per_window, err_rate, total,
+         |  max_latency, CAST(total AS DOUBLE) / windows AS req_per_hour
+         |FROM ps JOIN er ON ps.service = er.service
+         |WHERE total > 0 ORDER BY ps.service""".stripMargin
+    }),
+
+    Gate("q67_pxl_service_let", (s, dir) => {
+      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
+      PxlRunner.run(ServiceLetScript, env(s, dir, now))("let")
+        .orderBy("time_", "service")
+    }, oracle = {
       val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
       val start = now - 45L * 86400L * 1000000000L
       s"""WITH e AS (SELECT epoch_us(ts) * 1000 AS t, user_id,
@@ -977,9 +871,13 @@ object Pxl extends Gates {
          |  avg(CAST(failure AS DOUBLE)) AS error_rate,
          |  count(resp_status) AS throughput_total
          |FROM w GROUP BY 1, 2 ORDER BY time_, service""".stripMargin
-    },
+    }),
 
-    "q68_pxl_namespaces" -> {
+    Gate("q68_pxl_namespaces", (s, dir) => {
+      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
+      PxlRunner.run(NamespacesScript, env(s, dir, now))("ns")
+        .orderBy("namespace")
+    }, oracle = {
       val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
       val start = now - 45L * 86400L * 1000000000L
       s"""WITH e AS (SELECT user_id, 100 + event_id % 460 AS resp_status,
@@ -999,9 +897,13 @@ object Pxl extends Gates {
          |FROM pc JOIN sc ON pc.namespace = sc.namespace
          |        JOIN io ON pc.namespace = io.namespace
          |ORDER BY pc.namespace""".stripMargin
-    },
+    }),
 
-    "q69_pxl_mysql_let" -> {
+    Gate("q69_pxl_mysql_let", (s, dir) => {
+      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
+      PxlRunner.run(MysqlLetScript, env(s, dir, now))("mysql")
+        .orderBy("timestamp", "pod", "cmd")
+    }, oracle = {
       val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
       val start = now - 45L * 86400L * 1000000000L
       val cmdSql = graft.functions.ProtocolOps.mysqlCommandName.sql("req_cmd")
@@ -1019,9 +921,13 @@ object Pxl extends Gates {
          |  avg(CAST(failure AS DOUBLE)) AS error_rate,
          |  quantile_cont(latency_ns, 0.50) AS latency_p50
          |FROM w GROUP BY 1, 2, 3 ORDER BY ts_bin, pod, cmd""".stripMargin
-    },
+    }),
 
-    "q71_pxl_pods" -> {
+    Gate("q71_pxl_pods", (s, dir) => {
+      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
+      PxlRunner.run(PodsScript, env(s, dir, now))("pods")
+        .orderBy("namespace", "pod")
+    }, oracle = {
       val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
       val start = now - 45L * 86400L * 1000000000L
       s"""WITH e AS (SELECT user_id, 100 + event_id % 460 AS resp_status,
@@ -1036,9 +942,13 @@ object Pxl extends Gates {
          |  avg(CAST(failure AS DOUBLE)) AS error_rate, max(latency) AS max_latency
          |FROM w GROUP BY 1, 2 HAVING count(resp_status) > 0
          |ORDER BY namespace, pod""".stripMargin
-    },
+    }),
 
-    "q72_pxl_redis_let" -> {
+    Gate("q72_pxl_redis_let", (s, dir) => {
+      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
+      PxlRunner.run(RedisLetScript, env(s, dir, now))("redis")
+        .orderBy("timestamp", "pod", "req_cmd")
+    }, oracle = {
       val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
       val start = now - 45L * 86400L * 1000000000L
       s"""WITH e AS (SELECT epoch_us(ts) * 1000 AS t, user_id,
@@ -1054,9 +964,93 @@ object Pxl extends Gates {
          |SELECT ts_bin AS "timestamp", pod, req_cmd, count(req_cmd) AS n,
          |  quantile_cont(latency_ns, 0.50) AS latency_p50
          |FROM w GROUP BY 1, 2, 3 ORDER BY ts_bin, pod, req_cmd""".stripMargin
-    },
+    }),
 
-    "q77_pxl_http_data" -> {
+    // The VERBATIM def-based reference script, executed through the
+    // exec_funcs entry point (SURVEY §3 entry 2): svc_let computes the
+    // service LET time series; http_code_histogram the status rollup.
+    Gate("q73_pxl_svc_let", (s, dir) => {
+      val script = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(ServiceStatsPxlPath)), "UTF-8")
+      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
+      PxlRunner.runFunction(script, env(s, dir, now), "svc_let",
+          Seq("-45d", "svc-1"))
+        .orderBy("time_", "k8s")
+    }, oracle = {
+      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
+      val start = now - 45L * 86400L * 1000000000L
+      s"""WITH e AS (SELECT epoch_us(ts) * 1000 AS t, user_id,
+         |        100 + event_id % 460 AS resp_status, value AS latency,
+         |        CASE WHEN event_id % 25 = 0 THEN '/healthz'
+         |             WHEN event_id % 25 = 1 THEN '/readyz'
+         |             ELSE '/api/v1/users/' || user_id END AS req_path,
+         |        CASE WHEN event_id % 5 = 0 THEN '-' ELSE
+         |          '10.' || (CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 10 ELSE 11 END)
+         |          || '.' || (user_id % 250) || '.' || (1 + user_id // 250) END AS remote_addr,
+         |        100 + event_id % 1000 AS resp_body_size
+         |      FROM events WHERE epoch_us(ts) * 1000 >= $start
+         |        AND epoch_us(ts) * 1000 < $now),
+         |f AS (SELECT *, 'svc-' || (user_id % 10) AS service,
+         |        t - t % 10000000000 AS ts_bin,
+         |        CASE WHEN resp_status >= 400 THEN 1 ELSE 0 END AS failure
+         |      FROM e WHERE req_path <> '/healthz' AND req_path <> '/readyz'
+         |        AND remote_addr <> '-'),
+         |m AS (SELECT * FROM f WHERE contains(service, 'svc-1')),
+         |a AS (SELECT service, ts_bin,
+         |        quantile_cont(latency, 0.50) AS p50d,
+         |        quantile_cont(latency, 0.90) AS p90d,
+         |        quantile_cont(latency, 0.99) AS p99d,
+         |        avg(CAST(failure AS DOUBLE)) AS erw,
+         |        count(latency) AS tput,
+         |        CAST(sum(resp_body_size) AS BIGINT) AS bytes_total
+         |      FROM m GROUP BY 1, 2)
+         |SELECT ts_bin AS time_, service AS k8s,
+         |  CAST(floor(p50d) AS BIGINT) AS latency_p50,
+         |  CAST(floor(p90d) AS BIGINT) AS latency_p90,
+         |  CAST(floor(p99d) AS BIGINT) AS latency_p99,
+         |  erw * (tput / 10000000000) / 1 AS error_rate,
+         |  tput / 10000000000 AS request_throughput,
+         |  bytes_total / 10000000000 AS bytes_throughput
+         |FROM a ORDER BY time_, k8s""".stripMargin
+    }),
+
+    Gate("q74_pxl_http_code_hist", (s, dir) => {
+      val script = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(ServiceStatsPxlPath)), "UTF-8")
+      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
+      PxlRunner.runFunction(script, env(s, dir, now), "http_code_histogram",
+          Seq("-45d", "svc-3"))
+        .orderBy("resp_status")
+    }, oracle = {
+      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
+      val start = now - 45L * 86400L * 1000000000L
+      s"""WITH e AS (SELECT epoch_us(ts) * 1000 AS t, user_id,
+         |        100 + event_id % 460 AS resp_status, value AS latency,
+         |        CASE WHEN event_id % 25 = 0 THEN '/healthz'
+         |             WHEN event_id % 25 = 1 THEN '/readyz'
+         |             ELSE '/api/v1/users/' || user_id END AS req_path,
+         |        CASE WHEN event_id % 5 = 0 THEN '-' ELSE '10.x' END AS remote_addr
+         |      FROM events WHERE epoch_us(ts) * 1000 >= $start
+         |        AND epoch_us(ts) * 1000 < $now),
+         |f AS (SELECT * FROM e
+         |      WHERE req_path <> '/healthz' AND req_path <> '/readyz'
+         |        AND remote_addr <> '-' AND contains('svc-' || (user_id % 10), 'svc-3'))
+         |SELECT resp_status, count(latency) AS "count"
+         |FROM f GROUP BY 1 ORDER BY resp_status""".stripMargin
+    }),
+
+    // The verbatim HTTP Data Tracer (the most-used bundled script):
+    // ctx node/pod/namespace, upid scalar, ip->pod->name fallback chain
+    // with the ''-on-miss contract, script_reference deep links with
+    // dict args, head cap — full row-level trace output, hash-checked.
+    Gate("q77_pxl_http_data", (s, dir) => {
+      val script = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(HttpDataPxlPath)), "UTF-8")
+      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
+      PxlRunner.runFunction(script, env(s, dir, now), "http_data",
+          Seq("-45d", "", "", "1000000"))
+        .orderBy("time_", "req_body")
+    }, oracle = {
       val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
       val start = now - 45L * 86400L * 1000000000L
       val respMsg = graft.functions.ProtocolOps.httpRespMessage
@@ -1109,9 +1103,18 @@ object Pxl extends Gates {
          |  'resp-' || event_id AS resp_body,
          |  100 + event_id % 1000 AS resp_body_size
          |FROM y ORDER BY time_, req_body""".stripMargin
-    },
+    }),
 
-    "q79_pxl_pid_memory" -> (
+    // Verbatim pid_memory_usage/usage.pxl over the process_stats table:
+    // top-level script (no defs), upid-keyed groupby, upid_to_cmdline/
+    // pid/asid scalars, spaced column names. The '-30s' window is the
+    // data tail (now pinned to max event time, as q65).
+    Gate("q79_pxl_pid_memory", (s, dir) => {
+      val script = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(PidMemoryPxlPath)), "UTF-8")
+      PxlRunner.run(script, env(s, dir, nowNs(s, dir)))("output")
+        .orderBy("pid")
+    }, oracle = (
       s"""WITH mx AS (SELECT max(epoch_us(ts)) * 1000 + 1000 AS now_ns FROM events),
          |e AS (SELECT epoch_us(ts) * 1000 AS t, user_id, event_id
          |      FROM events, mx WHERE epoch_us(ts) * 1000 >= mx.now_ns - 30000000000
@@ -1122,9 +1125,19 @@ object Pxl extends Gates {
          |  t - t % 10000000000 AS "timestamp",
          |  CAST((100 + event_id % 900) * 1048576 AS DOUBLE) AS "Virtual Memory",
          |  CAST((50 + event_id % 450) * 1048576 AS DOUBLE) AS "Average Memory"
-         |FROM e ORDER BY pid""".stripMargin),
+         |FROM e ORDER BY pid""".stripMargin)),
 
-    "q80_pxl_jvm_stats" -> {
+    // Verbatim jvm_stats/jvm_stats.pxl: monotonic GC counters resolved
+    // max-min per (upid, window), then rolled up per pod — the two-level
+    // sharded-by-UPID aggregation the script documents.
+    Gate("q80_pxl_jvm_stats", (s, dir) => {
+      val script = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(JvmStatsPxlPath)), "UTF-8")
+      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
+      PxlRunner.runFunction(script, env(s, dir, now), "jvm_stats",
+          Seq("-45d", "", ""))
+        .orderBy("timestamp", "pod")
+    }, oracle = {
       val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
       val start = now - 45L * 86400L * 1000000000L
       s"""WITH e AS (SELECT epoch_us(ts) * 1000 AS t, user_id, event_id,
@@ -1148,9 +1161,19 @@ object Pxl extends Gates {
          |  sum(total_heap) AS total_heap_size,
          |  ts_bin AS time_, pod AS k8s
          |FROM by_upid GROUP BY pod, ts_bin ORDER BY ts_bin, pod""".stripMargin
-    },
+    }),
 
-    "q82_pxl_namespaces_lib" -> {
+    // Verbatim namespaces.pxl through the REAL pxviews helper library
+    // (loaded as a module from the reference's pxl_lib): pod/service
+    // counts per namespace from pxviews.pod_resource_stats.
+    Gate("q82_pxl_namespaces_lib", (s, dir) => {
+      val script = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(NamespacesPxlPath)), "UTF-8")
+      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
+      PxlRunner.runFunction(script, env(s, dir, now), "namespaces_for_cluster",
+          Seq("-45d"))
+        .orderBy("namespace")
+    }, oracle = {
       val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
       val start = now - 45L * 86400L * 1000000000L
       s"""WITH e AS (SELECT user_id,
@@ -1167,9 +1190,17 @@ object Pxl extends Gates {
          |SELECT pc.namespace, pod_count, service_count
          |FROM pc JOIN sc ON pc.namespace = sc.namespace
          |ORDER BY pc.namespace""".stripMargin
-    },
+    }),
 
-    "q83_pxl_ns_process_stats" -> {
+    // Same script, the per-namespace resource rollup function.
+    Gate("q83_pxl_ns_process_stats", (s, dir) => {
+      val script = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(NamespacesPxlPath)), "UTF-8")
+      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
+      PxlRunner.runFunction(script, env(s, dir, now),
+          "process_stats_by_namespace", Seq("-45d"))
+        .orderBy("namespace")
+    }, oracle = {
       val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
       val start = now - 45L * 86400L * 1000000000L
       s"""WITH e AS (SELECT user_id, event_id
@@ -1183,84 +1214,6 @@ object Pxl extends Gates {
          |  CAST(0 AS DOUBLE) AS total_disk_read_throughput,
          |  CAST(0 AS DOUBLE) AS total_disk_write_throughput
          |FROM e GROUP BY 1 ORDER BY namespace""".stripMargin
-    },
-
-    "q73_pxl_svc_let" -> {
-      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-      val start = now - 45L * 86400L * 1000000000L
-      s"""WITH e AS (SELECT epoch_us(ts) * 1000 AS t, user_id,
-         |        100 + event_id % 460 AS resp_status, value AS latency,
-         |        CASE WHEN event_id % 25 = 0 THEN '/healthz'
-         |             WHEN event_id % 25 = 1 THEN '/readyz'
-         |             ELSE '/api/v1/users/' || user_id END AS req_path,
-         |        CASE WHEN event_id % 5 = 0 THEN '-' ELSE
-         |          '10.' || (CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 10 ELSE 11 END)
-         |          || '.' || (user_id % 250) || '.' || (1 + user_id // 250) END AS remote_addr,
-         |        100 + event_id % 1000 AS resp_body_size
-         |      FROM events WHERE epoch_us(ts) * 1000 >= $start
-         |        AND epoch_us(ts) * 1000 < $now),
-         |f AS (SELECT *, 'svc-' || (user_id % 10) AS service,
-         |        t - t % 10000000000 AS ts_bin,
-         |        CASE WHEN resp_status >= 400 THEN 1 ELSE 0 END AS failure
-         |      FROM e WHERE req_path <> '/healthz' AND req_path <> '/readyz'
-         |        AND remote_addr <> '-'),
-         |m AS (SELECT * FROM f WHERE contains(service, 'svc-1')),
-         |a AS (SELECT service, ts_bin,
-         |        quantile_cont(latency, 0.50) AS p50d,
-         |        quantile_cont(latency, 0.90) AS p90d,
-         |        quantile_cont(latency, 0.99) AS p99d,
-         |        avg(CAST(failure AS DOUBLE)) AS erw,
-         |        count(latency) AS tput,
-         |        CAST(sum(resp_body_size) AS BIGINT) AS bytes_total
-         |      FROM m GROUP BY 1, 2)
-         |SELECT ts_bin AS time_, service AS k8s,
-         |  CAST(floor(p50d) AS BIGINT) AS latency_p50,
-         |  CAST(floor(p90d) AS BIGINT) AS latency_p90,
-         |  CAST(floor(p99d) AS BIGINT) AS latency_p99,
-         |  erw * (tput / 10000000000) / 1 AS error_rate,
-         |  tput / 10000000000 AS request_throughput,
-         |  bytes_total / 10000000000 AS bytes_throughput
-         |FROM a ORDER BY time_, k8s""".stripMargin
-    },
-
-    "q74_pxl_http_code_hist" -> {
-      val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
-      val start = now - 45L * 86400L * 1000000000L
-      s"""WITH e AS (SELECT epoch_us(ts) * 1000 AS t, user_id,
-         |        100 + event_id % 460 AS resp_status, value AS latency,
-         |        CASE WHEN event_id % 25 = 0 THEN '/healthz'
-         |             WHEN event_id % 25 = 1 THEN '/readyz'
-         |             ELSE '/api/v1/users/' || user_id END AS req_path,
-         |        CASE WHEN event_id % 5 = 0 THEN '-' ELSE '10.x' END AS remote_addr
-         |      FROM events WHERE epoch_us(ts) * 1000 >= $start
-         |        AND epoch_us(ts) * 1000 < $now),
-         |f AS (SELECT * FROM e
-         |      WHERE req_path <> '/healthz' AND req_path <> '/readyz'
-         |        AND remote_addr <> '-' AND contains('svc-' || (user_id % 10), 'svc-3'))
-         |SELECT resp_status, count(latency) AS "count"
-         |FROM f GROUP BY 1 ORDER BY resp_status""".stripMargin
-    },
-
-    "q66_pxl_service_stats" -> {
-      val start = graft.functions.PixieFunctions.tsNsLit("2024-02-01") -
-        45L * 86400L * 1000000000L
-      s"""WITH e AS (SELECT epoch_us(ts) * 1000 AS t, user_id,
-         |        100 + event_id % 460 AS resp_status, value AS latency
-         |      FROM events WHERE epoch_us(ts) * 1000 >= $start),
-         |w AS (SELECT *, 'svc-' || (user_id % 10) AS service,
-         |        CASE WHEN resp_status >= 400 THEN 1 ELSE 0 END AS failure,
-         |        t - t % 3600000000000 AS range_group FROM e),
-         |pw AS (SELECT service, range_group, count(resp_status) AS n
-         |       FROM w GROUP BY 1, 2),
-         |ps AS (SELECT service, count(n) AS windows,
-         |         avg(CAST(n AS DOUBLE)) AS avg_per_window FROM pw GROUP BY 1),
-         |er AS (SELECT service, avg(CAST(failure AS DOUBLE)) AS err_rate,
-         |         count(resp_status) AS total, max(latency) AS max_latency
-         |       FROM w GROUP BY 1)
-         |SELECT ps.service, windows, avg_per_window, err_rate, total,
-         |  max_latency, CAST(total AS DOUBLE) / windows AS req_per_hour
-         |FROM ps JOIN er ON ps.service = er.service
-         |WHERE total > 0 ORDER BY ps.service""".stripMargin
-    }
+    })
   )
 }

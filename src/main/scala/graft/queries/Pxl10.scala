@@ -22,46 +22,59 @@ import PxlGate._
   */
 object Pxl10 extends Gates {
 
-  val queries: Map[String, QFn] = Map(
+  lazy val gates: Seq[Gate] = Seq(
     // mysql_stats latency_histogram: 5ms-binned latency counts over the
     // none-code-filtered table.
-    "q178_pxl_mysql_latency_hist" -> ((s, dir) =>
+    Gate("q178_pxl_mysql_latency_hist", (s, dir) =>
       PxlRunner.runFunction(script(Pxl4.MysqlStatsPath), Pxl.env(s, dir, nowNs),
           "latency_histogram", Seq("-45d", ""))
-        .orderBy("request_latency")),
+        .orderBy("request_latency"), oracle =
+      // mysql histogram: none-code filter (resp_status = event_id%4 <> 1).
+      s"""WITH $eventsCte
+         |SELECT $latencyBinSql AS request_latency, count(*) AS "count"
+         |FROM e WHERE event_id % 4 <> 1
+         |GROUP BY 1 ORDER BY request_latency""".stripMargin),
 
     // mysql_stats summary_mysql_let: whole-window LET summary per
     // source->destination edge, with script_reference deep links.
-    "q179_pxl_mysql_summary" -> ((s, dir) =>
+    Gate("q179_pxl_mysql_summary", (s, dir) =>
       PxlRunner.runFunction(script(Pxl4.MysqlStatsPath), Pxl.env(s, dir, nowNs),
           "summary_mysql_let", Seq("-45d", "pod"))
         .withColumn("request_throughput", canon("request_throughput"))
         .withColumn("error_rate", canon("error_rate"))
-        .orderBy("source", "destination")),
+        .orderBy("source", "destination"), oracle =
+      summaryOracle("WHERE event_id % 4 <> 1", withErrorRate = true)),
 
-    "q180_pxl_redis_latency_hist" -> ((s, dir) =>
+    Gate("q180_pxl_redis_latency_hist", (s, dir) =>
       PxlRunner.runFunction(script(Pxl4.RedisStatsPath), Pxl.env(s, dir, nowNs),
           "latency_histogram", Seq("-45d", ""))
-        .orderBy("request_latency")),
+        .orderBy("request_latency"), oracle =
+      s"""WITH $eventsCte
+         |SELECT $latencyBinSql AS request_latency, count(*) AS "count"
+         |FROM e GROUP BY 1 ORDER BY request_latency""".stripMargin),
 
     // redis has no failure column: summary is throughput/latency/total.
-    "q181_pxl_redis_summary" -> ((s, dir) =>
+    Gate("q181_pxl_redis_summary", (s, dir) =>
       PxlRunner.runFunction(script(Pxl4.RedisStatsPath), Pxl.env(s, dir, nowNs),
           "summary_redis_let", Seq("-45d", "pod"))
         .withColumn("request_throughput", canon("request_throughput"))
-        .orderBy("source", "destination")),
+        .orderBy("source", "destination"), oracle = summaryOracle("", withErrorRate = false)),
 
     // redis cmd_timeseries: per-window command throughput.
-    "q182_pxl_redis_cmds" -> ((s, dir) =>
+    Gate("q182_pxl_redis_cmds", (s, dir) =>
       PxlRunner.runFunction(script(Pxl4.RedisStatsPath), Pxl.env(s, dir, nowNs),
           "cmd_timeseries", Seq("-45d", ""))
-        .orderBy("time_", "req_cmd")),
+        .orderBy("time_", "req_cmd"), oracle =
+      s"""WITH $eventsCte
+         |SELECT t - t % 10000000000 AS time_, $redisCmdSql AS req_cmd,
+         |  count(*) AS throughput_total
+         |FROM e GROUP BY 1, 2 ORDER BY time_, req_cmd""".stripMargin),
 
-    "q183_pxl_pgsql_summary" -> ((s, dir) =>
+    Gate("q183_pxl_pgsql_summary", (s, dir) =>
       PxlRunner.runFunction(script(Pxl4.PgsqlStatsPath), Pxl.env(s, dir, nowNs),
           "summary_pgsql_let", Seq("-45d", "pod"))
         .withColumn("request_throughput", canon("request_throughput"))
-        .orderBy("source", "destination")),
+        .orderBy("source", "destination"), oracle = summaryOracle("", withErrorRate = false)),
 
     // cql summary keys on (pod, CQL IP); latency is the mean of the
     // UN-floored per-window p50 doubles (format_LET_aggs in cql_stats
@@ -75,22 +88,56 @@ object Pxl10 extends Gates {
     // 1.75e-5 at sf0.01 AND sf0.1 — 4 orders above the noise. The rate
     // columns keep the scaled 9 dp canon: their true values sit on the
     // count/1e10 grid, never near boundaries.
-    "q184_pxl_cql_summary" -> ((s, dir) =>
+    Gate("q184_pxl_cql_summary", (s, dir) =>
       PxlRunner.runFunction(script(Pxl4.CqlStatsPath), Pxl.env(s, dir, nowNs),
           "summary_cql_let", Seq("-45d", "pod"))
         .withColumn("request_throughput", canon("request_throughput"))
         .withColumn("error_rate", canon("error_rate"))
         .withColumn("latency", round(col("latency") + 0.00217, 2))
-        .orderBy("pod", "`CQL IP`")),
+        .orderBy("pod", "`CQL IP`"), oracle =
+      // cql: windows keyed (pod, ts_bin, remote_addr); latency quantiles
+      // over the responded subset only (q130 convention), then summarized
+      // per (pod, CQL IP).
+      s"""WITH $eventsCte,
+         |b AS (SELECT t - t % 10000000000 AS ts_bin,
+         |        'pod-' || user_id || '-gen' || g AS pod,
+         |        CASE WHEN event_id % 5 = 0 THEN '-'
+         |             ELSE '10.' || (10 + g) || '.' || (user_id % 250) || '.'
+         |               || (1 + user_id // 250) END AS remote_addr,
+         |        value AS latency, (event_id + 3) % 20 AS resp_op,
+         |        CASE WHEN (event_id + 3) % 20 = 0 THEN 1 ELSE 0 END AS failure
+         |      FROM e),
+         |et AS (SELECT pod, ts_bin, remote_addr, count(latency) AS tt,
+         |         avg(CAST(failure AS DOUBLE)) AS erw
+         |       FROM b GROUP BY 1, 2, 3),
+         |lcy AS (SELECT pod, ts_bin, remote_addr,
+         |          quantile_cont(latency, 0.50) AS p50
+         |        FROM b WHERE resp_op <> 0 GROUP BY 1, 2, 3)
+         |SELECT et.pod,
+         |  et.remote_addr AS "CQL IP",
+         |  round(avg(tt / 10000000000) * 10000000000, 9) / 10000000000
+         |    AS request_throughput,
+         |  round(avg(erw * (tt / 10000000000)) * 10000000000, 9)
+         |    / 10000000000 AS error_rate,
+         |  round(avg(p50) + 0.00217, 2) AS latency,
+         |  CAST(sum(tt) AS BIGINT) AS total_requests
+         |FROM et LEFT JOIN lcy ON et.pod = lcy.pod AND et.ts_bin = lcy.ts_bin
+         |  AND et.remote_addr = lcy.remote_addr
+         |GROUP BY 1, 2 ORDER BY et.pod, "CQL IP"""".stripMargin),
 
     // cql cmd_timeseries: opcode names via px.cql_opcode_name.
-    "q185_pxl_cql_cmds" -> ((s, dir) =>
+    Gate("q185_pxl_cql_cmds", (s, dir) =>
       PxlRunner.runFunction(script(Pxl4.CqlStatsPath), Pxl.env(s, dir, nowNs),
           "cmd_timeseries", Seq("-45d", ""))
-        .orderBy("time_", "req_op"))
+        .orderBy("time_", "req_op"), oracle =
+      s"""WITH $eventsCte
+         |SELECT t - t % 10000000000 AS time_,
+         |  ${ProtocolOps.cqlOpcodeName.sql("(event_id % 20)")} AS req_op,
+         |  count(*) AS throughput_total
+         |FROM e GROUP BY 1, 2 ORDER BY time_, req_op""".stripMargin)
   )
 
-  // ---- oracles -------------------------------------------------------
+  // ---- oracle fragments ----------------------------------------------
 
   /** add_source_dest_columns over the tracerBase synth (q133 shape). */
   private val sourceDestCte =
@@ -149,69 +196,4 @@ object Pxl10 extends Gates {
   private val redisCmdSql =
     """CASE event_id % 6 WHEN 0 THEN 'GET' WHEN 1 THEN 'SET' WHEN 2 THEN 'DEL'
       |     WHEN 3 THEN 'INCR' WHEN 4 THEN 'EXPIRE' ELSE 'HGETALL' END""".stripMargin
-
-  val oracles: Map[String, String] = Map(
-    // mysql histogram: none-code filter (resp_status = event_id%4 <> 1).
-    "q178_pxl_mysql_latency_hist" ->
-      s"""WITH $eventsCte
-         |SELECT $latencyBinSql AS request_latency, count(*) AS "count"
-         |FROM e WHERE event_id % 4 <> 1
-         |GROUP BY 1 ORDER BY request_latency""".stripMargin,
-
-    "q179_pxl_mysql_summary" ->
-      summaryOracle("WHERE event_id % 4 <> 1", withErrorRate = true),
-
-    "q180_pxl_redis_latency_hist" ->
-      s"""WITH $eventsCte
-         |SELECT $latencyBinSql AS request_latency, count(*) AS "count"
-         |FROM e GROUP BY 1 ORDER BY request_latency""".stripMargin,
-
-    "q181_pxl_redis_summary" -> summaryOracle("", withErrorRate = false),
-
-    "q182_pxl_redis_cmds" ->
-      s"""WITH $eventsCte
-         |SELECT t - t % 10000000000 AS time_, $redisCmdSql AS req_cmd,
-         |  count(*) AS throughput_total
-         |FROM e GROUP BY 1, 2 ORDER BY time_, req_cmd""".stripMargin,
-
-    "q183_pxl_pgsql_summary" -> summaryOracle("", withErrorRate = false),
-
-    // cql: windows keyed (pod, ts_bin, remote_addr); latency quantiles
-    // over the responded subset only (q130 convention), then summarized
-    // per (pod, CQL IP).
-    "q184_pxl_cql_summary" ->
-      s"""WITH $eventsCte,
-         |b AS (SELECT t - t % 10000000000 AS ts_bin,
-         |        'pod-' || user_id || '-gen' || g AS pod,
-         |        CASE WHEN event_id % 5 = 0 THEN '-'
-         |             ELSE '10.' || (10 + g) || '.' || (user_id % 250) || '.'
-         |               || (1 + user_id // 250) END AS remote_addr,
-         |        value AS latency, (event_id + 3) % 20 AS resp_op,
-         |        CASE WHEN (event_id + 3) % 20 = 0 THEN 1 ELSE 0 END AS failure
-         |      FROM e),
-         |et AS (SELECT pod, ts_bin, remote_addr, count(latency) AS tt,
-         |         avg(CAST(failure AS DOUBLE)) AS erw
-         |       FROM b GROUP BY 1, 2, 3),
-         |lcy AS (SELECT pod, ts_bin, remote_addr,
-         |          quantile_cont(latency, 0.50) AS p50
-         |        FROM b WHERE resp_op <> 0 GROUP BY 1, 2, 3)
-         |SELECT et.pod,
-         |  et.remote_addr AS "CQL IP",
-         |  round(avg(tt / 10000000000) * 10000000000, 9) / 10000000000
-         |    AS request_throughput,
-         |  round(avg(erw * (tt / 10000000000)) * 10000000000, 9)
-         |    / 10000000000 AS error_rate,
-         |  round(avg(p50) + 0.00217, 2) AS latency,
-         |  CAST(sum(tt) AS BIGINT) AS total_requests
-         |FROM et LEFT JOIN lcy ON et.pod = lcy.pod AND et.ts_bin = lcy.ts_bin
-         |  AND et.remote_addr = lcy.remote_addr
-         |GROUP BY 1, 2 ORDER BY et.pod, "CQL IP"""".stripMargin,
-
-    "q185_pxl_cql_cmds" ->
-      s"""WITH $eventsCte
-         |SELECT t - t % 10000000000 AS time_,
-         |  ${ProtocolOps.cqlOpcodeName.sql("(event_id % 20)")} AS req_op,
-         |  count(*) AS throughput_total
-         |FROM e GROUP BY 1, 2 ORDER BY time_, req_op""".stripMargin
-  )
 }

@@ -31,95 +31,25 @@ object Pxl16 extends Gates {
   val DnsFilteredPath = s"$RefScripts/sotw/dns_queries_filtered/data.pxl"
   val FqdnListPath = s"$RefScripts/sotw/dns_external_fqdn_list/data.pxl"
 
-  val queries: Map[String, QFn] = Map(
+  lazy val gates: Seq[Gate] = Seq(
     // service_endpoints endpoints: the clustered endpoint catalog with
     // pxbeta/service_endpoint deep links.
-    "q228_pxl_endpoints_list" -> ((s, dir) =>
+    Gate("q228_pxl_endpoints_list", (s, dir) =>
       PxlRunner.runFunction(script(EndpointsPath), Pxl.env(s, dir, nowNs),
           "endpoints", Seq("-45d", "svc-1"))
-        .orderBy("endpoint")),
-
-    // service_endpoints endpoint_let: windowed LET per endpoint.
-    "q229_pxl_endpoints_let" -> ((s, dir) =>
-      PxlRunner.runFunction(script(EndpointsPath), Pxl.env(s, dir, nowNs),
-          "endpoint_let", Seq("-45d", "svc-1"))
-        .orderBy("time_", "endpoint")),
-
-    // service_endpoint endpoint_let_timeseries: one endpoint template
-    // matched via px._match_endpoint.
-    "q230_pxl_endpoint_let_ts" -> ((s, dir) =>
-      PxlRunner.runFunction(script(EndpointPath), Pxl.env(s, dir, nowNs),
-          "endpoint_let_timeseries",
-          Seq("-45d", "svc-1", "/api/v1/users/*"))
-        .orderBy("time_")),
-
-    // service_endpoint endpoint_slow_requests: p99 tail of the matched
-    // endpoint with linked sources (head cap not binding at sf0.01).
-    "q231_pxl_endpoint_slow" -> ((s, dir) =>
-      PxlRunner.runFunction(script(EndpointPath), Pxl.env(s, dir, nowNs),
-          "endpoint_slow_requests",
-          Seq("-45d", "svc-1", "/api/v1/users/*"))
-        .orderBy("time_", "req_body")),
-
-    // sotw dns_queries_filtered: per (pod, dns server) query rollup;
-    // the single-query bodies have no ',' so the parsed name is ''
-    // (SubstringUDF returns '' for a negative length — string_ops.h:83).
-    "q232_pxl_dns_filtered" -> ((s, dir) =>
-      PxlRunner.runFunction(script(DnsFilteredPath), Pxl.env(s, dir, nowNs),
-          "dns_requests", Seq("-45d", ""))
-        .withColumn("latency_p50",
-          get_json_object(col("latency"), "$.p50").cast("double"))
-        .withColumn("latency_p99",
-          get_json_object(col("latency"), "$.p99").cast("double"))
-        .drop("latency")
-        .orderBy("pod", "dns_server")),
-
-    // pxbeta/pii_cluster_egress is NOT gated: its redis branch projects
-    // out_columns (including `protocol`) BEFORE assigning df.protocol —
-    // the redis_events table has no such column (redis_table.h:32-57),
-    // so the reference compiler rejects the script too. Upstream bug in
-    // the beta script, not a coverage gap.
-
-    // sotw fqdn_list: the single-query bodies have no ',' so the parsed
-    // fqdn is '' (negative-length substring contract), which passes the
-    // '.local' filters -> one ('', link, count-of-resolved) group.
-    "q233_pxl_fqdn_list" -> ((s, dir) =>
-      PxlRunner.runFunction(script(FqdnListPath), Pxl.env(s, dir, nowNs),
-          "fqdn_list", Seq("-45d")))
-  )
-
-  // ---- oracles -------------------------------------------------------
-
-  /** svc-1 inbound rows (flags are all False in the pxbeta scripts —
-    * health/ready/unresolved rows stay) with the sf-adaptive endpoint.
-    */
-  private val endpointCte =
-    s"""f AS (SELECT t, t - t % 10000000000 AS ts_bin, value AS latency,
-       |        event_id, user_id, g,
-       |        CASE WHEN event_id % 25 = 0 THEN '/healthz'
-       |             WHEN event_id % 25 = 1 THEN '/readyz'
-       |             ELSE '/api/v1/users/' || user_id END AS req_path,
-       |        event_id % 512 AS req_sz, 100 + event_id % 1000 AS resp_sz,
-       |        CASE WHEN 100 + event_id % 460 >= 400 THEN 1 ELSE 0 END
-       |          AS failure
-       |      FROM e WHERE user_id % 10 = 1 AND event_id % 3 <> 0),
-       |nc AS (SELECT count(DISTINCT user_id) AS n4 FROM e
-       |       WHERE user_id % 10 = 1),
-       |ep AS (SELECT f.*,
-       |         CASE WHEN req_path LIKE '/api/v1/users/%' AND nc.n4 > 5
-       |              THEN '/api/v1/users/*' ELSE req_path END AS endpoint
-       |       FROM f, nc)""".stripMargin
-
-  val oracles: Map[String, String] = Map(
-    "q228_pxl_endpoints_list" ->
+        .orderBy("endpoint"), oracle =
       s"""WITH $eventsCte,
          |$endpointCte
          |SELECT DISTINCT '{"label":"' || endpoint ||
          |  '","script":"pxbeta/service_endpoint","args":{"start_time":"-45d","service":"svc-1","endpoint":"'
          |  || endpoint || '"}}' AS endpoint
-         |FROM ep ORDER BY endpoint""".stripMargin,
+         |FROM ep ORDER BY endpoint""".stripMargin),
 
-    "q229_pxl_endpoints_let" ->
+    // service_endpoints endpoint_let: windowed LET per endpoint.
+    Gate("q229_pxl_endpoints_let", (s, dir) =>
+      PxlRunner.runFunction(script(EndpointsPath), Pxl.env(s, dir, nowNs),
+          "endpoint_let", Seq("-45d", "svc-1"))
+        .orderBy("time_", "endpoint"), oracle =
       s"""WITH $eventsCte,
          |$endpointCte
          |SELECT ts_bin AS time_, endpoint,
@@ -130,9 +60,15 @@ object Pxl16 extends Gates {
          |  avg(CAST(failure AS DOUBLE)) AS error_rate,
          |  CAST(sum(req_sz) AS BIGINT) / 10000000000 AS inbound_throughput,
          |  CAST(sum(resp_sz) AS BIGINT) / 10000000000 AS outbound_throughput
-         |FROM ep GROUP BY 1, 2 ORDER BY time_, endpoint""".stripMargin,
+         |FROM ep GROUP BY 1, 2 ORDER BY time_, endpoint""".stripMargin),
 
-    "q230_pxl_endpoint_let_ts" ->
+    // service_endpoint endpoint_let_timeseries: one endpoint template
+    // matched via px._match_endpoint.
+    Gate("q230_pxl_endpoint_let_ts", (s, dir) =>
+      PxlRunner.runFunction(script(EndpointPath), Pxl.env(s, dir, nowNs),
+          "endpoint_let_timeseries",
+          Seq("-45d", "svc-1", "/api/v1/users/*"))
+        .orderBy("time_"), oracle =
       s"""WITH $eventsCte,
          |$endpointCte
          |SELECT ts_bin AS time_,
@@ -145,9 +81,15 @@ object Pxl16 extends Gates {
          |  avg(CAST(failure AS DOUBLE)) AS error_rate,
          |  CAST(sum(resp_sz) AS BIGINT) / 10000000000 AS bytes_per_ns
          |FROM ep WHERE req_path LIKE '/api/v1/users/%'
-         |GROUP BY 1 ORDER BY time_""".stripMargin,
+         |GROUP BY 1 ORDER BY time_""".stripMargin),
 
-    "q231_pxl_endpoint_slow" -> {
+    // service_endpoint endpoint_slow_requests: p99 tail of the matched
+    // endpoint with linked sources (head cap not binding at sf0.01).
+    Gate("q231_pxl_endpoint_slow", (s, dir) =>
+      PxlRunner.runFunction(script(EndpointPath), Pxl.env(s, dir, nowNs),
+          "endpoint_slow_requests",
+          Seq("-45d", "svc-1", "/api/v1/users/*"))
+        .orderBy("time_", "req_body"), oracle = {
       def podLink(c: String): String =
         s"""'{"label":"' || $c || '","script":"px/pod","args":{"start_time":"-45d","pod":"' || $c || '"}}'"""
       def ipLink(c: String): String =
@@ -172,9 +114,20 @@ object Pxl16 extends Gates {
          |  latency, req_method, req_path, req_body, resp_status, resp_body
          |FROM h, q WHERE latency >= floor(p99)
          |ORDER BY time_, req_body""".stripMargin
-    },
+    }),
 
-    "q232_pxl_dns_filtered" ->
+    // sotw dns_queries_filtered: per (pod, dns server) query rollup;
+    // the single-query bodies have no ',' so the parsed name is ''
+    // (SubstringUDF returns '' for a negative length — string_ops.h:83).
+    Gate("q232_pxl_dns_filtered", (s, dir) =>
+      PxlRunner.runFunction(script(DnsFilteredPath), Pxl.env(s, dir, nowNs),
+          "dns_requests", Seq("-45d", ""))
+        .withColumn("latency_p50",
+          get_json_object(col("latency"), "$.p50").cast("double"))
+        .withColumn("latency_p99",
+          get_json_object(col("latency"), "$.p99").cast("double"))
+        .drop("latency")
+        .orderBy("pod", "dns_server"), oracle =
       s"""WITH $eventsCte,
          |d AS (SELECT 'pod-' || user_id || '-gen' || g AS pod,
          |        ${graft.functions.NetOps.nslookupStubSql(
@@ -189,14 +142,47 @@ object Pxl16 extends Gates {
          |  count(*) AS num_requests, avg(resolved) AS resolved,
          |  quantile_cont(latency, 0.50) AS latency_p50,
          |  quantile_cont(latency, 0.99) AS latency_p99
-         |FROM d GROUP BY 1, 2 ORDER BY pod, dns_server""".stripMargin,
+         |FROM d GROUP BY 1, 2 ORDER BY pod, dns_server""".stripMargin),
 
-    "q233_pxl_fqdn_list" ->
+    // pxbeta/pii_cluster_egress is NOT gated: its redis branch projects
+    // out_columns (including `protocol`) BEFORE assigning df.protocol —
+    // the redis_events table has no such column (redis_table.h:32-57),
+    // so the reference compiler rejects the script too. Upstream bug in
+    // the beta script, not a coverage gap.
+
+    // sotw fqdn_list: the single-query bodies have no ',' so the parsed
+    // fqdn is '' (negative-length substring contract), which passes the
+    // '.local' filters -> one ('', link, count-of-resolved) group.
+    Gate("q233_pxl_fqdn_list", (s, dir) =>
+      PxlRunner.runFunction(script(FqdnListPath), Pxl.env(s, dir, nowNs),
+          "fqdn_list", Seq("-45d")), oracle =
       s"""WITH $eventsCte
          |SELECT '' AS fqdn,
          |  '{"label":"All DNS requests containing FQDN as substring","script":"sotw/dns_queries_filtered","args":{"start_time":"-45d","query_name_filter":""}}'
          |    AS link,
          |  count(*) AS num_requests
-         |FROM e WHERE event_id % 4 = 0""".stripMargin
+         |FROM e WHERE event_id % 4 = 0""".stripMargin)
   )
+
+  // ---- oracle fragments ----------------------------------------------
+
+  /** svc-1 inbound rows (flags are all False in the pxbeta scripts —
+    * health/ready/unresolved rows stay) with the sf-adaptive endpoint.
+    */
+  private val endpointCte =
+    s"""f AS (SELECT t, t - t % 10000000000 AS ts_bin, value AS latency,
+       |        event_id, user_id, g,
+       |        CASE WHEN event_id % 25 = 0 THEN '/healthz'
+       |             WHEN event_id % 25 = 1 THEN '/readyz'
+       |             ELSE '/api/v1/users/' || user_id END AS req_path,
+       |        event_id % 512 AS req_sz, 100 + event_id % 1000 AS resp_sz,
+       |        CASE WHEN 100 + event_id % 460 >= 400 THEN 1 ELSE 0 END
+       |          AS failure
+       |      FROM e WHERE user_id % 10 = 1 AND event_id % 3 <> 0),
+       |nc AS (SELECT count(DISTINCT user_id) AS n4 FROM e
+       |       WHERE user_id % 10 = 1),
+       |ep AS (SELECT f.*,
+       |         CASE WHEN req_path LIKE '/api/v1/users/%' AND nc.n4 > 5
+       |              THEN '/api/v1/users/*' ELSE req_path END AS endpoint
+       |       FROM f, nc)""".stripMargin
 }

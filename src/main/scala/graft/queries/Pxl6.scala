@@ -27,79 +27,14 @@ object Pxl6 extends Gates {
   val MostHttpPath = s"$RefPx/most_http_data/data.pxl"
   val LargestHttpPath = s"$RefPx/largest_http_request/data.pxl"
 
-  val queries: Map[String, QFn] = Map(
+  lazy val gates: Seq[Gate] = Seq(
     // dns_query_summary.pxl: pluck the queries/answers arrays, parse the
     // query-name prefix with find/substring, nslookup the resolver, roll
     // up resolution/NXDOMAIN rates per (pod, resolver, prefix).
-    "q152_pxl_dns_query_summary" -> ((s, dir) =>
+    Gate("q152_pxl_dns_query_summary", (s, dir) =>
       PxlRunner.runFunction(script(DnsQuerySummaryPath), Pxl.env(s, dir, nowNs),
           "dns_queries", Seq("-45d", "", "", "", ""))
-        .orderBy("pod", "dns_server", "qname")),
-
-    // network_stats.pxl: raw select= projection + head over the -30s tail.
-    "q153_pxl_network_stats_raw" -> ((s, dir) =>
-      PxlRunner.run(script(NetworkStatsPath),
-          Pxl.env(s, dir, tailNowNs(s, dir)))("output")
-        .orderBy("time_")),
-
-    // service_resource_usage.pxl services_for_cluster: process rollup
-    // left-joined with the http LET summary. http_latency is the RAW
-    // quantiles JSON — canonicalized to typed doubles (q145 convention).
-    "q154_pxl_service_resource" -> ((s, dir) =>
-      PxlRunner.runFunction(script(ServiceResourcePath), Pxl.env(s, dir, nowNs),
-          "services_for_cluster", Seq("-45d"))
-        .withColumn("latency_p50",
-          get_json_object(col("http_latency"), "$.p50").cast("double"))
-        .withColumn("latency_p99",
-          get_json_object(col("http_latency"), "$.p99").cast("double"))
-        .drop("http_latency")
-        .orderBy("service")),
-
-    // pod_memory_usage.pxl: two-level upid->pod memory rollup over the
-    // -1m tail; spaced output column names.
-    "q155_pxl_pod_memory" -> ((s, dir) =>
-      PxlRunner.run(script(PodMemoryPath),
-          Pxl.env(s, dir, tailNowNs(s, dir)))("output")
-        .orderBy("pod", "timestamp")),
-
-    // most_http_data.pxl: global-max agg self-merged back (get_max_elm)
-    // onto the per-(pod, path) byte sums.
-    "q156_pxl_most_http_data" -> ((s, dir) =>
-      PxlRunner.run(script(MostHttpPath),
-          Pxl.env(s, dir, tailNowNs(s, dir)))("max_path_pod")
-        .orderBy("pod", "req_path")),
-
-    // largest_http_request.pxl: same max-row pattern at row level, then
-    // the per-(pod, path, size) request count.
-    "q157_pxl_largest_http" -> ((s, dir) =>
-      PxlRunner.run(script(LargestHttpPath),
-          Pxl.env(s, dir, tailNowNs(s, dir)))("number of reqs")
-        .orderBy("pod", "req_path"))
-  )
-
-  // ---- oracles -------------------------------------------------------
-
-  /** Tail-window CTE for the quick-look scripts (now = max event + 1µs). */
-  private def tailCte(windowNs: Long): String =
-    s"""mx AS (SELECT max(epoch_us(ts)) * 1000 + 1000 AS now_ns FROM events),
-       |e AS (SELECT epoch_us(ts) * 1000 AS t, epoch_us(ts) AS us, user_id,
-       |        event_id, value,
-       |        CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 0 ELSE 1 END AS g
-       |      FROM events, mx
-       |      WHERE epoch_us(ts) * 1000 >= mx.now_ns - $windowNs
-       |        AND epoch_us(ts) * 1000 < mx.now_ns)""".stripMargin
-
-  private val selfIpSql =
-    "'10.' || (10 + g) || '.' || (user_id % 250) || '.' || (1 + user_id // 250)"
-
-  /** http_events req_path / filter battery shared by most/largest. */
-  private val httpPathSql =
-    """CASE WHEN event_id % 25 = 0 THEN '/healthz'
-      |     WHEN event_id % 25 = 1 THEN '/readyz'
-      |     ELSE '/api/v1/users/' || user_id END""".stripMargin
-
-  val oracles: Map[String, String] = Map(
-    "q152_pxl_dns_query_summary" ->
+        .orderBy("pod", "dns_server", "qname"), oracle =
       s"""WITH $eventsCte,
          |w AS (SELECT 'pod-' || user_id || '-gen' || g AS pod,
          |        ${graft.functions.NetOps.nslookupStubSql(
@@ -117,17 +52,32 @@ object Pxl6 extends Gates {
          |  CAST(sum(nxd) AS BIGINT) / count(*) AS nxdomain_rate,
          |  qname || ' @' || dns_server AS qgroup
          |FROM w GROUP BY pod, dns_server, qname
-         |ORDER BY pod, dns_server, qname""".stripMargin,
+         |ORDER BY pod, dns_server, qname""".stripMargin),
 
-    "q153_pxl_network_stats_raw" ->
+    // network_stats.pxl: raw select= projection + head over the -30s tail.
+    Gate("q153_pxl_network_stats_raw", (s, dir) =>
+      PxlRunner.run(script(NetworkStatsPath),
+          Pxl.env(s, dir, tailNowNs(s, dir)))("output")
+        .orderBy("time_"), oracle =
       s"""WITH ${tailCte(30000000000L)}
          |SELECT t AS time_, 'pid-' || user_id || '-g' || g AS pod_id,
          |  us AS rx_bytes, us // 700 AS rx_packets, us // 1500 AS rx_errors,
          |  us // 3000 AS rx_drops, us // 2 AS tx_bytes, us // 800 AS tx_packets,
          |  us // 1000 AS tx_errors, us // 2000 AS tx_drops
-         |FROM e ORDER BY time_""".stripMargin,
+         |FROM e ORDER BY time_""".stripMargin),
 
-    "q154_pxl_service_resource" ->
+    // service_resource_usage.pxl services_for_cluster: process rollup
+    // left-joined with the http LET summary. http_latency is the RAW
+    // quantiles JSON — canonicalized to typed doubles (q145 convention).
+    Gate("q154_pxl_service_resource", (s, dir) =>
+      PxlRunner.runFunction(script(ServiceResourcePath), Pxl.env(s, dir, nowNs),
+          "services_for_cluster", Seq("-45d"))
+        .withColumn("latency_p50",
+          get_json_object(col("http_latency"), "$.p50").cast("double"))
+        .withColumn("latency_p99",
+          get_json_object(col("http_latency"), "$.p99").cast("double"))
+        .drop("http_latency")
+        .orderBy("service"), oracle =
       s"""WITH $eventsCte,
          |p1 AS (SELECT 'svc-' || (user_id % 10) AS service,
          |         max(t) - min(t) AS tw,
@@ -147,9 +97,14 @@ object Pxl6 extends Gates {
          |  tput / time_window AS http_request_throughput,
          |  latency_p50, latency_p99
          |FROM p2 LEFT JOIN h2 ON p2.service = h2.service
-         |ORDER BY p2.service""".stripMargin,
+         |ORDER BY p2.service""".stripMargin),
 
-    "q155_pxl_pod_memory" ->
+    // pod_memory_usage.pxl: two-level upid->pod memory rollup over the
+    // -1m tail; spaced output column names.
+    Gate("q155_pxl_pod_memory", (s, dir) =>
+      PxlRunner.run(script(PodMemoryPath),
+          Pxl.env(s, dir, tailNowNs(s, dir)))("output")
+        .orderBy("pod", "timestamp"), oracle =
       s"""WITH ${tailCte(60000000000L)}
          |SELECT 'pod-' || user_id || '-gen' || g AS pod,
          |  t - t % 10000000000 AS "timestamp",
@@ -157,9 +112,14 @@ object Pxl6 extends Gates {
          |    AS "Virtual Memory",
          |  sum(CAST((50 + event_id % 450) * 1048576 AS DOUBLE))
          |    AS "Average Memory"
-         |FROM e GROUP BY 1, 2 ORDER BY pod, "timestamp"""".stripMargin,
+         |FROM e GROUP BY 1, 2 ORDER BY pod, "timestamp"""".stripMargin),
 
-    "q156_pxl_most_http_data" ->
+    // most_http_data.pxl: global-max agg self-merged back (get_max_elm)
+    // onto the per-(pod, path) byte sums.
+    Gate("q156_pxl_most_http_data", (s, dir) =>
+      PxlRunner.run(script(MostHttpPath),
+          Pxl.env(s, dir, tailNowNs(s, dir)))("max_path_pod")
+        .orderBy("pod", "req_path"), oracle =
       s"""WITH ${tailCte(120000000000L)},
          |f AS (SELECT 'pod-' || user_id || '-gen' || g AS pod,
          |        $httpPathSql AS req_path,
@@ -171,9 +131,14 @@ object Pxl6 extends Gates {
          |m AS (SELECT max(resp_bytes_sum) AS mxv FROM s)
          |SELECT pod, req_path, resp_bytes_sum
          |FROM s, m WHERE resp_bytes_sum = mxv
-         |ORDER BY pod, req_path""".stripMargin,
+         |ORDER BY pod, req_path""".stripMargin),
 
-    "q157_pxl_largest_http" ->
+    // largest_http_request.pxl: same max-row pattern at row level, then
+    // the per-(pod, path, size) request count.
+    Gate("q157_pxl_largest_http", (s, dir) =>
+      PxlRunner.run(script(LargestHttpPath),
+          Pxl.env(s, dir, tailNowNs(s, dir)))("number of reqs")
+        .orderBy("pod", "req_path"), oracle =
       s"""WITH ${tailCte(120000000000L)},
          |f AS (SELECT 'pod-' || user_id || '-gen' || g AS pod,
          |        $httpPathSql AS req_path,
@@ -185,6 +150,27 @@ object Pxl6 extends Gates {
          |  count(*) AS num_requests
          |FROM f, m WHERE resp_size_bytes = mxv
          |GROUP BY pod, req_path, resp_size_bytes
-         |ORDER BY pod, req_path""".stripMargin
+         |ORDER BY pod, req_path""".stripMargin)
   )
+
+  // ---- oracle fragments ----------------------------------------------
+
+  /** Tail-window CTE for the quick-look scripts (now = max event + 1µs). */
+  private def tailCte(windowNs: Long): String =
+    s"""mx AS (SELECT max(epoch_us(ts)) * 1000 + 1000 AS now_ns FROM events),
+       |e AS (SELECT epoch_us(ts) * 1000 AS t, epoch_us(ts) AS us, user_id,
+       |        event_id, value,
+       |        CASE WHEN epoch_us(ts) * 1000 < $splitNs THEN 0 ELSE 1 END AS g
+       |      FROM events, mx
+       |      WHERE epoch_us(ts) * 1000 >= mx.now_ns - $windowNs
+       |        AND epoch_us(ts) * 1000 < mx.now_ns)""".stripMargin
+
+  private val selfIpSql =
+    "'10.' || (10 + g) || '.' || (user_id % 250) || '.' || (1 + user_id // 250)"
+
+  /** http_events req_path / filter battery shared by most/largest. */
+  private val httpPathSql =
+    """CASE WHEN event_id % 25 = 0 THEN '/healthz'
+      |     WHEN event_id % 25 = 1 THEN '/readyz'
+      |     ELSE '/api/v1/users/' || user_id END""".stripMargin
 }

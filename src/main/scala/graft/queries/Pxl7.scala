@@ -22,34 +22,64 @@ object Pxl7 extends Gates {
   val JvmDataPath = s"$RefPx/jvm_data/stats.pxl"
   val AgentDiagPath = s"$RefPx/agent_status_diagnostics/agent_status.pxl"
 
-  val queries: Map[String, QFn] = Map(
+  lazy val gates: Seq[Gate] = Seq(
     // sql_queries: normalize pgsql Query/Execute + mysql COM_QUERY/
     // COM_STMT_EXECUTE traffic, append, LET per (window, normed query).
-    "q158_pxl_sql_queries" -> ((s, dir) =>
+    Gate("q158_pxl_sql_queries", (s, dir) =>
       PxlRunner.runFunction(script(SqlQueriesPath), Pxl.env(s, dir, nowNs),
           "pod_sql_let", Seq("-45d", "pod"))
-        .orderBy("time_", "normed_query")),
+        .orderBy("time_", "normed_query"), oracle =
+      s"""WITH $eventsCte,
+         |$sqlStreamsCte
+         |SELECT ts_bin AS time_, normed_query,
+         |  CAST(floor(quantile_cont(latency, 0.50)) AS BIGINT) AS latency_p50,
+         |  CAST(floor(quantile_cont(latency, 0.90)) AS BIGINT) AS latency_p90,
+         |  CAST(floor(quantile_cont(latency, 0.99)) AS BIGINT) AS latency_p99,
+         |  count(latency) / 10000000000 AS request_throughput
+         |FROM u GROUP BY 1, 2 ORDER BY time_, normed_query""".stripMargin),
 
     // sql_query: the same pipeline grouped by (query, params) and
     // filtered to one normalized query.
-    "q159_pxl_sql_query" -> ((s, dir) =>
+    Gate("q159_pxl_sql_query", (s, dir) =>
       PxlRunner.runFunction(script(SqlQueryPath), Pxl.env(s, dir, nowNs),
           "pod_sql_let", Seq("-45d", "pod", "SELECT * FROM rel3 WHERE id=$1"))
-        .orderBy("time_", "params")),
+        .orderBy("time_", "params"), oracle =
+      s"""WITH $eventsCte,
+         |$sqlStreamsCte
+         |SELECT ts_bin AS time_, normed_query, params,
+         |  CAST(floor(quantile_cont(latency, 0.50)) AS BIGINT) AS latency_p50,
+         |  CAST(floor(quantile_cont(latency, 0.90)) AS BIGINT) AS latency_p90,
+         |  CAST(floor(quantile_cont(latency, 0.99)) AS BIGINT) AS latency_p99,
+         |  count(latency) / 10000000000 AS request_throughput
+         |FROM u WHERE normed_query = 'SELECT * FROM rel3 WHERE id=$$1'
+         |GROUP BY 1, 2, 3 ORDER BY time_, params""".stripMargin),
 
     // jvm_data: raw JVM heap viewer over the -1m tail with
     // upid_to_pid/cmdline scalars.
-    "q160_pxl_jvm_data" -> ((s, dir) =>
+    Gate("q160_pxl_jvm_data", (s, dir) =>
       PxlRunner.run(script(JvmDataPath),
           Pxl.env(s, dir, tailNowNs(s, dir)))("output")
-        .orderBy("time_", "pid")),
+        .orderBy("time_", "pid"), oracle =
+      s"""WITH mx AS (SELECT max(epoch_us(ts)) * 1000 + 1000 AS now_ns
+         |      FROM events),
+         |e AS (SELECT epoch_us(ts) * 1000 AS t, user_id, event_id
+         |      FROM events, mx
+         |      WHERE epoch_us(ts) * 1000 >= mx.now_ns - 60000000000
+         |        AND epoch_us(ts) * 1000 < mx.now_ns)
+         |SELECT t AS time_, user_id * 2 AS pid,
+         |  (100 + event_id % 400) * 1048576 AS used_heap_size,
+         |  (600 + user_id % 100) * 1048576 AS total_heap_size,
+         |  CAST(1073741824 AS BIGINT) AS max_heap_size,
+         |  '/bin/app --id=' || user_id AS cmdline
+         |FROM e ORDER BY time_, pid""".stripMargin),
 
     // agent_status_diagnostics: UDTF source with a bool arg + global agg.
-    "q161_pxl_agent_diag" -> ((s, dir) =>
-      PxlRunner.run(script(AgentDiagPath), Pxl.env(s, dir, nowNs))("output"))
+    Gate("q161_pxl_agent_diag", (s, dir) =>
+      PxlRunner.run(script(AgentDiagPath), Pxl.env(s, dir, nowNs))("output"), oracle =
+      "SELECT CAST(1.0 AS DOUBLE) AS headers_installed_percent")
   )
 
-  // ---- oracles -------------------------------------------------------
+  // ---- oracle fragments ----------------------------------------------
 
   /** pg + mysql normalized-query streams (sql_queries/sql_query shape).
     * The synth queries carry one id literal, so normalization yields
@@ -69,44 +99,4 @@ object Pxl7 extends Gates {
        |        value AS latency
        |      FROM e WHERE event_id % 32 IN (3, 23)),
        |u AS (SELECT * FROM pg UNION ALL SELECT * FROM my)""".stripMargin
-
-  val oracles: Map[String, String] = Map(
-    "q158_pxl_sql_queries" ->
-      s"""WITH $eventsCte,
-         |$sqlStreamsCte
-         |SELECT ts_bin AS time_, normed_query,
-         |  CAST(floor(quantile_cont(latency, 0.50)) AS BIGINT) AS latency_p50,
-         |  CAST(floor(quantile_cont(latency, 0.90)) AS BIGINT) AS latency_p90,
-         |  CAST(floor(quantile_cont(latency, 0.99)) AS BIGINT) AS latency_p99,
-         |  count(latency) / 10000000000 AS request_throughput
-         |FROM u GROUP BY 1, 2 ORDER BY time_, normed_query""".stripMargin,
-
-    "q159_pxl_sql_query" ->
-      s"""WITH $eventsCte,
-         |$sqlStreamsCte
-         |SELECT ts_bin AS time_, normed_query, params,
-         |  CAST(floor(quantile_cont(latency, 0.50)) AS BIGINT) AS latency_p50,
-         |  CAST(floor(quantile_cont(latency, 0.90)) AS BIGINT) AS latency_p90,
-         |  CAST(floor(quantile_cont(latency, 0.99)) AS BIGINT) AS latency_p99,
-         |  count(latency) / 10000000000 AS request_throughput
-         |FROM u WHERE normed_query = 'SELECT * FROM rel3 WHERE id=$$1'
-         |GROUP BY 1, 2, 3 ORDER BY time_, params""".stripMargin,
-
-    "q160_pxl_jvm_data" ->
-      s"""WITH mx AS (SELECT max(epoch_us(ts)) * 1000 + 1000 AS now_ns
-         |      FROM events),
-         |e AS (SELECT epoch_us(ts) * 1000 AS t, user_id, event_id
-         |      FROM events, mx
-         |      WHERE epoch_us(ts) * 1000 >= mx.now_ns - 60000000000
-         |        AND epoch_us(ts) * 1000 < mx.now_ns)
-         |SELECT t AS time_, user_id * 2 AS pid,
-         |  (100 + event_id % 400) * 1048576 AS used_heap_size,
-         |  (600 + user_id % 100) * 1048576 AS total_heap_size,
-         |  CAST(1073741824 AS BIGINT) AS max_heap_size,
-         |  '/bin/app --id=' || user_id AS cmdline
-         |FROM e ORDER BY time_, pid""".stripMargin,
-
-    "q161_pxl_agent_diag" ->
-      "SELECT CAST(1.0 AS DOUBLE) AS headers_installed_percent"
-  )
 }

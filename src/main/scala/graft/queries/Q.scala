@@ -13,32 +13,31 @@ import org.apache.spark.sql.functions._
 object Q {
   type QFn = (SparkSession, String) => DataFrame
 
-  /** One gate file: its queries and their DuckDB oracles, keyed alike. */
+  /** One gate query: `build` makes its Spark frame and `oracle` is the
+    * DuckDB SQL over the same parquet tables that the frame must equal.
+    */
+  final case class Gate(name: String, build: QFn, oracle: String)
+
+  /** One gate file: its [[Gate]] records. */
   trait Gates {
-    def queries: Map[String, QFn]
-    def oracles: Map[String, String]
+    def gates: Seq[Gate]
   }
 
   object Gates {
 
-    /** The gate registry: every file's queries and oracles as one map
-      * each. Fails when a file's oracle keys differ from its query keys,
-      * or when a key appears in two files (`Map ++` would silently keep
-      * the later one).
+    /** The gate registry: every file's records as one builder map and
+      * one oracle map over the same names. Fails when a name occurs
+      * twice, in one file or in two (`toMap` would silently keep the
+      * later record).
       */
     def merge(files: Seq[Gates]): (Map[String, QFn], Map[String, String]) = {
       def name(g: Gates) = g.getClass.getName.stripSuffix("$")
-      for (g <- files) {
-        val (qs, os) = (g.queries.keySet, g.oracles.keySet)
-        require(qs == os, s"${name(g)}: oracles without a query: " +
-          s"${(os -- qs).toSeq.sorted.mkString(", ")}; queries without an " +
-          s"oracle: ${(qs -- os).toSeq.sorted.mkString(", ")}")
-      }
-      val twice = files.flatMap(g => g.queries.keys.map(_ -> name(g)))
+      val twice = files.flatMap(f => f.gates.map(_.name -> name(f)))
         .groupBy(_._1).filter(_._2.size > 1).toSeq.sortBy(_._1)
         .map { case (k, in) => s"$k in ${in.map(_._2).mkString(" and ")}" }
-      require(twice.isEmpty, s"gate keys in two files: ${twice.mkString("; ")}")
-      (files.flatMap(_.queries).toMap, files.flatMap(_.oracles).toMap)
+      require(twice.isEmpty, s"gate names twice: ${twice.mkString("; ")}")
+      val all = files.flatMap(_.gates)
+      (all.map(g => g.name -> g.build).toMap, all.map(g => g.name -> g.oracle).toMap)
     }
   }
 

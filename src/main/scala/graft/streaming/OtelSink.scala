@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** OTelExportSink analog (SURVEY §2.1 #13; reference
   * exec/otel_export_sink_node.cc + plan.proto:363-549): map each result
@@ -83,23 +82,6 @@ object OtelSink {
     }
     acc.value
   }
-
-  /** Streaming export: foreachBatch sink (the cron/script-runner analog —
-    * reference src/vizier/services/query_broker/script_runner/). Each
-    * micro-batch exports partition-locally; exactly-once per batch id is
-    * the streaming contract.
-    */
-  def streamGauges(df: DataFrame, spec: GaugeSpec, transport: Transport,
-                   checkpoint: String): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.foreachPartition { it: Iterator[Row] =>
-          val recs = it.map(rowToGauge(spec)).toSeq
-          if (recs.nonEmpty) transport.send(recs)
-        }
-      }
-      .start()
 
   // ---- Summary / Span / Log signals (plan.proto OTelMetricSummary
   //      :430-460, OTelSpan :470-520, OTelLog :380-420) ----------------

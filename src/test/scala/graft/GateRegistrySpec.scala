@@ -1,17 +1,16 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.queries.Q.{Gates, QFn}
+import graft.queries.Q.{Gate, Gates}
 
 /** The gate registry's contract, checked without data or a session:
-  * every gate file keys its queries and oracles alike, no key is in two
-  * files, and the merge refuses a file that breaks either rule.
+  * every gate name occurs once, and the merge refuses a name that occurs
+  * twice, in one file or in two.
   */
 class GateRegistrySpec extends AnyFunSuite {
 
-  private def file(qs: Seq[String], os: Seq[String]): Gates = new Gates {
-    val queries: Map[String, QFn] = qs.map(_ -> ((_, _) => null): (String, QFn)).toMap
-    val oracles: Map[String, String] = os.map(_ -> "SELECT 1").toMap
+  private def file(names: String*): Gates = new Gates {
+    val gates: Seq[Gate] = names.map(Gate(_, (_, _) => null, "SELECT 1"))
   }
 
   test("the registry holds 605 queries, each with one oracle") {
@@ -20,15 +19,10 @@ class GateRegistrySpec extends AnyFunSuite {
   }
 
   test("no key is in two gate files") {
-    val keys = SparkEntry.gates.flatMap(_.queries.keys)
+    val keys = SparkEntry.gateFiles.flatMap(_.gates.map(_.name))
     val twice = keys.groupBy(identity).collect { case (k, ks) if ks.size > 1 => k }
     assert(twice.isEmpty, twice.toSeq.sorted.mkString(", "))
     assert(keys.size == 605)
-  }
-
-  test("each gate file keys its queries and oracles alike") {
-    for (g <- SparkEntry.gates)
-      assert(g.queries.keySet == g.oracles.keySet, g.getClass.getName)
   }
 
   // A shared fragment read before its object has set it (a forward or
@@ -39,18 +33,15 @@ class GateRegistrySpec extends AnyFunSuite {
     assert(unset.isEmpty, unset.toSeq.sorted.mkString(", "))
   }
 
-  test("the merge throws on a key in two files and on an orphan oracle") {
-    val a = file(Seq("q1_a", "q2_b"), Seq("q1_a", "q2_b"))
-    val (qs, os) = Gates.merge(Seq(a, file(Seq("q3_c"), Seq("q3_c"))))
+  test("the merge throws on a name twice, in one file or in two") {
+    val a = file("q1_a", "q2_b")
+    val (qs, os) = Gates.merge(Seq(a, file("q3_c")))
     assert(qs.keySet == Set("q1_a", "q2_b", "q3_c") && os.keySet == qs.keySet)
     val dup = intercept[IllegalArgumentException](
-      Gates.merge(Seq(a, file(Seq("q2_b"), Seq("q2_b")))))
+      Gates.merge(Seq(a, file("q2_b"))))
     assert(dup.getMessage.contains("q2_b"))
-    val orphan = intercept[IllegalArgumentException](
-      Gates.merge(Seq(a, file(Seq("q3_c"), Seq("q3_c", "q4_d")))))
-    assert(orphan.getMessage.contains("q4_d"))
-    val missing = intercept[IllegalArgumentException](
-      Gates.merge(Seq(file(Seq("q3_c", "q5_e"), Seq("q3_c")))))
-    assert(missing.getMessage.contains("q5_e"))
+    val same = intercept[IllegalArgumentException](
+      Gates.merge(Seq(file("q3_c", "q3_c"))))
+    assert(same.getMessage.contains("q3_c"))
   }
 }

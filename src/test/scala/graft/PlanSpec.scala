@@ -419,7 +419,7 @@ class PlanSpec extends AnyFunSuite {
     assert(us.contains("HashJoin"), us.take(1200))
     // the composed curation card: five lineages, zero cartesians /
     // nested-loop joins anywhere
-    val card = plan(graft.queries.Curation3.queries("q358_curation_card")(
+    val card = plan(graft.SparkEntry.queries("q358_curation_card")(
       spark, dir))
     for (bad <- Seq("CartesianProduct", "BroadcastNestedLoopJoin"))
       assert(!card.contains(bad), card.take(1500))

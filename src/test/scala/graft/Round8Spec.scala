@@ -531,7 +531,7 @@ class Round8Spec extends AnyFunSuite {
   }
 
   test("dedup scorecard invariants: detected <= planted, recall/precision consistent") {
-    val row = graft.queries.Curation3.queries("q365_dedup_scorecard")(
+    val row = graft.SparkEntry.queries("q365_dedup_scorecard")(
       spark, "/root/testdata/sf0.001")
       .select("n_planted", "n_detected", "n_clone_pairs", "n_spurious",
         "recall", "precision")
@@ -561,7 +561,7 @@ class Round8Spec extends AnyFunSuite {
   test("crawl pipeline invariants: stages shrink monotonically, manifest covers survivors") {
     val dir = "/root/testdata/sf0.001"
     val docs = graft.core.Tables(spark, dir, "documents")
-    val manifest = graft.queries.Curation3.queries("q368_crawl_pipeline")(
+    val manifest = graft.SparkEntry.queries("q368_crawl_pipeline")(
       spark, dir)
       .select("shard", "n_docs", "n_tokens", "checksum")
       .as[(Int, Long, Long, Long)].collect()
@@ -646,7 +646,7 @@ class Round8Spec extends AnyFunSuite {
   }
 
   test("curation card invariants: keep == conjunction; exact losers are near losers; keepers exist") {
-    val card = graft.queries.Curation3.queries("q358_curation_card")(
+    val card = graft.SparkEntry.queries("q358_curation_card")(
       spark, "/root/testdata/sf0.001")
       .select("doc_id", "exact_loser", "near_loser", "url_loser",
         "dup_segment_frac", "dup_gram_frac", "keep")
@@ -663,7 +663,7 @@ class Round8Spec extends AnyFunSuite {
   }
 
   test("redundancy report invariants: rates in [0,1], doc counts partition the corpus") {
-    val rep = graft.queries.Curation3.queries("q359_redundancy_report")(
+    val rep = graft.SparkEntry.queries("q359_redundancy_report")(
       spark, "/root/testdata/sf0.001")
       .select("source", "n_docs", "exact_dup_rate", "url_dup_rate",
         "mean_seg_dup", "mean_rep")

@@ -58,8 +58,7 @@ class Round8cSpec extends AnyFunSuite {
       .count(_ == "CartesianProduct") == 1, mm.take(2000))
     // native session_window: the session aggregate is present and the
     // only exchange is user-keyed
-    val sw = plan(graft.queries.Curation5
-      .queries("q418_session_window")(spark, sf))
+    val sw = plan(graft.SparkEntry.queries("q418_session_window")(spark, sf))
     assert(sw.contains("session_window"), sw.take(1500))
     assert(!sw.contains("CartesianProduct"))
   }
@@ -550,7 +549,7 @@ class Round8cSpec extends AnyFunSuite {
 
   test("ops panel rows agree with the standalone detectors on the fixture") {
     val sf = "/root/testdata/sf0.001"
-    val panel = graft.queries.Curation5.queries("q433_ops_panel")(spark, sf)
+    val panel = graft.SparkEntry.queries("q433_ops_panel")(spark, sf)
       .collect().map(r => r.getString(0) -> r).toMap
     val ev = graft.core.Tables(spark, sf, "events")
     val cus = Events.cusumDrift(ev, "event_type", "ts", 3600000000L, 4L, 3L)
@@ -567,7 +566,7 @@ class Round8cSpec extends AnyFunSuite {
 
   test("needle haystack: checksum matches an in-memory replant at the declared position") {
     val sf = "/root/testdata/sf0.001"
-    val got = graft.queries.Curation5.queries("q434_needle_haystack")(
+    val got = graft.SparkEntry.queries("q434_needle_haystack")(
         spark, sf)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3), r.getString(4))).toMap

@@ -537,22 +537,20 @@ class Round8dSpec extends AnyFunSuite {
 
   test("q450 experiment panel rows == standalone detectors") {
     val sf = "/root/testdata/sf0.001"
-    val panel = graft.queries.Curation6
-      .queries("q450_experiment_panel")(spark, sf)
+    val panel = graft.SparkEntry.queries("q450_experiment_panel")(spark, sf)
       .select("variant", "n_subjects", "rate_ppm", "mean_post",
         "mean_adjusted", "chi2", "srm_chi2", "auc")
       .as[(Long, Long, Long, Option[Double], Option[Double],
         Option[Double], Option[Double], Option[Double])]
       .collect().map(r => r._1 -> r).toMap
-    val cu = graft.queries.Curation6.queries("q449_cuped")(spark, sf)
+    val cu = graft.SparkEntry.queries("q449_cuped")(spark, sf)
       .select("variant", "n_subjects", "mean_post", "mean_adjusted")
       .as[(Long, Long, Option[Double], Option[Double])]
       .collect().map(r => r._1 -> r).toMap
-    val ab = graft.queries.Curation6
-      .queries("q448_ab_chi_square")(spark, sf)
+    val ab = graft.SparkEntry.queries("q448_ab_chi_square")(spark, sf)
       .select("rate_a_ppm", "rate_b_ppm", "chi2", "srm_chi2")
       .as[(Long, Long, Option[Double], Option[Double])].head()
-    val auc = graft.queries.Curation6.queries("q443_roc_auc")(spark, sf)
+    val auc = graft.SparkEntry.queries("q443_roc_auc")(spark, sf)
       .select("auc").as[Option[Double]].head()
     for ((v, row) <- panel) {
       assert(row._2 == cu(v)._2 && row._4 == cu(v)._3 && row._5 == cu(v)._4)

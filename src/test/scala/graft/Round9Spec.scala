@@ -500,7 +500,7 @@ class Round9Spec extends AnyFunSuite {
       .map { case (d, i) =>
         ("a", d * 86400000000000L + i.toLong * 1000000000L) }
       .toDF("event_type", "ts")
-    val got = graft.queries.Curation7.queries("q480_weekday_profile")(
+    val got = graft.SparkEntry.queries("q480_weekday_profile")(
       spark, "/root/testdata/sf0.001")
     assert(got.columns.toSeq == Seq("event_type", "n_weekday",
       "n_weekend", "weekend_share_ppm", "rate_ratio_ppm"))

@@ -356,10 +356,10 @@ class ScaleProbeSpec extends AnyFunSuite {
       // crawl pipeline (keyed aggs + domain-cap window) at 10x.
       for ((dir, label) <- Seq((src, "sf0.1"), (dst, "sf1"))) {
         val t0 = System.nanoTime()
-        graft.queries.Curation3.queries("q358_curation_card")(spark, dir)
+        graft.SparkEntry.queries("q358_curation_card")(spark, dir)
           .write.format("noop").mode("overwrite").save()
         val t1 = System.nanoTime()
-        graft.queries.Curation3.queries("q368_crawl_pipeline")(spark, dir)
+        graft.SparkEntry.queries("q368_crawl_pipeline")(spark, dir)
           .write.format("noop").mode("overwrite").save()
         println(f"SCALEPROBE card $label ${(t1 - t0) / 1e9}%.2f s" +
           f" crawl_pipeline ${(System.nanoTime() - t1) / 1e9}%.2f s")

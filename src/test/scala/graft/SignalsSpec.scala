@@ -536,7 +536,7 @@ class SignalsSpec extends AnyFunSuite {
       assert(!pP.contains(j), pP.take(2000))
     // signal card: map-only signals chain into ONE scan lineage +
     // entropy's scan — exactly two parquet scans, not one per signal
-    val card = graft.queries.Curation2.queries("q329_signal_card")(
+    val card = graft.SparkEntry.queries("q329_signal_card")(
       spark, "/root/testdata/sf0.001")
     val scans = plan(card).sliding("FileScan parquet".length)
       .count(_ == "FileScan parquet")

@@ -11,7 +11,7 @@
 # Mapper: changed queries/*.scala files contribute every qNNN literal in
 # their diff hunks; a changed ops/functions/... file contributes every
 # query whose builder body references the object (awk tracks the current
-# "qNNN_name" -> marker while scanning each queries file). Non-query
+# Gate("qNNN_name" record while scanning each queries file). Non-query
 # source changes with no mapped query fall back to a fixed smoke subset.
 set -e
 cd "$(dirname "$0")/.." || exit 1
@@ -19,11 +19,11 @@ REF="${1:-HEAD}"
 SF="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.01}"
 
 # Claim-chain guard: the README's gate count must equal the number of
-# distinct query names actually defined in the queries maps (the
-# round-8 verdict flagged a drifted "370 queries" claim).
-ACTUAL=$(grep -oh '"q[0-9]*_[a-z0-9_]*" ->' src/main/scala/graft/queries/*.scala \
+# distinct query names actually defined by Gate records (the round-8
+# verdict flagged a drifted "370 queries" claim).
+ACTUAL=$(grep -oh 'Gate("q[0-9]*_[a-z0-9_]*"' src/main/scala/graft/queries/*.scala \
   | grep -oE '"q[0-9]+_[a-z0-9_]*"' | sort -u | wc -l)
-MAXQ=$(grep -oh '"q[0-9]*_[a-z0-9_]*" ->' src/main/scala/graft/queries/*.scala \
+MAXQ=$(grep -oh 'Gate("q[0-9]*_[a-z0-9_]*"' src/main/scala/graft/queries/*.scala \
   | grep -oE 'q[0-9]+' | grep -oE '[0-9]+' | sort -n | tail -1)
 CLAIM=$(grep -oE 'oracle gate \([0-9]+ queries,' README.md | grep -oE '[0-9]+' | head -1)
 CLAIMMAX=$(grep -oE 'q[0-9]+, every one value-checked' README.md \
@@ -67,8 +67,8 @@ else
         OBJ=$(basename "$f" .scala)
         for qf in src/main/scala/graft/queries/*.scala; do
           NUMS="$NUMS $(awk -v obj="$OBJ" '
-            match($0, /"q[0-9]+_[a-z0-9_]*"/) {
-              cur = substr($0, RSTART+2, RLENGTH-3)
+            match($0, /Gate\("q[0-9]+_[a-z0-9_]*"/) {
+              cur = substr($0, RSTART+7, RLENGTH-8)
               sub(/_.*/, "", cur); all[cur] = 1 }
             index($0, obj ".") { if (cur != "") print cur; else pre = 1 }
             END { if (pre) for (n in all) print n }
