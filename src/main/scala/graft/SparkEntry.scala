@@ -40,11 +40,9 @@ object SparkEntry {
     */
   lazy val gateFiles: Seq[Gates] = Seq(
     Relational, Functions, NorthStar, Meta, Surface, Ml, Extended,
-    Pxl, Pxl2, Pxl3, Pxl4, Pxl5, Pxl6, Pxl7, Pxl8, Pxl9, Pxl10, Pxl11,
-    Pxl12, Pxl13, Pxl14, Pxl15, Pxl16,
-    Curation, Curation2, Curation3, Curation4, Curation5, Curation6,
-    Curation7, Curation8, Curation9, Curation10, Curation11, Curation12,
-    Curation13, Curation14)
+    Pxl, PxlService, PxlDatabase, PxlMessaging, PxlNetwork, PxlCluster,
+    TextCuration, Governance, Sketches, EventAnalytics, Retrieval, Indexes,
+    Lifecycle, MediaLifecycle)
 
   private lazy val registry = Gates.merge(gateFiles)
 

@@ -97,8 +97,18 @@ object Tables {
     * partitioning-invariant by the repo's engine-exactness contract.
     */
   private[graft] def spread(spark: SparkSession, df: DataFrame,
-                            path: String): DataFrame = {
-    val cores = spark.sparkContext.defaultParallelism
+                            path: String): DataFrame =
+    if (narrowScan(spark, path, SpreadMinBytes))
+      df.repartition(spark.sparkContext.defaultParallelism)
+    else df
+
+  /** The scan-split test behind [[spread]] and `Q.narrowScan`: true iff
+    * the source at `path` (a file, or a directory's own files) holds at
+    * least `minBytes` on disk and those bytes pack into fewer scan splits
+    * (`spark.sql.files.maxPartitionBytes`) than the session has cores.
+    */
+  private[graft] def narrowScan(spark: SparkSession, path: String,
+                                minBytes: Long): Boolean = {
     val f = new java.io.File(path)
     val bytes =
       if (f.isDirectory)
@@ -108,8 +118,7 @@ object Tables {
     val maxPartBytes = org.apache.spark.network.util.JavaUtils
       .byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
     val scanPartitions = math.max(1L, (bytes + maxPartBytes - 1) / maxPartBytes)
-    if (bytes >= SpreadMinBytes && scanPartitions < cores) df.repartition(cores)
-    else df
+    bytes >= minBytes && scanPartitions < spark.sparkContext.defaultParallelism
   }
 
   /** int64-ns view of the event-time column. `withColumn` replaces in

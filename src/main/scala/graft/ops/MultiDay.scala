@@ -274,7 +274,7 @@ object MultiDay {
     * [[CurationDay.RepTenths]] tenths). Six verdict columns
     * disclosed; the combined priority appends the two gates after
     * the dedup stages (dedup > contamination > quality — the
-    * [[graft.queries.Curation8]] postGate order). The gates are pure
+    * [[graft.queries.Lifecycle]] postGate order). The gates are pure
     * per-doc functions of the day's own text + the model-sized bench
     * gram set — no index state, so they add zero cross-day machinery
     * but DO govern the appends: a contaminated or low-quality doc

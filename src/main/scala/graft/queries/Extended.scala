@@ -470,7 +470,7 @@ object Extended extends Gates {
       s"(CASE WHEN ($h) % 2 = 0 THEN 1.0 ELSE -1.0 END) ELSE 0.0 END"
   }
 
-  /** q63's oracle, shared verbatim by Curation5's q418 session window. */
+  /** q63's oracle, shared verbatim by EventAnalytics' q418 session window. */
   private[queries] val q63OracleSql: String =
     """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us FROM events),
       |f AS (SELECT user_id, ts_us,

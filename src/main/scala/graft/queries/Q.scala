@@ -90,19 +90,8 @@ object Q {
     * Always false at production scale — every gated transform is a
     * structural no-op there.
     */
-  def narrowScan(s: SparkSession, sourcePath: String): Boolean = {
-    val cores = s.sparkContext.defaultParallelism
-    val f = new java.io.File(sourcePath)
-    val bytes =
-      if (f.isDirectory)
-        Option(f.listFiles).map(_.iterator.filter(_.isFile).map(_.length).sum)
-          .getOrElse(0L)
-      else f.length
-    val maxPartBytes = org.apache.spark.network.util.JavaUtils
-      .byteStringAsBytes(s.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
-    val scanPartitions = math.max(1L, (bytes + maxPartBytes - 1) / maxPartBytes)
-    bytes > 0 && scanPartitions < cores
-  }
+  def narrowScan(s: SparkSession, sourcePath: String): Boolean =
+    graft.core.Tables.narrowScan(s, sourcePath, minBytes = 1L)
 
   /** Memoized logical-plan reuse for the synthesized protocol tables:
     * each is a wide projection over the fact scan whose ANALYSIS cost

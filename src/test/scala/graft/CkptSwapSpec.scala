@@ -23,7 +23,7 @@ class CkptSwapSpec extends AnyFunSuite {
     finally {
       sys.props.remove("graft.reliableCkpt")
       // scratch dir cleanup (reliable checkpoints are not auto-deleted)
-      graft.queries.Curation2.deleteDir(dir.toString)
+      graft.queries.Fixture.deleteDir(dir.toString)
     }
   }
 

@@ -69,7 +69,7 @@ class CurationDaySpec extends AnyFunSuite {
         .agg(sum(col("n_docs"))).head().getLong(0)
       assert(grownDocs == m0Docs + organic)
     } finally {
-      graft.queries.Curation2.deleteDir(root)
+      graft.queries.Fixture.deleteDir(root)
     }
   }
 }

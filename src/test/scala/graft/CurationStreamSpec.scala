@@ -32,7 +32,7 @@ class CurationStreamSpec extends AnyFunSuite {
     df.collect().map(_.toString).toSet
 
   private def del(a: CurationDay.Artifacts): Unit =
-    graft.queries.Curation2.deleteDir(
+    graft.queries.Fixture.deleteDir(
       new java.io.File(a.root).getParent)
 
   test("streamed lifecycle == batch lifecycle, exactly-once ledger") {

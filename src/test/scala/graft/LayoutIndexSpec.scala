@@ -112,8 +112,8 @@ class LayoutIndexSpec extends AnyFunSuite {
     // (both deleted -> hash must go); 4 deleted alone
     val deleted = docs.where(col("doc_id").isin(1L, 3L, 4L, 7L))
     val remaining = docs.where(!col("doc_id").isin(1L, 3L, 4L, 7L))
-    val idx = graft.queries.Curation2.tempIndexDir("graft_test_deldedup_")
-    val ref = graft.queries.Curation2.tempIndexDir("graft_test_refdedup_")
+    val idx = graft.queries.Fixture.tempIndexDir("graft_test_deldedup_")
+    val ref = graft.queries.Fixture.tempIndexDir("graft_test_refdedup_")
     try {
       Dedup.writeDedupIndex(docs, "text", "doc_id", idx, 3, 16, 4)
       Dedup.deleteFromDedupIndex(spark, idx, docs, deleted, "text", "doc_id")
@@ -123,8 +123,8 @@ class LayoutIndexSpec extends AnyFunSuite {
       assert(rows(s"$idx/hashes.parquet") == rows(s"$ref/hashes.parquet"))
       assert(rows(s"$idx/bands.parquet") == rows(s"$ref/bands.parquet"))
     } finally {
-      graft.queries.Curation2.deleteDir(idx)
-      graft.queries.Curation2.deleteDir(ref)
+      graft.queries.Fixture.deleteDir(idx)
+      graft.queries.Fixture.deleteDir(ref)
     }
   }
 
@@ -136,7 +136,7 @@ class LayoutIndexSpec extends AnyFunSuite {
     val df = vecs.map { case (i, v) => (i, v.toSeq) }
       .toDF("vec_id", "embedding")
     val delIds = vecs.map(_._1).filter(_ % 3 == 0).toSet
-    val idx = graft.queries.Curation2.tempIndexDir("graft_test_delsq8_")
+    val idx = graft.queries.Fixture.tempIndexDir("graft_test_delsq8_")
     try {
       Similarity.writeSq8Index(df, "vec_id", "embedding", idx)
       Similarity.deleteFromSq8Index(spark, idx,
@@ -175,7 +175,7 @@ class LayoutIndexSpec extends AnyFunSuite {
         .select("neighbor_id").as[Long].collect().toSet
       assert(served.intersect(delIds).isEmpty)
       assert(served.size == vecs.size - delIds.size)
-    } finally graft.queries.Curation2.deleteDir(idx)
+    } finally graft.queries.Fixture.deleteDir(idx)
   }
 
   test("bucketed tables: co-located join + agg run with ZERO exchanges") {
@@ -184,7 +184,7 @@ class LayoutIndexSpec extends AnyFunSuite {
     // bucket layout directly — no shuffle for the join AND none for
     // the follow-on key-aligned aggregate. This is the deploy-time
     // answer to "this join shuffles 100 TB every day".
-    val dir = graft.queries.Curation2.tempIndexDir("graft_bucket_")
+    val dir = graft.queries.Fixture.tempIndexDir("graft_bucket_")
     val sf = "/root/testdata/sf0.001"
     val orders = graft.core.Tables(spark, sf, "orders")
     val li = graft.core.Tables(spark, sf, "lineitem")
@@ -220,7 +220,7 @@ class LayoutIndexSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
       spark.sql("DROP TABLE IF EXISTS graft_bkt_orders")
       spark.sql("DROP TABLE IF EXISTS graft_bkt_lineitem")
-      graft.queries.Curation2.deleteDir(dir)
+      graft.queries.Fixture.deleteDir(dir)
     }
   }
 
@@ -283,7 +283,7 @@ class LayoutIndexSpec extends AnyFunSuite {
     // the post-delete serving plan scans the CODE table only — the
     // embedding column never appears in any file scan
     val emb = graft.core.Tables(spark, "/root/testdata/sf0.001", "embeddings")
-    val idx = graft.queries.Curation2.tempIndexDir("graft_test_sq8plan_")
+    val idx = graft.queries.Fixture.tempIndexDir("graft_test_sq8plan_")
     try {
       Similarity.writeSq8Index(emb, "vec_id", "embedding", idx)
       Similarity.deleteFromSq8Index(spark, idx,
@@ -298,6 +298,6 @@ class LayoutIndexSpec extends AnyFunSuite {
       // query columns (never the full corpus read)
       val embLeaves = leaves.filter(_.toString.contains("embeddings"))
       assert(embLeaves.size == 1, leafStr.take(1500))
-    } finally graft.queries.Curation2.deleteDir(idx)
+    } finally graft.queries.Fixture.deleteDir(idx)
   }
 }

@@ -14,7 +14,7 @@ class LedgerSpec extends AnyFunSuite {
   private def withRoot(tag: String)(f: String => Unit): Unit = {
     val root = java.nio.file.Files.createTempDirectory(tag).toString
     try f(root)
-    finally graft.queries.Curation2.deleteDir(root)
+    finally graft.queries.Fixture.deleteDir(root)
   }
 
   test("once: None on a committed id, no row when the body throws") {

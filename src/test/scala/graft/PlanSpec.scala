@@ -404,7 +404,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("round-8 plans: urlDedup keyed distinct-agg shuffles only; surprisal word join is hash; card has no cartesian") {
     val docs = graft.core.Tables(spark, dir, "documents")
-      .withColumn("url", graft.queries.Curation3.rawUrlCol)
+      .withColumn("url", graft.queries.TextCuration.rawUrlCol)
     // urlDedup: canonicalization is in the map phase; the only
     // exchanges are the two keyed shuffles of Spark's distinct-agg
     // expansion ((key, raw) pre-agg + key agg) — never single-partition
@@ -427,7 +427,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("round-8 plans: segment explode is map-side; frontier bloom filter sits before the verify join") {
     val docs = graft.core.Tables(spark, dir, "documents")
-      .withColumn("url", graft.queries.Curation3.rawUrlCol)
+      .withColumn("url", graft.queries.TextCuration.rawUrlCol)
     // segmentDupFraction: the explode feeding the seg-hash agg happens
     // before any exchange (map-side), and joins stay keyed
     val sd = plan(graft.ops.TextOps.segmentDupFraction(docs, "text",

@@ -270,13 +270,13 @@ class PxlSpec extends AnyFunSuite {
         java.nio.file.Paths.get(path)), "UTF-8")
       PxlRunner.runFunction(src, Pxl.env(spark, dir, now), fn, args)
     }
-    val s1 = run(graft.queries.Pxl2.PodsPxlPath, "inbound_let_summary",
+    val s1 = run(graft.queries.PxlCluster.PodsPath, "inbound_let_summary",
       Seq("-45d", "ns1"))
     assert(s1.count() > 0 && s1.columns.contains("requesting_svc"))
-    val s2 = run(graft.queries.Pxl2.ClusterPxlPath, "services_for_cluster",
+    val s2 = run(graft.queries.PxlCluster.ClusterPath, "services_for_cluster",
       Seq("-45d"))
     assert(s2.count() > 0 && s2.columns.contains("inbound_conns"))
-    val s3 = run(graft.queries.Pxl2.ClusterPxlPath, "service_let_graph",
+    val s3 = run(graft.queries.PxlCluster.ClusterPath, "service_let_graph",
       Seq("-45d"))
     assert(s3.count() > 0 && s3.columns.toSeq.contains("responder_pod"))
   }
@@ -353,7 +353,7 @@ class PxlSpec extends AnyFunSuite {
 
   test("pod.pxl processes(): upid-keyed process list (binary upid — spec-gated)") {
     val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(graft.queries.Pxl2.PodPxlPath)), "UTF-8")
+      java.nio.file.Paths.get(graft.queries.PxlCluster.PodPath)), "UTF-8")
     val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
     val out = PxlRunner.runFunction(src, Pxl.env(spark, dir, now),
       "processes", Seq("-45d", "pod-7-gen1"))
@@ -446,14 +446,14 @@ class PxlSpec extends AnyFunSuite {
     val now = graft.functions.PixieFunctions.tsNsLit("2024-02-01")
     val net = PxlRunner.runFunction(
       new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(graft.queries.Pxl4.NetFlowPath)), "UTF-8"),
+        java.nio.file.Paths.get(graft.queries.PxlNetwork.NetFlowPath)), "UTF-8"),
       Pxl.env(spark, dir, now), "net_flow_graph", Seq("-45d", "ns1", "", "", "0"))
     assert(net.columns.toSeq == Seq("from_entity", "to_entity",
       "bytes_sent", "bytes_recv", "bytes_total"))
     assert(net.count() > 0)
     val mysql = PxlRunner.runFunction(
       new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(graft.queries.Pxl4.MysqlFlowPath)), "UTF-8"),
+        java.nio.file.Paths.get(graft.queries.PxlDatabase.MysqlFlowPath)), "UTF-8"),
       Pxl.env(spark, dir, now), "mysql_flow_graph", Seq("-45d", "ns1", "", ""))
     assert(mysql.columns.toSet == Set("source", "destination",
       "is_source_pod_type", "is_dest_pod_type", "namespace", "latency_p50",

@@ -97,7 +97,7 @@ class Round10Spec extends AnyFunSuite {
       assert(got == Set(("id", "bigint", 2L, 2L, 3L),
         ("a", "string", 2L, 2L, 3L), ("b", "bigint", 2L, 1L, 1L)))
     } finally {
-      graft.queries.Curation2.deleteDir(p)
+      graft.queries.Fixture.deleteDir(p)
     }
   }
 
@@ -114,7 +114,7 @@ class Round10Spec extends AnyFunSuite {
         .as[(Long, String)].collect().toSet
       assert(rows == Set((1L, "b1"), (2L, "b1"), (3L, "b2")))
     } finally {
-      graft.queries.Curation2.deleteDir(p)
+      graft.queries.Fixture.deleteDir(p)
     }
   }
 
@@ -141,7 +141,7 @@ class Round10Spec extends AnyFunSuite {
       // and the ledger now guards the id: a third attempt no-ops
       assert(!Scale.ingestBatch(spark, s"$p/t", s"$p/l", "b1", b1))
     } finally {
-      graft.queries.Curation2.deleteDir(p)
+      graft.queries.Fixture.deleteDir(p)
     }
   }
 
@@ -163,7 +163,7 @@ class Round10Spec extends AnyFunSuite {
       // max = 300; b: {500:2, 700:1}, n=3 -> p50 rank 2 = 500, max 700
       assert(q == Set(("a", 4L, 200L, 300L), ("b", 3L, 500L, 700L)))
     } finally {
-      graft.queries.Curation2.deleteDir(p)
+      graft.queries.Fixture.deleteDir(p)
     }
   }
 
@@ -185,7 +185,7 @@ class Round10Spec extends AnyFunSuite {
         Scale.appendDistinctState(spark, p, ev("a" -> 9L), "g", "k", 8)
       }
     } finally {
-      graft.queries.Curation2.deleteDir(p)
+      graft.queries.Fixture.deleteDir(p)
     }
   }
 }

@@ -53,7 +53,7 @@ class Round11Spec extends AnyFunSuite {
       // blocking unpersist: suites share the session, and PxlSpec
       // asserts the CacheManager is empty after its runs
       capped.unpersist(true): Unit
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -92,7 +92,7 @@ class Round11Spec extends AnyFunSuite {
       val cards = graft.ops.Scale.distinctStateCard(spark, p, "g")
         .as[(String, Long)].collect().toMap
       assert(cards == Map("a" -> 3L, "b" -> 3L))
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(p).getParent)
   }
 
@@ -155,8 +155,8 @@ class Round11Spec extends AnyFunSuite {
         .where(col("g") === "a" && col("__cent") === 100L).collect()
       assert(aRows.length == 1 && aRows.head.getAs[Long]("__n") == 2L)
     } finally {
-      graft.queries.Curation2.deleteDir(new java.io.File(pd).getParent)
-      graft.queries.Curation2.deleteDir(new java.io.File(pc).getParent)
+      graft.queries.Fixture.deleteDir(new java.io.File(pd).getParent)
+      graft.queries.Fixture.deleteDir(new java.io.File(pc).getParent)
     }
   }
 
@@ -216,7 +216,7 @@ class Round11Spec extends AnyFunSuite {
       assert(replay(11L) == "admitted")
       assert(replay(10L) == "dup_sem_corpus")
       assert(spark.read.parquet(p.index).count() == n1)
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -286,7 +286,7 @@ class Round11Spec extends AnyFunSuite {
       val statsAfter = graft.ops.SemIndex.indexStats(spark, p)
         .orderBy("cell").collect().map(_.toSeq).toSeq
       assert(statsAfter == statsBefore)
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -412,7 +412,7 @@ class Round11Spec extends AnyFunSuite {
       assert(partnered.nonEmpty, "fixture must produce partners")
       assert(partnered.forall(id => dec2(id) != "admitted"),
         "a day-1 admission's partner cannot be admitted on day 2")
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -448,7 +448,7 @@ class Round11Spec extends AnyFunSuite {
         .orderBy("start_tok").collect().map(_.toSeq).toSeq
       assert(after == before)
       assert(spark.read.parquet(a.packStateDay(1)).head().getLong(0) == st1)
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 }

@@ -58,7 +58,7 @@ class Round12Spec extends AnyFunSuite {
       assert(spark.read.parquet(path).collect().map(_.toSeq).toSet == pre)
       assert(graft.ops.Scale.parquetFileCount(spark, path)
         <= graft.ops.MediaHashes.NBuckets)
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -78,7 +78,7 @@ class Round12Spec extends AnyFunSuite {
       assert(spark.read.parquet(s"$root/hashes.parquet").count() == h1)
       // the ADVICE r11 regression: bands used to double on replay
       assert(spark.read.parquet(s"$root/bands.parquet").count() == b1)
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -110,7 +110,7 @@ class Round12Spec extends AnyFunSuite {
         .select("vec_id", "cell").collect()
         .map(r => (r.getLong(0), r.getInt(1))).toSet
       assert(kept == before.filterNot(v => victims.contains(v._1)))
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -135,7 +135,7 @@ class Round12Spec extends AnyFunSuite {
       assert(spark.read.parquet(p.index).select("vec_id")
         .collect().map(_.getLong(0)).toSet == ids)
       assert(spark.read.parquet(p.seeds).count() == nc)
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -160,7 +160,7 @@ class Round12Spec extends AnyFunSuite {
         .count() == 0L)
       assert(spark.read.parquet(p.bands).count() ==
         4L * (all.size - victims.size))
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -209,7 +209,7 @@ class Round12Spec extends AnyFunSuite {
         assert(fs.exists(new org.apache.hadoop.fs.Path(
           p.decisionsDay(k) + "/_SUCCESS")), s"day $k pin missing")
       }
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -292,7 +292,7 @@ class Round12Spec extends AnyFunSuite {
       assert(spark.read.parquet(p.ph.hashes).count() == phA)
       // committed day: pure no-op now
       assert(!graft.ops.MultiDay.processDay4(spark, p, 1, drop1, fetch))
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 }

@@ -40,7 +40,7 @@ class Round13Spec extends AnyFunSuite {
         .head().getString(0) == "new")
       assert(!fs.exists(new org.apache.hadoop.fs.Path(live + "__old")))
       assert(!fs.exists(new org.apache.hadoop.fs.Path(staging)))
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -59,7 +59,7 @@ class Round13Spec extends AnyFunSuite {
         .head().getString(0) == "new")
       assert(!fsOf(root).exists(
         new org.apache.hadoop.fs.Path(live + "__old")))
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -75,7 +75,7 @@ class Round13Spec extends AnyFunSuite {
       assert(e.getMessage.contains("staging"))
       // and the live copy is untouched by the refusal
       assert(spark.read.parquet(live).count() == 1L)
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -107,7 +107,7 @@ class Round13Spec extends AnyFunSuite {
         .select("vec_id", "cell").as[(Long, Int)].collect().toMap
       assert(stored.keySet == ids)
       assert(stored == rebinned.filter { case (k, _) => ids(k) })
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -129,7 +129,7 @@ class Round13Spec extends AnyFunSuite {
               org.apache.spark.sql.types.IntegerType))))
         .write.mode("overwrite").parquet(p.index)
       assert(graft.ops.SemIndex.refitIfNeeded(spark, p, 4L) == 0L)
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -169,7 +169,7 @@ class Round13Spec extends AnyFunSuite {
       // replay: committed, still 0, still no mutation
       assert(graft.ops.CurationNDay.capDayPinned(spark, a, "cap_noop",
         maxTokens = total, s"$root/m_in", s"$root/m_out") == 0)
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -207,7 +207,7 @@ class Round13Spec extends AnyFunSuite {
       val scan2 = graft.ops.MediaHashes.fetchAudio(spark, path, twoIds)
         .queryExecution.executedPlan.toString
       assert("PartitionFilters: \\[[^\\]]*mb".r.findFirstIn(scan2).isDefined)
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -219,7 +219,7 @@ class Round13Spec extends AnyFunSuite {
       // corpusDocs = null: the guard must answer from the ledger alone
       // — ANY touch of the inputs or indexes would throw here
       assert(!graft.ops.MultiDay.ttl4Day(spark, p, "ttlX", Seq(1), null))
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -248,7 +248,7 @@ class Round13Spec extends AnyFunSuite {
       graft.ops.Dedup.appendDedupIndex(delta, "text", "doc_id", root)
       assert(spark.read.parquet(s"$root/bands.parquet")
         .collect().map(_.toSeq).toSet == full)
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 }

@@ -45,7 +45,7 @@ class Round14Spec extends AnyFunSuite {
       graft.ops.PhashIndex.append(spark, p, hashedOf(1L, 2L, 3L))
       assert(spark.read.parquet(p.hashes).count() == 3L)
       assert(spark.read.parquet(p.bands).count() == 12L)
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -64,7 +64,7 @@ class Round14Spec extends AnyFunSuite {
       assert(spark.read.parquet(live).select("v")
         .head().getString(0) == "new")
       assert(!fs.exists(new org.apache.hadoop.fs.Path(live + "__old")))
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -77,7 +77,7 @@ class Round14Spec extends AnyFunSuite {
       graft.core.Layout.healTorn(spark, live)
       assert(spark.read.parquet(live).select("v")
         .head().getString(0) == "old")
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -92,7 +92,7 @@ class Round14Spec extends AnyFunSuite {
       graft.core.Layout.healTorn(spark, live)
       assert(spark.read.parquet(live).select("v")
         .head().getString(0) == "live")
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -110,7 +110,7 @@ class Round14Spec extends AnyFunSuite {
       graft.ops.PhashIndex.compact(spark, p) // the natural replay
       assert(spark.read.parquet(p.hashes).count() == 3L)
       assert(spark.read.parquet(p.bands).count() == 12L)
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -142,7 +142,7 @@ class Round14Spec extends AnyFunSuite {
         graft.ops.MultiDay.indexedDocs(spark, p, corpus).count()
       }
       assert(e.getMessage.contains("resolve in neither"))
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -176,7 +176,7 @@ class Round14Spec extends AnyFunSuite {
         masses(1), fetch) == 1)
       val after = graft.ops.MultiDay.retainedMasses(spark, p, fetch)
       assert(after(0) == 0L && after(1) == masses(1))
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -201,7 +201,7 @@ class Round14Spec extends AnyFunSuite {
       assert(ev(1).getLong(0) == 21L && ev(1).getString(1) == "near"
         && ev(1).getLong(2) == 10L && ev(1).getLong(3) < 1000000L
         && ev(1).getLong(3) >= 800000L)
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 
@@ -217,7 +217,7 @@ class Round14Spec extends AnyFunSuite {
       val r0 = recall(0); val r1 = recall(1)
       assert(r0.keySet == r1.keySet)
       assert(r0.keySet.forall(k => r1(k) >= r0(k)))
-    } finally graft.queries.Curation2.deleteDir(
+    } finally graft.queries.Fixture.deleteDir(
       new java.io.File(root).getParent)
   }
 

@@ -159,8 +159,8 @@ class Round8PropertySpec extends AnyFunSuite {
             else v(10.0))).toDF("vec_id", "embedding")
       val qs = (200L to 203L).map(i => (i, v(10.0)))
         .toDF("vec_id", "embedding")
-      val idxA = graft.queries.Curation2.tempIndexDir("graft_fz_a_")
-      val idxF = graft.queries.Curation2.tempIndexDir("graft_fz_f_")
+      val idxA = graft.queries.Fixture.tempIndexDir("graft_fz_a_")
+      val idxF = graft.queries.Fixture.tempIndexDir("graft_fz_f_")
       try {
         Similarity.writeSq8Index(corpus, "vec_id", "embedding", idxA)
         val appended = Similarity.appendSq8Index(spark, idxA, delta,
@@ -174,8 +174,8 @@ class Round8PropertySpec extends AnyFunSuite {
           "embedding", 5).collect().map(_.toSeq).toSet
         assert(a == f, s"seed $seed: appended != rebuilt")
       } finally {
-        graft.queries.Curation2.deleteDir(idxA)
-        graft.queries.Curation2.deleteDir(idxF)
+        graft.queries.Fixture.deleteDir(idxA)
+        graft.queries.Fixture.deleteDir(idxF)
       }
     }
   }

@@ -15,7 +15,7 @@ class Round8Spec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmpIdx(tag: String) =
-    graft.queries.Curation2.tempIndexDir(s"graft_r8spec_${tag}_")
+    graft.queries.Fixture.tempIndexDir(s"graft_r8spec_${tag}_")
 
   private def vec(xs: Double*): Seq[Double] = xs.toSeq
 
@@ -43,8 +43,8 @@ class Round8Spec extends AnyFunSuite {
         .collect().map(r => (r.getDouble(1), r.getDouble(2))).toSeq
       assert(b == Seq((0.0, 10.0), (0.0, 10.0)), b.toString)
     } finally {
-      graft.queries.Curation2.deleteDir(idxA)
-      graft.queries.Curation2.deleteDir(idxF)
+      graft.queries.Fixture.deleteDir(idxA)
+      graft.queries.Fixture.deleteDir(idxF)
     }
   }
 
@@ -70,8 +70,8 @@ class Round8Spec extends AnyFunSuite {
         .collect().map(r => (r.getDouble(1), r.getDouble(2))).toSeq
       assert(b == Seq((-5.0, 10.0), (0.0, 20.0)), b.toString)
     } finally {
-      graft.queries.Curation2.deleteDir(idxA)
-      graft.queries.Curation2.deleteDir(idxF)
+      graft.queries.Fixture.deleteDir(idxA)
+      graft.queries.Fixture.deleteDir(idxF)
     }
   }
 
@@ -95,7 +95,7 @@ class Round8Spec extends AnyFunSuite {
         "embedding", 5).collect().map(_.toSeq).toSet
       assert(files() == 1 && nBefore > 1, s"$nBefore -> ${files()}")
       assert(after == before)
-    } finally graft.queries.Curation2.deleteDir(idx)
+    } finally graft.queries.Fixture.deleteDir(idx)
   }
 
   test("appendDedupIndex keeps hash-set semantics and matches a fresh index on the grown corpus") {
@@ -121,8 +121,8 @@ class Round8Spec extends AnyFunSuite {
         .collect().map(_.toSeq).toSet
       assert(bA == bF)
     } finally {
-      graft.queries.Curation2.deleteDir(idx)
-      graft.queries.Curation2.deleteDir(idxF)
+      graft.queries.Fixture.deleteDir(idx)
+      graft.queries.Fixture.deleteDir(idxF)
     }
   }
 
@@ -514,8 +514,8 @@ class Round8Spec extends AnyFunSuite {
         .head().getDouble(0)
       assert(hi == 25.0, s"bounds not widened: $hi")
     } finally {
-      graft.queries.Curation2.deleteDir(idx)
-      graft.queries.Curation2.deleteDir(idxF)
+      graft.queries.Fixture.deleteDir(idx)
+      graft.queries.Fixture.deleteDir(idxF)
     }
   }
 
@@ -547,7 +547,7 @@ class Round8Spec extends AnyFunSuite {
     // raw scan (no Tables.spread): this pins the OP's zero-shuffle
     // contract, which the table-level spread exchange would mask
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .withColumn("url", graft.queries.Curation3.rawUrlCol)
+      .withColumn("url", graft.queries.TextCuration.rawUrlCol)
     val out = UrlOps.domainSafeSplit(docs, "url", "doc_id", 10, 10)
     val perDomain = out.groupBy("domain")
       .agg(countDistinct(col("split")).as("n"))
@@ -642,7 +642,7 @@ class Round8Spec extends AnyFunSuite {
         .as[(Long, Double, Double, Double)].head()
       // widths: dim0 [-2,4] = 6, dim1 [0,10] = 10 -> mean 8
       assert(after == ((3L, -2.0, 10.0, 8.0)), after.toString)
-    } finally graft.queries.Curation2.deleteDir(idx)
+    } finally graft.queries.Fixture.deleteDir(idx)
   }
 
   test("curation card invariants: keep == conjunction; exact losers are near losers; keepers exist") {

@@ -565,7 +565,7 @@ class Round8dSpec extends AnyFunSuite {
     val rows = (1 to 3000).map(i =>
       ("g" + rnd.nextInt(4), rnd.nextInt(400).toLong, i % 5 == 0))
     val full = rows.toDF("g", "k", "isDelta")
-    val dir = graft.queries.Curation2.tempIndexDir("graft_spec_dstate_")
+    val dir = graft.queries.Fixture.tempIndexDir("graft_spec_dstate_")
     try {
       Scale.writeDistinctState(full.where(!col("isDelta")), "g", "k",
         nShards = 8, dir)
@@ -584,7 +584,7 @@ class Round8dSpec extends AnyFunSuite {
       // a mismatched shard count is refused, never silently folded
       intercept[IllegalArgumentException](Scale.foldDistinctState(
         spark, dir, full.where(col("isDelta")), "g", "k", nShards = 16))
-    } finally graft.queries.Curation2.deleteDir(dir)
+    } finally graft.queries.Fixture.deleteDir(dir)
   }
 
   test("foldDistinctState: summary branch carries untouched shards; empty-state bootstrap") {
@@ -595,7 +595,7 @@ class Round8dSpec extends AnyFunSuite {
     // branch must fail this case
     val delta = Seq(("g0", 9000L), ("g1", 9001L), ("g2", 250L))
       .toDF("g", "k")
-    val dir = graft.queries.Curation2.tempIndexDir("graft_spec_dstate2_")
+    val dir = graft.queries.Fixture.tempIndexDir("graft_spec_dstate2_")
     try {
       Scale.writeDistinctState(snap, "g", "k", nShards = 64, dir)
       val got = Scale.foldDistinctState(spark, dir, delta, "g", "k", 64)
@@ -604,16 +604,16 @@ class Round8dSpec extends AnyFunSuite {
         .agg(countDistinct(col("k")).as("n"))
         .as[(String, Long)].collect().toMap
       assert(got == want)
-    } finally graft.queries.Curation2.deleteDir(dir)
+    } finally graft.queries.Fixture.deleteDir(dir)
     // day-0 bootstrap: state written from an EMPTY corpus (fileless
     // partitioned keys table) must fold the first delta, not crash
-    val dir2 = graft.queries.Curation2.tempIndexDir("graft_spec_dstate3_")
+    val dir2 = graft.queries.Fixture.tempIndexDir("graft_spec_dstate3_")
     try {
       Scale.writeDistinctState(snap.where(lit(false)), "g", "k", 8, dir2)
       val got = Scale.foldDistinctState(spark, dir2, delta, "g", "k", 8)
         .as[(String, Long)].collect().toMap
       assert(got == Map("g0" -> 1L, "g1" -> 1L, "g2" -> 1L))
-    } finally graft.queries.Curation2.deleteDir(dir2)
+    } finally graft.queries.Fixture.deleteDir(dir2)
   }
 
   test("foldAggState(delta) == aggState over the full union") {

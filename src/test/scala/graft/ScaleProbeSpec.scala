@@ -340,7 +340,7 @@ class ScaleProbeSpec extends AnyFunSuite {
       // canonical URL; frontier bloom kills the unseen side pre-join.
       for ((dir, label) <- Seq((src, "sf0.1"), (dst, "sf1"))) {
         val docs = graft.core.Tables(spark, dir, "documents")
-          .withColumn("url", graft.queries.Curation3.rawUrlCol)
+          .withColumn("url", graft.queries.TextCuration.rawUrlCol)
         val t0 = System.nanoTime()
         graft.ops.UrlOps.urlDedup(docs, "url", "doc_id")
           .write.format("noop").mode("overwrite").save()
@@ -370,7 +370,7 @@ class ScaleProbeSpec extends AnyFunSuite {
         val emb = graft.core.Tables(spark, dir, "embeddings")
         val corpus = emb.where(pmod(col("vec_id"), lit(5L)) =!= 0)
         val delta = emb.where(pmod(col("vec_id"), lit(5L)) === 0)
-        val idx = graft.queries.Curation2.tempIndexDir("graft_probe_sq8_")
+        val idx = graft.queries.Fixture.tempIndexDir("graft_probe_sq8_")
         try {
           graft.ops.Similarity.writeSq8Index(corpus, "vec_id", "embedding",
             idx)
@@ -378,7 +378,7 @@ class ScaleProbeSpec extends AnyFunSuite {
           graft.ops.Similarity.appendSq8Index(spark, idx, delta, "vec_id",
             "embedding", corpus)
           println(f"SCALEPROBE sq8_append $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        } finally graft.queries.Curation2.deleteDir(idx)
+        } finally graft.queries.Fixture.deleteDir(idx)
       }
     } finally spark.conf.set("spark.sql.adaptive.enabled", "false")
   }
@@ -468,7 +468,7 @@ class ScaleProbeSpec extends AnyFunSuite {
         val docs = graft.core.Tables(spark, dir, "documents")
         val corpus = docs.where(pmod(col("doc_id"), lit(5L)) =!= 0)
         val deleted = corpus.where(pmod(col("doc_id"), lit(7L)) === 0)
-        val idx = graft.queries.Curation2.tempIndexDir("graft_probe_deldedup_")
+        val idx = graft.queries.Fixture.tempIndexDir("graft_probe_deldedup_")
         try {
           graft.ops.Dedup.writeDedupIndex(corpus, "text", "doc_id", idx,
             3, 16, 4)
@@ -476,7 +476,7 @@ class ScaleProbeSpec extends AnyFunSuite {
           graft.ops.Dedup.deleteFromDedupIndex(spark, idx, corpus, deleted,
             "text", "doc_id")
           println(f"SCALEPROBE dedup_index_delete $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        } finally graft.queries.Curation2.deleteDir(idx)
+        } finally graft.queries.Fixture.deleteDir(idx)
       }
     } finally spark.conf.set("spark.sql.adaptive.enabled", "false")
   }
@@ -614,7 +614,7 @@ class ScaleProbeSpec extends AnyFunSuite {
       }
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      graft.queries.Curation2.deleteDir(root)
+      graft.queries.Fixture.deleteDir(root)
     }
   }
 
@@ -671,7 +671,7 @@ class ScaleProbeSpec extends AnyFunSuite {
       // RECALL CARD (broadcast sample x index brute force) is linear
       // by construction — its disclosed tuning-time nature.
       def probe(dir: String, label: String): (Double, Double, Double) = {
-        val (pi, _, qi, _) = graft.queries.Curation13.searchLife(spark, dir)
+        val (pi, _, qi, _) = graft.queries.Retrieval.searchLife(spark, dir)
         val q = qi.orderBy("media_id").limit(500).localCheckpoint(true)
         def time(f: => org.apache.spark.sql.DataFrame): Double = {
           val t0 = System.nanoTime()

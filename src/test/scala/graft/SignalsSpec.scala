@@ -559,7 +559,7 @@ class SignalsSpec extends AnyFunSuite {
       val leaves = viaIdx.queryExecution.executedPlan.collectLeaves()
         .mkString("\n")
       assert(leaves.contains(idx), leaves.take(1500))
-    } finally graft.queries.Curation2.deleteDir(idx)
+    } finally graft.queries.Fixture.deleteDir(idx)
   }
 
   test("quotaCosineTopK enforces per-label quotas; filtered ANN pushes the predicate to the scan") {

@@ -8,11 +8,15 @@
 #   tools/precommit.sh [ref]          # gate subset derived from git diff
 #   tools/precommit.sh ref 'q(1|2)_'  # explicit regex overrides the mapper
 #
-# Mapper: changed queries/*.scala files contribute every qNNN literal in
-# their diff hunks; a changed ops/functions/... file contributes every
-# query whose builder body references the object (awk tracks the current
-# Gate("qNNN_name" record while scanning each queries file). Non-query
-# source changes with no mapped query fall back to a fixed smoke subset.
+# Mapper: changed queries/*.scala gate files contribute every qNNN
+# literal in their diff hunks, and a gate file new since <ref> (added or
+# untracked) every Gate("qNNN_ record it holds; a changed ops/functions/...
+# file, or a queries/ file with no Gate records (Q, PxlGate, Fixture and
+# other fragment holders), contributes every query whose builder body
+# references the object (awk tracks the current Gate("qNNN_name" record
+# while scanning each queries file; a file that imports the object's
+# members wholesale maps all its queries). Non-query source changes with
+# no mapped query fall back to a fixed smoke subset.
 set -e
 cd "$(dirname "$0")/.." || exit 1
 REF="${1:-HEAD}"
@@ -52,8 +56,22 @@ if [ -n "$2" ]; then
 else
   NUMS=""
   for f in $CHANGED; do
+    KIND=ref
     case "$f" in
       src/main/scala/graft/queries/*)
+        if [ -f "$f" ] && ! git cat-file -e "$REF:$f" 2>/dev/null; then
+          KIND=new
+        elif grep -q 'Gate("q' "$f" 2>/dev/null \
+            || git show "$REF:$f" 2>/dev/null | grep -q 'Gate("q'; then
+          KIND=hunks
+        fi ;;
+    esac
+    case "$KIND" in
+      new)
+        # a gate file new since $REF: every record it holds
+        NUMS="$NUMS $(grep -oE 'Gate\("q[0-9]+_' "$f" \
+          | grep -oE '[0-9]+' || true)" ;;
+      hunks)
         # query numbers named in the changed hunks themselves
         NUMS="$NUMS $(git diff "$REF" -- "$f" | grep -oE '"q[0-9]+_' \
           | grep -oE '[0-9]+' || true)" ;;
@@ -70,6 +88,7 @@ else
             match($0, /Gate\("q[0-9]+_[a-z0-9_]*"/) {
               cur = substr($0, RSTART+7, RLENGTH-8)
               sub(/_.*/, "", cur); all[cur] = 1 }
+            $0 ~ "^import (graft[.]queries[.])?" obj "[.]_" { pre = 1 }
             index($0, obj ".") { if (cur != "") print cur; else pre = 1 }
             END { if (pre) for (n in all) print n }
           ' "$qf" | sort -u || true)"
