@@ -118,8 +118,7 @@ object CurationNDay {
                     a: CurationDay.Artifacts): Unit = {
     val (pool, _) = CurationDay.poolBench(spark, dir)
     def admitted(k: Int): DataFrame =
-      spark.read.parquet(a.decisionsDay(k))
-        .where(col("decision") === "admitted").select("doc_id")
+      Ledger.pinnedIds(spark, a.decisionsDay, Seq(k))
         .join(spark.read.parquet(a.dropDay(k)), "doc_id")
     val nTok = size(split(col("text"), " ")).cast("long")
     val planted = admitted(1).orderBy("doc_id").limit(1)
@@ -223,11 +222,8 @@ object CurationNDay {
     */
   def allDecisions(spark: SparkSession,
                    a: CurationDay.Artifacts): DataFrame =
-    (1 to NDays).map { k =>
-      spark.read.parquet(a.decisionsDay(k))
-        .select(lit(k).as("day"), col("doc_id"), col("decision"),
-          col("shard"))
-    }.reduce(_.unionByName(_))
+    Ledger.pinned(spark, a.decisionsDay, 1 to NDays)(k =>
+      Seq(lit(k).as("day"), col("doc_id"), col("decision"), col("shard")))
 
   /** A RETRACTION day (takedown / right-to-erasure through the same
     * ledgered day mechanism as admission — the lifecycle's inverse
@@ -335,19 +331,16 @@ object CurationNDay {
       expire(spark, a, keepFromDay, manifestIn, manifestOut)).isDefined
   }
 
-  /** [[ttlDay]] without its ledger row. */
+  /** [[ttlDay]] without its ledger row: the corpus docs
+    * [[graft.core.Ledger.agedOut]] of `keepFromDay` leave through the
+    * retraction body.
+    */
   private def expire(spark: SparkSession, a: CurationDay.Artifacts,
                      keepFromDay: Int, manifestIn: String,
-                     manifestOut: String): Unit = {
-    val young = (keepFromDay to NDays).map { k =>
-      spark.read.parquet(a.decisionsDay(k))
-        .where(col("decision") === "admitted").select("doc_id")
-    }.reduce(_.unionByName(_))
-    val victims = spark.read.parquet(a.corpusDir).select("doc_id")
-      .join(young, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true) // age-out set pinned before mutation
-    retractAll(spark, a, victims, manifestIn, manifestOut)
-  }
+                     manifestOut: String): Unit =
+    retractAll(spark, a, Ledger.agedOut(spark,
+        spark.read.parquet(a.corpusDir), a.decisionsDay, keepFromDay, NDays),
+      manifestIn, manifestOut)
 
   /** Day k's token mass from its persisted pack layout (one sum over
     * one day file — model-sized, no corpus scan): the fixture caps'
@@ -358,87 +351,33 @@ object CurationNDay {
       .agg(coalesce(sum(col("n_tok")), lit(0L)).as("m"))
       .head().getLong(0)
 
-  /** The ONE retained-mass table both lifecycles' size caps read:
-    * every current member `(doc_id, m)` contributes its mass `m` to
-    * the day whose pinned decisions (`decisionsDay(k)`, k ≤ `nDays`)
-    * admitted it; a member of no pinned day is snapshot mass (day 0);
-    * an expired doc contributes nothing, because the masses come from
-    * CURRENT membership, not from bookkeeping a prior slot may have
-    * rewritten — so slots compose in any order. One member-sized
-    * pass; one entry per pinned day plus day 0.
-    */
-  def massTable(spark: SparkSession, members: DataFrame,
-                decisionsDay: Int => String, nDays: Int): Map[Int, Long] = {
-    val pinnedDays = (1 to nDays).filter(k => Ledger.done(spark, decisionsDay(k)))
-    val admDay = pinnedDays.map { k =>
-      spark.read.parquet(decisionsDay(k))
-        .where(col("decision") === "admitted")
-        .select(col("doc_id"), lit(k).as("__day"))
-    }.reduceOption(_.unionByName(_))
-    val tagged = admDay match {
-      case Some(d) => members.join(d, Seq("doc_id"), "left")
-        .withColumn("__day", coalesce(col("__day"), lit(0)))
-      case None => members.withColumn("__day", lit(0))
-    }
-    val measured = tagged.groupBy("__day")
-      .agg(sum(col("m")).as("m"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    ((0 +: pinnedDays).map(k => k -> measured.getOrElse(k, 0L))).toMap
-  }
-
-  /** The ONE whole-day horizon chooser: 0 when the whole retained
-    * mass — day-0 snapshot included — already fits `cap` (the
-    * reference cap expires only while over it); otherwise the OLDEST
-    * admission day k ≥ 1 of `masses` whose days ≥ k fit (whole-day
-    * granularity — the row-batch analog; exact integer arithmetic any
-    * engine re-derives). Loud-fails when even the newest day alone
-    * exceeds the cap (whole-day expiry cannot satisfy it).
-    */
-  def horizonOf(masses: Map[Int, Long], cap: Long, dayId: String): Int =
-    if (masses.values.sum <= cap) 0
-    else {
-      val days = masses.keys.toSeq.sorted
-      days.filter(_ >= 1).find { k =>
-        days.filter(_ >= k).map(masses).sum <= cap
-      }.getOrElse(sys.error(s"$dayId: day ${days.max} alone exceeds " +
-        s"the $cap cap — whole-day expiry cannot satisfy it"))
-    }
-
   /** ORDER-INDEPENDENT retained token mass per admission day:
-    * [[massTable]] over the curated corpus, a doc's mass its token
-    * count. Costs one curated-corpus scan.
+    * [[graft.core.Ledger.massTable]] over the curated corpus, a doc's
+    * mass its token count. Costs one curated-corpus scan.
     */
   def pinnedMasses(spark: SparkSession,
                    a: CurationDay.Artifacts): Map[Int, Long] =
-    massTable(spark, spark.read.parquet(a.corpusDir).select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("m")),
+    Ledger.massTable(spark, spark.read.parquet(a.corpusDir).select(
+        col("doc_id"), size(split(col("text"), " ")).cast("long").as("m")),
       a.decisionsDay, NDays)
 
-  /** SIZE-CAPPED retention — the reference's ring buffer is capped by
-    * SIZE, not age (src/table_store/table/table.cc:44: expire oldest
-    * batches until under the byte cap); this is that trigger on the
-    * day lifecycle: [[horizonOf]] over the [[pinnedMasses]] chooses
-    * the OLDEST admission horizon whose retained token mass fits
-    * `maxTokens`, the horizon is PINNED before any mutation (a
-    * replayed calendar slot whose cap committed still knows whether
-    * it expired anything — the fact the tape-rebuild step needs), then
-    * the [[ttlDay]] machinery expires to it — all under ONE `dayId`
-    * ledger row. An UNDER-CAP corpus is untouched: the day commits as
-    * a ledgered no-op (keepFrom = 0, no mutation, `manifestOut` not
-    * written). The masses survive a prior ttl slot's tape rebuild, so
-    * a calendar may schedule its slots in any order (the q606/q607
-    * capstone). Returns the chosen `keepFromDay`, or 0 for the no-op /
-    * already-committed cases.
+  /** SIZE-CAPPED retention on the day lifecycle: the
+    * [[graft.core.Ledger.capSlot]] over the [[pinnedMasses]] (token
+    * mass per admission day), expiring to the chosen horizon through
+    * the [[ttlDay]] machinery — all under ONE `dayId` ledger row. The
+    * pinned horizon tells a replayed calendar slot whether the cap
+    * expired anything (the fact the tape-rebuild step needs). An
+    * UNDER-CAP corpus commits a ledgered no-op (keepFrom = 0,
+    * `manifestOut` not written). The masses survive a prior ttl slot's
+    * tape rebuild, so a calendar may schedule its slots in any order
+    * (the q606/q607 capstone). Returns the chosen `keepFromDay`, or 0
+    * for the no-op / already-committed cases.
     */
   def capDayPinned(spark: SparkSession, a: CurationDay.Artifacts,
                    dayId: String, maxTokens: Long, manifestIn: String,
                    manifestOut: String): Int =
-    Ledger.once(spark, a.ledger, dayId) {
-      val keepFrom = horizonOf(pinnedMasses(spark, a), maxTokens, dayId)
-      Ledger.pinHorizon(spark, a.capHorizon(dayId), keepFrom)
-      if (keepFrom > 0) expire(spark, a, keepFrom, manifestIn, manifestOut)
-      keepFrom
-    }.getOrElse(0)
+    Ledger.capSlot(spark, a.ledger, dayId, a.capHorizon(dayId), maxTokens)(
+      pinnedMasses(spark, a))(expire(spark, a, _, manifestIn, manifestOut))
 
   /** The lifecycle DATASHEET (the "data card" every curated training
     * corpus ships with — Gebru et al. 2021, "Datasheets for

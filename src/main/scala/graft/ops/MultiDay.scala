@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Ledger
+import graft.core.{Ledger, Tables}
 
 /** The MULTIMODAL admission day — the three persisted near-dup
   * indexes ([[Dedup.writeDedupIndex]] lexical, [[SemIndex]] semantic,
@@ -87,14 +87,15 @@ object MultiDay {
   }
 
   // =====================================================================
-  // The ROUND-12 generation: FOUR stages (lexical, semantic, perceptual
-  // image, perceptual AUDIO), per-stage verdict columns, within-day
+  // The FOUR-STAGE generation: lexical, semantic, perceptual image and
+  // perceptual AUDIO stages, per-stage verdict columns, within-day
   // near-dup passes, a decode-once media artifact, N = 3 days with a
   // DAY LEDGER, and a streamed delivery path
   // ([[graft.streaming.MultiStream]]) — the [[CurationNDay]] contract
-  // lifted onto the composed multimodal day. The round-11 two-day
-  // `processDay` above is kept as-is (its gates pin the original
-  // contract); everything below is the generalized lifecycle.
+  // lifted onto the composed multimodal day. The three-stage
+  // `processDay` above stays separate because q538–q541 pin a contract
+  // with no within-batch pass (its semantic and perceptual stages see
+  // only the index, so a same-day twin is judged alone).
   // =====================================================================
 
   /** Artifact roots of the 4-index lifecycle. `media` is the
@@ -119,27 +120,39 @@ object MultiDay {
 
   val NDays4 = 3
 
-  /** The fixture lifecycle's %8 split: snapshot {4..7}, day 1 = 0,
-    * day 2 = 1, day 3 = {2,3} + the three sentinels. Image payloads
-    * are PAIR-grouped (`doc_id − doc_id%2`), so a day-1 even doc's
+  /** The four-stage fixture lifecycle's %8 split: snapshot {4..7},
+    * day 1 = 0, day 2 = 1, day 3 = {2,3} + the three sentinels. Image
+    * payloads are PAIR-grouped ([[img]]), so a day-1 even doc's
     * partner arrives on day 2 (cross-day perceptual witness through
     * the day-1 append alone) and a day-3 pair co-arrives (the
     * within-day pass's organic witness).
     */
-  private def m8(c: org.apache.spark.sql.Column) = pmod(c, lit(8L))
+  private def m8: Column = pmod(col("doc_id"), lit(8L))
 
-  private val pngUdf =
-    Multimodal.pngVarUdf
+  /** The six-stage lifecycle's %4 split of the [[pool]]: snapshot
+    * {2,3}, day 1 = 0, day 2 = 1.
+    */
+  private def m4: Column = pmod(col("doc_id"), lit(4L))
 
-  /** One day's organic drop: (doc_id, text, embedding, img). */
+  /** The six-stage participant pool: the bench source (`src0`, see
+    * [[benchOf]]) is excluded.
+    */
+  private def pool(pred: Column): Column = col("source") =!= "src0" && pred
+
+  /** The image payload of the doc's pair group (`doc_id − doc_id%2`). */
+  private def img: Column =
+    Multimodal.pngVarUdf(col("doc_id") - pmod(col("doc_id"), lit(2L)))
+
+  /** One day's organic drop: the `pred` documents with their
+    * embedding and image, as (doc_id, text, embedding, img).
+    */
   private def organicDrop(spark: SparkSession, dir: String,
-                          pred: org.apache.spark.sql.Column): DataFrame =
-    graft.core.Tables.plain(spark, dir, "documents")
-      .select("doc_id", "text").where(pred)
-      .join(graft.core.Tables.plain(spark, dir, "embeddings")
+                          pred: Column): DataFrame =
+    Tables.plain(spark, dir, "documents").where(pred)
+      .select("doc_id", "text")
+      .join(Tables.plain(spark, dir, "embeddings")
         .select(col("vec_id").as("doc_id"), col("embedding")), "doc_id")
-      .withColumn("img",
-        pngUdf(col("doc_id") - pmod(col("doc_id"), lit(2L))))
+      .withColumn("img", img)
 
   /** The drop frame as a media frame for [[MediaHashes]]: the image
     * payload plus the audio track (documents-as-media text bytes —
@@ -152,14 +165,15 @@ object MultiDay {
       col("img").as("payload"), col("text").cast("binary").as("audio"))
 
   /** Bootstrap all four snapshot indexes + the media artifact from the
-    * %8 ∈ {4..7} snapshot, and stage the day-1/-2 organic drops.
+    * `snapPred` organic drop, and stage day k's organic drop
+    * (`dayPreds(k − 1)`).
     */
-  def bootstrap4(spark: SparkSession, dir: String, p: Paths4): Unit = {
-    val snap = organicDrop(spark, dir, m8(col("doc_id")) >= 4L)
-      .localCheckpoint(true)
+  private def bootstrapOf(spark: SparkSession, dir: String, p: Paths4,
+                          snapPred: Column, dayPreds: Column*): Unit = {
+    val snap = organicDrop(spark, dir, snapPred).localCheckpoint(true)
     // all tracks read only the pinned snapshot / base tables and write
     // disjoint artifacts — overlap them (guide §2.6)
-    graft.core.Par.run(
+    graft.core.Par.run((Seq(
       () => Dedup.writeDedupIndex(snap, "text", "doc_id", p.lex, NGram,
         K, Bands),
       () => SemIndex.bootstrap(spark,
@@ -171,12 +185,45 @@ object MultiDay {
         graft.core.Par.run(
           () => PhashIndex.write(spark, MediaHashes.imageOf(sigs), p.ph),
           () => PhashIndex.write(spark, MediaHashes.audioOf(sigs), p.aud))
-      },
-      () => organicDrop(spark, dir, m8(col("doc_id")) === 0L)
-        .write.mode("overwrite").parquet(p.dropDay(1)),
-      () => organicDrop(spark, dir, m8(col("doc_id")) === 1L)
-        .write.mode("overwrite").parquet(p.dropDay(2)))
+      }) ++
+      dayPreds.zipWithIndex.map { case (pred, i) => () =>
+        organicDrop(spark, dir, pred)
+          .write.mode("overwrite").parquet(p.dropDay(i + 1))
+      }): _*)
   }
+
+  /** The four-stage bootstrap: the %8 ∈ {4..7} snapshot, day-1/-2
+    * organic drops staged.
+    */
+  def bootstrap4(spark: SparkSession, dir: String, p: Paths4): Unit =
+    bootstrapOf(spark, dir, p, m8 >= 4L, m8 === 0L, m8 === 1L)
+
+  /** The six-stage bootstrap: the pool's %4 ∈ {2,3} snapshot, the day-1
+    * organic drop staged.
+    */
+  def bootstrap6(spark: SparkSession, dir: String, p: Paths4): Unit =
+    bootstrapOf(spark, dir, p, pool(m4.isin(2L, 3L)), pool(m4 === 0L))
+
+  /** A FULL-CLONE sentinel row: all modalities (text, embedding,
+    * image payload group — the audio track follows the text) of the
+    * smallest id in `src`, re-badged as `newId`.
+    */
+  private def cloneOf(spark: SparkSession, dir: String, src: DataFrame,
+                      newId: Long): DataFrame =
+    src.orderBy("doc_id").limit(1)
+      .join(Tables.plain(spark, dir, "documents")
+        .select("doc_id", "text"), "doc_id")
+      .join(Tables.plain(spark, dir, "embeddings")
+        .select(col("vec_id").as("doc_id"), col("embedding")), "doc_id")
+      .select(lit(newId).as("doc_id"), col("text"), col("embedding"),
+        img.as("img"))
+
+  /** The ids day k's pin holds under `pred` (by default the admitted
+    * ones).
+    */
+  private def pinnedIds(spark: SparkSession, p: Paths4, k: Int,
+                        pred: Column = Ledger.Admitted): DataFrame =
+    Ledger.pinnedIds(spark, p.decisionsDay, Seq(k), pred)
 
   /** The day-3 drop: organic %8 ∈ {2,3} plus three FULL-CLONE
     * sentinels derived from the pipeline's OWN pinned decisions (the
@@ -189,43 +236,18 @@ object MultiDay {
     * source's own corpus check dictates) and it can never be
     * admitted.
     */
-  /** A FULL-CLONE sentinel row: all modalities (text, embedding,
-    * image payload group — the audio track follows the text) of the
-    * smallest id in `src`, re-badged as `newId`.
-    */
-  private def cloneOf(spark: SparkSession, dir: String, src: DataFrame,
-                      newId: Long): DataFrame =
-    src.orderBy("doc_id").limit(1)
-      .join(graft.core.Tables.plain(spark, dir, "documents")
-        .select("doc_id", "text"), "doc_id")
-      .join(graft.core.Tables.plain(spark, dir, "embeddings")
-        .select(col("vec_id").as("doc_id"), col("embedding")), "doc_id")
-      .select(lit(newId).as("doc_id"), col("text"), col("embedding"),
-        pngUdf(col("doc_id") - pmod(col("doc_id"), lit(2L))).as("img"))
-
   def writeDay3Drop(spark: SparkSession, dir: String, p: Paths4): Unit = {
-    val organic = organicDrop(spark, dir, m8(col("doc_id")).isin(2L, 3L))
-    def admittedOf(k: Int): DataFrame =
-      spark.read.parquet(p.decisionsDay(k))
-        .where(col("decision") === "admitted").select("doc_id")
+    val organic = organicDrop(spark, dir, m8.isin(2L, 3L))
     organic
-      .unionByName(cloneOf(spark, dir, admittedOf(1), 9600001L))
-      .unionByName(cloneOf(spark, dir, admittedOf(2), 9600002L))
+      .unionByName(cloneOf(spark, dir, pinnedIds(spark, p, 1), 9600001L))
+      .unionByName(cloneOf(spark, dir, pinnedIds(spark, p, 2), 9600002L))
       .unionByName(cloneOf(spark, dir, organic.select("doc_id"), 9600003L))
       .write.mode("overwrite").parquet(p.dropDay(3))
   }
 
-  /** The four stage verdicts over one day's drop, combined into ONE
-    * row per doc with the per-stage columns DISCLOSED (d_lex, d_sem,
-    * d_ph, d_aud) plus the combined verdict under the fixed stage
-    * priority lexical > semantic > perceptual > audio (corpus hits
-    * already outrank batch hits within each stage). FULL joins: a doc
-    * missing any modality gets the loud `missing_modality` combined
-    * verdict — never admitted, never silently dropped.
-    */
   /** The four near-dup stage columns, FULL-joined on the shared id
     * with nulls preserved (a missing modality surfaces as a null
-    * stage value for the combiners to flag loudly).
+    * stage value for [[verdict]] to flag loudly).
     */
   private def stageVerdicts(spark: SparkSession, p: Paths4,
                             drop: DataFrame, imgHashed: DataFrame,
@@ -250,20 +272,43 @@ object MultiDay {
       .join(aud, Seq("doc_id"), "full")
   }
 
+  /** The four near-dup stage columns in priority order (corpus hits
+    * already outrank batch hits within each stage).
+    */
+  val Stages4: Seq[String] = Seq("d_lex", "d_sem", "d_ph", "d_aud")
+
+  /** The full stack: the near-dup stages, then the two post-gates. */
+  val Stages6: Seq[String] = Stages4 ++ Seq("d_contam", "d_qual")
+
+  /** The combined verdict under the fixed priority of `stages`:
+    * `missing_modality` when any stage is null (never admitted, never
+    * silently dropped), else the first failing stage's verdict, else
+    * admitted — the cheap-to-explain "first failing stage" rule.
+    */
+  private def verdict(stages: Seq[String]): Column =
+    stages.foldLeft(when(stages.map(col(_).isNull).reduce(_ || _),
+        lit("missing_modality"))) { (v, st) =>
+      v.when(col(st) =!= "admitted", col(st))
+    }.otherwise(lit("admitted")).as("decision")
+
+  /** One row per doc: the `stages` columns disclosed, then their
+    * combined [[verdict]].
+    */
+  private def combined(v: DataFrame, stages: Seq[String]): DataFrame =
+    v.select((col("doc_id") +: stages.map(col)) :+ verdict(stages): _*)
+
+  /** The four stage verdicts over one day's drop, combined into ONE
+    * row per doc with the per-stage columns DISCLOSED (d_lex, d_sem,
+    * d_ph, d_aud) plus the combined verdict under the fixed stage
+    * priority lexical > semantic > perceptual > audio. FULL joins: a
+    * doc missing any modality gets the loud `missing_modality`
+    * combined verdict.
+    */
   def decisions4(spark: SparkSession, p: Paths4, drop: DataFrame,
                  imgHashed: DataFrame, audHashed: DataFrame,
-                 corpusFetch: DataFrame): DataFrame = {
-    val stages = Seq(col("d_lex"), col("d_sem"), col("d_ph"), col("d_aud"))
-    stageVerdicts(spark, p, drop, imgHashed, audHashed, corpusFetch)
-      .select(col("doc_id"), col("d_lex"), col("d_sem"), col("d_ph"),
-        col("d_aud"),
-        when(stages.map(_.isNull).reduce(_ || _), lit("missing_modality"))
-          .when(col("d_lex") =!= "admitted", col("d_lex"))
-          .when(col("d_sem") =!= "admitted", col("d_sem"))
-          .when(col("d_ph") =!= "admitted", col("d_ph"))
-          .when(col("d_aud") =!= "admitted", col("d_aud"))
-          .otherwise(lit("admitted")).as("decision"))
-  }
+                 corpusFetch: DataFrame): DataFrame =
+    combined(stageVerdicts(spark, p, drop, imgHashed, audHashed,
+      corpusFetch), Stages4)
 
   /** The FULL admission stack — the four near-dup stages composed
     * with the lexical curation day's POST-GATES: benchmark
@@ -296,21 +341,10 @@ object MultiDay {
       when((size(g2) - size(array_distinct(g2))).cast("long") * 10L >
           lit(CurationDay.RepTenths) * size(g2).cast("long"),
         lit("low_quality")).otherwise(lit("admitted")).as("d_qual"))
-    val stages = Seq(col("d_lex"), col("d_sem"), col("d_ph"),
-      col("d_aud"), col("d_contam"), col("d_qual"))
-    stageVerdicts(spark, p, drop, imgHashed, audHashed, corpusFetch)
+    combined(stageVerdicts(spark, p, drop, imgHashed, audHashed,
+        corpusFetch)
       .join(contam, Seq("doc_id"), "full")
-      .join(qual, Seq("doc_id"), "full")
-      .select(col("doc_id"), col("d_lex"), col("d_sem"), col("d_ph"),
-        col("d_aud"), col("d_contam"), col("d_qual"),
-        when(stages.map(_.isNull).reduce(_ || _), lit("missing_modality"))
-          .when(col("d_lex") =!= "admitted", col("d_lex"))
-          .when(col("d_sem") =!= "admitted", col("d_sem"))
-          .when(col("d_ph") =!= "admitted", col("d_ph"))
-          .when(col("d_aud") =!= "admitted", col("d_aud"))
-          .when(col("d_contam") =!= "admitted", col("d_contam"))
-          .when(col("d_qual") =!= "admitted", col("d_qual"))
-          .otherwise(lit("admitted")).as("decision"))
+      .join(qual, Seq("doc_id"), "full"), Stages6)
   }
 
   /** One mm day, LEDGER-GATED (the [[CurationNDay.processDay]]
@@ -430,13 +464,18 @@ object MultiDay {
     texts.join(members, "doc_id")
   }
 
-  /** All N days' pinned verdicts as one frame. */
+  /** Days 1..`nDays`' pinned verdicts as one frame: day, doc_id, the
+    * `stages` columns, decision.
+    */
+  private def allDecisionsOf(spark: SparkSession, p: Paths4, nDays: Int,
+                             stages: Seq[String]): DataFrame =
+    Ledger.pinned(spark, p.decisionsDay, 1 to nDays)(k =>
+      (lit(k).as("day") +: col("doc_id") +: stages.map(col)) :+
+        col("decision"))
+
+  /** All N days' pinned four-stage verdicts as one frame. */
   def allDecisions4(spark: SparkSession, p: Paths4): DataFrame =
-    (1 to NDays4).map { k =>
-      spark.read.parquet(p.decisionsDay(k))
-        .select(lit(k).as("day"), col("doc_id"), col("d_lex"),
-          col("d_sem"), col("d_ph"), col("d_aud"), col("decision"))
-    }.reduce(_.unionByName(_))
+    allDecisionsOf(spark, p, NDays4, Stages4)
 
   // ---- the FULL-STACK (six-stage) fixture lifecycle ------------------
 
@@ -444,51 +483,17 @@ object MultiDay {
     * suite (the q488 convention) — text only, no modality needed.
     */
   def benchOf(spark: SparkSession, dir: String): DataFrame =
-    graft.core.Tables.plain(spark, dir, "documents")
+    Tables.plain(spark, dir, "documents")
       .where(col("source") === "src0").select("doc_id", "text")
-
-  /** Full-stack organic drop: participants (docs ⋈ embeddings) with
-    * the bench source EXCLUDED from the pool, %4 split.
-    */
-  private def organicDrop6(spark: SparkSession, dir: String,
-                           pred: org.apache.spark.sql.Column): DataFrame =
-    graft.core.Tables.plain(spark, dir, "documents")
-      .where(col("source") =!= "src0" && pred)
-      .select("doc_id", "text")
-      .join(graft.core.Tables.plain(spark, dir, "embeddings")
-        .select(col("vec_id").as("doc_id"), col("embedding")), "doc_id")
-      .withColumn("img",
-        pngUdf(col("doc_id") - pmod(col("doc_id"), lit(2L))))
-
-  private def m4(c: org.apache.spark.sql.Column) = pmod(c, lit(4L))
-
-  /** Bootstrap the four indexes + media artifact from the pool's
-    * %4 ∈ {2,3} snapshot and stage the day-1 organic drop.
-    */
-  def bootstrap6(spark: SparkSession, dir: String, p: Paths4): Unit = {
-    val snap = organicDrop6(spark, dir, m4(col("doc_id")).isin(2L, 3L))
-      .localCheckpoint(true)
-    graft.core.Par.run(
-      () => Dedup.writeDedupIndex(snap, "text", "doc_id", p.lex, NGram,
-        K, Bands),
-      () => SemIndex.bootstrap(spark,
-        snap.select(col("doc_id").as("vec_id"), col("embedding")), p.sem),
-      () => {
-        MediaHashes.extend(spark, p.media, mediaOf(snap))
-        val sigs = MediaHashes.fetchBoth(spark, p.media,
-          snap.select(col("doc_id").as("media_id"))).localCheckpoint(true)
-        graft.core.Par.run(
-          () => PhashIndex.write(spark, MediaHashes.imageOf(sigs), p.ph),
-          () => PhashIndex.write(spark, MediaHashes.audioOf(sigs), p.aud))
-      },
-      () => organicDrop6(spark, dir, m4(col("doc_id")) === 0L)
-        .write.mode("overwrite").parquet(p.dropDay(1)))
-  }
 
   /** The spam text the low-quality gate must reject (40 copies of one
     * word ⇒ duplicate 2-gram mass far over [[CurationDay.RepTenths]]).
     */
   val SpamText: String = ("spam " * 39) + "spam"
+
+  /** A pin's post-gate rejections. */
+  private val PostGated: Column =
+    col("decision").isin("contaminated", "low_quality")
 
   /** Day 2 = organic %4 == 1 plus three sentinels:
     *
@@ -506,19 +511,15 @@ object MultiDay {
     *    index absorbed on day 1 (the q542-pattern append witness).
     */
   def writeDay2Drop6(spark: SparkSession, dir: String, p: Paths4): Unit = {
-    val organic = organicDrop6(spark, dir, m4(col("doc_id")) === 1L)
-    def dayOf(pred: org.apache.spark.sql.Column): DataFrame =
-      spark.read.parquet(p.decisionsDay(1)).where(pred).select("doc_id")
+    val organic = organicDrop(spark, dir, pool(m4 === 1L))
     val spam = organic.orderBy("doc_id").limit(1)
       .select(lit(9700002L).as("doc_id"), lit(SpamText).as("text"),
         col("embedding"), col("img"))
     organic
-      .unionByName(cloneOf(spark, dir,
-        dayOf(col("decision").isin("contaminated", "low_quality")),
+      .unionByName(cloneOf(spark, dir, pinnedIds(spark, p, 1, PostGated),
         9700001L))
       .unionByName(spam)
-      .unionByName(cloneOf(spark, dir,
-        dayOf(col("decision") === "admitted"), 9700003L))
+      .unionByName(cloneOf(spark, dir, pinnedIds(spark, p, 1), 9700003L))
       .write.mode("overwrite").parquet(p.dropDay(2))
   }
 
@@ -526,14 +527,10 @@ object MultiDay {
   def allDecisions6(spark: SparkSession, p: Paths4): DataFrame =
     allDecisions6Upto(spark, p, 2)
 
+  /** Days 1..`nDays`' pinned six-stage verdicts as one frame. */
   def allDecisions6Upto(spark: SparkSession, p: Paths4,
                         nDays: Int): DataFrame =
-    (1 to nDays).map { k =>
-      spark.read.parquet(p.decisionsDay(k))
-        .select(lit(k).as("day"), col("doc_id"), col("d_lex"),
-          col("d_sem"), col("d_ph"), col("d_aud"), col("d_contam"),
-          col("d_qual"), col("decision"))
-    }.reduce(_.unionByName(_))
+    allDecisionsOf(spark, p, nDays, Stages6)
 
   /** Day 3 of the six-stage CALENDAR — a pure WITNESS day derived
     * entirely from the chain's own pins (scale-robust: the sources
@@ -559,15 +556,11 @@ object MultiDay {
     */
   def writeDay3Drop6Cal(spark: SparkSession, dir: String,
                         p: Paths4): Unit = {
-    def dayOf(k: Int, pred: org.apache.spark.sql.Column): DataFrame =
-      spark.read.parquet(p.decisionsDay(k)).where(pred).select("doc_id")
-    val adm1 = dayOf(1, col("decision") === "admitted")
-    val adm2 = dayOf(2, col("decision") === "admitted")
-    val rej1 = dayOf(1,
-      col("decision").isin("contaminated", "low_quality"))
+    val adm1 = pinnedIds(spark, p, 1)
     cloneOf(spark, dir, adm1, 9700004L)
-      .unionByName(cloneOf(spark, dir, adm2, 9700005L))
-      .unionByName(cloneOf(spark, dir, rej1, 9700006L))
+      .unionByName(cloneOf(spark, dir, pinnedIds(spark, p, 2), 9700005L))
+      .unionByName(cloneOf(spark, dir, pinnedIds(spark, p, 1, PostGated),
+        9700006L))
       .unionByName(cloneOf(spark, dir, adm1, 9700007L))
       .write.mode("overwrite").parquet(p.dropDay(3))
   }
@@ -580,8 +573,7 @@ object MultiDay {
     * views of the RETAINED corpus (retraction says "remove these
     * docs"; retention says "remove everything older than T" — the day
     * ledger IS the age record, no per-row timestamp needed). Victims
-    * are derived from the pipeline's own pinned decisions
-    * (admission-day age), then deleted by [[delete4]].
+    * are the `expireDays` pins' admissions, deleted by [[delete4]].
     *
     * LEDGERED like the admission days ([[processDay4]]): a committed
     * TTL day is a pure no-op on replay (returns false) that reads only
@@ -594,13 +586,9 @@ object MultiDay {
     */
   def ttl4Day(spark: SparkSession, p: Paths4, dayId: String,
               expireDays: Seq[Int], corpusDocs: => DataFrame): Boolean =
-    Ledger.once(spark, p.ledger, dayId) {
-      val victims = expireDays.map { k =>
-        spark.read.parquet(p.decisionsDay(k))
-          .where(col("decision") === "admitted").select("doc_id")
-      }.reduce(_.unionByName(_)).localCheckpoint(true)
-      delete4(spark, p, corpusDocs, victims)
-    }.isDefined
+    Ledger.once(spark, p.ledger, dayId)(delete4(spark, p, corpusDocs,
+      Ledger.pinnedIds(spark, p.decisionsDay, expireDays)
+        .localCheckpoint(true))).isDefined
 
   /** Delete pinned `victims` from all four indexes:
     *
@@ -625,14 +613,14 @@ object MultiDay {
       () => PhashIndex.delete(spark, p.aud, victims))
 
   /** Retained BYTE mass per admission horizon — the input to the
-    * size-cap trigger ([[cap4Day]]): [[CurationNDay.massTable]] over
-    * every indexed doc (the lexical band table's own membership via
-    * [[indexedDocs]] — so a doc an earlier slot expired counts zero,
-    * exactly "what is in the ring buffer now"). The metric is the
-    * audio-track payload length — the byte analog of the reference's
-    * byte-capped ring buffer (src/table_store/table/table.cc:44) on
-    * the fixture's one sized payload column; character length, so any
-    * engine re-derives it.
+    * size-cap trigger ([[cap4Day]]): [[graft.core.Ledger.massTable]]
+    * over every indexed doc (the lexical band table's own membership
+    * via [[indexedDocs]] — so a doc an earlier slot expired counts
+    * zero, exactly "what is in the ring buffer now"). The metric is
+    * the audio-track payload length — the byte analog of the
+    * reference's byte-capped ring buffer (src/table_store/table/
+    * table.cc:44) on the fixture's one sized payload column;
+    * character length, so any engine re-derives it.
     */
   def retainedMasses(spark: SparkSession, p: Paths4,
                      corpusFetch: DataFrame): Map[Int, Long] =
@@ -640,47 +628,29 @@ object MultiDay {
 
   private def massesOf(spark: SparkSession, p: Paths4,
                        docs: DataFrame): Map[Int, Long] =
-    CurationNDay.massTable(spark,
+    Ledger.massTable(spark,
       docs.select(col("doc_id"), length(col("text")).as("m")),
       p.decisionsDay, NDays4)
 
-  /** SIZE-CAPPED retention over the multimodal lifecycle — the
-    * [[CurationNDay.capDayPinned]] product for the four-index side
-    * (the reference's actual ring-buffer trigger is BYTES,
-    * table.cc:44): [[CurationNDay.horizonOf]] chooses the OLDEST
-    * admission horizon whose retained byte mass ([[retainedMasses]])
-    * fits `maxBytes` (the snapshot is day 0, so horizon 1 expires the
-    * snapshot alone), the horizon is PINNED before any mutation (a
-    * replayed calendar slot whose cap committed can still read what
-    * the cap decided), then everything older leaves all four indexes
-    * at once ([[delete4]] with membership-derived victims). An
-    * UNDER-CAP corpus commits as a LEDGERED no-op with horizon 0; a
-    * cap even the newest day alone exceeds loud-fails. Returns the
-    * chosen horizon, or 0 for the no-op / already-committed cases.
+  /** SIZE-CAPPED retention over the multimodal lifecycle: the
+    * [[graft.core.Ledger.capSlot]] over the [[retainedMasses]] (the
+    * snapshot is day 0, so horizon 1 expires the snapshot alone),
+    * expiring everything older than the horizon from all four indexes
+    * at once ([[delete4]] with the membership-derived
+    * [[graft.core.Ledger.agedOut]] victims). An UNDER-CAP corpus
+    * commits as a LEDGERED no-op with horizon 0; a cap even the newest
+    * day alone exceeds loud-fails. Returns the chosen horizon, or 0
+    * for the no-op / already-committed cases.
     */
   def cap4Day(spark: SparkSession, p: Paths4, dayId: String,
-              maxBytes: Long, corpusFetch: DataFrame): Int =
-    Ledger.once(spark, p.ledger, dayId) {
-      // derive the membership frame ONCE: the masses and the victim
-      // set both read it
-      val docs = indexedDocs(spark, p, corpusFetch).localCheckpoint(true)
-      val masses = massesOf(spark, p, docs)
-      val keepFrom = CurationNDay.horizonOf(masses, maxBytes, dayId)
-      Ledger.pinHorizon(spark, p.capHorizon(dayId), keepFrom)
-      if (keepFrom > 0) {
-        val young = (keepFrom to NDays4)
-          .filter(k => masses.contains(k))
-          .map { k =>
-            spark.read.parquet(p.decisionsDay(k))
-              .where(col("decision") === "admitted").select("doc_id")
-          }.reduce(_.unionByName(_))
-        val victims = docs.select("doc_id")
-          .join(young, Seq("doc_id"), "left_anti")
-          .localCheckpoint(true) // age-out set pinned before mutation
-        delete4(spark, p, docs, victims)
-      }
-      keepFrom
-    }.getOrElse(0)
+              maxBytes: Long, corpusFetch: DataFrame): Int = {
+    // the membership frame, derived once and only when the slot runs:
+    // the masses and the victim set both read it
+    lazy val docs = indexedDocs(spark, p, corpusFetch).localCheckpoint(true)
+    Ledger.capSlot(spark, p.ledger, dayId, p.capHorizon(dayId), maxBytes)(
+      massesOf(spark, p, docs))(keepFrom => delete4(spark, p, docs,
+        Ledger.agedOut(spark, docs, p.decisionsDay, keepFrom, NDays4)))
+  }
 
   /** The FIXTURE cap for the mid-calendar slot: `m2 + m1 / 2` bytes —
     * deterministically BETWEEN tail(2) = m2 and tail(1) = m1 + m2 at
@@ -696,52 +666,42 @@ object MultiDay {
     masses.getOrElse(2, 0L) + masses.getOrElse(1, 0L) / 2L
   }
 
+  /** (modality, metric, value) card rows, one per (modality, metric,
+    * table): the table's PLAIN row count.
+    */
+  private def cards(rows: Seq[(String, String, DataFrame)]): DataFrame =
+    rows.map { case (m, met, src) =>
+      src.agg(count(lit(1)).cast("long").as("value"))
+        .select(lit(m).as("modality"), lit(met).as("metric"), col("value"))
+    }.reduce(_.unionByName(_))
+
+  /** The lexical, semantic and perceptual card rows both views share;
+    * `bands` maps each band table before it is counted.
+    */
+  private def coreCards(spark: SparkSession, lex: String, sem: SemIndex.Paths,
+                        ph: PhashIndex.Paths, bands: DataFrame => DataFrame)
+      : Seq[(String, String, DataFrame)] = Seq(
+    ("lexical", "n_hashes", spark.read.parquet(s"$lex/hashes.parquet")),
+    ("lexical", "n_band_rows", bands(spark.read.parquet(s"$lex/bands.parquet"))),
+    ("semantic", "n_vecs", spark.read.parquet(sem.index)),
+    ("perceptual", "n_hashes", spark.read.parquet(ph.hashes)),
+    ("perceptual", "n_band_rows", bands(spark.read.parquet(ph.bands))))
+
   /** The four indexes' cards as one long frame — q543's consistency
     * view. PLAIN counts, no `.distinct()` laundering: with the
     * anti-joined band append a duplicated row is a bug this gate must
     * catch, not hide.
     */
-  def indexCards4(spark: SparkSession, p: Paths4): DataFrame = {
-    def row(m: String, met: String, src: DataFrame): DataFrame =
-      src.agg(count(lit(1)).cast("long").as("value"))
-        .select(lit(m).as("modality"), lit(met).as("metric"),
-          col("value"))
-    row("lexical", "n_hashes",
-        spark.read.parquet(s"${p.lex}/hashes.parquet"))
-      .unionByName(row("lexical", "n_band_rows",
-        spark.read.parquet(s"${p.lex}/bands.parquet")))
-      .unionByName(row("semantic", "n_vecs",
-        spark.read.parquet(p.sem.index)))
-      .unionByName(row("perceptual", "n_hashes",
-        spark.read.parquet(p.ph.hashes)))
-      .unionByName(row("perceptual", "n_band_rows",
-        spark.read.parquet(p.ph.bands)))
-      .unionByName(row("audio", "n_hashes",
-        spark.read.parquet(p.aud.hashes)))
-      .unionByName(row("audio", "n_band_rows",
-        spark.read.parquet(p.aud.bands)))
-      .unionByName(row("media", "n_assets",
-        spark.read.parquet(p.media)))
-  }
+  def indexCards4(spark: SparkSession, p: Paths4): DataFrame =
+    cards(coreCards(spark, p.lex, p.sem, p.ph, identity) ++ Seq(
+      ("audio", "n_hashes", spark.read.parquet(p.aud.hashes)),
+      ("audio", "n_band_rows", spark.read.parquet(p.aud.bands)),
+      ("media", "n_assets", spark.read.parquet(p.media))))
 
   /** The three indexes' one-line cards as one long frame — the
     * consistency view q541 gates: all three must describe the SAME
-    * admitted corpus.
+    * admitted corpus (band rows counted distinct).
     */
-  def indexCards(spark: SparkSession, p: Paths): DataFrame = {
-    def row(m: String, met: String, src: DataFrame): DataFrame =
-      src.agg(count(lit(1)).cast("long").as("value"))
-        .select(lit(m).as("modality"), lit(met).as("metric"),
-          col("value"))
-    row("lexical", "n_hashes",
-        spark.read.parquet(s"${p.lex}/hashes.parquet"))
-      .unionByName(row("lexical", "n_band_rows",
-        spark.read.parquet(s"${p.lex}/bands.parquet").distinct()))
-      .unionByName(row("semantic", "n_vecs",
-        spark.read.parquet(p.sem.index)))
-      .unionByName(row("perceptual", "n_hashes",
-        spark.read.parquet(p.ph.hashes)))
-      .unionByName(row("perceptual", "n_band_rows",
-        spark.read.parquet(p.ph.bands).distinct()))
-  }
+  def indexCards(spark: SparkSession, p: Paths): DataFrame =
+    cards(coreCards(spark, p.lex, p.sem, p.ph, _.distinct()))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.PixieFunctions.{idiv, nsToUs}
 import graft.ops.{Events, Graph, Scale, Quality}
 import Q._
-import Sketches.{centCountCtes, typedEvents}
+import Sketches.{centCountCtes, cumCountCols, typedEvents}
 
 /** Event-log analytics gates: funnels, retention and cohorts, sessions
   * and paths (batch and streamed), alerting (hysteresis, burn rate,
@@ -1694,10 +1694,7 @@ object EventAnalytics extends Gates {
         .orderBy("event_type"), oracle =
       s"""WITH $centCountCtes,
         |ct AS (SELECT g, c, k,
-        |    CAST(sum(k) OVER (PARTITION BY g ORDER BY c
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum,
-        |    CAST(sum(k) OVER (PARTITION BY g) AS BIGINT) AS n
+        |    ${cumCountCols("    ")}
         |  FROM k),
         |b AS (SELECT g, max(n) AS n,
         |    min(CASE WHEN cum >= (n * 50000 + 999999) // 1000000

@@ -8,6 +8,7 @@ import Lifecycle.{L, tapeCtes}
 import NorthStar.{K, BANDS, NGRAM, sigCtes, candCtes, interCtes, pairsCte, reachCtes,
   compCte}
 import Q._
+import Sketches.cumCountCols
 import TextCuration.{canonUrlSql, rawUrlCol, repFracCtes, segFracCtes, sigBandCtes}
 
 /** Quality and governance gates: privacy (k-anonymity, l-diversity,
@@ -943,10 +944,7 @@ object Governance extends Gates {
            |  min(CASE WHEN cum >= (n * 900000 + 999999) // 1000000
            |    THEN c END) AS p90_$tag
            |FROM (SELECT g, c, k,
-           |    CAST(sum(k) OVER (PARTITION BY g ORDER BY c
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           |      AS BIGINT) AS cum,
-           |    CAST(sum(k) OVER (PARTITION BY g) AS BIGINT) AS n
+           |    ${cumCountCols("    ")}
            |  FROM (SELECT event_type AS g,
            |      CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS c,
            |      CAST(count(*) AS BIGINT) AS k
@@ -1072,17 +1070,14 @@ object Governance extends Gates {
           idiv(col("n_outliers") * 1000000L, col("n")))
         .orderBy("event_type")
     }, oracle =
-      """WITH v AS (SELECT event_type AS g,
+      s"""WITH v AS (SELECT event_type AS g,
         |    CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS c
         |  FROM events WHERE event_type IS NOT NULL
         |    AND value IS NOT NULL AND NOT isnan(value)),
         |med AS (SELECT g, min(CASE WHEN cum >=
         |      (n * 500000 + 999999) // 1000000 THEN c END) AS med
         |  FROM (SELECT g, c,
-        |      CAST(sum(k) OVER (PARTITION BY g ORDER BY c
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |        AS BIGINT) AS cum,
-        |      CAST(sum(k) OVER (PARTITION BY g) AS BIGINT) AS n
+        |      ${cumCountCols("      ")}
         |    FROM (SELECT g, c, CAST(count(*) AS BIGINT) AS k FROM v
         |          GROUP BY 1, 2))
         |  GROUP BY g),
@@ -1091,10 +1086,7 @@ object Governance extends Gates {
         |mad AS (SELECT g, min(CASE WHEN cum >=
         |      (n * 500000 + 999999) // 1000000 THEN c END) AS mad
         |  FROM (SELECT g, c,
-        |      CAST(sum(k) OVER (PARTITION BY g ORDER BY c
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |        AS BIGINT) AS cum,
-        |      CAST(sum(k) OVER (PARTITION BY g) AS BIGINT) AS n
+        |      ${cumCountCols("      ")}
         |    FROM (SELECT g, c, CAST(count(*) AS BIGINT) AS k FROM d
         |          GROUP BY 1, 2))
         |  GROUP BY g)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.ops.Dedup.h60Sql
 import graft.ops.{SemIndex, MultiDay, PhashIndex, Dedup}
+import graft.streaming.MultiStream
 import Lifecycle.{evidenceSelect, ledgerCards}
 import Q._
 
@@ -14,34 +15,25 @@ import Q._
   */
 object MediaLifecycle extends Gates {
 
-  /** The two-day SEMANTIC-index lifecycle, once per dir per JVM:
-    * bootstrap (frozen seeds + cell-partitioned snapshot index on
-    * vec_id%4 ∈ {2,3}) → day 1 (%4 == 0) decisions + admit → day 2
-    * (%4 == 1 PLUS sentinel 9500001 = verbatim embedding of the
-    * smallest day-1 ADMITTED vector, which must come back
-    * dup_sem_corpus via the APPENDED cells — the lifecycle witness).
+  /** The two-day SEMANTIC-index lifecycle, once per dir per JVM: the
+    * [[graft.streaming.SemStream]] calendar (bootstrap on the frozen
+    * seeds + the vec_id%4 ∈ {2,3} snapshot, then days 1 and 2 with the
+    * pin-derived sentinel 9500001) through the BATCH interpreter, and
+    * both days' decisions read back off the pins.
     */
   private[queries] val semLife = Fixture.rooted("graft_sem_index_") { (s, d, root) =>
-    val p = SemIndex.Paths(root)
-    val emb = tp(s, d, "embeddings").select("vec_id", "embedding")
-    SemIndex.bootstrap(s,
-      emb.where(pmod(col("vec_id"), lit(4L)).isin(2L, 3L)), p)
-    val dec1 = SemIndex.processDay(s, p, 1,
-      emb.where(pmod(col("vec_id"), lit(4L)) === 0L))
-    val sentinel = dec1.where(col("decision") === "admitted")
-      .orderBy("vec_id").limit(1).select("vec_id")
-      .join(emb, "vec_id")
-      .select(lit(9500001L).as("vec_id"), col("embedding"))
-    val dec2 = SemIndex.processDay(s, p, 2,
-      emb.where(pmod(col("vec_id"), lit(4L)) === 1L)
-        .unionByName(sentinel))
-    val all = dec1.select(lit(1).as("day"), col("vec_id"), col("cell"),
-        col("decision"))
-      .unionByName(dec2.select(lit(2).as("day"), col("vec_id"),
-        col("cell"), col("decision")))
-      .localCheckpoint(true)
-    (p, all)
+    val p = graft.streaming.SemStream.batch(
+      graft.streaming.SemStream.Life(s, d, root)).p
+    (p, semDecisions(s, p).localCheckpoint(true))
   }
+
+  /** Both semantic days' pinned decisions: (day, vec_id, cell,
+    * decision).
+    */
+  private def semDecisions(s: org.apache.spark.sql.SparkSession,
+                           p: SemIndex.Paths) =
+    graft.core.Ledger.pinned(s, p.decisionsDay, 1 to 2)(k =>
+      Seq(lit(k).as("day"), col("vec_id"), col("cell"), col("decision")))
 
   /** The STREAMED semantic lifecycle (same two days, the
     * [[graft.streaming.SemStream]] delivery engine: file source →
@@ -51,8 +43,8 @@ object MediaLifecycle extends Gates {
     */
   private val semStreamed = Fixture.rooted("graft_sem_stream_") { (s, d, root) =>
     val p = SemIndex.Paths(root)
-    val (days, stable) = graft.streaming.SemStream.runDaysStreamed(
-      s, d, p, s"$root/landing", s"$root/cp", s"$root/ledger")
+    val (days, stable) =
+      graft.streaming.SemStream.runDaysStreamed(s, d, root)
     (p, days, stable)
   }
 
@@ -87,18 +79,22 @@ object MediaLifecycle extends Gates {
       hashed(pmod(grp, lit(2L)) === 1L && m3.isin(0L, 2L)), p)
     // day 1 mixes both branches: even-group bases ADMIT (and append),
     // odd-group %3==1 members DUP against their snapshot co-members
-    val dec1 = graft.ops.PhashIndex.processDay(s, p, 1,
+    graft.ops.PhashIndex.processDay(s, p, 1,
       hashed((pmod(grp, lit(2L)) === 0L && m3 === 0L) ||
         (pmod(grp, lit(2L)) === 1L && m3 === 1L)))
-    val dec2 = graft.ops.PhashIndex.processDay(s, p, 2,
+    graft.ops.PhashIndex.processDay(s, p, 2,
       hashed(pmod(grp, lit(2L)) === 0L && m3.isin(1L, 2L)))
-    val all = dec1.select(lit(1).as("day"), col("media_id"),
-        col("decision"))
-      .unionByName(dec2.select(lit(2).as("day"), col("media_id"),
-        col("decision")))
-      .localCheckpoint(true)
-    (p, all)
+    (p, mediaDecisions(s, p))
   }
+
+  /** A two-day banded-Hamming lifecycle's pinned decisions, read back
+    * off the pins: (day, media_id, decision), checkpointed.
+    */
+  private def mediaDecisions(s: org.apache.spark.sql.SparkSession,
+                             p: PhashIndex.Paths) =
+    graft.core.Ledger.pinned(s, p.decisionsDay, 1 to 2)(k =>
+      Seq(lit(k).as("day"), col("media_id"), col("decision")))
+      .localCheckpoint(true)
 
   /** The MULTIMODAL admission day ([[graft.ops.MultiDay]]): one
     * consistent %4 split across all three modalities (snapshot
@@ -123,20 +119,14 @@ object MediaLifecycle extends Gates {
       docs.where(m4(col("doc_id")).isin(2L, 3L)),
       emb.where(m4(col("vec_id")).isin(2L, 3L)),
       hashedOf(m4(col("doc_id")).isin(2L, 3L)), p)
-    val dec1 = graft.ops.MultiDay.processDay(s, p, 1,
-      docs.where(m4(col("doc_id")) === 0L),
-      emb.where(m4(col("vec_id")) === 0L),
-      hashedOf(m4(col("doc_id")) === 0L), docs)
-    val dec2 = graft.ops.MultiDay.processDay(s, p, 2,
-      docs.where(m4(col("doc_id")) === 1L),
-      emb.where(m4(col("vec_id")) === 1L),
-      hashedOf(m4(col("doc_id")) === 1L), docs)
-    val all = dec1.select(lit(1).as("day"), col("doc_id"),
-        col("decision"))
-      .unionByName(dec2.select(lit(2).as("day"), col("doc_id"),
-        col("decision")))
-      .localCheckpoint(true)
-    (p, all)
+    for (k <- 1 to 2)
+      graft.ops.MultiDay.processDay(s, p, k,
+        docs.where(m4(col("doc_id")) === k - 1L),
+        emb.where(m4(col("vec_id")) === k - 1L),
+        hashedOf(m4(col("doc_id")) === k - 1L), docs)
+    (p, graft.core.Ledger.pinned(s, p.decisionsDay, 1 to 2)(k =>
+      Seq(lit(k).as("day"), col("doc_id"), col("decision")))
+      .localCheckpoint(true))
   }
 
   /** Cell assignment for `src(vec_id, e)` under the frozen seeds
@@ -343,12 +333,17 @@ object MediaLifecycle extends Gates {
     (p, noop, days)
   }
 
-  private val mmBatch = Fixture.rooted("graft_mm_batch_") { (s, d, root) =>
-    val p = MultiDay.Paths4(root)
-    graft.streaming.MultiStream.batch(s, d, p,
-      graft.streaming.MultiStream.DaysCal)
-    p
-  }
+  /** A four- or six-stage root with `c` run through the BATCH
+    * interpreter (the batch twin of `c`'s streamed gate).
+    */
+  private def batchRoot(prefix: String, c: MultiStream.Cal) =
+    Fixture.rooted(prefix) { (s, d, root) =>
+      val p = MultiDay.Paths4(root)
+      MultiStream.batch(s, d, p, c)
+      p
+    }
+
+  private val mmBatch = batchRoot("graft_mm_batch_", MultiStream.DaysCal)
 
   /** The standalone two-day AUDIO index lifecycle: snapshot
     * %4 ∈ {2,3}, day 1 = %4 == 0, day 2 = %4 == 1 plus sentinel
@@ -373,16 +368,11 @@ object MediaLifecycle extends Gates {
       .select(col("media_id").as("doc_id"))
       .join(docs, "doc_id")
       .select(lit(9800001L).as("doc_id"), col("text"))
-    val dec2 = PhashIndex.processDay(s, p, 2,
+    PhashIndex.processDay(s, p, 2,
       fpOf(docs.where(pmod(col("doc_id"), lit(4L)) === 1L)
         .unionByName(sentinel)),
       label = "audio")
-    val all = dec1.select(lit(1).as("day"), col("media_id"),
-        col("decision"))
-      .unionByName(dec2.select(lit(2).as("day"), col("media_id"),
-        col("decision")))
-      .localCheckpoint(true)
-    (p, all)
+    (p, mediaDecisions(s, p))
   }
 
   /** TTL over the multimodal lifecycle: expire day 1's admissions
@@ -395,10 +385,8 @@ object MediaLifecycle extends Gates {
   private val mmTtl = Fixture { (s, d) =>
     val p = mmBatch(s, d)
     val docs = tp(s, d, "documents").select("doc_id", "text")
-    val admitted = (1 to MultiDay.NDays4).map { k =>
-      s.read.parquet(p.decisionsDay(k))
-        .where(col("decision") === "admitted").select("doc_id")
-    }.reduce(_.unionByName(_))
+    val admitted = graft.core.Ledger.pinnedIds(s, p.decisionsDay,
+      1 to MultiDay.NDays4)
     val corpusDocs = docs
       .where(pmod(col("doc_id"), lit(8L)) >= 4L)
       .unionByName(docs.join(admitted, "doc_id"))
@@ -423,12 +411,7 @@ object MediaLifecycle extends Gates {
     * decisions must equal the same composed oracle (q558 reads only
     * this root's decisions).
     */
-  private val mmMaintained = Fixture.rooted("graft_mm_maint_") { (s, d, root) =>
-    val p = MultiDay.Paths4(root)
-    graft.streaming.MultiStream.batch(s, d, p,
-      graft.streaming.MultiStream.CompactCal)
-    p
-  }
+  private val mmMaintained = batchRoot("graft_mm_maint_", MultiStream.CompactCal)
 
   /** The FULL-STACK (six-stage) lifecycle: four near-dup indexes plus
     * the contamination + repetition post-gates in ONE composed day,
@@ -436,11 +419,57 @@ object MediaLifecycle extends Gates {
     * post-gate-rejected doc (its dedup columns must come back clean —
     * post-gate rejections never touch an index).
     */
-  private val mm6 = Fixture.rooted("graft_mm6_") { (s, d, root) =>
-    val p = MultiDay.Paths4(root)
-    graft.streaming.MultiStream.batch(s, d, p,
-      graft.streaming.MultiStream.Days6Cal)
-    p
+  private val mm6 = batchRoot("graft_mm6_", MultiStream.Days6Cal)
+
+  /** The admission-funnel card: per (day, stage, verdict) doc counts
+    * over the pinned decisions `dec`, each of the `stages` columns
+    * (`d_<stage>`) plus the combined verdict (`overall`).
+    */
+  private def funnel(dec: org.apache.spark.sql.DataFrame,
+                     stages: Seq[String]) = {
+    val cols = (stages.map(c => c.stripPrefix("d_") -> c) :+
+        ("overall" -> "decision"))
+      .sortBy(_._1).map { case (st, c) => s"'$st', $c" }
+    dec.selectExpr("day",
+        s"stack(${cols.size}, ${cols.mkString(", ")}) AS (stage, verdict)")
+      .groupBy("day", "stage", "verdict")
+      .agg(count(lit(1)).as("n_docs"))
+      .orderBy("day", "stage", "verdict")
+  }
+
+  /** [[funnel]]'s oracle over the three composed day frames
+    * `<fin>1..3` of `ctes`.
+    */
+  private def funnelSql(ctes: String, fin: String,
+                        stages: Seq[String]): String = {
+    def name(c: String) = c.stripPrefix("d_")
+    val days = (1 to 3).flatMap { k =>
+      val c = stages.head
+      s"SELECT $k AS day, '${name(c)}' AS stage, $c AS verdict FROM $fin$k" +:
+        (stages.tail.map(c => s"SELECT $k, '${name(c)}', $c FROM $fin$k") :+
+          s"SELECT $k, 'overall', decision FROM $fin$k")
+    }.mkString("\n  UNION ALL ")
+    s"""WITH $ctes
+       |SELECT day, stage, verdict,
+       |  CAST(count(*) AS BIGINT) AS n_docs
+       |FROM (
+       |  $days)
+       |GROUP BY 1, 2, 3
+       |ORDER BY day, stage, verdict""".stripMargin
+  }
+
+  /** The six-stage root's days-1–2 rejections under `pred`, off the
+    * pins: the (doc_id, day) frame and the rejected docs' drop texts
+    * (doc_id, text) — what the reject-evidence gates explain.
+    */
+  private def rejected(s: org.apache.spark.sql.SparkSession,
+                       p: MultiDay.Paths4, pred: org.apache.spark.sql.Column) = {
+    val rej = graft.core.Ledger.pinned(s, p.decisionsDay, 1 to 2, pred)(k =>
+      Seq(col("doc_id"), lit(k).as("day")))
+    val texts = (1 to 2).map { k =>
+      s.read.parquet(p.dropDay(k)).select("doc_id", "text")
+    }.reduce(_.unionByName(_)).join(rej.select("doc_id"), "doc_id")
+    (rej, texts)
   }
 
   /** The STREAMED six-stage lifecycle — second engine path onto
@@ -1005,23 +1034,13 @@ object MediaLifecycle extends Gates {
   /** The same calendar through the BATCH engine — second path onto
     * q569's oracle.
     */
-  private val mmCalBatch = Fixture.rooted("graft_mm_calb_") { (s, d, root) =>
-    val p = graft.ops.MultiDay.Paths4(root)
-    graft.streaming.MultiStream.batch(s, d, p,
-      graft.streaming.MultiStream.TtlCal)
-    p
-  }
+  private val mmCalBatch = batchRoot("graft_mm_calb_", MultiStream.TtlCal)
 
   /** The six-stage CALENDAR lifecycles (r12 verdict task 3): the
     * proven two-day full stack + the ledgered ttl2 slot + the
     * pin-derived witness day 3, batch and streamed engines.
     */
-  private val mm6Cal = Fixture.rooted("graft_mm6_cal_") { (s, d, root) =>
-    val p = graft.ops.MultiDay.Paths4(root)
-    graft.streaming.MultiStream.batch(s, d, p,
-      graft.streaming.MultiStream.Ttl6Cal)
-    p
-  }
+  private val mm6Cal = batchRoot("graft_mm6_cal_", MultiStream.Ttl6Cal)
 
   private val mm6CalStream = Fixture.rooted("graft_mm6_cals_") { (s, d, root) =>
     val p = graft.ops.MultiDay.Paths4(root)
@@ -1160,12 +1179,7 @@ object MediaLifecycle extends Gates {
     * day 3 against the capped indexes, then the under-cap cap3
     * ledgered no-op.
     */
-  private val capBatch = Fixture.rooted("graft_mm_capb_") { (s, d, root) =>
-    val p = MultiDay.Paths4(root)
-    graft.streaming.MultiStream.batch(s, d, p,
-      graft.streaming.MultiStream.CapCal)
-    p
-  }
+  private val capBatch = batchRoot("graft_mm_capb_", MultiStream.CapCal)
 
   /** The same calendar with the cap controls riding the stream
     * (kill/restart around the slot, replayed control no-op'd).
@@ -1331,12 +1345,7 @@ object MediaLifecycle extends Gates {
     // The STREAMED path's decisions, read back from the pinned per-day
     // files — must equal the batch path's oracle row for row.
     Gate("q533_sem_stream_decisions", (s, dir) => {
-      val p = semStreamed(s, dir)._1
-      (1 to 2).map { k =>
-        s.read.parquet(p.decisionsDay(k))
-          .select(lit(k).as("day"), col("vec_id"), col("cell"),
-            col("decision"))
-      }.reduce(_.unionByName(_)).orderBy("day", "vec_id")
+      semDecisions(s, semStreamed(s, dir)._1).orderBy("day", "vec_id")
     }, oracle =
       // same oracle as the batch path (two delivery engines, one answer)
       s"""WITH $semCtes
@@ -1535,28 +1544,9 @@ object MediaLifecycle extends Gates {
     // reads before trusting the combined verdict (model-sized; no
     // corpus scan).
     Gate("q555_mm_funnel", (s, dir) =>
-      MultiDay.allDecisions4(s, mmStream(s, dir)._1)
-        .selectExpr("day",
-          "stack(5, 'aud', d_aud, 'lex', d_lex, 'overall', decision, " +
-            "'ph', d_ph, 'sem', d_sem) AS (stage, verdict)")
-        .groupBy("day", "stage", "verdict")
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy("day", "stage", "verdict"), oracle = {
-      val days = (1 to 3).flatMap { k =>
-        Seq(s"SELECT $k AS day, 'lex' AS stage, d_lex AS verdict FROM fin$k",
-          s"SELECT $k, 'sem', d_sem FROM fin$k",
-          s"SELECT $k, 'ph', d_ph FROM fin$k",
-          s"SELECT $k, 'aud', d_aud FROM fin$k",
-          s"SELECT $k, 'overall', decision FROM fin$k")
-      }.mkString("\n  UNION ALL ")
-      s"""WITH $mmCtes
-         |SELECT day, stage, verdict,
-         |  CAST(count(*) AS BIGINT) AS n_docs
-         |FROM (
-         |  $days)
-         |GROUP BY 1, 2, 3
-         |ORDER BY day, stage, verdict""".stripMargin
-    }),
+      funnel(MultiDay.allDecisions4(s, mmStream(s, dir)._1),
+        MultiDay.Stages4),
+      oracle = funnelSql(mmCtes, "fin", MultiDay.Stages4)),
 
     Gate("q546_audio_index_decisions", (s, dir) =>
       audioLife(s, dir)._2.orderBy("day", "media_id"), oracle =
@@ -1581,35 +1571,11 @@ object MediaLifecycle extends Gates {
     // verdict) counts straight off the pinned decisions — the q555
     // disclosure at all six stages plus the combined verdict.
     Gate("q580_mm6_cal_funnel", (s, dir) =>
-      graft.ops.MultiDay.allDecisions6Upto(s, mm6Cal(s, dir), 3)
-        .selectExpr("day",
-          "stack(7, 'aud', d_aud, 'contam', d_contam, 'lex', d_lex, " +
-            "'overall', decision, 'ph', d_ph, 'qual', d_qual, " +
-            "'sem', d_sem) AS (stage, verdict)")
-        .groupBy("day", "stage", "verdict")
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy("day", "stage", "verdict"), oracle =
-      // The six-stage calendar funnel: the same stage stack re-derived
-      // from the composed fin61/fin62/fin63 frames.
-      {
-        val days = (1 to 3).flatMap { k =>
-          Seq(s"SELECT $k AS day, 'lex' AS stage, d_lex AS verdict " +
-              s"FROM fin6$k",
-            s"SELECT $k, 'sem', d_sem FROM fin6$k",
-            s"SELECT $k, 'ph', d_ph FROM fin6$k",
-            s"SELECT $k, 'aud', d_aud FROM fin6$k",
-            s"SELECT $k, 'contam', d_contam FROM fin6$k",
-            s"SELECT $k, 'qual', d_qual FROM fin6$k",
-            s"SELECT $k, 'overall', decision FROM fin6$k")
-        }.mkString("\n  UNION ALL ")
-        s"""WITH $mm6CalCtes
-           |SELECT day, stage, verdict,
-           |  CAST(count(*) AS BIGINT) AS n_docs
-           |FROM (
-           |  $days)
-           |GROUP BY 1, 2, 3
-           |ORDER BY day, stage, verdict""".stripMargin
-      }),
+      funnel(graft.ops.MultiDay.allDecisions6Upto(s, mm6Cal(s, dir), 3),
+        MultiDay.Stages6),
+      // the same stage stack re-derived from the composed
+      // fin61/fin62/fin63 frames
+      oracle = funnelSql(mm6CalCtes, "fin6", MultiDay.Stages6)),
 
     // The six-stage calendar's pinned verdicts: the q559 two days
     // bit-identical, then the ttl2 slot, then the witness day 3 — the
@@ -1863,14 +1829,8 @@ object MediaLifecycle extends Gates {
     // the day-2 clone sentinel reads back its day-1 source at 1e6.
     Gate("q594_mm6_lex_reject_evidence", (s, dir) => {
       val p = mm6(s, dir)
-      val rej = (1 to 2).map { k =>
-        s.read.parquet(p.decisionsDay(k))
-          .where(col("d_lex").isin("dup_exact_corpus", "near_dup_corpus"))
-          .select(col("doc_id"), lit(k).as("day"))
-      }.reduce(_.unionByName(_))
-      val rejTexts = (1 to 2).map { k =>
-        s.read.parquet(p.dropDay(k)).select("doc_id", "text")
-      }.reduce(_.unionByName(_)).join(rej.select("doc_id"), "doc_id")
+      val (rej, rejTexts) = rejected(s, p,
+        col("d_lex").isin("dup_exact_corpus", "near_dup_corpus"))
       val corpusTexts = MultiDay.indexedDocs(s, p,
         t(s, dir, "documents").select("doc_id", "text"))
       Dedup.rejectEvidence(s, p.lex, corpusTexts, rejTexts,
@@ -1913,15 +1873,8 @@ object MediaLifecycle extends Gates {
     // each d_contam rejection serves the gate's own integers and the
     // most-overlapping BENCHMARK doc as its named partner.
     Gate("q602_mm6_contam_evidence", (s, dir) => {
-      val p = mm6(s, dir)
-      val rej = (1 to 2).map { k =>
-        s.read.parquet(p.decisionsDay(k))
-          .where(col("d_contam") === "contaminated")
-          .select(col("doc_id"), lit(k).as("day"))
-      }.reduce(_.unionByName(_))
-      val rejTexts = (1 to 2).map { k =>
-        s.read.parquet(p.dropDay(k)).select("doc_id", "text")
-      }.reduce(_.unionByName(_)).join(rej.select("doc_id"), "doc_id")
+      val (rej, rejTexts) = rejected(s, mm6(s, dir),
+        col("d_contam") === "contaminated")
       graft.ops.Corpus.contaminationEvidence(rejTexts,
           MultiDay.benchOf(s, dir), "text", "doc_id")
         .join(rej, "doc_id")
@@ -1978,15 +1931,8 @@ object MediaLifecycle extends Gates {
     // RepTenths gate's integers plus the culprit — the single
     // most-repeated 2-gram and its count.
     Gate("q603_mm6_quality_evidence", (s, dir) => {
-      val p = mm6(s, dir)
-      val rej = (1 to 2).map { k =>
-        s.read.parquet(p.decisionsDay(k))
-          .where(col("d_qual") === "low_quality")
-          .select(col("doc_id"), lit(k).as("day"))
-      }.reduce(_.unionByName(_))
-      val rejTexts = (1 to 2).map { k =>
-        s.read.parquet(p.dropDay(k)).select("doc_id", "text")
-      }.reduce(_.unionByName(_)).join(rej.select("doc_id"), "doc_id")
+      val (rej, rejTexts) = rejected(s, mm6(s, dir),
+        col("d_qual") === "low_quality")
       graft.ops.Corpus.repetitionEvidence(rejTexts, "text", "doc_id")
         .join(rej, "doc_id")
         .select("day", "doc_id", "n_2grams", "n_distinct_2grams",

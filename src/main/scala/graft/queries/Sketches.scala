@@ -49,6 +49,16 @@ object Sketches extends Gates {
       |k AS (SELECT g, c, CAST(count(*) AS BIGINT) AS k FROM v
       |  GROUP BY 1, 2)""".stripMargin
 
+  /** The running (`cum`) and total (`n`) counts over `k(g, c, k)`,
+    * ordered by `c` within each group `g` — the input every exact
+    * quantile oracle thresholds. Lines after the first carry `ind`.
+    */
+  private[queries] def cumCountCols(ind: String): String =
+    s"""CAST(sum(k) OVER (PARTITION BY g ORDER BY c
+       |$ind  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+       |$ind  AS BIGINT) AS cum,
+       |${ind}CAST(sum(k) OVER (PARTITION BY g) AS BIGINT) AS n""".stripMargin
+
   /** The cents histogram's cumulative counts and its p50/p90/p99. */
   private val centQuantileCols: String =
     """ct AS (SELECT g, c, k,
@@ -286,10 +296,7 @@ object Sketches extends Gates {
         .orderBy("event_type"), oracle =
       s"""WITH $centCountCtes,
         |ct AS (SELECT g, c, k,
-        |    CAST(sum(k) OVER (PARTITION BY g ORDER BY c
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS BIGINT) AS cum,
-        |    CAST(sum(k) OVER (PARTITION BY g) AS BIGINT) AS n
+        |    ${cumCountCols("    ")}
         |  FROM k)
         |SELECT g AS event_type, max(n) AS n,
         |  min(CASE WHEN cum >= (n * 250000 + 999999) // 1000000

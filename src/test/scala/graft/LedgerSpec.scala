@@ -3,9 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Ledger
 
-/** The exactly-once protocol's two primitives: [[Ledger.once]] (check
-  * first, commit last) and [[Ledger.pin]] (reuse a completed pin,
-  * recompute a torn one).
+/** The exactly-once protocol's primitives: [[Ledger.once]] (check
+  * first, commit last), [[Ledger.pin]] (reuse a completed pin,
+  * recompute a torn one) and the size-cap slot [[Ledger.capSlot]]
+  * (horizon pinned before the expiry body, nothing evaluated on a
+  * replay).
   */
 class LedgerSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -52,6 +54,56 @@ class LedgerSpec extends AnyFunSuite {
       val redone = Ledger.pin(spark, path) { computed = true; Seq(9L).toDF("id") }
       assert(computed && ids(redone) == Seq(9L))
       assert(Ledger.done(spark, path))
+    }
+  }
+
+  // Masses per admission day (0 = snapshot): 40 + 30 + 20 + 10 = 100.
+  private val masses = Map(0 -> 40L, 1 -> 30L, 2 -> 20L, 3 -> 10L)
+
+  test("capSlot: an under-cap call commits horizon 0 and runs no expiry") {
+    withRoot("graft_ledger_cap_under_") { root =>
+      val (ledger, horizon) = (s"$root/ledger", s"$root/horizon.parquet")
+      var expired = false
+      assert(Ledger.capSlot(spark, ledger, "cap1", horizon, 100L)(masses) {
+        _ => expired = true } == 0)
+      assert(!expired, "an under-cap slot must not call the expiry body")
+      assert(Ledger.horizon(spark, horizon) == 0)
+      assert(Ledger.ids(spark, ledger) == Seq("cap1"))
+    }
+  }
+
+  test("capSlot: an over-cap call pins the horizon before the expiry body") {
+    withRoot("graft_ledger_cap_over_") { root =>
+      val (ledger, horizon) = (s"$root/ledger", s"$root/horizon.parquet")
+      // tail(2) = 30 fits a 35 cap, tail(1) = 60 does not
+      var seen = -1
+      assert(Ledger.capSlot(spark, ledger, "cap1", horizon, 35L)(masses) {
+        keepFrom =>
+          assert(!Ledger.seen(spark, ledger, "cap1"),
+            "the ledger row commits after the expiry body")
+          seen = Ledger.horizon(spark, horizon)
+          assert(keepFrom == 2)
+      } == 2)
+      assert(seen == 2, "the expiry body must read the pinned horizon")
+      assert(Ledger.ids(spark, ledger) == Seq("cap1"))
+    }
+  }
+
+  test("capSlot: a replay returns 0 without evaluating the masses") {
+    withRoot("graft_ledger_cap_replay_") { root =>
+      val (ledger, horizon) = (s"$root/ledger", s"$root/horizon.parquet")
+      var massCalls = 0
+      def counted: Map[Int, Long] = { massCalls += 1; masses }
+      var expiries = 0
+      assert(Ledger.capSlot(spark, ledger, "cap1", horizon, 35L)(counted) {
+        _ => expiries += 1 } == 2)
+      assert(massCalls == 1 && expiries == 1)
+      assert(Ledger.capSlot(spark, ledger, "cap1", horizon, 35L)(counted) {
+        _ => expiries += 1 } == 0)
+      assert(massCalls == 1, "a replay must not evaluate the masses")
+      assert(expiries == 1, "a replay must not call the expiry body")
+      assert(Ledger.horizon(spark, horizon) == 2)
+      assert(Ledger.ids(spark, ledger) == Seq("cap1"))
     }
   }
 }

@@ -12,11 +12,16 @@
 # literal in their diff hunks, and a gate file new since <ref> (added or
 # untracked) every Gate("qNNN_ record it holds; a changed ops/functions/...
 # file, or a queries/ file with no Gate records (Q, PxlGate, Fixture and
-# other fragment holders), contributes every query whose builder body
-# references the object (awk tracks the current Gate("qNNN_name" record
-# while scanning each queries file; a file that imports the object's
-# members wholesale maps all its queries). Non-query source changes with
-# no mapped query fall back to a fixed smoke subset.
+# other fragment holders), first grows into the set of src/main objects
+# that reference it, transitively (a file joins when it names an object
+# of the set as `Obj.`, repeated until no file joins — so a change to
+# streaming/Calendar reaches the lifecycle gates through CurationStream
+# and MultiStream), then contributes every query whose builder body
+# references an object of that set (awk tracks the current
+# Gate("qNNN_name" record while scanning each queries file; a reference
+# in a file's preamble, or an import of the object's members wholesale,
+# maps all its queries). Non-query source changes with no mapped query
+# fall back to a fixed smoke subset.
 set -e
 cd "$(dirname "$0")/.." || exit 1
 REF="${1:-HEAD}"
@@ -41,6 +46,25 @@ echo "[precommit] gate-count claim OK ($ACTUAL queries through q$MAXQ)" >&2
 
 echo "[precommit] compiling (main + test)..." >&2
 sbt -error -batch compile Test/compile
+
+# The object named $1 plus every src/main object that references it,
+# directly or through another object of the set.
+referrers() {
+  SET=" $1 "; FRONT="$1"
+  while [ -n "$FRONT" ]; do
+    PAT=$(printf '%s\n' $FRONT | paste -sd '|' -)
+    FRONT=""
+    for g in $(grep -rlE "(^|[^A-Za-z0-9_])($PAT)[.]" src/main/scala \
+        --include='*.scala'); do
+      o=$(basename "$g" .scala)
+      case "$SET" in
+        *" $o "*) ;;
+        *) SET="$SET$o "; FRONT="$FRONT $o" ;;
+      esac
+    done
+  done
+  echo $SET
+}
 
 CHANGED=$(git diff --name-only "$REF" -- 'src/main/scala/*.scala'; \
           git diff --cached --name-only -- 'src/main/scala/*.scala'; \
@@ -76,13 +100,13 @@ else
         NUMS="$NUMS $(git diff "$REF" -- "$f" | grep -oE '"q[0-9]+_' \
           | grep -oE '[0-9]+' || true)" ;;
       *)
-        # object name -> queries whose builder body references it.
-        # Scanned PER FILE (cur resets) so a trailing query of one file
-        # is never credited with the next file's references; a
-        # reference in a file's PREAMBLE (shared constants like
-        # Dedup.shinglesSql feeding many oracles) conservatively maps
-        # to EVERY query in that file.
-        OBJ=$(basename "$f" .scala)
+        # object name -> its transitive referrers -> queries whose
+        # builder body references one of them. Scanned PER FILE (cur
+        # resets) so a trailing query of one file is never credited
+        # with the next file's references; a reference in a file's
+        # PREAMBLE (shared constants like Dedup.shinglesSql feeding many
+        # oracles) conservatively maps to EVERY query in that file.
+        for OBJ in $(referrers "$(basename "$f" .scala)"); do
         for qf in src/main/scala/graft/queries/*.scala; do
           NUMS="$NUMS $(awk -v obj="$OBJ" '
             match($0, /Gate\("q[0-9]+_[a-z0-9_]*"/) {
@@ -92,6 +116,7 @@ else
             index($0, obj ".") { if (cur != "") print cur; else pre = 1 }
             END { if (pre) for (n in all) print n }
           ' "$qf" | sort -u || true)"
+        done
         done ;;
     esac
   done
