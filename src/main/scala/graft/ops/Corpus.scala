@@ -70,11 +70,14 @@ object Corpus {
         .as("n_grams"))
     val hits = corpusGrams.join(evalGrams, "g")
       .groupBy(col(idCol)).agg(count(lit(1)).as("n_contaminated"))
-    totals.join(hits, Seq(idCol), "left")
-      .na.fill(0L, Seq("n_contaminated"))
+    contaminationRatio(totals.join(hits, Seq(idCol), "left"))
+  }
+
+  /** Zero-filled hit count and its ratio to the doc's gram count. */
+  private def contaminationRatio(df: DataFrame): DataFrame =
+    df.na.fill(0L, Seq("n_contaminated"))
       .withColumn("contamination_ratio",
         round(col("n_contaminated").cast("double") / col("n_grams"), 6))
-  }
 
   /** Multi-suite contamination matrix — [[contamination]] generalized
     * to N eval benchmarks in ONE pass: the eval side carries a
@@ -103,11 +106,8 @@ object Corpus {
     val hits = corpusGrams.join(evalGrams, "g")
       .groupBy(col(idCol), col("suite"))
       .agg(count(lit(1)).as("n_contaminated"))
-    totals.crossJoin(broadcast(suites))
-      .join(hits, Seq(idCol, "suite"), "left")
-      .na.fill(0L, Seq("n_contaminated"))
-      .withColumn("contamination_ratio",
-        round(col("n_contaminated").cast("double") / col("n_grams"), 6))
+    contaminationRatio(totals.crossJoin(broadcast(suites))
+      .join(hits, Seq(idCol, "suite"), "left"))
   }
 
   /** [[contamination]] with Spark's native bloom runtime-filter driven
@@ -267,17 +267,12 @@ object Corpus {
                    bucketWidth: Int = 16, batchSize: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val nTok = size(split(col(textCol), " ")).cast("long")
-    val banded = df.select(col(idCol).cast("long").as("id"), nTok.as("n_tok"))
-      .withColumn("__band", idiv(col("id"), 1024L))
-    val wIn = Window.partitionBy("__band").orderBy("id")
-    val wOff = Window.orderBy("__band")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offsets = banded.groupBy("__band").agg(count(lit(1)).as("__c"))
-      .withColumn("__off", sum(col("__c")).over(wOff) - col("__c"))
-      .drop("__c")
-    val naive = banded.join(broadcast(offsets), "__band")
-      .withColumn("batch",
-        idiv(col("__off") + row_number().over(wIn) - 1, batchSize.toLong))
+    val (ranked, r) = bandedRank(
+      df.select(col(idCol).cast("long").as("id"), nTok.as("n_tok"))
+        .withColumn("__band", idiv(col("id"), 1024L)),
+      col("id"))
+    val naive = ranked
+      .withColumn("batch", idiv(r - 1, batchSize.toLong))
       .withColumn("pad",
         max(col("n_tok")).over(Window.partitionBy("batch")) - col("n_tok"))
     val bucketed = lengthBucketBatches(df, idCol, textCol, bucketWidth, batchSize)
@@ -830,6 +825,30 @@ object Corpus {
       .withColumn("contaminated", col("max_cos") >= minCos)
   }
 
+  /** The banded two-level global rank: `banded` carries a `__band`
+    * column whose order agrees with `order`; the rank is the in-band
+    * row_number over `order` plus the band's offset `__off` (the rows
+    * of all lower bands), which equals a global row_number over
+    * (`__band`, `order`). Returns `banded` joined with the broadcast
+    * per-band offsets (`__off`, and `__n`, the total row count) and
+    * the rank column. The window work runs per band; only the
+    * O(#bands) offsets frame takes a global window.
+    */
+  private[graft] def bandedRank(banded: DataFrame,
+                                order: Column*): (DataFrame, Column) = {
+    val wIn = Window.partitionBy("__band").orderBy(order: _*)
+    val wOff = Window.orderBy("__band")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val offsets = banded.groupBy("__band").agg(count(lit(1)).as("__c"))
+      .withColumn("__off", sum(col("__c")).over(wOff) - col("__c"))
+      .withColumn("__n", sum(col("__c")).over(
+        Window.orderBy("__band").rowsBetween(
+          Window.unboundedPreceding, Window.unboundedFollowing)))
+      .drop("__c")
+    (banded.join(broadcast(offsets), Seq("__band")),
+      col("__off") + row_number().over(wIn))
+  }
+
   /** CCNet's head/middle/tail split (Wenzek et al. 2020): rank every
     * document by target-LM fluency ([[lmScore]]) and cut the corpus
     * into perplexity terciles — `head` trains first, `tail` is usually
@@ -850,24 +869,13 @@ object Corpus {
     val scored = lmScore(raw, target, textCol, idCol, buckets)
     // band: higher fluency -> lower band id, so rank order follows bands
     val band = (-floor(col("avg_logp") * 100.0)).cast("long")
-    val wIn = Window.partitionBy("__band")
-      .orderBy(col("avg_logp").desc, col(idCol))
-    val wOff = Window.orderBy("__band")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val banded = scored.withColumn("__band", band)
-    val offsets = banded.groupBy("__band").agg(count(lit(1)).as("__c"))
-      .withColumn("__off", sum(col("__c")).over(wOff) - col("__c"))
-      .withColumn("__n", sum(col("__c")).over(
-        Window.orderBy("__band").rowsBetween(
-          Window.unboundedPreceding, Window.unboundedFollowing)))
-      .drop("__c")
+    val (ranked, r) = bandedRank(scored.withColumn("__band", band),
+      col("avg_logp").desc, col(idCol))
     // ntile(3): first (n % 3) buckets take one extra row
-    val r = col("__off") + row_number().over(wIn)
     val (q3, m3) = (idiv(col("__n"), lit(3L)), pmod(col("__n"), lit(3L)))
     val tile = when(r <= (q3 + 1) * m3, idiv(r - 1, q3 + 1) + 1)
       .otherwise(m3 + idiv(r - 1 - (q3 + 1) * m3, q3) + 1)
-    banded.join(broadcast(offsets), Seq("__band"))
-      .select(col(idCol), col("avg_logp"), r.as("rank"),
+    ranked.select(col(idCol), col("avg_logp"), r.as("rank"),
         element_at(typedLit(Seq("head", "middle", "tail")),
           tile.cast("int")).as("tercile"))
   }
@@ -1066,26 +1074,15 @@ object Corpus {
   def curriculumShards(df: DataFrame, idCol: String, scoreCol: String,
                        nShards: Int, bandWidth: Double): DataFrame = {
     val band = floor(col(scoreCol) / lit(bandWidth)).cast("long")
-    val wIn = Window.partitionBy("__band")
-      .orderBy(col(scoreCol), col(idCol))
-    val wOff = Window.orderBy("__band")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val banded = df.select(col(idCol), col(scoreCol))
-      .withColumn("__band", band)
-    val offsets = banded.groupBy("__band").agg(count(lit(1)).as("__c"))
-      .withColumn("__off", sum(col("__c")).over(wOff) - col("__c"))
-      .withColumn("__n", sum(col("__c")).over(
-        Window.orderBy("__band").rowsBetween(
-          Window.unboundedPreceding, Window.unboundedFollowing)))
-      .drop("__c")
-    val r = col("__off") + row_number().over(wIn)
+    val (ranked, r) = bandedRank(
+      df.select(col(idCol), col(scoreCol)).withColumn("__band", band),
+      col(scoreCol), col(idCol))
     val shard = idiv((r - 1) * nShards, col("__n"))
     // shard s starts at global rank ceil(s*n/S) + 1
     val pos = (r - 1) -
       idiv(shard * col("__n") + (nShards - 1), lit(nShards.toLong))
-    banded.join(broadcast(offsets), Seq("__band"))
-      .select(col(idCol), col(scoreCol), r.as("rank"),
-        shard.cast("int").as("shard"), pos.as("pos"))
+    ranked.select(col(idCol), col(scoreCol), r.as("rank"),
+      shard.cast("int").as("shard"), pos.as("pos"))
   }
 
   /** Percentile rank of an integer score within its group — the

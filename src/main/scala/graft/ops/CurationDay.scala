@@ -38,7 +38,26 @@ object CurationDay {
   /** Event-time day boundary: 2024-01-28T00:00:00Z in epoch ns. */
   val CutNs = 1706400000000000000L
 
-  case class Artifacts(root: String) {
+  /** The calendar roots every ledgered lifecycle keeps under `root`:
+    * its day ledger, landing directory, stream checkpoint and pinned
+    * cap horizons.
+    */
+  trait CalendarRoots {
+    def root: String
+    def ledger: String = s"$root/day_ledger"
+    def landing: String = s"$root/landing"
+    def streamCp: String = s"$root/stream_cp"
+    /** The pinned horizon of a size-capped retention day — written by
+      * [[CurationNDay.capDayPinned]] BEFORE any mutation (the decision-pin
+      * rule applied to retention), so a replayed calendar slot knows
+      * whether the committed cap expired anything (rebuild the tape)
+      * or was an under-cap no-op (touch nothing).
+      */
+    def capHorizon(dayId: String): String =
+      s"$root/cap_horizon_$dayId.parquet"
+  }
+
+  case class Artifacts(root: String) extends CalendarRoots {
     def index: String = s"$root/dedup_index"
     def manifest0: String = s"$root/manifest0.parquet"
     def manifest1: String = s"$root/manifest1.parquet"
@@ -63,17 +82,6 @@ object CurationDay {
     def decisionsDay(k: Int): String = s"$root/decisions_day$k.parquet"
     def dropDay(k: Int): String = s"$root/drop_day$k.parquet"
     def eventsDay(k: Int): String = s"$root/events_day$k.parquet"
-    def ledger: String = s"$root/day_ledger"
-    def landing: String = s"$root/landing"
-    def streamCp: String = s"$root/stream_cp"
-    /** The pinned horizon of a size-capped retention day — written by
-      * [[CurationNDay.capDayPinned]] BEFORE any mutation (the decision-pin
-      * rule applied to retention), so a replayed calendar slot knows
-      * whether the committed cap expired anything (rebuild the tape)
-      * or was an under-cap no-op (touch nothing).
-      */
-    def capHorizon(dayId: String): String =
-      s"$root/cap_horizon_$dayId.parquet"
     /** The pipeline's PRODUCT: the curated corpus, materialized
       * shard-partitioned (what a trainer's loader actually reads;
       * [[graft.core.Layout.writeShardPartitioned]] layout). Bootstrap

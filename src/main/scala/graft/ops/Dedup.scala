@@ -602,24 +602,42 @@ object Dedup {
                        textCol: String, idCol: String,
                        n: Int = 3, k: Int = 16, bands: Int = 4,
                        threshold: Double = 0.8): DataFrame = {
-    val hash = md5(col(textCol).cast("binary"))
-    val b = batch.select(col(idCol), col(textCol), hash.as("content_hash"))
+    val corpusHash = corpus.select(contentHash(textCol).as("content_hash"))
+      .distinct().withColumn("in_corpus", lit(true))
+    val bandC =
+      lshBands(minhashSignatures(corpus, textCol, idCol, n, k),
+        idCol, bands, k / bands).toDF("corpus_id", "band", "band_hash")
+    deltaDecisions(corpus, batch, corpusHash, bandC, textCol, idCol, n, k,
+      bands, threshold)._1
+  }
+
+  private def contentHash(textCol: String): Column =
+    md5(col(textCol).cast("binary"))
+
+  /** The delta-vs-snapshot decision core of [[incrementalDedup]] and
+    * [[incrementalDedupIndexed]], which differ only in where the corpus
+    * hash set `corpusHash` (content_hash, in_corpus) and the corpus band
+    * stream `bandC` (corpus_id, band, band_hash) come from; `corpus`
+    * serves the candidate verify's text fetch. Returns the decisions
+    * and the broadcast batch bands.
+    */
+  private def deltaDecisions(corpus: DataFrame, batch: DataFrame,
+                             corpusHash: DataFrame, bandC: DataFrame,
+                             textCol: String, idCol: String, n: Int,
+                             k: Int, bands: Int,
+                             threshold: Double): (DataFrame, DataFrame) = {
+    val b = batch.select(col(idCol), col(textCol),
+      contentHash(textCol).as("content_hash"))
     val firstPerHash = b.groupBy("content_hash")
       .agg(min(col(idCol)).as("first_id"))
-    val corpusHash = corpus.select(hash.as("content_hash")).distinct()
-      .withColumn("in_corpus", lit(true))
     val flagged = b.join(firstPerHash, "content_hash")
       .join(corpusHash, Seq("content_hash"), "left")
     val survivors = flagged
       .where(col("in_corpus").isNull && col(idCol) === col("first_id"))
       .select(col(idCol), col(textCol))
-    val rows = k / bands
     val bandB = broadcast(
       lshBands(minhashSignatures(survivors, textCol, idCol, n, k),
-        idCol, bands, rows).toDF("batch_id", "band", "band_hash"))
-    val bandC =
-      lshBands(minhashSignatures(corpus, textCol, idCol, n, k),
-        idCol, bands, rows).toDF("corpus_id", "band", "band_hash")
+        idCol, bands, k / bands).toDF("batch_id", "band", "band_hash"))
     val cand = bandC.join(bandB, Seq("band", "band_hash"))
       .select("batch_id", "corpus_id").distinct()
     val gB = survivors.select(col(idCol).as("batch_id"),
@@ -638,12 +656,12 @@ object Dedup {
         (col("nb") + col("nc") - col("i")) >= threshold)
       .select(col("batch_id").as(idCol)).distinct()
       .withColumn("near_corpus", lit(true))
-    flagged.join(near, Seq(idCol), "left")
+    (flagged.join(near, Seq(idCol), "left")
       .select(col(idCol),
         when(col("in_corpus").isNotNull, lit("dup_exact_corpus"))
           .when(col(idCol) =!= col("first_id"), lit("dup_exact_batch"))
           .when(col("near_corpus").isNotNull, lit("near_dup_corpus"))
-          .otherwise(lit("admitted")).as("decision"))
+          .otherwise(lit("admitted")).as("decision")), bandB)
   }
 
   /** Persist a corpus snapshot's dedup index: the content-hash set and
@@ -657,7 +675,7 @@ object Dedup {
   def writeDedupIndex(corpus: DataFrame, textCol: String, idCol: String,
                       path: String, n: Int = 3, k: Int = 16,
                       bands: Int = 4): Unit = {
-    corpus.select(md5(col(textCol).cast("binary")).as("content_hash"))
+    corpus.select(contentHash(textCol).as("content_hash"))
       .distinct()
       .write.mode("overwrite").parquet(s"$path/hashes.parquet")
     lshBands(minhashSignatures(corpus, textCol, idCol, n, k), idCol,
@@ -952,42 +970,8 @@ object Dedup {
         bandC0.withColumn("__rk", row_number().over(w))
           .where(col("__rk") <= bucketCap).drop("__rk")
       }
-    val hash = md5(col(textCol).cast("binary"))
-    val b = batch.select(col(idCol), col(textCol), hash.as("content_hash"))
-    val firstPerHash = b.groupBy("content_hash")
-      .agg(min(col(idCol)).as("first_id"))
-    val flagged = b.join(firstPerHash, "content_hash")
-      .join(corpusHash, Seq("content_hash"), "left")
-    val survivors = flagged
-      .where(col("in_corpus").isNull && col(idCol) === col("first_id"))
-      .select(col(idCol), col(textCol))
-    val bandB = broadcast(
-      lshBands(minhashSignatures(survivors, textCol, idCol, n, k),
-        idCol, bands, k / bands).toDF("batch_id", "band", "band_hash"))
-    val cand = bandC.join(bandB, Seq("band", "band_hash"))
-      .select("batch_id", "corpus_id").distinct()
-    val gB = survivors.select(col(idCol).as("batch_id"),
-      explode(shingles(col(textCol), n)).as("g")).distinct()
-    val gC = corpus
-      .join(cand.select(col("corpus_id").as(idCol)).distinct(), Seq(idCol))
-      .select(col(idCol).as("corpus_id"),
-        explode(shingles(col(textCol), n)).as("g")).distinct()
-    val szB = gB.groupBy("batch_id").agg(count(lit(1)).as("nb"))
-    val szC = gC.groupBy("corpus_id").agg(count(lit(1)).as("nc"))
-    val near = cand
-      .join(gB, "batch_id").join(gC, Seq("corpus_id", "g"))
-      .groupBy("batch_id", "corpus_id").agg(count(lit(1)).as("i"))
-      .join(szB, "batch_id").join(szC, "corpus_id")
-      .where(col("i").cast("double") /
-        (col("nb") + col("nc") - col("i")) >= threshold)
-      .select(col("batch_id").as(idCol)).distinct()
-      .withColumn("near_corpus", lit(true))
-    val decisions = flagged.join(near, Seq(idCol), "left")
-      .select(col(idCol),
-        when(col("in_corpus").isNotNull, lit("dup_exact_corpus"))
-          .when(col(idCol) =!= col("first_id"), lit("dup_exact_batch"))
-          .when(col("near_corpus").isNotNull, lit("near_dup_corpus"))
-          .otherwise(lit("admitted")).as("decision"))
+    val (decisions, bandB) = deltaDecisions(corpus, batch, corpusHash,
+      bandC, textCol, idCol, n, k, bands, threshold)
     if (bucketCap <= 0) decisions
     else {
       // disclosure column: which batch docs looked up a bucket larger
@@ -1025,19 +1009,29 @@ object Dedup {
   def softDedupWeights(df: DataFrame, textCol: String, idCol: String,
                        n: Int = 3, k: Int = 16, bands: Int = 4,
                        threshold: Double = 0.8): DataFrame = {
-    val pairs = ngramJaccard(df, textCol, idCol, n, k, bands, threshold)
-      .select("doc_a", "doc_b")
-    val comp = connectedComponents(pairs, "doc_a", "doc_b")
-      .withColumnRenamed("doc_id", idCol)
-    val withComp = df.select(col(idCol))
-      .join(comp, Seq(idCol), "left")
-      .withColumn("component", coalesce(col("component"), col(idCol)))
+    val withComp = dupComponents(df, textCol, idCol, n, k, bands, threshold)
     val sizes = withComp.groupBy("component")
       .agg(count(lit(1)).as("cluster_size"))
     withComp.join(sizes, "component")
       .select(col(idCol), col("component"), col("cluster_size"),
         call_function("div", lit(1000000L), col("cluster_size"))
           .as("weight_micro"))
+  }
+
+  /** (idCol, component): each doc's near-duplicate cluster
+    * ([[ngramJaccard]] pairs → [[connectedComponents]]); a doc in no
+    * pair is its own component.
+    */
+  private def dupComponents(df: DataFrame, textCol: String, idCol: String,
+                            n: Int, k: Int, bands: Int,
+                            threshold: Double): DataFrame = {
+    val pairs = ngramJaccard(df, textCol, idCol, n, k, bands, threshold)
+      .select("doc_a", "doc_b")
+    val comp = connectedComponents(pairs, "doc_a", "doc_b")
+      .withColumnRenamed("doc_id", idCol)
+    df.select(col(idCol))
+      .join(comp, Seq(idCol), "left")
+      .withColumn("component", coalesce(col("component"), col(idCol)))
   }
 
   /** Leakage-safe train/val/test split: the split key is the
@@ -1057,14 +1051,8 @@ object Dedup {
                        valPct: Int = 10, testPct: Int = 10,
                        n: Int = 3, k: Int = 16, bands: Int = 4,
                        threshold: Double = 0.8): DataFrame = {
-    val pairs = ngramJaccard(df, textCol, idCol, n, k, bands, threshold)
-      .select("doc_a", "doc_b")
-    val comp = connectedComponents(pairs, "doc_a", "doc_b")
-      .withColumnRenamed("doc_id", idCol)
     val h = pmod(h60(col("component").cast("string")), lit(100L))
-    df.select(col(idCol))
-      .join(comp, Seq(idCol), "left")
-      .withColumn("component", coalesce(col("component"), col(idCol)))
+    dupComponents(df, textCol, idCol, n, k, bands, threshold)
       .withColumn("split",
         when(h < testPct, lit("test"))
           .when(h < testPct + valPct, lit("val"))

@@ -246,6 +246,14 @@ object Events {
         idiv(col("ma_sum"), lit(window.toLong)).as("ma_avg"))
   }
 
+  /** The distinct (user `u`, epoch week `wk`) pairs of an event frame. */
+  private def userWeeks(df: DataFrame, userCol: String,
+                        tsCol: String): DataFrame =
+    df.select(col(userCol).as("u"),
+        idiv(graft.functions.PixieFunctions.nsToUs(col(tsCol)),
+          lit(604800L * 1000000L)).as("wk"))
+      .distinct()
+
   /** Growth accounting over weekly activity: every active (user, week)
     * is exactly one of NEW (first-ever week), RETAINED (also active
     * the previous week), or RESURRECTED (active before, but not last
@@ -261,10 +269,7 @@ object Events {
   def growthAccounting(df: DataFrame, userCol: String,
                        tsCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val uw = df.select(col(userCol).as("u"),
-        idiv(graft.functions.PixieFunctions.nsToUs(col(tsCol)),
-          lit(604800L * 1000000L)).as("wk"))
-      .distinct()
+    val uw = userWeeks(df, userCol, tsCol)
     val w = Window.partitionBy("u").orderBy("wk")
     val lagged = uw
       .withColumn("__first", min(col("wk")).over(
@@ -700,10 +705,7 @@ object Events {
     * date_trunc) keeps the bucketing engine-independent.
     */
   def retention(df: DataFrame, userCol: String, tsCol: String): DataFrame = {
-    val uw = df.select(col(userCol).as("u"),
-        idiv(graft.functions.PixieFunctions.nsToUs(col(tsCol)),
-          lit(604800L * 1000000L)).as("wk"))
-      .distinct()
+    val uw = userWeeks(df, userCol, tsCol)
     val cohort = uw.groupBy("u").agg(min(col("wk")).as("cw"))
     val cells = uw.join(cohort, "u")
       .groupBy(col("cw").as("cohort_week"),

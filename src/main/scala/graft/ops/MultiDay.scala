@@ -25,10 +25,15 @@ import graft.core.{Ledger, Tables}
   */
 object MultiDay {
 
-  case class Paths(root: String) {
+  /** The lexical, semantic and perceptual index roots under `root`. */
+  trait IndexRoots {
+    def root: String
     def lex: String = s"$root/lex_index"
     def sem: SemIndex.Paths = SemIndex.Paths(s"$root/sem")
     def ph: PhashIndex.Paths = PhashIndex.Paths(s"$root/ph")
+  }
+
+  case class Paths(root: String) extends IndexRoots {
     def decisionsDay(k: Int): String = s"$root/multi_decisions_day$k.parquet"
   }
 
@@ -103,19 +108,12 @@ object MultiDay {
     * [[PhashIndex]] layout over audio fingerprints (the machinery is
     * modality-blind over 8 row-bytes).
     */
-  case class Paths4(root: String) {
-    def lex: String = s"$root/lex_index"
-    def sem: SemIndex.Paths = SemIndex.Paths(s"$root/sem")
-    def ph: PhashIndex.Paths = PhashIndex.Paths(s"$root/ph")
+  case class Paths4(root: String)
+      extends IndexRoots with CurationDay.CalendarRoots {
     def aud: PhashIndex.Paths = PhashIndex.Paths(s"$root/aud")
     def media: String = s"$root/media_hashes.parquet"
     def decisionsDay(k: Int): String = s"$root/mm_decisions_day$k.parquet"
     def dropDay(k: Int): String = s"$root/mm_drop_day$k.parquet"
-    def ledger: String = s"$root/day_ledger"
-    def landing: String = s"$root/landing"
-    def streamCp: String = s"$root/stream_cp"
-    def capHorizon(dayId: String): String =
-      s"$root/cap_horizon_$dayId.parquet"
   }
 
   val NDays4 = 3

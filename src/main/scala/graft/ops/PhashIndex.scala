@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The persisted PERCEPTUAL dedup index — the image-modality sibling
@@ -43,6 +43,40 @@ object PhashIndex {
         col(s"r${2 * b}") * 256L + col(s"r${2 * b + 1}")): _*))
         .as(Seq("band", "bv")))
 
+  /** Hash rows with the id renamed to `n` and each row byte to `n_r<i>`. */
+  private def side(src: DataFrame, n: String): DataFrame = src.select(
+    col("media_id").as(n) +:
+      (0 until 8).map(i => col(s"r$i").as(s"${n}_r$i")): _*)
+
+  /** Hamming distance between the row bytes of sides `a` and `b`. */
+  private def hamming(a: String, b: String): Column = (0 until 8).map(i =>
+    bit_count(col(s"${a}_r$i").bitwiseXOR(col(s"${b}_r$i"))))
+    .reduce(_ + _)
+
+  /** The stored ids (`__cid`) sharing a band bucket with the probe band
+    * rows `qb` (`id`, band, bv), one row per (id, stored id) pair.
+    */
+  private def collisions(spark: SparkSession, p: Paths, qb: DataFrame,
+                         id: String): DataFrame =
+    qb.join(spark.read.parquet(p.bands)
+        .select(col("media_id").as("__cid"), col("band"), col("bv")),
+        Seq("band", "bv"))
+      .select(id, "__cid").distinct()
+
+  /** Each query's `k` nearest of the scored (`__qid`, `__cid`) pairs:
+    * distance ascending, ties to the smaller stored id.
+    */
+  private def nearest(pairs: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("__qid")
+      .orderBy(col("dist"), col("__cid"))
+    pairs.withColumn("dist", hamming("__qid", "__cid").cast("long"))
+      .withColumn("rank", row_number().over(w))
+      .where(col("rank") <= k)
+      .select(col("__qid").as("qid"), col("rank"),
+        col("__cid").as("media_id"), col("dist"))
+  }
+
   /** Persist the snapshot corpus's hashes + band rows. */
   def write(spark: SparkSession, hashed: DataFrame, p: Paths): Unit = {
     val h = hashRows(hashed).localCheckpoint(true)
@@ -67,18 +101,8 @@ object PhashIndex {
                 withinBatch: Boolean = false,
                 label: String = "phash"): DataFrame = {
     val d = hashRows(delta).localCheckpoint(true)
-    def side(src: DataFrame, n: String) = src.select(
-      col("media_id").as(n) +:
-        (0 until 8).map(i => col(s"r$i").as(s"${n}_r$i")): _*)
-    def hamming(a: String, b: String) = (0 until 8).map(i =>
-      bit_count(col(s"${a}_r$i").bitwiseXOR(col(s"${b}_r$i"))))
-      .reduce(_ + _)
-    val cand = bandRows(d)
-      .select(col("media_id").as("__did"), col("band"), col("bv"))
-      .join(spark.read.parquet(p.bands)
-        .select(col("media_id").as("__cid"), col("band"), col("bv")),
-        Seq("band", "bv"))
-      .select("__did", "__cid").distinct()
+    val cand = collisions(spark, p, bandRows(d)
+      .select(col("media_id").as("__did"), col("band"), col("bv")), "__did")
     val hits = cand
       .join(side(d, "__did"), "__did")
       .join(side(spark.read.parquet(p.hashes), "__cid"), "__cid")
@@ -225,14 +249,7 @@ object PhashIndex {
              k: Int, probes: Int = 0): DataFrame = {
     require(probes >= 0 && probes <= 1,
       "search: probe radius 0 (exact buckets) or 1 (1-bit variants)")
-    import org.apache.spark.sql.expressions.Window
     val q = hashRows(queries).localCheckpoint(true)
-    def side(src: DataFrame, n: String) = src.select(
-      col("media_id").as(n) +:
-        (0 until 8).map(i => col(s"r$i").as(s"${n}_r$i")): _*)
-    def hamming(a: String, b: String) = (0 until 8).map(i =>
-      bit_count(col(s"${a}_r$i").bitwiseXOR(col(s"${b}_r$i"))))
-      .reduce(_ + _)
     val qb = bandRows(q)
       .select(col("media_id").as("__qid"), col("band"), col("bv"))
     val probed =
@@ -240,20 +257,9 @@ object PhashIndex {
       else qb.select(col("__qid"), col("band"),
         explode(array(col("bv") +: (0 until 16).map(i =>
           col("bv").bitwiseXOR(lit(1L << i))): _*)).as("bv"))
-    val cand = probed
-      .join(spark.read.parquet(p.bands)
-        .select(col("media_id").as("__cid"), col("band"), col("bv")),
-        Seq("band", "bv"))
-      .select("__qid", "__cid").distinct()
-    val w = Window.partitionBy("__qid")
-      .orderBy(col("dist"), col("__cid"))
-    cand.join(side(q, "__qid"), "__qid")
-      .join(side(spark.read.parquet(p.hashes), "__cid"), "__cid")
-      .withColumn("dist", hamming("__qid", "__cid").cast("long"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("__qid").as("qid"), col("rank"),
-        col("__cid").as("media_id"), col("dist"))
+    nearest(collisions(spark, p, probed, "__qid")
+        .join(side(q, "__qid"), "__qid")
+        .join(side(spark.read.parquet(p.hashes), "__cid"), "__cid"), k)
   }
 
   /** Recall@k of the banded [[search]] against EXACT brute force over
@@ -271,28 +277,16 @@ object PhashIndex {
     */
   def searchRecall(spark: SparkSession, p: Paths, queries: DataFrame,
                    k: Int, probes: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import graft.functions.PixieFunctions.idiv
     val q = hashRows(queries).localCheckpoint(true)
-    def side(src: DataFrame, n: String) = src.select(
-      col("media_id").as(n) +:
-        (0 until 8).map(i => col(s"r$i").as(s"${n}_r$i")): _*)
-    def hamming(a: String, b: String) = (0 until 8).map(i =>
-      bit_count(col(s"${a}_r$i").bitwiseXOR(col(s"${b}_r$i"))))
-      .reduce(_ + _)
-    val w = Window.partitionBy("__qid")
-      .orderBy(col("dist"), col("__cid"))
     // spread the stream side: the brute-force scoring is CPU per
     // (index row x query), and the hashes artifact scans as one split at
     // fixture scale (Tables.spread is a size-gated no-op at production
     // index sizes, where the scan is already parallel)
-    val exact = side(graft.core.Tables.spread(spark,
+    val exact = nearest(side(graft.core.Tables.spread(spark,
         spark.read.parquet(p.hashes), p.hashes), "__cid")
-      .crossJoin(broadcast(side(q, "__qid"))) // sample × index
-      .withColumn("dist", hamming("__qid", "__cid").cast("long"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("__qid").as("qid"), col("__cid").as("media_id"))
+      .crossJoin(broadcast(side(q, "__qid"))), k) // sample × index
+      .select(col("qid"), col("media_id"))
     val approx = search(spark, p, q, k, probes)
       .select(col("qid"), col("media_id"), lit(1L).as("__hit"))
     exact.join(approx, Seq("qid", "media_id"), "left")
@@ -319,12 +313,7 @@ object PhashIndex {
       "bandingMeasured: probe radius 0 or 1 (the search contract)")
     import graft.functions.PixieFunctions.idiv
     val q = hashRows(queries).localCheckpoint(true)
-    def side(src: DataFrame, n: String) = src.select(
-      col("media_id").as(n) +:
-        (0 until 8).map(i => col(s"r$i").as(s"${n}_r$i")): _*)
-    val dist = (0 until 8).map(i =>
-      bit_count(col(s"__qid_r$i").bitwiseXOR(col(s"__cid_r$i"))))
-      .reduce(_ + _).cast("long")
+    val dist = hamming("__qid", "__cid").cast("long")
     // band collision straight off the row bytes (a band bucket is its
     // two bytes, so bucket equality == byte-pair equality); at probe
     // radius 1 a band collides when its two byte pairs differ by at
@@ -364,20 +353,26 @@ object PhashIndex {
     * (every band dirty).
     */
   def designCurve(spark: SparkSession, bands: Int = 4,
-                  bitsPerBand: Int = 16): DataFrame = {
-    import spark.implicits._
-    val n = bands * bitsPerBand
-    def c(nn: Int, d: Int): BigInt =
-      if (d < 0 || d > nn) BigInt(0)
-      else (1 to d).foldLeft(BigInt(1))((acc, i) => acc * (nn - i + 1) / i)
-    (0 to n).map { d =>
+                  bitsPerBand: Int = 16): DataFrame =
+    curve(spark, bands * bitsPerBand) { (n, d) =>
       val num = (1 to bands).map { j =>
-        val t = c(bands, j) * c(n - j * bitsPerBand, d)
+        val t = binom(bands, j) * binom(n - j * bitsPerBand, d)
         if (j % 2 == 1) t else -t
       }.sum
-      (d.toLong, (num * 1000000 / c(n, d)).toLong)
-    }.toDF("dist", "collide_ppm")
+      (num * 1000000 / binom(n, d)).toLong
+    }
+
+  /** (dist, collide_ppm) for every distance 0..n. */
+  private def curve(spark: SparkSession, n: Int)(
+      ppm: (Int, Int) => Long): DataFrame = {
+    import spark.implicits._
+    (0 to n).map(d => (d.toLong, ppm(n, d))).toDF("dist", "collide_ppm")
   }
+
+  /** The binomial C(nn, d), 0 outside 0 <= d <= nn. */
+  private def binom(nn: Int, d: Int): BigInt =
+    if (d < 0 || d > nn) BigInt(0)
+    else (1 to d).foldLeft(BigInt(1))((acc, i) => acc * (nn - i + 1) / i)
 
   /** The [[designCurve]] at PROBE RADIUS 1 ([[search]]'s multi-probe
     * regime): the probability that two signatures at true Hamming
@@ -395,24 +390,18 @@ object PhashIndex {
     * P = 0 at d = n. Exact BigInt, floored to ppm; model-sized.
     */
   def designCurveProbed(spark: SparkSession, bands: Int = 4,
-                        bitsPerBand: Int = 16): DataFrame = {
-    import spark.implicits._
-    val n = bands * bitsPerBand
-    def c(nn: Int, d: Int): BigInt =
-      if (d < 0 || d > nn) BigInt(0)
-      else (1 to d).foldLeft(BigInt(1))((acc, i) => acc * (nn - i + 1) / i)
-    (0 to n).map { d =>
+                        bitsPerBand: Int = 16): DataFrame =
+    curve(spark, bands * bitsPerBand) { (n, d) =>
       val a = (0 to bands).map { j =>
         val nj = (0 to j).map(t =>
-          c(j, t) * BigInt(bitsPerBand).pow(t) *
-            c(n - j * bitsPerBand, d - t)).sum
-        val term = c(bands, j) * nj
+          binom(j, t) * BigInt(bitsPerBand).pow(t) *
+            binom(n - j * bitsPerBand, d - t)).sum
+        val term = binom(bands, j) * nj
         if (j % 2 == 0) term else -term
       }.sum
-      val tot = c(n, d)
-      (d.toLong, ((tot - a) * 1000000 / tot).toLong)
-    }.toDF("dist", "collide_ppm")
-  }
+      val tot = binom(n, d)
+      ((tot - a) * 1000000 / tot).toLong
+    }
 
   /** Band-level health card off the index tables alone — the
     * candidate-explosion early warning ([[Dedup.dedupIndexStats]]'s

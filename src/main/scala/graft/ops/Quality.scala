@@ -230,10 +230,7 @@ object Quality {
     val support = cells.select("grp").distinct()
       .select(col("grp"), explode(sequence(lit(0L),
         lit(bands.toLong - 1))).as("band"))
-    val a = cells.where(col("half") === 0)
-      .select(col("grp"), col("band"), col("c").as("ca"))
-    val b = cells.where(col("half") === 1)
-      .select(col("grp"), col("band"), col("c").as("cb"))
+    val (a, b) = halves(cells)
     val totals = cells.groupBy("grp").agg(
       sum(when(col("half") === 0, col("c"))).as("ta"),
       sum(when(col("half") === 1, col("c"))).as("tb"))
@@ -242,8 +239,7 @@ object Quality {
     support.join(a, Seq("grp", "band"), "left")
       .join(b, Seq("grp", "band"), "left")
       .join(totals.na.fill(0L, Seq("ta", "tb")), "grp")
-      .withColumn("__term",
-        floor((pa - pb) * log(pa / pb) * 1e9 + 0.5).cast("long"))
+      .withColumn("__term", psiTerm(pa, pb))
       .groupBy("grp")
       .agg(max(col("ta")).as("n_a"), max(col("tb")).as("n_b"),
         sum(col("__term")).as("__s"))
@@ -251,6 +247,13 @@ object Quality {
         round(col("__s").cast("double") / 1e9, 6).as("psi"))
   }
 
+
+  /** Per (grp, band) counts of the first (`ca`) and second (`cb`) half. */
+  private def halves(cells: DataFrame): (DataFrame, DataFrame) =
+    (cells.where(col("half") === 0)
+      .select(col("grp"), col("band"), col("c").as("ca")),
+     cells.where(col("half") === 1)
+      .select(col("grp"), col("band"), col("c").as("cb")))
 
   /** Two-sample Kolmogorov-Smirnov drift per group between the two
     * time halves: `D = sup_v |CDF_A(v) - CDF_B(v)|`, evaluated at the
@@ -266,10 +269,7 @@ object Quality {
               valueCol: String, bandWidth: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val cells = halvedBands(df, groupCol, tsCol, valueCol, bandWidth)
-    val a = cells.where(col("half") === 0)
-      .select(col("grp"), col("band"), col("c").as("ca"))
-    val b = cells.where(col("half") === 1)
-      .select(col("grp"), col("band"), col("c").as("cb"))
+    val (a, b) = halves(cells)
     val w = Window.partitionBy("grp").orderBy("band")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = a.join(b, Seq("grp", "band"), "full_outer")
@@ -444,22 +444,6 @@ object Quality {
         .when(col("cum_ppm") <= bPpm, "B").otherwise("C"))
   }
 
-  /** Winsorized (outlier-capped) mean per group: values clamp to the
-    * exact [pLo, pHi] order statistics before averaging — the robust
-    * metric read that one fat-fingered 1e9 row cannot move, reported
-    * next to the raw mean so the gap itself is the outlier signal.
-    *
-    * Exactness: values are cent-quantized; the percentile bounds are
-    * ORDER STATISTICS at ranks ceil(p·n)/1e6 (the smallest cent value
-    * whose cumulative count reaches the rank — integer arithmetic, no
-    * interpolation), so both bounds and the clamped sum are exact
-    * integers in any engine.
-    *
-    * Scale: one (group, cents) keyed aggregate; the cumulative window
-    * runs over the DISTINCT-cents table per group (the ROC rank-sum
-    * shape), never over raw rows; the clamped sum re-aggregates the
-    * same distinct table against the broadcast O(#groups) bounds.
-    */
   /** Population Stability Index — the standard day-over-day drift
     * monitor an ingest pipeline alarms on (PSI ≥ 0.25 = population
     * shift; the credit-scoring/ML-monitoring convention): over a
@@ -485,15 +469,25 @@ object Quality {
     val tot = j.agg(sum(col("__b")).as("__tb"), sum(col("__c")).as("__tc"),
       count(lit(1)).as("__k"))
     j.crossJoin(broadcast(tot))
-      .select(
-        ((col("__b") + 1.0) / (col("__tb") + col("__k"))).as("p"),
-        ((col("__c") + 1.0) / (col("__tc") + col("__k"))).as("q"))
-      .select(floor((col("p") - col("q")) * log(col("p") / col("q"))
-        * 1000000000.0 + 0.5).cast("long").as("t_q"))
-      .agg(count(lit(1)).as("n_bins"),
-        graft.core.Exact.zround(sum(col("t_q")) / 1000000000.0, 6)
-          .as("psi"))
+      .select(psiShares: _*)
+      .select(psiTerm(col("p"), col("q")).as("t_q"))
+      .agg(psiBins.head, psiBins.tail: _*)
   }
+
+  /** Add-one smoothed shares `p` (base) and `q` (current) of a bin. */
+  private def psiShares: Seq[Column] = Seq(
+    ((col("__b") + 1.0) / (col("__tb") + col("__k"))).as("p"),
+    ((col("__c") + 1.0) / (col("__tc") + col("__k"))).as("q"))
+
+  /** One bin's PSI term (p − q)·ln(p / q), nano-quantized before any
+    * sum so the total is exact at any partitioning.
+    */
+  private def psiTerm(p: Column, q: Column): Column =
+    floor((p - q) * log(p / q) * 1e9 + 0.5).cast("long")
+
+  /** The bin count and the PSI total of the `t_q` terms. */
+  private def psiBins: Seq[Column] = Seq(count(lit(1)).as("n_bins"),
+    graft.core.Exact.zround(sum(col("t_q")) / 1e9, 6).as("psi"))
 
   /** [[psi]] against MANY comparison periods in ONE pass over each
     * input (the daily drift panel a monitor actually renders): the
@@ -520,27 +514,19 @@ object Quality {
       .agg(sum(col("__b")).as("__tb"), sum(col("__c")).as("__tc"),
         count(lit(1)).as("__k"))
     j.join(broadcast(tot), Seq(periodCol))
-      .select(col(periodCol),
-        ((col("__b") + 1.0) / (col("__tb") + col("__k"))).as("p"),
-        ((col("__c") + 1.0) / (col("__tc") + col("__k"))).as("q"))
-      .select(col(periodCol),
-        floor((col("p") - col("q")) * log(col("p") / col("q"))
-          * 1000000000.0 + 0.5).cast("long").as("t_q"))
+      .select(col(periodCol) +: psiShares: _*)
+      .select(col(periodCol), psiTerm(col("p"), col("q")).as("t_q"))
       .groupBy(periodCol)
-      .agg(count(lit(1)).as("n_bins"),
-        graft.core.Exact.zround(sum(col("t_q")) / 1000000000.0, 6)
-          .as("psi"))
+      .agg(psiBins.head, psiBins.tail: _*)
   }
 
-  def winsorizedMean(df: DataFrame, groupCol: String, valueCol: Column,
-                     loPpm: Long = 50000L, hiPpm: Long = 950000L): DataFrame = {
-    require(0 <= loPpm && loPpm < hiPpm && hiPpm <= 1000000L,
-      "winsorizedMean: 0 <= loPpm < hiPpm <= 1e6")
+  /** Per (group `__g`, cent value `__c`) counts `__k` of the non-null,
+    * non-NaN values, and the same rows with the cumulative count
+    * `__cum` in cent order and the group size `__n`.
+    */
+  private def centCounts(df: DataFrame, groupCol: String,
+                         valueCol: Column): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    import graft.functions.PixieFunctions.idiv
-    // null groups excluded EXPLICITLY: the bounds join below is an
-    // equi-join, which silently drops null keys a groupBy would keep
-    // (the tCloseness lesson) — make the contract loud instead.
     val g = df
       .where(col(groupCol).isNotNull &&
         valueCol.isNotNull && !isnan(valueCol.cast("double")))
@@ -549,14 +535,44 @@ object Quality {
       .groupBy("__g", "__c").agg(count(lit(1)).as("__k"))
     val w = Window.partitionBy("__g").orderBy("__c")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = g
+    (g, g
       .withColumn("__cum", sum(col("__k")).over(w))
-      .withColumn("__n", sum(col("__k")).over(Window.partitionBy("__g")))
-    def rank(ppm: Long) = idiv(col("__n") * ppm + 999999L, lit(1000000L))
+      .withColumn("__n", sum(col("__k")).over(Window.partitionBy("__g"))))
+  }
+
+  /** The rank ceil(ppm·n / 1e6) of quantile `ppm` in a group of `__n`. */
+  private def centRank(ppm: Long): Column =
+    graft.functions.PixieFunctions.idiv(col("__n") * ppm + 999999L,
+      lit(1000000L))
+
+  /** Winsorized (outlier-capped) mean per group: values clamp to the
+    * exact [pLo, pHi] order statistics before averaging — the robust
+    * metric read that one fat-fingered 1e9 row cannot move, reported
+    * next to the raw mean so the gap itself is the outlier signal.
+    *
+    * Exactness: values are cent-quantized; the percentile bounds are
+    * ORDER STATISTICS at ranks ceil(p·n)/1e6 (the smallest cent value
+    * whose cumulative count reaches the rank — integer arithmetic, no
+    * interpolation), so both bounds and the clamped sum are exact
+    * integers in any engine.
+    *
+    * Scale: one (group, cents) keyed aggregate; the cumulative window
+    * runs over the DISTINCT-cents table per group (the ROC rank-sum
+    * shape), never over raw rows; the clamped sum re-aggregates the
+    * same distinct table against the broadcast O(#groups) bounds.
+    */
+  def winsorizedMean(df: DataFrame, groupCol: String, valueCol: Column,
+                     loPpm: Long = 50000L, hiPpm: Long = 950000L): DataFrame = {
+    require(0 <= loPpm && loPpm < hiPpm && hiPpm <= 1000000L,
+      "winsorizedMean: 0 <= loPpm < hiPpm <= 1e6")
+    // centCounts excludes null groups EXPLICITLY: the bounds join below
+    // is an equi-join, which silently drops null keys a groupBy would
+    // keep (the tCloseness lesson) — make the contract loud instead.
+    val (g, cum) = centCounts(df, groupCol, valueCol)
     val bounds = cum.groupBy(col("__g"))
       .agg(max(col("__n")).as("n"),
-        min(when(col("__cum") >= rank(loPpm), col("__c"))).as("__lo"),
-        min(when(col("__cum") >= rank(hiPpm), col("__c"))).as("__hi"))
+        min(when(col("__cum") >= centRank(loPpm), col("__c"))).as("__lo"),
+        min(when(col("__cum") >= centRank(hiPpm), col("__c"))).as("__hi"))
     g.join(bounds, "__g")
       .groupBy(col("__g").as(groupCol))
       .agg(max(col("n")).as("n"),
@@ -590,24 +606,11 @@ object Quality {
     require(bands.nonEmpty &&
       bands.forall { case (_, p) => p > 0 && p <= 1000000L },
       "quantileBands: band ppms in (0, 1e6]")
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.PixieFunctions.idiv
-    val g = df
-      .where(col(groupCol).isNotNull &&
-        valueCol.isNotNull && !isnan(valueCol.cast("double")))
-      .select(col(groupCol).as("__g"),
-        floor(valueCol * 100.0 + 0.5).cast("long").as("__c"))
-      .groupBy("__g", "__c").agg(count(lit(1)).as("__k"))
-    val w = Window.partitionBy("__g").orderBy("__c")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = g
-      .withColumn("__cum", sum(col("__k")).over(w))
-      .withColumn("__n", sum(col("__k")).over(Window.partitionBy("__g")))
-    def rank(ppm: Long) = idiv(col("__n") * ppm + 999999L, lit(1000000L))
+    val (_, cum) = centCounts(df, groupCol, valueCol)
     cum.groupBy(col("__g").as(groupCol))
       .agg(max(col("__n")).as("n"),
         bands.map { case (nm, p) =>
-          min(when(col("__cum") >= rank(p), col("__c")))
+          min(when(col("__cum") >= centRank(p), col("__c")))
             .as(s"${nm}_cents")
         }: _*)
   }

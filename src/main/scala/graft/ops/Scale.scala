@@ -102,7 +102,6 @@ object Scale {
     * bands toward serial — the documented trade of every banded rank.
     */
   private def fileAssign(g: DataFrame, nFiles: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val om = g.agg(min(col("ord")).as("__o0"), max(col("ord")).as("__o1"))
     // DIVISION-FIRST banding (same contract as bucket()): the linear
     // layout routes a RAW dimension through ord — an epoch-ns-scale
@@ -115,18 +114,8 @@ object Scale {
         idiv(col("ord") - col("__o0"),
           idiv(col("__o1") - col("__o0") + 256L, lit(256L))))
       .drop("__o0", "__o1")
-    val wOff = Window.orderBy("__band")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offsets = banded.groupBy("__band").agg(count(lit(1)).as("__c"))
-      .withColumn("__off", sum(col("__c")).over(wOff) - col("__c"))
-      .withColumn("__n", sum(col("__c")).over(
-        Window.orderBy("__band").rowsBetween(
-          Window.unboundedPreceding, Window.unboundedFollowing)))
-      .drop("__c")
-    val wIn = Window.partitionBy("__band").orderBy(col("ord"), col("id"))
-    banded.join(broadcast(offsets), Seq("__band"))
-      .withColumn("file",
-        idiv((col("__off") + row_number().over(wIn) - 1) * nFiles, col("__n")))
+    val (ranked, r) = Corpus.bandedRank(banded, col("ord"), col("id"))
+    ranked.withColumn("file", idiv((r - 1) * nFiles, col("__n")))
       .select(col("id"), col("x"), col("y"), col("file"))
   }
 
@@ -380,29 +369,8 @@ object Scale {
   def foldDistinctState(spark: org.apache.spark.sql.SparkSession,
                         path: String, delta: DataFrame, groupCol: String,
                         keyCol: String, nShards: Int): DataFrame = {
-    require(nShards > 0, "foldDistinctState: nShards > 0")
-    // delta triples feed two consumers (touched-shard fetch + the
-    // recount union) — materialize the delta-sized frame once
-    // (checkpoint() on a real cluster, the documented swap)
-    val d = shardTriples(delta, groupCol, keyCol, nShards)
-      .localCheckpoint(true)
-    // bounded by nShards (<= a few hundred) — a model fetch, not data
-    val touched = d.select("__shard").distinct()
-      .collect().map(_.getLong(0)).sorted
-    val summary = spark.read.parquet(s"$path/summary")
-    // a fold with a DIFFERENT shard count than the write would hash
-    // the same key into different shards and silently double-count —
-    // the stored count is the contract (empty state = bootstrap, any
-    // nShards is fine)
-    summary.select("__nshards").take(1).foreach { r =>
-      require(r.getLong(0) == nShards.toLong,
-        s"foldDistinctState: state written with nShards=${r.getLong(0)}, " +
-          s"folded with $nShards")
-    }
-    // explicit schema: a bootstrap-empty partitioned keys table has no
-    // files to infer from
-    val keys = spark.read.schema(d.schema).parquet(s"$path/keys")
-      .where(col("__shard").isin(touched: _*))
+    val (d, touched, summary, keys) = deltaShards(spark, path, delta,
+      groupCol, keyCol, nShards, "foldDistinctState", "folded")
     val recounted = keys.select(col(groupCol), col("__shard"), col("__k"))
       .unionByName(d).distinct()
       .groupBy(col(groupCol), col("__shard"))
@@ -412,6 +380,40 @@ object Scale {
     recounted.unionByName(untouched)
       .groupBy(col(groupCol))
       .agg(sum(col("__card")).as("n_unique"))
+  }
+
+  /** The prologue of a delta against a persisted distinct state: the
+    * delta's (group, shard, key) triples `d`, materialized once (they
+    * feed two consumers; checkpoint() on a real cluster, the documented
+    * swap), the shards they touch, the state's summary, and its keys
+    * read pruned to the touched shards. `op` and `verb` name the caller
+    * in the shard-count check's message.
+    */
+  private def deltaShards(spark: org.apache.spark.sql.SparkSession,
+                          path: String, delta: DataFrame, groupCol: String,
+                          keyCol: String, nShards: Int, op: String,
+                          verb: String) = {
+    require(nShards > 0, s"$op: nShards > 0")
+    val d = shardTriples(delta, groupCol, keyCol, nShards)
+      .localCheckpoint(true)
+    // bounded by nShards (<= a few hundred) — a model fetch, not data
+    val touched = d.select("__shard").distinct()
+      .collect().map(_.getLong(0)).sorted
+    val summary = spark.read.parquet(s"$path/summary")
+    // a delta with a DIFFERENT shard count than the write would hash
+    // the same key into different shards and silently double-count —
+    // the stored count is the contract (empty state = bootstrap, any
+    // nShards is fine)
+    summary.select("__nshards").take(1).foreach { r =>
+      require(r.getLong(0) == nShards.toLong,
+        s"$op: state written with nShards=${r.getLong(0)}, " +
+          s"$verb with $nShards")
+    }
+    // explicit schema: a bootstrap-empty partitioned keys table has no
+    // files to infer from
+    val keys = spark.read.schema(d.schema).parquet(s"$path/keys")
+      .where(col("__shard").isin(touched: _*))
+    (d, touched, summary, keys)
   }
 
   /** Per-group cardinality read straight off the persisted
@@ -468,19 +470,8 @@ object Scale {
       spark: org.apache.spark.sql.SparkSession, path: String,
       delta: DataFrame, groupCol: String, keyCol: String,
       nShards: Int): (org.apache.spark.sql.types.StructType, Array[Long]) = {
-    require(nShards > 0, "appendDistinctState: nShards > 0")
-    val d = shardTriples(delta, groupCol, keyCol, nShards)
-      .localCheckpoint(true)
-    val touched = d.select("__shard").distinct()
-      .collect().map(_.getLong(0)).sorted
-    val summary = spark.read.parquet(s"$path/summary")
-    summary.select("__nshards").take(1).foreach { r =>
-      require(r.getLong(0) == nShards.toLong,
-        s"appendDistinctState: state written with nShards=${r.getLong(0)}, " +
-          s"appended with $nShards")
-    }
-    val keys = spark.read.schema(d.schema).parquet(s"$path/keys")
-      .where(col("__shard").isin(touched: _*))
+    val (d, touched, _, keys) = deltaShards(spark, path, delta, groupCol,
+      keyCol, nShards, "appendDistinctState", "appended")
     // materialize BEFORE the append: the anti-join reads the very
     // table being appended to
     val fresh = d.join(keys, Seq(groupCol, "__shard", "__k"), "left_anti")

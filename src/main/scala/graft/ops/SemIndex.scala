@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.MlAggregators
 
@@ -90,6 +90,36 @@ object SemIndex {
       .drop("cell_cos")
       .select(col("id").as("vec_id"), col("e"), col("n"), col("cell"))
 
+  /** The distinct cells of `df`, sorted (bounded by the cell count). */
+  private def cellsOf(df: DataFrame): Array[Int] =
+    df.select("cell").distinct().collect().map(_.getInt(0)).sorted
+
+  /** `idx` pruned to the partitions of `cells`. */
+  private def inCells(idx: DataFrame, cells: Array[Int]): DataFrame =
+    idx.where(col("cell").isin(cells.map(Integer.valueOf): _*))
+
+  /** The index read spread for scoring; a cell filter still pushes
+    * through the spread.
+    */
+  private def spreadIndex(spark: SparkSession, p: Paths): DataFrame =
+    graft.core.Tables.spread(spark, spark.read.parquet(p.index), p.index)
+
+  /** (vec_id, e, n) for a query frame. */
+  private def normedQueries(queries: DataFrame): DataFrame =
+    vecs(queries).withColumn("n", Similarity.norm(col("e")))
+
+  /** Every seed as (negcos, sid) for the query vector `e` (norm `n`),
+    * sorted: the query's cells, nearest first.
+    */
+  private def seedOrder(seeds: Seq[Seq[Double]]): Column =
+    array_sort(array(seeds.zipWithIndex.map { case (s, i) =>
+      val sNorm = math.sqrt(s.map(x => x * x).sum)
+      struct((-aggregate(zip_with(col("e"), typedLit(s), (x, y) => x * y),
+        lit(0.0), (acc, x) => acc + x) / (col("n") * lit(sNorm)))
+          .as("negcos"),
+        lit(i + 1).as("sid"))
+    }: _*))
+
   /** The delta day's semantic verdicts: `dup_sem_corpus` when any
     * stored vector in the same cell clears [[MinCos]], else
     * `admitted`. Scans ONLY the delta's own cell partitions.
@@ -110,11 +140,8 @@ object SemIndex {
                 withinBatch: Boolean = false): DataFrame = {
     import graft.ops.Similarity.dot
     val asg = assigned(spark, delta, p).localCheckpoint(true)
-    val cells = asg.select("cell").distinct()
-      .collect().map(_.getInt(0)).sorted // bounded by NCells
-    val idx = graft.core.Tables.spread(spark, // cell filter still pushes
-        spark.read.parquet(p.index), p.index)   // through the spread
-      .where(col("cell").isin(cells.map(Integer.valueOf): _*))
+    val cells = cellsOf(asg)
+    val idx = inCells(spreadIndex(spark, p), cells)
       .select(col("cell"), col("e").as("ce"), col("n").as("cn"))
     val hits = asg.join(idx, Seq("cell"))
       .where(dot(col("e"), col("ce")) / (col("n") * col("cn"))
@@ -149,10 +176,8 @@ object SemIndex {
     */
   def append(spark: SparkSession, p: Paths, admitted: DataFrame): Unit = {
     val asg = assigned(spark, admitted, p).localCheckpoint(true)
-    val cells = asg.select("cell").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val existing = spark.read.parquet(p.index)
-      .where(col("cell").isin(cells.map(Integer.valueOf): _*))
+    val cells = cellsOf(asg)
+    val existing = inCells(spark.read.parquet(p.index), cells)
       .select("vec_id", "cell")
     asg.join(existing, Seq("vec_id", "cell"), "left_anti")
       .localCheckpoint(true) // reads the table being appended
@@ -194,25 +219,14 @@ object SemIndex {
   def search(spark: SparkSession, p: Paths, queries: DataFrame,
              k: Int, nprobe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val seeds = loadSeeds(spark, p)
-    val q = vecs(queries).withColumn("n", Similarity.norm(col("e")))
-    val scored = q.withColumn("cells",
-      slice(array_sort(array(seeds.zipWithIndex.map { case (s, i) =>
-        val sNorm = math.sqrt(s.map(x => x * x).sum)
-        struct((-aggregate(zip_with(col("e"), typedLit(s), (x, y) => x * y),
-          lit(0.0), (acc, x) => acc + x) / (col("n") * lit(sNorm)))
-            .as("negcos"),
-          lit(i + 1).as("sid"))
-      }: _*)), 1, nprobe))
+    val scored = normedQueries(queries).withColumn("cells",
+      slice(seedOrder(loadSeeds(spark, p)), 1, nprobe))
     val probes = scored
       .select(col("vec_id").as("qid"), col("e").as("qe"),
         col("n").as("qn"),
         explode(col("cells").getField("sid")).as("cell"))
-    val cells = probes.select("cell").distinct()
-      .collect().map(_.getInt(0)).sorted // bounded by NCells
-    val idx = graft.core.Tables.spread(spark, // cell filter still pushes
-        spark.read.parquet(p.index), p.index)   // through the spread
-      .where(col("cell").isin(cells.map(Integer.valueOf): _*))
+    val cells = cellsOf(probes)
+    val idx = inCells(spreadIndex(spark, p), cells)
     val w = Window.partitionBy("qid")
       .orderBy(col("cos").desc, col("vec_id"))
     probes.join(idx, Seq("cell"))
@@ -267,16 +281,8 @@ object SemIndex {
                   k: Int): DataFrame = {
     import graft.functions.PixieFunctions.idiv
     import org.apache.spark.sql.expressions.Window
-    val seeds = loadSeeds(spark, p)
-    val q = vecs(queries).withColumn("n", Similarity.norm(col("e")))
-    val ranked = q.withColumn("cells",
-      array_sort(array(seeds.zipWithIndex.map { case (s, i) =>
-        val sNorm = math.sqrt(s.map(x => x * x).sum)
-        struct((-aggregate(zip_with(col("e"), typedLit(s), (x, y) => x * y),
-          lit(0.0), (acc, x) => acc + x) / (col("n") * lit(sNorm)))
-            .as("negcos"),
-          lit(i + 1).as("sid"))
-      }: _*)))
+    val ranked = normedQueries(queries)
+      .withColumn("cells", seedOrder(loadSeeds(spark, p)))
     val probes = ranked.select(col("vec_id").as("qid"),
         col("e").as("qe"), col("n").as("qn"),
         posexplode(col("cells").getField("sid")))
@@ -286,8 +292,7 @@ object SemIndex {
       // spread the index side: per-pair cosine scoring is the cost, and
       // the index artifact scans as one split at fixture scale
       // (size-gated no-op at production index sizes)
-      .join(graft.core.Tables.spread(spark,
-        spark.read.parquet(p.index), p.index), Seq("cell"))
+      .join(spreadIndex(spark, p), Seq("cell"))
       .select(col("qid"), col("vec_id"),
         (Similarity.dot(col("qe"), col("e"))
           / (col("qn") * col("n"))).as("cos"),
@@ -374,11 +379,9 @@ object SemIndex {
   def delete(spark: SparkSession, p: Paths, ids: DataFrame): Unit = {
     val victims = spark.read.parquet(p.index)
       .join(ids.select(col(ids.columns.head).as("vec_id")), "vec_id")
-    val cells = victims.select("cell").distinct()
-      .collect().map(_.getInt(0)).sorted // bounded by NCells
+    val cells = cellsOf(victims)
     if (cells.nonEmpty) {
-      val kept = spark.read.parquet(p.index)
-        .where(col("cell").isin(cells.map(Integer.valueOf): _*))
+      val kept = inCells(spark.read.parquet(p.index), cells)
         .join(ids.select(col(ids.columns.head).as("vec_id")),
           Seq("vec_id"), "left_anti")
         .select("vec_id", "e", "n", "cell")

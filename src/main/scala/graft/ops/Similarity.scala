@@ -130,20 +130,78 @@ object Similarity {
 
   private def cosineRankBand(corpus: DataFrame, queries: DataFrame,
                              idCol: String, vecCol: String,
-                             lo: Int, hi: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<double>").as("ce"))
-      .withColumn("cn", norm(col("ce")))
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qe"))
-      .withColumn("qn", norm(col("qe")))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
+                             lo: Int, hi: Int): DataFrame =
+    rankPerQuery(exactScan(corpusVecs(corpus, idCol, vecCol),
+        queryVecs(queries, idCol, vecCol)),
+      col("score").desc, r => r > lo && r <= hi)
+
+  /** One side of a vector scan: the id as `id`, then `extra`, then the
+    * vector as array<double> `v`.
+    */
+  private def vectors(df: DataFrame, idCol: String, vecCol: String,
+                      id: String, v: String, extra: Column*): DataFrame =
+    df.select((col(idCol).as(id) +: extra) :+
+      col(vecCol).cast("array<double>").as(v): _*)
+
+  /** The corpus side: (neighbor_id, `extra`..., ce). */
+  private def corpusVecs(df: DataFrame, idCol: String, vecCol: String,
+                         extra: Column*): DataFrame =
+    vectors(df, idCol, vecCol, "neighbor_id", "ce", extra: _*)
+
+  /** The query side: (query_id, qe). */
+  private def queryVecs(df: DataFrame, idCol: String,
+                        vecCol: String): DataFrame =
+    vectors(df, idCol, vecCol, "query_id", "qe")
+
+  /** Cosine of the query and corpus vectors on one row, from the norms
+    * `qn` and `cn` computed once per side.
+    */
+  private def cosine: Column =
+    dot(col("qe"), col("ce")) / (col("qn") * col("cn"))
+
+  /** The exact scan: every corpus vector scored (`score`) against the
+    * broadcast query set, each query excluding itself.
+    */
+  private def exactScan(c: DataFrame, q: DataFrame): DataFrame =
+    c.withColumn("cn", norm(col("ce")))
+      .join(broadcast(q.withColumn("qn", norm(col("qe")))),
+        col("query_id") =!= col("neighbor_id"))
+      .withColumn("score", cosine)
+
+  /** Exact cosine top-k over the distinct (query_id, neighbor_id)
+    * candidate pairs of `pairs`, each query excluding itself: the
+    * candidates fetch both vectors by id, the query side broadcast.
+    */
+  private def candidateTopK(pairs: DataFrame, c0: DataFrame,
+                            q0: DataFrame, k: Int): DataFrame = {
+    val candidates = pairs
+      .where(col("query_id") =!= col("neighbor_id"))
+      .select("query_id", "neighbor_id").distinct()
+    val cn = c0.withColumn("cn", norm(col("ce")))
+    val qn = q0.withColumn("qn", norm(col("qe")))
+    rankPerQuery(candidates
+        .join(cn, "neighbor_id").join(broadcast(qn), "query_id")
+        .withColumn("score", cosine),
+      col("score").desc, _ <= k)
+  }
+
+  /** (query_id, neighbor_id, rank, `score`): the output of a top-k. */
+  private def topCols(score: String): Seq[Column] =
+    Seq("query_id", "neighbor_id", "rank", score).map(col)
+
+  /** The per-query rank every top-k here ends in: `rank` is the
+    * row_number per query over `order`, then `neighbor_id` ascending
+    * (ties go to the lower id); the rows whose rank passes `keep` are
+    * projected to `out`.
+    */
+  private[graft] def rankPerQuery(scored: DataFrame, order: Column,
+                                  keep: Column => Column,
+                                  out: Seq[Column] = topCols("score")): DataFrame = {
     val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
+      .orderBy(order, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") > lo && col("rank") <= hi)
-      .select("query_id", "neighbor_id", "rank", "score")
+      .where(keep(col("rank")))
+      .select(out: _*)
   }
 
   /** Deterministic pseudo-random projection component r_{j,i} in
@@ -194,10 +252,8 @@ object Similarity {
       aggregate(zip_with(vec, typedLit(s), (x, y) => x * y),
         lit(0.0), (acc, x) => acc + x) / (norm(vec) * sNorm)
     }: _*)
-    val c0 = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<double>").as("ce"))
-    val q0 = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qe"))
+    val c0 = corpusVecs(corpus, idCol, vecCol)
+    val q0 = queryVecs(queries, idCol, vecCol)
     val cc = c0.withColumn("scores", cellScores(col("ce")))
       .withColumn("cell",
         array_position(col("scores"), array_max(col("scores"))).cast("int"))
@@ -210,19 +266,8 @@ object Similarity {
         st => st.getField("idx")), 1, nProbe))
       .select(col("query_id"), col("qe"),
         explode(col("probe_cells")).as("cell"))
-    val candidates = cc.join(broadcast(qp.select("query_id", "cell")), Seq("cell"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id").distinct()
-    val cn = c0.withColumn("cn", norm(col("ce")))
-    val qn = q0.withColumn("qn", norm(col("qe")))
-    val scored = candidates
-      .join(cn, "neighbor_id").join(broadcast(qn), "query_id")
-      .withColumn("score", dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "score")
+    candidateTopK(
+      cc.join(broadcast(qp.select("query_id", "cell")), Seq("cell")), c0, q0, k)
   }
 
   /** Product-quantization ADC top-k (Jégou et al., "Product
@@ -251,51 +296,71 @@ object Similarity {
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, k: Int, dim: Int,
              codebooks: Seq[Seq[Seq[Double]]], rerank: Int = 0): DataFrame = {
+    val sd = subWidth(dim, codebooks)
+    val c0 = corpusVecs(corpus, idCol, vecCol)
+    val q0 = queryVecs(queries, idCol, vecCol)
+    val codes = pqEncode(c0, "ce", codebooks, sd).drop("ce")
+    adcTopK(codes.join(broadcast(q0), col("query_id") =!= col("neighbor_id")),
+      adcDist("qe", codebooks, sd), k, rerank, c0, q0)
+  }
+
+  /** Squared L2 distance of two array<double> columns. */
+  private def l2(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
+      lit(0.0), (acc, x) => acc + x)
+
+  /** Subspace width: `dim` split over the codebooks' m subspaces. */
+  private def subWidth(dim: Int, codebooks: Seq[Seq[Seq[Double]]]): Int = {
     val m = codebooks.length
     val sd = dim / m
     require(m * sd == dim, s"dim $dim must divide into $m subspaces")
-    def sub(vec: Column, j: Int) = slice(vec, j * sd + 1, sd)
-    def l2(a: Column, b: Column) =
-      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x)
-    val c0 = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<double>").as("ce"))
-    val q0 = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qe"))
-    val codes = (0 until m).foldLeft(c0) { (df, j) =>
+    sd
+  }
+
+  /** Subvector `j` of width `sd`. */
+  private def sub(vec: Column, j: Int, sd: Int): Column =
+    slice(vec, j * sd + 1, sd)
+
+  /** PQ encode of vector column `src`: one `code_j` per subspace, the
+    * 1-based index of the nearest codebook centroid (first minimum).
+    */
+  private def pqEncode(df: DataFrame, src: String,
+                       codebooks: Seq[Seq[Seq[Double]]], sd: Int): DataFrame =
+    codebooks.indices.foldLeft(df) { (df, j) =>
       val dists = transform(typedLit(codebooks(j)),
-        cent => l2(sub(col("ce"), j), cent))
+        cent => l2(sub(col(src), j, sd), cent))
       df.withColumn(s"code_$j",
         array_position(dists, array_min(dists)).cast("int"))
-    }.drop("ce")
-    val adc = (0 until m).map { j =>
-      l2(sub(col("qe"), j), element_at(typedLit(codebooks(j)), col(s"code_$j")))
+    }
+
+  /** The ADC distance of query vector `q` to the `code_j` centroids. */
+  private def adcDist(q: String, codebooks: Seq[Seq[Seq[Double]]],
+                      sd: Int): Column =
+    codebooks.indices.map { j =>
+      l2(sub(col(q), j, sd),
+        element_at(typedLit(codebooks(j)), col(s"code_$j")))
     }.reduce(_ + _)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("neighbor_id").asc)
-    val ranked = codes
-      .join(broadcast(q0), col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc", adc)
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= (if (rerank > 0) rerank else k))
-    if (rerank == 0)
-      ranked.select("query_id", "neighbor_id", "rank", "adc")
-    else {
+
+  /** The PQ rank over scanned (query, code) rows: the ADC top-k, or
+    * with `rerank` > 0 an ADC shortlist of `rerank` per query reranked
+    * by exact L2 distance.
+    */
+  private def adcTopK(scanned: DataFrame, adc: Column, k: Int, rerank: Int,
+                      c0: DataFrame, q0: DataFrame): DataFrame = {
+    val ranked = rankPerQuery(scanned.withColumn("adc", adc),
+      col("adc").asc, _ <= (if (rerank > 0) rerank else k), topCols("adc"))
+    if (rerank == 0) ranked
+    else
       // Deployment path: the ADC scan only SHORTLISTS `rerank`
       // candidates; exact distances are computed for those alone (an
       // id-keyed fetch of raw vectors — candidates-then-verify, like
       // every other approximate operator here). Quantization error then
       // only costs recall when a true neighbor misses the shortlist.
-      val w2 = Window.partitionBy("query_id")
-        .orderBy(col("dist").asc, col("neighbor_id").asc)
-      ranked.select("query_id", "neighbor_id")
-        .join(c0, "neighbor_id")
-        .join(broadcast(q0), "query_id")
-        .withColumn("dist", l2(col("qe"), col("ce")))
-        .withColumn("rank", row_number().over(w2))
-        .where(col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dist")
-    }
+      rankPerQuery(ranked.select("query_id", "neighbor_id")
+          .join(c0, "neighbor_id")
+          .join(broadcast(q0), "query_id")
+          .withColumn("dist", l2(col("qe"), col("ce"))),
+        col("dist").asc, _ <= k, topCols("dist"))
   }
 
   /** L2 residuals against a coarse quantizer: assigns each vector to
@@ -307,9 +372,6 @@ object Similarity {
     */
   def l2Residuals(df: DataFrame, idCol: String, vecCol: String,
                   cellSeeds: Seq[Seq[Double]]): DataFrame = {
-    def l2(a: Column, b: Column) =
-      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x)
     val dists = array(cellSeeds.map(s => l2(col("ve"), typedLit(s))): _*)
     df.select(col(idCol), col(vecCol).cast("array<double>").as("ve"))
       .withColumn("cell",
@@ -344,25 +406,14 @@ object Similarity {
                 vecCol: String, k: Int, dim: Int,
                 cellSeeds: Seq[Seq[Double]], nProbe: Int,
                 codebooks: Seq[Seq[Seq[Double]]], rerank: Int = 0): DataFrame = {
-    val m = codebooks.length
-    val sd = dim / m
-    require(m * sd == dim, s"dim $dim must divide into $m subspaces")
-    def sub(vec: Column, j: Int) = slice(vec, j * sd + 1, sd)
-    def l2(a: Column, b: Column) =
-      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x)
+    val sd = subWidth(dim, codebooks)
     // corpus: cell + residual codes (one map pass; stored form at scale)
     val enc = l2Residuals(corpus, idCol, vecCol, cellSeeds)
       .withColumnRenamed(idCol, "neighbor_id")
-    val codes = (0 until m).foldLeft(enc) { (df, j) =>
-      val dists = transform(typedLit(codebooks(j)),
-        cent => l2(sub(col("residual"), j), cent))
-      df.withColumn(s"code_$j",
-        array_position(dists, array_min(dists)).cast("int"))
-    }.drop("ve", "residual")
+    val codes = pqEncode(enc, "residual", codebooks, sd)
+      .drop("ve", "residual")
     // queries: nProbe closest cells by L2 (dist asc, cell asc on ties)
-    val q0 = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qe"))
+    val q0 = queryVecs(queries, idCol, vecCol)
     val qDists = array(cellSeeds.map(s => l2(col("qe"), typedLit(s))): _*)
     val probes = q0.withColumn("probe_cells", slice(transform(
         sort_array(transform(qDists,
@@ -374,32 +425,10 @@ object Similarity {
       // the query residual is against the PROBED cell's centroid
       .withColumn("qre", zip_with(col("qe"),
         element_at(typedLit(cellSeeds), col("cell")), (x, y) => x - y))
-    val adc = (0 until m).map { j =>
-      l2(sub(col("qre"), j),
-        element_at(typedLit(codebooks(j)), col(s"code_$j")))
-    }.reduce(_ + _)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("neighbor_id").asc)
-    val ranked = codes.join(broadcast(probes), Seq("cell"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc", adc)
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= (if (rerank > 0) rerank else k))
-    if (rerank == 0)
-      ranked.select("query_id", "neighbor_id", "rank", "adc")
-    else {
-      val c0 = corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).cast("array<double>").as("ce"))
-      val w2 = Window.partitionBy("query_id")
-        .orderBy(col("dist").asc, col("neighbor_id").asc)
-      ranked.select("query_id", "neighbor_id")
-        .join(c0, "neighbor_id")
-        .join(broadcast(q0), "query_id")
-        .withColumn("dist", l2(col("qe"), col("ce")))
-        .withColumn("rank", row_number().over(w2))
-        .where(col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dist")
-    }
+    adcTopK(codes.join(broadcast(probes), Seq("cell"))
+        .where(col("query_id") =!= col("neighbor_id")),
+      adcDist("qre", codebooks, sd), k, rerank,
+      corpusVecs(corpus, idCol, vecCol), q0)
   }
 
   /** DuckDB SQL for one table's sign-LSH bucket id over list column
@@ -427,10 +456,8 @@ object Similarity {
   def lshCosineTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                     vecCol: String, k: Int, dim: Int,
                     bitsPerTable: Int = 4, nTables: Int = 8): DataFrame = {
-    val c0 = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<double>").as("ce"))
-    val q0 = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qe"))
+    val c0 = corpusVecs(corpus, idCol, vecCol)
+    val q0 = queryVecs(queries, idCol, vecCol)
     // One hash pass + ONE join on (table, bucket) — not nTables separate
     // joins, which would rescan and rehash the corpus per table.
     val cb = c0.select(col("neighbor_id"),
@@ -439,19 +466,7 @@ object Similarity {
     val qb = q0.select(col("query_id"),
       posexplode(lshBuckets(col("qe"), dim, bitsPerTable, nTables))
         .as(Seq("tbl", "bucket")))
-    val candidates = cb.join(broadcast(qb), Seq("tbl", "bucket"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id").distinct()
-    val cn = c0.withColumn("cn", norm(col("ce")))
-    val qn = q0.withColumn("qn", norm(col("qe")))
-    val scored = candidates
-      .join(cn, "neighbor_id").join(broadcast(qn), "query_id")
-      .withColumn("score", dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "score")
+    candidateTopK(cb.join(broadcast(qb), Seq("tbl", "bucket")), c0, q0, k)
   }
 
   /** Two-stage truncated-dimension retrieval (the matryoshka serving
@@ -485,13 +500,11 @@ object Similarity {
         dot(col("qep"), col("cep")) / (col("qepn") * col("cepn")))
     val w1 = Window.partitionBy("query_id")
       .orderBy(col("cost").desc, col("neighbor_id").asc)
-    val w2 = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    s1.withColumn("rkt", row_number().over(w1)).where(col("rkt") <= shortlist)
-      .withColumn("score", dot(col("qe"), col("ce")) / (col("qen") * col("cen")))
-      .withColumn("rank", row_number().over(w2))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "score")
+    rankPerQuery(
+      s1.withColumn("rkt", row_number().over(w1)).where(col("rkt") <= shortlist)
+        .withColumn("score",
+          dot(col("qe"), col("ce")) / (col("qen") * col("cen"))),
+      col("score").desc, _ <= k)
   }
 
   /** Retrieval quality against TRUE labels — precision@k of cosine
@@ -584,23 +597,13 @@ object Similarity {
     * threshold prunes BEFORE the rank shuffle, so the exchange carries
     * candidates, not the corpus.
     */
-  def hardNegatives(corpus: DataFrame, anchors: DataFrame, idCol: String,
-                    vecCol: String, k: Int, posThreshold: Double): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).cast("array<double>").as("ce"))
-      .withColumn("cn", norm(col("ce")))
-    val q = anchors.select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("qe"))
-      .withColumn("qn", norm(col("qe")))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
-      .where(col("score") < posThreshold)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "score")
-  }
+  def hardNegativesBelow(corpus: DataFrame, anchors: DataFrame,
+                         idCol: String, vecCol: String, k: Int,
+                         posThreshold: Double): DataFrame =
+    rankPerQuery(exactScan(corpusVecs(corpus, idCol, vecCol),
+        queryVecs(anchors, idCol, vecCol))
+        .where(col("score") < posThreshold),
+      col("score").desc, _ <= k)
 
   /** Diversity-quota retrieval: exact cosine top-k with AT MOST
     * `perLabel` results per label group — the result-diversification
@@ -613,25 +616,16 @@ object Similarity {
   def quotaCosineTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                       vecCol: String, labelCol: String, k: Int,
                       perLabel: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-        col(labelCol).as("label"),
-        col(vecCol).cast("array<double>").as("ce"))
-      .withColumn("cn", norm(col("ce")))
-    val q = queries.select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("qe"))
-      .withColumn("qn", norm(col("qe")))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
+    val scored = exactScan(
+      corpusVecs(corpus, idCol, vecCol, col(labelCol).as("label")),
+      queryVecs(queries, idCol, vecCol))
     val wL = Window.partitionBy("query_id", "label")
       .orderBy(col("score").desc, col("neighbor_id").asc)
-    val wG = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("lrank", row_number().over(wL))
-      .where(col("lrank") <= perLabel)
-      .withColumn("rank", row_number().over(wG))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("label"),
-        col("rank"), round(col("score"), 6).as("score"))
+    rankPerQuery(scored.withColumn("lrank", row_number().over(wL))
+        .where(col("lrank") <= perLabel),
+      col("score").desc, _ <= k,
+      Seq(col("query_id"), col("neighbor_id"), col("label"),
+        col("rank"), round(col("score"), 6).as("score")))
   }
 
   /** Embedding-health outlier report: each vector's best-centroid
@@ -720,12 +714,9 @@ object Similarity {
         floor(lit(1e9) / (lit(rrfK) + col("rank")) + 0.5).cast("long"))
       .groupBy("query_id", "neighbor_id")
       .agg(sum(col("contrib")).as("rrf_q"), count(lit(1)).as("n_lists"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("rrf_q").desc, col("neighbor_id").asc)
-    fused.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        col("n_lists"), col("rrf_q"))
+    rankPerQuery(fused, col("rrf_q").desc, _ <= k,
+      Seq(col("query_id"), col("neighbor_id"), col("rank"),
+        col("n_lists"), col("rrf_q")))
   }
 
   /** Binary-quantized (1-bit) ANN: each vector compresses to sign bits
@@ -777,19 +768,15 @@ object Similarity {
       .withColumn("ham", ham)
       .withColumn("hrank", row_number().over(wH))
       .where(col("hrank") <= shortlist)
-    val full = corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).cast("array<double>").as("ce"))
+    val full = corpusVecs(corpus, idCol, vecCol)
       .withColumn("cn", norm(col("ce")))
-    val wS = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    short.join(full, "neighbor_id")
-      .withColumn("score", dot(col("__e_query_id"), col("ce")) /
-        (norm(col("__e_query_id")) * col("cn")))
-      .withColumn("rank", row_number().over(wS))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
+    rankPerQuery(short.join(full, "neighbor_id")
+        .withColumn("score", dot(col("__e_query_id"), col("ce")) /
+          (norm(col("__e_query_id")) * col("cn"))),
+      col("score").desc, _ <= k,
+      Seq(col("query_id"), col("neighbor_id"), col("rank"),
         col("ham").cast("long").as("hamming"),
-        round(col("score"), 6).as("score"))
+        round(col("score"), 6).as("score")))
   }
 
   /** Per-dimension (min, max) quantization bounds for [[sq8TopK]] — one
@@ -835,22 +822,18 @@ object Similarity {
     val loL = typedLit(lo); val hiL = typedLit(hi)
     def loAt(j: Column) = element_at(loL, j + 1)
     def hiAt(j: Column) = element_at(hiL, j + 1)
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qe"))
+    val q = queryVecs(queries, idCol, vecCol)
     val dist = aggregate(
       transform(col("cd"), (cdj, j) => {
         val recon = loAt(j) + (cdj + 0.5) * (hiAt(j) - loAt(j)) / 256.0
         val d = element_at(col("qe"), j + 1) - recon
         d * d
       }), lit(0.0), (acc, x) => acc + x)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    codes.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_dist", dist)
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("adc_dist"), 6).as("adc_dist"))
+    rankPerQuery(codes.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+        .withColumn("adc_dist", dist),
+      col("adc_dist").asc, _ <= k,
+      Seq(col("query_id"), col("neighbor_id"), col("rank"),
+        round(col("adc_dist"), 6).as("adc_dist")))
   }
 
   def sq8TopK(corpus: DataFrame, queries: DataFrame, idCol: String,

@@ -1110,7 +1110,7 @@ object NorthStar extends Gates {
     // the 0.95 positive threshold (exclude near-dups, keep look-alikes).
     Gate("q288_hard_negatives", (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      Similarity.hardNegatives(emb, emb.filter(col("vec_id") % 50 === 0),
+      Similarity.hardNegativesBelow(emb, emb.filter(col("vec_id") % 50 === 0),
           "vec_id", "embedding", 5, 0.95)
         .withColumn("score", round(col("score"), 6).cast("float"))
         .orderBy("query_id", "rank")

@@ -518,4 +518,22 @@ class CorpusSpec extends AnyFunSuite {
       assert(got.find(_._1 == 9999L).get._4 == 0L)
     }
   }
+
+  test("bandedRank == a global row_number over (band, order, id) on a skewed frame") {
+    import org.apache.spark.sql.expressions.Window
+    // one band holds most rows, many bands hold one; the order column
+    // ties inside the big band, so the id decides
+    val rows = (1L to 60L).map(i => (i, 0L, i % 4)) ++
+      (61L to 80L).map(i => (i, i, 0L))
+    val df = rows.toDF("id", "__band", "score")
+    val (ranked, r) = Corpus.bandedRank(df, col("score"), col("id"))
+    val got = ranked.select(col("id"), r.as("rank"), col("__n"))
+      .as[(Long, Long, Long)].collect().sortBy(_._1)
+    val want = df.withColumn("rank", row_number().over(
+        Window.orderBy(col("__band"), col("score"), col("id"))))
+      .select(col("id"), col("rank").cast("long"))
+      .as[(Long, Long)].collect().sortBy(_._1)
+    assert(got.map(g => (g._1, g._2)).toSeq == want.toSeq)
+    assert(got.forall(_._3 == rows.size.toLong))
+  }
 }

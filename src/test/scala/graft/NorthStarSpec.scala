@@ -318,7 +318,7 @@ class NorthStarSpec extends AnyFunSuite {
 
   test("hardNegatives excludes positives and matches the brute-force answer") {
     val e = emb
-    val got = Similarity.hardNegatives(e, e.filter(col("vec_id") < 5),
+    val got = Similarity.hardNegativesBelow(e, e.filter(col("vec_id") < 5),
         "vec_id", "embedding", 3, 0.95)
       .select("query_id", "neighbor_id", "rank", "score")
       .as[(Long, Long, Int, Double)].collect()

@@ -338,7 +338,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("hardNegatives: anchors broadcast, threshold cut before the rank exchange") {
     val emb = graft.core.Tables(spark, dir, "embeddings")
-    val p = plan(graft.ops.Similarity.hardNegatives(
+    val p = plan(graft.ops.Similarity.hardNegativesBelow(
       emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", 3, 0.95))
     assert(p.contains("BroadcastNestedLoopJoin") && !p.contains("SortMergeJoin"),
       p.take(3000))

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Dedup, TextOps}
+import graft.ops.{Dedup, Similarity, TextOps}
 
 /** Seeded-random fuzz for the retrieval/normalization tranche: each
   * case generates adversarial inputs from fixed seeds (deterministic
@@ -215,5 +215,22 @@ class RetrievalPropertySpec extends AnyFunSuite {
     subsetPairs.foreach { r =>
       assert(r._3 == 1.0 && r._4 == r._1, r.toString)
     }
+  }
+
+  test("rankPerQuery: score ties go to the lower neighbor_id, the (lo, hi] band is kept") {
+    // every neighbor of query 1 scores 0.5, query 2's scores descend
+    // with the id, so rank order is id order for query 1 and the
+    // reverse for query 2
+    val scored = ((1L to 8L).map(n => (1L, n, 0.5)) ++
+      (1L to 8L).map(n => (2L, n, n.toDouble)))
+      .toDF("query_id", "neighbor_id", "score")
+    val (lo, hi) = (2, 5)
+    val got = Similarity.rankPerQuery(scored, col("score").desc,
+        r => r > lo && r <= hi)
+      .select("query_id", "neighbor_id", "rank")
+      .as[(Long, Long, Int)].collect().toSet
+    val want = (lo + 1 to hi).flatMap(r =>
+      Seq((1L, r.toLong, r), (2L, 9L - r, r))).toSet
+    assert(got == want)
   }
 }
