@@ -353,20 +353,16 @@ object PhashIndex {
     * (every band dirty).
     */
   def designCurve(spark: SparkSession, bands: Int = 4,
-                  bitsPerBand: Int = 16): DataFrame =
-    curve(spark, bands * bitsPerBand) { (n, d) =>
+                  bitsPerBand: Int = 16): DataFrame = {
+    import spark.implicits._
+    val n = bands * bitsPerBand
+    (0 to n).map { d =>
       val num = (1 to bands).map { j =>
         val t = binom(bands, j) * binom(n - j * bitsPerBand, d)
         if (j % 2 == 1) t else -t
       }.sum
-      (num * 1000000 / binom(n, d)).toLong
-    }
-
-  /** (dist, collide_ppm) for every distance 0..n. */
-  private def curve(spark: SparkSession, n: Int)(
-      ppm: (Int, Int) => Long): DataFrame = {
-    import spark.implicits._
-    (0 to n).map(d => (d.toLong, ppm(n, d))).toDF("dist", "collide_ppm")
+      (d.toLong, (num * 1000000 / binom(n, d)).toLong)
+    }.toDF("dist", "collide_ppm")
   }
 
   /** The binomial C(nn, d), 0 outside 0 <= d <= nn. */
@@ -390,8 +386,10 @@ object PhashIndex {
     * P = 0 at d = n. Exact BigInt, floored to ppm; model-sized.
     */
   def designCurveProbed(spark: SparkSession, bands: Int = 4,
-                        bitsPerBand: Int = 16): DataFrame =
-    curve(spark, bands * bitsPerBand) { (n, d) =>
+                        bitsPerBand: Int = 16): DataFrame = {
+    import spark.implicits._
+    val n = bands * bitsPerBand
+    (0 to n).map { d =>
       val a = (0 to bands).map { j =>
         val nj = (0 to j).map(t =>
           binom(j, t) * BigInt(bitsPerBand).pow(t) *
@@ -400,8 +398,9 @@ object PhashIndex {
         if (j % 2 == 0) term else -term
       }.sum
       val tot = binom(n, d)
-      ((tot - a) * 1000000 / tot).toLong
-    }
+      (d.toLong, ((tot - a) * 1000000 / tot).toLong)
+    }.toDF("dist", "collide_ppm")
+  }
 
   /** Band-level health card off the index tables alone — the
     * candidate-explosion early warning ([[Dedup.dedupIndexStats]]'s

@@ -369,8 +369,9 @@ object Scale {
   def foldDistinctState(spark: org.apache.spark.sql.SparkSession,
                         path: String, delta: DataFrame, groupCol: String,
                         keyCol: String, nShards: Int): DataFrame = {
-    val (d, touched, summary, keys) = deltaShards(spark, path, delta,
-      groupCol, keyCol, nShards, "foldDistinctState", "folded")
+    require(nShards > 0, "foldDistinctState: nShards > 0")
+    val (d, touched, summary, keys) =
+      deltaShards(spark, path, delta, groupCol, keyCol, nShards)
     val recounted = keys.select(col(groupCol), col("__shard"), col("__k"))
       .unionByName(d).distinct()
       .groupBy(col(groupCol), col("__shard"))
@@ -386,14 +387,11 @@ object Scale {
     * delta's (group, shard, key) triples `d`, materialized once (they
     * feed two consumers; checkpoint() on a real cluster, the documented
     * swap), the shards they touch, the state's summary, and its keys
-    * read pruned to the touched shards. `op` and `verb` name the caller
-    * in the shard-count check's message.
+    * read pruned to the touched shards.
     */
   private def deltaShards(spark: org.apache.spark.sql.SparkSession,
                           path: String, delta: DataFrame, groupCol: String,
-                          keyCol: String, nShards: Int, op: String,
-                          verb: String) = {
-    require(nShards > 0, s"$op: nShards > 0")
+                          keyCol: String, nShards: Int) = {
     val d = shardTriples(delta, groupCol, keyCol, nShards)
       .localCheckpoint(true)
     // bounded by nShards (<= a few hundred) — a model fetch, not data
@@ -406,8 +404,8 @@ object Scale {
     // nShards is fine)
     summary.select("__nshards").take(1).foreach { r =>
       require(r.getLong(0) == nShards.toLong,
-        s"$op: state written with nShards=${r.getLong(0)}, " +
-          s"$verb with $nShards")
+        s"distinct state written with nShards=${r.getLong(0)}, " +
+          s"delta sharded with $nShards")
     }
     // explicit schema: a bootstrap-empty partitioned keys table has no
     // files to infer from
@@ -470,8 +468,9 @@ object Scale {
       spark: org.apache.spark.sql.SparkSession, path: String,
       delta: DataFrame, groupCol: String, keyCol: String,
       nShards: Int): (org.apache.spark.sql.types.StructType, Array[Long]) = {
-    val (d, touched, _, keys) = deltaShards(spark, path, delta, groupCol,
-      keyCol, nShards, "appendDistinctState", "appended")
+    require(nShards > 0, "appendDistinctState: nShards > 0")
+    val (d, touched, _, keys) =
+      deltaShards(spark, path, delta, groupCol, keyCol, nShards)
     // materialize BEFORE the append: the anti-join reads the very
     // table being appended to
     val fresh = d.join(keys, Seq(groupCol, "__shard", "__k"), "left_anti")

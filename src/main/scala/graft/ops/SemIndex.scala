@@ -94,20 +94,6 @@ object SemIndex {
   private def cellsOf(df: DataFrame): Array[Int] =
     df.select("cell").distinct().collect().map(_.getInt(0)).sorted
 
-  /** `idx` pruned to the partitions of `cells`. */
-  private def inCells(idx: DataFrame, cells: Array[Int]): DataFrame =
-    idx.where(col("cell").isin(cells.map(Integer.valueOf): _*))
-
-  /** The index read spread for scoring; a cell filter still pushes
-    * through the spread.
-    */
-  private def spreadIndex(spark: SparkSession, p: Paths): DataFrame =
-    graft.core.Tables.spread(spark, spark.read.parquet(p.index), p.index)
-
-  /** (vec_id, e, n) for a query frame. */
-  private def normedQueries(queries: DataFrame): DataFrame =
-    vecs(queries).withColumn("n", Similarity.norm(col("e")))
-
   /** Every seed as (negcos, sid) for the query vector `e` (norm `n`),
     * sorted: the query's cells, nearest first.
     */
@@ -141,7 +127,9 @@ object SemIndex {
     import graft.ops.Similarity.dot
     val asg = assigned(spark, delta, p).localCheckpoint(true)
     val cells = cellsOf(asg)
-    val idx = inCells(spreadIndex(spark, p), cells)
+    val idx = graft.core.Tables.spread(spark, // cell filter still pushes
+        spark.read.parquet(p.index), p.index)   // through the spread
+      .where(col("cell").isin(cells.map(Integer.valueOf): _*))
       .select(col("cell"), col("e").as("ce"), col("n").as("cn"))
     val hits = asg.join(idx, Seq("cell"))
       .where(dot(col("e"), col("ce")) / (col("n") * col("cn"))
@@ -177,7 +165,8 @@ object SemIndex {
   def append(spark: SparkSession, p: Paths, admitted: DataFrame): Unit = {
     val asg = assigned(spark, admitted, p).localCheckpoint(true)
     val cells = cellsOf(asg)
-    val existing = inCells(spark.read.parquet(p.index), cells)
+    val existing = spark.read.parquet(p.index)
+      .where(col("cell").isin(cells.map(Integer.valueOf): _*))
       .select("vec_id", "cell")
     asg.join(existing, Seq("vec_id", "cell"), "left_anti")
       .localCheckpoint(true) // reads the table being appended
@@ -219,14 +208,16 @@ object SemIndex {
   def search(spark: SparkSession, p: Paths, queries: DataFrame,
              k: Int, nprobe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val scored = normedQueries(queries).withColumn("cells",
-      slice(seedOrder(loadSeeds(spark, p)), 1, nprobe))
+    val scored = vecs(queries).withColumn("n", Similarity.norm(col("e")))
+      .withColumn("cells", slice(seedOrder(loadSeeds(spark, p)), 1, nprobe))
     val probes = scored
       .select(col("vec_id").as("qid"), col("e").as("qe"),
         col("n").as("qn"),
         explode(col("cells").getField("sid")).as("cell"))
     val cells = cellsOf(probes)
-    val idx = inCells(spreadIndex(spark, p), cells)
+    val idx = graft.core.Tables.spread(spark, // cell filter still pushes
+        spark.read.parquet(p.index), p.index)   // through the spread
+      .where(col("cell").isin(cells.map(Integer.valueOf): _*))
     val w = Window.partitionBy("qid")
       .orderBy(col("cos").desc, col("vec_id"))
     probes.join(idx, Seq("cell"))
@@ -281,7 +272,7 @@ object SemIndex {
                   k: Int): DataFrame = {
     import graft.functions.PixieFunctions.idiv
     import org.apache.spark.sql.expressions.Window
-    val ranked = normedQueries(queries)
+    val ranked = vecs(queries).withColumn("n", Similarity.norm(col("e")))
       .withColumn("cells", seedOrder(loadSeeds(spark, p)))
     val probes = ranked.select(col("vec_id").as("qid"),
         col("e").as("qe"), col("n").as("qn"),
@@ -292,7 +283,8 @@ object SemIndex {
       // spread the index side: per-pair cosine scoring is the cost, and
       // the index artifact scans as one split at fixture scale
       // (size-gated no-op at production index sizes)
-      .join(spreadIndex(spark, p), Seq("cell"))
+      .join(graft.core.Tables.spread(spark,
+        spark.read.parquet(p.index), p.index), Seq("cell"))
       .select(col("qid"), col("vec_id"),
         (Similarity.dot(col("qe"), col("e"))
           / (col("qn") * col("n"))).as("cos"),
@@ -381,7 +373,8 @@ object SemIndex {
       .join(ids.select(col(ids.columns.head).as("vec_id")), "vec_id")
     val cells = cellsOf(victims)
     if (cells.nonEmpty) {
-      val kept = inCells(spark.read.parquet(p.index), cells)
+      val kept = spark.read.parquet(p.index)
+        .where(col("cell").isin(cells.map(Integer.valueOf): _*))
         .join(ids.select(col(ids.columns.head).as("vec_id")),
           Seq("vec_id"), "left_anti")
         .select("vec_id", "e", "n", "cell")

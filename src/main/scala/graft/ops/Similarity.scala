@@ -135,23 +135,17 @@ object Similarity {
         queryVecs(queries, idCol, vecCol)),
       col("score").desc, r => r > lo && r <= hi)
 
-  /** One side of a vector scan: the id as `id`, then `extra`, then the
-    * vector as array<double> `v`.
-    */
-  private def vectors(df: DataFrame, idCol: String, vecCol: String,
-                      id: String, v: String, extra: Column*): DataFrame =
-    df.select((col(idCol).as(id) +: extra) :+
-      col(vecCol).cast("array<double>").as(v): _*)
+  /** The corpus side of a vector scan: (neighbor_id, ce). */
+  private def corpusVecs(df: DataFrame, idCol: String,
+                         vecCol: String): DataFrame =
+    df.select(col(idCol).as("neighbor_id"),
+      col(vecCol).cast("array<double>").as("ce"))
 
-  /** The corpus side: (neighbor_id, `extra`..., ce). */
-  private def corpusVecs(df: DataFrame, idCol: String, vecCol: String,
-                         extra: Column*): DataFrame =
-    vectors(df, idCol, vecCol, "neighbor_id", "ce", extra: _*)
-
-  /** The query side: (query_id, qe). */
+  /** The query side of a vector scan: (query_id, qe). */
   private def queryVecs(df: DataFrame, idCol: String,
                         vecCol: String): DataFrame =
-    vectors(df, idCol, vecCol, "query_id", "qe")
+    df.select(col(idCol).as("query_id"),
+      col(vecCol).cast("array<double>").as("qe"))
 
   /** Cosine of the query and corpus vectors on one row, from the norms
     * `qn` and `cn` computed once per side.
@@ -185,10 +179,6 @@ object Similarity {
       col("score").desc, _ <= k)
   }
 
-  /** (query_id, neighbor_id, rank, `score`): the output of a top-k. */
-  private def topCols(score: String): Seq[Column] =
-    Seq("query_id", "neighbor_id", "rank", score).map(col)
-
   /** The per-query rank every top-k here ends in: `rank` is the
     * row_number per query over `order`, then `neighbor_id` ascending
     * (ties go to the lower id); the rows whose rank passes `keep` are
@@ -196,7 +186,9 @@ object Similarity {
     */
   private[graft] def rankPerQuery(scored: DataFrame, order: Column,
                                   keep: Column => Column,
-                                  out: Seq[Column] = topCols("score")): DataFrame = {
+                                  out: Seq[Column] = Seq(col("query_id"),
+                                    col("neighbor_id"), col("rank"),
+                                    col("score"))): DataFrame = {
     val w = Window.partitionBy("query_id")
       .orderBy(order, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
@@ -348,7 +340,8 @@ object Similarity {
   private def adcTopK(scanned: DataFrame, adc: Column, k: Int, rerank: Int,
                       c0: DataFrame, q0: DataFrame): DataFrame = {
     val ranked = rankPerQuery(scanned.withColumn("adc", adc),
-      col("adc").asc, _ <= (if (rerank > 0) rerank else k), topCols("adc"))
+      col("adc").asc, _ <= (if (rerank > 0) rerank else k),
+      Seq(col("query_id"), col("neighbor_id"), col("rank"), col("adc")))
     if (rerank == 0) ranked
     else
       // Deployment path: the ADC scan only SHORTLISTS `rerank`
@@ -360,7 +353,8 @@ object Similarity {
           .join(c0, "neighbor_id")
           .join(broadcast(q0), "query_id")
           .withColumn("dist", l2(col("qe"), col("ce"))),
-        col("dist").asc, _ <= k, topCols("dist"))
+        col("dist").asc, _ <= k, Seq(col("query_id"), col("neighbor_id"),
+          col("rank"), col("dist")))
   }
 
   /** L2 residuals against a coarse quantizer: assigns each vector to
@@ -617,7 +611,8 @@ object Similarity {
                       vecCol: String, labelCol: String, k: Int,
                       perLabel: Int): DataFrame = {
     val scored = exactScan(
-      corpusVecs(corpus, idCol, vecCol, col(labelCol).as("label")),
+      corpus.select(col(idCol).as("neighbor_id"), col(labelCol).as("label"),
+        col(vecCol).cast("array<double>").as("ce")),
       queryVecs(queries, idCol, vecCol))
     val wL = Window.partitionBy("query_id", "label")
       .orderBy(col("score").desc, col("neighbor_id").asc)
